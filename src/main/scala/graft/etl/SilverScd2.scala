@@ -60,10 +60,12 @@ object SilverScd2 {
     val wm = watermarks.read(table)
     val batch = store.read(bronze)
       .where(col("ingestion_timestamp") > lit(wm).cast("timestamp"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // feeds ≥3 actions below
+      .persist(StorageLevel.MEMORY_AND_DISK) // feeds ≥2 actions below
     try {
-      if (batch.isEmpty) return Report(table, 0, "skipped-empty")
-      val newWm = batch.agg(max("ingestion_timestamp")).head().getTimestamp(0)
+      // one pass for the emptiness probe and the batch's new watermark
+      val batchStats = batch.agg(count(lit(1)), max("ingestion_timestamp")).head()
+      if (batchStats.getLong(0) == 0) return Report(table, 0, "skipped-empty")
+      val newWm = batchStats.getTimestamp(1)
 
       if (!silverExists) {
         // first-run branch (2_Bronze_to_Silver.py:76-81); the path store
@@ -84,18 +86,21 @@ object SilverScd2 {
       val staged = Scd2.stage(batch, target.where(col("is_current")), config.pk)
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        if (staged.isEmpty) {
+        // one pass for the staged total (the report) and the INSERT count
+        // (whether the side channel fires)
+        val stagedStats = staged
+          .agg(count(lit(1)), count(when(col("action") === "INSERT", true))).head()
+        val stagedRows = stagedStats.getLong(0)
+        if (stagedRows == 0) {
           watermarks.commit(table, WatermarkStore.format(newWm))
           return Report(table, 0, "no-changes")
         }
-        if (table == sideChannelTable) {
-          val inserts = Scd2.insertedRecords(staged, sideChannelCols)
-          if (!inserts.isEmpty) sink.deliver(inserts)
-        }
+        if (table == sideChannelTable && stagedStats.getLong(1) > 0)
+          sink.deliver(Scd2.insertedRecords(staged, sideChannelCols))
         val next = Scd2.applyMerge(target, staged, config.pk, runTs)
         writeSilver(next)
         watermarks.commit(table, WatermarkStore.format(newWm)) // only after the swap
-        Report(table, staged.count(), "merged")
+        Report(table, stagedRows, "merged")
       } finally staged.unpersist()
     } finally batch.unpersist()
   }

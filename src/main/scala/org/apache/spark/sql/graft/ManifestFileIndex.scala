@@ -37,12 +37,18 @@ class ManifestFileIndex(spark: SparkSession, dataDirs: Seq[Path],
   private val hadoopConf = spark.sparkContext.hadoopConfiguration
   private val zoneId = spark.sessionState.conf.sessionLocalTimeZone
 
+  /** One non-empty file per data dir, in manifest order: the files of a
+    * dir come from one write and share its schema, so these footers are
+    * all the data-schema merge needs. */
+  private val schemaSamples = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+
   /** (partition values, files) groups, listed once at construction — the
     * manifest's data dirs are immutable, so there is nothing to refresh. */
   private val partitions: Seq[PartitionDirectory] = {
     val groups = scala.collection.mutable.LinkedHashMap
       .empty[Seq[Any], scala.collection.mutable.ArrayBuffer[FileStatus]]
     dataDirs.foreach { dir =>
+      val sampled = schemaSamples.size
       val fs = dir.getFileSystem(hadoopConf)
       def walk(p: Path, values: Map[String, String]): Unit =
         fs.listStatus(p).foreach { st =>
@@ -53,6 +59,7 @@ class ManifestFileIndex(spark: SparkSession, dataDirs: Seq[Path],
               walk(st.getPath,
                 if (kv.length == 2) values + (kv(0) -> kv(1)) else values)
             } else if (st.getLen > 0) {
+              if (schemaSamples.size == sampled) schemaSamples += st
               val row = partitionSchema.fields.map { f =>
                 values.get(f.name).map(castPartitionValue(_, f.dataType)).orNull
               }.toSeq
@@ -98,6 +105,18 @@ class ManifestFileIndex(spark: SparkSession, dataDirs: Seq[Path],
 
   override def sizeInBytes: Long =
     partitions.flatMap(_.files.map(_.getLen)).sum
+
+  /** The data schema merged across data dirs in manifest order (schema
+    * evolution: a later dir's new columns append), read from one footer
+    * per dir in ONE Spark job, whatever the number of dirs. Calls the merge
+    * directly because `inferSchema` would sort the files by path, and data
+    * dir names are random. Partition columns are not stored in the files. */
+  def mergedDataSchema: StructType =
+    ParquetFileFormat
+      .mergeSchemasInParallel(Map("mergeSchema" -> "true"), schemaSamples.toSeq, spark)
+      .map(s => StructType(s.filterNot(f => partitionSchema.fieldNames.contains(f.name))).asNullable)
+      .getOrElse(throw new IllegalStateException(
+        s"no parquet data files under ${dataDirs.mkString(", ")}"))
 }
 
 /** Public entry: a single-scan DataFrame over a manifest's data dirs. */
@@ -113,14 +132,8 @@ object ManifestRead {
     val partitionSchema = StructType(partitionCols.map {
       case (n, t) => StructField(n, t)
     })
-    val dataSchema = dirs
-      .map { d =>
-        StructType(spark.read.option("mergeSchema", "true").parquet(d)
-          .schema.filterNot(f => partitionCols.exists(_._1 == f.name)))
-      }
-      .reduce(_ merge _)
     val index = new ManifestFileIndex(spark, dirs.map(new Path(_)), partitionSchema)
-    val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
+    val relation = HadoopFsRelation(index, partitionSchema, index.mergedDataSchema,
       bucketSpec = None, new ParquetFileFormat,
       Map("mergeSchema" -> "true"))(spark)
     spark.baseRelationToDataFrame(relation)

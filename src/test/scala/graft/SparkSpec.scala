@@ -4,16 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Shared local SparkSession for specs (one JVM-wide session; tests fork). */
+/** Shared local SparkSession for specs (one JVM-wide session; tests fork),
+  * built by the same factory users get, so specs cover the shipped conf. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .appName("graft-test")
-      .master("local[4]")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = graft.core.GraftSession.builder("graft-test", "local[4]", shufflePartitions = 4)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()

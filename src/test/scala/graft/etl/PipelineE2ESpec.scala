@@ -3,6 +3,8 @@ package graft.etl
 import java.nio.file.{Files, Path => JPath, Paths}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -27,6 +29,76 @@ class PipelineE2ESpec extends SparkSpec {
     Files.createDirectories(d)
     d.toFile.listFiles().foreach(_.delete())
     Files.writeString(d.resolve("part-0.csv"), (header +: rows).mkString("\n"))
+  }
+
+  /** Parquet files per directory in the data dir(s) the table's current
+    * manifest points at, keyed by the partition path below the data dir. */
+  private def filesPerPartitionDir(table: String): Map[String, Int] = {
+    val t = Paths.get(table)
+    val v = Files.readString(t.resolve("_current")).trim
+    val dirs = Files.readString(t.resolve(s"_v$v")).split("\n").map(_.trim)
+      .filter(l => l.nonEmpty && !l.startsWith("#"))
+    dirs.toSeq.flatMap { d =>
+      val stream = Files.walk(t.resolve(d))
+      try stream.iterator().asScala.toList
+        .filter(f => f.getFileName.toString.endsWith(".parquet"))
+        .map(f => t.resolve(d).relativize(f.getParent).toString)
+      finally stream.close()
+    }.groupBy(identity).map { case (k, fs) => k -> fs.size }
+  }
+
+  test("a small SCD2 merge adds one file per is_current dir, not one per " +
+    "shuffle partition") {
+    val root = Files.createTempDirectory("graft-e2e-files")
+    val landing = root.resolve("landing")
+    val conf = PipelineConfig(
+      landingRoot = landing.toString,
+      bronzeRoot = root.resolve("bronze").toString,
+      silverRoot = root.resolve("silver").toString,
+      goldRoot = root.resolve("gold").toString,
+      stateRoot = root.resolve("state").toString,
+      tables = Seq(TableConfig("Customers", "CustomerID")))
+    val pipe = new Pipeline(spark, conf, new CollectingSink)
+    val header = "CustomerID,Name,Email,Segment"
+    writeCsv(landing, "Customers", header,
+      (1 to 12).map(i => s"$i,C$i,c$i@x.com,retail"))
+    pipe.run(t1)
+    val silver = s"${conf.silverRoot}/Customers"
+    val loaded = filesPerPartitionDir(silver)
+    // a 3-row delta: one change, two new keys, spread over the shuffle
+    // partitions the staged frame is cached with
+    writeCsv(landing, "Customers", header, Seq(
+      "2,C2,c2@x.com,wholesale", "13,C13,c13@x.com,retail",
+      "14,C14,c14@x.com,retail"))
+    pipe.run(t2).silver.map(s => (s.action, s.staged)) shouldBe Seq(("merged", 3L))
+    // the merge rewrites the previous files' rows and unions in the staged
+    // rows: the staged side adds at most one file per is_current dir
+    val merged = filesPerPartitionDir(silver)
+    merged.keySet shouldBe Set("is_current=true", "is_current=false")
+    merged.foreach { case (dir, n) => n should be <= loaded.getOrElse(dir, 0) + 1 }
+  }
+
+  test("small Gold marts write one file per year dir, not one per shuffle " +
+    "partition") {
+    val goldRoot = Files.createTempDirectory("graft-e2e-gold").toString
+    val store = new graft.sources.TableStore(spark)
+    // a fact spanning three order years, several rows per year and seller
+    val fact = (1 to 24).map(i => (i, i % 5, s"cust${i % 5}", i % 3,
+      s"${2021 + i % 3}-0${1 + i % 4}-1${i % 7}",
+      i.toDouble)).toDF("OrderID", "CustomerID", "CustomerName", "SellerID",
+      "d", "amt")
+      .select($"OrderID", $"CustomerID", $"CustomerName",
+        $"SellerID", concat(lit("s"), $"SellerID").as("SellerName"),
+        lit(1).as("ProductID"), lit("p").as("ProductName"),
+        lit("c").as("CategoryName"), lit("Delivered").as("StatusName"),
+        lit(java.math.BigDecimal.ONE).cast("decimal(12,2)").as("Quantity"),
+        lit(java.math.BigDecimal.ONE).cast("decimal(12,2)").as("CurrentPrice"),
+        $"amt".cast("decimal(12,2)").as("TotalAmount"),
+        $"d".cast("date").as("OrderDate"))
+    GoldBuild.run(spark, store, goldRoot, fact)
+    val dailyFiles = filesPerPartitionDir(s"$goldRoot/seller_performance_daily")
+    dailyFiles.keySet shouldBe Set("year=2021", "year=2022", "year=2023")
+    all(dailyFiles.values) should be <= 1
   }
 
   test("three incremental runs: history, side channel, gold marts") {

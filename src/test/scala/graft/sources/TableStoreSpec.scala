@@ -374,10 +374,26 @@ class TableStoreSpec extends SparkSpec {
       Seq("is_current"))
     // second dir adds a column; first dir's rows must read it as NULL
     store.append(t, Seq((2, "b", "x", true)).toDF("id", "v", "extra", "is_current"))
+    // a third dir lacking the earlier additions: columns still merge in
+    // append order, whatever the (random) data dir names sort as
+    store.append(t, Seq((3, "y", true)).toDF("id", "late", "is_current"))
     val r = store.read(t)
-    r.columns.toSeq shouldBe Seq("id", "v", "extra", "is_current")
+    r.columns.toSeq shouldBe Seq("id", "v", "extra", "late", "is_current")
     r.where($"id" === 1).select("extra").as[Option[String]].head() shouldBe None
     r.where($"id" === 2).select("extra").as[Option[String]].head() shouldBe Some("x")
+    r.where($"id" === 3).select("v", "late").as[(Option[String], String)]
+      .head() shouldBe ((None, "y"))
+  }
+
+  test("partitioned read infers the schema of all data dirs in one job") {
+    val store = new TableStore(spark)
+    val t = tmp() + "/t"
+    store.overwrite(t, Seq((0, true)).toDF("id", "is_current"), Seq("is_current"))
+    (1 to 4).foreach(i => store.append(t, Seq((i, i % 2 == 0)).toDF("id", "is_current")))
+    store.manifestDirs(t) shouldBe 5
+    val (df, jobs) = org.apache.spark.sql.graft.JobCount.during(spark)(store.read(t))
+    jobs should be <= 1
+    df.select("id").as[Int].collect().toSet shouldBe (0 to 4).toSet
   }
 
   test("version meta commits atomically with the data and is NOT inherited") {
