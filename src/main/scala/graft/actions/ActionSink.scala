@@ -16,14 +16,17 @@ trait ActionSink {
   def deliver(records: DataFrame): Unit
 }
 
-/** Test/dev sink: materializes the records on the driver. */
+/** Test/dev sink: materializes the records on the driver. Safe to call
+  * from any thread: a pipeline delivers from whichever thread runs the
+  * table's Silver unit, and concurrent deliveries are all recorded. */
 class CollectingSink extends ActionSink {
-  @volatile var batches: List[Seq[Map[String, Any]]] = Nil
+  @volatile private var recorded: List[Seq[Map[String, Any]]] = Nil
+  def batches: List[Seq[Map[String, Any]]] = recorded
   override def deliver(records: DataFrame): Unit = {
     val cols = records.columns
     val rows = records.collect().toSeq
       .map(r => cols.map(c => c -> r.getAs[Any](c)).toMap)
-    batches = batches :+ rows
+    synchronized { recorded = recorded :+ rows }
   }
 }
 

@@ -62,13 +62,23 @@ object BronzeIngest {
 
   /** Ingest every landed table (the reference's discovery loop,
     * 1_Landing_to_Bronze.py:27-73): a bad table is reported and skipped, the
-    * rest of the run continues. */
+    * rest of the run continues. Tables share nothing, so they ingest
+    * concurrently ([[graft.core.Fanout]]), each under the job description
+    * `bronze:<table>`; reports come back in `listTables` order. */
   def run(landing: LandingSource, store: TableStore, bronzeRoot: String,
           runTs: Timestamp,
           typeOverrides: String => Map[String, String] = _ => Map.empty): Seq[Report] =
-    landing.listTables().map { t =>
-      try ingestTable(landing, store, bronzeRoot, t, runTs, typeOverrides(t))
-      catch { case e: Exception => Report(t, -1, s"failed: ${e.getMessage}") }
+    perTable(landing)(t =>
+      ingestTable(landing, store, bronzeRoot, t, runTs, typeOverrides(t)))
+
+  /** One unit per landed table, run concurrently and labelled; a table
+    * whose ingest throws becomes a `failed:` report. */
+  private def perTable(landing: LandingSource)(ingest: String => Report): Seq[Report] =
+    graft.core.Fanout.map(landing.listTables()) { t =>
+      graft.core.Fanout.labelled(landing.spark, s"bronze:$t") {
+        try ingest(t)
+        catch { case e: Exception => Report(t, -1, s"failed: ${e.getMessage}") }
+      }
     }
 
   /** Streaming twin of [[ingestTable]]: the landing entry consumed as an
@@ -110,14 +120,12 @@ object BronzeIngest {
     Report(table, rows, action)
   }
 
-  /** [[run]] with the streaming ingest path — same discovery loop and
-    * skip-vs-fail routing, each table drained via its own checkpoint. */
+  /** [[run]] with the streaming ingest path — same discovery loop,
+    * concurrency and skip-vs-fail routing, each table drained via its own
+    * checkpoint. */
   def runStreaming(landing: LandingSource, store: TableStore, bronzeRoot: String,
                    runTs: Timestamp, checkpointRoot: String,
                    typeOverrides: String => Map[String, String] = _ => Map.empty): Seq[Report] =
-    landing.listTables().map { t =>
-      try ingestTableStreaming(landing, store, bronzeRoot, t, runTs,
-        checkpointRoot, typeOverrides(t))
-      catch { case e: Exception => Report(t, -1, s"failed: ${e.getMessage}") }
-    }
+    perTable(landing)(t => ingestTableStreaming(landing, store, bronzeRoot, t,
+      runTs, checkpointRoot, typeOverrides(t)))
 }

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.actions.{ActionSink, NullSink}
+import graft.core.Fanout
 import graft.sources.{BucketedTableStore, LandingSource, TableConfig, TableStore, WatermarkStore}
 
 /** End-to-end medallion pipeline driver, replacing the reference's ADF
@@ -52,7 +53,25 @@ class Pipeline(spark: SparkSession, conf: PipelineConfig,
     conf.silverBuckets.map(n => new BucketedTableStore(spark, conf.silverDatabase, n))
 
   /** One incremental run: Bronze ingest → SCD2 merge per active table →
-    * optional Gold rebuild from a caller-supplied fact builder. */
+    * optional Gold rebuild from a caller-supplied fact builder.
+    *
+    * Concurrency: within a layer, independent units run at once on their
+    * own driver threads ([[graft.core.Fanout]]) — Bronze per landed table,
+    * Silver per active table, Gold per mart ([[GoldBuild.run]]) — and each
+    * unit's Spark jobs carry the description `bronze:<table>`,
+    * `silver:<table>` or `gold:<mart>`. Layers stay ordered: every Bronze
+    * commit precedes any Silver work, and every Silver commit precedes Gold.
+    * A table's own deliver → swap → watermark order is unchanged. A layer
+    * with one unit (an incremental run touching one table) executes inline
+    * on the caller's thread.
+    *
+    * Failure: a Bronze table that fails is reported `failed:` and the run
+    * goes on. A Silver table that throws does not stop the others: they
+    * commit their state and watermarks, and `run` rethrows the first
+    * failure (in table order) only after every Silver unit has finished,
+    * without building Gold. The failed table's watermark is not advanced,
+    * so a re-run re-processes its batch and converges on the state of an
+    * uninterrupted run. */
   def run(runTs: Timestamp,
           goldFact: Option[SparkSession => DataFrame] = None): RunReport = {
     val overrides = conf.tables.map(t => t.name -> t.typeOverrides).toMap
@@ -62,9 +81,10 @@ class Pipeline(spark: SparkSession, conf: PipelineConfig,
           s"${conf.stateRoot}/bronze_checkpoints", overrides.getOrElse(_, Map.empty))
       else BronzeIngest.run(landing, store, conf.bronzeRoot, runTs,
         overrides.getOrElse(_, Map.empty))
-    val silver = conf.tables.filter(_.active).map { tc =>
-      SilverScd2.run(store, watermarks, conf.bronzeRoot, conf.silverRoot,
-        tc, runTs, sink, conf.sideChannelTable, conf.sideChannelCols, bucketed)
+    val silver = Fanout.map(conf.tables.filter(_.active)) { tc =>
+      Fanout.labelled(spark, s"silver:${tc.name}")(
+        SilverScd2.run(store, watermarks, conf.bronzeRoot, conf.silverRoot,
+          tc, runTs, sink, conf.sideChannelTable, conf.sideChannelCols, bucketed))
     }
     val gold = goldFact.map(f => GoldBuild.run(spark, store, conf.goldRoot, f(spark)))
     RunReport(bronze, silver, gold)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
   * parts; entries prefixed `_` (checkpoints, markers) are skipped, matching
   * the reference's normalization.
   */
-class LandingSource(spark: SparkSession, landingRoot: String) {
+class LandingSource(val spark: SparkSession, landingRoot: String) {
 
   private def fs(p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
