@@ -143,7 +143,7 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val exact = sys.env.get("SPARK_GRAFT_QUERY_LIST")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    (SparkEntry.queries ++ SparkEntry.benchExtras).toSeq
+    SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(f => f.exists(name.startsWith)) }
       .filter { case (name, _) => exact.forall(_.contains(name)) }
       .sortBy(_._1)
@@ -382,45 +382,21 @@ object Bench {
       .where(col("rn") <= 3)
       .write.format("noop").mode("overwrite").save()
     // parquet writer + vectorized reader paths
-    val tmp = java.nio.file.Files.createTempDirectory("graft-warm").toString
-    base.limit(100000).write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).where(col("k") % 7 === 0)
-      .agg(sum("v"), countDistinct("s"))
-      .write.format("noop").mode("overwrite").save()
+    val tmp = java.nio.file.Files.createTempDirectory("graft-warm").toFile
     try {
-      val d = new java.io.File(tmp)
-      d.listFiles().foreach(_.delete()); d.delete()
-    } catch { case _: Throwable => () }
+      base.limit(100000).write.mode("overwrite").parquet(tmp.toString)
+      spark.read.parquet(tmp.toString).where(col("k") % 7 === 0)
+        .agg(sum("v"), countDistinct("s"))
+        .write.format("noop").mode("overwrite").save()
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }
 
   /** Run `names` in THIS JVM (child mode / fallback / small local runs). */
   private def runSuite(sfDir: String, names: Seq[String],
                        inProcessEmit: Boolean): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle/spill scratch: tmpfs avoids the bench box's multi-second
-    // virtio dirty-page-flush stalls, but competes with the JVM heap for
-    // RAM — only use it with real headroom, and drain caches per query
-    val shm = new java.io.File("/dev/shm")
-    val localDir =
-      if (shm.isDirectory && shm.getUsableSpace > (16L << 30)) "/dev/shm/graft-spark-local"
-      else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // fresh warehouse per run — the default ./spark-warehouse persists
-      // across JVMs while the in-memory catalog does not (see Verify)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.local.dir", localDir)
-      // a multi-second full-VM stall must not kill the executor (round 1:
-      // heartbeat death ×60 at default 10s interval / 120s timeout)
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val byName = (SparkEntry.queries ++ SparkEntry.benchExtras)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.core.GraftSession.harness("graft-bench", cpus)
+    val byName = SparkEntry.queries
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // untimed ENGINE warm-up on synthetic data: JIT + codegen + shuffle +
     // parquet machinery heat that rounds 1-11 got as a SIDE EFFECT of the

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round instrumentation: dump `.explain("formatted")` for
-  * named queries to files (plans/<query>.txt), with the cross-query
-  * caches pre-warmed exactly as the bench harness warms them, so the
-  * captured plan is the one the timed run executes. Usage:
+  * named queries to files (plans/<query>.txt), with the artifacts those
+  * queries consume pre-warmed exactly as the bench harness warms them, so
+  * the captured plan is the one the timed run executes. Usage:
   *
   *   sbt "runMain graft.PlanDump <sfDir> <outDir> q369,q318"
   *
@@ -16,38 +14,29 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, namesArg) = args
     val prefixes = namesArg.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.GraftSession.harness("graft-plandump", cpus)
     new java.io.File(outDir).mkdirs()
-    try SparkEntry.warmCaches(spark, sfDir)
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => prefixes.exists(name.startsWith) }
+    try SparkEntry.warmCachesFor(spark, sfDir, selected.map(_._1))
     catch { case e: Throwable =>
       System.err.println(s"[plandump] warmup failed: ${e.getMessage}")
     }
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => prefixes.exists(name.startsWith) }
-      .foreach { case (name, fn) =>
-        try graft.core.CacheRegistry.scoped {
-          val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$outDir/$name.txt"), txt)
-          System.err.println(s"[plandump] wrote $outDir/$name.txt")
-        }
-        catch { case e: Throwable =>
-          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-        }
-        finally graft.core.CacheRegistry.drain()
+    selected.foreach { case (name, fn) =>
+      try graft.core.CacheRegistry.scoped {
+        val df = fn(spark, sfDir)
+        val txt = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$outDir/$name.txt"), txt)
+        System.err.println(s"[plandump] wrote $outDir/$name.txt")
       }
+      catch { case e: Throwable =>
+        System.err.println(s"[plandump] $name failed: ${e.getMessage}")
+      }
+      finally graft.core.CacheRegistry.drain()
+    }
     SparkEntry.clearCaches(spark)
     spark.stop()
   }

@@ -26,15 +26,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.GraftSession.harness("graft-scaleprobe", cpus)
     val probes = sys.env.get("SPARK_GRAFT_PROBES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq("q43_dedup_drop_lsh", "q44_embed_neardup_lsh",

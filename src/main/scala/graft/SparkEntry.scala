@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheRegistry.memo
 import graft.core.Tables
 import graft.etl.{GoldMarts, Scd2, StarSchema}
 import graft.ops.{Dedup, Joins, Multimodal, Sampling, Similarity, TextStats}
@@ -55,42 +56,39 @@ object SparkEntry {
     existing.unionByName(fresh)
   }
 
+  // every cross-query artifact below is memoized per (session, dir, key) in
+  // CacheRegistry.memo under the key `artifacts` declares it by
+  private def persisted(df: DataFrame): DataFrame =
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
   // staged diff feeds q12-q15; build + persist once per (session, dir),
   // mirroring the reference's cache of multi-action lineage
   // (2_Bronze_to_Silver.py:105)
-  private val stagedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def staged(s: SparkSession, dir: String): DataFrame =
-    stagedCache.getOrElseUpdate((s, dir),
-      Scd2.stage(scd2Source(s, dir), t(s, dir, "customer"), "c_custkey")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    memo(s, dir, "staged_scd2")(persisted(
+      Scd2.stage(scd2Source(s, dir), t(s, dir, "customer"), "c_custkey")))
 
   // the documents TF-IDF postings index feeds q178's retrieval AND q181's
   // retrieve-then-rerank; like the star fact, it is built + persisted once
   // per (session, dir) — the production shape, where a postings index is a
   // maintained artifact serving many queries, not a per-query rebuild
-  private val postingsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def docPostings(s: SparkSession, dir: String): DataFrame =
-    postingsCache.getOrElseUpdate((s, dir),
+    memo(s, dir, "postings")(persisted(
       graft.ops.Corpus.tfidfPostings(
         graft.core.Tables.tableRebalanced(s, dir, "documents"),
-        "doc_id", "text", 1.0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        "doc_id", "text", 1.0)))
 
   // corpus counts for the SCALE-ADAPTIVE calibration family, memoized per
-  // (session, dir, key): ~14 queries derive bits/bands/cells from a
-  // deterministic count() of the same immutable bench table, and paying
-  // one count JOB per query is measurable at sf0.1 (q25 regressed
-  // 0.67 → 1.64 s the round it went adaptive) and a real — if
-  // metadata-served — job per query at 100 TB. The count is a pure
+  // (session, dir, key) as artifact `cnt_<key>`: ~14 queries derive
+  // bits/bands/cells from a deterministic count() of the same immutable
+  // bench table, and paying one count JOB per query is measurable at sf0.1
+  // (q25 regressed 0.67 → 1.64 s the round it went adaptive) and a real —
+  // if metadata-served — job per query at 100 TB. The count is a pure
   // function of the (dir, key) snapshot, so one job serves every query;
-  // warmCaches pre-pays even that one outside the timing loop.
-  private val countCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Long]
+  // warmCachesFor pre-pays even that one outside the timing loop.
   private def cachedCount(s: SparkSession, dir: String, key: String)
                          (df: => DataFrame): Long =
-    countCache.getOrElseUpdate((s, dir, key), df.count())
+    memo(s, dir, s"cnt_$key")(df.count())
 
   // the exact O(N²) cosine judge is SHARED across the recall/gain contract
   // family (VERDICT r8 #3: q340/q342/q345 at threshold 0.4, q350/q351 at
@@ -99,15 +97,12 @@ object SparkEntry {
   // ROUNDED cosine kept, and each contract filters it to its own
   // threshold — set-identical to a per-row judge (the judge itself filters
   // on the same 6-dp rounded cosine), at one N² pass instead of five
-  private val exactJudgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def exactJudgePairs(s: SparkSession, dir: String,
                               threshold: Double): DataFrame = {
     require(threshold >= 0.4,
       s"exactJudgePairs: memoized base covers thresholds >= 0.4, got $threshold")
-    exactJudgeCache.getOrElseUpdate((s, dir),
-      Similarity.nearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding", 0.4)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    memo(s, dir, "judge_04")(persisted(
+      Similarity.nearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding", 0.4)))
       .where(col("cos") >= threshold).select("id_a", "id_b")
   }
 
@@ -127,12 +122,10 @@ object SparkEntry {
   // 64-bit frame behind q336/q337/q338 — the SAME maintained-index shape
   // the container tiers have had since round 8, so the kernel pass runs
   // once per (session, dir) instead of 3–4×.
-  private val fpsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
   private def tierFps(s: SparkSession, dir: String, tier: String): DataFrame =
-    fpsCache.getOrElseUpdate((s, dir, tier), {
+    memo(s, dir, s"fps_$tier") {
       val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      val fps = tier match {
+      persisted(tier match {
         case "ppm" => Multimodal.perceptualHash128Content(s,
           Multimodal.ppmLumaContent(s,
             Multimodal.synthesizePpmFromWords(s, docs, "doc_id", "text", 8, 8)))
@@ -150,9 +143,8 @@ object SparkEntry {
         case "text64" => Multimodal.perceptualHash64(s,
           Multimodal.asMediaTable(docs, "doc_id", "text", "text"))
         case other => sys.error(s"tierFps: unknown tier $other")
-      }
-      fps.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+      })
+    }
 
   // the text near-dup PAIR TABLES are maintained artifacts too (round 11,
   // guide §1.2: remove whole passes before tuning stages): one banded
@@ -167,15 +159,14 @@ object SparkEntry {
   // released at scope exit, so the memoized frame must be computed while
   // that scratch is still resident or a later consumer would pay the
   // signature pass twice per side.
-  private val frameCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private def materialized(df: DataFrame): DataFrame = {
+    val f = persisted(df)
+    f.count()
+    f
+  }
   private def cachedFrame(s: SparkSession, dir: String, key: String)
                          (build: => DataFrame): DataFrame =
-    frameCache.getOrElseUpdate((s, dir, key), {
-      val f = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      f.count()
-      f
-    })
+    memo(s, dir, key)(materialized(build))
   /** Banded MinHash LSH pair table over the full corpus at the registered
     * (n=3, bands=4, rows=3, minJ=0.5) operating point — the 100 TB dedup
     * path's pair index. */
@@ -190,16 +181,18 @@ object SparkEntry {
         "doc_id", "text", 3, 0.5))
   /** The curation-eligible sub-corpus (lang = en, quality ≠ low) and its
     * own banded pair index — shared by the q53 curation run and the q221
-    * curation-to-tape composite, which build the identical frames. */
-  private def eligibleDocs(s: SparkSession, dir: String): DataFrame =
-    cachedFrame(s, dir, "eligible_docs")(
-      graft.core.Tables.tableRebalanced(s, dir, "documents")
+    * curation-to-tape composite, which build the identical frames. One
+    * artifact holds both frames, so one release drops both. */
+  private def eligible(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    memo(s, dir, "eligible_docs") {
+      val docs = materialized(graft.core.Tables.tableRebalanced(s, dir, "documents")
         .where(TextStats.detectedLang(col("text")) === "en"
           && TextStats.qualityBucket(col("text")) =!= "low")
         .select("doc_id", "text"))
-  private def lshPairsEligible(s: SparkSession, dir: String): DataFrame =
-    cachedFrame(s, dir, "lsh_pairs_eligible")(
-      Dedup.minHashLshPairs(eligibleDocs(s, dir), "doc_id", "text", 3, 4, 3, 0.5))
+      (docs, materialized(Dedup.minHashLshPairs(docs, "doc_id", "text", 3, 4, 3, 0.5)))
+    }
+  private def eligibleDocs(s: SparkSession, dir: String): DataFrame = eligible(s, dir)._1
+  private def lshPairsEligible(s: SparkSession, dir: String): DataFrame = eligible(s, dir)._2
   // the EMBEDDING pair indexes at the family's base threshold 0.4 and the
   // session calibration (bits/bands from the corpus count) — one sign-LSH,
   // one multi-probe, one RP-LSH frame serve the pair queries AND their
@@ -273,10 +266,8 @@ object SparkEntry {
   // bench corpora the rule lands at the cap 24 (the historical 3/16
   // default); on the 100× templated fixture it binds — the 736.7 M-row
   // answer the fixed default emitted becomes a CHOSEN operating point.
-  private val radiusCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Int]
   private def tierRadius(s: SparkSession, dir: String, tier: String): Int =
-    radiusCache.getOrElseUpdate((s, dir, tier), tier match {
+    memo(s, dir, s"radius_$tier")(tier match {
       case "text" =>
         val n = cachedCount(s, dir, "documents")(
           graft.core.Tables.tableRebalanced(s, dir, "documents"))
@@ -316,27 +307,19 @@ object SparkEntry {
     })
 
   /** The maintained-artifact plan (round 12, VERDICT r11 #1/#4): every
-    * cross-query memoized artifact with (a) the EXACT query names that
-    * consume it, (b) a warm thunk that builds + materializes it, and (c) a
-    * release thunk that unpersists it. A bench shard warms ONLY the
-    * artifacts its query list consumes and releases each one after its
-    * last consumer has run — round 11 left ~16 frames resident for whole
-    * shards whose queries never read them, and the repo's own history
-    * (see the tierRadius scratch note below) shows resident frames
-    * starving memory-hungry queries 2.5–5×.
+    * [[graft.core.CacheRegistry.memo]] artifact, in warm order, with (a)
+    * the EXACT query names that reach it — directly or through another
+    * artifact's build — and (b) a warm thunk that builds + materializes it.
+    * A bench shard warms ONLY the artifacts its query list consumes and
+    * releases each one after its last consumer has run — round 11 left ~16
+    * frames resident for whole shards whose queries never read them, and
+    * the repo's own history (see the radius note below) shows resident
+    * frames starving memory-hungry queries 2.5–5×.
     *
-    * The consumer sets are a performance map, not a correctness one:
-    * every artifact getter is memoized, so a missed consumer only means
-    * that query lazily rebuilds the artifact inside its own timed region
-    * (slower, never wrong). SparkEntrySpec pins each listed name to a
-    * registered query. */
-  private def artifactPlan(s: SparkSession, dir: String)
-      : Seq[(String, Set[String], () => Unit, () => Unit)] = {
-    def frameRelease(key: String): () => Unit =
-      () => frameCache.remove((s, dir, key)).foreach(_.unpersist())
-    def fpsRelease(tier: String): () => Unit =
-      () => fpsCache.remove((s, dir, tier)).foreach(_.unpersist())
-    val noop: () => Unit = () => ()
+    * A missed consumer would rebuild the artifact inside its own timed
+    * region (slower, never wrong), so SparkEntrySpec records what every
+    * query reaches at sf0.001 and checks these sets equal the record. */
+  private[graft] val artifacts: Seq[(String, Set[String], (SparkSession, String) => Any)] = {
     val fpsText = Set("q364_perceptual128_neardup", "q365_perceptual128_recall",
       "q369_hamming_radius_sweep")
     val fpsText64 = Set("q336_perceptual_neardup", "q337_perceptual_recall",
@@ -356,54 +339,51 @@ object SparkEntry {
           "q05_seller_perf_quarterly", "q06_order_rates", "q07_seller_segmentation",
           "q08_customer_analytics", "q17_top_customers_by_nation",
           "q48_calendar_rollup", "q54_revenue_trend"),
-        () => { StarSchema.factOrderDetails(s, dir).count(); () },
-        () => StarSchema.clearCache(s)),
+        (s, dir) => StarSchema.factOrderDetails(s, dir).count()),
       ("staged_scd2",
         Set("q12_scd2_classify", "q13_scd2_new_records", "q14_scd2_expire_keys",
           "q15_scd2_apply", "q77_scd2_asof"),
-        () => { staged(s, dir).count(); () },
-        () => stagedCache.remove((s, dir)).foreach(_.unpersist())),
+        (s, dir) => staged(s, dir).count()),
       ("postings",
         Set("q178_more_like_this", "q181_late_interaction"),
-        () => { docPostings(s, dir).count(); () },
-        () => postingsCache.remove((s, dir)).foreach(_.unpersist())),
+        (s, dir) => docPostings(s, dir).count()),
       ("cnt_embeddings",
         Set("q25_ann_lsh_topk", "q34_ann_multiband", "q38_ivf_topk",
-          "q83_semantic_dedup", "q327_knn_outliers", "q340_lsh_recall_scaled",
-          "q342_rplsh_recall", "q345_multiprobe_gain", "q351_multiprobe_strong"),
-        () => { cachedCount(s, dir, "embeddings")(t(s, dir, "embeddings")); () },
-        noop),
+          "q44_embed_neardup_lsh", "q83_semantic_dedup", "q327_knn_outliers",
+          "q340_lsh_recall_scaled", "q341_rplsh_neardup", "q342_rplsh_recall",
+          "q344_lsh_multiprobe", "q345_multiprobe_gain",
+          "q350_rplsh_recall_strong", "q351_multiprobe_strong"),
+        (s, dir) => cachedCount(s, dir, "embeddings")(t(s, dir, "embeddings"))),
+      // every perceptual pair, radius and recall query sizes its bands
+      // from the document count; only q356 reads fps_y4m alone
       ("cnt_documents",
-        Set("q337_perceptual_recall", "q349_ppm_recall_real",
-          "q353_wav_recall_real", "q359_png_recall_real",
-          "q365_perceptual128_recall", "q367_video128_recall",
-          "q369_hamming_radius_sweep"),
-        () => { cachedCount(s, dir, "documents")(t(s, dir, "documents")); () },
-        noop),
+        fpsText ++ fpsText64 ++ fpsPpm ++ fpsWav ++ fpsPng ++ pairsY4m
+          + "q367_video128_recall",
+        (s, dir) => cachedCount(s, dir, "documents")(t(s, dir, "documents"))),
       ("cnt_embeddings_even",
         Set("q200_embed_dedup_across", "q343_rplsh_dedup_across",
           "q366_stream_ann_ingest", "q371_stream_ann_intra_batch",
           "q373_ann_threshold_sweep"),
-        () => { cachedCount(s, dir, "embeddings_even")(
-          t(s, dir, "embeddings").where(col("vec_id") % 2 === 0)); () },
-        noop),
+        (s, dir) => cachedCount(s, dir, "embeddings_even")(
+          t(s, dir, "embeddings").where(col("vec_id") % 2 === 0))),
       ("cnt_embeddings_mod50",
         Set("q118_ivfpq_topk"),
-        () => { cachedCount(s, dir, "embeddings_mod50")(
-          t(s, dir, "embeddings").where(col("vec_id") % 50 =!= 0)); () },
-        noop),
-      ("fps_text", fpsText,
-        () => { tierFps(s, dir, "text").count(); () }, fpsRelease("text")),
-      ("fps_text64", fpsText64,
-        () => { tierFps(s, dir, "text64").count(); () }, fpsRelease("text64")),
-      ("fps_ppm", fpsPpm,
-        () => { tierFps(s, dir, "ppm").count(); () }, fpsRelease("ppm")),
-      ("fps_wav", fpsWav,
-        () => { tierFps(s, dir, "wav").count(); () }, fpsRelease("wav")),
-      ("fps_png", fpsPng,
-        () => { tierFps(s, dir, "png").count(); () }, fpsRelease("png")),
-      ("fps_y4m", fpsY4m,
-        () => { tierFps(s, dir, "y4m").count(); () }, fpsRelease("y4m")),
+        (s, dir) => cachedCount(s, dir, "embeddings_mod50")(
+          t(s, dir, "embeddings").where(col("vec_id") % 50 =!= 0))),
+      ("cnt_documents_even",
+        Set("q110_stream_dedup_ingest"),
+        (s, dir) => cachedCount(s, dir, "documents_even")(
+          t(s, dir, "documents").where(col("doc_id") % 2 === 0).select("doc_id", "text"))),
+      ("cnt_documents_mod4",
+        Set("q370_stream_intra_batch"),
+        (s, dir) => cachedCount(s, dir, "documents_mod4")(
+          t(s, dir, "documents").where(col("doc_id") % 4 === 0).select("doc_id", "text"))),
+      ("fps_text", fpsText, (s, dir) => tierFps(s, dir, "text").count()),
+      ("fps_text64", fpsText64, (s, dir) => tierFps(s, dir, "text64").count()),
+      ("fps_ppm", fpsPpm, (s, dir) => tierFps(s, dir, "ppm").count()),
+      ("fps_wav", fpsWav, (s, dir) => tierFps(s, dir, "wav").count()),
+      ("fps_png", fpsPng, (s, dir) => tierFps(s, dir, "png").count()),
+      ("fps_y4m", fpsY4m, (s, dir) => tierFps(s, dir, "y4m").count()),
       // the derived verify radii (round 10): one banded density sweep per
       // tier, memoized across every 128-bit pair/recall query. The sweep's
       // SCRATCH frames (value pairs at the max radius, multiplicity
@@ -411,20 +391,13 @@ object SparkEntry {
       // radius INTS outlive the warmup — leaving the frames pinned starved
       // every memory-hungry query in the suite (measured: q366 5.9 →
       // 33.5 s, q53 2.9 → 15.1 s with the scratch left resident)
-      ("radius_text", pairsText,
-        () => { tierRadius(s, dir, "text"); () }, noop),
-      ("radius_text64", fpsText64,
-        () => { tierRadius(s, dir, "text64"); () }, noop),
-      ("radius_ppm", fpsPpm,
-        () => { tierRadius(s, dir, "ppm"); () }, noop),
-      ("radius_wav", fpsWav,
-        () => { tierRadius(s, dir, "wav"); () }, noop),
-      ("radius_png", fpsPng,
-        () => { tierRadius(s, dir, "png"); () }, noop),
-      ("radius_y4m", pairsY4m ++ Set("q367_video128_recall"),
-        () => { tierRadius(s, dir, "y4m"); () }, noop),
-      ("radius_y4m_sub5", Set("q367_video128_recall"),
-        () => { tierRadius(s, dir, "y4m_sub5"); () }, noop),
+      ("radius_text", pairsText, tierRadius(_, _, "text")),
+      ("radius_text64", fpsText64, tierRadius(_, _, "text64")),
+      ("radius_ppm", fpsPpm, tierRadius(_, _, "ppm")),
+      ("radius_wav", fpsWav, tierRadius(_, _, "wav")),
+      ("radius_png", fpsPng, tierRadius(_, _, "png")),
+      ("radius_y4m", pairsY4m, tierRadius(_, _, "y4m")),
+      ("radius_y4m_sub5", Set("q367_video128_recall"), tierRadius(_, _, "y4m_sub5")),
       // the maintained text/embedding pair indexes (round 11): each built
       // inside its own scope so the builders' scratch persists
       // (band/shingle tables) release at warm exit — cachedFrame
@@ -434,59 +407,39 @@ object SparkEntry {
           "q174_cluster_medoids", "q217_dedup_recall", "q262_dedup_savings",
           "q323_dup_modularity", "q325_cluster_safe_split",
           "q335_contrastive_pairs"),
-        () => { lshPairs(s, dir); () }, frameRelease("lsh_pairs")),
+        lshPairs),
       ("jac_pairs_05",
         Set("q21_dedup_ngram_jaccard", "q33_dedup_clusters", "q35_dedup_drop",
           "q71_dedup_audit", "q95_cluster_best_rep", "q217_dedup_recall",
           "q224_source_dedup_rates", "q250_kcore_peel",
           "q338_crossmodal_consensus"),
-        () => { jacPairs05(s, dir); () }, frameRelease("jac_pairs_05")),
+        jacPairs05),
       ("eligible_docs",
-        Set("q53_corpus_curation", "q221_curation_to_tape"),
-        () => { eligibleDocs(s, dir); lshPairsEligible(s, dir); () },
-        () => {
-          frameRelease("lsh_pairs_eligible")()
-          frameRelease("eligible_docs")()
-        }),
+        Set("q53_corpus_curation", "q221_curation_to_tape"), eligible),
       ("sign_pairs_04",
         Set("q44_embed_neardup_lsh", "q345_multiprobe_gain",
           "q351_multiprobe_strong"),
-        () => { signPairs04(s, dir); () }, frameRelease("sign_pairs_04")),
+        signPairs04),
       ("mp_pairs_04",
         Set("q344_lsh_multiprobe", "q345_multiprobe_gain",
           "q351_multiprobe_strong"),
-        () => { mpPairs04(s, dir); () }, frameRelease("mp_pairs_04")),
+        mpPairs04),
       ("rp_pairs_04",
         Set("q341_rplsh_neardup", "q342_rplsh_recall", "q350_rplsh_recall_strong"),
-        () => { rpPairs04(s, dir); () }, frameRelease("rp_pairs_04")),
+        rpPairs04),
       ("kmeans_assigned",
-        Set("q83_semantic_dedup", "q327_knn_outliers"),
-        () => { kmeansAssigned(s, dir); () }, frameRelease("kmeans_assigned")),
-      ("pairs_text", pairsText,
-        () => { tierPairs(s, dir, "text"); () }, frameRelease("pairs_text")),
-      ("pairs_text64", fpsText64,
-        () => { tierPairs(s, dir, "text64"); () }, frameRelease("pairs_text64")),
-      ("pairs_ppm", fpsPpm,
-        () => { tierPairs(s, dir, "ppm"); () }, frameRelease("pairs_ppm")),
-      ("pairs_wav", fpsWav,
-        () => { tierPairs(s, dir, "wav"); () }, frameRelease("pairs_wav")),
-      ("pairs_png", fpsPng,
-        () => { tierPairs(s, dir, "png"); () }, frameRelease("pairs_png")),
-      ("pairs_y4m", pairsY4m,
-        () => { tierPairs(s, dir, "y4m"); () }, frameRelease("pairs_y4m")),
+        Set("q83_semantic_dedup", "q327_knn_outliers"), kmeansAssigned),
+      ("pairs_text", pairsText, tierPairs(_, _, "text")),
+      ("pairs_text64", fpsText64, tierPairs(_, _, "text64")),
+      ("pairs_ppm", fpsPpm, tierPairs(_, _, "ppm")),
+      ("pairs_wav", fpsWav, tierPairs(_, _, "wav")),
+      ("pairs_png", fpsPng, tierPairs(_, _, "png")),
+      ("pairs_y4m", pairsY4m, tierPairs(_, _, "y4m")),
       ("judge_04",
         Set("q340_lsh_recall_scaled", "q342_rplsh_recall",
           "q345_multiprobe_gain", "q350_rplsh_recall_strong",
           "q351_multiprobe_strong"),
-        () => { exactJudgePairs(s, dir, 0.4).count(); () },
-        () => exactJudgeCache.remove((s, dir)).foreach(_.unpersist())))
-  }
-
-  /** Consumer map for [[artifactPlan]] — exposed for the spec that pins
-    * every listed consumer to a registered query name. */
-  private[graft] def artifactConsumers: Map[String, Set[String]] = {
-    val s = SparkSession.getActiveSession.orNull
-    artifactPlan(s, "/nonexistent").map(a => a._1 -> a._2).toMap
+        (s, dir) => exactJudgePairs(s, dir, 0.4).count()))
   }
 
   /** Materialize the cross-query memoized artifacts CONSUMED BY `names`,
@@ -498,19 +451,11 @@ object SparkEntry {
   def warmCachesFor(s: SparkSession, dir: String,
                     names: Iterable[String]): Seq[(String, Double)] = {
     val active = names.toSet
-    artifactPlan(s, dir).flatMap { case (key, consumers, build, _) =>
-      if (consumers.intersect(active).isEmpty) None
-      else {
-        val t0 = System.nanoTime()
-        graft.core.CacheRegistry.scoped { build() }
-        Some(key -> (System.nanoTime() - t0) / 1e9)
-      }
+    artifacts.collect { case (key, consumers, warm) if consumers.exists(active) =>
+      val t0 = System.nanoTime()
+      graft.core.CacheRegistry.scoped { warm(s, dir) }
+      key -> (System.nanoTime() - t0) / 1e9
     }
-  }
-
-  /** [[warmCachesFor]] over the full registered query list. */
-  def warmCaches(s: SparkSession, dir: String): Unit = {
-    warmCachesFor(s, dir, queries.keys); ()
   }
 
   /** Unpersist every maintained artifact none of `remaining` consumes —
@@ -521,33 +466,15 @@ object SparkEntry {
   def releaseSpentCaches(s: SparkSession, dir: String,
                          remaining: Iterable[String]): Unit = {
     val rem = remaining.toSet
-    artifactPlan(s, dir).foreach { case (_, consumers, _, release) =>
-      if (consumers.intersect(rem).isEmpty) release()
+    artifacts.foreach { case (key, consumers, _) =>
+      if (!consumers.exists(rem)) graft.core.CacheRegistry.release(s, dir, key)
     }
   }
 
-  /** Release every cross-query memoized cache held for `s` — the harness
-    * calls this at suite end (per-query ephemeral persists are drained via
-    * [[graft.core.CacheRegistry]] instead). */
-  def clearCaches(s: SparkSession): Unit = {
-    stagedCache.keys.filter(_._1 eq s).foreach { k =>
-      stagedCache.remove(k).foreach(_.unpersist())
-    }
-    postingsCache.keys.filter(_._1 eq s).foreach { k =>
-      postingsCache.remove(k).foreach(_.unpersist())
-    }
-    countCache.keys.filter(_._1 eq s).foreach(countCache.remove)
-    fpsCache.keys.filter(_._1 eq s).foreach { k =>
-      fpsCache.remove(k).foreach(_.unpersist())
-    }
-    frameCache.keys.filter(_._1 eq s).foreach { k =>
-      frameCache.remove(k).foreach(_.unpersist())
-    }
-    exactJudgeCache.keys.filter(_._1 eq s).foreach { k =>
-      exactJudgeCache.remove(k).foreach(_.unpersist())
-    }
-    StarSchema.clearCache(s)
-  }
+  /** Release every cross-query memoized artifact held for `s` — the
+    * harness calls this at suite end (per-query ephemeral persists are
+    * drained via [[graft.core.CacheRegistry]] scopes instead). */
+  def clearCaches(s: SparkSession): Unit = graft.core.CacheRegistry.releaseAll(s)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
@@ -4906,21 +4833,6 @@ object SparkEntry {
     sb.toString
   }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. */
-  /** Bench-only queries (no DuckDB oracle; excluded from Verify): end-to-end
-    * STREAMING runs whose correctness twin is already oracle-checked in
-    * batch form. q90 drains the events table through an event-time
-    * sessionization stream (file source → watermark →
-    * flatMapGroupsWithState → AvailableNow) so the bench exercises the
-    * stateful streaming path, not just its batch shape (q41). The memory
-    * sink is bench plumbing; production writes parquet/kafka. */
-  /** Formerly the bench-only rows (no oracle); all three were promoted to
-    * oracle-checked forms in [[queries]] in round 6, so the bench list is
-    * now exactly the driver-verified list. Kept as an (empty) extension
-    * point for genuinely unverifiable probes. */
-  def benchExtras: Map[String, (SparkSession, String) => DataFrame] = Map.empty
-
   /** One stage of a CHUNKED oracle replay ([[chunkedOracle]]): materialize
     * `table` from `sql`. When `chunked` is true, `sql` carries the
     * `<<NCHUNKS>>`/`<<CHUNK>>` placeholders and the runner unions one
@@ -5016,6 +4928,8 @@ object SparkEntry {
           |FROM allm GROUP BY 1, 2""".stripMargin))
   }
 
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. */
   def oracleSql: Map[String, String] = Map(
     "q01_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,

@@ -1,33 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shm = new java.io.File("/dev/shm")
-    val localDir =
-      if (shm.isDirectory && shm.getUsableSpace > (16L << 30)) "/dev/shm/graft-spark-local"
-      else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // fresh warehouse per run: the default ./spark-warehouse persists
-      // across JVMs while the in-memory catalog does not, so a catalog-
-      // backed query (q109) would find its versioned table's DIRECTORY
-      // already on disk and refuse the create
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", localDir)
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.core.GraftSession.harness("graft-verify", cpus)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_QUERIES=q53,q106 restricts the dump (local iteration only;
     // the driver always runs the full set)

@@ -1,8 +1,9 @@
 package graft.core
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Registry for operator-internal persisted frames.
@@ -33,14 +34,26 @@ import org.apache.spark.storage.StorageLevel
   * membership is thread-confined by design, matching how these operators
   * build their plans (driver-side, single-threaded per query).
   *
-  * Cross-query memoized caches (the star-schema fact, the staged SCD2 diff)
-  * are deliberately NOT registered here — they are bounded (one per source
-  * dir) and shared across queries; release those via
-  * [[graft.SparkEntry.clearCaches]] at suite end.
+  * Cross-query artifacts (the star-schema fact, the staged SCD2 diff, pair
+  * and fingerprint indexes, corpus counts) live in a separate [[memo]]
+  * keyed by (session, dir, artifact key): shared across queries and
+  * released by key ([[release]]) or per session ([[releaseAll]]), never
+  * by a query's scope or [[drain]].
   */
 object CacheRegistry {
 
   private val global = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]
+
+  /** A memoized artifact and the other artifact keys its build reached
+    * (recorded only while a [[recording]] was open during the build). */
+  private final case class Entry(value: Any, reaches: Set[String])
+
+  private val artifacts =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Entry]
+
+  private val recorders = new ThreadLocal[List[mutable.Set[String]]] {
+    override def initialValue(): List[mutable.Set[String]] = Nil
+  }
 
   private val scopes = new ThreadLocal[List[ArrayBuffer[() => Unit]]] {
     override def initialValue(): List[ArrayBuffer[() => Unit]] = Nil
@@ -104,4 +117,52 @@ object CacheRegistry {
 
   /** Globally-registered frames awaiting a [[drain]] (excludes open scopes). */
   def size: Int = global.size
+
+  /** The artifact `key` over `dir` for session `s`: built once by `build`
+    * and shared by every later caller until [[release]]d. A `build` that
+    * should be persisted persists its own result. While a [[recording]] is
+    * open on the calling thread, every open recorder notes `key` and the
+    * keys its build reached, whether it is built now or was built earlier
+    * under a recording. */
+  def memo[A](s: SparkSession, dir: String, key: String)(build: => A): A = {
+    val entry = artifacts.getOrElseUpdate((s, dir, key),
+      if (recorders.get().isEmpty) Entry(build, Set.empty)
+      else {
+        val (value, reaches) = recording(build)
+        Entry(value, reaches)
+      })
+    recorders.get().foreach { r => r += key; r ++= entry.reaches }
+    entry.value.asInstanceOf[A]
+  }
+
+  /** Drop the artifact `key` over `dir`, unpersisting every Dataset it
+    * holds (the value itself or the fields of a tuple). */
+  def release(s: SparkSession, dir: String, key: String): Unit =
+    artifacts.remove((s, dir, key)).foreach(e => unpersistAll(e.value))
+
+  /** [[release]] every artifact held for session `s`. */
+  def releaseAll(s: SparkSession): Unit =
+    artifacts.keys.filter(_._1 eq s).foreach { case (_, dir, key) => release(s, dir, key) }
+
+  /** (dir, key) of every artifact held for session `s`. */
+  def memoKeys(s: SparkSession): Set[(String, String)] =
+    artifacts.keys.collect { case (k, dir, key) if k eq s => (dir, key) }.toSet
+
+  /** Run `body` and return the artifact keys it reached through [[memo]] on
+    * the calling thread, directly or through another artifact's build.
+    * Nests; nothing is recorded outside a recording. */
+  def recording[A](body: => A): (A, Set[String]) = {
+    val reached = mutable.Set.empty[String]
+    recorders.set(reached :: recorders.get())
+    val value =
+      try body
+      finally recorders.set(recorders.get().tail)
+    (value, reached.toSet)
+  }
+
+  private def unpersistAll(v: Any): Unit = v match {
+    case d: Dataset[_] => d.unpersist(); ()
+    case p: Product    => p.productIterator.foreach(unpersistAll)
+    case _             => ()
+  }
 }

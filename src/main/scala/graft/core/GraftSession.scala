@@ -36,6 +36,42 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
+  /** The session every harness main (Bench, Verify, PlanDump, ScaleProbe)
+    * runs on: [[builder]] at `local[cpus]` with `cpus` shuffle partitions,
+    * plus what a long local run needs —
+    *   - a fresh warehouse dir, removed when the JVM exits: the default
+    *     ./spark-warehouse persists across JVMs while the in-memory catalog
+    *     does not, so a catalog-backed query (q109) would find its
+    *     versioned table's directory already on disk and refuse the create;
+    *   - shuffle/spill scratch on /dev/shm when it has real headroom (it
+    *     avoids multi-second virtio dirty-page-flush stalls but competes
+    *     with the heap for RAM), else the JVM temp dir;
+    *   - a 600 s network timeout with a 60 s heartbeat, so a multi-second
+    *     VM stall does not kill the executor (round 1: heartbeat death ×60
+    *     at the default 10 s interval / 120 s timeout). */
+  def harness(appName: String, cpus: Int): SparkSession = {
+    val shm = new java.io.File("/dev/shm")
+    val localDir =
+      if (shm.isDirectory && shm.getUsableSpace > (16L << 30)) "/dev/shm/graft-spark-local"
+      else System.getProperty("java.io.tmpdir")
+    val s = builder(appName, s"local[$cpus]", cpus)
+      .config("spark.sql.warehouse.dir", tempWarehouse())
+      .config("spark.local.dir", localDir)
+      .config("spark.network.timeout", "600s")
+      .config("spark.executor.heartbeatInterval", "60s")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** A fresh `graft-warehouse` temp dir, deleted with its contents when
+    * the JVM exits. */
+  def tempWarehouse(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.toString
+  }
+
   def get(): SparkSession = {
     val s = builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{CacheRegistry, Tables}
 
 /** Builds the denormalized fact (the reference's `fact_order_details`,
   * /root/reference/databricks_notebooks/3_Silver_to_Gold.py:31-42) from the
@@ -25,24 +25,17 @@ object StarSchema {
 
   /** The fact feeds every Gold mart, so it is built and persisted once per
     * (session, source dir) — the reference does exactly this with `cache()`
-    * across its mart branches (3_Silver_to_Gold.py:44). MEMORY_AND_DISK:
-    * at bench scale it stays in memory; at 100 TB the marts would instead
-    * share one materialized fact table (GoldBuild writes it) — caching a
-    * full-scan fact in executor memory is a single-node convenience, not the
-    * cluster design. */
-  private val factCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+    * across its mart branches (3_Silver_to_Gold.py:44). It is the
+    * `star_fact` artifact of [[graft.core.CacheRegistry.memo]], released
+    * with the session's other artifacts. MEMORY_AND_DISK: at bench scale
+    * it stays in memory; at 100 TB the marts would instead share one
+    * materialized fact table (GoldBuild writes it) — caching a full-scan
+    * fact in executor memory is a single-node convenience, not the cluster
+    * design. */
   def factOrderDetails(spark: SparkSession, dir: String): DataFrame =
-    factCache.getOrElseUpdate((spark, dir),
+    CacheRegistry.memo(spark, dir, "star_fact")(
       buildFactOrderDetails(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Release the memoized fact cache for `spark` (harness suite-end hook). */
-  def clearCache(spark: SparkSession): Unit =
-    factCache.keys.filter(_._1 eq spark).foreach { k =>
-      factCache.remove(k).foreach(_.unpersist())
-    }
 
   /** lineitem ⋈ orders ⋈ customer ⋈ part ⋈ supplier ⋈ nation ⋈ region,
     * projected into the reference's fact_order_details vocabulary. */

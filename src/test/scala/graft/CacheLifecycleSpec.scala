@@ -42,6 +42,52 @@ class CacheLifecycleSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.size shouldBe baseline
   }
 
+  test("clearCaches releases every warmed artifact, counts and radii included") {
+    CacheRegistry.drain()
+    SparkEntry.clearCaches(spark)
+    val baseline = spark.sparkContext.getPersistentRDDs.size
+    val warmed = SparkEntry.warmCachesFor(spark, sf0001, Seq("q02_star_fact",
+      "q12_scd2_classify", "q25_ann_lsh_topk", "q349_ppm_recall_real")).map(_._1)
+    warmed should contain allOf ("star_fact", "staged_scd2", "cnt_embeddings",
+      "cnt_documents", "radius_ppm", "pairs_ppm")
+    CacheRegistry.memoKeys(spark).map(_._2) shouldBe warmed.toSet
+    spark.sparkContext.getPersistentRDDs.size should be > baseline
+    SparkEntry.clearCaches(spark)
+    spark.sparkContext.getPersistentRDDs.size shouldBe baseline
+    CacheRegistry.memoKeys(spark) shouldBe empty
+  }
+
+  test("releasing the two-frame eligible_docs artifact unpersists both frames") {
+    CacheRegistry.drain()
+    SparkEntry.clearCaches(spark)
+    val baseline = spark.sparkContext.getPersistentRDDs.size
+    SparkEntry.warmCachesFor(spark, sf0001, Seq("q53_corpus_curation"))
+      .map(_._1) shouldBe Seq("eligible_docs")
+    spark.sparkContext.getPersistentRDDs.size shouldBe baseline + 2
+    SparkEntry.releaseSpentCaches(spark, sf0001, Nil)
+    spark.sparkContext.getPersistentRDDs.size shouldBe baseline
+    CacheRegistry.memoKeys(spark) shouldBe empty
+  }
+
+  test("a recording sees artifacts reached through another artifact's build, hit or miss") {
+    val dir = "memo-spec"
+    def inner = CacheRegistry.memo(spark, dir, "inner")(1)
+    def outer = CacheRegistry.memo(spark, dir, "outer")(inner + 1)
+    // built outside any recording: nothing is recorded, so a later hit
+    // cannot report what the build reached — the closure spec therefore
+    // records from cleared caches
+    outer shouldBe 2
+    CacheRegistry.recording(outer)._2 shouldBe Set("outer")
+    CacheRegistry.release(spark, dir, "outer")
+    CacheRegistry.release(spark, dir, "inner")
+    // built under a recording (miss), then hit under another
+    CacheRegistry.recording(outer) shouldBe (2 -> Set("outer", "inner"))
+    CacheRegistry.recording(outer)._2 shouldBe Set("outer", "inner")
+    CacheRegistry.recording(inner)._2 shouldBe Set("inner")
+    CacheRegistry.releaseAll(spark)
+    CacheRegistry.memoKeys(spark) shouldBe empty
+  }
+
   test("a global drain does not release frames inside an open scope") {
     CacheRegistry.drain()
     val baseline = spark.sparkContext.getPersistentRDDs.size

@@ -1,7 +1,11 @@
 package graft
 
+import graft.core.CacheRegistry
+
 /** Driver-contract smoke: `entry` returns rows at sf0.001 (the driver's t1
-  * gate) and every `oracleSql` key has a matching `queries` entry. */
+  * gate), every `oracleSql` key has a matching `queries` entry, and the
+  * maintained-artifact plan names exactly the queries that reach each
+  * artifact. */
 class SparkEntrySpec extends SparkSpec {
 
   test("entry returns rows on sf0.001 (driver smoke contract)") {
@@ -14,14 +18,6 @@ class SparkEntrySpec extends SparkSpec {
     val o = SparkEntry.oracleSql.keySet
     (o -- q) shouldBe empty
     (q -- o) shouldBe empty
-  }
-
-  test("artifact consumer lists name only registered queries") {
-    val q = SparkEntry.queries.keySet
-    val bad = SparkEntry.artifactConsumers.toSeq.flatMap { case (art, consumers) =>
-      (consumers -- q).map(c => s"$art -> $c")
-    }
-    bad shouldBe empty
   }
 
   test("warmCachesFor warms only consumed artifacts, and release is by last consumer") {
@@ -44,11 +40,37 @@ class SparkEntrySpec extends SparkSpec {
     SparkEntry.clearCaches(spark)
   }
 
-  test("all queries run and return rows at sf0.001") {
-    val failures = SparkEntry.queries.flatMap { case (name, fn) =>
-      try { if (fn(spark, sf0001).count() > 0) None else Some(s"$name: 0 rows") }
-      catch { case e: Exception => Some(s"$name: ${e.getMessage}") }
+  /** One pass over every registered query at sf0.001, starting from
+    * cleared caches: each query's failure, if any, and the artifact keys
+    * its build and count reached. Shared by the two specs below so the
+    * suite builds the queries once. */
+  private lazy val pass: Seq[(String, Option[String], Set[String])] = {
+    SparkEntry.clearCaches(spark)
+    val runs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val (failure, reached) = CacheRegistry.recording {
+        try { if (fn(spark, sf0001).count() > 0) None else Some(s"$name: 0 rows") }
+        catch { case e: Exception => Some(s"$name: ${e.getMessage}") }
+      }
+      (name, failure, reached)
     }
-    failures shouldBe empty
+    SparkEntry.clearCaches(spark)
+    runs
+  }
+
+  test("all queries run and return rows at sf0.001") {
+    pass.flatMap(_._2) shouldBe empty
+  }
+
+  test("each artifact's declared consumers are exactly the queries that reach it") {
+    val declared = SparkEntry.artifacts.map { case (key, consumers, _) => key -> consumers }.toMap
+    val reachedBy = pass.flatMap { case (name, _, keys) => keys.map(_ -> name) }
+      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    (reachedBy.keySet -- declared.keySet) shouldBe empty
+    val mismatches = declared.toSeq.sortBy(_._1).flatMap { case (key, consumers) =>
+      val reached = reachedBy.getOrElse(key, Set.empty)
+      (reached -- consumers).toSeq.sorted.map(q => s"$key: undeclared consumer $q") ++
+        (consumers -- reached).toSeq.sorted.map(q => s"$key: declared $q never reaches it")
+    }
+    mismatches shouldBe empty
   }
 }

@@ -9,8 +9,7 @@ import org.scalatest.matchers.should.Matchers
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = graft.core.GraftSession.builder("graft-test", "local[4]", shufflePartitions = 4)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", graft.core.GraftSession.tempWarehouse())
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
