@@ -12,7 +12,10 @@ import org.apache.spark.sql.DataFrame
   * driver); tests use [[CollectingSink]].
   */
 trait ActionSink {
-  /** Deliver one batch of action records. Called after the Silver commit. */
+  /** Deliver one batch of action records. [[graft.etl.SilverScd2]] calls
+    * it BEFORE it swaps in the merged Silver state and commits the
+    * watermark: a delivery that throws leaves both untouched, so the re-run
+    * stages and delivers the batch again (at-least-once). */
   def deliver(records: DataFrame): Unit
 }
 

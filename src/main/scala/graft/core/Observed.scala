@@ -1,6 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** Row-count observation during a write — the Spark-native replacement for
@@ -17,6 +20,15 @@ import org.apache.spark.sql.functions.{count, lit}
   * Contract: `run` must execute exactly ONE action on the frame it is
   * given; the observed frame must not be consumed anywhere else (a second
   * action on the same Observation throws).
+  *
+  * An observed frame may also sit inside a PERSISTED frame that several
+  * actions read (SilverScd2's staged rows). Then the first action, the one
+  * that builds the cache, fills the observation: Spark collects the
+  * metrics of an in-memory scan's cached plan with the query that built
+  * it, and later actions read the cache without re-running the observed
+  * plan. Read such an observation through [[reported]], never
+  * `Observation.get`, because the building action's final plan may not
+  * contain the observed node at all.
   */
 object Observed {
 
@@ -27,4 +39,14 @@ object Observed {
     run(df.observe(obs, count(lit(1)).as("rows")))
     obs.get("rows").asInstanceOf[Long]
   }
+
+  /** The metrics `obs` collected in an action that has already returned,
+    * or None if they are not reported within `timeout`. The listener bus
+    * delivers them shortly after the action ends, but an action whose
+    * final plan dropped the observed subtree never reports them — AQE
+    * replaces a stage that produced no rows with an empty relation — and
+    * `Observation.get` would then block forever. A caller falls back to
+    * computing the metrics directly. */
+  def reported(obs: Observation, timeout: FiniteDuration = 10.seconds): Option[Row] =
+    scala.util.Try(Await.result(obs.future, timeout)).toOption
 }

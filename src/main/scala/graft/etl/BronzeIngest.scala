@@ -18,7 +18,10 @@ import graft.sources.{LandingSource, TableStore}
   * Scale notes: the ingest is embarrassingly parallel per file — no shuffle
   * anywhere in the stage; the only full-pass costs are first-run schema
   * inference (one extra scan, amortized away by pinning) and the parquet
-  * encode. Bronze appends are O(batch) in [[TableStore]].
+  * encode. A later run's pinned schema comes from the Bronze manifest
+  * without a job, and the empty-batch check is the row count observed
+  * during the append, so a run reads its landing batch exactly once.
+  * Bronze appends are O(batch) in [[TableStore]].
   */
 object BronzeIngest {
 
@@ -27,54 +30,55 @@ object BronzeIngest {
   final case class Report(table: String, rows: Long, action: String)
 
   /** `ingest_date` doubles as the Bronze partition column (reference
-    * README.MD:120: Bronze "often partitioned by ingestion date") — at scale
-    * the Silver watermark filter prunes whole date partitions instead of
-    * scanning all history. */
+    * README.MD:120: Bronze "often partitioned by ingestion date"). It is
+    * `ingestion_timestamp`'s date in the session time zone, so Silver's
+    * watermark read adds the implied `ingest_date >= to_date(wm)`
+    * ([[SilverScd2.newerThan]]) and prunes whole date partitions instead
+    * of scanning all history. */
   def withAuditCols(df: DataFrame, runTs: Timestamp): DataFrame =
     df.withColumn("ingestion_timestamp", lit(runTs))
       .withColumn("source_file", input_file_name())
       .withColumn("ingest_date", to_date(lit(runTs)))
 
-  /** Ingest one table: pin-or-infer read → skip-if-empty → audit cols →
-    * append (schema evolves on write; 1_Landing_to_Bronze.py:36-67).
-    * `typeOverrides` applies decimal-strict types on the FIRST read only —
-    * later runs pin the committed Bronze schema, which already carries
-    * them. */
+  /** Ingest one table: pin-or-infer read → audit cols → append (schema
+    * evolves on write; 1_Landing_to_Bronze.py:36-67), committed only when
+    * the append wrote rows — an empty batch is `skipped-empty` and leaves
+    * no version behind. `typeOverrides` applies decimal-strict types on
+    * the FIRST read only — later runs pin the committed Bronze schema,
+    * which already carries them. */
   def ingestTable(landing: LandingSource, store: TableStore, bronzeRoot: String,
                   table: String, runTs: Timestamp,
                   typeOverrides: Map[String, String] = Map.empty): Report = {
     val target = s"$bronzeRoot/$table"
+    val existed = store.exists(target)
     val raw =
-      if (store.exists(target))
-        landing.readPinned(table, store.schemaOf(target), auditCols)
+      if (existed) landing.readPinned(table, store.schemaOf(target), auditCols)
       else landing.readInferred(table, typeOverrides)
-    if (raw.isEmpty) Report(table, 0, "skipped-empty")
-    else {
-      val withAudit = withAuditCols(raw, runTs)
-      val action = if (store.exists(target)) "appended" else "created"
-      // count observed during the append itself — the count-after-write
-      // pattern re-read the whole landing batch for the report line
-      val rows = graft.core.Observed.countDuring(withAudit)(
-        store.append(target, _, Seq("ingest_date")))
-      Report(table, rows, action)
-    }
+    // rows counted during the append itself: neither an emptiness probe
+    // nor a count-after-write re-reads the landing batch
+    val rows = store.appendNonEmpty(target, withAuditCols(raw, runTs), Seq("ingest_date"))
+    Report(table, rows,
+      if (rows == 0) "skipped-empty" else if (existed) "appended" else "created")
   }
 
-  /** Ingest every landed table (the reference's discovery loop,
-    * 1_Landing_to_Bronze.py:27-73): a bad table is reported and skipped, the
-    * rest of the run continues. Tables share nothing, so they ingest
+  /** Ingest every landed table that `include` accepts (the reference's
+    * discovery loop, 1_Landing_to_Bronze.py:27-73; [[Pipeline.run]] passes
+    * its configured active tables): a bad table is reported and skipped,
+    * the rest of the run continues. Tables share nothing, so they ingest
     * concurrently ([[graft.core.Fanout]]), each under the job description
     * `bronze:<table>`; reports come back in `listTables` order. */
   def run(landing: LandingSource, store: TableStore, bronzeRoot: String,
           runTs: Timestamp,
-          typeOverrides: String => Map[String, String] = _ => Map.empty): Seq[Report] =
-    perTable(landing)(t =>
+          typeOverrides: String => Map[String, String] = _ => Map.empty,
+          include: String => Boolean = _ => true): Seq[Report] =
+    perTable(landing, include)(t =>
       ingestTable(landing, store, bronzeRoot, t, runTs, typeOverrides(t)))
 
-  /** One unit per landed table, run concurrently and labelled; a table
-    * whose ingest throws becomes a `failed:` report. */
-  private def perTable(landing: LandingSource)(ingest: String => Report): Seq[Report] =
-    graft.core.Fanout.map(landing.listTables()) { t =>
+  /** One unit per landed table that `include` accepts, run concurrently
+    * and labelled; a table whose ingest throws becomes a `failed:` report. */
+  private def perTable(landing: LandingSource, include: String => Boolean)(
+      ingest: String => Report): Seq[Report] =
+    graft.core.Fanout.map(landing.listTables().filter(include)) { t =>
       graft.core.Fanout.labelled(landing.spark, s"bronze:$t") {
         try ingest(t)
         catch { case e: Exception => Report(t, -1, s"failed: ${e.getMessage}") }
@@ -120,12 +124,13 @@ object BronzeIngest {
     Report(table, rows, action)
   }
 
-  /** [[run]] with the streaming ingest path — same discovery loop,
-    * concurrency and skip-vs-fail routing, each table drained via its own
-    * checkpoint. */
+  /** [[run]] with the streaming ingest path — same discovery loop, table
+    * filter, concurrency and skip-vs-fail routing, each table drained via
+    * its own checkpoint. */
   def runStreaming(landing: LandingSource, store: TableStore, bronzeRoot: String,
                    runTs: Timestamp, checkpointRoot: String,
-                   typeOverrides: String => Map[String, String] = _ => Map.empty): Seq[Report] =
-    perTable(landing)(t => ingestTableStreaming(landing, store, bronzeRoot, t,
+                   typeOverrides: String => Map[String, String] = _ => Map.empty,
+                   include: String => Boolean = _ => true): Seq[Report] =
+    perTable(landing, include)(t => ingestTableStreaming(landing, store, bronzeRoot, t,
       runTs, checkpointRoot, typeOverrides(t)))
 }

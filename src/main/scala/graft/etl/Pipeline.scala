@@ -55,10 +55,14 @@ class Pipeline(spark: SparkSession, conf: PipelineConfig,
   /** One incremental run: Bronze ingest → SCD2 merge per active table →
     * optional Gold rebuild from a caller-supplied fact builder.
     *
+    * Scope: Bronze ingests only the landed tables that `conf.tables` lists
+    * as active — the tables Silver merges — so an unconfigured or inactive
+    * landing entry grows no Bronze table.
+    *
     * Concurrency: within a layer, independent units run at once on their
-    * own driver threads ([[graft.core.Fanout]]) — Bronze per landed table,
-    * Silver per active table, Gold per mart ([[GoldBuild.run]]) — and each
-    * unit's Spark jobs carry the description `bronze:<table>`,
+    * own driver threads ([[graft.core.Fanout]]) — Bronze per active landed
+    * table, Silver per active table, Gold per mart ([[GoldBuild.run]]) —
+    * and each unit's Spark jobs carry the description `bronze:<table>`,
     * `silver:<table>` or `gold:<mart>`. Layers stay ordered: every Bronze
     * commit precedes any Silver work, and every Silver commit precedes Gold.
     * A table's own deliver → swap → watermark order is unchanged. A layer
@@ -74,14 +78,16 @@ class Pipeline(spark: SparkSession, conf: PipelineConfig,
     * uninterrupted run. */
   def run(runTs: Timestamp,
           goldFact: Option[SparkSession => DataFrame] = None): RunReport = {
-    val overrides = conf.tables.map(t => t.name -> t.typeOverrides).toMap
+    val active = conf.tables.filter(_.active)
+    val overrides = active.map(t => t.name -> t.typeOverrides).toMap
     val bronze =
       if (conf.streamingBronze)
         BronzeIngest.runStreaming(landing, store, conf.bronzeRoot, runTs,
-          s"${conf.stateRoot}/bronze_checkpoints", overrides.getOrElse(_, Map.empty))
+          s"${conf.stateRoot}/bronze_checkpoints", overrides.getOrElse(_, Map.empty),
+          overrides.contains)
       else BronzeIngest.run(landing, store, conf.bronzeRoot, runTs,
-        overrides.getOrElse(_, Map.empty))
-    val silver = Fanout.map(conf.tables.filter(_.active)) { tc =>
+        overrides.getOrElse(_, Map.empty), overrides.contains)
+    val silver = Fanout.map(active) { tc =>
       Fanout.labelled(spark, s"silver:${tc.name}")(
         SilverScd2.run(store, watermarks, conf.bronzeRoot, conf.silverRoot,
           tc, runTs, sink, conf.sideChannelTable, conf.sideChannelCols, bucketed))

@@ -2,6 +2,7 @@ package graft.etl
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -14,8 +15,13 @@ import graft.sources.{BucketedTableStore, TableConfig, TableStore, WatermarkStor
   * commit-then-watermark ordering.
   *
   * Order of effects per table (the reference's transactional contract):
-  *   1. read watermark; filter Bronze by `ingestion_timestamp > wm`;
-  *   2. stage INSERT/UPDATE rows against the current Silver slice;
+  *   1. read watermark; filter Bronze by `ingestion_timestamp > wm` (and
+  *      prune `ingest_date` partitions before the watermark's day);
+  *   2. stage INSERT/UPDATE rows against the current Silver slice — the
+  *      one aggregate over the persisted staged rows also fills the
+  *      batch's observed row count and newest timestamp, so an empty batch
+  *      stops here (`skipped-empty`) and an unchanged one commits only its
+  *      watermark (`no-changes`);
   *   3. deliver the new-record side channel (Customers feed);
   *   4. atomically swap the merged Silver state;
   *   5. only then commit the new watermark — a crash before 5 re-processes
@@ -52,56 +58,81 @@ object SilverScd2 {
       case Some(b) => b.exists(table)
       case None => store.exists(silver)
     }
-    def writeSilver(df: org.apache.spark.sql.DataFrame): Unit = bucketed match {
+    def writeSilver(df: DataFrame): Unit = bucketed match {
       case Some(b) => b.overwrite(table, df, config.pk)
       case None => store.replaceWith(silver, df, Seq("is_current"))
     }
 
     val wm = watermarks.read(table)
-    val batch = store.read(bronze)
-      .where(col("ingestion_timestamp") > lit(wm).cast("timestamp"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // feeds ≥2 actions below
-    try {
-      // one pass for the emptiness probe and the batch's new watermark
-      val batchStats = batch.agg(count(lit(1)), max("ingestion_timestamp")).head()
-      if (batchStats.getLong(0) == 0) return Report(table, 0, "skipped-empty")
-      val newWm = batchStats.getTimestamp(1)
+    val batch = newerThan(store.read(bronze), wm)
 
-      if (!silverExists) {
-        // first-run branch (2_Bronze_to_Silver.py:76-81); the path store
-        // partitions by is_current so the Gold current-slice read prunes
-        // instead of scanning full history; the bucketed store lays out on
-        // the pk instead (the merge-side optimum)
+    if (!silverExists) {
+      // first-run branch (2_Bronze_to_Silver.py:76-81); the path store
+      // partitions by is_current so the Gold current-slice read prunes
+      // instead of scanning full history; the bucketed store lays out on
+      // the pk instead (the merge-side optimum). Runs once per table, so it
+      // keeps the plain probe: persist, then one aggregate for emptiness
+      // and the new watermark.
+      val cached = batch.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val batchStats = cached.agg(count(lit(1)), max("ingestion_timestamp")).head()
+        if (batchStats.getLong(0) == 0) return Report(table, 0, "skipped-empty")
         // row count observed during the write — no second pass for the report
-        val initial = Scd2.initialLoad(batch, runTs)
+        val initial = Scd2.initialLoad(cached, runTs)
         val rows = bucketed match {
           case Some(b) => graft.core.Observed.countDuring(initial)(b.overwrite(table, _, config.pk))
           case None => graft.core.Observed.countDuring(initial)(store.overwrite(silver, _, Seq("is_current")))
         }
-        watermarks.commit(table, WatermarkStore.format(newWm))
+        watermarks.commit(table, WatermarkStore.format(batchStats.getTimestamp(1)))
         return Report(table, rows, "initial-load")
-      }
+      } finally cached.unpersist()
+    }
 
-      val target = bucketed.map(_.read(table)).getOrElse(store.read(silver))
-      val staged = Scd2.stage(batch, target.where(col("is_current")), config.pk)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        // one pass for the staged total (the report) and the INSERT count
-        // (whether the side channel fires)
-        val stagedStats = staged
-          .agg(count(lit(1)), count(when(col("action") === "INSERT", true))).head()
-        val stagedRows = stagedStats.getLong(0)
-        if (stagedRows == 0) {
-          watermarks.commit(table, WatermarkStore.format(newWm))
-          return Report(table, 0, "no-changes")
-        }
-        if (table == sideChannelTable && stagedStats.getLong(1) > 0)
-          sink.deliver(Scd2.insertedRecords(staged, sideChannelCols))
-        val next = Scd2.applyMerge(target, staged, config.pk, runTs)
-        writeSilver(next)
-        watermarks.commit(table, WatermarkStore.format(newWm)) // only after the swap
-        Report(table, stagedRows, "merged")
-      } finally staged.unpersist()
-    } finally batch.unpersist()
+    // The batch's row count and newest timestamp are observed while the
+    // staged aggregate below builds `staged`, the only pass over the batch.
+    val batchObs = Observation()
+    val observed = batch.observe(batchObs,
+      count(lit(1)).as("rows"), max("ingestion_timestamp").as("wm"))
+    val target = bucketed.map(_.read(table)).getOrElse(store.read(silver))
+    val staged = Scd2.stage(observed, target.where(col("is_current")), config.pk)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // one pass for the staged total (the report) and the INSERT count
+      // (whether the side channel fires)
+      val stagedStats = staged
+        .agg(count(lit(1)), count(when(col("action") === "INSERT", true))).head()
+      // filled by that aggregate; computed directly only if its plan
+      // dropped the observed batch scan (see Observed.reported)
+      val batchStats = graft.core.Observed.reported(batchObs)
+        .getOrElse(batch.agg(count(lit(1)), max("ingestion_timestamp")).head())
+      if (batchStats.getLong(0) == 0) return Report(table, 0, "skipped-empty")
+      val newWm = batchStats.getTimestamp(1)
+      val stagedRows = stagedStats.getLong(0)
+      if (stagedRows == 0) {
+        watermarks.commit(table, WatermarkStore.format(newWm))
+        return Report(table, 0, "no-changes")
+      }
+      if (table == sideChannelTable && stagedStats.getLong(1) > 0)
+        sink.deliver(Scd2.insertedRecords(staged, sideChannelCols))
+      val next = Scd2.applyMerge(target, staged, config.pk, runTs)
+      writeSilver(next)
+      watermarks.commit(table, WatermarkStore.format(newWm)) // only after the swap
+      Report(table, stagedRows, "merged")
+    } finally staged.unpersist()
+  }
+
+  /** Bronze rows ingested after watermark `wm`. A Bronze table partitioned
+    * by `ingest_date` also gets the implied `ingest_date >= to_date(wm)`,
+    * so partitions older than the watermark's day are pruned, not scanned.
+    * Both dates are taken in the session time zone, as
+    * [[BronzeIngest.withAuditCols]] derives `ingest_date`; the predicate is
+    * exact only while ingest and merge share that zone (GraftSession pins
+    * UTC). */
+  private[etl] def newerThan(bronze: DataFrame, wm: String): DataFrame = {
+    val wmTs = lit(wm).cast("timestamp")
+    val newer = col("ingestion_timestamp") > wmTs
+    bronze.where(
+      if (bronze.columns.contains("ingest_date")) newer && col("ingest_date") >= to_date(wmTs)
+      else newer)
   }
 }

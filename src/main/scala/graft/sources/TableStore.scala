@@ -4,6 +4,8 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ManifestRead
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Versioned-Parquet table layout — the engine's replacement for the Delta
   * tables the reference relies on (append / overwrite / MERGE-rewrite /
@@ -14,7 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * {{{
   *   table/
   *     data-<uuid>/part-*.parquet     immutable data directories
-  *     _v<N>                          manifest: newline-separated data dirs
+  *     _v<N>                          manifest, one item per line:
+  *       #p <column> <ddl type>         a partition column, in layout order
+  *       #s <StructType json>           the version's data schema
+  *       #b <key> <value>               a version marker
+  *       data-<uuid>                    a data dir of the version
   *     _current                       pointer: the committed version number
   * }}}
   *
@@ -25,10 +31,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * idea as the Delta log, minimal single-writer form).
   *
   * Schema evolution (reference `mergeSchema=true`,
-  * 1_Landing_to_Bronze.py:60): reads merge schemas across data dirs, so a
-  * batch with new columns widens the table and old rows read as NULL.
+  * 1_Landing_to_Bronze.py:60): an append records the previous schema merged
+  * with the batch's, so a batch with new columns widens the table and old
+  * rows read as NULL.
+  *
+  * Recorded schema: every commit writes the `#s` line — the data schema
+  * without partition columns, nullable, exactly what merging the data
+  * dirs' footers in manifest order would give. Readers take it from there
+  * and never open a footer, as Delta readers take the schema from the
+  * log's `metaData` action (Armbrust et al., VLDB 2020), so a read or a
+  * [[schemaOf]] runs no Spark job. A legacy manifest without the line
+  * reads through the footer merge (one job), and its next commit records
+  * the merged schema.
   */
 class TableStore(spark: SparkSession) {
+  import TableStore._
 
   private def fs(p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -58,11 +75,11 @@ class TableStore(spark: SparkSession) {
   private[sources] val manifestReadCount =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Manifest = data-dir lines plus optional `#p <name> <ddl-type>` lines
-    * recording the physical partition columns. The type is load-bearing:
-    * Spark's partition-value inference has no boolean (an
-    * `is_current=true` dir would read back as string), so [[read]] casts
-    * each recorded partition column back to its declared type. */
+  /** The lines of manifest `_v<v>` (the layout in the class doc). A `#p`
+    * line's type is load-bearing: Spark's partition-value inference has no
+    * boolean (an `is_current=true` dir would read back as string), so
+    * [[read]] casts each recorded partition column back to its declared
+    * type. */
   private def manifestLines(table: String, v: Long): Seq[String] = {
     manifestReadCount.incrementAndGet()
     val mp = new Path(table, s"_v$v")
@@ -73,14 +90,14 @@ class TableStore(spark: SparkSession) {
     finally in.close()
   }
 
-  private def manifest(table: String, v: Long): Seq[String] =
-    manifestLines(table, v).filterNot(_.startsWith("#"))
+  private def manifest(table: String, v: Long): Manifest =
+    Manifest(manifestLines(table, v))
 
-  private def partitionMeta(table: String, v: Long): Seq[(String, org.apache.spark.sql.types.DataType)] =
-    manifestLines(table, v).filter(_.startsWith("#p ")).map { l =>
-      val Array(_, name, ddl) = l.split(" ", 3)
-      name -> org.apache.spark.sql.types.DataType.fromDDL(ddl)
-    }
+  /** The data schema `m` records, or for a legacy manifest its footer
+    * merge (one Spark job). */
+  private def dataSchemaOf(table: String, m: Manifest): StructType =
+    m.schema.getOrElse(ManifestRead.mergedDataSchema(spark,
+      m.dirs.map(d => new Path(table, d).toString), m.partitions))
 
   private def writeFile(p: Path, content: String): Unit = {
     val f = fs(p)
@@ -88,9 +105,10 @@ class TableStore(spark: SparkSession) {
     try out.write(content.getBytes("UTF-8")) finally out.close()
   }
 
-  private def writeDataDir(table: String, df: DataFrame,
-                           partitionBy: Seq[String]): String = {
-    val dir = s"data-${UUID.randomUUID().toString.take(8)}"
+  private def newDataDir(): String = s"data-${UUID.randomUUID().toString.take(8)}"
+
+  private def writeDataDir(table: String, df: DataFrame, partitionBy: Seq[String],
+                           dir: String = newDataDir()): String = {
     val w = df.write
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(new Path(table, dir).toString)
@@ -111,8 +129,11 @@ class TableStore(spark: SparkSession) {
     (existing ++ currentVersion(table)).foldLeft(-1L)(math.max) + 1L
   }
 
-  private def commit(table: String, dirs: Seq[String],
-                     partitionMeta: Seq[String]): Long = {
+  /** Write manifest `_v<N>` — partition lines, the recorded data schema,
+    * `meta`'s markers, then `dirs` — and point `_current` at it. */
+  private def commit(table: String, dirs: Seq[String], partitionLines: Seq[String],
+                     schema: StructType, meta: Map[String, String]): Long = {
+    val lines = (partitionLines :+ s"#s ${schema.json}") ++ metaLines(meta) ++ dirs
     val v = nextVersion(table)
     val mp = new Path(table, s"_v$v")
     // exclusive create = a single-writer TRIPWIRE, not a lock: two writers
@@ -129,7 +150,7 @@ class TableStore(spark: SparkSession) {
             s"TableStore: version $v at $table was already claimed - the store " +
               "is single-writer; serialize commits (" + e.getMessage + ")")
       }
-    try out.write((partitionMeta ++ dirs).mkString("\n").getBytes("UTF-8"))
+    try out.write(lines.mkString("\n").getBytes("UTF-8"))
     finally out.close()
     writeFile(new Path(table, "_current"), v.toString) // pointer last = commit
     v
@@ -167,25 +188,30 @@ class TableStore(spark: SparkSession) {
     * A vacuumed version fails loudly (listing the missing dirs) rather
     * than returning a silently partial table. */
   def readVersion(table: String, version: Long): DataFrame = {
+    val m = readable(table, version)
+    val dirs = m.dirs.map(d => new Path(table, d).toString)
+    val schema = dataSchemaOf(table, m)
+    if (m.partitions.isEmpty) spark.read.schema(schema).parquet(dirs: _*)
+    else ManifestRead.read(spark, dirs, m.partitions, schema)
+  }
+
+  /** `version`'s manifest, read once, after checking that it exists and
+    * that none of its data dirs was vacuumed. */
+  private def readable(table: String, version: Long): Manifest = {
     val mp = new Path(table, s"_v$version")
     if (!fs(mp).exists(mp))
       throw new IllegalStateException(
         s"no manifest for version $version at $table " +
           s"(available: ${versions(table).mkString(", ")})")
-    val rel = manifest(table, version)
-    val missing = rel.filter { d =>
+    val m = manifest(table, version)
+    val missing = m.dirs.filter { d =>
       val p = new Path(table, d); !fs(p).exists(p)
     }
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"version $version at $table is no longer readable - data " +
           s"dir(s) ${missing.mkString(", ")} were vacuumed")
-    val dirs = rel.map(d => new Path(table, d).toString)
-    val parts = partitionMeta(table, version)
-    if (parts.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-    else
-      org.apache.spark.sql.graft.ManifestRead.read(spark, dirs, parts)
+    m
   }
 
   /** Roll the table back to a past snapshot (reference Delta `RESTORE`):
@@ -195,9 +221,8 @@ class TableStore(spark: SparkSession) {
     * manifests; nothing is copied. Fails like [[readVersion]] if the
     * target snapshot was vacuumed. */
   def restore(table: String, version: Long): Long = {
-    readVersion(table, version) // existence + vacuum validation
-    commit(table, manifest(table, version),
-      manifestLines(table, version).filter(_.startsWith("#p ")))
+    val m = readable(table, version)
+    commit(table, m.dirs, m.partitionLines, dataSchemaOf(table, m), Map.empty)
   }
 
   /** Row-level diff between two committed snapshots (the Delta change-
@@ -306,9 +331,11 @@ class TableStore(spark: SparkSession) {
     * crash between a data commit and a separate marker write — the
     * transactional-write pattern Delta's `txnAppId`/`txnVersion` serves. */
   def overwriteWithMeta(table: String, df: DataFrame, meta: Map[String, String],
-                        partitionBy: Seq[String] = Nil): Long =
-    commit(table, Seq(writeDataDir(table, df, partitionBy)),
-      partitionMetaFor(df, partitionBy) ++ metaLines(meta))
+                        partitionBy: Seq[String] = Nil): Long = {
+    val partitionLines = partitionMetaFor(df, partitionBy)
+    commit(table, Seq(writeDataDir(table, df, partitionBy)), partitionLines,
+      ManifestRead.dataSchema(df.schema, partitionBy), meta)
+  }
 
   /** Append with schema evolution: adds a data dir to the manifest without
     * touching existing files (reference Delta append + `mergeSchema`,
@@ -323,16 +350,42 @@ class TableStore(spark: SparkSession) {
     * cannot masquerade as current. */
   def appendWithMeta(table: String, df: DataFrame, meta: Map[String, String],
                      partitionBy: Seq[String] = Nil): Long = {
-    val (prev, prevMeta) = currentVersion(table) match {
-      case Some(v) => (manifest(table, v),
-        manifestLines(table, v).filter(_.startsWith("#p ")))
-      case None => (Seq.empty, Seq.empty)
+    val next = nextAppend(table, df, partitionBy)
+    commit(table, next.dirs :+ writeDataDir(table, df, next.partitionCols),
+      next.partitionLines, next.schema, meta)
+  }
+
+  /** [[append]] that commits only a batch with rows: the rows are counted
+    * during the write itself ([[graft.core.Observed]]), and a batch of 0
+    * rows leaves no new version and no data dir behind. Returns the rows
+    * appended. One job, where probing the batch for emptiness first would
+    * run it twice. */
+  def appendNonEmpty(table: String, df: DataFrame, partitionBy: Seq[String] = Nil): Long = {
+    val next = nextAppend(table, df, partitionBy)
+    val dir = newDataDir()
+    val rows = graft.core.Observed.countDuring(df)(
+      writeDataDir(table, _, next.partitionCols, dir))
+    if (rows > 0) commit(table, next.dirs :+ dir, next.partitionLines, next.schema, Map.empty)
+    else {
+      val p = new Path(table, dir)
+      fs(p).delete(p, true)
     }
-    val spec =
-      if (prevMeta.nonEmpty) prevMeta.map(_.split(" ", 3)(1)).toSeq
-      else partitionBy
-    val pMeta = if (prevMeta.nonEmpty) prevMeta else partitionMetaFor(df, partitionBy)
-    commit(table, prev :+ writeDataDir(table, df, spec), pMeta ++ metaLines(meta))
+    rows
+  }
+
+  /** The current data dirs, the partition layout (carried forward, or
+    * established by `partitionBy` on a first append) and the recorded
+    * schema merged with `df`'s. Merging before the data dir is written
+    * lets a type conflict fail without leaving an orphan dir. */
+  private def nextAppend(table: String, df: DataFrame,
+                         partitionBy: Seq[String]): NextAppend = {
+    val prev = currentVersion(table).map(manifest(table, _))
+    val partitionLines = prev.map(_.partitionLines).filter(_.nonEmpty)
+      .getOrElse(partitionMetaFor(df, partitionBy))
+    val added = ManifestRead.dataSchema(df.schema, columnsOf(partitionLines))
+    val schema = prev.fold(added)(m =>
+      ManifestRead.mergeSchemas(spark, dataSchemaOf(table, m), added))
+    NextAppend(prev.fold(Seq.empty[String])(_.dirs), partitionLines, schema)
   }
 
   /** Metadata-only commit: re-commit the CURRENT manifest with the
@@ -349,9 +402,8 @@ class TableStore(spark: SparkSession) {
   def stampMeta(table: String, meta: Map[String, String]): Long = {
     val v = currentVersion(table).getOrElse(throw new IllegalStateException(
       s"stampMeta: no committed version at $table"))
-    commit(table, manifest(table, v),
-      manifestLines(table, v).filter(_.startsWith("#p ")) ++
-        metaLines(metaOf(manifestLines(table, v)) ++ meta))
+    val m = manifest(table, v)
+    commit(table, m.dirs, m.partitionLines, dataSchemaOf(table, m), metaOf(m.lines) ++ meta)
   }
 
   private def metaLines(meta: Map[String, String]): Seq[String] =
@@ -463,9 +515,19 @@ class TableStore(spark: SparkSession) {
     overwrite(table, nextState, partitionBy)
 
   /** Current committed schema (used to pin CSV re-reads,
-    * 1_Landing_to_Bronze.py:41-42). */
-  def schemaOf(table: String): org.apache.spark.sql.types.StructType =
-    read(table).schema
+    * 1_Landing_to_Bronze.py:41-42), as [[read]] would show it: the
+    * recorded data schema, then the partition columns. Answered from the
+    * manifest alone — no file listing, no Spark job — except for a legacy
+    * manifest, which is read. */
+  def schemaOf(table: String): StructType = {
+    val m = manifest(table, currentVersion(table).getOrElse(
+      throw new IllegalStateException(s"no committed version at $table")))
+    m.schema match {
+      case Some(data) =>
+        StructType(data.fields ++ m.partitions.map { case (n, t) => StructField(n, t) })
+      case None => read(table).schema
+    }
+  }
 
   /** Rewrite the table's accumulated data dirs as ONE dir and commit —
     * the small-files remedy. Every append adds a data dir (and, under a
@@ -482,14 +544,13 @@ class TableStore(spark: SparkSession) {
   def compact(table: String): Long = {
     val v = currentVersion(table).getOrElse(
       throw new IllegalStateException(s"no committed version at $table"))
-    val spec = partitionMeta(table, v).map(_._1)
-    overwrite(table, read(table), spec)
+    overwrite(table, readVersion(table, v), manifest(table, v).partitionCols)
   }
 
   /** Number of live data dirs in the current manifest — the compaction
     * trigger signal. */
   def manifestDirs(table: String): Int =
-    currentVersion(table).map(v => manifest(table, v).size).getOrElse(0)
+    currentVersion(table).map(v => manifest(table, v).dirs.size).getOrElse(0)
 
   /** Drop data dirs not referenced by any of the newest `keepVersions`
     * committed manifests (Delta `VACUUM`'s retention window, counted in
@@ -524,7 +585,7 @@ class TableStore(spark: SparkSession) {
     currentVersion(table).foreach { _ =>
       val vs = versions(table)
       val live = vs.takeRight(keepVersions)
-        .flatMap(v => manifest(table, v)).toSet
+        .flatMap(v => manifest(table, v).dirs).toSet
       f.listStatus(tp).foreach { st =>
         val n = st.getPath.getName
         if (n.startsWith("data-") && !live.contains(n))
@@ -555,5 +616,31 @@ class TableStore(spark: SparkSession) {
         }
       }
     }
+  }
+}
+
+private object TableStore {
+  /** One manifest, parsed from a single read of its file. */
+  final case class Manifest(lines: Seq[String]) {
+    val dirs: Seq[String] = lines.filterNot(_.startsWith("#"))
+    val partitionLines: Seq[String] = lines.filter(_.startsWith("#p "))
+    def partitionCols: Seq[String] = columnsOf(partitionLines)
+    def partitions: Seq[(String, DataType)] = partitionLines.map { l =>
+      val Array(_, name, ddl) = l.split(" ", 3)
+      name -> DataType.fromDDL(ddl)
+    }
+    /** The recorded data schema; None for a legacy manifest. */
+    lazy val schema: Option[StructType] = lines.collectFirst {
+      case l if l.startsWith("#s ") => DataType.fromJson(l.drop(3)).asInstanceOf[StructType]
+    }
+  }
+
+  def columnsOf(partitionLines: Seq[String]): Seq[String] =
+    partitionLines.map(_.split(" ", 3)(1))
+
+  /** What an append commits besides its new data dir. */
+  final case class NextAppend(dirs: Seq[String], partitionLines: Seq[String],
+                              schema: StructType) {
+    def partitionCols: Seq[String] = columnsOf(partitionLines)
   }
 }

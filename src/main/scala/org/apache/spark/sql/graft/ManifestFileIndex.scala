@@ -119,23 +119,46 @@ class ManifestFileIndex(spark: SparkSession, dataDirs: Seq[Path],
         s"no parquet data files under ${dataDirs.mkString(", ")}"))
 }
 
-/** Public entry: a single-scan DataFrame over a manifest's data dirs. */
+/** Public entry: a single-scan DataFrame over a manifest's data dirs, and
+  * the schema arithmetic a manifest's recorded `#s` schema line needs. */
 object ManifestRead {
 
-  /** Read `dirs` as ONE partitioned parquet scan. `partitionCols` are the
-    * manifest-recorded (name, type) pairs, in layout order; they surface
-    * LAST in the schema, as with any partitioned parquet read. The data
-    * schema is merged across dirs (schema evolution: missing columns read
-    * as NULL). */
+  /** Read `dirs` as ONE partitioned parquet scan, with no Spark job.
+    * `partitionCols` are the manifest-recorded (name, type) pairs, in
+    * layout order; they surface LAST in the schema, as with any
+    * partitioned parquet read. `dataSchema` is the manifest-recorded data
+    * schema; a data dir missing one of its columns reads it as NULL
+    * (schema evolution). */
   def read(spark: SparkSession, dirs: Seq[String],
-           partitionCols: Seq[(String, DataType)]): DataFrame = {
-    val partitionSchema = StructType(partitionCols.map {
-      case (n, t) => StructField(n, t)
-    })
+           partitionCols: Seq[(String, DataType)],
+           dataSchema: StructType): DataFrame = {
+    val partitionSchema = partitionSchemaOf(partitionCols)
     val index = new ManifestFileIndex(spark, dirs.map(new Path(_)), partitionSchema)
-    val relation = HadoopFsRelation(index, partitionSchema, index.mergedDataSchema,
+    val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
       bucketSpec = None, new ParquetFileFormat,
       Map("mergeSchema" -> "true"))(spark)
     spark.baseRelationToDataFrame(relation)
   }
+
+  /** The footer-merged data schema of `dirs`, in manifest order: the
+    * schema of a legacy manifest, which records none. One Spark job. */
+  def mergedDataSchema(spark: SparkSession, dirs: Seq[String],
+                       partitionCols: Seq[(String, DataType)]): StructType =
+    new ManifestFileIndex(spark, dirs.map(new Path(_)), partitionSchemaOf(partitionCols))
+      .mergedDataSchema
+
+  /** The data schema a data dir written from a frame of `schema` adds: its
+    * columns without the partition columns, nullable the way
+    * [[ManifestFileIndex.mergedDataSchema]] reads them back. */
+  def dataSchema(schema: StructType, partitionCols: Seq[String]): StructType =
+    StructType(schema.filterNot(f => partitionCols.contains(f.name))).asNullable
+
+  /** `earlier` widened by `later`'s new columns, appended in order; a
+    * column whose types disagree throws. The same merge the footer read
+    * applies across data dirs in manifest order. */
+  def mergeSchemas(spark: SparkSession, earlier: StructType, later: StructType): StructType =
+    earlier.merge(later, spark.sessionState.conf.caseSensitiveAnalysis)
+
+  private def partitionSchemaOf(partitionCols: Seq[(String, DataType)]): StructType =
+    StructType(partitionCols.map { case (n, t) => StructField(n, t) })
 }

@@ -21,4 +21,19 @@ class ObservedSpec extends SparkSpec {
     m shouldBe 10
     store.read(s"$root/t").count() shouldBe 147
   }
+
+  test("reported reads an observation filled inside a persisted frame, and " +
+    "gives up on one that is never filled") {
+    val obs = org.apache.spark.sql.Observation()
+    val cached = (1 to 50).toDF("id")
+      .observe(obs, org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)))
+      .where($"id" % 2 === 0).persist()
+    try {
+      cached.count() shouldBe 25
+      cached.count() shouldBe 25
+      Observed.reported(obs).map(_.getLong(0)) shouldBe Some(50L)
+    } finally cached.unpersist()
+    import scala.concurrent.duration._
+    Observed.reported(org.apache.spark.sql.Observation(), 100.millis) shouldBe None
+  }
 }

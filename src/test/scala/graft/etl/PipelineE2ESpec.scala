@@ -332,6 +332,105 @@ class PipelineE2ESpec extends SparkSpec {
     r4.gold.map(_.marts("customer_analytics")) shouldBe Some(2)
   }
 
+  private def customersConf(root: JPath): PipelineConfig = PipelineConfig(
+    landingRoot = root.resolve("landing").toString,
+    bronzeRoot = root.resolve("bronze").toString,
+    silverRoot = root.resolve("silver").toString,
+    goldRoot = root.resolve("gold").toString,
+    stateRoot = root.resolve("state").toString,
+    tables = Seq(TableConfig("Customers", "CustomerID")))
+
+  private def dataDirs(table: String): Set[String] =
+    Paths.get(table).toFile.listFiles().map(_.getName).filter(_.startsWith("data-")).toSet
+
+  test("an empty landing file is skipped-empty: no new Bronze version, no " +
+    "orphan data dir") {
+    val root = Files.createTempDirectory("graft-e2e-empty-landing")
+    val conf = customersConf(root)
+    val pipe = new Pipeline(spark, conf)
+    val landing = Paths.get(conf.landingRoot)
+    val bronze = s"${conf.bronzeRoot}/Customers"
+    writeCsv(landing, "Customers", "CustomerID,Name", Seq("1,Alice"))
+    pipe.run(t1).bronze.map(_.action) shouldBe Seq("created")
+    val dirs = dataDirs(bronze)
+    writeCsv(landing, "Customers", "CustomerID,Name", Nil)
+    val r = pipe.run(t2)
+    r.bronze.map(b => (b.rows, b.action)) shouldBe Seq((0L, "skipped-empty"))
+    r.silver.map(_.action) shouldBe Seq("skipped-empty")
+    pipe.store.currentVersion(bronze) shouldBe Some(0L)
+    pipe.store.versions(bronze) shouldBe Seq(0L)
+    dataDirs(bronze) shouldBe dirs
+    // an empty first landing creates no table at all
+    val fresh = Files.createTempDirectory("graft-e2e-empty-first")
+    val freshConf = customersConf(fresh)
+    writeCsv(Paths.get(freshConf.landingRoot), "Customers", "CustomerID,Name", Nil)
+    new Pipeline(spark, freshConf).run(t1).bronze.map(_.action) shouldBe Seq("skipped-empty")
+    new graft.sources.TableStore(spark).exists(s"${freshConf.bronzeRoot}/Customers") shouldBe false
+  }
+
+  test("incremental Silver: an empty batch is skipped-empty without " +
+    "hanging; a re-landed identical batch is no-changes and advances the " +
+    "watermark") {
+    import org.scalatest.concurrent.TimeLimits.failAfter
+    import org.scalatest.time.SpanSugar._
+    val root = Files.createTempDirectory("graft-e2e-empty-batch")
+    val conf = customersConf(root)
+    val pipe = new Pipeline(spark, conf)
+    val tc = conf.tables.head
+    def silver(ts: Timestamp) = failAfter(2.minutes) {
+      SilverScd2.run(pipe.store, pipe.watermarks, conf.bronzeRoot, conf.silverRoot,
+        tc, ts, graft.actions.NullSink)
+    }
+    writeCsv(Paths.get(conf.landingRoot), "Customers", "CustomerID,Name", Seq("1,Alice", "2,Bob"))
+    pipe.run(t1).silver.map(_.action) shouldBe Seq("initial-load")
+    // Bronze holds nothing newer than the watermark: the observed batch
+    // count is 0, whatever plan AQE chose for the empty side
+    silver(t2) shouldBe SilverScd2.Report("Customers", 0, "skipped-empty")
+    pipe.watermarks.read("Customers") shouldBe graft.sources.WatermarkStore.format(t1)
+    // the same rows land again: nothing to stage, but the batch is consumed
+    BronzeIngest.ingestTable(new graft.sources.LandingSource(spark, conf.landingRoot),
+      pipe.store, conf.bronzeRoot, "Customers", t2).action shouldBe "appended"
+    silver(t3) shouldBe SilverScd2.Report("Customers", 0, "no-changes")
+    pipe.watermarks.read("Customers") shouldBe graft.sources.WatermarkStore.format(t2)
+    pipe.silverTable("Customers").count() shouldBe 2
+  }
+
+  test("Silver's watermark read prunes Bronze ingest_date partitions") {
+    val root = Files.createTempDirectory("graft-e2e-prune")
+    val conf = customersConf(root)
+    val pipe = new Pipeline(spark, conf)
+    writeCsv(Paths.get(conf.landingRoot), "Customers", "CustomerID,Name", Seq("1,Alice"))
+    pipe.run(t1)
+    pipe.run(t2)
+    val wm = pipe.watermarks.read("Customers")
+    val batch = SilverScd2.newerThan(pipe.store.read(s"${conf.bronzeRoot}/Customers"), wm)
+    batch.count() shouldBe 0
+    val plan = batch.queryExecution.executedPlan.toString
+    plan should include regex "PartitionFilters: \\[[^\\]]*ingest_date"
+    // the t1 and t2 partitions exist; only t2's day survives pruning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val scan = batch.queryExecution.executedPlan.collectFirst {
+      case s: FileSourceScanExec => s
+    }.get
+    scan.relation.location.listFiles(scan.partitionFilters, Nil).size shouldBe 1
+  }
+
+  test("an incremental one-table run costs 9 Spark jobs") {
+    val root = Files.createTempDirectory("graft-e2e-jobs")
+    val conf = customersConf(root)
+    val landing = Paths.get(conf.landingRoot)
+    val pipe = new Pipeline(spark, conf.copy(sideChannelCols = Seq("Name")), new CollectingSink)
+    writeCsv(landing, "Customers", "CustomerID,Name", Seq("1,Ann", "2,Bob"))
+    pipe.run(t1)
+    writeCsv(landing, "Customers", "CustomerID,Name", Seq("2,Bobby", "3,Cat"))
+    val (r, jobs) = org.apache.spark.sql.graft.JobCount.during(spark)(pipe.run(t2))
+    r.silver.map(s => (s.staged, s.action)) shouldBe Seq((2L, "merged"))
+    // 16 before manifests recorded schemas and the emptiness and watermark
+    // probes were folded into the append and the staged aggregate: 3
+    // footer merges, the CSV emptiness probe and a 3-job batch aggregate
+    jobs shouldBe 9
+  }
+
   test("re-running the same batch is idempotent (watermark no-change path)") {
     val root = Files.createTempDirectory("graft-idem")
     val landing = root.resolve("landing")

@@ -116,6 +116,21 @@ class PipelineFanoutSpec extends SparkSpec {
     r.silver.map(_.action) shouldBe Seq("initial-load", "skipped-no-bronze", "initial-load")
   }
 
+  test("Bronze ingests only the landed tables configured as active") {
+    val root = Files.createTempDirectory("graft-fanout-scope")
+    val landing = root.resolve("landing")
+    landThree(landing, 1)
+    val tables = Seq(TableConfig("Customers", "CustomerID"),
+      TableConfig("Products", "ProductID", active = false))
+    val conf = config(root, landing, tables)
+    val r = new Pipeline(spark, conf).run(t1)
+    r.bronze.map(_.table) shouldBe Seq("Customers")
+    r.silver.map(_.table) shouldBe Seq("Customers")
+    val store = new graft.sources.TableStore(spark)
+    for (t <- Seq("Products", "Sellers"))
+      store.exists(s"${conf.bronzeRoot}/$t") shouldBe false
+  }
+
   private def fact: DataFrame =
     (1 to 12).map(i => (i, i % 4, i % 3, s"202${i % 3}-0${1 + i % 5}-1${i % 8}", i.toDouble))
       .toDF("OrderID", "CustomerID", "SellerID", "d", "amt")
@@ -163,9 +178,10 @@ class PipelineFanoutSpec extends SparkSpec {
       pipe.run(t1, goldFact = Some(_ => fact))
       spark.sparkContext.getLocalProperty("spark.job.description") shouldBe "counted block"
     }
-    // Bronze ingests every landed table, Silver only the configured ones
+    // Bronze and Silver both cover only the configured tables: the landed
+    // Sellers table is not ingested
     descriptions.filterNot(_ == "counted block").toSet shouldBe
-      (threeTables.map(t => s"bronze:${t.name}") ++ two.map(t => s"silver:${t.name}") ++
+      (two.map(t => s"bronze:${t.name}") ++ two.map(t => s"silver:${t.name}") ++
         marts.map(m => s"gold:$m")).toSet
 
     // one table: inline, so delivery happens on this thread and the

@@ -1,8 +1,10 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{JobCount, ManifestRead}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.SparkSpec
 
@@ -11,6 +13,41 @@ class TableStoreSpec extends SparkSpec {
 
   private def tmp(): String =
     Files.createTempDirectory("graft-store").toString
+
+  private def currentManifest(t: String): Seq[String] = {
+    val v = Files.readString(Paths.get(t, "_current")).trim
+    Files.readString(Paths.get(t, s"_v$v")).split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+  }
+
+  /** The current manifest's recorded `#s` schema, and the schema merging
+    * its data dirs' footers gives. */
+  private def recordedAndMerged(t: String): (DataType, StructType) = {
+    val lines = currentManifest(t)
+    val recorded = lines.collectFirst {
+      case l if l.startsWith("#s ") => DataType.fromJson(l.drop(3))
+    }.getOrElse(fail(s"no #s line in ${lines.mkString(" | ")}"))
+    val parts = lines.filter(_.startsWith("#p ")).map { l =>
+      val Array(_, n, ddl) = l.split(" ", 3)
+      n -> DataType.fromDDL(ddl)
+    }
+    val dirs = lines.filterNot(_.startsWith("#")).map(d => s"$t/$d")
+    (recorded, ManifestRead.mergedDataSchema(spark, dirs, parts))
+  }
+
+  private def recordsMergedSchema(t: String): Unit = {
+    val (recorded, merged) = recordedAndMerged(t)
+    recorded shouldBe merged
+  }
+
+  /** Drops the `#s` line from the current manifest: the manifest a writer
+    * from before recorded schemas left. */
+  private def makeLegacy(t: String): Unit = {
+    val v = Files.readString(Paths.get(t, "_current")).trim
+    Files.writeString(Paths.get(t, s"_v$v"),
+      currentManifest(t).filterNot(_.startsWith("#s ")).mkString("\n"))
+    // the Hadoop local-FS checksum sidecar no longer matches the edit
+    Files.deleteIfExists(Paths.get(t, s"._v$v.crc"))
+  }
 
   test("exists is false before the first commit, true after") {
     val store = new TableStore(spark)
@@ -130,6 +167,84 @@ class TableStoreSpec extends SparkSpec {
     val t = tmp() + "/t"
     store.overwrite(t, Seq((1, "a")).toDF("id", "v"))
     store.schemaOf(t).fieldNames.toSeq shouldBe Seq("id", "v")
+  }
+
+  test("schemaOf answers from the manifest: no job, read's schema") {
+    val store = new TableStore(spark)
+    val plain = tmp() + "/plain"
+    store.overwrite(plain, Seq((1, "a")).toDF("id", "v"))
+    store.append(plain, Seq((2, "b", 2.5)).toDF("id", "v", "x"))
+    val parted = tmp() + "/parted"
+    store.overwrite(parted, Seq((1, "a", true)).toDF("id", "v", "is_current"),
+      Seq("is_current"))
+    store.append(parted, Seq((2, "b", 7L, false)).toDF("id", "v", "n", "is_current"))
+    for (t <- Seq(plain, parted)) {
+      val (schema, jobs) = JobCount.during(spark)(store.schemaOf(t))
+      jobs shouldBe 0
+      schema shouldBe store.read(t).schema
+    }
+    store.schemaOf(parted).fieldNames.toSeq shouldBe Seq("id", "v", "n", "is_current")
+  }
+
+  test("every commit records the footer-merged data schema") {
+    val store = new TableStore(spark)
+    val t = tmp() + "/t"
+    store.overwrite(t, Seq((1, "a", true)).toDF("id", "v", "is_current"),
+      Seq("is_current"))
+    recordsMergedSchema(t)
+    // the 3-dir evolution: a dir that adds a column, then one lacking it
+    store.append(t, Seq((2, "b", "x", true)).toDF("id", "v", "extra", "is_current"))
+    recordsMergedSchema(t)
+    store.append(t, Seq((3, "y", true)).toDF("id", "late", "is_current"))
+    recordsMergedSchema(t)
+    store.restore(t, 1)
+    recordsMergedSchema(t)
+    store.stampMeta(t, Map("k" -> "1"))
+    recordsMergedSchema(t)
+    store.compact(t)
+    recordsMergedSchema(t)
+    // one write of every column type a Spark frame can carry into parquet
+    val wide = spark.sql("""SELECT CAST(1 AS TINYINT) b, CAST(2 AS SMALLINT) s,
+        3 i, 4L l, CAST(1.5 AS FLOAT) f, 2.5D d, CAST(1.25 AS DECIMAL(12,2)) dec,
+        'x' str, CAST('ab' AS BINARY) bin, true bo, DATE'2026-01-01' dt,
+        TIMESTAMP'2026-01-01 00:00:00' ts, TIMESTAMP_NTZ'2026-01-01 00:00:00' ntz,
+        array(1, 2) arr, map('a', 1) mp, named_struct('a', 1, 'b', 'x') st,
+        CAST('ab' AS VARCHAR(10)) vc, parse_json('{"a":1}') var, 'p' part""")
+      .withColumn("meta", $"i".as("meta",
+        new org.apache.spark.sql.types.MetadataBuilder().putString("k", "v").build()))
+    val w = tmp() + "/wide"
+    store.overwrite(w, wide, Seq("part"))
+    recordsMergedSchema(w)
+  }
+
+  test("an append whose types conflict fails before writing a data dir") {
+    val store = new TableStore(spark)
+    val t = tmp() + "/t"
+    store.overwrite(t, Seq((1, "a")).toDF("id", "v"))
+    an[Exception] should be thrownBy store.append(t, Seq(("one", "b")).toDF("id", "v"))
+    new java.io.File(t).listFiles().count(_.getName.startsWith("data-")) shouldBe 1
+    store.currentVersion(t) shouldBe Some(0L)
+  }
+
+  test("appendNonEmpty commits only a batch with rows") {
+    val store = new TableStore(spark)
+    val t = tmp() + "/t"
+    store.appendNonEmpty(t, Seq.empty[(Int, String)].toDF("id", "d"), Seq("d")) shouldBe 0L
+    store.exists(t) shouldBe false
+    store.appendNonEmpty(t, Seq((1, "x"), (2, "y")).toDF("id", "d"), Seq("d")) shouldBe 2L
+    store.appendNonEmpty(t, Seq((3, "x")).toDF("id", "d").where($"id" > 5)) shouldBe 0L
+    store.currentVersion(t) shouldBe Some(0L)
+    new java.io.File(t).listFiles().count(_.getName.startsWith("data-")) shouldBe 1
+    store.read(t).count() shouldBe 2L
+  }
+
+  test("readVersion opens its manifest once") {
+    val store = new TableStore(spark)
+    val t = tmp() + "/t"
+    store.overwrite(t, Seq((1, true)).toDF("id", "is_current"), Seq("is_current"))
+    store.manifestReadCount.set(0L)
+    store.readVersion(t, 0)
+    store.manifestReadCount.get() shouldBe 1L
   }
 
   test("time travel: readVersion reads any un-vacuumed past snapshot") {
@@ -385,15 +500,28 @@ class TableStoreSpec extends SparkSpec {
       .head() shouldBe ((None, "y"))
   }
 
-  test("partitioned read infers the schema of all data dirs in one job") {
+  test("partitioned read runs no job; a legacy manifest merges footers in one") {
     val store = new TableStore(spark)
     val t = tmp() + "/t"
-    store.overwrite(t, Seq((0, true)).toDF("id", "is_current"), Seq("is_current"))
-    (1 to 4).foreach(i => store.append(t, Seq((i, i % 2 == 0)).toDF("id", "is_current")))
+    store.overwrite(t, Seq((0, "a", true)).toDF("id", "v", "is_current"), Seq("is_current"))
+    (1 to 3).foreach(i => store.append(t, Seq((i, "b", i % 2 == 0)).toDF("id", "v", "is_current")))
+    store.append(t, Seq((4, 4L, true)).toDF("id", "extra", "is_current"))
     store.manifestDirs(t) shouldBe 5
-    val (df, jobs) = org.apache.spark.sql.graft.JobCount.during(spark)(store.read(t))
-    jobs should be <= 1
-    df.select("id").as[Int].collect().toSet shouldBe (0 to 4).toSet
+    val (df, jobs) = JobCount.during(spark)(store.read(t))
+    jobs shouldBe 0
+    val rows = df.collect().toSet
+    rows.map(_.getInt(0)) shouldBe (0 to 4).toSet
+
+    makeLegacy(t)
+    val (legacy, legacyJobs) = JobCount.during(spark)(store.read(t))
+    legacyJobs shouldBe 1
+    legacy.schema shouldBe df.schema
+    legacy.collect().toSet shouldBe rows
+    store.append(t, Seq((5, "c", false)).toDF("id", "v", "is_current"))
+    recordsMergedSchema(t)
+    JobCount.during(spark)(store.read(t))._2 shouldBe 0
+    store.read(t).collect().toSet.map((r: org.apache.spark.sql.Row) => r.getInt(0)) shouldBe
+      (0 to 5).toSet
   }
 
   test("version meta commits atomically with the data and is NOT inherited") {
