@@ -132,21 +132,15 @@ object Bench {
     re.findFirstMatchIn(line).map(_.group(1).toDouble)
   }
 
-  /** The name-sorted benchmark query list, after the SPARK_GRAFT_QUERIES
-    * prefix filter (local profiling) and the SPARK_GRAFT_QUERY_LIST exact
-    * filter (the orchestrator→child shard assignment). Name-sorted so
-    * per-query numbers are comparable ACROSS rounds — Map iteration order
-    * is hash-order and silently shifts whenever a query is added (round
-    * 3: q48 was 7th, in round 2 it ran elsewhere). */
-  private def selectedQueries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = {
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+  /** The benchmark query names: [[SparkEntry.selected]]'s name-sorted
+    * SPARK_GRAFT_QUERIES prefix filter (local profiling), then the
+    * SPARK_GRAFT_QUERY_LIST exact filter (the orchestrator→child shard
+    * assignment). */
+  private def selectedQueries: Seq[String] = {
     val exact = sys.env.get("SPARK_GRAFT_QUERY_LIST")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(f => f.exists(name.startsWith)) }
-      .filter { case (name, _) => exact.forall(_.contains(name)) }
-      .sortBy(_._1)
+    SparkEntry.selected(sys.env.get("SPARK_GRAFT_QUERIES")).map(_.name)
+      .filter(name => exact.forall(_.contains(name)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -156,8 +150,8 @@ object Bench {
     // child mode, explicit single-shard, or a list too small to amortize a
     // JVM per shard: run everything in this process
     if (isChild || shards <= 1 || selected.size < 4 * shards)
-      runSuite(sfDir, selected.map(_._1), inProcessEmit = !isChild)
-    else orchestrate(sfDir, selected.map(_._1), shards)
+      runSuite(sfDir, selected, inProcessEmit = !isChild)
+    else orchestrate(sfDir, selected, shards)
   }
 
   /** Per-query times from the LAST committed bench_results.json (which,

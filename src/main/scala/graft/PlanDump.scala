@@ -13,19 +13,18 @@ package graft
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, namesArg) = args
-    val prefixes = namesArg.split(",").map(_.trim).filter(_.nonEmpty)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.core.GraftSession.harness("graft-plandump", cpus)
     new java.io.File(outDir).mkdirs()
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => prefixes.exists(name.startsWith) }
-    try SparkEntry.warmCachesFor(spark, sfDir, selected.map(_._1))
+    val selected = SparkEntry.selected(Some(namesArg))
+    try SparkEntry.warmCachesFor(spark, sfDir, selected.map(_.name))
     catch { case e: Throwable =>
       System.err.println(s"[plandump] warmup failed: ${e.getMessage}")
     }
-    selected.foreach { case (name, fn) =>
+    selected.foreach { q =>
+      val name = q.name
       try graft.core.CacheRegistry.scoped {
-        val df = fn(spark, sfDir)
+        val df = q.build(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(

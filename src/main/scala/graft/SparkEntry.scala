@@ -1,49 +1,37 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.CacheRegistry.memo
 import graft.core.Tables
 import graft.etl.{GoldMarts, Scd2, StarSchema}
-import graft.ops.{Dedup, Joins, Multimodal, Sampling, Similarity, TextStats}
+import graft.ops.{Dedup, Multimodal, Similarity, TextStats}
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The driver contract: the flagship `entry` query, the registered queries
+  * and their DuckDB oracles, and the maintained artifacts those queries
+  * share.
   *
-  * Every `queries` entry is a library operator exercised on the benchmark
-  * star schema; every `oracleSql` entry is the equivalent DuckDB SQL. All
-  * money/quantity aggregates run in exact decimal arithmetic and are cast to
-  * double only in the final projection, so results are bit-identical across
-  * engines regardless of aggregation order.
+  * Each query is one [[graft.queries.Query]] record in its family's file
+  * under `graft.queries`, holding the Spark build (a library operator run
+  * on the benchmark star schema) next to its oracle SQL. `queries`,
+  * `oracleSql` and `chunkedOracle` are derived from those records. All
+  * money/quantity aggregates run in exact decimal arithmetic and are cast
+  * to double only in the final projection, so results are bit-identical
+  * across engines regardless of aggregation order.
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
-  private def dbl(c: String): Column = col(c).cast("double")
 
-  /** Runs `body` with spark.sql.shuffle.partitions temporarily lowered —
-    * a streaming drain pins its state-store count to this value at stream
-    * START (via the checkpoint), and per-store open/commit overhead
-    * dominates the few-MB bench state: 8 stores measured q107 at half its
-    * 32-store wall time. Batch stages inside the drain are AQE-coalesced
-    * and insensitive. Restored afterwards for the rest of the suite. */
-  private def withStatePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  // SCD2 simulation timestamps (pinned; the reference drifts current_timestamp)
-  private val T0 = Timestamp.valueOf("2026-01-01 00:00:00")
-  private val T1 = Timestamp.valueOf("2026-02-01 00:00:00")
+  private[graft] def dbl(c: String): Column = col(c).cast("double")
 
   /** Simulated incremental batch against `customer` (SURVEY §2.4): 80% of
     * keys re-arrive, every 3rd of those with a changed segment, and every 7th
     * key also arrives as a brand-new (shifted-key) record. */
-  private def scd2Source(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def scd2Source(s: SparkSession, dir: String): DataFrame = {
     val c = t(s, dir, "customer")
     val existing = c.where(col("c_custkey") % 10 < 8)
       .withColumn("c_mktsegment",
@@ -58,13 +46,13 @@ object SparkEntry {
 
   // every cross-query artifact below is memoized per (session, dir, key) in
   // CacheRegistry.memo under the key `artifacts` declares it by
-  private def persisted(df: DataFrame): DataFrame =
+  private[graft] def persisted(df: DataFrame): DataFrame =
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   // staged diff feeds q12-q15; build + persist once per (session, dir),
   // mirroring the reference's cache of multi-action lineage
   // (2_Bronze_to_Silver.py:105)
-  private def staged(s: SparkSession, dir: String): DataFrame =
+  private[graft] def staged(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "staged_scd2")(persisted(
       Scd2.stage(scd2Source(s, dir), t(s, dir, "customer"), "c_custkey")))
 
@@ -72,7 +60,7 @@ object SparkEntry {
   // retrieve-then-rerank; like the star fact, it is built + persisted once
   // per (session, dir) — the production shape, where a postings index is a
   // maintained artifact serving many queries, not a per-query rebuild
-  private def docPostings(s: SparkSession, dir: String): DataFrame =
+  private[graft] def docPostings(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "postings")(persisted(
       graft.ops.Corpus.tfidfPostings(
         graft.core.Tables.tableRebalanced(s, dir, "documents"),
@@ -86,7 +74,7 @@ object SparkEntry {
   // if metadata-served — job per query at 100 TB. The count is a pure
   // function of the (dir, key) snapshot, so one job serves every query;
   // warmCachesFor pre-pays even that one outside the timing loop.
-  private def cachedCount(s: SparkSession, dir: String, key: String)
+  private[graft] def cachedCount(s: SparkSession, dir: String, key: String)
                          (df: => DataFrame): Long =
     memo(s, dir, s"cnt_$key")(df.count())
 
@@ -97,7 +85,7 @@ object SparkEntry {
   // ROUNDED cosine kept, and each contract filters it to its own
   // threshold — set-identical to a per-row judge (the judge itself filters
   // on the same 6-dp rounded cosine), at one N² pass instead of five
-  private def exactJudgePairs(s: SparkSession, dir: String,
+  private[graft] def exactJudgePairs(s: SparkSession, dir: String,
                               threshold: Double): DataFrame = {
     require(threshold >= 0.4,
       s"exactJudgePairs: memoized base covers thresholds >= 0.4, got $threshold")
@@ -122,7 +110,7 @@ object SparkEntry {
   // 64-bit frame behind q336/q337/q338 — the SAME maintained-index shape
   // the container tiers have had since round 8, so the kernel pass runs
   // once per (session, dir) instead of 3–4×.
-  private def tierFps(s: SparkSession, dir: String, tier: String): DataFrame =
+  private[graft] def tierFps(s: SparkSession, dir: String, tier: String): DataFrame =
     memo(s, dir, s"fps_$tier") {
       val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
       persisted(tier match {
@@ -159,31 +147,35 @@ object SparkEntry {
   // released at scope exit, so the memoized frame must be computed while
   // that scratch is still resident or a later consumer would pay the
   // signature pass twice per side.
-  private def materialized(df: DataFrame): DataFrame = {
+  private[graft] def materialized(df: DataFrame): DataFrame = {
     val f = persisted(df)
     f.count()
     f
   }
-  private def cachedFrame(s: SparkSession, dir: String, key: String)
+
+  private[graft] def cachedFrame(s: SparkSession, dir: String, key: String)
                          (build: => DataFrame): DataFrame =
     memo(s, dir, key)(materialized(build))
+
   /** Banded MinHash LSH pair table over the full corpus at the registered
     * (n=3, bands=4, rows=3, minJ=0.5) operating point — the 100 TB dedup
     * path's pair index. */
-  private def lshPairs(s: SparkSession, dir: String): DataFrame =
+  private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame =
     cachedFrame(s, dir, "lsh_pairs")(
       Dedup.minHashLshPairs(graft.core.Tables.tableRebalanced(s, dir, "documents"),
         "doc_id", "text", 3, 4, 3, 0.5))
+
   /** Exact n-gram Jaccard pair table (n=3, minJ=0.5) — the verifier twin. */
-  private def jacPairs05(s: SparkSession, dir: String): DataFrame =
+  private[graft] def jacPairs05(s: SparkSession, dir: String): DataFrame =
     cachedFrame(s, dir, "jac_pairs_05")(
       Dedup.ngramJaccardPairs(graft.core.Tables.tableRebalanced(s, dir, "documents"),
         "doc_id", "text", 3, 0.5))
+
   /** The curation-eligible sub-corpus (lang = en, quality ≠ low) and its
     * own banded pair index — shared by the q53 curation run and the q221
     * curation-to-tape composite, which build the identical frames. One
     * artifact holds both frames, so one release drops both. */
-  private def eligible(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+  private[graft] def eligible(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     memo(s, dir, "eligible_docs") {
       val docs = materialized(graft.core.Tables.tableRebalanced(s, dir, "documents")
         .where(TextStats.detectedLang(col("text")) === "en"
@@ -191,8 +183,7 @@ object SparkEntry {
         .select("doc_id", "text"))
       (docs, materialized(Dedup.minHashLshPairs(docs, "doc_id", "text", 3, 4, 3, 0.5)))
     }
-  private def eligibleDocs(s: SparkSession, dir: String): DataFrame = eligible(s, dir)._1
-  private def lshPairsEligible(s: SparkSession, dir: String): DataFrame = eligible(s, dir)._2
+
   // the EMBEDDING pair indexes at the family's base threshold 0.4 and the
   // session calibration (bits/bands from the corpus count) — one sign-LSH,
   // one multi-probe, one RP-LSH frame serve the pair queries AND their
@@ -200,27 +191,30 @@ object SparkEntry {
   // 0.8 contracts filter the 0.4 frames (candidates are threshold-
   // independent, the verify cut is a WHERE on the same rounded cosine —
   // the exact-judge precedent applied to the banded side)
-  private def signPairs04(s: SparkSession, dir: String): DataFrame =
+  private[graft] def signPairs04(s: SparkSession, dir: String): DataFrame =
     cachedFrame(s, dir, "sign_pairs_04") {
       val emb = t(s, dir, "embeddings")
       val n = cachedCount(s, dir, "embeddings")(emb)
       Similarity.lshNearDupPairs(emb, "vec_id", "embedding", 0.4,
         Similarity.recommendedBits(n), Similarity.recommendedBands(n, 64))
     }
-  private def mpPairs04(s: SparkSession, dir: String): DataFrame =
+
+  private[graft] def mpPairs04(s: SparkSession, dir: String): DataFrame =
     cachedFrame(s, dir, "mp_pairs_04") {
       val emb = t(s, dir, "embeddings")
       val n = cachedCount(s, dir, "embeddings")(emb)
       Similarity.lshMultiProbeNearDupPairs(emb, "vec_id", "embedding", 0.4,
         Similarity.recommendedBits(n), Similarity.recommendedBands(n, 64))
     }
-  private def rpPairs04(s: SparkSession, dir: String): DataFrame =
+
+  private[graft] def rpPairs04(s: SparkSession, dir: String): DataFrame =
     cachedFrame(s, dir, "rp_pairs_04") {
       val emb = t(s, dir, "embeddings")
       val n = cachedCount(s, dir, "embeddings")(emb)
       Similarity.rpLshNearDupPairs(emb, "vec_id", "embedding", 0.4,
         Similarity.recommendedBits(n), 16, 64)
     }
+
   /** Per-tier banded near-dup PAIR frames at each tier's derived radius —
     * the modality curation artifact itself: the pair query, its recall
     * contract, and the consensus votes all consume the SAME pair table
@@ -230,7 +224,7 @@ object SparkEntry {
     * 11. Correctness is untouched: the contracts' banded side is the
     * identical frame (bandedGen hooks), and the consensus votes already
     * took these pair sets as inputs. */
-  private def tierPairs(s: SparkSession, dir: String, tier: String): DataFrame =
+  private[graft] def tierPairs(s: SparkSession, dir: String, tier: String): DataFrame =
     cachedFrame(s, dir, s"pairs_$tier") {
       val n = cachedCount(s, dir, "documents")(
         graft.core.Tables.tableRebalanced(s, dir, "documents"))
@@ -245,11 +239,12 @@ object SparkEntry {
           tierRadius(s, dir, t128))
       }
     }
+
   /** The FITTED IVF index at the session calibration (⌈√N⌉ cells, 2 Lloyd
     * iterations): the (id, cell, vec, norm) assignment SemDeDup (q83) and
     * the kNN outlier audit (q327) both train per query today — a fitted
     * index is a maintained artifact like the perceptual frames. */
-  private def kmeansAssigned(s: SparkSession, dir: String): DataFrame =
+  private[graft] def kmeansAssigned(s: SparkSession, dir: String): DataFrame =
     cachedFrame(s, dir, "kmeans_assigned") {
       val emb = t(s, dir, "embeddings")
       Similarity.kmeansAssignment(emb, "vec_id", "embedding",
@@ -266,7 +261,7 @@ object SparkEntry {
   // bench corpora the rule lands at the cap 24 (the historical 3/16
   // default); on the 100× templated fixture it binds — the 736.7 M-row
   // answer the fixed default emitted becomes a CHOSEN operating point.
-  private def tierRadius(s: SparkSession, dir: String, tier: String): Int =
+  private[graft] def tierRadius(s: SparkSession, dir: String, tier: String): Int =
     memo(s, dir, s"radius_$tier")(tier match {
       case "text" =>
         val n = cachedCount(s, dir, "documents")(
@@ -484,12446 +479,35 @@ object SparkEntry {
       .withColumn("total_quantity_sold", dbl("total_quantity_sold"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2 (+ §7.6 extensions). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- aggregations / scans (SURVEY §2.5, §2.1) ----
-    "q01_pricing_summary" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      li.groupBy("l_returnflag", "l_linestatus").agg(
-        sum(col("l_quantity").cast("decimal(12,2)")).as("sum_qty_d"),
-        sum(col("l_extendedprice").cast("decimal(12,2)")).as("sum_base_price_d"),
-        sum(col("l_extendedprice").cast("decimal(12,2)") *
-          (lit(1).cast("decimal(3,2)") - col("l_discount").cast("decimal(3,2)"))).as("sum_disc_price_d"),
-        count(lit(1)).as("count_order"))
-        .select(col("l_returnflag"), col("l_linestatus"),
-          dbl("sum_qty_d").as("sum_qty"),
-          dbl("sum_base_price_d").as("sum_base_price"),
-          dbl("sum_disc_price_d").as("sum_disc_price"),
-          col("count_order"))
-    }),
-    // ---- star join (SURVEY §2.3 J2, wide projection P5) ----
-    "q02_star_fact" -> ((s, dir) =>
-      StarSchema.factOrderDetails(s, dir)
-        .withColumn("Quantity", dbl("Quantity"))
-        .withColumn("CurrentPrice", dbl("CurrentPrice"))
-        .withColumn("TotalAmount", dbl("TotalAmount"))),
-    // ---- gold marts (SURVEY §2.5 A2-A7) ----
-    "q03_seller_perf_daily" -> ((s, dir) =>
-      GoldMarts.sellerPerformanceDaily(
-        GoldMarts.withDateParts(StarSchema.factOrderDetails(s, dir)))
-        .withColumn("total_revenue", dbl("total_revenue"))
-        .withColumn("total_quantity_sold", dbl("total_quantity_sold"))),
-    "q04_seller_perf_monthly" -> ((s, dir) =>
-      GoldMarts.sellerPerformanceMonthly(
-        GoldMarts.sellerPerformanceDaily(
-          GoldMarts.withDateParts(StarSchema.factOrderDetails(s, dir))))
-        .withColumn("total_revenue", dbl("total_revenue"))
-        .withColumn("total_quantity_sold", dbl("total_quantity_sold"))),
-    "q05_seller_perf_quarterly" -> ((s, dir) =>
-      GoldMarts.sellerPerformanceQuarterly(
-        GoldMarts.sellerPerformanceDaily(
-          GoldMarts.withDateParts(StarSchema.factOrderDetails(s, dir))))
-        .withColumn("total_revenue", dbl("total_revenue"))
-        .withColumn("total_quantity_sold", dbl("total_quantity_sold"))),
-    "q06_order_rates" -> ((s, dir) =>
-      GoldMarts.orderRates(StarSchema.factOrderDetails(s, dir))),
-    "q07_seller_segmentation" -> ((s, dir) => {
-      val fact = StarSchema.factOrderDetails(s, dir)
-      val daily = GoldMarts.sellerPerformanceDaily(GoldMarts.withDateParts(fact))
-      GoldMarts.sellerSegmentation(daily, GoldMarts.orderRates(fact))
-        .withColumn("total_revenue", dbl("total_revenue"))
-    }),
-    "q08_customer_analytics" -> ((s, dir) =>
-      GoldMarts.customerAnalytics(StarSchema.factOrderDetails(s, dir))
-        .withColumn("total_spend", dbl("total_spend"))),
-    // ---- SCD2 engine (SURVEY §2.4, J1, P9, F1/F2) ----
-    "q09_scd2_fingerprint" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      c.select(col("c_custkey"),
-        Scd2.fingerprint(Scd2.trackedColumns(c, "c_custkey")).as("scd2_hash"))
-    }),
-    "q10_watermark_filter" -> ((s, dir) =>
-      t(s, dir, "events").where(
-        col("ts") > lit("2024-01-10 00:00:00").cast("timestamp") &&
-        col("ts") <= lit("2024-01-20 00:00:00").cast("timestamp"))),
-    "q11_batch_watermark" -> ((s, dir) =>
-      t(s, dir, "events").agg(max(col("ts")).as("new_watermark"))),
-    "q12_scd2_classify" -> ((s, dir) =>
-      staged(s, dir).select("c_custkey", "action")),
-    "q13_scd2_new_records" -> ((s, dir) =>
-      Scd2.insertedRecords(staged(s, dir), Seq("c_custkey", "c_name", "c_mktsegment"))),
-    "q14_scd2_expire_keys" -> ((s, dir) =>
-      Scd2.expireKeys(staged(s, dir), "c_custkey")),
-    "q15_scd2_apply" -> ((s, dir) => {
-      val target = Scd2.initialLoad(t(s, dir, "customer"), T0)
-      Scd2.applyMerge(target, staged(s, dir), "c_custkey", T1)
-    }),
-    // SCD2 delete detection: scd2Source is a FULL snapshot here — 20% of
-    // customer keys are absent (DELETE), every 3rd re-arriving key changed
-    // segment (UPDATE), shifted keys are new (INSERT)
-    "q46_scd2_deletes" -> ((s, dir) =>
-      Scd2.stageWithDeletes(scd2Source(s, dir), t(s, dir, "customer"), "c_custkey")
-        .select("c_custkey", "action")),
-    // ---- event-time aggregation (batch shape of the streaming path) ----
-    "q16_event_hourly" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(12,2)")).as("sum_value_d"))
-        .select(col("hour"), col("event_type"), col("n_events"),
-          dbl("sum_value_d").as("sum_value"))),
-    // ---- window / top-k (beyond reference; standard analytics surface) ----
-    "q17_top_customers_by_nation" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val fact = StarSchema.factOrderDetails(s, dir)
-      val spend = fact.groupBy("NationName", "CustomerID")
-        .agg(sum(col("TotalAmount")).as("spend_d"))
-      val w = Window.partitionBy("NationName")
-        .orderBy(col("spend_d").desc, col("CustomerID").asc)
-      spend.withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 3)
-        .select(col("NationName"), col("CustomerID"), dbl("spend_d").as("spend"), col("rank"))
-    }),
-    // ---- dedup suite (§7.6) ----
-    "q20_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(t(s, dir, "documents").select(md5(col("text")).as("text_md5"),
-        col("doc_id")), Seq("text_md5"), "doc_id")),
-    "q21_dedup_ngram_jaccard" -> ((s, dir) => jacPairs05(s, dir)),
-    "q22_dedup_minhash_lsh" -> ((s, dir) => lshPairs(s, dir)),
-    "q23_dedup_simhash" -> ((s, dir) =>
-      Dedup.simHash16(t(s, dir, "documents"), "doc_id", "text")),
-    "q33_dedup_clusters" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Dedup.clusters(jacPairs05(s, dir),
-        "id_a", "id_b", docs.select("doc_id"), "doc_id")
-    }),
-    "q35_dedup_drop" -> ((s, dir) =>
-      Dedup.dropNearDuplicates(
-        graft.core.Tables.tableRebalanced(s, dir, "documents"),
-        "doc_id", "text", 3, 0.5, pairGen = Some(jacPairs05(s, dir)))),
-    // the 100 TB dedup path end-to-end: LSH candidate pairs (no all-pairs
-    // stage) -> components -> representatives, oracle-checked as a whole
-    "q43_dedup_drop_lsh" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Dedup.dropNearDuplicates(docs, "doc_id", "text", 3, 0.5,
-        pairGen = Some(lshPairs(s, dir)))
-    }),
-    "q36_repetition" -> ((s, dir) =>
-      TextStats.repetitionScore(t(s, dir, "documents"), "doc_id", "text", 3)),
-    "q37_pii_scrub" -> ((s, dir) =>
-      TextStats.scrubPii(t(s, dir, "documents"), "doc_id", "text")),
-    // ---- similarity search (§7.6) ----
-    "q24_cosine_topk" -> ((s, dir) =>
-      Similarity.bruteForceTopK(t(s, dir, "embeddings"), "vec_id", "embedding", 5)),
-    // single-band didactic form; bits SCALE-ADAPTIVE as registered (the
-    // occupancy rule, mirrored from count(*) in the oracle) so even the
-    // fragile single-prefix shape never freezes a quadratic bucket size
-    "q25_ann_lsh_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.lshTopK(emb, "vec_id", "embedding", 3,
-        Similarity.recommendedBits(cachedCount(s, dir, "embeddings")(emb)))
-    }),
-    // contrastive hard negatives: nearest wrong-label neighbors (exact
-    // baseline; hardNegativesLsh is the banded scale path, spec-pinned)
-    "q139_hard_negatives" -> ((s, dir) =>
-      Similarity.hardNegativesExact(
-        t(s, dir, "embeddings"), "vec_id", "embedding", "label", 5)),
-    "q26_embed_neardup" -> ((s, dir) =>
-      Similarity.nearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding", 0.4)),
-    // scale path for q26: banded LSH candidates instead of the N² cross
-    // join. Calibration is SCALE-ADAPTIVE as registered (the SCALE10X
-    // lesson: the frozen 4-bit sf0.1 calibration ran 77× on a 10× corpus):
-    // bits = recommendedBits(count) keeps expected bucket occupancy ≤ 150,
-    // bands = as many as the 64 dims still fit (capped at 8). At sf0.1
-    // (n=2000) this derives the same 4-bit × 8-band plan the frozen entry
-    // shipped; at 10×/100× it widens to 8/11 bits on its own. The oracle
-    // CTE mirrors the identical integer arithmetic from count(*), so the
-    // candidate sets replay exactly at every scale.
-    "q44_embed_neardup_lsh" -> ((s, dir) => signPairs04(s, dir)),
-    // the granularity rule's recall COST, driver-checked at the NEXT
-    // decade's calibration (VERDICT r6 #3): bits/bands derived for a
-    // 10× corpus, measured against today's exact pair set — wider bands
-    // buy occupancy with recall, and the floor is an oracle-pinned TRUE
-    // so a recall collapse is a hash mismatch, not scaladoc prose.
-    // The floor is MODEL-DERIVED (VERDICT r7 #2): half the closed-form
-    // sign-LSH collision curve at this (threshold, bits, bands) — it
-    // falls with the derived calibration exactly as measured recall does
-    // (0.47/0.20/0.032 measured vs 0.41/0.18/0.031 model across three
-    // decades), so the contract holds at EVERY scale instead of failing
-    // off-gate at 10× the way the old SF-pinned 0.1 did. This corpus's
-    // exact pairs sit at cos ≈ 0.4–0.5 (no planted high-cosine dups) —
-    // the worst case for sign-LSH; a corpus needing high TAIL recall at
-    // a weak threshold buys it with more bands (cost ∝ bands), not
-    // narrower buckets (cost ∝ N²/2^bits).
-    "q340_lsh_recall_scaled" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val n10 = 10L * cachedCount(s, dir, "embeddings")(emb)
-      val bits = Similarity.recommendedBits(n10)
-      val bands = Similarity.recommendedBands(n10, 64)
-      Similarity.lshRecallContract(emb, "vec_id", "embedding", 0.4,
-        bits, bands, Similarity.modelRecallFloor(0.4, bits, bands),
-        Some(exactJudgePairs(s, dir, 0.4)))
-    }),
-    // RANDOM-HYPERPLANE sign-LSH (Charikar 2002), md5-derandomized so the
-    // oracle replays every bucket bit: bands UNBOUNDED by the vector's 64
-    // dims — 16 bands at the adaptive bit width, where the raw-dim path
-    // structurally caps at 64/bits. The answer to q340's measured recall
-    // cost: same occupancy (same bits), recall 0.94 at sf0.1 vs 0.75 for
-    // the dim-capped 8-band q44 calibration.
-    "q341_rplsh_neardup" -> ((s, dir) => rpPairs04(s, dir)),
-    // the recall contract certifying the bands-buy-recall claim at the
-    // same adaptive bits q44 runs (floor oracle-pinned TRUE; measured
-    // 1.0 at sf0.01 / 0.94 at sf0.1). Floor MODEL-DERIVED like q340's:
-    // half the closed-form curve at (0.4, bits, 16) — RP planes ARE the
-    // i.i.d. hyperplanes the model assumes, so it tracks tightly (model
-    // 0.94 at sf0.1 vs measured 0.94) and travels to any scale where the
-    // old SF-pinned 0.7 was gate-only.
-    "q342_rplsh_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val bits = Similarity.recommendedBits(cachedCount(s, dir, "embeddings")(emb))
-      Similarity.rpLshRecallContract(emb, "vec_id", "embedding", 0.4,
-        bits, 16, 64, Similarity.modelRecallFloor(0.4, bits, 16),
-        Some(exactJudgePairs(s, dir, 0.4)),
-        bandedGen = Some(rpPairs04(s, dir)))
-    }),
-    // the STRONG-THRESHOLD recall contract (cos ≥ 0.8 — where LSH dedup
-    // is actually deployed): on the driver fixtures no pair reaches 0.8
-    // (n_exact = 0 → recall 1.0 by convention), so this row's teeth are
-    // the planted-strong-pair scale fixture (tools/make_scale_fixture.py
-    // --plant-strong), where it measures the RP tier against pairs the
-    // operator is deployed to catch; the floor is the same closed-form
-    // model, which at 0.8 predicts near-1 recall at every derived
-    // calibration (p = 0.795: 1−(1−p^8)^16 ≈ 0.94 even at 10× bits)
-    "q350_rplsh_recall_strong" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val bits = Similarity.recommendedBits(cachedCount(s, dir, "embeddings")(emb))
-      Similarity.rpLshRecallContract(emb, "vec_id", "embedding", 0.8,
-        bits, 16, 64, Similarity.modelRecallFloor(0.8, bits, 16),
-        Some(exactJudgePairs(s, dir, 0.8)),
-        bandedGen = Some(rpPairs04(s, dir).where(col("cos") >= 0.8)))
-    }),
-    // multi-probe at the deployment threshold: the q345 gain laws
-    // (structural superset, nonneg gain) certified where near-dups are
-    // strong; recall_base/recall_multiprobe measure on the planted
-    // fixture what one extra probe buys at cos 0.8
-    "q351_multiprobe_strong" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val n = cachedCount(s, dir, "embeddings")(emb)
-      Similarity.lshMultiProbeGainContract(emb, "vec_id", "embedding", 0.8,
-        Similarity.recommendedBits(n), Similarity.recommendedBands(n, 64),
-        Some(exactJudgePairs(s, dir, 0.8)),
-        baseGen = Some(signPairs04(s, dir).where(col("cos") >= 0.8)),
-        multiGen = Some(mpPairs04(s, dir).where(col("cos") >= 0.8)))
-    }),
-    // MULTI-PROBE sign-LSH (Lv et al. 2007): each vector also probes the
-    // bucket at its least-confident bit flipped — the third LSH knob
-    // (bits=occupancy, bands=recall @ cost ∝ bands, probes=recall with NO
-    // new hash tables). Same adaptive (bits, bands) as q44; candidates
-    // are a structural superset of q44's.
-    "q344_lsh_multiprobe" -> ((s, dir) => mpPairs04(s, dir)),
-    // the gain contract: multiprobe vs base recall at identical params,
-    // superset + nonneg-gain oracle-pinned TRUE (structural laws)
-    "q345_multiprobe_gain" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val n = cachedCount(s, dir, "embeddings")(emb)
-      Similarity.lshMultiProbeGainContract(emb, "vec_id", "embedding", 0.4,
-        Similarity.recommendedBits(n), Similarity.recommendedBands(n, 64),
-        Some(exactJudgePairs(s, dir, 0.4)),
-        baseGen = Some(signPairs04(s, dir)),
-        multiGen = Some(mpPairs04(s, dir)))
-    }),
-    // the RP tier's ingestion-time shape (q200's twin with unbounded
-    // bands): standing corpus = even vec_ids, arriving batch = odd; bits
-    // from the CORPUS count, 16 bands
-    "q343_rplsh_dedup_across" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val corpus = emb.where(col("vec_id") % 2 === 0)
-      Similarity.rpLshNearDupPairsAcross(
-        corpus, emb.where(col("vec_id") % 2 === 1),
-        "vec_id", "embedding", 0.3,
-        Similarity.recommendedBits(
-          cachedCount(s, dir, "embeddings_even")(corpus)), 16, 64)
-    }),
-    // 3-band ANN top-k; bits SCALE-ADAPTIVE as registered — per-query
-    // candidate volume stays ≈ bands × target_occupancy at every corpus
-    // size instead of N/2^8 per band (bands yield to bucket width only
-    // past 21 bits: greatest(1, least(3, 64/bits)))
-    "q34_ann_multiband" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val bits = Similarity.recommendedBits(cachedCount(s, dir, "embeddings")(emb))
-      Similarity.multiBandLshTopK(emb, "vec_id", "embedding", 3, bits,
-        math.max(1, math.min(3, 64 / bits)))
-    }),
-    // IVF cell count is SCALE-ADAPTIVE as registered: nCells = ⌈√N⌉ (the
-    // SCALE10X remedy for the frozen 8-cell calibration that ran 13× on a
-    // 10× corpus — candidates per query are N·nProbe/nCells, so cells must
-    // grow with N). The oracle derives the same ⌈√count⌉ in SQL.
-    "q38_ivf_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, "vec_id", "embedding", 3,
-        Similarity.recommendedCells(cachedCount(s, dir, "embeddings")(emb)), 2)
-    }),
-    // product quantization (Jégou et al. 2011): m=2 subspaces × k=8 codes,
-    // one Lloyd iteration — codebook training + encode, engine-exact via
-    // the reduced-L2 ranking key (see Embeddings.nearestCode)
-    "q116_pq_encode" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cb = graft.ops.Embeddings.pqTrain(emb, "vec_id", "embedding", 64, 2, 8, 1)
-      graft.ops.Embeddings.pqEncode(emb, "vec_id", "embedding", cb, 64, 2)
-        .select(col("vec_id"), posexplode(col("codes")).as(Seq("subspace", "code")))
-    }),
-    // sign-bit binary codes: 64 dims packed into two 32-bit words (32×
-    // smaller than floats); exploded to (vec_id, word, code) rows
-    "q121_binarize" -> ((s, dir) =>
-      graft.ops.Embeddings.binarize(t(s, dir, "embeddings"), "vec_id", "embedding", 64)
-        .select(col("vec_id"), posexplode(col("code")).as(Seq("word", "code")))),
-    // Hamming top-10 over the binary codes — all-integer distance, exact
-    // on any engine; float vectors never load at query time
-    "q122_hamming_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val codes = graft.ops.Embeddings.binarize(
-        emb.where(col("vec_id") % 50 =!= 0), "vec_id", "embedding", 64)
-      val qcodes = graft.ops.Embeddings.binarize(
-        emb.where(col("vec_id") % 50 === 0), "vec_id", "embedding", 64)
-      graft.ops.Embeddings.hammingTopK(codes, "vec_id", "code",
-        qcodes, "vec_id", "code", 2, 10)
-    }),
-    // IVF-PQ: coarse cells prune candidates (probe 2 of 8), ADC ranks the
-    // survivors — the composition production ANN indexes run
-    "q118_ivfpq_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cb = graft.ops.Embeddings.pqTrain(emb, "vec_id", "embedding", 64, 2, 8, 1)
-      // coarse cells SCALE-ADAPTIVE from the corpus count (⌈√N⌉, the q38
-      // rule — candidates per query are N·nProbe/nCells); PQ codebook
-      // size (m=2, k=8) is a MODEL choice and stays
-      val corpus = emb.where(col("vec_id") % 50 =!= 0)
-      Similarity.ivfPqTopK(corpus, "vec_id", "embedding",
-        emb.where(col("vec_id") % 50 === 0), "vec_id", cb, 64, 2, 10,
-        Similarity.recommendedCells(
-          cachedCount(s, dir, "embeddings_mod50")(corpus)), 2)
-    }),
-    // ADC top-10 per held-out query (every 50th vector) over PQ codes:
-    // the query meets full-precision centroids, the corpus only its codes
-    "q117_pq_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cb = graft.ops.Embeddings.pqTrain(emb, "vec_id", "embedding", 64, 2, 8, 1)
-      val corpus = emb.where(col("vec_id") % 50 =!= 0)
-      val codes = graft.ops.Embeddings.pqEncode(corpus, "vec_id", "embedding", cb, 64, 2)
-      graft.ops.Embeddings.pqTopK(codes, "vec_id", "codes",
-        emb.where(col("vec_id") % 50 === 0), "vec_id", "embedding", cb, 64, 2, 10)
-    }),
-    "q39_deterministic_split" -> ((s, dir) =>
-      Sampling.deterministicSplit(t(s, dir, "documents").select("doc_id"), "doc_id",
-        Seq("train" -> 90, "val" -> 5, "test" -> 5))),
-    // point-in-time lookup: each event joined to the customer's latest
-    // order at-or-before the event (orders deduped to one per (key, date))
-    "q40_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select("event_id", "ts", "user_id")
-      val ord = t(s, dir, "orders")
-        .groupBy(col("o_custkey").as("user_id"),
-          col("o_orderdate").cast("timestamp").as("order_ts"))
-        .agg(max("o_orderkey").as("last_orderkey"))
-        .withColumn("last_order_date", col("order_ts"))
-      Joins.asOfJoin(ev, ord, "user_id", "ts", "order_ts")
-    }),
-    // keyed time-range join via bucket banding (no inequality nested loop):
-    // per event, how many same-user events landed in the prior 30 minutes
-    "q47_range_join_count" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select("event_id", "ts", "user_id")
-      val prior = t(s, dir, "events").select(col("user_id"),
-        col("event_id").as("prior_id"), col("ts").as("prior_ts"))
-      // window = [ts - 30 min, ts - 1 µs]: strictly-before semantics
-      val pairs = Joins.bandedRangeJoin(ev, prior, "user_id",
-        "ts", "prior_ts", -1800000000L, -1L)
-      val counts = pairs.groupBy("event_id").agg(count(lit(1)).as("n_prior"))
-      ev.select("event_id").join(counts, Seq("event_id"), "left")
-        .select(col("event_id"), coalesce(col("n_prior"), lit(0L)).as("n_prior"))
-    }),
-    // every calendar drill-down grain from ONE aggregation (grouping sets)
-    "q48_calendar_rollup" -> ((s, dir) =>
-      GoldMarts.sellerPerformanceCalendarRollup(
-        GoldMarts.sellerPerformanceDaily(
-          GoldMarts.withDateParts(StarSchema.factOrderDetails(s, dir))))
-        .withColumn("total_revenue", dbl("total_revenue"))
-        .withColumn("total_quantity_sold", dbl("total_quantity_sold"))),
-    // ingestion-time dedup: the new batch (odd ids) checked against the
-    // standing corpus (even ids) — corpus×corpus pairs are never generated
-    "q49_incremental_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.minHashLshPairsAcross(
-        docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1),
-        "doc_id", "text", 3, 4, 3, 0.5)
-    }),
-    // one k-means refinement step over the IVF hashed-sample seed; means
-    // exploded to (cell, dim, mean_val) rows for the oracle compare
-    "q50_kmeans_step" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val seeds = emb.orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(8)
-      Similarity.kmeansStep(emb, "vec_id", "embedding", seeds)
-        .select(col("cell"), col("n_members"),
-          posexplode(col("centroid")).as(Seq("dim", "mean_val")))
-        .withColumn("mean_val", round(col("mean_val"), 6))
-    }),
-    // sequence packing: deterministic (shard, bin, offset) assignment of
-    // documents into fixed-token-budget training bins
-    "q56_sequence_pack" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val counted = docs.select(col("doc_id"),
-        TextStats.bpeishTokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.ops.Packing.packGreedy(counted, "doc_id", "n_tokens", 512L, 4)
-    }),
-    // packed bins materialized into training sequences (offset-ordered
-    // concatenation, one row per bin)
-    "q57_pack_materialize" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val counted = docs.select(col("doc_id"), col("text"),
-        TextStats.bpeishTokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.ops.Packing.materializeBins(
-        graft.ops.Packing.packGreedy(counted, "doc_id", "n_tokens", 512L, 4),
-        "text")
-    }),
-    // corpus vocabulary: top-50 terms by total occurrences, with document
-    // frequency — two pipelined partial aggs, TakeOrdered cut (no window)
-    "q58_vocabulary" -> ((s, dir) =>
-      graft.ops.Corpus.vocabulary(t(s, dir, "documents"), "doc_id", "text", 50)),
-    // overlapping token-window chunking (window 64, stride 48) — the
-    // long-document complement of q56's packing; pure scan-stage explode
-    "q59_chunking" -> ((s, dir) =>
-      graft.ops.Chunking.chunkByTokens(t(s, dir, "documents"), "doc_id", "text", 64, 48)),
-    // per-document top-3 TF-IDF terms (raw-ratio idf: engine-exact IEEE
-    // division, no libm log — see Corpus scaladoc)
-    "q60_tfidf_topterms" -> ((s, dir) =>
-      graft.ops.Corpus.tfidfTopTerms(t(s, dir, "documents"), "doc_id", "text", 3)),
-    // fixed-width histogram profile of the event value column (edge
-    // saturation, null-excluded) — one partial-agg pass
-    "q61_histogram" -> ((s, dir) =>
-      graft.ops.Quality.histogram(t(s, dir, "events"), "value", 0, 100, 20)),
-    // z-order (Morton) value per row: bit-interleave of two range-bucketed
-    // dims — the clustering key behind OPTIMIZE ZORDER BY
-    "q62_zorder_value" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      li.select(col("l_orderkey"), col("l_linenumber"),
-        graft.ops.Layout.zValue(
-          graft.ops.Layout.rangeBucket(col("l_partkey"), 0, 20000, 8),
-          graft.ops.Layout.rangeBucket(col("l_suppkey"), 0, 1000, 8), 8).as("zval"))
-    }),
-    // exact global curriculum rank (shortest→longest doc) with NO
-    // single-partition window: range-repartition + per-range row_number +
-    // cumulative offsets — identical answer to ROW_NUMBER() OVER (ORDER BY
-    // ...) at any scale (LayoutSpec pins plan + equivalence)
-    "q129_curriculum_rank" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), length(col("text")).cast("long").as("doc_len"))
-      graft.ops.Layout.globalRank(docs, "doc_len", "doc_id", "rank", 32)
-    }),
-    // cap documents per source domain (anti-crawl-dominance), md5-ordered
-    // deterministic survivors
-    "q63_cap_per_source" -> ((s, dir) =>
-      graft.ops.Sampling.capPerStratum(t(s, dir, "documents"), "doc_id", "source", 30)
-        .select(col("doc_id"), col("source"))),
-    // robust outlier flags on event values: median ± 3·MAD (exact
-    // percentiles; approx twin at scale)
-    "q64_mad_outliers" -> ((s, dir) =>
-      graft.ops.Quality.madOutliers(t(s, dir, "events"), "value", 3.0)
-        .select(col("event_id"), col("value"), col("med"), col("mad"),
-          col("is_outlier"))),
-    // full Lloyd's k-means (2 iterations from the md5-hashed seed):
-    // trains the IVF coarse quantizer; q50 is one step of this
-    "q65_kmeans_fit" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.kmeansFit(emb, "vec_id", "embedding", 8, 2)
-        .select(col("cell"), col("n_members"),
-          posexplode(col("centroid")).as(Seq("dim", "mean_val")))
-        .withColumn("mean_val", round(col("mean_val"), 6))
-    }),
-    // symmetric int8 embedding quantization (4x storage cut before ANN
-    // indexing), element-exact across engines
-    "q66_quantize_int8" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      graft.ops.Embeddings.quantizeInt8(emb, "vec_id", "embedding")
-        .select(col("vec_id"), round(col("scale"), 6).as("scale"),
-          posexplode(col("qvec")).as(Seq("dim", "qval")))
-    }),
-    // canonicalization before dedup/fingerprinting: lowercase, strip
-    // control chars, collapse whitespace — byte-reproducible on any engine
-    "q67_text_normalize" -> ((s, dir) =>
-      TextStats.normalizeText(t(s, dir, "documents"), "doc_id", "text")),
-    // rebalance the corpus to target language weights (en/de/fr 50/20/30)
-    // without upsampling — broadcast rates, zero data shuffles
-    "q68_rebalance_mix" -> ((s, dir) =>
-      Sampling.rebalanceToWeights(t(s, dir, "documents"), "doc_id", "lang",
-        Seq("en" -> 0.5, "de" -> 0.2, "fr" -> 0.3))
-        .select(col("doc_id"), col("lang"))),
-    // two-step conversion funnel (first signup -> first purchase strictly
-    // after it) — strict event ordering, not did-both
-    "q69_funnel" -> ((s, dir) =>
-      graft.ops.EventAnalytics.twoStepFunnel(
-        t(s, dir, "events"), "user_id", "ts", "event_type", "signup", "purchase")),
-    // weekly retention cohorts: distinct active users per (first-week
-    // cohort, week offset)
-    "q70_retention" -> ((s, dir) =>
-      graft.ops.EventAnalytics.retentionCohorts(t(s, dir, "events"), "user_id", "ts")),
-    // dedup audit: every dropped doc with the representative that kept it
-    // out (the "why did my document disappear" report)
-    "q71_dedup_audit" -> ((s, dir) =>
-      Dedup.nearDuplicateAudit(
-        graft.core.Tables.tableRebalanced(s, dir, "documents"),
-        "doc_id", "text", 3, 0.5, pairGen = Some(jacPairs05(s, dir)))),
-    // incremental vocabulary maintenance: per-half term stats merged by
-    // summation, then cut — must equal the direct q58 vocabulary
-    "q72_vocab_merge" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val half1 = docs.where(Sampling.md5Bucket(col("doc_id")) < 50)
-      val half2 = docs.where(Sampling.md5Bucket(col("doc_id")) >= 50)
-      graft.ops.Corpus.topTerms(
-        graft.ops.Corpus.mergeTermStats(
-          graft.ops.Corpus.termStats(half1, "doc_id", "text"),
-          graft.ops.Corpus.termStats(half2, "doc_id", "text")), 50)
-    }),
-    // benchmark decontamination: flag corpus docs sharing any word 5-gram
-    // with the (md5-held-out) eval set — broadcast bench shingles,
-    // map-side probe
-    "q73_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val bench = docs.where(Sampling.md5Bucket(col("doc_id")) < 4)
-      val corpus = docs.where(Sampling.md5Bucket(col("doc_id")) >= 4)
-      Dedup.contaminationFlags(corpus, bench, "doc_id", "text", 5)
-    }),
-    // per-source quality drift: the monitoring mart that catches a crawl
-    // source going bad — one scan, one partial-agg shuffle
-    "q74_quality_drift" -> ((s, dir) =>
-      TextStats.qualityDrift(t(s, dir, "documents"), "doc_id", "text", "source")),
-    // time travel: the q15 SCD2 history read back AS OF T0 — expired
-    // pre-update versions reappear, T1 insertions vanish
-    "q77_scd2_asof" -> ((s, dir) => {
-      val target = Scd2.initialLoad(t(s, dir, "customer"), T0)
-      Scd2.asOf(Scd2.applyMerge(target, staged(s, dir), "c_custkey", T1), T0)
-    }),
-    // referential-integrity audit: documents without an embedding (the FK
-    // CHECK a lakehouse can't declare), one-row summary
-    "q78_ref_audit" -> ((s, dir) =>
-      graft.ops.Quality.referentialAudit(
-        t(s, dir, "documents"), t(s, dir, "embeddings"), "doc_id", "vec_id")),
-    // unigram-LM familiarity score + OOV rate — the no-model perplexity
-    // proxy; integer sums + one division, engine-exact
-    "q79_lm_familiarity" -> ((s, dir) =>
-      graft.ops.Corpus.familiarity(t(s, dir, "documents"), "doc_id", "text", 40)),
-    // one BPE merge-candidate step: adjacent-pair counts, top-200 cut
-    "q80_bpe_pairs" -> ((s, dir) =>
-      graft.ops.Corpus.bpePairCounts(t(s, dir, "documents"), "text", 200)),
-    // inverted index: df + first-20 postings per term, exploded layout
-    "q81_inverted_index" -> ((s, dir) =>
-      graft.ops.Corpus.invertedIndex(t(s, dir, "documents"), "doc_id", "text", 20)),
-    // cross-source shingle-overlap matrix (containment coefficient)
-    "q82_source_overlap" -> ((s, dir) =>
-      Dedup.sourceOverlap(
-        graft.core.Tables.tableRebalanced(s, dir, "documents"),
-        "source", "text", 3, exact = true)),
-    // SemDeDup: k-means cells, then near-dup pairs WITHIN a cell only
-    // SemDeDup cell count SCALE-ADAPTIVE as registered (⌈√N⌉ like q38 —
-    // the within-cell pair stage is quadratic in cell size); 2 Lloyd
-    // iterations and the 0.3 threshold unchanged, oracle mirrors the count
-    "q83_semantic_dedup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.semanticNearDupPairs(emb, "vec_id", "embedding",
-        Similarity.recommendedCells(cachedCount(s, dir, "embeddings")(emb)), 2, 0.3,
-        assignedGen = Some(kmeansAssigned(s, dir)))
-    }),
-    // ±2-token co-occurrence with PMI-style lift (ratio form, engine-exact)
-    "q84_cooccurrence" -> ((s, dir) =>
-      graft.ops.Corpus.cooccurrence(t(s, dir, "documents"), "text", 2, 300)),
-    // feature-hashing vectorizer: model-free 16-dim signed-count embedding
-    "q85_hash_embed" -> ((s, dir) =>
-      graft.ops.Embeddings.hashEmbed(t(s, dir, "documents"), "doc_id", "text", 16)),
-    // BM25 corpus ranking against a fixed query (k1/b chosen exactly
-    // float-representable so every constant is bit-identical cross-engine)
-    "q86_bm25" -> ((s, dir) =>
-      graft.ops.Corpus.bm25(t(s, dir, "documents"), "doc_id", "text",
-        Seq("spark", "table", "agg"), 1.5, 0.75, 50)),
-    // hybrid retrieval: BM25 lexical ranks fused with hash-embedding
-    // cosine ranks by RRF — rank-only fusion, engine-exact
-    "q123_hybrid_rrf" -> ((s, dir) =>
-      graft.ops.Corpus.hybridRrf(t(s, dir, "documents"), "doc_id", "text",
-        Seq("spark", "table", "agg"), 16, 100, 60, 50)),
-    // join-key skew profile + salt-factor recommendation on the orders fact
-    "q87_skew_profile" -> ((s, dir) =>
-      graft.ops.Joins.skewProfile(t(s, dir, "orders"), "o_custkey", 10, 50)),
-    // hourly volume-spike flags (integer moments → engine-exact z-scores)
-    "q88_event_spikes" -> ((s, dir) =>
-      graft.ops.EventAnalytics.hourlySpikes(t(s, dir, "events"), "ts", "event_type", 3.0)),
-    // the per-doc curation decision table: every quality signal + verdict
-    "q89_scorecard" -> ((s, dir) =>
-      graft.ops.Quality.curationScorecard(
-        t(s, dir, "documents"), "doc_id", "text", 40, 0.99, 0.9)),
-    // class prototypes: per-label mean embedding via the native vector-sum
-    // aggregate (one label-keyed shuffle of (labels × dim) doubles)
-    "q91_label_centroids" -> ((s, dir) =>
-      graft.ops.Embeddings.labelCentroids(t(s, dir, "embeddings"), "label", "embedding")),
-    // blocked fuzzy self-match (entity resolution) via collapse-compare-
-    // fanout — identical pairs to the quadratic blocked form (the
-    // oracle's definition), but levenshtein runs over the 64 DISTINCT
-    // names instead of 25M row pairs; the remaining cost is the 3.1M-row
-    // output itself (passJoinFuzzyPairs is the high-entropy-names twin)
-    "q92_fuzzy_match" -> ((s, dir) =>
-      graft.ops.Joins.fuzzyPairsCollapsed(
-        t(s, dir, "part").select(col("p_partkey"), col("p_name"),
-          split(col("p_name"), " ").getItem(0).as("blk")),
-        "p_partkey", "p_name", "blk", 2)),
-    // wide ops-dashboard mart: daily counts + value sums per event type,
-    // type domain pinned (no discovery pass, fixed schema)
-    "q93_event_pivot" -> ((s, dir) =>
-      graft.ops.EventAnalytics.dailyTypePivot(
-        t(s, dir, "events"), "ts", "event_type", "value",
-        Seq("click", "error", "purchase", "signup", "view"))),
-    // distribution-drift fingerprint: mean/variance/skewness/kurtosis per
-    // event type from one pass of mergeable power sums
-    "q94_value_moments" -> ((s, dir) =>
-      graft.ops.Quality.momentProfile(t(s, dir, "events"), "event_type", "value")),
-    // near-dup clusters keeping the LONGEST member (curation policy), not
-    // the smallest id — per-cluster arg-max via max_by, no window sort
-    "q95_cluster_best_rep" -> ((s, dir) =>
-      Dedup.bestRepresentatives(
-        graft.core.Tables.tableRebalanced(s, dir, "documents")
-          .select("doc_id", "text"), "doc_id", "text", 3, 0.5,
-        pairGen = Some(jacPairs05(s, dir)))),
-    // train/eval split-leakage audit: per held-out doc, the share of its
-    // 3-grams that also appear in the train split
-    "q96_split_leakage" -> ((s, dir) =>
-      Dedup.splitLeakage(
-        t(s, dir, "documents").select("doc_id", "text"), "doc_id", "text", 3, 90, 0.5)),
-    // dominant principal direction by matrix-free power iteration (3 steps,
-    // one scan each; O(d) driver state) — the pre-ANN anisotropy probe
-    "q97_principal_component" -> ((s, dir) =>
-      graft.ops.Embeddings.topPrincipalComponent(
-        t(s, dir, "embeddings"), "embedding", 64, 3)),
-    // label QA: cosine of each vector to its own label's centroid, low
-    // scores flagged as suspected mislabels/corruption
-    "q98_label_outliers" -> ((s, dir) =>
-      graft.ops.Embeddings.labelOutliers(
-        t(s, dir, "embeddings"), "vec_id", "label", "embedding", 0.2)),
-    // dataset-card column profiler: per-column nulls/distincts/ranges,
-    // one pruned single-column scan each (no Expand)
-    "q99_column_profile" -> ((s, dir) =>
-      graft.ops.Quality.columnProfile(t(s, dir, "lineitem"),
-        Seq("l_orderkey", "l_suppkey", "l_quantity", "l_extendedprice",
-          "l_returnflag", "l_shipdate"))),
-    // relative curation cut: keep each source's top 30% by length — exact
-    // per-stratum quantile in one window pass
-    "q100_quantile_filter" -> ((s, dir) =>
-      Sampling.keepTopQuantile(
-        t(s, dir, "documents").select("doc_id", "source", "n_chars"),
-        "source", "n_chars", 0.3)),
-    // Efraimidis-Spirakis deterministic weighted sample: 10 docs per
-    // source, length-weighted, reproducible on any engine
-    "q101_weighted_sample" -> ((s, dir) =>
-      Sampling.weightedSample(
-        t(s, dir, "documents").select("doc_id", "source", "n_chars"),
-        "doc_id", "source", "n_chars", 10)),
-    // per-doc n-gram novelty: share of 3-grams appearing in no other doc
-    // (inverse boilerplate / memorization-risk signal)
-    "q102_novelty" -> ((s, dir) =>
-      Dedup.ngramNovelty(
-        t(s, dir, "documents").select("doc_id", "text"), "doc_id", "text", 3)),
-    // corpus version diff: old drops %11 ids, new drops %5 ids, edits %3
-    // texts, and re-keys %13 docs under shifted ids - the release-notes
-    // mart (added/removed/changed + id-churn-vs-data-churn audit)
-    "q339_corpus_diff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val old = docs.where(col("doc_id") % 11 =!= 0)
-      val edited = docs.where(col("doc_id") % 5 =!= 0)
-        .withColumn("text", when(col("doc_id") % 3 === 0,
-          concat(lit("edited "), col("text"))).otherwise(col("text")))
-      val rekeyed = docs.where(col("doc_id") % 13 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      Dedup.corpusDiff(old, edited.unionByName(rekeyed), "doc_id", "text")
-    }),
-    // equi-depth price histogram: 10 equal-count buckets with ranges —
-    // the skew-proof twin of the fixed-width q61
-    "q103_equidepth" -> ((s, dir) =>
-      graft.ops.Quality.equiDepthHistogram(
-        t(s, dir, "lineitem").select("l_extendedprice"), "l_extendedprice", 10)),
-    // point-in-time rolling features (last-5-events count/sum/mean per
-    // user) — the leak-free ML feature window
-    "q104_rolling_features" -> ((s, dir) =>
-      graft.ops.EventAnalytics.rollingFeatures(
-        t(s, dir, "events"), "user_id", "ts", "event_id", "value", 5)),
-    // first-order Markov transition counts over each user's event sequence
-    "q75_transitions" -> ((s, dir) =>
-      graft.ops.EventAnalytics.transitionCounts(
-        t(s, dir, "events"), "user_id", "ts", "event_type", "event_id")),
-    // inter-arrival gap stats per event type (exact integer-µs gaps,
-    // exact percentiles; approx twin at scale)
-    "q76_interarrival" -> ((s, dir) =>
-      graft.ops.EventAnalytics.interArrivalStats(
-        t(s, dir, "events"), "user_id", "ts", "event_type", "event_id")),
-    // data-quality audit: per-rule violation counts in ONE scan (the CHECK
-    // constraints the source schema declares, engine-side)
-    "q55_quality_audit" -> ((s, dir) => {
-      import graft.ops.Quality
-      val li = t(s, dir, "lineitem")
-      Quality.auditCounts(li, Seq(
-        Quality.Rule("qty_range", col("l_quantity") >= 1 && col("l_quantity") <= 30),
-        Quality.Rule("price_positive", col("l_extendedprice") > 0),
-        Quality.Rule("flag_domain", col("l_returnflag").isin("A", "N", "R")),
-        Quality.Rule("discount_cap", col("l_discount") <= 0.05)))
-    }),
-    // windowed time-series mart: running totals + month-over-month growth
-    // in ONE window pass (same partition/order for sum and lag)
-    "q54_revenue_trend" -> ((s, dir) =>
-      GoldMarts.sellerRevenueTrend(
-        GoldMarts.sellerPerformanceDaily(
-          GoldMarts.withDateParts(StarSchema.factOrderDetails(s, dir))))),
-    // corpus rebalancing: per-language deterministic keep-rates (downsample
-    // the dominant language, keep all of a rare one) — the language is a
-    // scan-stage Column, so the stratum table is ONE pass (round 3 joined
-    // langId output back on the id it already carried)
-    "q52_stratified_sample" -> ((s, dir) =>
-      Sampling.stratifiedSample(
-        t(s, dir, "documents").select(col("doc_id"),
-          TextStats.detectedLang(col("text")).as("detected_lang")),
-        "doc_id", "detected_lang", Seq("en" -> 40, "zh" -> 100), 70)),
-    // the full curation pipeline a training run executes, composed
-    // end-to-end: language filter ∘ quality filter ∘ near-dup removal.
-    // Both filters are pure scan-stage Columns, so eligibility is ONE pass
-    // over `documents` — no per-filter join back on the id (round 3: the
-    // join form shuffled the whole corpus twice) — and the pair generator
-    // is the banded MinHash+LSH path, so the flagship composite runs the
-    // same plan shape it would at 100 TB.
-    "q53_corpus_curation" -> ((s, dir) => {
-      // persisted: the LSH band self-join, the verify arrays, and the
-      // cluster id list all consume `eligible` — uncached, each would
-      // re-run the (expensive) language/quality scan over the full corpus.
-      // tableRebalanced: a one-file corpus drop is ONE scan partition,
-      // which would run the lang/quality/MinHash kernels on a single core;
-      // a corpus-scale scan passes through with no added shuffle
-      Dedup.dropNearDuplicates(eligibleDocs(s, dir), "doc_id", "text", 3, 0.5,
-        pairGen = Some(lshPairsEligible(s, dir)))
-    }),
-    // semi-structured payloads: schema'd from_json parse (one scan-stage
-    // projection) feeding a typed aggregate
-    "q51_json_props_agg" -> ((s, dir) => {
-      val parsed = graft.ops.SemiStructured.parseJson(
-        t(s, dir, "events").select("event_type", "props"), "props",
-        new org.apache.spark.sql.types.StructType().add("k", "int"))
-      parsed.groupBy("event_type")
-        .agg(sum(col("j.k").cast("long")).as("sum_k"), count(lit(1)).as("n"))
-    }),
-    // batch sessionization (gap = 30 min) — the window-fold oracle twin of
-    // the streaming flatMapGroupsWithState operator
-    "q41_sessionize" -> ((s, dir) =>
-      graft.streaming.EventStream.sessionizeBatch(
-        t(s, dir, "events").select("user_id", "ts"), 1800000L)),
-    // REAL event-time streaming sessionize (flatMapGroupsWithState +
-    // watermark timeout), reduced to its FINAL state: update-mode output
-    // re-emits an open session once per micro-batch it grows in, so the
-    // driver-checkable surface is the last snapshot per (user, session
-    // start) — closed rows are final by construction, open rows grow
-    // monotonically under the source's per-user event-time order. The
-    // reduced table must equal q41's batch fold exactly (the streaming
-    // CONTRACT: replay/batch parity, not just rows>0)
-    "q90_stream_sessionize" -> ((s, dir) => {
-      import s.implicits._
-      import graft.streaming.EventStream
-      val name = "bench_stream_sessions"
-      val ev = EventStream.readEventsStream(s, dir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-        .withWatermark("ts", "1 hour")
-        .as[EventStream.Event]
-      withStatePartitions(s, 8) {
-        val q = EventStream.sessionizeEventTime(ev, 1800000L)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("bench-sess-ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
-        .groupBy(col("user_id"), col("sessionStartMs").as("session_start_ms"))
-        .agg(max("nEvents").as("n_events"), max("durationMs").as("duration_ms"))
-    }),
-    // KMV-sketch cross-source overlap: the q82 scale twin. The k-minimum-
-    // values estimator is a pure function of the input SET (k smallest
-    // distinct md5s — merge-order invariant by construction), so the
-    // estimates themselves are oracle-replayable, not just their bounds
-    "q105_source_overlap_kmv" -> ((s, dir) =>
-      graft.ops.Sketches.sourceOverlapKmv(
-        graft.core.Tables.table(s, dir, "documents"), "source", "text", 3, 256)),
-    // Misra–Gries at the q120 scale point (k=100): the summary CONTENT is
-    // partitioning-dependent by nature, so the driver-checked row is the
-    // CONTRACT form (presence + undercount theorems as booleans) at the
-    // same k — the raw top-terms surface stays topTermsApprox (spec-pinned)
-    "q120_heavy_hitters_mg" -> ((s, dir) =>
-      graft.ops.Sketches.heavyHittersContract(
-        graft.core.Tables.table(s, dir, "documents"), "source", "text", 100)),
-    // the q40 as-of lookup bounded by a 7-day staleness tolerance
-    // (pandas merge_asof semantics): older matches null out, rows stay
-    "q126_asof_tolerance" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select("event_id", "ts", "user_id")
-      val ord = t(s, dir, "orders")
-        .groupBy(col("o_custkey").as("user_id"),
-          col("o_orderdate").cast("timestamp").as("order_ts"))
-        .agg(max("o_orderkey").as("last_orderkey"))
-        .withColumn("last_order_date", col("order_ts"))
-      Joins.asOfJoin(ev, ord, "user_id", "ts", "order_ts", 7L * 24 * 3600 * 1000000L)
-    }),
-    // forward as-of: each event joined to the customer's EARLIEST order
-    // at-or-after it (the "next action" lookup) — same sort-once carry,
-    // reversed walk
-    "q134_asof_forward" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select("event_id", "ts", "user_id")
-      val ord = t(s, dir, "orders")
-        .groupBy(col("o_custkey").as("user_id"),
-          col("o_orderdate").cast("timestamp").as("order_ts"))
-        .agg(max("o_orderkey").as("next_orderkey"))
-        .withColumn("next_order_date", col("order_ts"))
-      Joins.asOfJoin(ev, ord, "user_id", "ts", "order_ts",
-        direction = "forward")
-    }),
-    // nearest as-of: whichever of the prior/next order is closer in time
-    // (tie -> prior); both carries run over ONE shuffle partitioning
-    "q135_asof_nearest" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select("event_id", "ts", "user_id")
-      val ord = t(s, dir, "orders")
-        .groupBy(col("o_custkey").as("user_id"),
-          col("o_orderdate").cast("timestamp").as("order_ts"))
-        .agg(max("o_orderkey").as("near_orderkey"))
-        .withColumn("near_order_date", col("order_ts"))
-      Joins.asOfJoin(ev, ord, "user_id", "ts", "order_ts",
-        direction = "nearest")
-    }),
-    // per-label embedding centroid drift vs the global centroid — the
-    // "which slice moved in embedding space" QA number
-    "q142_centroid_drift" -> ((s, dir) =>
-      graft.ops.Embeddings.centroidDrift(
-        t(s, dir, "embeddings"), "label", "embedding")),
-    // exactly-k deterministic uniform sample: the k-prefix of the md5
-    // total order — realized size is exact, membership engine-portable
-    "q143_exact_k_sample" -> ((s, dir) =>
-      Sampling.exactKSample(
-        t(s, dir, "documents").select("doc_id", "source"), "doc_id", 100)),
-    // exactly k docs per source: map-side per-stratum k-heaps feed the
-    // one stratum-keyed exchange (WindowGroupLimit)
-    "q144_stratified_exact_k" -> ((s, dir) =>
-      Sampling.exactKPerStratum(
-        t(s, dir, "documents").select("doc_id", "source"), "doc_id", "source", 20)),
-    // mean pairwise cosine per label WITHOUT pair generation — the
-    // norm-of-sum identity over unit vectors
-    "q145_group_diversity" -> ((s, dir) =>
-      graft.ops.Embeddings.intraGroupDiversity(
-        t(s, dir, "embeddings"), "label", "embedding")),
-    // per-session ordered event-type sequences (behavioral pretraining
-    // rows) — q41's gap semantics + a total (ts, event_id) order. The
-    // Scala API returns array<string>; the driver-facing row serializes
-    // it ('|' join) because the harness comparator can't sort array cells.
-    "q146_session_sequences" -> ((s, dir) =>
-      graft.ops.EventAnalytics.sessionSequences(
-        t(s, dir, "events").select("event_id", "ts", "user_id", "event_type"),
-        "user_id", "ts", "event_id", "event_type", 1800000L)
-        .withColumn("event_seq", array_join(col("event_seq"), "|"))),
-    // crawl-extraction markup strip: comments, tags, entities (amp last),
-    // whitespace collapse — pure scan stage
-    "q147_strip_markup" -> ((s, dir) =>
-      TextStats.stripMarkup(t(s, dir, "documents"), "doc_id", "text")),
-    // Hill tail-index of the token-frequency distribution (corpus-health
-    // scalar; template spam drives alpha toward 1)
-    "q148_zipf_alpha" -> ((s, dir) =>
-      graft.ops.Corpus.zipfAlpha(t(s, dir, "documents"), "doc_id", "text", 5L)),
-    // incremental moment maintenance: per-day partials merged back to the
-    // exact global profile — oracle is q94's direct SQL
-    "q149_incremental_moments" -> ((s, dir) =>
-      graft.ops.Quality.mergeMoments(
-        graft.ops.Quality.momentPartials(
-          t(s, dir, "events"), "event_type", to_date(col("ts")), "value"),
-        "event_type")),
-    // frequency-ordered term dictionary (string-indexer ids, 1 = most
-    // frequent) via the range-exchange global rank
-    "q150_term_ids" -> ((s, dir) =>
-      graft.ops.Corpus.termIds(t(s, dir, "documents"), "doc_id", "text", 2L)),
-    // padding-bucket cost mart: power-of-two buckets, padded-token waste
-    "q151_padding_buckets" -> ((s, dir) =>
-      graft.ops.Packing.paddingBuckets(t(s, dir, "documents"), "text")),
-    // weighted-fair-queueing training tape: sched_key = source_rank/weight
-    // interleaves sources at their ratios, deterministically
-    "q152_mixture_schedule" -> ((s, dir) =>
-      Sampling.mixtureSchedule(
-        t(s, dir, "documents").select("doc_id", "source"), "doc_id", "source",
-        Seq("src0" -> 3.0, "src1" -> 1.5, "src2" -> 1.0, "src3" -> 0.5))),
-    // top-k longest docs per source via the WindowGroupLimit map-side heaps
-    "q153_topk_per_group" -> ((s, dir) =>
-      graft.ops.Layout.topKPerGroup(
-        t(s, dir, "documents").select("doc_id", "source", "n_chars"),
-        "source", "n_chars", "doc_id", 20)),
-    // RFM user snapshot at a pinned as-of date (replay-stable features)
-    "q154_user_snapshot" -> ((s, dir) =>
-      graft.ops.EventAnalytics.userSnapshot(
-        t(s, dir, "events"), "user_id", "ts", "value",
-        java.sql.Date.valueOf("2024-02-15"))),
-    // write planner: per (source, lang) partition, file counts that hit
-    // 32 KiB targets + byte shares — the skew report BEFORE the write
-    "q155_write_plan" -> ((s, dir) =>
-      graft.ops.Layout.writePlan(t(s, dir, "documents"),
-        Seq("source", "lang"), "n_chars", 32768L)),
-    // matryoshka truncation: first 8 dims, re-normalized to unit L2.
-    // Scala API keeps `tvec array<double>`; the driver-facing row
-    // explodes to (vec_id, dim, v) scalars for the harness comparator.
-    "q156_matryoshka" -> ((s, dir) =>
-      graft.ops.Embeddings.truncateRenorm(
-        t(s, dir, "embeddings"), "vec_id", "embedding", 8)
-        .select(col("vec_id"), posexplode(col("tvec")))
-        .select(col("vec_id"),
-          (col("pos") + 1).cast("long").as("dim"), col("col").as("v"))),
-    // class-balanced exact downsample: every label at the minority count
-    "q157_balance_labels" -> ((s, dir) =>
-      Sampling.balanceToMinority(
-        t(s, dir, "embeddings").select("vec_id", "label"), "vec_id", "label")),
-    // 3-step funnel view → click → purchase, strictly ordered
-    "q158_funnel_steps" -> ((s, dir) =>
-      graft.ops.EventAnalytics.funnelSteps(
-        t(s, dir, "events"), "user_id", "ts", "event_type",
-        Seq("view", "click", "purchase"))),
-    // blob GC audit: bytes held by media whose docs curation dropped
-    "q159_orphan_audit" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ops.Multimodal.orphanAudit(
-        graft.ops.Multimodal.asMediaTable(docs, "doc_id", "text", "text"),
-        docs.where(col("n_chars") >= 200), "doc_id")
-    }),
-    // coordinated 20% sample of orders ⋈ lineitem on the shared join key:
-    // referential integrity survives the sample (independent sampling
-    // would keep ~4% of the join, not 20%)
-    "q160_coordinated_sample" -> ((s, dir) => {
-      val o = Sampling.deterministicSample(t(s, dir, "orders"), "o_orderkey", 20)
-      val l = Sampling.deterministicSample(t(s, dir, "lineitem"), "l_orderkey", 20)
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_items"),
-          sum(col("l_extendedprice").cast("decimal(12,2)") *
-            (lit(1).cast("decimal(3,2)") - col("l_discount").cast("decimal(3,2)")))
-            .as("rev_d"))
-        .select(col("o_orderstatus"), col("n_items"), dbl("rev_d").as("revenue"))
-    }),
-    // per-user EWMA of event values, α = 0.25 (exactly representable)
-    "q161_ewma_snapshot" -> ((s, dir) =>
-      graft.ops.EventAnalytics.ewmaSnapshot(
-        t(s, dir, "events"), "user_id", "ts", "event_id", "value", 0.25)),
-    // winsorize event values into their exact [p05, p99] range
-    "q162_winsorize" -> ((s, dir) =>
-      graft.ops.Quality.winsorize(t(s, dir, "events"), "event_id", "value",
-        0.05, 0.99)),
-    // PageRank over the exact 3-NN cosine graph: prototype centrality
-    // (central vectors summarize their neighborhood)
-    "q163_knn_pagerank" -> ((s, dir) => {
-      val knn = Similarity.bruteForceTopK(
-        t(s, dir, "embeddings"), "vec_id", "embedding", 3)
-        .where(col("cos") > 0)
-      graft.ops.Graph.pageRank(knn, "query_id", "cand_id", "cos", 0.85, 3)
-    }),
-    // deterministic implicit-feedback negatives: 5 unseen parts per
-    // customer from a 50-part md5 pool
-    "q164_negative_samples" -> ((s, dir) => {
-      val inter = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-        .join(t(s, dir, "lineitem").select("l_orderkey", "l_partkey"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey"), col("l_partkey"))
-      Sampling.negativeSamples(inter, "o_custkey", "l_partkey",
-        t(s, dir, "part"), "p_partkey", 50, 5)
-    }),
-    // per-source KL from the corpus term distribution (add-one smoothed
-    // over the global vocabulary — a true KL, absences included)
-    "q165_source_divergence" -> ((s, dir) =>
-      graft.ops.Corpus.sourceDivergence(t(s, dir, "documents"), "text", "source")),
-    // per-doc bigram surprisal under the corpus's own add-one LM
-    // (perplexity-proxy quality filtering without an external model)
-    "q166_bigram_surprisal" -> ((s, dir) =>
-      graft.ops.Corpus.bigramSurprisal(t(s, dir, "documents"), "doc_id", "text")),
-    // semi-supervised label spread over the 3-NN cosine graph: half the
-    // labels md5-masked to null, two synchronous rounds re-derive them
-    "q167_label_spread" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val seeds = emb.select(col("vec_id"),
-        when(substring(md5(col("vec_id").cast("string")), 1, 1) < "8",
-          col("label")).as("label"))
-      val knn = Similarity.bruteForceTopK(emb, "vec_id", "embedding", 3)
-        .where(col("cos") > 0)
-      graft.ops.Graph.labelSpread(seeds, "vec_id", "label",
-        knn, "query_id", "cand_id", "cos", 2)
-    }),
-    // corpus card: token/doc counts at every (source, lang) grain with
-    // grand-total shares — pre-reduced before the cube, q48's device
-    "q140_corpus_card" -> ((s, dir) =>
-      graft.ops.Quality.corpusCard(t(s, dir, "documents"), "source", "lang",
-        size(split(col("text"), " ")))),
-    // duplication-count weights: each dedup survivor with its cluster's
-    // multiplicity (same pair machinery as q35/q71)
-    // duplication-count training weights over the BANDED LSH pair path —
-    // the q35/q43 split: the benched entry plans the 100 TB shape (the
-    // exact Σdf² generator stays reachable for the q35 oracle twin)
-    "q141_dup_weights" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Dedup.duplicationWeights(docs, "doc_id", "text", 3, 0.5,
-        pairGen = Some(lshPairs(s, dir)))
-    }),
-    // DSIR importance weights: raw pool = the whole corpus, target = the
-    // first three sources standing in for a curated reference corpus;
-    // 256 hashed-unigram buckets
-    "q136_dsir_weights" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Sampling.dsirWeights(docs,
-        docs.where(col("source").isin("src0", "src1", "src2")),
-        "doc_id", "text", 256)
-    }),
-    // retrieval-eval metrics over a deterministic ranked run: each user's
-    // events ranked by value (the "ranker"), purchases grade 2 and
-    // clicks grade 1 (the "judgments"); metrics at k = 5
-    "q137_ranking_metrics" -> ((s, dir) => {
-      val runs = t(s, dir, "events")
-        .withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
-            .orderBy(col("value").desc, col("event_id"))))
-        .withColumn("rel",
-          when(col("event_type") === "purchase", 2)
-            .when(col("event_type") === "click", 1).otherwise(0))
-      graft.ops.Corpus.rankingMetrics(runs, "user_id", "rank", "rel", 5)
-    }),
-    // group-aware k-fold: every document of a source shares a fold, so
-    // eval folds never see a training source
-    "q138_group_kfold" -> ((s, dir) =>
-      Sampling.groupKFold(
-        t(s, dir, "documents").select("doc_id", "source"), "source", 5)),
-    // semi-join reduction: bloom over the filtered suppliers' keys deletes
-    // non-matching lineitem rows before the shuffle; result == plain join
-    "q125_bloom_join" -> ((s, dir) => {
-      val big = t(s, dir, "lineitem").select(
-        col("l_suppkey").as("suppkey"), col("l_orderkey"), col("l_linenumber"),
-        col("l_quantity").cast("double").as("quantity"))
-      val small = t(s, dir, "supplier").where(col("s_nationkey") < 5)
-        .select(col("s_suppkey").as("suppkey"), col("s_name"))
-      Joins.bloomSemiReducedJoin(big, small, "suppkey", 1000L)
-    }),
-    // concurrent-session pairs: interval-overlap self-join over the
-    // sessionizer's output, banded by hour — equi-join on the time
-    // bucket, never an inequality nested loop
-    "q124_session_overlap" -> ((s, dir) => {
-      val sess = graft.streaming.EventStream.sessionizeBatch(
-        t(s, dir, "events").select("user_id", "ts"), 1800000L)
-        .select(format_string("%d#%d", col("user_id"),
-          unix_micros(col("session_start"))).as("sid"),
-          col("session_start"), col("session_end"))
-      // band sized to the measured session-length profile (p50 < 1 min):
-      // 5 min keeps each session in 1-2 bands while holding band
-      // population ~10x lower than the 1 h band (pairs are band-invariant)
-      Joins.intervalOverlapPairs(sess, "sid",
-        "session_start", "session_end", 300000L)
-    }),
-    // exact per-group distribution mart (the sketch variant's oracle twin)
-    "q45_percentiles" -> ((s, dir) =>
-      graft.ops.Sketches.percentilesExact(
-        t(s, dir, "lineitem").select(col("l_returnflag"),
-          col("l_quantity").cast("double").as("qty")),
-        Seq("l_returnflag"), "qty")),
-    // salted skew join == plain join row-for-row (oracle is the unsalted SQL)
-    "q42_salted_join" -> ((s, dir) => {
-      val big = t(s, dir, "lineitem").select(
-        col("l_suppkey").as("suppkey"), col("l_orderkey"), col("l_linenumber"),
-        col("l_quantity").cast("double").as("quantity"))
-      val small = t(s, dir, "supplier").select(
-        col("s_suppkey").as("suppkey"), col("s_name"), col("s_nationkey"))
-      Joins.saltedEquiJoin(big, small, "suppkey", 8)
-    }),
-    // ---- text analysis (§7.6) ----
-    "q27_lang_id" -> ((s, dir) =>
-      TextStats.langId(t(s, dir, "documents"), "doc_id", "text")),
-    "q28_text_quality" -> ((s, dir) =>
-      TextStats.qualityFeatures(t(s, dir, "documents"), "doc_id", "text")),
-    "q29_token_counts" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextStats.tokenCount(col("text")).as("n_ws_tokens"),
-        TextStats.bpeishTokenCount(col("text")).as("n_bpeish_tokens"))),
-    "q30_fingerprints" -> ((s, dir) =>
-      TextStats.fingerprints(t(s, dir, "documents"), "doc_id", "text")),
-    // character-entropy quality proxy (low = repeated filler, high =
-    // noise): one native-kernel pass, zero shuffle
-    "q119_char_entropy" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        round(graft.functions.TextFunctions.charEntropy(col("text")), 6)
-          .as("char_entropy"))),
-    // Unicode NFC canonicalization ahead of hashing/dedup — visually equal
-    // text must hash equal; one native-kernel pass, zero shuffle
-    "q127_nfc_normalize" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        graft.functions.TextFunctions.nfcNormalize(col("text")).as("text_nfc"))),
-    // token-budget mixture plan: whitespace token counts per source, a
-    // 50/30/20 target mix over three sources, 1M-token budget — the
-    // epochs column is the over-repetition signal mixture designers watch
-    "q113_token_budget_plan" -> ((s, dir) =>
-      Sampling.tokenBudgetPlan(
-        t(s, dir, "documents")
-          .select(col("source"), TextStats.tokenCount(col("text")).as("n_tok")),
-        "source", "n_tok",
-        Seq("src0" -> 50.0, "src1" -> 30.0, "src2" -> 20.0), 1000000L)),
-    // span-level exact-duplicate detection: maximal token spans whose every
-    // 3-gram occurs ≥2 times corpus-wide — the exact-substring-dedup
-    // primitive (document-level near-dup keeps both copies of a page that
-    // merely shares a boilerplate paragraph; this finds the paragraph)
-    "q114_repeated_spans" -> ((s, dir) =>
-      Dedup.repeatedSpans(
-        graft.core.Tables.tableRebalanced(s, dir, "documents")
-          .select("doc_id", "text"), "doc_id", "text", 3)),
-    // the removal step over the same spans: splice out every token covered
-    // by a corpus-repeated 3-gram, keep full cardinality (n_dropped = 0 for
-    // untouched docs, clean_text = '' for fully-boilerplate ones)
-    "q115_remove_repeated_spans" -> ((s, dir) =>
-      Dedup.removeRepeatedSpans(
-        graft.core.Tables.tableRebalanced(s, dir, "documents")
-          .select("doc_id", "text"), "doc_id", "text", 3)),
-    // semantic decontamination: corpus embeddings vs a broadcast eval set
-    // (every 25th vector), flagged at max-cosine ≥ 0.30 — the paraphrase-
-    // level leak check the n-gram probe (q73) can't see
-    "q112_semantic_contamination" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      graft.ops.Embeddings.semanticContamination(
-        emb.where(col("vec_id") % 25 =!= 0), emb.where(col("vec_id") % 25 === 0),
-        "vec_id", "embedding", 0.30)
-    }),
-    // corpus-frequency boilerplate removal at word granularity (the test
-    // corpus has no newlines; production runs sep="\n" for line-level) —
-    // segments in >390 of the docs are dropped, survivors keep their order
-    "q111_boilerplate_segments" -> ((s, dir) =>
-      TextStats.removeCommonSegments(t(s, dir, "documents"), "doc_id", "text", " ", 390L)),
-    // ---- multimodal plumbing (§7.6; decode is a stub, metadata is real) ----
-    "q31_multimodal_meta" -> ((s, dir) =>
-      Multimodal.metadataOnly(
-        Multimodal.asMediaTable(t(s, dir, "documents"), "doc_id", "text", "text"))),
-    "q32_multimodal_decode" -> ((s, dir) =>
-      Multimodal.fakeDecode(s, Multimodal.asMediaTable(
-        t(s, dir, "documents"), "doc_id", "text", "text")).toDF()),
-    // perceptual near-dup over the BINARY column: decode (stub) → SimHash-64
-    // over content 4-grams → banded bucket join → Hamming ≤ 12 verify —
-    // the image-dedup shape with the media dropped in at the decode slot.
-    // Band count is SCALE-ADAPTIVE as registered (Multimodal.
-    // recommendedBands: width from the occupancy rule rounded to a
-    // power of two, bands = 64/width ∈ {16,8,4}) — the SCALE10X remedy
-    // for the frozen 8-band calibration that ran 22.5× on a 10× corpus.
-    // At sf0.1 (5k docs) this derives the same 8×8-bit plan the frozen
-    // entry shipped; the oracle mirrors the arithmetic from count(*).
-    // tableRebalanced: the fingerprint kernel is the CPU hot spot and a
-    // single-file corpus arrives as ONE scan partition (the documented
-    // single-core pitfall; no-op at real scale)
-    "q336_perceptual_neardup" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      // radius DERIVED since r11 (tierRadius "text64" — the legacy tier
-      // joins the rule the 128-bit family carries; lands at the
-      // historical 12 wherever density is affordable)
-      tierPairs(s, dir, "text64")
-    }),
-    // REAL container decode in the decode slot (not the md5-feature stub):
-    // synthesize byte-correct RIFF/WAVE PCM16 payloads (samples from the
-    // row's md5 chain so the oracle replays them WITHOUT byte parsing),
-    // then parse them back with an actual RIFF parser — magic checks,
-    // little-endian header fields, a sample fold to exact-integer
-    // features. MP3/FLAC decoders drop into the same mapPartitions slot.
-    "q346_wav_decode" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.decodeWav(s,
-        Multimodal.synthesizeWav(s, docs, "doc_id", "text", 32, 16000))
-    }),
-    // the image twin: byte-correct binary Netpbm P6 payloads (ASCII
-    // header + md5-chain RGB planes), decoded by a real header parser +
-    // channel-sum fold; JPEG/PNG decoders drop into the same slot
-    "q347_ppm_decode" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.decodePpm(s,
-        Multimodal.synthesizePpm(s, docs, "doc_id", "text", 4, 4))
-    }),
-    // CONTAINER-TRUE perceptual near-dup (VERDICT r7 #1): the fingerprint
-    // input is REAL DECODED PIXELS, not the utf-8 stub — synthesize a
-    // binary Netpbm P6 per row whose 16-byte pixel blocks sample the
-    // text's words (block j keys md5 on word ⌊j·nWords/12⌋, so texts
-    // differing in a few words decode to images differing in a few
-    // blocks — the local-edit structure a perceptual hash exists to
-    // capture), parse it back with the real P6 parser, fingerprint the
-    // decoded per-pixel luma grid, band-join on the SimHash. Since r9 the
-    // chain rides the 128-BIT tier (VERDICT r8 #1: the measured width-cap
-    // remedy — threshold 24/128, the same 3/16 proportional radius as the
-    // old 12/64; width derived by the {4,8,16,32} rule). The md5-chain
-    // synthesis keeps every pixel byte — and therefore every fingerprint
-    // bit — oracle-replayable WITHOUT byte parsing (the q346/q347 device).
-    "q348_ppm_neardup_real" -> ((s, dir) => tierPairs(s, dir, "ppm")),
-    // the container-true chain's recall contract (q337's device over real
-    // decoded pixels, at 128 bits): banded pairs vs the exact Hamming
-    // pair set at the same adaptive width, subset pinned TRUE
-    "q349_ppm_recall_real" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.perceptualRecallContract128On(tierFps(s, dir, "ppm"),
-        Multimodal.recommendedWidth128(cachedCount(s, dir, "documents")(docs)),
-        tierRadius(s, dir, "ppm"),
-        bandedGen = Some(tierPairs(s, dir, "ppm")))
-    }),
-    // the audio twin of q348 (VERDICT r7 #1 asked for "luma grid / PCM
-    // samples" — this is the PCM half): word-sampled RIFF/WAVE PCM16
-    // synthesis, REAL RIFF parse back to the signed sample stream,
-    // SimHash-128 over the decoded samples, banded Hamming pairs
-    "q352_wav_neardup_real" -> ((s, dir) => tierPairs(s, dir, "wav")),
-    // its recall contract (q349's device over decoded PCM)
-    "q353_wav_recall_real" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.perceptualRecallContract128On(tierFps(s, dir, "wav"),
-        Multimodal.recommendedWidth128(cachedCount(s, dir, "documents")(docs)),
-        tierRadius(s, dir, "wav"),
-        bandedGen = Some(tierPairs(s, dir, "wav")))
-    }),
-    // REAL frame-sampled VIDEO decode — the temporal member of the
-    // container-true family (q346 audio, q347 image): synthesize a real
-    // YUV4MPEG2 C444 stream per row (8 frames of 4×4, word-sampled
-    // md5-chain planes), parse it back with the byte-level Y4M parser
-    // sampling every 2nd frame, and emit each sampled frame's decoded
-    // luma grid — every plane byte oracle-replayable without byte parsing
-    "q354_y4m_frame_sample" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.y4mLumaFrames(s,
-        Multimodal.synthesizeY4mFromWords(s, docs, "doc_id", "text", 4, 4, 8), 2)
-    }),
-    // FRAME-ALIGNED video near-dup: per-sampled-frame SimHash-128 over
-    // the REAL decoded luma grids, banded Hamming join with the frame
-    // index in the band key (a frame only vouches for its temporal
-    // counterpart), then videos pair when ≥ 2 of their 4 sampled frames
-    // match — the temporal composition of the q348 chain; band width
-    // derives from the sampled-frame row count (4·|documents|). THE
-    // query VERDICT r8 measured the 64-bit width cap on (306.7 s /
-    // 453.9 M noise pairs at 100×): it now rides the 128-bit tier
-    "q355_y4m_neardup_real" -> ((s, dir) => tierPairs(s, dir, "y4m")),
-    // scene-change (shot-boundary) detection: Hamming delta between
-    // consecutive sampled-frame fingerprints of the same video, cut when
-    // > 32 of 128 bits flip (the old 16/64 radius, proportionally) —
-    // composes with the same fingerprint frame
-    "q356_y4m_scene_change" -> ((s, dir) =>
-      Multimodal.videoSceneChanges128(tierFps(s, dir, "y4m"), 2, 32)),
-    // streaming EMBEDDING ingest with inline ANN rejection (q110's
-    // embedding twin): two ordered micro-batches of vectors, each
-    // sign-LSH-checked against the standing side (fixed even-id corpus
-    // plus batch-1 survivors when batch 2 arrives), exact-cosine verify,
-    // survivors appended exactly once — the ingestion-time semantic-dedup
-    // composition, oracled as the same two-stage chain in SQL
-    "q366_stream_ann_ingest" -> ((s, dir) => {
-      import graft.streaming.EventStream
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val corpus = emb.where(col("vec_id") % 2 === 0)
-      val n = cachedCount(s, dir, "embeddings_even")(corpus)
-      val tmp = java.nio.file.Files.createTempDirectory("q366-ann").toString
-      val srcDir = new java.io.File(s"$tmp/drops"); srcDir.mkdirs()
-      def drop(df: DataFrame, name: String, modTime: Long): Unit = {
-        val stage = s"$tmp/stage_$name"
-        df.coalesce(1).write.parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(srcDir, s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(modTime)
-      }
-      drop(emb.where(pmod(col("vec_id"), lit(4)) === 1), "b0", 1000000L)
-      drop(emb.where(pmod(col("vec_id"), lit(4)) === 3), "b1", 2000000L)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("basePath", srcDir.toString)
-        .parquet(s"$srcDir/*.parquet")
-      val store = new graft.sources.TableStore(s)
-      withStatePartitions(s, 8) {
-        // recalib: the library's own occupancy rule, re-applied at
-        // decade milestones of the STANDING count (VERDICT r10 #1 —
-        // bootstrap-pinned calibration drifts under-banded forever)
-        val q = EventStream.streamAnnDedupedIngest(stream, corpus, store,
-          s"$tmp/vectors", "vec_id", "embedding", 0.3,
-          graft.ops.Similarity.recommendedBits(n),
-          graft.ops.Similarity.recommendedBands(n, 64), s"$tmp/ckpt",
-          recalib = Some(m => (graft.ops.Similarity.recommendedBits(m),
-            graft.ops.Similarity.recommendedBands(m, 64))))
-        q.awaitTermination()
-      }
-      store.read(s"$tmp/vectors").select("vec_id")
-    }),
-    // the ANN gate's INTRA-BATCH flag demonstrated (q370's embedding
-    // twin): ONE micro-batch of vectors with mutual near-dups,
-    // intraBatch = true — banded self-pairs → connected components →
-    // min-id representatives BEFORE the standing join. Oracled as the
-    // same chain (recursive closure over cosine-verified self-pairs,
-    // then the corpus cross-check over reps only)
-    "q371_stream_ann_intra_batch" -> ((s, dir) => {
-      import graft.streaming.EventStream
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val corpus = emb.where(col("vec_id") % 2 === 0)
-      val n = cachedCount(s, dir, "embeddings_even")(corpus)
-      val tmp = java.nio.file.Files.createTempDirectory("q371-intra").toString
-      val srcDir = new java.io.File(s"$tmp/drops"); srcDir.mkdirs()
-      val stage = s"$tmp/stage_b0"
-      emb.where(col("vec_id") % 2 === 1).coalesce(1).write.parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(srcDir, "b0.parquet").toPath)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("basePath", srcDir.toString)
-        .parquet(s"$srcDir/*.parquet")
-      val store = new graft.sources.TableStore(s)
-      withStatePartitions(s, 8) {
-        val q = EventStream.streamAnnDedupedIngest(stream, corpus, store,
-          s"$tmp/vectors", "vec_id", "embedding", 0.3,
-          graft.ops.Similarity.recommendedBits(n),
-          graft.ops.Similarity.recommendedBands(n, 64), s"$tmp/ckpt",
-          intraBatch = true,
-          recalib = Some(m => (graft.ops.Similarity.recommendedBits(m),
-            graft.ops.Similarity.recommendedBands(m, 64))))
-        q.awaitTermination()
-      }
-      store.read(s"$tmp/vectors").select("vec_id")
-    }),
-    // 128-BIT perceptual near-dup — the measured width-cap remedy: the
-    // 64-bit tier's bands max out at 16-bit buckets (q336 read 18×/decade
-    // at 100×, q355 25× — occupancy grows past ~10⁶ items), while 128
-    // bits admit 32-bit bands whose occupancy stays bounded through ~10⁹
-    // items at the same ≥ 4-band recall floor. Same SimHash votes, same
-    // md5 (the full 16-byte digest instead of half), every bit replayed
-    "q364_perceptual128_neardup" -> ((s, dir) => tierPairs(s, dir, "text")),
-    // its recall contract (q337's device at 128 bits, at the SAME
-    // derived radius as q364 — cap 24, the 3/16 proportional default)
-    "q365_perceptual128_recall" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.perceptualRecallContract128On(tierFps(s, dir, "text"),
-        Multimodal.recommendedWidth128(cachedCount(s, dir, "documents")(docs)),
-        tierRadius(s, dir, "text"),
-        bandedGen = Some(tierPairs(s, dir, "text")))
-    }),
-    // the VIDEO tier's recall ledger (VERDICT r8 task 6 — the width
-    // rule's recall price contract-checked on the modality where the
-    // 64-bit cap actually bound): frame-aligned banded pairs at the
-    // derived width vs the exact frame-aligned judge, both on the
-    // deterministic 1-in-5 video subsample (the production shape of a
-    // recall audit — the exact judge shrinks 25×, the ratio estimate
-    // stands); subset pinned TRUE
-    "q367_video128_recall" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.videoRecallContract128(tierFps(s, dir, "y4m"),
-        Multimodal.recommendedWidth128(4L * cachedCount(s, dir, "documents")(docs)),
-        tierRadius(s, dir, "y4m_sub5"), 2, 5)
-    }),
-    // LOSSY-codec (JPEG) ingest contract — the format class whose decode
-    // CANNOT be SQL-replayed (DCT output is decoder-defined): real JDK
-    // JPEG encode of the md5-chain grid, then the dual-decode device —
-    // dims preserved, two independent encode+decode lineages
-    // bit-identical, and mean |decoded − reference| per channel ≤ 72 —
-    // measured 40.5–60.25 (avg 48.2) on md5-noise images, JPEG's
-    // worst-case content, vs 85 for DECODE-PRODUCED-GARBAGE (mean |Δ| of
-    // two independent uniform bytes), so the bound separates a working
-    // codec from a broken one with margin on both sides — all
-    // engine-measured, oracle-pinned booleans
-    "q368_jpeg_lossy_contract" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.jpegLossyContract(s, docs, "doc_id", "text", 8, 8, 72.0)
-    }),
-    // the RADIUS DECISION made auditable (VERDICT r9 #4): the banded
-    // pair-density sweep behind the derived verify radius — exact
-    // id-pair counts per grid radius from ONE banded join over DISTINCT
-    // fingerprints (multiplicity products, no expansion), with the
-    // chosen operating point flagged. The oracle replays rule and
-    // counts (psw/prad), so a drifting radius is a hash mismatch
-    "q369_hamming_radius_sweep" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      val n = cachedCount(s, dir, "documents")(docs)
-      val sweep = graft.core.CacheRegistry.persist(
-        Multimodal.hammingRadiusSweep128(tierFps(s, dir, "text"),
-          Multimodal.recommendedWidth128(n), Seq(8, 12, 16, 20, 24)))
-      val rr = sweep.agg(coalesce(
-        max(when(col("n_pairs") <= lit(16.0 * n), col("radius"))),
-        lit(8)).as("__rr"))
-      sweep.crossJoin(rr).select(col("radius"), col("n_pairs"),
-        (col("radius") === col("__rr")).as("chosen"))
-    }),
-    // the TEXT GATE'S JACCARD FLOOR priced the way the verify radius was
-    // (VERDICT r10 task 6): ONE banded candidate pass over the q110
-    // corpus/batch split (MinHash 4×3, unthresholded verify), then pairs
-    // kept and DISTINCT batch rows dropped per candidate floor — the
-    // gate's 0.5 operating point flagged as the chosen row. A drifting
-    // floor (or drifting pair density under it) is a hash mismatch
-    "q372_text_threshold_sweep" -> ((s, dir) => {
-      import s.implicits._
-      val docs = t(s, dir, "documents")
-      val corpus = docs.where(col("doc_id") % 2 === 0).select("doc_id", "text")
-      val batch = docs.where(pmod(col("doc_id"), lit(4)) === 1)
-        .select("doc_id", "text")
-      val cand = graft.core.CacheRegistry.persist(
-        Dedup.minHashLshPairsAcross(corpus, batch, "doc_id", "text",
-          3, 4, 3, 0.0))
-      val grid = Seq(0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9).toDF("threshold")
-      grid.join(cand, col("jaccard") >= col("threshold"), "left")
-        .groupBy("threshold")
-        .agg(count(col("jaccard")).as("n_pairs"),
-          countDistinct(col("batch_id")).as("n_dropped"))
-        .select(col("threshold"), col("n_pairs"), col("n_dropped"),
-          (col("threshold") === lit(0.5)).as("chosen"))
-    }),
-    // the ANN GATE'S COSINE THRESHOLD priced the same way: ONE sign-LSH
-    // candidate pass at the gate's own calibration (bits/bands from the
-    // corpus count) over the q366 corpus/batch-1 split, exact cosines
-    // computed once, then pairs kept and batch rows dropped per
-    // threshold cut — the 0.3 operating point flagged
-    "q373_ann_threshold_sweep" -> ((s, dir) => {
-      import s.implicits._
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val corpus = emb.where(col("vec_id") % 2 === 0)
-      val batch = emb.where(pmod(col("vec_id"), lit(4)) === 1)
-      val n = cachedCount(s, dir, "embeddings_even")(corpus)
-      val cand = graft.core.CacheRegistry.persist(
-        Similarity.lshNearDupPairsAcross(corpus, batch, "vec_id", "embedding",
-          -1.0, Similarity.recommendedBits(n), Similarity.recommendedBands(n, 64)))
-      val grid = Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9).toDF("threshold")
-      grid.join(cand, col("cos") >= col("threshold"), "left")
-        .groupBy("threshold")
-        .agg(count(col("cos")).as("n_pairs"),
-          countDistinct(col("batch_id")).as("n_dropped"))
-        .select(col("threshold"), col("n_pairs"), col("n_dropped"),
-          (col("threshold") === lit(0.3)).as("chosen"))
-    }),
-    // PII redaction (the C4/CCNet scrub step): every 5th document gains
-    // a deterministic md5-derived email + IPv4 (so the oracle plants the
-    // IDENTICAL bytes), then emails and IPs are replaced with typed
-    // placeholders and counted — every replacement and count replayed
-    "q363_pii_redact" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-        .where(col("text").isNotNull)
-      val hEmail = md5(concat(col("doc_id").cast("string"), lit(":pii")))
-      val hIp = md5(concat(col("doc_id").cast("string"), lit(":pip")))
-      def oct(i: Int) = conv(substring(hIp, 2 * i + 1, 2), 16, 10)
-      val planted = docs.select(col("doc_id"),
-        when(col("doc_id") % 5 === 0,
-          concat(col("text"), lit(" contact "),
-            substring(hEmail, 1, 8), lit("@example.com from "),
-            concat_ws(".", oct(0), oct(1), oct(2), oct(3))))
-          .otherwise(col("text")).as("text"))
-      graft.ops.TextStats.piiRedact(planted, "doc_id", "text")
-    }),
-    // image RESIZE (the decode/feature-extract/resize/frame-sample
-    // quartet's last member): real P6 parse, then 2×2 box-sum downsample
-    // to a 4×4 grid in exact integer arithmetic — every output cell
-    // replayed by the oracle from the ':pximg:' chain
-    "q362_image_resize" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.resizePpmLuma(s,
-        Multimodal.synthesizePpmFromWords(s, docs, "doc_id", "text", 8, 8), 2)
-    }),
-    // TRIMODAL consensus dedup — the capstone of the container-true
-    // family: the image (real P6 decode, q348), audio (real RIFF parse,
-    // q352), and video (frame-sampled Y4M, q355) near-dup pair sets vote;
-    // a pair is a consensus duplicate when ≥ 2 of the 3 REAL-decoded
-    // modalities agree, and single-modality hits stay visible as the
-    // curation signal (re-encode, caption swap) they are
-    "q361_trimodal_consensus" -> ((s, dir) => {
-      val img = tierPairs(s, dir, "ppm").select("id_a", "id_b")
-      val aud = tierPairs(s, dir, "wav").select("id_a", "id_b")
-      val vid = tierPairs(s, dir, "y4m").select("id_a", "id_b")
-      Multimodal.modalityVote(
-        Seq("image" -> img, "audio" -> aud, "video" -> vid), 2)
-    }),
-    // compressed-TEXT ingestion: gzip every document into a real RFC-1952
-    // blob, inflate it back through the JDK codec, and run the first
-    // curation steps (char/word counts) on the DECODED content — the
-    // oracle reads the original text directly, so the row hashing pins
-    // the decompress-then-curate chain lossless end to end
-    "q360_gzip_ingest" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.gunzipContent(s,
-          Multimodal.gzipPayloads(s, docs, "doc_id", "text"))
-        .select(col("id"), col("content"),
-          length(col("content")).cast("long").as("n_chars"),
-          size(split(col("content"), " ", -1)).cast("long").as("n_words"))
-    }),
-    // ENTROPY-CODED decode through the REAL JDK codec: synthesize a real
-    // PNG per row (IHDR/IDAT/IEND, DEFLATE-compressed — the format class
-    // VERDICT r7 filed as sandbox-blocked; javax.imageio ships in every
-    // JDK), decode it back with ImageIO, fold exact channel sums. PNG is
-    // lossless, so the decoded pixels replay from the md5 chain exactly
-    "q357_png_decode" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.decodeImage(s,
-        Multimodal.synthesizePngFromWords(s, docs, "doc_id", "text", 8, 8))
-    }),
-    // codec-true perceptual near-dup: the q348 chain with the raw P6
-    // container swapped for compressed PNG and the byte-level parser
-    // swapped for the real codec — 128-bit fingerprints of
-    // DEFLATE-decoded pixels
-    "q358_png_neardup_real" -> ((s, dir) => tierPairs(s, dir, "png")),
-    // its recall contract (q349's device over codec-decoded pixels)
-    "q359_png_recall_real" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.perceptualRecallContract128On(tierFps(s, dir, "png"),
-        Multimodal.recommendedWidth128(cachedCount(s, dir, "documents")(docs)),
-        tierRadius(s, dir, "png"),
-        bandedGen = Some(tierPairs(s, dir, "png")))
-    }),
-    // the banded perceptual path's recall vs the exact Hamming pair set,
-    // driver-checked (the q217 contract device for the media tier), at
-    // the same adaptive band count q336 registers
-    "q337_perceptual_recall" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.perceptualRecallContractOn(tierFps(s, dir, "text64"),
-        Multimodal.recommendedBands(cachedCount(s, dir, "documents")(docs)),
-        tierRadius(s, dir, "text64"),
-        bandedGen = Some(tierPairs(s, dir, "text64")))
-    }),
-    // paired-modality consensus: text near-dups x perceptual near-dups on
-    // the normalized pair key - both-agree is the high-confidence drop set
-    "q338_crossmodal_consensus" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Multimodal.crossModalConsensus(
-        // jaccard rides UNROUNDED: both engines divide identical integer
-        // operands (the q21 parity device), so the doubles already match
-        jacPairs05(s, dir),
-        "id_a", "id_b", "jaccard",
-        tierPairs(s, dir, "text64"),
-        "id_a", "id_b", "hamming")
-    }),
-    // ---- write-side / streaming operators, driver-visible (§7.6) ----
-    // JSONL export round-trip: write the corpus as content-sharded JSONL,
-    // read the shards BACK, and oracle every (shard, row) against the md5
-    // shard assignment — proving payloads survive the JSON round-trip and
-    // membership is content-derived, not writer-dependent
-    "q106_jsonl_export" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text", "source")
-      val out = java.nio.file.Files.createTempDirectory("q106-export").toString
-      // jsonlShards writes eagerly; its manifest is read via count()
-      graft.sources.Export.jsonlShards(s, docs, "doc_id", out, 8).count()
-      s.read.schema(docs.schema).json(out)
-        .select(col("shard").cast("long").as("shard"),
-          col("doc_id"), col("text"), col("source"))
-    }),
-    // drained stream-stream interval join (click→purchase attribution):
-    // the streaming twin of the banded range join, oracled against the
-    // plain inequality join — inner-join semantics make the drained result
-    // exactly the batch answer
-    "q107_stream_interval_join" -> ((s, dir) => {
-      import graft.streaming.EventStream
-      import org.apache.spark.sql.streaming.Trigger
-      val clicks = EventStream.readEventsStream(s, dir)
-        .where(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("click_ts"))
-      val purchases = EventStream.readEventsStream(s, dir)
-        .where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("purchase_ts"))
-      val name = "q107_interval_join"
-      withStatePartitions(s, 8) {
-        val q = EventStream.intervalJoinStream(clicks, purchases, "user_id",
-            "click_ts", "purchase_ts", "24 hours", "1 hour")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("q107-ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
-    }),
-    // sliding-window stream: 1-hour windows every 15 minutes, drained in
-    // complete mode so the watermark-suppressed tail windows emit too;
-    // the oracle re-derives the 4-window-per-event fan-out with
-    // epoch-aligned buckets
-    "q168_stream_sliding_counts" -> ((s, dir) => {
-      import graft.streaming.EventStream
-      import org.apache.spark.sql.streaming.Trigger
-      val name = "q168_sliding"
-      withStatePartitions(s, 8) {
-        val q = EventStream.slidingCounts(
-            EventStream.readEventsStream(s, dir).withWatermark("ts", "1 hour"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("q168-ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
-    }),
-    // sorted ("smart") batching cost table: length-ordered batches of 32
-    // docs, each padded to its own max — near-zero waste off boundaries
-    "q194_sorted_batches" -> ((s, dir) =>
-      graft.ops.Packing.sortedBatches(
-        t(s, dir, "documents").select("doc_id", "text"), "doc_id", "text", 32)),
-    // per-source bigram entropy/perplexity: the synthetic-data diversity
-    // gauge (template expansion craters it before dedup notices)
-    "q195_bigram_entropy" -> ((s, dir) =>
-      graft.ops.Corpus.bigramEntropy(t(s, dir, "documents"), "source", "text")),
-    // KMV cardinality contract: deterministic md5 estimator replayed by
-    // the oracle, |est − exact| ≤ 5σ·exact/√(k−2) as a checked row
-    "q196_kmv_bound" -> ((s, dir) =>
-      graft.ops.Sketches.kmvCardinalityContract(
-        t(s, dir, "documents"), "source", "text", 3, 256, 5.0)),
-    // Misra–Gries contract: the MG(5) presence + undercount theorems as
-    // booleans the oracle pins to TRUE for every partitioning
-    "q197_mg_bound" -> ((s, dir) =>
-      graft.ops.Sketches.heavyHittersContract(
-        t(s, dir, "documents"), "source", "text", 5)),
-    // GK-quantile contract: percentile_approx's rank guarantee checked
-    // per (event_type, p); oracle recomputes n and pins the boolean
-    "q198_quantile_bound" -> ((s, dir) =>
-      graft.ops.Sketches.quantileRankContract(
-        t(s, dir, "events"), "event_type", "value",
-        Seq(0.5, 0.9, 0.99), 100)),
-    // HLL++ contract: approx_count_distinct within 5 rsd of exact
-    "q199_hll_bound" -> ((s, dir) =>
-      graft.ops.Sketches.hllBoundContract(
-        t(s, dir, "events"), "event_type", "event_id", 0.05, 5.0)),
-    // Poisson-bootstrap CI for the per-type mean value — the distributed
-    // bootstrap (per-row Poisson(1) weights per replicate, md5-derived)
-    // tableRebalanced: the 100x replicate fan-out inherits the scan's
-    // partitioning — a one-file events drop would run every md5 draw on
-    // a single core (no-op at scale)
-    "q201_bootstrap_ci" -> ((s, dir) =>
-      graft.ops.Quality.bootstrapMeanCi(
-        graft.core.Tables.tableRebalanced(s, dir, "events"),
-        "event_type", "event_id", "value", 100, 0.05)),
-    // Welch A/B readout over an md5 user split: per event_type, the
-    // treatment-control value delta with the unpooled z-interval
-    "q202_ab_welch" -> ((s, dir) => {
-      val variant = when(pmod(conv(substring(md5(col("user_id").cast("string")),
-        1, 8), 16, 10).cast("long"), lit(2)) === 0, "a").otherwise("b")
-      graft.ops.Quality.welchAbTest(
-        t(s, dir, "events").withColumn("variant", variant),
-        "event_type", "variant", "value", "a", "b")
-    }),
-    // incremental batch-vs-corpus EMBEDDING near-dup (the semantic twin
-    // of q49's text version): even vec_ids are the standing corpus, odd
-    // the arriving batch; sign-LSH banded candidates, exact-cosine verify
-    // bits SCALE-ADAPTIVE from the STANDING CORPUS's count (the side whose
-    // band table persists and whose occupancy the candidate join pays;
-    // the batch is transient) — mirrored in the oracle from the same
-    // even-id filter
-    "q200_embed_dedup_across" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val corpus = emb.where(col("vec_id") % 2 === 0)
-      val n = cachedCount(s, dir, "embeddings_even")(corpus)
-      Similarity.lshNearDupPairsAcross(
-        corpus, emb.where(col("vec_id") % 2 === 1),
-        "vec_id", "embedding", 0.3,
-        Similarity.recommendedBits(n), Similarity.recommendedBands(n, 64))
-    }),
-    // directional containment pairs: short docs covered ≥80% by another
-    // doc's shingles — the quote/excerpt detector Jaccard misses
-    "q191_containment_pairs" -> ((s, dir) =>
-      Dedup.containmentPairs(
-        t(s, dir, "documents").select("doc_id", "text"), "doc_id", "text",
-        3, 0.8, 80)),
-    // term burstiness: VMR of per-doc tf among containing docs — content
-    // words clump, function/template words spread Poisson-ish
-    "q192_term_burstiness" -> ((s, dir) =>
-      graft.ops.Corpus.termBurstiness(t(s, dir, "documents"), "doc_id", "text", 5)),
-    // market-basket rules over (user, day) baskets of event types:
-    // confidence and lift for co-present activity pairs
-    "q193_basket_rules" -> ((s, dir) =>
-      graft.ops.EventAnalytics.basketRules(
-        t(s, dir, "events").withColumn("day", to_date(col("ts"))),
-        Seq("user_id", "day"), "event_type")),
-    // per-class precision/recall/F1 against a deterministic noisy
-    // predictor (hex digits 0-2 → ~19% of events mislabeled as 'click')
-    "q189_classification_report" -> ((s, dir) =>
-      graft.ops.Quality.classificationReport(
-        t(s, dir, "events").withColumn("pred",
-          when(substring(md5(col("event_id").cast("string")), 1, 1) < "3",
-            lit("click")).otherwise(col("event_type"))),
-        "event_type", "pred")),
-    // daily PSI curve vs the first day's value distribution — drift
-    // observability over time, not one two-snapshot compare
-    "q190_psi_timeline" -> ((s, dir) =>
-      graft.ops.Quality.psiTimeline(t(s, dir, "events"), "ts", "value",
-        0.0, 250.0, 20)),
-    // k-center greedy coreset: 6 farthest-point-traversal picks over the
-    // embedding space (diverse subset / eval-probe selection)
-    "q188_kcenter_coreset" -> ((s, dir) =>
-      Similarity.kCenterCoreset(t(s, dir, "embeddings"), "vec_id", "embedding", 6)),
-    // MMR diverse re-rank against vec 1's embedding: greedy
-    // λ·rel − (1−λ)·max-sim-to-selected, 5 picks (pure top-k would
-    // return near-copies of the best hit)
-    "q203_mmr_rerank" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val qv = emb.where(col("vec_id") === 1)
-        .select("embedding").head().getSeq[Float](0)
-      Similarity.mmrRerank(
-        emb.where(col("vec_id") =!= 1), "vec_id", "embedding", qv, 5, 0.7)
-    }),
-    // leave-one-out smoothed target encoding of event_type by value —
-    // the leakage-safe categorical feature (a row never sees its own
-    // label; m=20 pseudo-rows shrink rare keys toward the prior)
-    "q204_target_encoding" -> ((s, dir) =>
-      graft.ops.Quality.targetEncoding(
-        t(s, dir, "events"), "event_type", "event_id", "value", 20.0)),
-    // pairwise Pearson matrix over the lineitem numerics in ONE pass —
-    // the feature-redundancy audit (near-±1 pairs are duplicate signals)
-    "q205_corr_matrix" -> ((s, dir) =>
-      graft.ops.Quality.correlationMatrix(
-        t(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))),
-    // cohort LTV curve: cumulative value per cohort user by age week —
-    // q70 retention's value axis (equal-age cohort comparison)
-    // Kaplan-Meier survival curve on the hazard table's daily grain:
-    // S(d) via exp(cumsum ln(1-h)) in ascending-day order (engine-exact)
-    "q226_survival_curve" -> ((s, dir) =>
-      graft.ops.EventAnalytics.survivalCurve(t(s, dir, "events"), "user_id",
-        "ts", java.sql.Date.valueOf("2024-02-01"), 7)),
-    // CUPED variance reduction with md5-deterministic variants; the ALL
-    // row carries the in-sample never-worse contract (var_adj <= var_post)
-    "q227_cuped" -> ((s, dir) =>
-      graft.ops.EventAnalytics.cupedLift(t(s, dir, "events"), "user_id",
-        "ts", "value", java.sql.Date.valueOf("2024-01-16"))),
-    // day-of-week seasonal profile + per-type seasonal strength
-    // (1 - var(residual)/var(daily)) over the pre-reduced daily series
-    "q228_dow_profile" -> ((s, dir) =>
-      graft.ops.EventAnalytics.dowProfile(t(s, dir, "events"), "event_type",
-        "ts", "value")),
-    // epsilon-DP group counts under deterministic inverse-CDF Laplace
-    // noise keyed on md5(group) - replay-stable release, no fresh-noise
-    // averaging attack surface
-    "q229_dp_counts" -> ((s, dir) =>
-      graft.ops.Quality.dpNoisedCounts(t(s, dir, "documents"),
-        Seq("source", "lang"), 1.0)),
-    // weight-of-evidence + information value of order priority vs the
-    // fulfilled flag (add-half smoothing; exact integer shares)
-    "q230_woe_iv" -> ((s, dir) =>
-      graft.ops.Quality.woeIv(
-        t(s, dir, "orders").withColumn("is_f",
-          (col("o_orderstatus") === "F").cast("int")),
-        "o_orderpriority", "is_f")),
-    // full-batch logistic regression, 3 unrolled GD rounds on z-scored
-    // features, 6 dp weight re-round per round (engine-exact trajectory)
-    "q231_logistic_gd" -> ((s, dir) =>
-      graft.ops.Learn.logisticGd(
-        t(s, dir, "events")
-          .withColumn("y", (col("event_type") === "purchase").cast("int"))
-          .withColumn("hr", hour(col("ts")).cast("double")),
-        Seq("value", "hr"), "y", 0.5, 3)),
-    // simplified (centroid-based) silhouette per k-means cell: the
-    // clustering-quality gate for the SemDeDup/IVF cells
-    "q232_silhouette" -> ((s, dir) =>
-      Similarity.silhouette(t(s, dir, "embeddings"), "vec_id", "embedding",
-        8, 2)),
-    // Gopher-style hard-filter rule mart: each named rule its own flag
-    // plus the conjunction — which rule killed a doc stays visible
-    "q233_gopher_rules" -> ((s, dir) =>
-      TextStats.gopherRules(t(s, dir, "documents"), "doc_id", "text")),
-    // chi-squared term-label association over q170's contingency grid:
-    // the second filter-feature-selection score (rare-but-exclusive
-    // terms weight harder than under MI)
-    "q234_chi2_terms" -> ((s, dir) =>
-      graft.ops.Corpus.termLabelChi2(t(s, dir, "documents"), "text", "lang", 5)),
-    // nearest-class-mean holdout evaluation: per-label train centroids,
-    // 20% held-out assignment, confusion mart — the embedding/label
-    // quality gate next to q232's geometry-only silhouette
-    "q235_centroid_eval" -> ((s, dir) =>
-      graft.ops.Learn.nearestCentroidEval(
-        t(s, dir, "embeddings"), "vec_id", "embedding", "label", 5)),
-    // split-conformal coverage contract: the distribution-free >= 90%
-    // interval guarantee measured on the deterministic holdout and
-    // pinned as a boolean (the sketch-contract family, for uncertainty)
-    "q236_conformal_coverage" -> ((s, dir) =>
-      graft.ops.Learn.conformalCoverage(
-        t(s, dir, "events"), "event_id", "event_type", "value", 0.9, 5)),
-    // seasonal-naive (lag-7) daily-value backtest vs the lag-1 baseline:
-    // MASE < 1 is the "weekly seasonality is real" forecast gate
-    "q237_seasonal_backtest" -> ((s, dir) =>
-      graft.ops.EventAnalytics.seasonalBacktest(
-        t(s, dir, "events"), "event_type", "ts", "value", 7)),
-    // MinHash estimator-error contract: per verified candidate pair, the
-    // signature-agreement estimate pinned inside the 5-sigma Bernoulli
-    // band around exact Jaccard (q217 checks recall; this checks the
-    // ESTIMATE itself — a salt/slot bug flips `within` on real pairs)
-    "q238_minhash_bound" -> ((s, dir) =>
-      Dedup.minHashEstimateContract(
-        t(s, dir, "documents").select("doc_id", "text"),
-        "doc_id", "text", 3, 4, 3, 0.2)),
-    // zone-map skip-ratio audit: what a sort layout buys a min/max-
-    // pruning scan, measured per predicate BEFORE paying for the re-sort
-    "q239_zonemap_audit" -> ((s, dir) =>
-      graft.ops.Layout.zoneMapAudit(
-        t(s, dir, "documents").select("doc_id", "n_chars"),
-        "doc_id", "n_chars", 50,
-        Seq((0.0, 150.0), (200.0, 260.0), (400.0, 2000.0)))),
-    // incremental mart CONTRACT: key-parity split partials, merged and
-    // finalized, must equal the oracle's full recompute on every exact
-    // metric; the HLL customer estimate within its analytic band
-    "q240_incremental_mart" -> ((s, dir) =>
-      graft.etl.IncrementalMart.incrementalMartContract(
-        t(s, dir, "orders"), pmod(col("o_orderkey"), lit(2)) === 0)),
-    // sort-key advisor: exact cross-column zone-map pricing of candidate
-    // layouts against a probe workload, BEFORE paying for any re-sort
-    "q241_sortkey_advisor" -> ((s, dir) =>
-      graft.ops.Layout.sortKeyAdvisor(
-        t(s, dir, "lineitem").select(
-          (col("l_orderkey") * 8 + col("l_linenumber")).as("rid"),
-          col("l_orderkey"), col("l_extendedprice")),
-        "rid", Seq("l_orderkey", "l_extendedprice"),
-        Seq(("l_orderkey", 1000.0, 4000.0),
-          ("l_orderkey", 100000.0, 140000.0),
-          ("l_extendedprice", 1000.0, 2000.0),
-          ("l_extendedprice", 90000.0, 105000.0)), 64)),
-    // Benford first-digit audit of the revenue column (string-derived
-    // digit grid — exact; only the shares round)
-    "q242_benford_audit" -> ((s, dir) =>
-      graft.ops.Quality.benfordAudit(t(s, dir, "lineitem"),
-        "l_extendedprice")),
-    // Flesch / FK-grade readability mart: pure scan-stage run counting
-    "q243_readability" -> ((s, dir) =>
-      graft.ops.TextStats.readability(
-        t(s, dir, "documents"), "doc_id", "text")),
-    // interpolated Kneser-Ney bigram LM over the corpus's own counts:
-    // continuation-count smoothing, top-50 bigrams by count
-    "q244_kneser_ney" -> ((s, dir) =>
-      graft.ops.Corpus.kneserNeyBigrams(t(s, dir, "documents"), "text", 50)),
-    // streaming twin of q240: the mart maintained by per-micro-batch
-    // partial merges over three ordered drops must equal the batch
-    // oracle's full recompute - the replay-safe no-rescan ingest shape
-    "q245_stream_mart_merge" -> ((s, dir) => {
-      import graft.streaming.EventStream
-      val o = t(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
-      val tmp = java.nio.file.Files.createTempDirectory("q245-mart").toString
-      val srcDir = new java.io.File(s"$tmp/drops"); srcDir.mkdirs()
-      def drop(df: DataFrame, name: String, modTime: Long): Unit = {
-        val stage = s"$tmp/stage_$name"
-        df.coalesce(1).write.parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(srcDir, s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(modTime)
-      }
-      drop(o.where(pmod(col("o_orderkey"), lit(3)) === 0), "b0", 1000000L)
-      drop(o.where(pmod(col("o_orderkey"), lit(3)) === 1), "b1", 2000000L)
-      drop(o.where(pmod(col("o_orderkey"), lit(3)) === 2), "b2", 3000000L)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("basePath", srcDir.toString)
-        .parquet(s"$srcDir/*.parquet")
-      val store = new graft.sources.TableStore(s)
-      val q = EventStream.streamMartMerge(stream, store, s"$tmp/mart",
-        s"$tmp/ckpt")
-      q.awaitTermination()
-      graft.etl.IncrementalMart.martWithContract(store.read(s"$tmp/mart"), o)
-    }),
-    // sequential-pattern support: "some a precedes some b" per user via
-    // the min/max-timestamp reduction - never event x event
-    "q246_seq_patterns" -> ((s, dir) =>
-      graft.ops.EventAnalytics.sequentialPairs(
-        t(s, dir, "events"), "user_id", "ts", "event_type")),
-    // Cohen's kappa between the true type and q189's deterministic noisy
-    // rater (~19% of events md5-flipped to 'click') - labeling QA
-    "q247_cohens_kappa" -> ((s, dir) =>
-      graft.ops.Quality.cohensKappa(
-        t(s, dir, "events").withColumn("pred",
-          when(substring(md5(col("event_id").cast("string")), 1, 1) < "3",
-            lit("click")).otherwise(col("event_type"))),
-        "event_type", "pred")),
-    // gains/lift table over score deciles (rank-div buckets, exact
-    // integer ratios) - the targeting readout next to q187's ROC-AUC
-    "q248_gains_table" -> ((s, dir) =>
-      graft.ops.Quality.gainsTable(
-        t(s, dir, "events").withColumn("lbl", col("user_id") % 2 === 0),
-        "event_id", "value", "lbl", 10)),
-    // tokenizer losslessness: q215's learned merges must concatenate
-    // back to every original word - the oracle RE-DERIVES each token
-    // list through the same five replayed training rounds
-    "q249_bpe_roundtrip" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = graft.ops.Corpus.bpeTrain(docs, "text", 5)
-        .orderBy("step").select("left", "right")
-        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      graft.ops.Corpus.bpeRoundTrip(docs, "doc_id", "text", merges)
-    }),
-    // dedup savings: what the LSH drop actually buys per source, in
-    // documents AND tokens - the curation run's budget line
-    "q262_dedup_savings" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      val kept = Dedup.dropNearDuplicates(docs, "doc_id", "text", 3, 0.5,
-        pairGen = Some(lshPairs(s, dir)))
-      Dedup.dedupSavings(docs, kept, "doc_id", "text", "source")
-    }),
-    // bitext-style margin mining: banded LSH candidates across the
-    // parity-split pools, hubness-cancelling margin, mutual-argmax pairs
-    "q263_margin_mates" -> ((s, dir) =>
-      Similarity.marginMates(
-        t(s, dir, "embeddings").withColumn("side",
-          when(col("vec_id") % 2 === 0, "even").otherwise("odd")),
-        "vec_id", "embedding", "side", 3, 8, 3)),
-    // tokenizer-budget design curve: token coverage and OOV rate at each
-    // candidate vocab size, off one corpus scan + the bounded vocab rank
-    "q264_vocab_coverage" -> ((s, dir) =>
-      graft.ops.Corpus.vocabCoverage(t(s, dir, "documents"), "doc_id",
-        "text", Seq(100, 500, 1000, 2000, 4000))),
-    // unbiased pass@k over the event log: user = task, purchase =
-    // success; the combinatorial estimator, not the biased first-k cut
-    "q265_pass_at_k" -> ((s, dir) =>
-      graft.ops.Quality.passAtK(
-        t(s, dir, "events").withColumn("ok",
-          col("event_type") === "purchase"),
-        "user_id", "ok", Seq(1, 5, 10))),
-    // corpus-planning pair to q264: Chao1 richness floor + Good-Turing
-    // unseen mass off one frequency-of-frequencies reduce
-    "q266_vocab_richness" -> ((s, dir) =>
-      graft.ops.Corpus.vocabRichness(t(s, dir, "documents"), "doc_id",
-        "text")),
-    // Fleiss' kappa over a deterministic 5-event panel per user (panel
-    // picked by event_id - a total order both engines replay; users with
-    // fewer than 5 events drop out inside the operator)
-    "q267_fleiss_kappa" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("event_id")
-      graft.ops.Quality.fleissKappa(
-        t(s, dir, "events")
-          .withColumn("__r", row_number().over(w)).where(col("__r") <= 5),
-        "user_id", "event_type", 5)
-    }),
-    // arena-style Bradley-Terry supplier ranking from within-order
-    // ship-speed duels (earlier l_shipdate wins; ties and same-supplier
-    // pairs excluded), 3 unrolled MM rounds with micro-integer sums
-    "q268_bradley_terry" -> ((s, dir) => {
-      // one ship-year of duels: the arena estimator needs a season, not
-      // the full history (the operator itself is O(pair-grid)/iteration)
-      val li = t(s, dir, "lineitem")
-        .where(col("l_shipdate").between("1995-01-01", "1995-12-31"))
-      val a = li.select(col("l_orderkey"), col("l_linenumber").as("ln_a"),
-        col("l_suppkey").as("sup_a"), col("l_shipdate").as("d_a"))
-      val b = li.select(col("l_orderkey"), col("l_linenumber").as("ln_b"),
-        col("l_suppkey").as("sup_b"), col("l_shipdate").as("d_b"))
-      val duels = a.join(b, Seq("l_orderkey"))
-        .where(col("ln_a") < col("ln_b") && col("sup_a") =!= col("sup_b") &&
-          col("d_a") =!= col("d_b"))
-        .select(
-          when(col("d_a") < col("d_b"), col("sup_a")).otherwise(col("sup_b"))
-            .as("winner"),
-          when(col("d_a") < col("d_b"), col("sup_b")).otherwise(col("sup_a"))
-            .as("loser"))
-      graft.ops.Learn.bradleyTerry(duels, "winner", "loser", 3)
-    }),
-    // context-length design curve: docs cut and tokens lost at each
-    // candidate window - one scan, exact integer sums
-    "q270_truncation_loss" -> ((s, dir) =>
-      graft.ops.Chunking.truncationLoss(t(s, dir, "documents"), "doc_id",
-        "text", Seq(128, 256, 512, 1024, 2048))),
-    // Krippendorff's alpha over VARYING panel sizes (<= 7 events per
-    // user, any user with >= 2 pairable) - the missing-data agreement
-    // coefficient q267's fixed-panel Fleiss cannot express
-    "q271_krippendorff" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("event_id")
-      graft.ops.Quality.krippendorffAlpha(
-        t(s, dir, "events")
-          .withColumn("__r", row_number().over(w)).where(col("__r") <= 7),
-        "user_id", "event_type")
-    }),
-    // Murphy decomposition of the Brier score over the q173 forecast:
-    // calibration error vs discrimination vs base rate, residual
-    // within-bin variance emitted explicitly
-    "q272_brier_decomposition" -> ((s, dir) =>
-      graft.ops.Quality.brierDecomposition(
-        t(s, dir, "events")
-          .withColumn("score", least(lit(1.0), col("value") / 250.0))
-          .withColumn("converted", col("event_type") === "purchase"),
-        "score", "converted", 10)),
-    // Kish effective sample size of the q136 DSIR reweighting - the
-    // did-the-weights-collapse-the-corpus gauge
-    "q273_importance_ess" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ops.Sampling.importanceEss(
-        Sampling.dsirWeights(docs,
-          docs.where(col("source").isin("src0", "src1", "src2")),
-          "doc_id", "text", 256),
-        "log_weight")
-    }),
-    // rank-based two-sample test: per-nation Mann-Whitney U of order
-    // totals, BUILDING vs MACHINERY segments (+ Cliff's delta effect size)
-    "q274_mann_whitney" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"), col("o_totalprice"))
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
-      graft.ops.Quality.mannWhitneyU(
-        o.join(c, col("o_custkey") === col("c_custkey")),
-        "c_nationkey", "c_mktsegment", "o_totalprice",
-        "BUILDING", "MACHINERY")
-    }),
-    // distribution-free drift pair: per event type, KS D and Wasserstein-1
-    // between weekday and weekend value distributions
-    "q275_ecdf_distance" -> ((s, dir) =>
-      graft.ops.Quality.ecdfDistance(
-        t(s, dir, "events").withColumn("daytype",
-          when(dayofweek(col("ts")).isin(1, 7), "weekend")
-            .otherwise("weekday")),
-        "event_type", "daytype", "value", "weekday", "weekend")),
-    // PR-curve summary of the q173 forecast: threshold-free average
-    // precision (step integral over distinct scores, tie-exact)
-    "q276_average_precision" -> ((s, dir) =>
-      graft.ops.Quality.averagePrecision(
-        t(s, dir, "events")
-          .withColumn("score", least(lit(1.0), col("value") / 250.0))
-          .withColumn("converted", col("event_type") === "purchase"),
-        "score", "converted")),
-    // corpus-composition inequality: per-source Gini of document token
-    // counts - the long-doc concentration gauge before packing
-    "q277_token_gini" -> ((s, dir) =>
-      graft.ops.Quality.giniIndex(
-        t(s, dir, "documents").select(col("source"),
-          size(split(col("text"), " ")).cast("long").as("n_tokens")),
-        "source", "n_tokens")),
-    // paired classifier comparison: q189's md5-noise rater vs a
-    // value-threshold rater on the SAME events - only discordants count
-    "q278_mcnemar" -> ((s, dir) =>
-      graft.ops.Quality.mcNemar(
-        t(s, dir, "events")
-          .withColumn("pred_a",
-            when(substring(md5(col("event_id").cast("string")), 1, 1) < "3",
-              lit("click")).otherwise(col("event_type")))
-          .withColumn("pred_b",
-            when(col("value") > 125.0, lit("purchase"))
-              .otherwise(lit("click"))),
-        "event_type", "pred_a", "pred_b")),
-    // q187's AUC with the DeLong sampling-noise CI - placements exact
-    // off the distinct-score histogram
-    "q279_auc_delong" -> ((s, dir) =>
-      graft.ops.Quality.rocAucDelong(
-        t(s, dir, "events")
-          .withColumn("score", least(lit(1.0), col("value") / 250.0))
-          .withColumn("converted", col("event_type") === "purchase"),
-        "score", "converted")),
-    // experiment-planning readout: per-nation minimum detectable effect
-    // at the CURRENT cohort sizes (95% conf / 80% power)
-    "q280_mde" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"), col("o_totalprice"))
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
-      graft.ops.Quality.mdePower(
-        o.join(c, col("o_custkey") === col("c_custkey")),
-        "c_nationkey", "c_mktsegment", "o_totalprice",
-        "BUILDING", "MACHINERY")
-    }),
-    // is the daily stream bursty beyond Poisson? index-of-dispersion
-    // test on zero-filled daily counts per event type
-    "q294_overdispersion" -> ((s, dir) =>
-      graft.ops.EventAnalytics.overdispersionTest(
-        t(s, dir, "events"), "event_type", "ts")),
-    // do the first eight users RANK event types the same way by spend?
-    // Kendall's W over strict (score desc, type asc) ranks
-    "q301_kendalls_w" -> ((s, dir) =>
-      graft.ops.Quality.kendallsW(
-        t(s, dir, "events").where(col("user_id") <= 8)
-          .groupBy(col("user_id"), col("event_type"))
-          .agg(round(sum("value"), 6).as("score")),
-        "user_id", "event_type", "score")),
-    // does ANY market segment's mean order value differ, per nation? one
-    // F + eta-sq before 10 pairwise t-tests inflate the false-positive rate
-    "q302_anova_f" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"), col("o_totalprice"))
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
-      graft.ops.Quality.anovaF(
-        o.join(c, col("o_custkey") === col("c_custkey")),
-        "c_nationkey", "c_mktsegment", "o_totalprice")
-    }),
-    // distribution-free day-of-week location test per event type: does
-    // value shift by weekday? (heavy-tail-safe twin of the ANOVA)
-    "q303_kruskal_wallis" -> ((s, dir) =>
-      graft.ops.Quality.kruskalWallis(
-        t(s, dir, "events").where(col("ts").isNotNull)
-          .select(col("event_type"), dayofweek(col("ts")).as("dow"),
-            col("value")),
-        "event_type", "dow", "value")),
-    // are segment spreads EQUAL within a nation? Brown-Forsythe on
-    // |value - segment median| - the q302 pooled-variance precondition
-    "q304_levene_bf" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"), col("o_totalprice"))
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
-      graft.ops.Quality.brownForsythe(
-        o.join(c, col("o_custkey") === col("c_custkey")),
-        "c_nationkey", "c_mktsegment", "o_totalprice")
-    }),
-    // publish gate over lineitem: seven declarative expectations in one
-    // scan pass (+ one exact-distinct pass), mixed pass/fail on purpose
-    "q305_expectations" -> ((s, dir) => {
-      import graft.ops.Quality.Expect._
-      graft.ops.Quality.expectations(t(s, dir, "lineitem"), Seq(
-        Complete("l_orderkey"),
-        ValuesBetween("l_quantity", 1.0, 50.0),
-        ValuesBetween("l_discount", 0.0, 0.05, 0.9),
-        MatchesRegex("l_linestatus", "^[OF]$"),
-        ValuesIn("l_returnflag", Seq("A", "N", "R")),
-        Unique("l_orderkey"),
-        RowCountBetween(1L, 10000000L),
-        MeanBetween("l_extendedprice", 20000.0, 60000.0)))
-    }),
-    // vocabulary-growth planning: Heaps' V(n)=K*n^beta over 8 corpus
-    // checkpoints - "what does 10x more data buy the tokenizer?"
-    "q306_heaps_law" -> ((s, dir) =>
-      graft.ops.Corpus.heapsLaw(t(s, dir, "documents"), "doc_id", "text", 8)),
-    // rollout readout without random assignment: difference-in-
-    // differences per event type (even-user cohort treated, post Feb 1)
-    "q307_did" -> ((s, dir) =>
-      graft.ops.Quality.didEstimator(
-        t(s, dir, "events").where(col("ts").isNotNull)
-          .withColumn("treated", col("user_id") % 2 === 0)
-          .withColumn("post",
-            col("ts") >= to_timestamp(lit("2024-02-01 00:00:00"))),
-        "event_type", "treated", "post", "value")),
-    // causal readout when assignment wasn't random: propensity-weighted
-    // (Hajek) treatment-effect of the AUTOMOBILE segment on order value,
-    // controlling for account balance via the replayable GD propensity
-    "q308_ipw_ate" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"), col("o_totalprice"))
-      val c = t(s, dir, "customer").where(col("c_mktsegment").isNotNull)
-        .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
-      graft.ops.Learn.ipwAte(
-        o.join(c, col("o_custkey") === col("c_custkey"))
-          .withColumn("treated", col("c_mktsegment") === "AUTOMOBILE"),
-        Seq("c_acctbal"), "treated", "o_totalprice", 0.5, 3)
-    }),
-    // annotation-QA for SCORE-valued ratings: interval Krippendorff's
-    // alpha over each user's repeated event values (intra-user agreement)
-    "q309_krippendorff_interval" -> ((s, dir) =>
-      graft.ops.Quality.krippendorffAlphaInterval(
-        t(s, dir, "events"), "user_id", "value")),
-    // binning-free distribution shift: each source's doc-length ECDF vs
-    // the corpus, as an exact earth-mover distance in chars
-    "q310_wasserstein_shift" -> ((s, dir) =>
-      graft.ops.Quality.wasserstein1(
-        t(s, dir, "documents"), "source", "n_chars")),
-    // is q152's training tape actually mixed? runs-test z over the
-    // scheduled source order (no global window - rank + adjacency join)
-    "q311_tape_mixing" -> ((s, dir) =>
-      Sampling.tapeMixingAudit(
-        Sampling.mixtureSchedule(
-          t(s, dir, "documents").select("doc_id", "source"), "doc_id",
-          "source",
-          Seq("src0" -> 3.0, "src1" -> 1.5, "src2" -> 1.0, "src3" -> 0.5)),
-        "sched_key", "doc_id", "source")),
-    // long-tail loss reweighting by effective sample count (Cui et al.):
-    // per label, eff_n and the k-normalized class weight
-    "q312_class_weights" -> ((s, dir) =>
-      graft.ops.Learn.classBalancedWeights(
-        t(s, dir, "embeddings"), "label", 0.999)),
-    // which examples are easy/hard/ambiguous? training-dynamics map over
-    // the q289 GD trajectory's per-round snapshots (dataset cartography)
-    "q313_data_cartography" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .where(col("source").isin("src0", "src1") &&
-          col("n_chars").isNotNull && col("text").isNotNull)
-        .withColumn("is_src1",
-          (col("source") === "src1").cast("double"))
-        .withColumn("n_tokens", size(split(col("text"), " ")).cast("double"))
-      graft.ops.Learn.dataCartography(docs, Seq("n_chars", "n_tokens"),
-        "is_src1", 0.5, 3)
-    }),
-    // how much is 10x more data worth? centroid-model accuracy at nested
-    // md5 training fractions + the power-law error extrapolation
-    "q314_learning_curve" -> ((s, dir) =>
-      graft.ops.Learn.learningCurve(
-        t(s, dir, "embeddings"), "vec_id", "embedding", "label", 5)),
-    // the q310 remediation: per-source decile <-> corpus decile map
-    // (quantile mapping / CDF matching), exact order statistics
-    "q315_quantile_mapping" -> ((s, dir) =>
-      graft.ops.Quality.quantileMapping(
-        t(s, dir, "documents"), "source", "n_chars", 10)),
-    // stylometry drift: Burrows' Delta over the top-50 terms - which
-    // source writes furthest from the house style
-    "q316_burrows_delta" -> ((s, dir) =>
-      graft.ops.Corpus.burrowsDelta(
-        t(s, dir, "documents"), "doc_id", "text", "source", 50)),
-    // which labels are WRONG? confident-learning joint over out-of-sample
-    // centroid scores: off-diagonal rows are the estimated noise mass
-    "q317_label_noise" -> ((s, dir) =>
-      graft.ops.Learn.confidentLearning(
-        t(s, dir, "embeddings"), "vec_id", "embedding", "label", 5)),
-    // assumption-free A/B p-value: 200 md5-deterministic re-randomizations
-    // of the q202 split, add-one tail share of |diff| re-reaches
-    "q318_permutation_test" -> ((s, dir) => {
-      val variant = when(pmod(conv(substring(md5(col("user_id").cast("string")),
-        1, 8), 16, 10).cast("long"), lit(2)) === 0, "a").otherwise("b")
-      graft.ops.Quality.permutationTest(
-        t(s, dir, "events").withColumn("variant", variant),
-        "event_id", "variant", "value", "a", "b", 200)
-    }),
-    // peek-safe daily experiment readout: mSPRT always-valid p over the
-    // day-ordered prefix, monotone significance
-    "q319_msprt" -> ((s, dir) => {
-      val variant = when(pmod(conv(substring(md5(col("user_id").cast("string")),
-        1, 8), 16, 10).cast("long"), lit(2)) === 0, "a").otherwise("b")
-      graft.ops.Quality.msprtSequential(
-        t(s, dir, "events").withColumn("variant", variant),
-        to_date(col("ts")), "variant", "value", "a", "b", 0.1)
-    }),
-    // do two quality signals pick the same corpus head? rank-biased
-    // overlap of the length-rank vs entropy-rank top-50 per source
-    "q320_rbo" -> ((s, dir) =>
-      graft.ops.Corpus.rboOverlap(
-        t(s, dir, "documents"), "source", "doc_id",
-        col("n_chars").cast("double"),
-        round(graft.functions.TextFunctions.charEntropy(col("text")), 6),
-        50)),
-    // monotone recalibration MAP (not just the q173 diagnosis): closed-
-    // form PAV minimax over the same clamped bins
-    "q321_isotonic_calibration" -> ((s, dir) =>
-      graft.ops.Quality.isotonicCalibration(
-        t(s, dir, "events")
-          .withColumn("score", least(lit(1.0), col("value") / 250.0))
-          .withColumn("converted", col("event_type") === "purchase"),
-        "score", "converted", 10)),
-    // which 20 examples get labeled next: smallest best-vs-second-best
-    // centroid margin, at most 5 per nearest-centroid cell
-    "q322_active_learning" -> ((s, dir) =>
-      graft.ops.Learn.activeLearningBatch(
-        t(s, dir, "embeddings"), "vec_id", "embedding", "label", 5, 20, 5)),
-    // is duplication within-source or cross-source? Newman modularity of
-    // the LSH near-dup pair graph under the source partition
-    "q323_dup_modularity" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      graft.ops.Graph.modularity(lshPairs(s, dir),
-        "id_a", "id_b", docs.select("doc_id", "source"), "doc_id", "source")
-    }),
-    // homogeneity-attack audit: k-anonymous cohorts (q131) can still
-    // leak when < 3 distinct balance bands appear inside them
-    "q324_l_diversity" -> ((s, dir) =>
-      graft.ops.Quality.lDiversityAudit(
-        t(s, dir, "customer").withColumn("bal_band",
-          floor(col("c_acctbal") / 1000).cast("long")),
-        Seq("c_nationkey", "c_mktsegment"), "bal_band", 3L)),
-    // duplication-aware split: near-dup CLUSTERS are the split unit, so
-    // zero pairs straddle train/test (the naive leak count shows what a
-    // per-doc split would have contaminated)
-    "q325_cluster_safe_split" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      graft.ops.Sampling.clusterSafeSplit(
-        docs.select("doc_id"), "doc_id",
-        // banded LSH pairGen: the benched composition consumes the scale
-        // path's pair table (q141 precedent; exact stays oracle-reachable)
-        lshPairs(s, dir), "id_a", "id_b", 0.2)
-    }),
-    // is the corpus big enough for the budget? Chinchilla-optimal
-    // params/tokens per FLOP budget vs the exact corpus token count
-    "q326_chinchilla_plan" -> ((s, dir) =>
-      graft.ops.Corpus.chinchillaPlan(t(s, dir, "documents"), "text",
-        Seq(1e18, 1e19, 1e20, 1e21, 1e22, 1e23))),
-    // label-free embedding outliers: 1 - (3rd-NN cosine) within the
-    // vector's IVF cell - the q83 cell machinery, pointed at isolation
-    "q327_knn_outliers" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfKthNnOutliers(emb, "vec_id", "embedding",
-        Similarity.recommendedCells(cachedCount(s, dir, "embeddings")(emb)), 2, 3,
-        assignedGen = Some(kmeansAssigned(s, dir)))
-    }),
-    // how heavy is the value tail per event type? Hill index over the
-    // top-50 order statistics; alpha < 2 means infinite variance
-    "q328_hill_tail" -> ((s, dir) =>
-      graft.ops.Quality.hillTailIndex(
-        t(s, dir, "events"), "event_type", "value", 50)),
-    // which Jaccard cut to dedup at: one pair table generated at 0.1,
-    // swept across the whole threshold grid as a broadcast re-filter
-    "q329_threshold_sweep" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Dedup.thresholdSweep(
-        Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.1),
-        "id_a", "id_b", "jaccard",
-        Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9))
-    }),
-    // trend + weekly seasonal + residual split of the daily value series,
-    // anomalies gated at 3x the residual MAD
-    "q330_seasonal_decompose" -> ((s, dir) =>
-      graft.ops.EventAnalytics.seasonalDecompose(
-        t(s, dir, "events"), "ts", "value", 3.0)),
-    // is the recorded lang column trustworthy? per-source confusion grid
-    // of recorded vs detected language + source purity
-    "q331_lang_purity" -> ((s, dir) =>
-      TextStats.langPurity(t(s, dir, "documents"), "text", "lang", "source")),
-    // data-driven credit: Markov removal effects over the touch chain
-    // (12 unrolled absorption rounds on one pivoted row)
-    "q332_markov_attribution" -> ((s, dir) =>
-      graft.ops.EventAnalytics.markovAttribution(
-        t(s, dir, "events"), "user_id", "ts", "event_id", "event_type",
-        "purchase", Seq("view", "click", "signup"), 12)),
-    // the privacy triad's third leg: each cohort's balance distribution
-    // vs the table's, rank-grid EMD in [0,1], flagged over t = 0.2
-    "q333_t_closeness" -> ((s, dir) =>
-      graft.ops.Quality.tCloseness(
-        t(s, dir, "customer").withColumn("cohort",
-          concat_ws("|", col("c_nationkey"), col("c_mktsegment"))),
-        "cohort", "c_acctbal", 0.2)),
-    // corpus keywords: PageRank centrality over the +-2-token word
-    // co-occurrence graph (TextRank), top 50
-    "q334_textrank" -> ((s, dir) =>
-      graft.ops.Corpus.textRank(t(s, dir, "documents"), "text", 2,
-        0.85, 3, 50)),
-    // contrastive (anchor, positive, negative) pairs with the
-    // dup-cluster false-negative guard on the md5-drawn negatives
-    "q335_contrastive_pairs" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Sampling.contrastivePairs(docs.select("doc_id"), "doc_id",
-        // banded LSH pairGen (q141 precedent): positives come from the
-        // scale path's verified pair table
-        lshPairs(s, dir), "id_a", "id_b", 50, 3)
-    }),
-    // unit-free effect magnitude per nation: Hedges-corrected Cohen's d
-    // with the conventional small/medium/large bands
-    "q300_effect_size" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"), col("o_totalprice"))
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
-      graft.ops.Quality.effectSize(
-        o.join(c, col("o_custkey") === col("c_custkey")),
-        "c_nationkey", "c_mktsegment", "o_totalprice",
-        "BUILDING", "MACHINERY")
-    }),
-    // distribution-free median CI per type: binomial order-statistic
-    // ranks off the cumulative value histogram, no normality assumed
-    "q298_median_ci" -> ((s, dir) =>
-      graft.ops.Quality.medianCi(t(s, dir, "events"), "event_type",
-        "value")),
-    // normality gate per type: Jarque-Bera off one five-partial moment
-    // pass - the precondition audit for any z-interval on the column
-    "q299_jarque_bera" -> ((s, dir) =>
-      graft.ops.Quality.jarqueBera(t(s, dir, "events"), "event_type",
-        "value")),
-    // periodicity as a number: daily-count ACF at lags 1/7/14 per type
-    // (r7 high = day-of-week structure, r1 high = burst carry-over)
-    "q295_autocorrelation" -> ((s, dir) =>
-      graft.ops.EventAnalytics.dailyAutocorrelation(
-        t(s, dir, "events"), "event_type", "ts", Seq(1, 7, 14))),
-    // mixture-bias alarm: does the pooled urgent-rate difference point
-    // the same way as every per-nation difference?
-    "q296_simpson_check" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"),
-        (col("o_orderpriority") === "1-URGENT").as("urgent"))
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
-      graft.ops.Quality.simpsonCheck(
-        o.join(c, col("o_custkey") === col("c_custkey")),
-        "c_nationkey", "c_mktsegment", "urgent", "BUILDING", "MACHINERY")
-    }),
-    // in-engine regression: closed-form ridge of extended price on
-    // (quantity, discount) via 3x3 Cramer over exact micro moments
-    "q293_ridge" -> ((s, dir) =>
-      graft.ops.Learn.ridgeClosedForm(
-        t(s, dir, "lineitem"), "l_quantity", "l_discount",
-        "l_extendedprice", 1.0)),
-    // is the per-(user,type) arrival process Poisson? one-sample KS of
-    // inter-arrival gaps vs the fitted exponential, per event type
-    "q292_exponential_gof" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id", "event_type")
-        .orderBy(col("ts"), col("event_id"))
-      val gaps = t(s, dir, "events")
-        .withColumn("gap_s",
-          (unix_micros(col("ts")) -
-            unix_micros(lag(col("ts"), 1).over(w))).cast("double") / 1e6)
-        .where(col("gap_s").isNotNull)
-      graft.ops.Quality.exponentialGof(gaps, "event_type", "gap_s")
-    }),
-    // labeling-budget design: Neyman-optimal allocation of a 10k-doc
-    // sample across sources by token-count dispersion, largest-remainder
-    // integerization summing exactly to the budget
-    "q290_neyman_alloc" -> ((s, dir) =>
-      Sampling.neymanAllocation(
-        t(s, dir, "documents").select(col("source"),
-          size(split(col("text"), " ")).cast("long").as("n_tokens")),
-        "source", "n_tokens", 10000L)),
-    // token-weighted length percentiles: the median TOKEN's document
-    // length - the budget-relevant number, not the median document
-    "q291_weighted_percentiles" -> ((s, dir) =>
-      graft.ops.Sketches.weightedPercentiles(
-        t(s, dir, "documents").select(
-          size(split(col("text"), " ")).cast("long").as("n_tokens")),
-        "n_tokens", "n_tokens", Seq(0.25, 0.5, 0.9, 0.99))),
-    // dataset-shift detector: can a logistic probe tell src0 from src1
-    // on (chars, tokens)? accuracy vs the binomial noise band around 0.5
-    "q289_c2st" -> ((s, dir) =>
-      graft.ops.Learn.c2st(
-        t(s, dir, "documents")
-          .withColumn("n_tokens",
-            size(split(col("text"), " ")).cast("double")),
-        Seq("n_chars", "n_tokens"), "source", "src0", "src1", 0.5, 3)),
-    // pre-flight join planning: exact output cardinality, key profiles,
-    // hottest-key share, and the broadcast/salt/shuffle verdict
-    "q288_join_advisor" -> ((s, dir) =>
-      graft.ops.Joins.joinSizeAdvisor(
-        t(s, dir, "orders"), t(s, dir, "customer"),
-        "o_custkey", "c_custkey", 1000L, 10.0)),
-    // capacity planning: Holt level+trend smoothing of daily value volume
-    // per event type, 7-day-ahead linear forecast
-    "q287_holt_forecast" -> ((s, dir) =>
-      graft.ops.EventAnalytics.holtForecast(
-        t(s, dir, "events"), "event_type", "ts", "value", 0.5, 0.3, 7)),
-    // conversion-rate A/B: per-nation urgent-order share, BUILDING vs
-    // MACHINERY, pooled z + Wilson intervals off exact counts
-    "q284_conversion_ab" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"),
-        (col("o_orderpriority") === "1-URGENT").as("urgent"))
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
-      graft.ops.Quality.twoProportionTest(
-        o.join(c, col("o_custkey") === col("c_custkey")),
-        "c_nationkey", "c_mktsegment", "urgent", "BUILDING", "MACHINERY")
-    }),
-    // WHERE the distributions differ: exact per-quantile order statistics
-    // of order totals, BUILDING vs MACHINERY
-    "q285_qte" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"), col("o_totalprice"))
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      graft.ops.Quality.quantileTreatmentEffect(
-        o.join(c, col("o_custkey") === col("c_custkey")),
-        "c_mktsegment", "o_totalprice", "BUILDING", "MACHINERY",
-        Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99))
-    }),
-    // outlier-robust effect: 5%-trimmed mean difference of event values,
-    // click vs purchase, off the cumulative value histogram
-    "q286_trimmed_diff" -> ((s, dir) =>
-      graft.ops.Quality.trimmedMeanDiff(
-        t(s, dir, "events"), "event_type", "value", "click", "purchase",
-        0.05)),
-    // withWatermark sizing from history: micro-batch-faithful dropped-
-    // event counts per candidate allowed lateness, under a deterministic
-    // 0-30s md5 ingest jitter (the raw log is perfectly ordered)
-    "q283_watermark_plan" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      graft.ops.EventAnalytics.watermarkPlan(
-        e.withColumn("arr", unix_micros(col("ts")) +
-          Sampling.md5Mod(col("event_id"), 30000000L)),
-        "ts", "arr", 10000000L,
-        Seq(0L, 1000000L, 5000000L, 10000000L, 30000000L))
-    }),
-    // data attribution: leave-one-shard-out nearest-centroid accuracy
-    // deltas - which ingestion shard helps/hurts the label structure
-    "q282_source_influence" -> ((s, dir) =>
-      graft.ops.Learn.sourceInfluence(
-        t(s, dir, "embeddings").withColumn("shard", pmod(col("vec_id"), lit(4))),
-        "vec_id", "embedding", "label", "shard")),
-    // exact binomial sign test per supplier (monthly 1996-vs-1995 ship
-    // counts, n <= 12) -> Benjamini-Hochberg over the 1000-supplier family
-    "q281_sign_fdr" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .where(year(col("l_shipdate")).isin(1995, 1996))
-      val diffs = li
-        .groupBy(col("l_suppkey"), month(col("l_shipdate")).as("mo"))
-        .agg((count(when(year(col("l_shipdate")) === 1996, 1)) -
-          count(when(year(col("l_shipdate")) === 1995, 1))).as("diff"))
-      graft.ops.Quality.bhFdr(
-        graft.ops.Quality.signTest(diffs, "l_suppkey", "diff"),
-        "l_suppkey", "p", 0.1)
-    }),
-    // bin-composition diagnostics over the q56 pack: per-bin source
-    // entropy and majority share - the correlated-context-window check
-    "q269_bin_mixing" -> ((s, dir) => {
-      val counted = t(s, dir, "documents").select(col("doc_id"),
-        col("source"),
-        TextStats.bpeishTokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.ops.Packing.binMixing(
-        graft.ops.Packing.packGreedy(counted, "doc_id", "n_tokens", 512L, 4),
-        "source")
-    }),
-    // tokenizer fairness: per-language corpus-level fertility and parity
-    // vs the best-served language - q215's promised per-group aggregate
-    "q261_fertility_parity" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = graft.ops.Corpus.bpeTrain(docs, "text", 5)
-        .orderBy("step").select("left", "right")
-        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      graft.ops.Corpus.bpeFertilityByGroup(docs, "doc_id", "text", "lang",
-        merges)
-    }),
-    // z-order priced in the advisor: the Morton layout buys BOTH columns
-    // partial pruning where a single-column sort buys one column
-    // everything and the other nothing - the classic trade, as exact
-    // integer skip counts
-    "q260_zorder_audit" -> ((s, dir) => {
-      import graft.ops.Layout
-      val li = t(s, dir, "lineitem").select(
-        (col("l_orderkey") * 8 + col("l_linenumber")).as("rid"),
-        col("l_partkey"), col("l_suppkey"))
-        .withColumn("zv", Layout.zValue(
-          Layout.rangeBucket(col("l_partkey").cast("double"), 0.0, 20000.0, 8),
-          Layout.rangeBucket(col("l_suppkey").cast("double"), 0.0, 1000.0, 8),
-          8))
-      Layout.sortKeyAdvisor(li, "rid", Seq("l_partkey", "zv"),
-        Seq(("l_partkey", 1000.0, 2000.0), ("l_suppkey", 100.0, 150.0)), 64)
-    }),
-    // point-lookup skip audit: what a per-file MEMBERSHIP index (bloom
-    // upper bound, measured exactly) buys on each layout - the q239/q241
-    // family's third number
-    "q257_pointskip_audit" -> ((s, dir) =>
-      graft.ops.Layout.pointSkipAudit(
-        t(s, dir, "lineitem").select(
-          (col("l_orderkey") * 8 + col("l_linenumber")).as("rid"),
-          col("l_partkey")),
-        "rid", "l_partkey", 64, Seq(100L, 1999L, 19999L))),
-    // funnel conversion latency: first-seen to first-seen per adjacent
-    // step pair, exact micro deltas, q45's exact-percentile summary
-    "q256_funnel_latency" -> ((s, dir) =>
-      graft.ops.EventAnalytics.funnelLatency(
-        t(s, dir, "events"), "user_id", "ts", "event_type",
-        Seq("view", "click", "signup", "purchase"))),
-    // per-key Spearman between daily value and daily count: strict-rank
-    // integers -> exact LONG sums -> one mirrored closed form
-    "q255_spearman_daily" -> ((s, dir) =>
-      graft.ops.EventAnalytics.spearmanDaily(
-        t(s, dir, "events"), "event_type", "ts", "value")),
-    // categorical MI / Theil's U between event type and day-of-week:
-    // micro-long cell terms over the exact contingency grid - the
-    // nonlinear dependence gauge next to q205's Pearson matrix
-    "q254_categorical_mi" -> ((s, dir) =>
-      graft.ops.Quality.categoricalMI(
-        t(s, dir, "events").where(col("ts").isNotNull)
-          .withColumn("dow", pmod(datediff(to_date(col("ts")),
-            lit("1970-01-01").cast("date")), lit(7))),
-        "event_type", "dow")),
-    // in-engine multinomial naive Bayes langID: micro-long log-probs
-    // make every document score an exact integer sum; ~19% md5 holdout,
-    // confusion mart out
-    "q253_naive_bayes" -> ((s, dir) =>
-      graft.ops.Learn.naiveBayesEval(
-        t(s, dir, "documents"), "doc_id", "text", "lang",
-        substring(md5(col("doc_id").cast("string")), 1, 1) < "3")),
-    // per-key OLS daily trend: micro-integer daily totals + integer day
-    // index make every sufficient statistic an exact LONG sum; the
-    // classical twin of q220's global median-robust Theil-Sen
-    "q252_ols_trend" -> ((s, dir) =>
-      graft.ops.EventAnalytics.olsTrendByKey(
-        t(s, dir, "events"), "event_type", "ts", "value")),
-    // streaming twin of q94/q149: per-group moments held open across
-    // three micro-batches by additive power-sum merges - the drained
-    // store must finish to the one-pass batch profile
-    "q251_stream_moments" -> ((s, dir) => {
-      import graft.streaming.EventStream
-      val ev = t(s, dir, "events").select("event_id", "event_type", "value")
-      val tmp = java.nio.file.Files.createTempDirectory("q251-mom").toString
-      val srcDir = new java.io.File(s"$tmp/drops"); srcDir.mkdirs()
-      def drop(df: DataFrame, name: String, modTime: Long): Unit = {
-        val stage = s"$tmp/stage_$name"
-        df.coalesce(1).write.parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(srcDir, s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(modTime)
-      }
-      drop(ev.where(pmod(col("event_id"), lit(3)) === 0), "b0", 1000000L)
-      drop(ev.where(pmod(col("event_id"), lit(3)) === 1), "b1", 2000000L)
-      drop(ev.where(pmod(col("event_id"), lit(3)) === 2), "b2", 3000000L)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("basePath", srcDir.toString)
-        .parquet(s"$srcDir/*.parquet")
-      val store = new graft.sources.TableStore(s)
-      val q = EventStream.streamMomentsMerge(stream, store, s"$tmp/moments",
-        s"$tmp/ckpt", "event_type", "value")
-      q.awaitTermination()
-      graft.ops.Quality.mergeMoments(store.read(s"$tmp/moments"), "event_type")
-    }),
-    // dup-graph 2-core: two bounded peels separate dense duplication
-    // cores from pendant chains (q33's components can't tell them apart)
-    "q250_kcore_peel" -> ((s, dir) => {
-      graft.ops.Graph.kCorePeel(jacPairs05(s, dir), "id_a", "id_b", 2, 2)
-    }),
-    "q225_ltv_curve" -> ((s, dir) =>
-      graft.ops.EventAnalytics.ltvCurve(
-        t(s, dir, "events"), "user_id", "ts", "value")),
-    // per-source dedup rates: the crawl-health mart (a source whose
-    // dup_rate jumps is re-serving content the corpus already has)
-    "q224_source_dedup_rates" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      Dedup.sourceDedupRates(docs.select("doc_id", "text", "source"),
-        "doc_id", "text", "source", 3, 0.5,
-        pairGen = Some(jacPairs05(s, dir)))
-    }),
-    // int8-tier recall contract: cosine over the quantized INTEGER
-    // vectors (scale cancels — no dequantize) vs exact float cosine
-    "q223_int8_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      graft.ops.Embeddings.int8RecallContract(
-        emb.where(col("vec_id") % 50 =!= 0),
-        emb.where(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", 10)
-    }),
-    // binary-tier recall contract: the measured recall@10 of the sign-
-    // code Hamming ranking vs exact cosine, per query, ratio replayable
-    "q222_hamming_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      graft.ops.Embeddings.hammingRecallContract(
-        emb.where(col("vec_id") % 50 =!= 0),
-        emb.where(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", 64, 10)
-    }),
-    // curation-to-tape composite: the q53 curated survivors packed into
-    // fixed-token training bins (q56's layout) — filter ∘ dedup ∘ pack,
-    // the end-to-end "raw corpus to training tape" chain in one plan
-    "q221_curation_to_tape" -> ((s, dir) => {
-      val eligible = eligibleDocs(s, dir)
-      val kept = Dedup.dropNearDuplicates(eligible, "doc_id", "text", 3, 0.5,
-        pairGen = Some(lshPairsEligible(s, dir)))
-      val counted = eligible.join(kept, Seq("doc_id"))
-        .select(col("doc_id"),
-          TextStats.bpeishTokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.ops.Packing.packGreedy(counted, "doc_id", "n_tokens", 512L, 4)
-    }),
-    // Theil-Sen robust trend of daily event value: the slope one bad
-    // day can't move (pairwise over DAYS, not events)
-    "q220_robust_trend" -> ((s, dir) =>
-      graft.ops.EventAnalytics.theilSenTrend(
-        t(s, dir, "events"), "ts", "value")),
-    // classic order-priority revenue top-k (TPC-H Q3 shape): segment-
-    // filtered customers broadcast, date filters pushed to both scans,
-    // exact-decimal revenue so the top-10 rank is engine-deterministic
-    "q218_shipping_priority" -> ((s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
-      val cut = lit("1998-07-01").cast("timestamp")
-      val cust = t(s, dir, "customer")
-        .where(col("c_mktsegment") === "BUILDING").select("c_custkey")
-      val ord = t(s, dir, "orders").where(col("o_orderdate") < cut)
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-      val li = t(s, dir, "lineitem").where(col("l_shipdate") > cut)
-        .select(col("l_orderkey"),
-          (col("l_extendedprice").cast(DecimalType(12, 2)) *
-            (lit(1).cast(DecimalType(12, 2)) -
-              col("l_discount").cast(DecimalType(12, 2)))).as("__rev"))
-      ord.join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .join(li, col("o_orderkey") === col("l_orderkey"))
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(sum("__rev").cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey").asc)
-        .limit(10)
-    }),
-    // per-nation regional supplier volume (TPC-H Q5 shape): the 4-dim
-    // snowflake broadcast chain over one fact pipeline, local-supplier
-    // constraint (customer and supplier share a nation), exact decimals
-    "q219_region_volume" -> ((s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
-      val lo = lit("1997-01-01").cast("timestamp")
-      val hi = lit("1998-01-01").cast("timestamp")
-      val asia = t(s, dir, "region").where(col("r_name") === "ASIA")
-      val nat = t(s, dir, "nation")
-        .join(broadcast(asia), col("n_regionkey") === col("r_regionkey"))
-        .select("n_nationkey", "n_name")
-      val sup = t(s, dir, "supplier")
-        .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .select("s_suppkey", "s_nationkey", "n_name")
-      val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-      val ord = t(s, dir, "orders")
-        .where(col("o_orderdate") >= lo && col("o_orderdate") < hi)
-        .select("o_orderkey", "o_custkey")
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"),
-          (col("l_extendedprice").cast(DecimalType(12, 2)) *
-            (lit(1).cast(DecimalType(12, 2)) -
-              col("l_discount").cast(DecimalType(12, 2)))).as("__rev"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(cust.where(col("c_nationkey").isNotNull)),
-          col("o_custkey") === col("c_custkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-        .groupBy("n_name")
-        .agg(sum("__rev").cast("double").as("revenue"))
-    }),
-    // LSH dedup recall contract: what the banded plan actually misses
-    // vs the exact Jaccard pairs, as one pinned ratio row
-    "q217_dedup_recall" -> ((s, dir) =>
-      Dedup.lshRecallContract(
-        graft.core.Tables.tableRebalanced(s, dir, "documents")
-          .select("doc_id", "text"), "doc_id", "text", 3, 4, 3, 0.5,
-        exactGen = Some(jacPairs05(s, dir)),
-        lshGen = Some(lshPairs(s, dir)))),
-    // count-min join-size contract: two KB sketches bound the
-    // orders⋈customer cardinality from above — the planner's "how big
-    // is this join" probe, estimate + theorem both oracle-pinned
-    "q216_join_size_cms" -> ((s, dir) =>
-      graft.ops.Sketches.joinSizeContract(
-        t(s, dir, "orders"), "o_custkey",
-        t(s, dir, "customer"), "c_custkey", 4, 64)),
-    // BPE fertility mart: train 5 merges, then tokenize every document
-    // with them (nested scan-stage folds) — chars/token per doc
-    "q215_bpe_fertility" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = graft.ops.Corpus.bpeTrain(docs, "text", 5)
-        .orderBy("step").select("left", "right")
-        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      graft.ops.Corpus.bpeTokenStats(docs, "doc_id", "text", merges)
-    }),
-    // full BPE tokenizer training: 5 merge rounds over the word-type
-    // vocabulary (corpus scanned once; each round is a vocab-sized
-    // hash-agg + argmax + scan-stage literal-pair fold)
-    "q214_bpe_train" -> ((s, dir) =>
-      graft.ops.Corpus.bpeTrain(t(s, dir, "documents"), "text", 5)),
-    // golden-record survivorship over fuzzy-name clusters of part: the
-    // MDM chain collapsed at the NAME level (the 64 distinct names
-    // cluster under noun-blocked levenshtein — cold/old/new/red families
-    // merge; members attach by name, one merge agg builds golden rows)
-    "q213_golden_record" -> ((s, dir) => {
-      import Dedup.Survivorship._
-      val withBlk = t(s, dir, "part")
-        .withColumn("__blk", split(col("p_name"), " ").getItem(1))
-      val names = withBlk.select(col("__blk"), col("p_name")).distinct()
-      val pairs = graft.ops.Joins.blockedFuzzyPairs(
-        names.withColumn("__nid", col("p_name")), "__nid", "p_name", "__blk", 2)
-      val labels = Dedup.clusters(pairs, "id_a", "id_b",
-        names.select(col("p_name").as("__nid")), "__nid")
-      val members = withBlk.join(
-        labels.select(col("__nid").as("p_name"), col("cluster_id")),
-        Seq("p_name"))
-      Dedup.goldenRecord(members, "p_partkey", "cluster_id",
-        Seq(Longest("p_name"), MaxNum("p_retailprice"),
-          FromPrimary("p_brand"), FromPrimary("p_size")))
-    }),
-    // multi-touch attribution: view/click touches within 24h before each
-    // purchase, first/last/linear credit side by side
-    "q212_attribution" -> ((s, dir) =>
-      graft.ops.EventAnalytics.attribution(
-        t(s, dir, "events"), "user_id", "ts", "event_id", "event_type",
-        "purchase", Seq("view", "click"), 86400000L)),
-    // the q206 window-distinct at 100 TB: per-day HLL sketches union
-    // over the trailing window (distinct doesn't decompose — sketch
-    // unions do); |est − exact| pinned within 5·rsd as a contract
-    "q211_wau_hll_bound" -> ((s, dir) =>
-      graft.ops.Sketches.rollingActiveContract(
-        t(s, dir, "events"), "user_id", "ts", 7, 12, 5.0)),
-    // deterministic T5 span-corruption mask plan: md5-derived span
-    // starts/lengths merged to maximal islands, entirely scan-stage
-    "q209_span_corruption" -> ((s, dir) =>
-      graft.ops.Chunking.spanCorruptionPlan(
-        t(s, dir, "documents"), "doc_id", "text", 7, 3)),
-    // CCNet-style per-language perplexity terciles of the familiarity
-    // score: head/middle/tail by broadcast value cuts, no window
-    "q210_ppl_buckets" -> ((s, dir) =>
-      graft.ops.Corpus.perplexityBuckets(
-        t(s, dir, "documents"), "doc_id", "text", "lang", 40)),
-    // GraphSAGE-style mean aggregation over the exact 3-NN cosine graph:
-    // every vector's neighborhood-mean embedding (one message-passing
-    // round as plain relational ops; q163's edge chain)
-    "q208_neighbor_mean" -> ((s, dir) => {
-      val knn = Similarity.bruteForceTopK(
-        t(s, dir, "embeddings"), "vec_id", "embedding", 3)
-        .where(col("cos") > 0)
-      graft.ops.Graph.neighborMeanEmbedding(knn, "query_id", "cand_id",
-        t(s, dir, "embeddings"), "vec_id", "embedding")
-    }),
-    // exact daily + trailing-7-day active users for every calendar day
-    // (distinct counts don't decompose over a sliding window — the
-    // growth metric a running-total mart gets wrong)
-    "q206_rolling_active" -> ((s, dir) =>
-      graft.ops.EventAnalytics.rollingActiveUsers(
-        t(s, dir, "events"), "user_id", "ts", 7)),
-    // purged temporal 5-fold split with a 1-hour embargo around fold
-    // boundaries — the autocorrelation-leakage-safe CV assignment
-    "q207_temporal_folds" -> ((s, dir) =>
-      Sampling.temporalFolds(t(s, dir, "events"), "event_id", "ts",
-        5, 3600000L)),
-    // Pareto frontier of (length, lexical diversity): the docs no other
-    // doc beats on both axes — multi-criteria curation without a
-    // weighted collapse
-    "q186_pareto_frontier" -> ((s, dir) =>
-      Sampling.paretoFrontier2D(
-        t(s, dir, "documents").select(col("doc_id"), col("n_chars"),
-          size(array_distinct(split(col("text"), " "))).cast("long")
-            .as("distinct_toks")),
-        "doc_id", "n_chars", "distinct_toks")),
-    // per-event-type ROC-AUC of value against a deterministic pseudo
-    // label (even user_id) — the threshold-free score-quality check
-    "q187_roc_auc" -> ((s, dir) =>
-      graft.ops.Quality.rocAuc(
-        t(s, dir, "events").withColumn("lbl", col("user_id") % 2 === 0),
-        "event_type", "value", "lbl")),
-    // count-min sketch: every term's never-undercounting frequency
-    // estimate from a 4×16 matrix vs its true count (width deliberately
-    // small so collisions are visible; the matrix itself is exact under
-    // any partitioning, so the whole thing oracles)
-    "q184_count_min" -> ((s, dir) => {
-      val tok = t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("term"))
-      val sk = tok.agg(
-        graft.functions.SketchFunctions.countMin(col("term"), 4, 16).as("sk"))
-      tok.groupBy("term").agg(count(lit(1)).as("tf_true"))
-        .crossJoin(broadcast(sk))
-        .select(col("term"), col("tf_true"),
-          graft.ops.Sketches.cmEstimate(col("sk"), col("term"), 4, 16)
-            .as("tf_est"))
-    }),
-    // per-user CUSUM drift alarms: sustained hot streaks accumulate
-    // where single spikes decay (Page 1954)
-    "q185_cusum_alerts" -> ((s, dir) =>
-      graft.ops.EventAnalytics.cusumAlerts(t(s, dir, "events"), "user_id",
-        "ts", "event_id", "value", 60.0, 20.0, 200.0)),
-    // per-node triangles + clustering coefficient over the 3-NN cosine
-    // graph (similarity-graph QA: cliques of copies vs hub artifacts)
-    "q182_triangle_stats" -> ((s, dir) => {
-      val knn = Similarity.bruteForceTopK(
-        t(s, dir, "embeddings"), "vec_id", "embedding", 3)
-        .where(col("cos") > 0)
-      graft.ops.Graph.triangleStats(knn, "query_id", "cand_id")
-    }),
-    // deterministic Johnson-Lindenstrauss ±1 projection 64 → 16 dims.
-    // Scala API keeps `proj array<double>`; the driver-facing row
-    // explodes to (vec_id, dim, v) scalars for the harness comparator.
-    "q183_random_projection" -> ((s, dir) =>
-      graft.ops.Embeddings.randomProjection(
-        t(s, dir, "embeddings"), "vec_id", "embedding", 64, 16)
-        .select(col("vec_id"), posexplode(col("proj")))
-        .select(col("vec_id"),
-          (col("pos") + 1).cast("long").as("dim"), col("col").as("v"))),
-    // retrieve-then-rerank: q178's top-10 candidates re-scored by
-    // ColBERT-style MaxSim over md5-derived token pseudo-embeddings
-    "q181_late_interaction" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-      val cands = graft.ops.Corpus.moreLikeThisOn(docPostings(s, dir),
-        Seq(1L, 2L, 3L, 4L, 5L), 10).select("query_id", "cand_id")
-      graft.ops.Corpus.lateInteractionRerank(docs, "doc_id", "text",
-        cands, "query_id", "cand_id", 8)
-    }),
-    // right-censoring-aware retention hazard: per lifetime day, users
-    // at risk, churn events, hazard (7-day silence = churn, censored
-    // within 7 days of the pinned asOf)
-    "q179_hazard_table" -> ((s, dir) =>
-      graft.ops.EventAnalytics.hazardTable(t(s, dir, "events"), "user_id", "ts",
-        java.sql.Date.valueOf("2024-02-01"), 7)),
-    // cross-source quantile normalization of doc length: each row mapped
-    // to the global score at its source-local rank (100-point curve)
-    "q180_quantile_normalize" -> ((s, dir) =>
-      Sampling.quantileNormalize(
-        t(s, dir, "documents").select("doc_id", "source", "n_chars"),
-        "doc_id", "source", "n_chars", 100)),
-    // per-doc Unicode-script composition (multilingual curation signal
-    // the word-marker language ID can't give on mixed-script text)
-    "q176_script_shares" -> ((s, dir) =>
-      graft.ops.TextStats.scriptShares(t(s, dir, "documents"), "doc_id", "text")),
-    // next-event supervised pairs: every position with a full 3-event
-    // history becomes (context, next_event) — leak-free by (ts, id) order
-    "q177_next_event_examples" -> ((s, dir) =>
-      graft.ops.EventAnalytics.nextEventExamples(t(s, dir, "events"),
-        "user_id", "ts", "event_id", "event_type", 3)),
-    // sparse lexical more-like-this: TF-IDF cosine top-10 through the
-    // postings join for five query docs (maxDfShare 1.0: the synthetic
-    // corpus has ~31 terms, nearly all in >half the docs — pruning is
-    // exercised in CorpusSpec; smoothed idf still downweights them)
-    "q178_more_like_this" -> ((s, dir) =>
-      graft.ops.Corpus.moreLikeThisOn(docPostings(s, dir),
-        Seq(1L, 2L, 3L, 4L, 5L), 10)),
-    // reliability diagram + ECE: value-derived [0,1] score vs purchase
-    // outcome over 10 equal-width bins
-    "q173_calibration" -> ((s, dir) =>
-      graft.ops.Quality.calibrationBins(
-        t(s, dir, "events")
-          .withColumn("score", least(lit(1.0), col("value") / 250.0))
-          .withColumn("converted", col("event_type") === "purchase"),
-        "score", "converted", 10)),
-    // per-cluster MEDOID (min summed Levenshtein to cluster mates) — the
-    // most-typical representative, vs q95's longest-copy policy
-    // medoids over the BANDED LSH pair path (the q141/q43 split: the
-    // benched entry plans the 100 TB shape; exact pairGen stays reachable)
-    "q174_cluster_medoids" -> ((s, dir) => {
-      val docs = graft.core.Tables.tableRebalanced(s, dir, "documents")
-        .select("doc_id", "text")
-      Dedup.clusterMedoids(docs, "doc_id", "text", 3, 0.5,
-        pairGen = Some(lshPairs(s, dir)))
-    }),
-    // Fellegi–Sunter linkage weights over nation-blocked customer pairs;
-    // u per field estimated from the data's collision probability
-    "q175_linkage_weights" -> ((s, dir) =>
-      graft.ops.Joins.linkageWeights(
-        t(s, dir, "customer")
-          .withColumn("bal_bucket", floor(col("c_acctbal") / 1000).cast("long")),
-        "c_custkey", "c_nationkey", Seq("c_mktsegment", "bal_bucket"), 0.9)),
-    // term↔label mutual information (feature selection / template-leak
-    // probe): presence-based MI of each ≥5-df term against lang
-    "q170_term_label_mi" -> ((s, dir) =>
-      graft.ops.Corpus.termLabelMI(t(s, dir, "documents"), "text", "lang", 5)),
-    // exponentially decayed per-user counters as of a pinned instant
-    // (recency-weighted feature-store counts; 7-day half-life)
-    "q171_decayed_counts" -> ((s, dir) =>
-      graft.ops.EventAnalytics.decayedCounts(t(s, dir, "events"),
-        "user_id", "ts", "value",
-        java.sql.Timestamp.valueOf("2024-02-01 00:00:00"), 7.0)),
-    // PSI between the first and second half-month of events — the
-    // distribution-stability scalar over 20 fixed bins of value
-    "q172_psi_drift" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val cut = java.sql.Timestamp.valueOf("2024-01-16 00:00:00")
-      graft.ops.Quality.psiDrift(
-        ev.where(col("ts") < cut), ev.where(col("ts") >= cut),
-        "value", 0.0, 250.0, 20)
-    }),
-    // column-profile drift between two snapshot halves (the ingest
-    // regression check): even doc_ids as yesterday, odd as today
-    "q169_profile_drift" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ops.Quality.profileDrift(
-        docs.where(col("doc_id") % 2 === 0),
-        docs.where(col("doc_id") % 2 === 1),
-        Seq("n_chars", "lang", "text"))
-    }),
-    // the SCD2 merge staged against a pk-BUCKETED catalog target (read
-    // back through the version-pointer view) — must produce exactly the
-    // q15 merge result while the diff shuffles only the batch side
-    // (PipelineE2ESpec pins the single-exchange plan; this makes the
-    // bucketed path's CORRECTNESS driver-visible too)
-    "q109_bucketed_scd2_merge" -> ((s, dir) => {
-      val store = new graft.sources.BucketedTableStore(s, "graft_q109", 8)
-      store.overwrite("silver_customers",
-        Scd2.initialLoad(t(s, dir, "customer"), T0), "c_custkey")
-      store.vacuum("silver_customers") // repeat runs: drop superseded versions
-      val target = store.read("silver_customers")
-      val st = Scd2.stage(scd2Source(s, dir), target.where(col("is_current")), "c_custkey")
-      Scd2.applyMerge(target, st, "c_custkey", T1)
-    }),
-    // table-level time travel (the Delta `versionAsOf` the reference's
-    // merge targets keep implicitly): three commits — base load,
-    // incremental append, full overwrite — then read the PRE-overwrite
-    // snapshot back by version number. The oracle pins v1's contents, so
-    // a readVersion that followed the current pointer (now the disjoint
-    // %3=2 slice) would hash-mismatch, not just differ in count
-    "q128_time_travel" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").select("c_custkey", "c_name", "c_acctbal")
-      val tmp = java.nio.file.Files.createTempDirectory("q128-tt").toString + "/cust"
-      val store = new graft.sources.TableStore(s)
-      store.overwrite(tmp, cust.where(col("c_custkey") % 3 === 0)) // v0
-      store.append(tmp, cust.where(col("c_custkey") % 3 === 1))    // v1
-      store.overwrite(tmp, cust.where(col("c_custkey") % 3 === 2)) // v2 = current
-      store.readVersion(tmp, 1)
-    }),
-    // row-level diff between two committed snapshots (the change-data-feed
-    // question from plain versioned manifests): v1→v2 replaced the whole
-    // table, so every v2 row diffs as insert and every v1 row as delete —
-    // the oracle enumerates both sides explicitly
-    // incremental VIEW MAINTENANCE: the q258 change feed applied to the
-    // invertible daily mart (retract pre-images, add post-images) must
-    // equal a full recompute of the new version - no history rescan
-    "q259_ivm_apply" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
-      val tmp = java.nio.file.Files.createTempDirectory("q259-ivm").toString + "/orders"
-      val store = new graft.sources.TableStore(s)
-      val v0 = o.where(pmod(col("o_orderkey"), lit(3)) < 2)
-      store.overwrite(tmp, v0)
-      store.overwrite(tmp,
-        o.where(pmod(col("o_orderkey"), lit(3)) >= 1)
-          .withColumn("o_totalprice",
-            when(pmod(col("o_orderkey"), lit(6)) === 1,
-              col("o_totalprice") + 100.0).otherwise(col("o_totalprice"))))
-      val feed = store.changeFeed(tmp, 0, 1, Seq("o_orderkey"))
-      graft.etl.IncrementalMart.finalizeInvertible(
-        graft.etl.IncrementalMart.applyChangeFeed(
-          graft.etl.IncrementalMart.invertibleDailyPartials(v0), feed))
-    }),
-    // key-aware change feed (Delta-CDF semantics): value changes become
-    // update pre/post pairs instead of unrelated delete+insert
-    "q258_change_feed" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").select("c_custkey", "c_name", "c_acctbal")
-      val tmp = java.nio.file.Files.createTempDirectory("q258-cdf").toString + "/cust"
-      val store = new graft.sources.TableStore(s)
-      store.overwrite(tmp, cust.where(pmod(col("c_custkey"), lit(3)) < 2)) // v0
-      store.overwrite(tmp, // v1: drop %3=0, keep %3=1 (bump %6=1), add %3=2
-        cust.where(pmod(col("c_custkey"), lit(3)) >= 1)
-          .withColumn("c_acctbal",
-            when(pmod(col("c_custkey"), lit(6)) === 1,
-              col("c_acctbal") + 100.0).otherwise(col("c_acctbal"))))
-      store.changeFeed(tmp, 0, 1, Seq("c_custkey"))
-    }),
-    "q130_version_diff" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").select("c_custkey", "c_name", "c_acctbal")
-      val tmp = java.nio.file.Files.createTempDirectory("q130-diff").toString + "/cust"
-      val store = new graft.sources.TableStore(s)
-      store.overwrite(tmp, cust.where(col("c_custkey") % 3 === 0)) // v0
-      store.append(tmp, cust.where(col("c_custkey") % 3 === 1))    // v1
-      store.overwrite(tmp, cust.where(col("c_custkey") % 3 === 2)) // v2
-      store.versionDiff(tmp, 1, 2)
-    }),
-    // k-anonymity audit over demographic quasi-identifiers: cohorts
-    // smaller than k re-identify their members — the privacy CHECK before
-    // releasing user-derived training tables
-    "q131_k_anonymity" -> ((s, dir) =>
-      graft.ops.Quality.kAnonymityAudit(t(s, dir, "customer"),
-        Seq("c_nationkey", "c_mktsegment"), 10L)),
-    // temperature-scaled source mixture (alpha = 0.3): tail sources keep
-    // everything (rate 1), head sources damp toward the tempered share
-    "q132_temperature_mix" -> ((s, dir) =>
-      graft.ops.Sampling.temperatureMixture(t(s, dir, "documents"), "source", 0.3)),
-    // per-dimension embedding mean/std from ONE pass over the native
-    // vector-sum buffers — the standardization profile; no element explode
-    "q133_dim_stats" -> ((s, dir) =>
-      graft.ops.Embeddings.dimStats(t(s, dir, "embeddings"), "embedding")),
-    // streaming ingest with inline near-dup rejection, drained over two
-    // ordered micro-batches: each batch drops rows with an LSH-verified
-    // near-duplicate in the STANDING side (the fixed corpus plus batch 1's
-    // survivors when batch 2 arrives) before appending — the ingestion-
-    // time incremental-dedup composition, oracled as the same two-stage
-    // chain in SQL
-    "q110_stream_dedup_ingest" -> ((s, dir) => {
-      import graft.streaming.EventStream
-      val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q110-ingest").toString
-      val srcDir = new java.io.File(s"$tmp/drops"); srcDir.mkdirs()
-      def drop(df: DataFrame, name: String, modTime: Long): Unit = {
-        val stage = s"$tmp/stage_$name"
-        df.coalesce(1).write.parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(srcDir, s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(modTime)
-      }
-      drop(docs.where(col("doc_id") % 4 === 1).select("doc_id", "text"), "b0", 1000000L)
-      drop(docs.where(col("doc_id") % 4 === 3).select("doc_id", "text"), "b1", 2000000L)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("basePath", srcDir.toString)
-        .parquet(s"$srcDir/*.parquet")
-      val corpus = docs.where(col("doc_id") % 2 === 0).select("doc_id", "text")
-      val n0 = cachedCount(s, dir, "documents_even")(corpus)
-      val store = new graft.sources.TableStore(s)
-      withStatePartitions(s, 8) {
-        // recalib: the standing index re-bands at decade milestones (the
-        // bench corpus never leaves the bootstrap decade, so the oracle's
-        // fixed-banding replay is exact)
-        val q = EventStream.streamDedupedIngest(stream, corpus, store,
-          s"$tmp/bronze", "doc_id", "text", 3, 4, 3, 0.5, s"$tmp/ckpt",
-          recalib = Some(m => graft.ops.Dedup.recommendedBanding(m, n0, 4, 3)))
-        q.awaitTermination()
-      }
-      store.read(s"$tmp/bronze").select("doc_id", "text")
-    }),
-    // the INTRA-BATCH flag demonstrated (VERDICT r9 #6): ONE micro-batch
-    // containing mutual near-dups, intraBatch = true — the batch first
-    // reduces to cluster representatives (banded self-pairs → connected
-    // components → min id, the q43 chain) BEFORE the standing join, so
-    // two near-dups arriving together can no longer both be admitted.
-    // Oracled as the same two-stage chain: reps via the recursive
-    // closure, then the corpus cross-check over reps only
-    "q370_stream_intra_batch" -> ((s, dir) => {
-      import graft.streaming.EventStream
-      val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q370-intra").toString
-      val srcDir = new java.io.File(s"$tmp/drops"); srcDir.mkdirs()
-      val stage = s"$tmp/stage_b0"
-      docs.where(col("doc_id") % 2 === 1).select("doc_id", "text")
-        .coalesce(1).write.parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(srcDir, "b0.parquet").toPath)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("basePath", srcDir.toString)
-        .parquet(s"$srcDir/*.parquet")
-      val corpus = docs.where(col("doc_id") % 4 === 0).select("doc_id", "text")
-      val n0 = cachedCount(s, dir, "documents_mod4")(corpus)
-      val store = new graft.sources.TableStore(s)
-      withStatePartitions(s, 8) {
-        val q = EventStream.streamDedupedIngest(stream, corpus, store,
-          s"$tmp/bronze", "doc_id", "text", 3, 4, 3, 0.5, s"$tmp/ckpt",
-          intraBatch = true,
-          recalib = Some(m => graft.ops.Dedup.recommendedBanding(m, n0, 4, 3)))
-        q.awaitTermination()
-      }
-      store.read(s"$tmp/bronze").select("doc_id", "text")
-    }),
-    // streaming SCD2 upsert drained over two ordered micro-batches (full
-    // snapshot at T0, the simulated incremental batch at T1) — the final
-    // silver state must equal the BATCH merge q15 oracles (same staged
-    // diff, same merge SQL), proving the two paths cannot drift
-    "q108_stream_scd2_upsert" -> ((s, dir) => {
-      import graft.streaming.EventStream
-      val tmp = java.nio.file.Files.createTempDirectory("q108-scd2").toString
-      val srcDir = new java.io.File(s"$tmp/drops"); srcDir.mkdirs()
-      // one parquet FILE per micro-batch, mod-times forcing b0 → b1 order
-      // (the file source admits oldest-first with maxFilesPerTrigger=1)
-      def drop(df: DataFrame, name: String, ts: Timestamp, modTime: Long): Unit = {
-        val stage = s"$tmp/stage_$name"
-        df.withColumn("ingestion_timestamp", lit(ts)).coalesce(1)
-          .write.parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(srcDir, s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(modTime)
-      }
-      val c = t(s, dir, "customer")
-        .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      drop(c, "b0", T0, 1000000L)
-      drop(scd2Source(s, dir), "b1", T1, 2000000L)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("basePath", srcDir.toString)
-        .parquet(s"$srcDir/*.parquet")
-      val store = new graft.sources.TableStore(s)
-      withStatePartitions(s, 8) {
-        val q = EventStream.streamToSilverScd2(stream, store, s"$tmp/silver",
-          "c_custkey", "ingestion_timestamp", s"$tmp/ckpt")
-        q.awaitTermination()
-      }
-      store.read(s"$tmp/silver").drop("ingestion_timestamp")
-    })
-  )
+  /** Every registered query, one record each, declared in its family's
+    * file. Lazy, so SparkEntry's own initialization never initializes a
+    * family object (their builds call back into the artifact builders). */
+  private[graft] lazy val registry: Seq[Query] = Seq(
+    PipelineQueries.all, CorpusQueries.all, DedupQueries.all,
+    EmbeddingsQueries.all, EventAnalyticsQueries.all, JoinsQueries.all,
+    LearnQueries.all, MultimodalQueries.all, QualityQueries.all,
+    SamplingQueries.all, SimilarityQueries.all, SketchesQueries.all,
+    TextStatsQueries.all).flatten
 
-  // ---------------------------------------------------------------------
-  // Oracle SQL (DuckDB dialect-compatible ANSI SQL over the same tables)
-  // ---------------------------------------------------------------------
+  /** Each query's Spark build, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
-  /** fact_order_details as a SQL CTE body (mirrors StarSchema). */
-  private val factSql: String =
-    """SELECT l.l_orderkey AS OrderID, l.l_linenumber AS OrderItemID,
-      |  o.o_custkey AS CustomerID, c.c_name AS CustomerName,
-      |  l.l_partkey AS ProductID, p.p_name AS ProductName, p.p_brand AS CategoryName,
-      |  l.l_suppkey AS SellerID, s.s_name AS SellerName,
-      |  n.n_name AS NationName, r.r_name AS RegionName,
-      |  CASE WHEN l.l_returnflag = 'N' THEN 'Delivered'
-      |       WHEN l.l_returnflag = 'A' THEN 'Cancelled'
-      |       ELSE 'Returned' END AS StatusName,
-      |  CAST(l.l_quantity AS DECIMAL(12,2)) AS Quantity,
-      |  CAST(l.l_extendedprice AS DECIMAL(12,2)) AS CurrentPrice,
-      |  CAST(l.l_quantity AS DECIMAL(12,2)) * CAST(l.l_extendedprice AS DECIMAL(12,2)) AS TotalAmount,
-      |  o.o_orderdate AS OrderDate
-      |FROM lineitem l
-      |JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |JOIN customer c ON o.o_custkey = c.c_custkey
-      |JOIN part p ON l.l_partkey = p.p_partkey
-      |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |JOIN nation n ON c.c_nationkey = n.n_nationkey
-      |JOIN region r ON n.n_regionkey = r.r_regionkey""".stripMargin
+  /** Each query's DuckDB oracle SQL, by name: ANSI SQL over the same
+    * parquet tables. A `def`, so the text is built only when asked for
+    * (Verify, the specs) and never held by a bench JVM. */
+  def oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracle).toMap
 
-  private val dailySql: String =
-    """SELECT SellerID, SellerName, ProductID, ProductName, CategoryName,
-      |  CAST(year(CAST(OrderDate AS DATE)) AS INTEGER) AS year,
-      |  CAST(quarter(CAST(OrderDate AS DATE)) AS INTEGER) AS quarter,
-      |  CAST(month(CAST(OrderDate AS DATE)) AS INTEGER) AS month,
-      |  CAST(OrderDate AS DATE) AS order_date,
-      |  SUM(TotalAmount) AS total_revenue,
-      |  SUM(Quantity) AS total_quantity_sold,
-      |  COUNT(DISTINCT OrderID) AS distinct_orders
-      |FROM fact GROUP BY 1,2,3,4,5,6,7,8,9""".stripMargin
+  /** The chunked replays of the vote-grid family (see [[ChunkedOracle]]). */
+  def chunkedOracle: Map[String, ChunkedOracle] =
+    registry.flatMap(q => q.chunked.map(q.name -> _)).toMap
 
-  private val scd2SourceSql: String =
-    """SELECT c_custkey, c_name, c_nationkey, c_acctbal,
-      |  CASE WHEN c_custkey % 3 = 0 THEN 'CHANGED' ELSE c_mktsegment END AS c_mktsegment
-      |FROM customer WHERE c_custkey % 10 < 8
-      |UNION ALL
-      |SELECT c_custkey + 1000000, 'NEW ' || c_name, c_nationkey, c_acctbal, c_mktsegment
-      |FROM customer WHERE c_custkey % 7 = 0""".stripMargin
-
-  /** Per-group moment profile recompute — shared by q94 (batch) and q251
-    * (the streaming power-sum merge twin). */
-  private val momentsOracleSql: String =
-    """WITH a AS (
-      |  SELECT event_type, CAST(count(*) AS BIGINT) AS n, sum(value) AS s1,
-      |    sum(value*value) AS s2, sum(value*value*value) AS s3,
-      |    sum(value*value*value*value) AS s4
-      |  FROM events WHERE value IS NOT NULL GROUP BY 1)
-      |SELECT event_type, n,
-      |  round(s1/n, 6) AS mean,
-      |  round(s2/n - (s1/n)*(s1/n), 6) AS variance,
-      |  round(CASE WHEN s2/n - (s1/n)*(s1/n) > 0 THEN
-      |    (s3/n - 3.0*(s1/n)*(s2/n) + 2.0*(s1/n)*(s1/n)*(s1/n))
-      |      / pow(s2/n - (s1/n)*(s1/n), 1.5) END, 6) AS skewness,
-      |  round(CASE WHEN s2/n - (s1/n)*(s1/n) > 0 THEN
-      |    (s4/n - 4.0*(s1/n)*(s3/n) + 6.0*(s1/n)*(s1/n)*(s2/n)
-      |       - 3.0*(s1/n)*(s1/n)*(s1/n)*(s1/n))
-      |      / ((s2/n - (s1/n)*(s1/n)) * (s2/n - (s1/n)*(s1/n))) - 3.0 END, 6) AS kurtosis
-      |FROM a""".stripMargin
-
-  /** Shared DuckDB scaffolding for the BPE oracles (q215/q249): replay
-    * [[graft.ops.Corpus.bpeTrain]]'s m rounds over the word-type table and
-    * return (trainingCtes, nestedApplyFold, bestsFromClause). Level-unique
-    * lambda names keep DuckDB scoping unambiguous. */
-  private def bpeOracleParts(m: Int): (String, String, String) = {
-    val w0 =
-      """w0 AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS freq,
-        |    list_transform(generate_series(1, len(w)), i -> w[i:i]) AS syms
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-        |  WHERE len(w) > 0 GROUP BY w)""".stripMargin
-    val rounds = (1 to m).map { k =>
-      val prev = s"w${k - 1}"
-      val pair =
-        s"""p$k AS (
-           |  SELECT l, r, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-           |    SELECT freq, unnest(syms[1:len(syms) - 1]) AS l,
-           |      unnest(syms[2:len(syms)]) AS r
-           |    FROM $prev WHERE len(syms) >= 2)
-           |  GROUP BY 1, 2),
-           |best$k AS (SELECT l, r, cnt FROM p$k
-           |  ORDER BY cnt DESC, l ASC, r ASC LIMIT 1)""".stripMargin
-      val apply =
-        if (k == m) ""
-        else
-          s""",
-             |w$k AS (
-             |  SELECT freq, list_reduce(list_transform(syms, s -> [s]),
-             |    (acc, x) -> CASE WHEN acc[-1] = b.l AND x[1] = b.r
-             |      THEN list_append(acc[1:len(acc) - 1], b.l || b.r)
-             |      ELSE list_append(acc, x[1]) END) AS syms
-             |  FROM $prev, best$k b)""".stripMargin
-      pair + apply
-    }
-    val nested = (1 to m).foldLeft("chars") { (inner, k) =>
-      s"""list_reduce(list_transform($inner, s$k -> [s$k]),
-         |    (a$k, x$k) -> CASE WHEN a$k[-1] = b$k.l AND x$k[1] = b$k.r
-         |      THEN list_append(a$k[1:len(a$k) - 1], b$k.l || b$k.r)
-         |      ELSE list_append(a$k, x$k[1]) END)""".stripMargin
-    }
-    val bestsFrom = (1 to m).map(k => s"best$k b$k").mkString(", ")
-    (w0 + ",\n" + rounds.mkString(",\n"), nested, bestsFrom)
+  /** The name-sorted queries whose name starts with one of the comma-
+    * separated `prefixes`, or every query when there are none: the one
+    * selection Bench, Verify and PlanDump share. Name order keeps per-query
+    * numbers comparable across runs as queries are added. */
+  def selected(prefixes: Option[String]): Seq[Query] = {
+    val ps = prefixes.map(_.split(",").map(_.trim).filter(_.nonEmpty))
+    registry.filter(q => ps.forall(_.exists(q.name.startsWith))).sortBy(_.name)
   }
-
-  private def fpSql(alias: String = ""): String = {
-    val p = if (alias.isEmpty) "" else alias + "."
-    s"sha256(concat_ws('||', ${p}c_name, CAST(${p}c_nationkey AS VARCHAR), " +
-      s"CAST(${p}c_acctbal AS VARCHAR), ${p}c_mktsegment))"
-  }
-
-  private val stagedSql: String =
-    s"""WITH src AS ($scd2SourceSql),
-       |sh AS (SELECT *, ${fpSql()} AS hash FROM src),
-       |th AS (SELECT c_custkey, ${fpSql()} AS hash FROM customer),
-       |j AS (SELECT sh.c_custkey AS s_key, sh.c_name, sh.c_nationkey, sh.c_acctbal,
-       |        sh.c_mktsegment, th.c_custkey AS t_key, sh.hash AS s_hash, th.hash AS t_hash
-       |      FROM sh FULL OUTER JOIN th ON sh.c_custkey = th.c_custkey),
-       |staged AS (
-       |  SELECT s_key AS c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
-       |    CASE WHEN t_key IS NULL THEN 'INSERT'
-       |         WHEN s_key IS NULL THEN 'NO CHANGE'
-       |         WHEN s_hash <> t_hash THEN 'UPDATE'
-       |         ELSE 'NO CHANGE' END AS action
-       |  FROM j)
-       |""".stripMargin
-
-  /** Word n-gram distinct-shingle table as SQL (DuckDB list ops) over any
-    * relation with (doc_id, text). */
-  private def shingleSql(n: Int, rel: String = "documents"): String =
-    s"""SELECT doc_id, unnest(list_distinct(list_transform(
-       |  generate_series(1, len(ts) - ${n - 1}),
-       |  i -> array_to_string(ts[i:i+${n - 1}], ' ')))) AS shingle
-       |FROM (SELECT doc_id, string_split(text, ' ') AS ts FROM $rel)""".stripMargin
-
-  /** q352/q353: the decoded-PCM content replayed WITHOUT byte parsing —
-    * the audio twin of [[ppmRealContentCtes]]: sample block j of the
-    * word-sampled WAV synthesis (96 samples = 12 blocks) is
-    * `md5(word_{⌊j·nWords/12⌋} || ':pxwav:' || j)`, each block's 16
-    * digest bytes are 8 little-endian int16 frames (high hex pair ||
-    * low, two's-complement wrap), space-joined in stream order — exactly
-    * what the real RIFF parser emits. Ends at `wdocs(doc_id, text)`. */
-  private def wavRealContentCtesOver(rel: String): String =
-    s"""wwords AS (SELECT doc_id, string_split(text, ' ') AS ws
-      |  FROM $rel WHERE text IS NOT NULL),
-      |wblk AS (SELECT doc_id, j,
-      |    md5(ws[(j * len(ws)) // 12 + 1] || ':pxwav:' || j) AS h
-      |  FROM wwords CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS j)),
-      |wsmp AS (SELECT doc_id, j * 8 + s AS k,
-      |    CAST(('0x' || substr(h, 4 * s + 3, 2) || substr(h, 4 * s + 1, 2)) AS INTEGER) AS u
-      |  FROM wblk CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS s)),
-      |wdocs AS (SELECT doc_id,
-      |    string_agg(CAST(CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS VARCHAR),
-      |      ' ' ORDER BY k) AS text
-      |  FROM wsmp GROUP BY 1)""".stripMargin
-
-  private val wavRealContentCtes: String = wavRealContentCtesOver("documents")
-
-  /** q354–q356: the frame-sampled decoded-luma content of the Y4M
-    * synthesis replayed WITHOUT byte parsing — the video member of the
-    * md5-chain device: with 4×4 C444 frames (48 plane bytes = 3 blocks
-    * per frame, 8 frames) the Y plane of frame f is exactly block j=0,
-    * i.e. the 16 digest bytes of
-    * `md5(word_{⌊f·3·nWords/24⌋} || ':pxvid:' || f || ':0')`, one luma
-    * value per byte in raster order — exactly what the real Y4M parser
-    * emits for sampled frames 0,2,4,6. Ends at `vdocs(doc_id, text)`
-    * over COMPOSITE ids `doc_id·64 + frame` (the
-    * [[graft.ops.Multimodal.videoFrameFingerprints]] radix). */
-  private def y4mRealContentCtesOver(rel: String): String =
-    s"""vwords AS (SELECT doc_id, string_split(text, ' ') AS ws
-      |  FROM $rel WHERE text IS NOT NULL),
-      |vfrm AS (SELECT unnest(generate_series(0, 6, 2)) AS f),
-      |vblk AS (SELECT doc_id, f,
-      |    md5(ws[((f * 3) * len(ws)) // 24 + 1] || ':pxvid:' || f || ':0') AS h
-      |  FROM vwords CROSS JOIN vfrm),
-      |vbytes AS (SELECT doc_id, f, m AS k,
-      |    CAST(('0x' || substr(h, 2 * m + 1, 2)) AS INTEGER) AS v
-      |  FROM vblk CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS m)),
-      |vdocs AS (SELECT doc_id * 64 + f AS doc_id,
-      |    string_agg(CAST(v AS VARCHAR), ' ' ORDER BY k) AS text
-      |  FROM vbytes GROUP BY 1)""".stripMargin
-
-  private val y4mRealContentCtes: String = y4mRealContentCtesOver("documents")
-
-  /** q357–q359: the codec-decoded pixel content of the PNG synthesis
-    * replayed WITHOUT running a codec — possible precisely because PNG
-    * is LOSSLESS: the decoded grid equals the pre-encode md5-chain grid,
-    * so the ':pxpng:' word-sampled chain (8×8 = 12 blocks) reconstructs
-    * every byte the real ImageIO decode emits. Ends at
-    * `gdocs(doc_id, text)`, the (id, decoded-luma) relation. */
-  private def pngRealContentCtesOver(rel: String): String =
-    s"""gwords AS (SELECT doc_id, string_split(text, ' ') AS ws
-      |  FROM $rel WHERE text IS NOT NULL),
-      |gblk AS (SELECT doc_id, j,
-      |    md5(ws[(j * len(ws)) // 12 + 1] || ':pxpng:' || j) AS h
-      |  FROM gwords CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS j)),
-      |gbytes AS (SELECT doc_id, j * 16 + m AS k,
-      |    CAST(('0x' || substr(h, 2 * m + 1, 2)) AS INTEGER) AS v
-      |  FROM gblk CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS m)),
-      |gluma AS (SELECT doc_id, k // 3 AS px, CAST(sum(v) AS BIGINT) AS luma
-      |  FROM gbytes GROUP BY 1, 2),
-      |gdocs AS (SELECT doc_id,
-      |    string_agg(CAST(luma AS VARCHAR), ' ' ORDER BY px) AS text
-      |  FROM gluma GROUP BY 1)""".stripMargin
-
-  private val pngRealContentCtes: String = pngRealContentCtesOver("documents")
-
-  /** q336/q337/q338 (the utf-8 text tier — the container-true chains ride
-    * the 128-bit grid since r9): the
-    * 64-bit perceptual fingerprint replayed bit-exact — per content 4-gram
-    * the first 16 md5 hex chars form the vote word (char c, nibble bit b ↔
-    * bit 64−4c+b); the (c, value) count grid folds the votes, nibbles
-    * reassemble via a 16-row HUGEINT multiplier table with a
-    * two's-complement wrap to BIGINT. `rel` is any relation with
-    * (doc_id, text). CTEs are `p`-prefixed so the chain composes with the
-    * shingle/jaccard CTEs (q338). Ends at `pfps(id, fp)`. */
-  private def perceptualFpsCtesOver(rel: String): String = {
-    val multipliers = (1 to 16)
-      .map(c => s"($c, CAST('${BigInt(16).pow(16 - c)}' AS HUGEINT))")
-      .mkString(", ")
-    s"""psh AS (SELECT doc_id,
-       |    substr(md5(unnest(list_transform(
-       |      generate_series(1, len(text) - 3),
-       |      i -> substr(text, i, 4)))), 1, 16) AS h
-       |  FROM $rel WHERE text IS NOT NULL),
-       |pcs AS (SELECT unnest(generate_series(1, 16)) AS c),
-       |pgrid AS (SELECT doc_id, c,
-       |    strpos('0123456789abcdef', substr(h, c, 1)) - 1 AS v,
-       |    count(*) AS n
-       |  FROM psh CROSS JOIN pcs GROUP BY 1, 2, 3),
-       |pbs AS (SELECT unnest(generate_series(0, 3)) AS b),
-       |pbits AS (SELECT doc_id, c, b,
-       |    CASE WHEN sum(n * (2 * ((v >> b) & 1) - 1)) > 0
-       |         THEN 1 ELSE 0 END AS bit
-       |  FROM pgrid CROSS JOIN pbs GROUP BY 1, 2, 3),
-       |pnibs AS (SELECT doc_id, c, CAST(sum(bit << b) AS HUGEINT) AS nv
-       |  FROM pbits GROUP BY 1, 2),
-       |pm(c, mult) AS (VALUES $multipliers),
-       |pfpu AS (SELECT doc_id, sum(nv * mult) AS u
-       |  FROM pnibs JOIN pm USING (c) GROUP BY 1),
-       |pfps AS (SELECT d.doc_id AS id, CAST(CASE
-       |      WHEN f.u IS NULL THEN 0
-       |      WHEN f.u >= CAST('9223372036854775808' AS HUGEINT)
-       |        THEN f.u - CAST('18446744073709551616' AS HUGEINT)
-       |      ELSE f.u END AS BIGINT) AS fp
-       |  FROM $rel d LEFT JOIN pfpu f USING (doc_id))""".stripMargin
-  }
-
-  private val perceptualFpsCtes: String = perceptualFpsCtesOver("documents")
-
-  /** q364/q365: the 128-BIT fingerprint replayed bit-exact — the 64-bit
-    * nibble-grid device run over all 32 md5 hex chars: chars 1–16
-    * reassemble to `fph`, chars 17–32 to `fpl` (each a big-endian 64-bit
-    * number via a per-half multiplier table, two's-complement wrapped).
-    * Ends at `pfps(id, fph, fpl)`. */
-  private def perceptual128FpsCtesOver(rel: String): String = {
-    val multipliers = ((1 to 16).map(c =>
-      s"($c, CAST('${BigInt(16).pow(16 - c)}' AS HUGEINT))") ++
-      (17 to 32).map(c =>
-        s"($c, CAST('${BigInt(16).pow(32 - c)}' AS HUGEINT))")).mkString(", ")
-    val wrap = (u: String) =>
-      s"""CAST(CASE
-         |      WHEN $u IS NULL THEN 0
-         |      WHEN $u >= CAST('9223372036854775808' AS HUGEINT)
-         |        THEN $u - CAST('18446744073709551616' AS HUGEINT)
-         |      ELSE $u END AS BIGINT)""".stripMargin
-    s"""psh AS (SELECT doc_id,
-       |    md5(unnest(list_transform(
-       |      generate_series(1, len(text) - 3),
-       |      i -> substr(text, i, 4)))) AS h
-       |  FROM $rel WHERE text IS NOT NULL),
-       |pcs AS (SELECT unnest(generate_series(1, 32)) AS c),
-       |pgrid AS (SELECT doc_id, c,
-       |    strpos('0123456789abcdef', substr(h, c, 1)) - 1 AS v,
-       |    count(*) AS n
-       |  FROM psh CROSS JOIN pcs GROUP BY 1, 2, 3),
-       |pbs AS (SELECT unnest(generate_series(0, 3)) AS b),
-       |pbits AS (SELECT doc_id, c, b,
-       |    CASE WHEN sum(n * (2 * ((v >> b) & 1) - 1)) > 0
-       |         THEN 1 ELSE 0 END AS bit
-       |  FROM pgrid CROSS JOIN pbs GROUP BY 1, 2, 3),
-       |pnibs AS (SELECT doc_id, c, CAST(sum(bit << b) AS HUGEINT) AS nv
-       |  FROM pbits GROUP BY 1, 2),
-       |pm(c, mult) AS (VALUES $multipliers),
-       |pfpu AS (SELECT doc_id,
-       |    sum(CASE WHEN c <= 16 THEN nv * mult END) AS uh,
-       |    sum(CASE WHEN c >= 17 THEN nv * mult END) AS ul
-       |  FROM pnibs JOIN pm USING (c) GROUP BY 1),
-       |pfps AS (SELECT d.doc_id AS id,
-       |    ${wrap("f.uh")} AS fph,
-       |    ${wrap("f.ul")} AS fpl
-       |  FROM $rel d LEFT JOIN pfpu f USING (doc_id))""".stripMargin
-  }
-
-  /** The 128-bit scale-adaptive band tail: width mirrors
-    * `Multimodal.recommendedWidth128` (clamp {4,8,16,32} — the 32-bit
-    * cap the 64-bit tier cannot reach), bands = 128/width, the first
-    * 64/width bands read `fph`, the rest `fpl`. Since r10 the tail also
-    * DERIVES THE VERIFY RADIUS (`Multimodal.recommendedRadius128`'s SQL
-    * twin): `pham` holds banded id pairs with their Hamming distance at
-    * the cap 24, `psw` counts them per grid radius {8,12,16,20,24}, and
-    * `prad` picks the largest radius whose pair count stays within 16
-    * pairs per fingerprint row (budget = 16·count(pfps)), falling back
-    * to the smallest. Ends at `pham(id_a, id_b, ham)` + `prad(rr)`. */
-  private val perceptual128BandTailCtes: String =
-    """pnn AS (SELECT count(*) AS n FROM documents),
-      |pwb AS (SELECT CASE WHEN bb <= 4 THEN 4 WHEN bb <= 8 THEN 8
-      |               WHEN bb <= 16 THEN 16 ELSE 32 END AS w FROM (
-      |  SELECT greatest(2, coalesce((SELECT min(b) FROM generate_series(2, 24) g(b), pnn
-      |           WHERE 150 * (CAST(1 AS BIGINT) << b) >= pnn.n), 24)) AS bb)),
-      |pbands AS (SELECT unnest(generate_series(0, (128 // (SELECT w FROM pwb)) - 1)) AS band),
-      |pbt AS (SELECT id, band,
-      |    (CASE WHEN band < 64 // (SELECT w FROM pwb) THEN fph ELSE fpl END
-      |      >> ((band % (64 // (SELECT w FROM pwb))) * (SELECT w FROM pwb)))
-      |      & (CASE WHEN (SELECT w FROM pwb) = 64 THEN -1
-      |         ELSE ((CAST(1 AS BIGINT) << (SELECT w FROM pwb)) - 1) END) AS bucket
-      |  FROM pfps CROSS JOIN pbands),
-      |pcand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-      |  FROM pbt a JOIN pbt b ON a.band = b.band AND a.bucket = b.bucket
-      |    AND a.id < b.id),
-      |pham AS (SELECT c.id_a, c.id_b,
-      |    CAST(bit_count(xor(fa.fph, fb.fph)) + bit_count(xor(fa.fpl, fb.fpl)) AS BIGINT) AS ham
-      |  FROM pcand c JOIN pfps fa ON c.id_a = fa.id
-      |  JOIN pfps fb ON c.id_b = fb.id
-      |  WHERE bit_count(xor(fa.fph, fb.fph)) + bit_count(xor(fa.fpl, fb.fpl)) <= 24),
-      |psw AS (SELECT g.r, CAST(count(h.ham) AS BIGINT) AS n
-      |  FROM (VALUES (8), (12), (16), (20), (24)) g(r)
-      |  LEFT JOIN pham h ON h.ham <= g.r GROUP BY g.r),
-      |prad AS (SELECT coalesce(max(r) FILTER (WHERE n <= 16 * (SELECT count(*) FROM pfps)), 8) AS rr
-      |  FROM psw)""".stripMargin
-
-  /** q355/q356/q361: the 128-bit scale-adaptive band tail over PER-FRAME
-    * fingerprints — [[perceptual128BandTailCtes]] with the video tier's
-    * two deltas: width derives from the SAMPLED-FRAME row count
-    * (count(documents)·4, mirroring `recommendedWidth128(4·count)`), and
-    * the band join key carries the frame index (`id % 64`) so a frame
-    * vouches only for its temporal counterpart. Ends at
-    * `vver(id_a, id_b)` over composite ids (verified 128-bit
-    * Hamming ≤ 24). */
-  private def video128BandTailCtesOver(rel: String): String =
-    s"""vnn AS (SELECT count(*) * 4 AS n FROM documents),
-      |vwb AS (SELECT CASE WHEN bb <= 4 THEN 4 WHEN bb <= 8 THEN 8
-      |               WHEN bb <= 16 THEN 16 ELSE 32 END AS w FROM (
-      |  SELECT greatest(2, coalesce((SELECT min(b) FROM generate_series(2, 24) g(b), vnn
-      |           WHERE 150 * (CAST(1 AS BIGINT) << b) >= vnn.n), 24)) AS bb)),
-      |vbands AS (SELECT unnest(generate_series(0, (128 // (SELECT w FROM vwb)) - 1)) AS band),
-      |vbt AS (SELECT id, band,
-      |    (CASE WHEN band < 64 // (SELECT w FROM vwb) THEN fph ELSE fpl END
-      |      >> ((band % (64 // (SELECT w FROM vwb))) * (SELECT w FROM vwb)))
-      |      & (CASE WHEN (SELECT w FROM vwb) = 64 THEN -1
-      |         ELSE ((CAST(1 AS BIGINT) << (SELECT w FROM vwb)) - 1) END) AS bucket
-      |  FROM $rel CROSS JOIN vbands),
-      |vcand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-      |  FROM vbt a JOIN vbt b ON a.band = b.band AND a.bucket = b.bucket
-      |    AND a.id % 64 = b.id % 64 AND a.id < b.id),
-      |vham AS (SELECT c.id_a, c.id_b,
-      |    CAST(bit_count(xor(fa.fph, fb.fph)) + bit_count(xor(fa.fpl, fb.fpl)) AS BIGINT) AS ham
-      |  FROM vcand c JOIN pfps fa ON c.id_a = fa.id
-      |  JOIN pfps fb ON c.id_b = fb.id
-      |  WHERE bit_count(xor(fa.fph, fb.fph)) + bit_count(xor(fa.fpl, fb.fpl)) <= 24),
-      |vsw AS (SELECT g.r, CAST(count(h.ham) AS BIGINT) AS n
-      |  FROM (VALUES (8), (12), (16), (20), (24)) g(r)
-      |  LEFT JOIN vham h ON h.ham <= g.r GROUP BY g.r),
-      |vrad AS (SELECT coalesce(max(r) FILTER (WHERE n <= 16 * (SELECT count(*) FROM $rel)), 8) AS rr
-      |  FROM vsw),
-      |vver AS (SELECT id_a, id_b FROM vham WHERE ham <= (SELECT rr FROM vrad))""".stripMargin
-
-  private val video128BandTailCtes: String = video128BandTailCtesOver("pfps")
-
-  /** The 128-bit banded pair SELECT over `pham`/`prad` — shared final
-    * stage of q348/q352/q358/q364: pairs at the DERIVED radius (≤ the
-    * cap 24, the 3/16 proportional default the rule falls back to when
-    * density is affordable). */
-  private val perceptual128PairSelect: String =
-    """SELECT id_a, id_b, ham AS hamming
-      |FROM pham WHERE ham <= (SELECT rr FROM prad)""".stripMargin
-
-  /** The 128-bit recall-contract tail (banded vs exact Hamming, BOTH at
-    * the derived radius `prad.rr`, subset pinned TRUE) — shared by
-    * q349/q353/q359/q365. */
-  private val perceptual128RecallTail: String =
-    """banded AS (SELECT id_a, id_b
-      |  FROM pham WHERE ham <= (SELECT rr FROM prad)),
-      |ex AS (SELECT CAST(count(*) AS BIGINT) AS n_exact
-      |  FROM pfps a JOIN pfps b ON a.id < b.id
-      |  WHERE bit_count(xor(a.fph, b.fph)) + bit_count(xor(a.fpl, b.fpl))
-      |    <= (SELECT rr FROM prad)),
-      |bn AS (SELECT CAST(count(*) AS BIGINT) AS n_banded FROM banded)
-      |SELECT n_exact, n_banded,
-      |  CASE WHEN n_exact = 0 THEN 1.0
-      |    ELSE round(CAST(n_banded AS DOUBLE) / n_exact, 6) END AS recall,
-      |  TRUE AS banded_subset_exact
-      |FROM ex CROSS JOIN bn""".stripMargin
-
-  /** q348/q349: the CONTAINER-TRUE decoded-luma content replayed WITHOUT
-    * byte parsing — pixel block j of the word-sampled P6 synthesis
-    * ([[graft.ops.Multimodal.synthesizePpmFromWords]], 8×8 = 12 blocks)
-    * is `md5(word_{⌊j·nWords/12⌋} || ':pximg:' || j)`, its 16 digest
-    * bytes are consecutive hex pairs, and per-pixel luma is the sum of 3
-    * consecutive bytes — exactly what the real P6 parser emits after
-    * walking the actual payload. Ends at `rdocs(doc_id, text)`, the
-    * (id, decoded-content) relation the fingerprint grid then consumes. */
-  private def ppmRealContentCtesOver(rel: String): String =
-    s"""rwords AS (SELECT doc_id, string_split(text, ' ') AS ws
-      |  FROM $rel WHERE text IS NOT NULL),
-      |rblk AS (SELECT doc_id, j,
-      |    md5(ws[(j * len(ws)) // 12 + 1] || ':pximg:' || j) AS h
-      |  FROM rwords CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS j)),
-      |rbytes AS (SELECT doc_id, j * 16 + m AS k,
-      |    CAST(('0x' || substr(h, 2 * m + 1, 2)) AS INTEGER) AS v
-      |  FROM rblk CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS m)),
-      |rluma AS (SELECT doc_id, k // 3 AS px, CAST(sum(v) AS BIGINT) AS luma
-      |  FROM rbytes GROUP BY 1, 2),
-      |rdocs AS (SELECT doc_id,
-      |    string_agg(CAST(luma AS VARCHAR), ' ' ORDER BY px) AS text
-      |  FROM rluma GROUP BY 1)""".stripMargin
-
-  private val ppmRealContentCtes: String = ppmRealContentCtesOver("documents")
-
-  /** The SCALE-ADAPTIVE band bucket join over `pfps` — ends at
-    * `pcand(id_a, id_b)` (deduped, a < b). Band WIDTH mirrors
-    * `Multimodal.recommendedBands`: the smallest b in [2,24] with
-    * 150·2^b ≥ count(documents) (integer ⌈log2(n/150)⌉), rounded up to a
-    * power of two and clamped to {4, 8, 16}; bands = 64 / width. Masked
-    * extraction `(fp >> s) & (2^w − 1)` reads bits s..s+w−1 identically
-    * under DuckDB's shift and Spark's `shiftright` + AND. */
-  private val perceptualBandTailCtes: String =
-    """pnn AS (SELECT count(*) AS n FROM documents),
-      |pwb AS (SELECT CASE WHEN bb <= 4 THEN 4 WHEN bb <= 8 THEN 8 ELSE 16 END AS w FROM (
-      |  SELECT greatest(2, coalesce((SELECT min(b) FROM generate_series(2, 24) g(b), pnn
-      |           WHERE 150 * (CAST(1 AS BIGINT) << b) >= pnn.n), 24)) AS bb)),
-      |pbands AS (SELECT unnest(generate_series(0, (64 // (SELECT w FROM pwb)) - 1)) AS band),
-      |pbt AS (SELECT id, band,
-      |    (fp >> (band * (SELECT w FROM pwb))) & ((CAST(1 AS BIGINT) << (SELECT w FROM pwb)) - 1) AS bucket
-      |  FROM pfps CROSS JOIN pbands),
-      |pcand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-      |  FROM pbt a JOIN pbt b ON a.band = b.band AND a.bucket = b.bucket
-      |    AND a.id < b.id)""".stripMargin
-
-  /** The 64-bit DERIVED-RADIUS tail (VERDICT r10 task 5 — the legacy
-    * tier joins the rule the 128-bit family carries): `p64ham` holds
-    * banded id pairs with their Hamming distance at the cap 12 (the
-    * historical fixed default), `p64sw` counts them per grid radius
-    * {4,6,8,10,12}, `p64rad` picks the largest radius whose pair count
-    * stays within 16 pairs per fingerprint row (fallback: the
-    * smallest) — `Multimodal.recommendedRadius64`'s SQL twin, so the
-    * rule reproduces 12 wherever density is affordable and a drifting
-    * radius is a hash mismatch. Shared by q336/q337/q338. */
-  private val perceptual64SweepTailCtes: String =
-    """p64ham AS (SELECT c.id_a, c.id_b,
-      |    CAST(bit_count(xor(fa.fp, fb.fp)) AS BIGINT) AS ham
-      |  FROM pcand c JOIN pfps fa ON c.id_a = fa.id
-      |  JOIN pfps fb ON c.id_b = fb.id
-      |  WHERE bit_count(xor(fa.fp, fb.fp)) <= 12),
-      |p64sw AS (SELECT g.r, CAST(count(h.ham) AS BIGINT) AS n
-      |  FROM (VALUES (4), (6), (8), (10), (12)) g(r)
-      |  LEFT JOIN p64ham h ON h.ham <= g.r GROUP BY g.r),
-      |p64rad AS (SELECT coalesce(max(r) FILTER (WHERE n <= 16 * (SELECT count(*) FROM pfps)), 4) AS rr
-      |  FROM p64sw)""".stripMargin
-
-  private val jaccardTailSql: String =
-    """pairs AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
-      |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)
-      |SELECT p.id_a, p.id_b,
-      |  CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) AS jaccard
-      |FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id JOIN sizes sb ON p.id_b = sb.doc_id
-      |WHERE CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5""".stripMargin
-
-  /** MinHash+LSH CTE chain — `sh`/`sigs`/`banded`/`cand`/`pairs`/`sizes`,
-    * shared by the pair oracle (q22), the LSH end-to-end drop (q43), and
-    * the curation composite (q53, over its `eligible` CTE). */
-  private def minhashCtes(n: Int, bands: Int, rows: Int,
-                          rel: String = "documents"): String = {
-    val h = bands * rows
-    val sigCols = (0 until h)
-      .map(i => s"min(md5('$i:' || shingle)) AS sig_$i").mkString(",\n    ")
-    val bandRows = (0 until bands).map { b =>
-      val slots = (b * rows until b * rows + rows).map(r => s"sig_$r").mkString(", ")
-      s"SELECT doc_id, $b AS band, md5(concat_ws('|', $slots)) AS bh FROM sigs"
-    }.mkString("\n  UNION ALL\n  ")
-    s"""sh AS (${shingleSql(n, rel)}),
-       |sigs AS (SELECT doc_id,
-       |    $sigCols
-       |  FROM sh GROUP BY doc_id),
-       |banded AS (
-       |  $bandRows),
-       |cand AS (
-       |  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-       |  FROM banded x JOIN banded y ON x.band = y.band AND x.bh = y.bh AND x.doc_id < y.doc_id),
-       |pairs AS (
-       |  SELECT c.id_a, c.id_b, count(*) AS n_common
-       |  FROM cand c JOIN sh a ON a.doc_id = c.id_a JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-       |  GROUP BY 1, 2),
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)""".stripMargin
-  }
-
-  /** Batch-vs-corpus MinHash+LSH oracle (q49): the same signature/banding
-    * chain as [[minhashCtes]] built per side, candidates = corpus-band ⋈
-    * batch-band only. */
-  /** One corpus↔batch MinHash+LSH verification chain as CTEs, every name
-    * suffixed with `_$sfx` so several instantiations compose in one WITH
-    * (q49 uses one; q110's two-batch incremental ingest uses two). The
-    * final `vp_$sfx` CTE holds the verified pairs (jaccard ≥ `minJ`). */
-  private def minhashCrossCtes(n: Int, bands: Int, rows: Int, minJ: Double,
-                               corpusRel: String, batchRel: String,
-                               sfx: String): String = {
-    val h = bands * rows
-    def sigCte(sh: String) = (0 until h)
-      .map(i => s"min(md5('$i:' || shingle)) AS sig_$i").mkString(",\n    ") match {
-        case cols => s"SELECT doc_id,\n    $cols\n  FROM $sh GROUP BY doc_id"
-      }
-    def bandCte(sigs: String) = (0 until bands).map { b =>
-      val slots = (b * rows until b * rows + rows).map(r => s"sig_$r").mkString(", ")
-      s"SELECT doc_id, $b AS band, md5(concat_ws('|', $slots)) AS bh FROM $sigs"
-    }.mkString("\n  UNION ALL\n  ")
-    s"""sh_c_$sfx AS (${shingleSql(n, corpusRel)}),
-       |sh_b_$sfx AS (${shingleSql(n, batchRel)}),
-       |sigs_c_$sfx AS (${sigCte(s"sh_c_$sfx")}),
-       |sigs_b_$sfx AS (${sigCte(s"sh_b_$sfx")}),
-       |banded_c_$sfx AS (
-       |  ${bandCte(s"sigs_c_$sfx")}),
-       |banded_b_$sfx AS (
-       |  ${bandCte(s"sigs_b_$sfx")}),
-       |cand_$sfx AS (
-       |  SELECT DISTINCT c.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM banded_c_$sfx c JOIN banded_b_$sfx b ON c.band = b.band AND c.bh = b.bh),
-       |pairs_$sfx AS (
-       |  SELECT c.id_a, c.id_b, count(*) AS n_common
-       |  FROM cand_$sfx c JOIN sh_c_$sfx a ON a.doc_id = c.id_a
-       |              JOIN sh_b_$sfx b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-       |  GROUP BY 1, 2),
-       |sizes_c_$sfx AS (SELECT doc_id, count(*) AS n_sh FROM sh_c_$sfx GROUP BY 1),
-       |sizes_b_$sfx AS (SELECT doc_id, count(*) AS n_sh FROM sh_b_$sfx GROUP BY 1),
-       |vp_$sfx AS (
-       |  SELECT p.id_a, p.id_b,
-       |    CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) AS jaccard
-       |  FROM pairs_$sfx p JOIN sizes_c_$sfx sa ON p.id_a = sa.doc_id
-       |                    JOIN sizes_b_$sfx sb ON p.id_b = sb.doc_id
-       |  WHERE CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= $minJ)""".stripMargin
-  }
-
-  private def minhashCrossSql(n: Int, bands: Int, rows: Int): String =
-    s"""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-       |batch AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-       |${minhashCrossCtes(n, bands, rows, 0.5, "corpus", "batch", "x")}
-       |SELECT id_a AS corpus_id, id_b AS batch_id, jaccard FROM vp_x""".stripMargin
-
-  /** MinHash+LSH oracle: md5-based signatures, banded, verified. */
-  private def minhashSql(n: Int, bands: Int, rows: Int): String =
-    s"""WITH ${minhashCtes(n, bands, rows)}
-       |SELECT p.id_a, p.id_b,
-       |  CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) AS jaccard
-       |FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id JOIN sizes sb ON p.id_b = sb.doc_id
-       |WHERE CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5""".stripMargin
-
-  /** Transitive closure + min-label assignment over a CTE `jpairs(id_a,
-    * id_b)` (requires WITH RECURSIVE upstream): `assign(doc_id,
-    * cluster_id)` for every doc in `rel`. */
-  private def closureTailSql(rel: String = "documents"): String =
-    s"""sym AS (SELECT id_a AS a, id_b AS b FROM jpairs
-       |        UNION SELECT id_b, id_a FROM jpairs),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM sym
-       |  UNION
-       |  SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-       |assign AS (
-       |  SELECT d.doc_id,
-       |    least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS cluster_id
-       |  FROM $rel d LEFT JOIN reach r ON r.a = d.doc_id
-       |  GROUP BY d.doc_id)""".stripMargin
-
-  /** Shared CTE chain for the TF-IDF more-like-this retrieval: per-doc
-    * term weights → norms → query-side probe → cosine table, ending at
-    * CTE `sc(query_id, cand_id, cos)`. q178 ranks it; q181 reranks its
-    * top-k with late interaction. Also exposes `tf(doc, term, tf)`. */
-  private val moreLikeThisCtes: String =
-    """tf AS (SELECT doc, term, count(*) AS tf FROM
-      |    (SELECT doc_id AS doc, unnest(string_split(text, ' ')) AS term
-      |     FROM documents) GROUP BY 1, 2),
-      |dft AS (SELECT term, count(*) AS df_docs FROM tf GROUP BY 1),
-      |nn AS (SELECT count(*) AS n FROM documents),
-      |w AS (SELECT doc, tf.term,
-      |    CAST(tf AS DOUBLE) * (ln((CAST(n AS DOUBLE) + 1.0) /
-      |      (CAST(df_docs AS DOUBLE) + 1.0)) + 1.0) AS w
-      |  FROM tf JOIN dft ON tf.term = dft.term, nn
-      |  WHERE CAST(df_docs AS DOUBLE) <= 1.0 * n),
-      |nrm AS (SELECT doc, sqrt(sum(w * w)) AS nrm FROM w GROUP BY 1),
-      |q AS (SELECT doc AS query_id, term, w AS wq FROM w
-      |  WHERE doc IN (1, 2, 3, 4, 5)),
-      |dots AS (SELECT q.query_id, w.doc AS cand_id, sum(q.wq * w.w) AS dot
-      |  FROM q JOIN w ON q.term = w.term WHERE w.doc <> q.query_id
-      |  GROUP BY 1, 2),
-      |sc AS (SELECT d.query_id, d.cand_id,
-      |    round(d.dot / (nq.nrm * nc.nrm), 6) AS cos
-      |  FROM dots d JOIN nrm nq ON d.query_id = nq.doc
-      |  JOIN nrm nc ON d.cand_id = nc.doc)""".stripMargin
-
-  /** Shared recursive-CTE chain: near-dup pairs → transitive closure →
-    * per-doc min-reachable cluster id, as CTE `assign(doc_id, cluster_id)`.
-    * q33 selects the assignment; q35 the surviving representatives. */
-  private val clusterChainSql: String =
-    s"""WITH RECURSIVE sh AS (${shingleSql(3)}),
-       |pairs AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-       |jpairs AS (
-       |  SELECT p.id_a, p.id_b
-       |  FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id JOIN sizes sb ON p.id_b = sb.doc_id
-       |  WHERE CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5),
-       |${closureTailSql()}""".stripMargin
-
-  /** [[clusterChainSql]]'s LSH twin: `jpairs`/`assign` built from the
-    * BANDED MinHash candidate chain (q43's shape) instead of the exact
-    * shingle self-join — for the benched compositions that consume the
-    * scale path's pair table (q325/q335, the q141 precedent). */
-  private val lshClusterChainSql: String =
-    s"""WITH RECURSIVE ${minhashCtes(3, 4, 3)},
-       |jpairs AS (
-       |  SELECT p.id_a, p.id_b
-       |  FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id JOIN sizes sb ON p.id_b = sb.doc_id
-       |  WHERE CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5),
-       |${closureTailSql()}""".stripMargin
-
-  /** 16-bit md5-nibble SimHash oracle. */
-  private val simhashSql: String = {
-    val votes = (0 until 16).map(i =>
-      s"sum(CASE WHEN substr(h, ${i + 1}, 1) IN ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) AS v_$i")
-      .mkString(",\n    ")
-    val sig = (0 until 16).map(i =>
-      s"CASE WHEN v_$i > 0 THEN CAST(${1L << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END")
-      .mkString(" + ")
-    s"""WITH tok AS (
-       |  SELECT doc_id, md5(unnest(string_split(text, ' '))) AS h FROM documents),
-       |votes AS (SELECT doc_id,
-       |    $votes
-       |  FROM tok GROUP BY doc_id)
-       |SELECT doc_id, $sig AS simhash16 FROM votes""".stripMargin
-  }
-
-  private val cosineSql: String =
-    """SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-      |  round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS cos
-      |FROM embeddings a, embeddings b WHERE a.vec_id <> b.vec_id""".stripMargin
-
-  /** `Similarity.recommendedBits` mirrored in SQL: the smallest b in
-    * [2, 24] with 150·2^b ≥ n (integer form of ⌈log2(n/150)⌉ — exact at
-    * power-of-two boundaries on both engines). `nFrom` is a relation
-    * whose single row/column is the corpus count, e.g.
-    * `(SELECT count(*) AS n FROM embeddings)`. */
-  private def bitsSqlFrom(nFrom: String): String =
-    s"greatest(2, coalesce((SELECT min(b) FROM generate_series(2, 24) g(b), $nFrom nn " +
-      "WHERE 150 * (CAST(1 AS BIGINT) << b) >= nn.n), 24))"
-
-  /** md5-derandomized ±1 hyperplane CTEs (the exact `Similarity.rpPlanes`
-    * derivation — first md5 nibble of "rp:b:j:d" even → +1): `p(bits)`
-    * derived from `nFrom`, and `planes(band, bit, pl)`. */
-  private def rpPlanesCtes(bands: Int, nFrom: String): String =
-    s"""p AS (SELECT ${bitsSqlFrom(nFrom)} AS bits),
-       |planes AS (
-       |  SELECT band, bit,
-       |    list_transform(generate_series(0, 63),
-       |      d -> CASE WHEN (strpos('0123456789abcdef', substr(md5('rp:' || band || ':' || bit || ':' || d), 1, 1)) - 1) % 2 = 0
-       |           THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END) AS pl
-       |  FROM (SELECT unnest(generate_series(0, ${bands - 1})) AS band)
-       |  CROSS JOIN (SELECT unnest(generate_series(0, (SELECT bits FROM p) - 1)) AS bit))""".stripMargin
-
-  /** Per-(vec, band) RP bucket-string table over `rel` — left-to-right
-    * double inner products (list_inner_product accumulates like the dotF
-    * kernel), bits concatenated in bit order. */
-  private def rpBucketSql(rel: String): String =
-    s"""SELECT vec_id, band, string_agg(bch, '' ORDER BY bit) AS bucket FROM (
-       |    SELECT e.vec_id, pl.band, pl.bit,
-       |      CASE WHEN list_inner_product(CAST(e.embedding AS DOUBLE[]), pl.pl) >= 0 THEN '1' ELSE '0' END AS bch
-       |    FROM $rel e CROSS JOIN planes pl)
-       |  GROUP BY 1, 2""".stripMargin
-
-  /** q341/q342 shared CTE chain: planes + self-join bucket table + the
-    * deduped candidate pairs. Ends at `cand(id_a, id_b)`. */
-  private def rpBandedCtes(bands: Int): String =
-    s"""${rpPlanesCtes(bands, "(SELECT count(*) AS n FROM embeddings)")},
-       |banded AS (
-       |  ${rpBucketSql("embeddings")}),
-       |cand AS (
-       |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-       |  FROM banded a JOIN banded b
-       |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id)""".stripMargin
-
-  /** q342/q350 oracle: the RP-LSH recall contract at cosine threshold
-    * `thr` — the q341 candidate machinery judged against the exact pair
-    * set, subset + floor pinned TRUE (the Scala side derives the floor
-    * from the closed-form model; the oracle pins only the boolean). */
-  private def rpRecallSql(thr: String): String =
-    s"""WITH ${rpBandedCtes(16)},
-       |bp AS (
-       |  SELECT c.id_a, c.id_b
-       |  FROM cand c
-       |  JOIN embeddings x ON x.vec_id = c.id_a
-       |  JOIN embeddings y ON y.vec_id = c.id_b
-       |  WHERE round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[])), 6) >= $thr),
-       |pcx AS ($cosineSql),
-       |ex AS (SELECT CAST(count(*) AS BIGINT) AS n_exact FROM pcx
-       |  WHERE query_id < cand_id AND cos >= $thr),
-       |bn AS (SELECT CAST(count(*) AS BIGINT) AS n_banded FROM bp)
-       |SELECT CAST((SELECT bits FROM p) AS INTEGER) AS bits,
-       |  CAST(16 AS INTEGER) AS bands,
-       |  n_exact, n_banded,
-       |  CASE WHEN n_exact = 0 THEN 1.0
-       |    ELSE round(CAST(n_banded AS DOUBLE) / n_exact, 6) END AS recall,
-       |  TRUE AS banded_subset_exact,
-       |  TRUE AS meets_floor
-       |FROM ex CROSS JOIN bn""".stripMargin
-
-  /** q345/q351 oracle: the multi-probe gain contract at cosine threshold
-    * `thr` — flip position is the row_number-1 bit by (rounded |value| in
-    * DOUBLE space, bit), the probe bucket is substr surgery on the base
-    * bucket, candidates join (base ∪ probed) × base; superset and nonneg
-    * gain pinned TRUE (structural laws). */
-  private def multiProbeGainSql(thr: String): String =
-    s"""WITH p AS (SELECT bits, greatest(1, least(8, 64 // bits)) AS bands FROM (
-       |  SELECT ${bitsSqlFrom("(SELECT count(*) AS n FROM embeddings)")} AS bits)),
-       |banded AS (
-       |  ${dynamicBandedSql("embeddings")}),
-       |bandgrid AS (
-       |  SELECT e.vec_id, e.embedding, p.bits,
-       |    unnest(generate_series(0, p.bands - 1)) AS band
-       |  FROM embeddings e CROSS JOIN p),
-       |bitgrid AS (
-       |  SELECT vec_id, band, bits, embedding,
-       |    unnest(generate_series(0, bits - 1)) AS bit
-       |  FROM bandgrid),
-       |jst AS (
-       |  SELECT vec_id, band, bit AS jstar FROM (
-       |    SELECT vec_id, band, bit,
-       |      row_number() OVER (PARTITION BY vec_id, band
-       |        ORDER BY round(abs(CAST(embedding[band * bits + bit + 1] AS DOUBLE)), 6), bit) AS r
-       |    FROM bitgrid) WHERE r = 1),
-       |probed AS (
-       |  SELECT b.vec_id, b.band,
-       |    substr(b.bucket, 1, j.jstar) ||
-       |    CASE WHEN substr(b.bucket, j.jstar + 1, 1) = '1' THEN '0' ELSE '1' END ||
-       |    substr(b.bucket, j.jstar + 2) AS bucket
-       |  FROM banded b JOIN jst j ON b.vec_id = j.vec_id AND b.band = j.band),
-       |allp AS (SELECT * FROM banded UNION ALL SELECT * FROM probed),
-       |bcand AS (
-       |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-       |  FROM banded a JOIN banded b
-       |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-       |mcand AS (
-       |  SELECT DISTINCT least(x.vec_id, y.vec_id) AS id_a,
-       |    greatest(x.vec_id, y.vec_id) AS id_b
-       |  FROM allp x JOIN banded y
-       |    ON x.band = y.band AND x.bucket = y.bucket AND x.vec_id <> y.vec_id),
-       |bp AS (
-       |  SELECT c.id_a, c.id_b FROM bcand c
-       |  JOIN embeddings x ON x.vec_id = c.id_a
-       |  JOIN embeddings y ON y.vec_id = c.id_b
-       |  WHERE round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[])), 6) >= $thr),
-       |mp AS (
-       |  SELECT c.id_a, c.id_b FROM mcand c
-       |  JOIN embeddings x ON x.vec_id = c.id_a
-       |  JOIN embeddings y ON y.vec_id = c.id_b
-       |  WHERE round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[])), 6) >= $thr),
-       |pcx AS ($cosineSql),
-       |ex AS (SELECT CAST(count(*) AS BIGINT) AS n_exact FROM pcx
-       |  WHERE query_id < cand_id AND cos >= $thr),
-       |nb AS (SELECT CAST(count(*) AS BIGINT) AS n_base FROM bp),
-       |nm AS (SELECT CAST(count(*) AS BIGINT) AS n_multiprobe FROM mp)
-       |SELECT CAST((SELECT bits FROM p) AS INTEGER) AS bits,
-       |  CAST((SELECT bands FROM p) AS INTEGER) AS bands,
-       |  n_exact, n_base, n_multiprobe,
-       |  CASE WHEN n_exact = 0 THEN 1.0
-       |    ELSE round(CAST(n_base AS DOUBLE) / n_exact, 6) END AS recall_base,
-       |  CASE WHEN n_exact = 0 THEN 1.0
-       |    ELSE round(CAST(n_multiprobe AS DOUBLE) / n_exact, 6) END AS recall_multiprobe,
-       |  TRUE AS multiprobe_superset,
-       |  TRUE AS gain_nonneg
-       |FROM ex CROSS JOIN nb CROSS JOIN nm""".stripMargin
-
-  /** Sign-LSH band-table CTE body over `rel`, bucketing band b on dims
-    * [b·bits, (b+1)·bits) with bits/bands read from CTE `p(bits, bands)` —
-    * the dynamic twin of the frozen per-band UNION ALL the adaptive
-    * queries replaced. */
-  private def dynamicBandedSql(rel: String): String =
-    s"""SELECT vec_id, band,
-       |    array_to_string(list_transform(generate_series(band * bits + 1, band * bits + bits),
-       |      i -> CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END), '') AS bucket
-       |  FROM (SELECT e.vec_id, e.embedding, p.bits,
-       |          unnest(generate_series(0, p.bands - 1)) AS band
-       |        FROM $rel e CROSS JOIN p)""".stripMargin
-
-  private val langScoreSql: String = TextStats.langMarkers.map { case (lang, ms) =>
-    val set = ms.map(m => s"'$m'").mkString(", ")
-    s"CAST(len(list_filter(string_split(text, ' '), w -> w IN ($set))) AS INTEGER) AS score_$lang"
-  }.mkString(",\n  ")
-
-  /** md5-derived bucket in SQL: first 8 hex nibbles of md5(id) as an
-    * integer, mod `m` — the oracle twin of [[graft.ops.Sampling.md5Bucket]]
-    * (m = 100) and [[graft.ops.Packing.packGreedy]]'s shard (m = nShards). */
-  /** The id's 32-bit md5 prefix (first 8 hex nibbles as a uint32) — the
-    * shared hash device of [[md5ModSql]] and [[md5UniformSql]]. */
-  private def md5PrefixSql(idExpr: String): String = {
-    val nib = (k: Int) =>
-      s"(strpos('0123456789abcdef', substr(md5(CAST($idExpr AS VARCHAR)), $k, 1)) - 1)"
-    (1 to 8).map(k => s"${nib(k)} * ${math.pow(16, 8 - k).toLong}").mkString(" + ")
-  }
-
-  private def md5ModSql(idExpr: String, m: Int): String =
-    s"((${md5PrefixSql(idExpr)}) % $m)"
-
-  /** q197/q120: the Misra–Gries presence + undercount theorems pinned TRUE
-    * at summary size `k` (threshold N/(k+1)); exact counts replayed. */
-  private def mgBoundSql(k: Int): String =
-    s"""WITH tok AS (
-       |  SELECT source, unnest(string_split(text, ' ')) AS term FROM documents),
-       |ex AS (SELECT source, term, count(*) AS cnt FROM tok GROUP BY 1, 2),
-       |tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n_tokens
-       |        FROM ex GROUP BY 1)
-       |SELECT e.source, max(t.n_tokens) AS n_tokens,
-       |  CAST(sum(CASE WHEN e.cnt > CAST(t.n_tokens AS DOUBLE) / ${k + 1}.0
-       |                THEN 1 ELSE 0 END) AS BIGINT) AS n_heavy,
-       |  TRUE AS all_heavy_present, TRUE AS est_within_bound
-       |FROM ex e JOIN tot t USING (source) GROUP BY 1""".stripMargin
-
-  /** The raw 32-bit md5 prefix (no modulus) as a uniform in [0, 1) —
-    * [[graft.ops.Sampling.weightedSample]]'s `u`. */
-  private def md5UniformSql(idExpr: String): String =
-    s"(CAST(${md5PrefixSql(idExpr)} AS DOUBLE) / 4294967296.0)"
-
-  private def md5BucketSql(idExpr: String): String = md5ModSql(idExpr, 100)
-
-  /** q65 oracle: two Lloyd iterations. Mirrors [[graft.ops.Similarity
-    * .kmeansFit]] exactly: md5-hashed seed, rounded-cosine assignment
-    * (ties to the lower centroid id), per-cell element means rounded to
-    * 6 dp and round-tripped through FLOAT between iterations (the Spark
-    * side feeds float arrays to the native dot kernel). */
-  private def kmeansStepSql(i: Int, centsRel: String): String =
-    s"""sim$i AS (
-       |  SELECT e.vec_id, c.cent_id,
-       |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.cvec), 6) AS csim
-       |  FROM embeddings e CROSS JOIN $centsRel c),
-       |a$i AS (
-       |  SELECT vec_id, cent_id FROM (
-       |    SELECT vec_id, cent_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id ASC) AS r
-       |    FROM sim$i) WHERE r = 1),
-       |m$i AS (
-       |  SELECT a.cent_id AS cell,
-       |    unnest(CAST(e.embedding AS DOUBLE[])) AS v,
-       |    unnest(generate_series(0, len(e.embedding) - 1)) AS dim
-       |  FROM a$i a JOIN embeddings e ON e.vec_id = a.vec_id)""".stripMargin
-
-  /** Two Lloyd iterations ending at the m2 member/element block — shared
-    * WITH-clause prefix of the q65 fit oracle and the q83 SemDeDup oracle. */
-  /** Two Lloyd iterations from the md5-seeded centroids. `cells` is a SQL
-    * expression for the seed count: the model-choice consumers (q65 fit,
-    * q232 silhouette) keep the literal 8; the OCCUPANCY-sensitive
-    * consumers (q83 semantic dedup, q327 outliers — their within-cell
-    * pair stage is quadratic in cell size) derive ⌈√count⌉ like q38. */
-  private def kmeansTwoIterPrefix(cells: String = "8"): String =
-    s"""WITH cents0 AS (
-       |  SELECT vec_id AS cent_id, CAST(embedding AS DOUBLE[]) AS cvec
-       |  FROM embeddings
-       |  QUALIFY row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) <= ($cells)),
-       |${kmeansStepSql(1, "cents0")},
-       |c1 AS (
-       |  SELECT cell, dim, CAST(CAST(round(avg(v), 6) AS FLOAT) AS DOUBLE) AS cv
-       |  FROM m1 GROUP BY 1, 2),
-       |cents1 AS (SELECT cell AS cent_id, list(cv ORDER BY dim) AS cvec FROM c1 GROUP BY 1),
-       |${kmeansStepSql(2, "cents1")}""".stripMargin
-
-  private def kmeansFitSql: String =
-    s"""${kmeansTwoIterPrefix()}
-       |SELECT cell, CAST(count(*) AS BIGINT) AS n_members,
-       |  CAST(dim AS INTEGER) AS dim, round(avg(v), 6) AS mean_val
-       |FROM m2 GROUP BY cell, dim""".stripMargin
-
-  /** q116/q117 oracle building block: PQ sub-quantizer training for
-    * subspace `j` of a 64-dim vector split in two — the kmeans CTE
-    * pattern specialized to vector slices and the reduced-L2 ranking key
-    * `round(|c|² − 2·x·c, 6)` (list_inner_product accumulates doubles
-    * left-to-right exactly like the dotF kernel, so assignment is
-    * engine-exact, not approximately-equal). Ends at a${j}1 = the final
-    * (vec_id, code) assignment against the recoded post-iteration book. */
-  private def pqSubspaceCtes(j: Int): String = {
-    val lo = j * 32 + 1
-    val hi = (j + 1) * 32
-    val sub = s"CAST(e.embedding[$lo:$hi] AS DOUBLE[])"
-    s"""cents${j}0 AS (
-       |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS code,
-       |    CAST(embedding[$lo:$hi] AS DOUBLE[]) AS cvec
-       |  FROM embeddings WHERE embedding IS NOT NULL
-       |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
-       |d${j}0 AS (
-       |  SELECT e.vec_id, c.code,
-       |    round(list_inner_product(c.cvec, c.cvec)
-       |      - 2 * list_inner_product($sub, c.cvec), 6) AS rd
-       |  FROM embeddings e CROSS JOIN cents${j}0 c WHERE e.embedding IS NOT NULL),
-       |a${j}0 AS (
-       |  SELECT vec_id, code FROM (
-       |    SELECT vec_id, code,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY rd ASC, code ASC) AS r
-       |    FROM d${j}0) WHERE r = 1),
-       |m$j AS (
-       |  SELECT a.code, unnest($sub) AS v,
-       |    unnest(generate_series(1, ${hi - lo + 1})) AS dim
-       |  FROM a${j}0 a JOIN embeddings e ON e.vec_id = a.vec_id),
-       |c${j}1 AS (
-       |  SELECT code, dim, CAST(CAST(round(avg(v), 6) AS FLOAT) AS DOUBLE) AS cv
-       |  FROM m$j GROUP BY 1, 2),
-       |cb$j AS (
-       |  SELECT row_number() OVER (ORDER BY code) - 1 AS code, cvec FROM (
-       |    SELECT code, list(cv ORDER BY dim) AS cvec FROM c${j}1 GROUP BY 1)),
-       |d${j}1 AS (
-       |  SELECT e.vec_id, c.code,
-       |    round(list_inner_product(c.cvec, c.cvec)
-       |      - 2 * list_inner_product($sub, c.cvec), 6) AS rd
-       |  FROM embeddings e CROSS JOIN cb$j c WHERE e.embedding IS NOT NULL),
-       |a${j}1 AS (
-       |  SELECT vec_id, code FROM (
-       |    SELECT vec_id, code,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY rd ASC, code ASC) AS r
-       |    FROM d${j}1) WHERE r = 1)""".stripMargin
-  }
-
-  /** q116 oracle: both sub-quantizers' final assignments, exploded to the
-    * (vec_id, subspace, code) layout of the Spark side's posexplode. */
-  private def pqEncodeSql: String =
-    s"""WITH ${pqSubspaceCtes(0)},
-       |${pqSubspaceCtes(1)}
-       |SELECT vec_id, CAST(0 AS INTEGER) AS subspace, CAST(code AS INTEGER) AS code FROM a01
-       |UNION ALL
-       |SELECT vec_id, CAST(1 AS INTEGER) AS subspace, CAST(code AS INTEGER) AS code FROM a11""".stripMargin
-
-  /** q118 oracle: q117's scoring behind an IVF gate — coarse centroids are
-    * the md5-sampled corpus slice, corpus rows sit in their argmax-cosine
-    * cell (ties to lower cent_id — the ivfPqTopK sort-by-id device), each
-    * query probes its top-2 cells, and only cell-mates get scored. */
-  private def ivfPqTopKSql: String =
-    s"""WITH ${pqSubspaceCtes(0)},
-       |${pqSubspaceCtes(1)},
-       |pcells AS (
-       |  SELECT least(65536, greatest(4, CAST(ceil(sqrt(CAST(count(*) AS DOUBLE))) AS INTEGER))) AS cells
-       |  FROM embeddings WHERE vec_id % 50 <> 0),
-       |cents AS (
-       |  SELECT vec_id AS cent_id, CAST(embedding AS DOUBLE[]) AS cvec
-       |  FROM embeddings CROSS JOIN pcells
-       |  WHERE vec_id % 50 <> 0 AND embedding IS NOT NULL
-       |  QUALIFY row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) <= pcells.cells),
-       |asim AS (
-       |  SELECT e.vec_id, c.cent_id,
-       |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.cvec), 6) AS csim
-       |  FROM embeddings e CROSS JOIN cents c
-       |  WHERE e.vec_id % 50 <> 0 AND e.embedding IS NOT NULL),
-       |cellof AS (
-       |  SELECT vec_id, cent_id FROM (
-       |    SELECT vec_id, cent_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id ASC) AS r
-       |    FROM asim) WHERE r = 1),
-       |q AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  WHERE vec_id % 50 = 0 AND embedding IS NOT NULL),
-       |qsim AS (
-       |  SELECT q.vec_id AS query_id, c.cent_id,
-       |    round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), c.cvec), 6) AS csim
-       |  FROM q CROSS JOIN cents c),
-       |probes AS (
-       |  SELECT query_id, cent_id FROM (
-       |    SELECT query_id, cent_id,
-       |      row_number() OVER (PARTITION BY query_id ORDER BY csim DESC, cent_id ASC) AS r
-       |    FROM qsim) WHERE r <= 2),
-       |enc AS (
-       |  SELECT a0.vec_id, a0.code AS c0, a1.code AS c1
-       |  FROM a01 a0 JOIN a11 a1 ON a0.vec_id = a1.vec_id
-       |  WHERE a0.vec_id % 50 <> 0),
-       |sc AS (
-       |  SELECT p.query_id, a.vec_id AS cand_id,
-       |    round(round(list_inner_product(CAST(q.embedding[1:32] AS DOUBLE[]), b0.cvec), 6)
-       |        + round(list_inner_product(CAST(q.embedding[33:64] AS DOUBLE[]), b1.cvec), 6), 6) AS score
-       |  FROM probes p
-       |  JOIN q ON q.vec_id = p.query_id
-       |  JOIN cellof a ON a.cent_id = p.cent_id
-       |  JOIN enc ON enc.vec_id = a.vec_id
-       |  JOIN cb0 b0 ON b0.code = enc.c0
-       |  JOIN cb1 b1 ON b1.code = enc.c1)
-       |SELECT query_id, cand_id, score,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id ASC) AS INTEGER) AS rank
-       |FROM sc
-       |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id ASC) <= 10""".stripMargin
-
-  /** q123 oracle: the q86 BM25 body and the q85 hash-embed body, each
-    * ranked and cut to 100, fused by `Σ 1/(60 + rank)` — the query's own
-    * hash vector built from a VALUES list with the same nibble
-    * arithmetic. */
-  private def hybridRrfSql: String = {
-    val nib9q = "(strpos('0123456789abcdef', substr(md5(CAST(tok AS VARCHAR)), 9, 1)) - 1)"
-    s"""WITH dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-       |            FROM documents),
-       |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       |          CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl FROM dl),
-       |qt AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM (
-       |         SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-       |       WHERE term IN ('spark', 'table', 'agg') GROUP BY 1, 2),
-       |dfd AS (SELECT term, CAST(count(*) AS BIGINT) AS df_docs FROM qt GROUP BY 1),
-       |sc AS (SELECT q.doc_id, q.term,
-       |        ln(1.0 + (CAST(n_docs AS DOUBLE) - CAST(df_docs AS DOUBLE) + 0.5)
-       |          / (CAST(df_docs AS DOUBLE) + 0.5))
-       |         * (CAST(tf AS DOUBLE) * 2.5)
-       |         / (CAST(tf AS DOUBLE) + 1.5 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl)) AS s
-       |      FROM qt q JOIN dfd USING (term) JOIN dl USING (doc_id) CROSS JOIN tot),
-       |ag AS (SELECT doc_id,
-       |        sum(CASE WHEN term = 'spark' THEN s END) AS s0,
-       |        sum(CASE WHEN term = 'table' THEN s END) AS s1,
-       |        sum(CASE WHEN term = 'agg' THEN s END) AS s2
-       |      FROM sc GROUP BY 1),
-       |lex AS (SELECT doc_id, round(coalesce(s0, 0) + coalesce(s1, 0) + coalesce(s2, 0), 6) AS bm25
-       |        FROM ag ORDER BY bm25 DESC, doc_id LIMIT 100),
-       |lrank AS (SELECT doc_id,
-       |    row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS r_lex FROM lex),
-       |dtok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-       |dv AS (SELECT doc_id, CAST(${md5ModSql("tok", 16)} AS INTEGER) AS dim,
-       |         CAST(sum(($nib9q % 2) * 2 - 1) AS BIGINT) AS val
-       |       FROM dtok GROUP BY 1, 2 HAVING sum(($nib9q % 2) * 2 - 1) <> 0),
-       |qtok AS (SELECT unnest(['spark', 'table', 'agg']) AS tok),
-       |qv AS (SELECT CAST(${md5ModSql("tok", 16)} AS INTEGER) AS dim,
-       |         CAST(sum(($nib9q % 2) * 2 - 1) AS BIGINT) AS qval
-       |       FROM qtok GROUP BY 1 HAVING sum(($nib9q % 2) * 2 - 1) <> 0),
-       |qn AS (SELECT sqrt(CAST(sum(qval * qval) AS DOUBLE)) AS qnorm FROM qv),
-       |dn AS (SELECT doc_id, CAST(sum(val * val) AS BIGINT) AS n2 FROM dv GROUP BY 1),
-       |dd AS (SELECT dv.doc_id, CAST(sum(dv.val * qv.qval) AS BIGINT) AS dot
-       |       FROM dv JOIN qv USING (dim) GROUP BY 1),
-       |cosd AS (SELECT dn.doc_id,
-       |    round(CAST(coalesce(dd.dot, 0) AS DOUBLE)
-       |      / (sqrt(CAST(dn.n2 AS DOUBLE)) * qn.qnorm), 6) AS cos
-       |  FROM dn LEFT JOIN dd USING (doc_id) CROSS JOIN qn),
-       |vcut AS (SELECT doc_id, cos FROM cosd ORDER BY cos DESC, doc_id LIMIT 100),
-       |vrank AS (SELECT doc_id,
-       |    row_number() OVER (ORDER BY cos DESC, doc_id ASC) AS r_vec FROM vcut),
-       |fused AS (
-       |  SELECT coalesce(l.doc_id, v.doc_id) AS doc_id,
-       |    round(coalesce(1.0 / (60 + l.r_lex), 0)
-       |        + coalesce(1.0 / (60 + v.r_vec), 0), 6) AS rrf
-       |  FROM lrank l FULL OUTER JOIN vrank v ON l.doc_id = v.doc_id)
-       |SELECT doc_id, rrf,
-       |  CAST(row_number() OVER (ORDER BY rrf DESC, doc_id ASC) AS INTEGER) AS rank
-       |FROM fused
-       |QUALIFY row_number() OVER (ORDER BY rrf DESC, doc_id ASC) <= 50""".stripMargin
-  }
-
-  /** q121/q122 oracle building block: the two 32-bit sign words of a
-    * 64-dim embedding, as flat CASE-sum bit terms (disjoint bits: + == OR;
-    * 32-bit words keep every value positive, no sign-bit shift). */
-  private def signWordSql(w: Int): String =
-    (0 until 32).map(b =>
-      s"(CASE WHEN embedding[${w * 32 + b + 1}] >= 0 THEN ${1L << b} ELSE 0 END)")
-      .mkString(" + ")
-
-  /** q121 oracle: both packed words per vector, exploded like posexplode. */
-  private def binarizeSql: String =
-    s"""WITH b AS (
-       |  SELECT vec_id, CAST(${signWordSql(0)} AS BIGINT) AS c0,
-       |    CAST(${signWordSql(1)} AS BIGINT) AS c1
-       |  FROM embeddings WHERE embedding IS NOT NULL)
-       |SELECT vec_id, CAST(0 AS INTEGER) AS word, c0 AS code FROM b
-       |UNION ALL
-       |SELECT vec_id, CAST(1 AS INTEGER) AS word, c1 AS code FROM b""".stripMargin
-
-  /** q122 oracle: all-integer Hamming ranking — xor + bit_count per word,
-    * ties to the lower candidate id. */
-  private def hammingTopKSql: String =
-    s"""WITH b AS (
-       |  SELECT vec_id, CAST(${signWordSql(0)} AS BIGINT) AS c0,
-       |    CAST(${signWordSql(1)} AS BIGINT) AS c1
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |q AS (SELECT * FROM b WHERE vec_id % 50 = 0),
-       |c AS (SELECT * FROM b WHERE vec_id % 50 <> 0),
-       |sc AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-       |    CAST(bit_count(xor(q.c0, c.c0)) + bit_count(xor(q.c1, c.c1)) AS BIGINT) AS hamming
-       |  FROM q CROSS JOIN c)
-       |SELECT query_id, cand_id, hamming,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY hamming ASC, cand_id ASC) AS INTEGER) AS rank
-       |FROM sc
-       |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY hamming ASC, cand_id ASC) <= 10""".stripMargin
-
-  /** q117 oracle: ADC scoring — per-subspace LUT entries rounded at 6 dp
-    * exactly like the Spark lut, summed in subspace order, re-rounded. */
-  private def pqTopKSql: String =
-    s"""WITH ${pqSubspaceCtes(0)},
-       |${pqSubspaceCtes(1)},
-       |enc AS (
-       |  SELECT a0.vec_id, a0.code AS c0, a1.code AS c1
-       |  FROM a01 a0 JOIN a11 a1 ON a0.vec_id = a1.vec_id
-       |  WHERE a0.vec_id % 50 <> 0),
-       |q AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  WHERE vec_id % 50 = 0 AND embedding IS NOT NULL),
-       |sc AS (
-       |  SELECT q.vec_id AS query_id, x.vec_id AS cand_id,
-       |    round(round(list_inner_product(CAST(q.embedding[1:32] AS DOUBLE[]), b0.cvec), 6)
-       |        + round(list_inner_product(CAST(q.embedding[33:64] AS DOUBLE[]), b1.cvec), 6), 6) AS score
-       |  FROM q CROSS JOIN enc x
-       |  JOIN cb0 b0 ON b0.code = x.c0
-       |  JOIN cb1 b1 ON b1.code = x.c1)
-       |SELECT query_id, cand_id, score,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id ASC) AS INTEGER) AS rank
-       |FROM sc
-       |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id ASC) <= 10""".stripMargin
-
-  /** Shared q83/q327 scaffold: trained cents2 (same FLOAT round-trip as
-    * the Spark side), a third assignment pass (`a3`), then ALL
-    * within-cell pairs with rounded cosine as CTE `pc`. Cell count is the
-    * SCALE-ADAPTIVE ⌈√count⌉ (clamped like `Similarity.recommendedCells`)
-    * — the within-cell pair stage is quadratic in cell size, so these two
-    * consumers must not freeze k the way the model-choice queries do. */
-  private def withinCellPairsPrefix: String =
-    s"""${kmeansTwoIterPrefix("SELECT least(65536, greatest(4, " +
-         "CAST(ceil(sqrt(CAST(count(*) AS DOUBLE))) AS INTEGER))) FROM embeddings")},
-       |c2 AS (
-       |  SELECT cell, dim, CAST(CAST(round(avg(v), 6) AS FLOAT) AS DOUBLE) AS cv
-       |  FROM m2 GROUP BY 1, 2),
-       |cents2 AS (SELECT cell AS cent_id, list(cv ORDER BY dim) AS cvec FROM c2 GROUP BY 1),
-       |${kmeansStepSql(3, "cents2")},
-       |pc AS (
-       |  SELECT x.cent_id AS cell, x.vec_id AS id_a, y.vec_id AS id_b,
-       |    round(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
-       |      CAST(eb.embedding AS DOUBLE[])), 6) AS cos
-       |  FROM a3 x JOIN a3 y ON x.cent_id = y.cent_id AND x.vec_id < y.vec_id
-       |  JOIN embeddings ea ON ea.vec_id = x.vec_id
-       |  JOIN embeddings eb ON eb.vec_id = y.vec_id)""".stripMargin
-
-  /** q83 oracle: the shared within-cell scaffold filtered at ≥ 0.3. */
-  private def semanticDedupSql: String =
-    s"""$withinCellPairsPrefix
-       |SELECT cell, id_a, id_b, cos FROM pc WHERE cos >= 0.3""".stripMargin
-
-  /** q62 oracle: the same range-bucket + Morton-interleave arithmetic as
-    * [[graft.ops.Layout]], expanded to flat SQL bit terms (bit i of the x
-    * bucket lands at 2i, of the y bucket at 2i+1; terms are disjoint so
-    * summing == OR-ing). */
-  private def zorderSql: String = {
-    def bucket(c: String, lo: Double, hi: Double, bits: Int): String = {
-      val width = (hi - lo) / (1L << bits)
-      s"greatest(0, least(${(1L << bits) - 1}, CAST(floor((CAST($c AS DOUBLE) - $lo) / $width) AS BIGINT)))"
-    }
-    val terms = (0 until 8).flatMap { i =>
-      Seq(s"((bx & ${1L << i}) << $i)", s"((by & ${1L << i}) << ${i + 1})")
-    }.mkString(" + ")
-    s"""WITH b AS (
-       |  SELECT l_orderkey, l_linenumber,
-       |    ${bucket("l_partkey", 0, 20000, 8)} AS bx,
-       |    ${bucket("l_suppkey", 0, 1000, 8)} AS by
-       |  FROM lineitem)
-       |SELECT l_orderkey, l_linenumber, CAST($terms AS BIGINT) AS zval FROM b""".stripMargin
-  }
-
-  /** q53 oracle: language filter ∘ quality filter ∘ near-dup removal — the
-    * q27 lang CASE and q28 quality CASE rebuilt as CTEs, then the q43
-    * MinHash+LSH/closure chain over the ELIGIBLE docs only (the Spark side
-    * runs the banded pair generator, so the oracle mirrors it exactly). */
-  /** The q28 quality CASE, shared by the q53 curation chain and the q74
-    * drift mart. */
-  private val qualityCaseSql: String =
-    """CASE WHEN len(string_split(text, ' ')) >= 50
-      |         AND CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS DOUBLE) / CAST(length(text) AS DOUBLE) < 0.1
-      |         AND CAST(length(replace(text, ' ', '')) AS DOUBLE) / CAST(len(string_split(text, ' ')) AS DOUBLE) >= 3
-      |         AND CAST(length(replace(text, ' ', '')) AS DOUBLE) / CAST(len(string_split(text, ' ')) AS DOUBLE) <= 10 THEN 'high'
-      |       WHEN len(string_split(text, ' ')) >= 10 THEN 'medium'
-      |       ELSE 'low' END""".stripMargin
-
-  private def corpusCurationSql: String =
-    s"""$curationCtes
-       |SELECT doc_id FROM assign WHERE cluster_id = doc_id""".stripMargin
-
-  /** Shared CTE chain of the corpus-curation composite (q53), up to and
-    * including `assign` — q221 extends it with the packing tail. */
-  private def curationCtes: String = {
-    val qualityCase = qualityCaseSql
-    s"""WITH RECURSIVE lang AS (
-       |SELECT doc_id,
-       |  $langScoreSql,
-       |  CASE
-       |    WHEN score_en >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'en'
-       |    WHEN score_de >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'de'
-       |    WHEN score_es >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'es'
-       |    WHEN score_fr >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'fr'
-       |    ELSE 'zh' END AS detected_lang
-       |FROM documents),
-       |qual AS (SELECT doc_id, $qualityCase AS quality FROM documents),
-       |eligible AS (
-       |  SELECT d.doc_id, d.text FROM documents d
-       |  JOIN lang l ON l.doc_id = d.doc_id
-       |  JOIN qual q ON q.doc_id = d.doc_id
-       |  WHERE l.detected_lang = 'en' AND q.quality <> 'low'),
-       |${minhashCtes(3, 4, 3, "eligible")},
-       |jpairs AS (
-       |  SELECT p.id_a, p.id_b
-       |  FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id JOIN sizes sb ON p.id_b = sb.doc_id
-       |  WHERE CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5),
-       |${closureTailSql("eligible")}""".stripMargin
-  }
-
-  /** q32 oracle: the fake-decode features are pure functions of md5(text),
-    * so DuckDB reproduces them with nibble arithmetic. `nib(k)` = value of
-    * 1-based hex digit k of the digest. */
-  private val decodeSql: String = {
-    def nib(k: Int): String = s"(strpos('0123456789abcdef', substr(hx, $k, 1)) - 1)"
-    def nibs(from: Int, n: Int): String =
-      (0 until n).map(i => s"${nib(from + i)} * ${math.pow(16, n - 1 - i).toLong}")
-        .mkString(" + ")
-    s"""WITH h AS (
-       |  SELECT doc_id, md5(text) AS hx,
-       |    CAST(octet_length(encode(text)) AS BIGINT) AS bl
-       |  FROM documents)
-       |SELECT doc_id AS id, bl AS byteLen,
-       |  CAST(16 + ((${nibs(1, 4)}) % 240) AS INTEGER) AS width,
-       |  CAST(16 + ((${nibs(5, 4)}) % 240) AS INTEGER) AS height,
-       |  CAST(3 AS INTEGER) AS channels,
-       |  CAST(${nibs(9, 8)} AS DOUBLE) / 4294967296.0 AS meanLuma
-       |FROM h""".stripMargin
-  }
-
-  /** q97 oracle: `iters` power-iteration steps, mirroring
-    * [[graft.ops.Embeddings.topPrincipalComponent]] exactly — constant
-    * `round(1/√d, 6)` start, per-step Gram-vector product in index-order
-    * double arithmetic (`list_dot_product` ≡ the unrolled codegen sum),
-    * iterates rounded to 6 dp between steps. */
-  private def powerIterSql(d: Int, iters: Int): String = {
-    val w0 = {
-      val x = BigDecimal(1.0 / math.sqrt(d))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      Seq.fill(d)(x.toString).mkString("[", ", ", "]")
-    }
-    val sb = new StringBuilder
-    sb ++= "WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),\n"
-    sb ++= s"p1 AS (SELECT v, list_dot_product(v, $w0) AS s FROM e),\n"
-    for (k <- 1 to iters) {
-      if (k > 1)
-        sb ++= s"p$k AS (SELECT v, list_dot_product(v, w${k - 1}.w) AS s FROM e, w${k - 1}),\n"
-      sb ++= s"t$k AS (SELECT dim, sum(vv * s) AS t FROM (" +
-        s"SELECT unnest(v) AS vv, unnest(generate_series(1, $d)) AS dim, s FROM p$k" +
-        s") GROUP BY dim),\n"
-      sb ++= s"n$k AS (SELECT sqrt(sum(t * t)) AS nrm FROM t$k)"
-      if (k < iters)
-        // zero-norm guard mirrors the Spark side: a degenerate cloud keeps
-        // the (all-zero) t instead of dividing by zero
-        sb ++= s",\nw$k AS (SELECT list(CASE WHEN nrm = 0 THEN t ELSE round(t / nrm, 6) END" +
-          s" ORDER BY dim) AS w FROM t$k, n$k),\n"
-    }
-    sb ++= s"\nSELECT CAST(t$iters.dim - 1 AS INTEGER) AS dim, " +
-      s"round(CASE WHEN n$iters.nrm = 0 THEN 0.0 ELSE t$iters.t / n$iters.nrm END, 6) AS loading, " +
-      s"round(n$iters.nrm, 6) AS eigenvalue FROM t$iters, n$iters"
-    sb.toString
-  }
-
-  /** One stage of a CHUNKED oracle replay ([[chunkedOracle]]): materialize
-    * `table` from `sql`. When `chunked` is true, `sql` carries the
-    * `<<NCHUNKS>>`/`<<CHUNK>>` placeholders and the runner unions one
-    * pass per chunk (CREATE then INSERT) — the per-document fingerprint
-    * grid partitions cleanly on `doc_id % NCHUNKS`, so each pass builds
-    * 1/N of the vote grid instead of the whole ~2–8 B-row intermediate
-    * that exceeded the sandbox at 100× (VERDICT r8 task 4). */
-  case class ChunkStage(table: String, sql: String, chunked: Boolean)
-  case class ChunkedOracle(stages: Seq[ChunkStage], finalSql: String)
-
-  /** CHUNKED DuckDB replays for the vote-grid oracle family — the
-    * queries whose single-statement replay explodes on the
-    * (documents × grams × hex-chars) fingerprint grid at 100×. Semantics
-    * are IDENTICAL to the [[oracleSql]] entries: the fps CTE chain is
-    * per-document, so unioning doc-modulo chunks reproduces the exact
-    * pfps relation, and the band tail then runs over the materialized
-    * table (the CTE name `pfps` resolves to it unchanged). Run by
-    * `tools/validate_grid_chunked.py`; [[graft.Verify]] dumps this map as
-    * `oracle_chunked.json`. */
-  def chunkedOracle: Map[String, ChunkedOracle] = {
-    val chunkSrc = "(SELECT * FROM documents WHERE doc_id % <<NCHUNKS>> = <<CHUNK>>)"
-    def fps64(contentCtes: Option[String], rel: String): String =
-      (contentCtes.map(c => s"WITH $c,\n").getOrElse("WITH ")) +
-        s"${perceptualFpsCtesOver(rel)}\nSELECT id, fp FROM pfps"
-    def fps128(contentCtes: Option[String], rel: String): String =
-      (contentCtes.map(c => s"WITH $c,\n").getOrElse("WITH ")) +
-        s"${perceptual128FpsCtesOver(rel)}\nSELECT id, fph, fpl FROM pfps"
-    val pairs128 = s"WITH $perceptual128BandTailCtes\n$perceptual128PairSelect"
-    val pairs128IdOnly =
-      s"SELECT id_a, id_b FROM (\n$pairs128)"
-    val videoPairs =
-      s"""WITH $video128BandTailCtes
-         |SELECT id_a // 64 AS id_a, id_b // 64 AS id_b,
-         |  CAST(count(*) AS BIGINT) AS n_frames
-         |FROM vver GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin
-    Map(
-      "q336_perceptual_neardup" -> ChunkedOracle(
-        Seq(ChunkStage("pfps", fps64(None, chunkSrc), chunked = true)),
-        s"""WITH $perceptualBandTailCtes,
-           |$perceptual64SweepTailCtes
-           |SELECT id_a, id_b, ham AS hamming
-           |FROM p64ham WHERE ham <= (SELECT rr FROM p64rad)""".stripMargin),
-      "q364_perceptual128_neardup" -> ChunkedOracle(
-        Seq(ChunkStage("pfps", fps128(None, chunkSrc), chunked = true)),
-        pairs128),
-      "q348_ppm_neardup_real" -> ChunkedOracle(
-        Seq(ChunkStage("pfps",
-          fps128(Some(ppmRealContentCtesOver(chunkSrc)), "rdocs"), chunked = true)),
-        pairs128),
-      "q352_wav_neardup_real" -> ChunkedOracle(
-        Seq(ChunkStage("pfps",
-          fps128(Some(wavRealContentCtesOver(chunkSrc)), "wdocs"), chunked = true)),
-        pairs128),
-      "q358_png_neardup_real" -> ChunkedOracle(
-        Seq(ChunkStage("pfps",
-          fps128(Some(pngRealContentCtesOver(chunkSrc)), "gdocs"), chunked = true)),
-        pairs128),
-      "q355_y4m_neardup_real" -> ChunkedOracle(
-        Seq(ChunkStage("pfps",
-          fps128(Some(y4mRealContentCtesOver(chunkSrc)), "vdocs"), chunked = true)),
-        videoPairs),
-      "q356_y4m_scene_change" -> ChunkedOracle(
-        Seq(ChunkStage("pfps",
-          fps128(Some(y4mRealContentCtesOver(chunkSrc)), "vdocs"), chunked = true)),
-        """SELECT a.id // 64 AS id, CAST(a.id % 64 AS BIGINT) AS frame_from,
-          |  CAST(b.id % 64 AS BIGINT) AS frame_to,
-          |  CAST(bit_count(xor(a.fph, b.fph)) + bit_count(xor(a.fpl, b.fpl)) AS BIGINT) AS hamming,
-          |  bit_count(xor(a.fph, b.fph)) + bit_count(xor(a.fpl, b.fpl)) > 32 AS is_cut
-          |FROM pfps a JOIN pfps b
-          |  ON a.id // 64 = b.id // 64 AND b.id % 64 = a.id % 64 + 2""".stripMargin),
-      "q361_trimodal_consensus" -> ChunkedOracle(
-        Seq(
-          ChunkStage("pfps",
-            fps128(Some(ppmRealContentCtesOver(chunkSrc)), "rdocs"), chunked = true),
-          ChunkStage("ipairs", pairs128IdOnly, chunked = false),
-          ChunkStage("pfps",
-            fps128(Some(wavRealContentCtesOver(chunkSrc)), "wdocs"), chunked = true),
-          ChunkStage("apairs", pairs128IdOnly, chunked = false),
-          ChunkStage("pfps",
-            fps128(Some(y4mRealContentCtesOver(chunkSrc)), "vdocs"), chunked = true),
-          ChunkStage("vpairs",
-            s"SELECT id_a, id_b FROM (\n$videoPairs)", chunked = false)),
-        """WITH allm AS (
-          |  SELECT id_a, id_b, 'image' AS m FROM ipairs
-          |  UNION ALL SELECT id_a, id_b, 'audio' AS m FROM apairs
-          |  UNION ALL SELECT id_a, id_b, 'video' AS m FROM vpairs)
-          |SELECT id_a, id_b,
-          |  bool_or(m = 'image') AS in_image,
-          |  bool_or(m = 'audio') AS in_audio,
-          |  bool_or(m = 'video') AS in_video,
-          |  CAST(count(DISTINCT m) AS BIGINT) AS n_modalities,
-          |  count(DISTINCT m) >= 2 AS consensus
-          |FROM allm GROUP BY 1, 2""".stripMargin))
-  }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. */
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE) AS sum_disc_price,
-        |  COUNT(*) AS count_order
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-    "q02_star_fact" ->
-      s"""WITH fact AS ($factSql)
-         |SELECT OrderID, OrderItemID, CustomerID, CustomerName, ProductID, ProductName,
-         |  CategoryName, SellerID, SellerName, NationName, RegionName, StatusName,
-         |  CAST(Quantity AS DOUBLE) AS Quantity, CAST(CurrentPrice AS DOUBLE) AS CurrentPrice,
-         |  CAST(TotalAmount AS DOUBLE) AS TotalAmount, OrderDate
-         |FROM fact""".stripMargin,
-    "q03_seller_perf_daily" ->
-      s"""WITH fact AS ($factSql), daily AS ($dailySql)
-         |SELECT SellerID, SellerName, ProductID, ProductName, CategoryName, year, quarter,
-         |  month, order_date, CAST(total_revenue AS DOUBLE) AS total_revenue,
-         |  CAST(total_quantity_sold AS DOUBLE) AS total_quantity_sold, distinct_orders
-         |FROM daily""".stripMargin,
-    "q04_seller_perf_monthly" ->
-      s"""WITH fact AS ($factSql), daily AS ($dailySql)
-         |SELECT SellerID, SellerName, ProductID, ProductName, CategoryName, year, month,
-         |  CAST(SUM(total_revenue) AS DOUBLE) AS total_revenue,
-         |  CAST(SUM(total_quantity_sold) AS DOUBLE) AS total_quantity_sold,
-         |  CAST(SUM(distinct_orders) AS BIGINT) AS distinct_orders
-         |FROM daily GROUP BY 1,2,3,4,5,6,7""".stripMargin,
-    "q05_seller_perf_quarterly" ->
-      s"""WITH fact AS ($factSql), daily AS ($dailySql)
-         |SELECT SellerID, SellerName, ProductID, ProductName, CategoryName, year, quarter,
-         |  CAST(SUM(total_revenue) AS DOUBLE) AS total_revenue,
-         |  CAST(SUM(total_quantity_sold) AS DOUBLE) AS total_quantity_sold,
-         |  CAST(SUM(distinct_orders) AS BIGINT) AS distinct_orders
-         |FROM daily GROUP BY 1,2,3,4,5,6,7""".stripMargin,
-    "q06_order_rates" ->
-      s"""WITH fact AS ($factSql)
-         |SELECT SellerID, SellerName,
-         |  COUNT(DISTINCT OrderID) AS total_orders_placed,
-         |  COUNT(DISTINCT CASE WHEN StatusName = 'Delivered' THEN OrderID END) AS delivered_orders,
-         |  COUNT(DISTINCT CASE WHEN StatusName = 'Cancelled' THEN OrderID END) AS cancelled_orders,
-         |  COUNT(DISTINCT CASE WHEN StatusName = 'Returned' THEN OrderID END) AS returned_orders,
-         |  CAST(COUNT(DISTINCT CASE WHEN StatusName = 'Cancelled' THEN OrderID END) AS DOUBLE)
-         |    / CAST(COUNT(DISTINCT OrderID) AS DOUBLE) AS cancellation_rate,
-         |  CAST(COUNT(DISTINCT CASE WHEN StatusName = 'Returned' THEN OrderID END) AS DOUBLE)
-         |    / CAST(CASE WHEN COUNT(DISTINCT CASE WHEN StatusName = 'Delivered' THEN OrderID END) > 0
-         |           THEN COUNT(DISTINCT CASE WHEN StatusName = 'Delivered' THEN OrderID END) ELSE 1 END AS DOUBLE) AS return_rate
-         |FROM fact GROUP BY 1, 2""".stripMargin,
-    "q07_seller_segmentation" ->
-      s"""WITH fact AS ($factSql), daily AS ($dailySql),
-         |revenue AS (SELECT SellerID, SellerName, SUM(total_revenue) AS total_revenue
-         |            FROM daily GROUP BY 1, 2),
-         |rates AS (
-         |  SELECT SellerID,
-         |    COUNT(DISTINCT OrderID) AS total_orders_placed,
-         |    COUNT(DISTINCT CASE WHEN StatusName = 'Delivered' THEN OrderID END) AS delivered_orders,
-         |    COUNT(DISTINCT CASE WHEN StatusName = 'Cancelled' THEN OrderID END) AS cancelled_orders,
-         |    COUNT(DISTINCT CASE WHEN StatusName = 'Returned' THEN OrderID END) AS returned_orders,
-         |    CAST(COUNT(DISTINCT CASE WHEN StatusName = 'Cancelled' THEN OrderID END) AS DOUBLE)
-         |      / CAST(COUNT(DISTINCT OrderID) AS DOUBLE) AS cancellation_rate,
-         |    CAST(COUNT(DISTINCT CASE WHEN StatusName = 'Returned' THEN OrderID END) AS DOUBLE)
-         |      / CAST(CASE WHEN COUNT(DISTINCT CASE WHEN StatusName = 'Delivered' THEN OrderID END) > 0
-         |             THEN COUNT(DISTINCT CASE WHEN StatusName = 'Delivered' THEN OrderID END) ELSE 1 END AS DOUBLE) AS return_rate
-         |  FROM fact GROUP BY 1)
-         |SELECT r.SellerID, r.SellerName, CAST(r.total_revenue AS DOUBLE) AS total_revenue,
-         |  t.total_orders_placed, t.delivered_orders, t.cancelled_orders, t.returned_orders,
-         |  t.cancellation_rate, t.return_rate,
-         |  CASE WHEN r.total_revenue > 10000 AND t.return_rate < 0.015 THEN 'Top Seller'
-         |       WHEN r.total_revenue > 2000 AND t.return_rate < 0.03 THEN 'Premium Seller'
-         |       ELSE 'Risk Seller' END AS seller_segment
-         |FROM revenue r JOIN rates t ON r.SellerID = t.SellerID""".stripMargin,
-    "q08_customer_analytics" ->
-      s"""WITH fact AS ($factSql)
-         |SELECT CustomerID, CustomerName,
-         |  COUNT(DISTINCT OrderID) AS total_orders,
-         |  CAST(SUM(TotalAmount) AS DOUBLE) AS total_spend,
-         |  MIN(OrderDate) AS first_purchase_date,
-         |  MAX(OrderDate) AS last_purchase_date,
-         |  CASE WHEN COUNT(DISTINCT OrderID) > 1 THEN 'Returning Customer'
-         |       ELSE 'New Customer' END AS customer_type
-         |FROM fact GROUP BY 1, 2""".stripMargin,
-    "q09_scd2_fingerprint" ->
-      s"SELECT c_custkey, ${fpSql()} AS scd2_hash FROM customer",
-    "q10_watermark_filter" ->
-      """SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props
-        |FROM events
-        |WHERE ts > TIMESTAMP '2024-01-10 00:00:00' AND ts <= TIMESTAMP '2024-01-20 00:00:00'""".stripMargin,
-    "q11_batch_watermark" ->
-      "SELECT CAST(MAX(ts) AS TIMESTAMP) AS new_watermark FROM events",
-    "q12_scd2_classify" ->
-      s"""${stagedSql}SELECT c_custkey, action FROM staged WHERE action IN ('INSERT', 'UPDATE')""",
-    "q13_scd2_new_records" ->
-      s"""${stagedSql}SELECT c_custkey, c_name, c_mktsegment FROM staged WHERE action = 'INSERT'""",
-    "q14_scd2_expire_keys" ->
-      s"""${stagedSql}SELECT DISTINCT c_custkey FROM staged WHERE action = 'UPDATE'""",
-    "q15_scd2_apply" ->
-      s"""${stagedSql},
-         |ins AS (SELECT * FROM staged WHERE action IN ('INSERT', 'UPDATE')),
-         |keys AS (SELECT DISTINCT c_custkey FROM staged WHERE action = 'UPDATE')
-         |SELECT c.c_custkey, c.c_name, c.c_nationkey, c.c_acctbal, c.c_mktsegment,
-         |  CASE WHEN k.c_custkey IS NOT NULL THEN FALSE ELSE TRUE END AS is_current,
-         |  TIMESTAMP '2026-01-01 00:00:00' AS effective_date,
-         |  CASE WHEN k.c_custkey IS NOT NULL THEN TIMESTAMP '2026-02-01 00:00:00' END AS end_date
-         |FROM customer c LEFT JOIN keys k ON c.c_custkey = k.c_custkey
-         |UNION ALL
-         |SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
-         |  TRUE, TIMESTAMP '2026-02-01 00:00:00', NULL
-         |FROM ins""".stripMargin,
-    "q46_scd2_deletes" ->
-      s"""WITH src AS ($scd2SourceSql),
-         |sh AS (SELECT *, ${fpSql()} AS hash FROM src),
-         |th AS (SELECT c_custkey, ${fpSql()} AS hash FROM customer),
-         |j AS (SELECT sh.c_custkey AS s_key, th.c_custkey AS t_key,
-         |        sh.hash AS s_hash, th.hash AS t_hash
-         |      FROM sh FULL OUTER JOIN th ON sh.c_custkey = th.c_custkey),
-         |staged AS (
-         |  SELECT coalesce(s_key, t_key) AS c_custkey,
-         |    CASE WHEN t_key IS NULL THEN 'INSERT'
-         |         WHEN s_key IS NULL THEN 'DELETE'
-         |         WHEN s_hash <> t_hash THEN 'UPDATE'
-         |         ELSE 'NO CHANGE' END AS action
-         |  FROM j)
-         |SELECT c_custkey, action FROM staged
-         |WHERE action IN ('INSERT', 'UPDATE', 'DELETE')""".stripMargin,
-    "q47_range_join_count" ->
-      """WITH e AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id FROM events)
-        |SELECT l.event_id, count(r.event_id) AS n_prior
-        |FROM e l LEFT JOIN e r
-        |  ON r.user_id = l.user_id
-        | AND epoch_us(r.ts) BETWEEN epoch_us(l.ts) - 1800000000 AND epoch_us(l.ts) - 1
-        |GROUP BY 1""".stripMargin,
-    "q48_calendar_rollup" ->
-      s"""WITH fact AS ($factSql), daily AS ($dailySql)
-         |SELECT year, quarter, month,
-         |  CAST(SUM(total_revenue) AS DOUBLE) AS total_revenue,
-         |  CAST(SUM(total_quantity_sold) AS DOUBLE) AS total_quantity_sold,
-         |  CAST(SUM(distinct_orders) AS BIGINT) AS distinct_orders,
-         |  CAST(GROUPING(year, quarter, month) AS INTEGER) AS lvl
-         |FROM daily GROUP BY ROLLUP (year, quarter, month)""".stripMargin,
-    "q49_incremental_dedup" -> minhashCrossSql(3, 4, 3),
-    "q51_json_props_agg" ->
-      """SELECT event_type,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
-        |  count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-    "q50_kmeans_step" ->
-      """WITH cents AS (
-        |  SELECT vec_id AS cent_id, embedding AS cvec
-        |  FROM embeddings ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
-        |sim AS (
-        |  SELECT e.vec_id, c.cent_id,
-        |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(c.cvec AS DOUBLE[])), 6) AS csim
-        |  FROM embeddings e CROSS JOIN cents c),
-        |assigned AS (
-        |  SELECT vec_id, cent_id FROM (
-        |    SELECT vec_id, cent_id,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id ASC) AS r
-        |    FROM sim) WHERE r = 1),
-        |m AS (
-        |  SELECT a.cent_id AS cell,
-        |    unnest(CAST(e.embedding AS DOUBLE[])) AS v,
-        |    unnest(generate_series(0, len(e.embedding) - 1)) AS dim
-        |  FROM assigned a JOIN embeddings e ON e.vec_id = a.vec_id)
-        |SELECT cell, CAST(count(*) AS BIGINT) AS n_members,
-        |  CAST(dim AS INTEGER) AS dim, round(avg(v), 6) AS mean_val
-        |FROM m GROUP BY cell, dim""".stripMargin,
-    "q16_event_hourly" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type, COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    // q168: the sliding-window fan-out re-derived batch-side — every
-    // event belongs to the 4 epoch-aligned 15-min-step windows ending at
-    // its own bucket (ts ∈ [b, b+15m) ⊂ [b − k·15m, b − k·15m + 1h) for
-    // exactly k = 0..3), so no membership predicate is needed
-    "q168_stream_sliding_counts" ->
-      """WITH ks AS (SELECT unnest(generate_series(0, 3)) AS k),
-        |w AS (SELECT time_bucket(INTERVAL '15 minutes', ts)
-        |        - k * INTERVAL '15 minutes' AS win_start,
-        |      event_type, value FROM events, ks)
-        |SELECT CAST(win_start AS TIMESTAMP) AS win_start, event_type,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-        |FROM w GROUP BY 1, 2""".stripMargin,
-    // q169: both halves' per-column profiles re-derived (numeric min/max
-    // only for n_chars; rates rounded BEFORE the delta, like the op)
-    "q169_profile_drift" -> {
-      def prof(src: String): String =
-        s"""SELECT 'n_chars' AS col_name, count(*) AS n_rows,
-           |    count(*) - count(n_chars) AS n_null,
-           |    count(DISTINCT n_chars) AS n_distinct,
-           |    round(CAST(min(n_chars) AS DOUBLE), 6) AS min_val,
-           |    round(CAST(max(n_chars) AS DOUBLE), 6) AS max_val FROM $src
-           |  UNION ALL
-           |  SELECT 'lang', count(*), count(*) - count(lang),
-           |    count(DISTINCT lang), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-           |  FROM $src
-           |  UNION ALL
-           |  SELECT 'text', count(*), count(*) - count(text),
-           |    count(DISTINCT text), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-           |  FROM $src""".stripMargin
-      s"""WITH a AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-         |b AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-         |pa AS (${prof("a")}),
-         |pb AS (${prof("b")}),
-         |ra AS (SELECT *, CASE WHEN n_rows = 0 THEN NULL
-         |    ELSE round(n_null / CAST(n_rows AS DOUBLE), 6) END AS rate FROM pa),
-         |rb AS (SELECT *, CASE WHEN n_rows = 0 THEN NULL
-         |    ELSE round(n_null / CAST(n_rows AS DOUBLE), 6) END AS rate FROM pb)
-         |SELECT ra.col_name,
-         |  CAST(ra.n_rows AS BIGINT) AS n_rows_a,
-         |  CAST(rb.n_rows AS BIGINT) AS n_rows_b,
-         |  ra.rate AS null_rate_a, rb.rate AS null_rate_b,
-         |  round(rb.rate - ra.rate, 6) AS null_rate_delta,
-         |  CAST(ra.n_distinct AS BIGINT) AS n_distinct_a,
-         |  CAST(rb.n_distinct AS BIGINT) AS n_distinct_b,
-         |  ra.min_val AS min_a, rb.min_val AS min_b,
-         |  ra.max_val AS max_a, rb.max_val AS max_b
-         |FROM ra JOIN rb ON ra.col_name = rb.col_name""".stripMargin
-    },
-    // q194: the same (tokens, id) total order, integer-div batch cut,
-    // per-batch max padding arithmetic
-    "q194_sorted_batches" ->
-      """WITH t AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT)
-        |    AS n FROM documents),
-        |r AS (SELECT *, row_number() OVER (ORDER BY n ASC, doc_id ASC) AS rk
-        |  FROM t),
-        |b AS (SELECT (rk - 1) // 32 AS batch_id, n FROM r)
-        |SELECT CAST(batch_id AS BIGINT) AS batch_id,
-        |  count(*) AS n_docs, max(n) AS max_tokens,
-        |  CAST(sum(n) AS BIGINT) AS sum_tokens,
-        |  max(n) * count(*) AS padded_tokens,
-        |  round(1.0 - CAST(sum(n) AS BIGINT) /
-        |    CAST(max(n) * count(*) AS DOUBLE), 6) AS waste_ratio
-        |FROM b GROUP BY 1""".stripMargin,
-    // q195: the q166 pair stream per source, plain Shannon fold, e^H of
-    // the rounded entropy
-    // q196: the KMV estimator replayed exactly — distinct md5(shingle)s,
-    // k-th minimum via row_number, the same 12-hex-nibble fraction, the
-    // same 5σ/√(k−2) bound (sqrt interpolated from the SAME Scala double)
-    "q196_kmv_bound" -> {
-      val k = 256
-      val sqrtK2 = math.sqrt(k - 2.0)
-      val nibbleSum = (1 to 12).map(i =>
-        s"(strpos('0123456789abcdef', substr(kh, $i, 1)) - 1) * ${BigInt(16).pow(12 - i)}")
-        .mkString(" + ")
-      s"""WITH shs AS (
-         |  SELECT source, unnest(list_distinct(list_transform(
-         |    generate_series(1, len(ts) - 2), i -> array_to_string(ts[i:i+2], ' '))))
-         |    AS shingle
-         |  FROM (SELECT source, string_split(text, ' ') AS ts FROM documents)),
-         |d AS (SELECT DISTINCT source, md5(shingle) AS h FROM shs),
-         |r AS (SELECT source, h,
-         |    row_number() OVER (PARTITION BY source ORDER BY h) AS rn,
-         |    count(*) OVER (PARTITION BY source) AS nd
-         |  FROM d),
-         |kth AS (SELECT source, max(nd) AS exact_distinct,
-         |    max(CASE WHEN rn = $k THEN h END) AS kh
-         |  FROM r GROUP BY source),
-         |e AS (SELECT source, exact_distinct,
-         |    CASE WHEN exact_distinct < $k THEN CAST(exact_distinct AS DOUBLE)
-         |         ELSE ${k - 1}.0 /
-         |           (CAST($nibbleSum AS DOUBLE) / 281474976710656.0) END AS est
-         |  FROM kth)
-         |SELECT source, exact_distinct,
-         |  round(est, 6) AS est_distinct,
-         |  round(abs(est - CAST(exact_distinct AS DOUBLE)), 6) AS abs_err,
-         |  abs(est - CAST(exact_distinct AS DOUBLE))
-         |    <= 5.0 * CAST(exact_distinct AS DOUBLE) / $sqrtK2 AS within_bound
-         |FROM e""".stripMargin
-    },
-    // q198: exact group sizes + the same p literals; the GK rank theorem
-    // pinned TRUE (the sketch content itself is engine-specific)
-    "q198_quantile_bound" ->
-      """WITH g AS (SELECT event_type, count(value) AS n_rows
-        |           FROM events WHERE value IS NOT NULL GROUP BY 1)
-        |SELECT event_type, p, n_rows, TRUE AS within_rank_bound
-        |FROM g CROSS JOIN
-        |  (SELECT unnest([CAST(0.5 AS DOUBLE), CAST(0.9 AS DOUBLE),
-        |                  CAST(0.99 AS DOUBLE)]) AS p)""".stripMargin,
-    // q199: exact distinct counts; the HLL++ rsd bound pinned TRUE
-    "q199_hll_bound" ->
-      """SELECT event_type,
-        |  CAST(count(DISTINCT event_id) AS BIGINT) AS exact_distinct,
-        |  TRUE AS within_bound
-        |FROM events GROUP BY 1""".stripMargin,
-    // q201: the SAME Poisson ladder literals and md5-uniform replayed;
-    // replicate means 6 dp-rounded BEFORE the percentile on both engines
-    "q201_bootstrap_ci" -> {
-      val ladder = graft.ops.Quality.poissonLadder
-      // slot-windowed hex parse: digest h carries FOUR 8-hex uniforms;
-      // replicate j = blk*4 + slot reads chars 8·slot+1 .. 8·slot+8
-      val slotU = (1 to 8).map(k =>
-        s"(strpos('0123456789abcdef', substr(h, 8 * slot + $k, 1)) - 1) " +
-          s"* ${math.pow(16, 8 - k).toLong}").mkString(" + ")
-      val wExpr = ladder.map(c => s"(CASE WHEN u >= $c THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH base AS (
-         |  SELECT event_type AS g, event_id AS id, CAST(value AS DOUBLE) AS v
-         |  FROM events WHERE value IS NOT NULL),
-         |stats AS (SELECT g, CAST(count(*) AS BIGINT) AS n_rows,
-         |            round(avg(v), 6) AS mean FROM base GROUP BY 1),
-         |hashed AS (
-         |  SELECT g, blk, v,
-         |    md5('boot|' || CAST(blk AS VARCHAR) || '|' || CAST(id AS VARCHAR))
-         |      AS h
-         |  FROM base CROSS JOIN generate_series(0, 24) AS t(blk)),
-         |drawn AS (
-         |  SELECT g, j, v, $wExpr AS w FROM (
-         |    SELECT g, blk * 4 + slot AS j, v,
-         |      CAST($slotU AS DOUBLE) / 4294967296.0 AS u
-         |    FROM hashed CROSS JOIN generate_series(0, 3) AS s(slot))),
-         |reps AS (
-         |  SELECT g, j,
-         |    round(CASE WHEN sum(w) > 0 THEN sum(w * v) / sum(w) END, 6) AS m
-         |  FROM drawn GROUP BY 1, 2),
-         |ci AS (
-         |  SELECT g, round(quantile_cont(m, 0.025), 6) AS ci_lo,
-         |    round(quantile_cont(m, 0.975), 6) AS ci_hi
-         |  FROM reps WHERE m IS NOT NULL GROUP BY 1)
-         |SELECT s.g AS event_type, s.n_rows, s.mean, ci.ci_lo, ci.ci_hi
-         |FROM stats s JOIN ci ON s.g = ci.g""".stripMargin
-    },
-    // q202: identical moment arithmetic; z interpolated from the SAME
-    // Scala double so the interval bounds are bit-identical
-    "q202_ab_welch" -> {
-      val z = 1.959963984540054
-      s"""WITH e AS (
-         |  SELECT event_type AS g,
-         |    CASE WHEN ${md5ModSql("user_id", 2)} = 0 THEN 'a' ELSE 'b' END AS var,
-         |    CAST(value AS DOUBLE) AS v
-         |  FROM events WHERE value IS NOT NULL),
-         |red AS (SELECT g, var, CAST(count(*) AS BIGINT) AS n,
-         |          sum(v) AS s, sum(v * v) AS s2 FROM e GROUP BY 1, 2),
-         |piv AS (SELECT g,
-         |    coalesce(max(CASE WHEN var = 'a' THEN n END), 0) AS n_a,
-         |    coalesce(max(CASE WHEN var = 'b' THEN n END), 0) AS n_b,
-         |    max(CASE WHEN var = 'a' THEN s END) AS sa,
-         |    max(CASE WHEN var = 'b' THEN s END) AS sb,
-         |    max(CASE WHEN var = 'a' THEN s2 END) AS sa2,
-         |    max(CASE WHEN var = 'b' THEN s2 END) AS sb2
-         |  FROM red GROUP BY 1),
-         |c AS (SELECT g, n_a, n_b,
-         |    sa / n_a AS ma, sb / n_b AS mb,
-         |    (sa2 - sa * sa / n_a) / (n_a - 1.0) AS va,
-         |    (sb2 - sb * sb / n_b) / (n_b - 1.0) AS vb,
-         |    n_a >= 2 AND n_b >= 2 AS ok
-         |  FROM piv)
-         |SELECT g AS event_type, n_a, n_b,
-         |  CASE WHEN n_a > 0 THEN round(ma, 6) END AS mean_a,
-         |  CASE WHEN n_b > 0 THEN round(mb, 6) END AS mean_b,
-         |  CASE WHEN n_a > 0 AND n_b > 0 THEN round(mb - ma, 6) END AS diff,
-         |  CASE WHEN ok THEN
-         |    round(mb - ma - $z * sqrt(va / n_a + vb / n_b), 6) END AS ci_lo,
-         |  CASE WHEN ok THEN
-         |    round(mb - ma + $z * sqrt(va / n_a + vb / n_b), 6) END AS ci_hi,
-         |  coalesce(CASE WHEN ok THEN
-         |    mb - ma - $z * sqrt(va / n_a + vb / n_b) > 0.0
-         |    OR mb - ma + $z * sqrt(va / n_a + vb / n_b) < 0.0 END, false)
-         |    AS significant
-         |FROM c""".stripMargin
-    },
-    // q204: identical LOO arithmetic — group sums, the global prior, the
-    // same m literal; 6 dp round covers sum-order ulps (~1e-14)
-    "q204_target_encoding" ->
-      """WITH base AS (
-        |  SELECT event_id, event_type, CAST(value AS DOUBLE) AS value
-        |  FROM events WHERE value IS NOT NULL),
-        |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n, sum(value) AS s
-        |      FROM base GROUP BY 1),
-        |p AS (SELECT sum(value) / count(*) AS prior FROM base)
-        |SELECT b.event_id, b.event_type, b.value,
-        |  CASE WHEN g.n - 1 + 20.0 > 0 THEN
-        |    round((g.s - b.value + 20.0 * p.prior) / (g.n - 1 + 20.0), 6)
-        |  END AS te
-        |FROM base b JOIN g USING (event_type) CROSS JOIN p""".stripMargin,
-    // q205: the same guarded covar_samp/stddev_samp ratio — both engines'
-    // merge-stable co-moments agree to ~1e-13, far below the 6 dp
-    // quantum; listwise completion fixes one shared row set
-    "q205_corr_matrix" -> {
-      def r(a: String, b: String) =
-        s"CASE WHEN count(*) > 1 AND stddev_samp($a) > 0 AND stddev_samp($b) > 0" +
-          s" THEN covar_samp($a, $b) / (stddev_samp($a) * stddev_samp($b)) END"
-      s"""WITH c AS (
-        |  SELECT CAST(l_quantity AS DOUBLE) AS q,
-        |         CAST(l_extendedprice AS DOUBLE) AS e,
-        |         CAST(l_discount AS DOUBLE) AS d,
-        |         CAST(l_tax AS DOUBLE) AS t
-        |  FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-        |    AND l_discount IS NOT NULL AND l_tax IS NOT NULL),
-        |one AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  ${r("q", "e")} AS c1, ${r("q", "d")} AS c2, ${r("q", "t")} AS c3,
-        |  ${r("e", "d")} AS c4, ${r("e", "t")} AS c5, ${r("d", "t")} AS c6 FROM c)
-        |SELECT p.col_a, p.col_b, one.n_rows,
-        |  round(p.v, 6) + 0.0 AS corr
-        |FROM one, LATERAL (VALUES
-        |  ('l_quantity', 'l_extendedprice', one.c1),
-        |  ('l_quantity', 'l_discount', one.c2),
-        |  ('l_quantity', 'l_tax', one.c3),
-        |  ('l_extendedprice', 'l_discount', one.c4),
-        |  ('l_extendedprice', 'l_tax', one.c5),
-        |  ('l_discount', 'l_tax', one.c6)) AS p(col_a, col_b, v)""".stripMargin
-    },
-    // q214: the same 5 rounds as chained CTEs — aligned-unnest pair
-    // counts, (cnt DESC, l, r) argmax, and the SAME single-pass
-    // left-to-right fold via list_reduce with a list accumulator
-    "q214_bpe_train" -> {
-      val m = 5
-      val w0 =
-        """w0 AS (
-          |  SELECT CAST(count(*) AS BIGINT) AS freq,
-          |    list_transform(generate_series(1, len(w)), i -> w[i:i]) AS syms
-          |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-          |  WHERE len(w) > 0 GROUP BY w)""".stripMargin
-      val rounds = (1 to m).map { k =>
-        val prev = s"w${k - 1}"
-        val pair =
-          s"""p$k AS (
-             |  SELECT l, r, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-             |    SELECT freq, unnest(syms[1:len(syms) - 1]) AS l,
-             |      unnest(syms[2:len(syms)]) AS r
-             |    FROM $prev WHERE len(syms) >= 2)
-             |  GROUP BY 1, 2),
-             |best$k AS (SELECT l, r, cnt FROM p$k
-             |  ORDER BY cnt DESC, l ASC, r ASC LIMIT 1)""".stripMargin
-        val apply =
-          if (k == m) ""
-          else
-            s""",
-               |w$k AS (
-               |  SELECT freq, list_reduce(list_transform(syms, s -> [s]),
-               |    (acc, x) -> CASE WHEN acc[-1] = b.l AND x[1] = b.r
-               |      THEN list_append(acc[1:len(acc) - 1], b.l || b.r)
-               |      ELSE list_append(acc, x[1]) END) AS syms
-               |  FROM $prev, best$k b)""".stripMargin
-        pair + apply
-      }
-      val selects = (1 to m).map { k =>
-        s"""SELECT CAST($k AS INTEGER) AS step, l AS "left", r AS "right",
-           |  l || r AS merged, cnt AS pair_count FROM best$k""".stripMargin
-      }
-      s"WITH $w0,\n${rounds.mkString(",\n")}\n${selects.mkString("\nUNION ALL\n")}"
-    },
-    // q225: q70's cohort CTEs + a cumulative window over age rows
-    // q226: q179's hazard chain + the KM product as exp(cumsum ln(1-r))
-    // in ascending-day order; an all-churn day pins survival to 0 via an
-    // explicit flag (no ln(0) cross-engine hazard)
-    "q226_survival_curve" ->
-      """WITH pu AS (SELECT user_id,
-        |    date_diff('day', min(CAST(ts AS DATE)), max(CAST(ts AS DATE)))
-        |      AS life,
-        |    date_diff('day', max(CAST(ts AS DATE)), DATE '2024-02-01') >= 7
-        |      AS observed
-        |  FROM events GROUP BY 1),
-        |h AS (SELECT life AS lifetime_day, count(*) AS n,
-        |    CAST(sum(CASE WHEN observed THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_churned
-        |  FROM pu GROUP BY 1),
-        |hz AS (SELECT CAST(lifetime_day AS BIGINT) AS lifetime_day,
-        |    CAST(sum(n) OVER w AS BIGINT) AS n_at_risk, n_churned,
-        |    round(CAST(n_churned AS DOUBLE) / (sum(n) OVER w), 6) AS hazard,
-        |    CAST(n_churned AS DOUBLE) / (sum(n) OVER w) AS r
-        |  FROM h
-        |  WINDOW w AS (ORDER BY lifetime_day
-        |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT lifetime_day, n_at_risk, n_churned, hazard,
-        |  CASE WHEN max(CASE WHEN r >= 1 THEN 1 ELSE 0 END) OVER v = 1
-        |       THEN CAST(0.0 AS DOUBLE)
-        |       ELSE round(exp(sum(CASE WHEN r < 1 THEN ln(1.0 - r)
-        |         ELSE 0.0 END) OVER v), 6) + 0.0 END AS survival
-        |FROM hz
-        |WINDOW v AS (ORDER BY lifetime_day
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin,
-    // q227: per-user 6dp pre/post sums, pooled theta = cov/var (rounded
-    // before use), per-variant + ALL rollup; never_worse re-derived
-    "q227_cuped" ->
-      """WITH pu AS (SELECT user_id,
-        |    round(sum(CASE WHEN CAST(ts AS DATE) < DATE '2024-01-16'
-        |      THEN coalesce(value, 0.0) ELSE 0.0 END), 6) AS x,
-        |    round(sum(CASE WHEN CAST(ts AS DATE) >= DATE '2024-01-16'
-        |      THEN coalesce(value, 0.0) ELSE 0.0 END), 6) AS y,
-        |    CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |      THEN 'A' ELSE 'B' END AS variant
-        |  FROM events WHERE user_id IS NOT NULL GROUP BY 1),
-        |th AS (SELECT
-        |    round(CASE WHEN var_pop(x) > 0
-        |      THEN covar_pop(x, y) / var_pop(x) ELSE 0.0 END, 6) AS th,
-        |    round(avg(x), 6) AS xbar FROM pu),
-        |adj AS (SELECT pu.variant, pu.y,
-        |    pu.y - th.th * (pu.x - th.xbar) AS y_adj, th.th
-        |  FROM pu, th),
-        |g AS (
-        |  SELECT variant, CAST(count(*) AS BIGINT) AS n_users,
-        |    round(avg(y), 6) AS mean_post,
-        |    round(avg(y_adj), 6) AS mean_adjusted,
-        |    round(var_pop(y), 6) AS var_post,
-        |    round(var_pop(y_adj), 6) AS var_adjusted,
-        |    CASE WHEN var_pop(y) > 0
-        |      THEN round(1.0 - var_pop(y_adj) / var_pop(y), 6) + 0.0 END
-        |      AS var_reduction,
-        |    round(first(th), 6) AS theta
-        |  FROM adj GROUP BY variant
-        |  UNION ALL
-        |  SELECT 'ALL', CAST(count(*) AS BIGINT), round(avg(y), 6),
-        |    round(avg(y_adj), 6), round(var_pop(y), 6),
-        |    round(var_pop(y_adj), 6),
-        |    CASE WHEN var_pop(y) > 0
-        |      THEN round(1.0 - var_pop(y_adj) / var_pop(y), 6) + 0.0 END,
-        |    round(first(th), 6)
-        |  FROM adj)
-        |SELECT variant, n_users, mean_post, mean_adjusted, var_post,
-        |  var_adjusted, var_reduction,
-        |  var_adjusted <= var_post AS never_worse, theta FROM g""".stripMargin,
-    // q228: daily pre-reduce, Spark dayofweek = DuckDB dayofweek + 1,
-    // variance decomposition over the rounded daily totals
-    "q228_dow_profile" ->
-      """WITH daily AS (
-        |  SELECT event_type AS key, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    round(sum(coalesce(value, 0.0)), 6) AS v
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-        |d2 AS (SELECT *, dayofweek(day) + 1 AS dow FROM daily),
-        |bydow AS (SELECT key, dow, CAST(sum(n) AS BIGINT) AS n_events,
-        |    round(sum(v), 6) AS total_value, round(avg(v), 6) AS mean_dow
-        |  FROM d2 GROUP BY 1, 2),
-        |keytot AS (SELECT key, CAST(sum(n) AS BIGINT) AS kn,
-        |    round(var_pop(v), 6) AS vt
-        |  FROM d2 GROUP BY 1),
-        |resid AS (SELECT d2.key, round(var_pop(d2.v - b.mean_dow), 6) AS vr
-        |  FROM d2 JOIN bydow b ON d2.key = b.key AND d2.dow = b.dow
-        |  GROUP BY 1)
-        |SELECT b.key, CAST(b.dow AS BIGINT) AS dow, b.n_events,
-        |  b.total_value, round(b.total_value / b.n_events, 6) AS mean_value,
-        |  round(CAST(b.n_events AS DOUBLE) / k.kn, 6) AS share,
-        |  CASE WHEN k.vt > 0 THEN round(1.0 - r.vr / k.vt, 6) + 0.0 END
-        |    AS seasonal_strength
-        |FROM bydow b JOIN keytot k ON b.key = k.key
-        |JOIN resid r ON b.key = r.key""".stripMargin,
-    // q229: the same nibble-arithmetic uniform off md5(group key), then
-    // the inverse-CDF Laplace at sensitivity 1 / epsilon 1
-    "q229_dp_counts" -> {
-      val nib = (k: Int) =>
-        s"(strpos('0123456789abcdef', substr(hx, $k, 1)) - 1)"
-      val prefix = (1 to 8).map(k =>
-        s"${nib(k)} * ${math.pow(16, 8 - k).toLong}").mkString(" + ")
-      s"""WITH g AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS n
-         |  FROM documents GROUP BY 1, 2),
-         |h AS (SELECT *, md5(concat_ws('|',
-         |    coalesce(CAST(source AS VARCHAR), '<null>'),
-         |    coalesce(CAST(lang AS VARCHAR), '<null>'))) AS hx FROM g),
-         |u AS (SELECT source, lang, n,
-         |    (CAST($prefix AS DOUBLE) + 0.5) / 4294967296.0 - 0.5 AS uu
-         |  FROM h)
-         |SELECT source, lang, n,
-         |  round(n + (-1.0) * sign(uu) * ln(1.0 - 2.0 * abs(uu)), 6)
-         |    AS n_noisy,
-         |  CAST(1.0 AS DOUBLE) AS epsilon FROM u""".stripMargin
-    },
-    // q230: add-half smoothed WOE shares as explicit double ratios
-    "q230_woe_iv" ->
-      """WITH c AS (SELECT o_orderpriority AS category,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_pos
-        |  FROM orders WHERE o_orderstatus IS NOT NULL GROUP BY 1),
-        |c2 AS (SELECT category, n, n_pos, n - n_pos AS n_neg FROM c),
-        |t AS (SELECT CAST(sum(n_pos) AS BIGINT) AS pt,
-        |    CAST(sum(n_neg) AS BIGINT) AS nt,
-        |    CAST(count(*) AS DOUBLE) AS cc FROM c2),
-        |s AS (SELECT c2.*,
-        |    (CAST(n_pos AS DOUBLE) + 0.5) / (CAST(pt AS DOUBLE) + 0.5 * cc)
-        |      AS sp,
-        |    (CAST(n_neg AS DOUBLE) + 0.5) / (CAST(nt AS DOUBLE) + 0.5 * cc)
-        |      AS sn
-        |  FROM c2, t),
-        |s2 AS (SELECT category, n, n_pos, n_neg,
-        |    round(ln(sp / sn), 6) AS woe,
-        |    round((sp - sn) * ln(sp / sn), 6) AS iv_contrib FROM s),
-        |iv AS (SELECT round(sum(iv_contrib), 6) AS ivt FROM s2)
-        |SELECT s2.category, s2.n, s2.n_pos, s2.n_neg, s2.woe,
-        |  s2.iv_contrib, iv.ivt AS iv_total FROM s2, iv""".stripMargin,
-    // q231: 3 unrolled GD rounds — z-scored features off 6dp moments,
-    // 6dp weight re-round per round, softplus loss, z>=0 predictions
-    "q231_logistic_gd" ->
-      """WITH base AS (
-        |  SELECT CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END
-        |      AS y,
-        |    CAST(value AS DOUBLE) AS x0,
-        |    CAST(date_part('hour', ts) AS DOUBLE) AS x1
-        |  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-        |    AND event_type IS NOT NULL),
-        |st AS (SELECT round(avg(x0), 6) AS m0,
-        |    round(stddev_pop(x0), 6) AS s0,
-        |    round(avg(x1), 6) AS m1, round(stddev_pop(x1), 6) AS s1
-        |  FROM base),
-        |z AS (SELECT y, (x0 - m0) / s0 AS z0, (x1 - m1) / s1 AS z1
-        |  FROM base, st),
-        |w1 AS (SELECT round(0 - 0.5 * avg(0.5 - y), 6) AS b,
-        |    round(0 - 0.5 * avg((0.5 - y) * z0), 6) AS wa,
-        |    round(0 - 0.5 * avg((0.5 - y) * z1), 6) AS wb FROM z),
-        |p2 AS (SELECT z.*,
-        |    1.0 / (1.0 + exp(-(w1.b + w1.wa * z0 + w1.wb * z1))) AS p,
-        |    w1.b AS pb, w1.wa AS pwa, w1.wb AS pwb FROM z, w1),
-        |w2 AS (SELECT round(first(pb) - 0.5 * avg(p - y), 6) AS b,
-        |    round(first(pwa) - 0.5 * avg((p - y) * z0), 6) AS wa,
-        |    round(first(pwb) - 0.5 * avg((p - y) * z1), 6) AS wb FROM p2),
-        |p3 AS (SELECT z.*,
-        |    1.0 / (1.0 + exp(-(w2.b + w2.wa * z0 + w2.wb * z1))) AS p,
-        |    w2.b AS pb, w2.wa AS pwa, w2.wb AS pwb FROM z, w2),
-        |w3 AS (SELECT round(first(pb) - 0.5 * avg(p - y), 6) AS b,
-        |    round(first(pwa) - 0.5 * avg((p - y) * z0), 6) AS wa,
-        |    round(first(pwb) - 0.5 * avg((p - y) * z1), 6) AS wb FROM p3),
-        |sel AS (SELECT z.y, z.z0, z.z1,
-        |    w3.b + w3.wa * z0 + w3.wb * z1 AS zf,
-        |    w3.b AS b, w3.wa AS wa, w3.wb AS wb FROM z, w3)
-        |SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(3 AS BIGINT) AS n_iters,
-        |  first(b) AS bias, first(wa) AS w_value, first(wb) AS w_hr,
-        |  round(avg(greatest(zf, 0.0) - y * zf
-        |    + ln(1.0 + exp(-abs(zf)))), 6) AS log_loss,
-        |  round(avg(CASE WHEN (CASE WHEN zf >= 0 THEN 1.0 ELSE 0.0 END) = y
-        |    THEN 1.0 ELSE 0.0 END), 6) AS accuracy
-        |FROM sel""".stripMargin,
-    // q232: the q83 trained cents2, a third assignment-style cosine pass,
-    // a/b off the SAME rounded cosines, per-cell rollup
-    "q232_silhouette" ->
-      s"""${kmeansTwoIterPrefix()},
-         |c2 AS (
-         |  SELECT cell, dim, CAST(CAST(round(avg(v), 6) AS FLOAT) AS DOUBLE) AS cv
-         |  FROM m2 GROUP BY 1, 2),
-         |cents2 AS (SELECT cell AS cent_id, list(cv ORDER BY dim) AS cvec FROM c2 GROUP BY 1),
-         |sim3 AS (SELECT e.vec_id, c.cent_id,
-         |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.cvec), 6) AS csim
-         |  FROM embeddings e CROSS JOIN cents2 c WHERE e.embedding IS NOT NULL),
-         |r3 AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-         |    ORDER BY csim DESC, cent_id ASC) AS r FROM sim3),
-         |pp AS (SELECT vec_id,
-         |    max(CASE WHEN r = 1 THEN cent_id END) AS cell,
-         |    max(CASE WHEN r = 1 THEN csim END) AS own,
-         |    max(CASE WHEN r <> 1 THEN csim END) AS nxt
-         |  FROM r3 GROUP BY 1),
-         |sc AS (SELECT cell,
-         |    CASE WHEN greatest(1.0 - own, 1.0 - nxt) > 0
-         |      THEN ((1.0 - nxt) - (1.0 - own))
-         |        / greatest(1.0 - own, 1.0 - nxt)
-         |      ELSE CAST(0.0 AS DOUBLE) END AS s
-         |  FROM pp)
-         |SELECT cell, CAST(count(*) AS BIGINT) AS n_members,
-         |  round(avg(s), 6) + 0.0 AS mean_silhouette,
-         |  round(avg(CASE WHEN s < 0 THEN 1.0 ELSE 0.0 END), 6)
-         |    AS share_negative
-         |FROM sc GROUP BY cell""".stripMargin,
-    // q233: the same word stats computed once in one scan; list_intersect /
-    // list_distinct replay array_intersect / array_distinct, and the
-    // '...' runs are non-overlapping in both regexp engines
-    "q233_gopher_rules" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ws,
-        |    len(string_split(text, ' ')) AS nw,
-        |    length(replace(text, ' ', '')) AS nonspace,
-        |    len(regexp_extract_all(text, '#'))
-        |      + len(regexp_extract_all(text, '\.\.\.')) AS symb
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id, nw,
-        |    CASE WHEN nw > 0 THEN nonspace * 1.0 / nw END AS ml,
-        |    CASE WHEN nw > 0 THEN
-        |      len(list_filter(ws, x -> regexp_matches(x, '[A-Za-z]'))) * 1.0 / nw
-        |    END AS ar,
-        |    CASE WHEN nw > 0 THEN symb * 1.0 / nw END AS sr,
-        |    len(list_intersect(list_distinct(ws),
-        |      ['the','a','of','and','to','in','is'])) AS sd,
-        |    CASE WHEN nw > 0 THEN len(list_distinct(ws)) * 1.0 / nw END AS dr
-        |  FROM w)
-        |SELECT doc_id, CAST(nw AS BIGINT) AS n_words,
-        |  round(coalesce(ml, 0.0), 6) AS mean_word_len,
-        |  coalesce(nw >= 50 AND nw <= 100000, FALSE) AS ok_word_count,
-        |  coalesce(ml >= 3.0 AND ml <= 10.0, FALSE) AS ok_mean_word_len,
-        |  coalesce(ar >= 0.8, FALSE) AS ok_alpha_ratio,
-        |  coalesce(sr < 0.1, FALSE) AS ok_symbol_ratio,
-        |  coalesce(sd >= 2, FALSE) AS ok_stopwords,
-        |  coalesce(dr > 0.2, FALSE) AS ok_repetition,
-        |  coalesce(nw >= 50 AND nw <= 100000, FALSE)
-        |    AND coalesce(ml >= 3.0 AND ml <= 10.0, FALSE)
-        |    AND coalesce(ar >= 0.8, FALSE)
-        |    AND coalesce(sr < 0.1, FALSE)
-        |    AND coalesce(sd >= 2, FALSE)
-        |    AND coalesce(dr > 0.2, FALSE) AS keep
-        |FROM f""".stripMargin,
-    "q225_ltv_curve" ->
-      """WITH f AS (
-        |  SELECT user_id,
-        |    CAST(date_trunc('week', min(CAST(ts AS TIMESTAMP))) AS TIMESTAMP)
-        |      AS cohort_week
-        |  FROM events GROUP BY 1),
-        |sz AS (SELECT cohort_week, CAST(count(*) AS BIGINT) AS cohort_users
-        |  FROM f GROUP BY 1),
-        |wk AS (
-        |  SELECT f.cohort_week,
-        |    CAST((CAST(date_trunc('week', CAST(e.ts AS TIMESTAMP)) AS DATE)
-        |      - CAST(f.cohort_week AS DATE)) // 7 AS BIGINT) AS week_offset,
-        |    sum(coalesce(CAST(e.value AS DOUBLE), 0.0)) AS wv
-        |  FROM events e JOIN f USING (user_id)
-        |  GROUP BY 1, 2)
-        |SELECT wk.cohort_week, wk.week_offset, sz.cohort_users,
-        |  round(wk.wv, 6) AS week_value,
-        |  round(sum(wk.wv) OVER (PARTITION BY wk.cohort_week
-        |    ORDER BY wk.week_offset
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    / sz.cohort_users, 6) AS cum_ltv
-        |FROM wk JOIN sz USING (cohort_week)""".stripMargin,
-    // q224: the q33 closure chain + a source-keyed survivor rollup
-    "q224_source_dedup_rates" ->
-      s"""$clusterChainSql,
-         |j AS (SELECT d.source, a.doc_id, a.cluster_id
-         |  FROM assign a JOIN documents d ON d.doc_id = a.doc_id)
-         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN doc_id = cluster_id THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_survivors,
-         |  round(1.0 - CAST(sum(CASE WHEN doc_id = cluster_id THEN 1 ELSE 0
-         |    END) AS DOUBLE) / count(*), 6) AS dup_rate
-         |FROM j GROUP BY 1""".stripMargin,
-    // q223: q66's quantization replayed, integer-vector cosines ranked
-    // with the same round/tie, ∩ the exact float top-k
-    "q223_int8_recall" ->
-      """WITH qz AS (
-        |  SELECT vec_id,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x ->
-        |      CASE WHEN list_max(list_transform(CAST(embedding AS DOUBLE[]),
-        |          y -> abs(y))) = 0 THEN 0.0
-        |        ELSE CAST(greatest(-127, least(127, round(x /
-        |          (list_max(list_transform(CAST(embedding AS DOUBLE[]),
-        |            y -> abs(y))) / 127.0)))) AS DOUBLE) END) AS qv
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |qn AS (SELECT vec_id, qv FROM qz
-        |  WHERE list_dot_product(qv, qv) > 0),
-        |i8 AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id
-        |  FROM qn q, qn c
-        |  WHERE q.vec_id % 50 = 0 AND c.vec_id % 50 <> 0
-        |  QUALIFY row_number() OVER (PARTITION BY q.vec_id
-        |    ORDER BY round(list_cosine_similarity(q.qv, c.qv), 6) DESC,
-        |      c.vec_id ASC) <= 10),
-        |ex AS (
-        |  SELECT a.vec_id AS query_id, c.vec_id AS cand_id
-        |  FROM embeddings a, embeddings c
-        |  WHERE a.vec_id % 50 = 0 AND c.vec_id % 50 <> 0
-        |    AND a.embedding IS NOT NULL AND c.embedding IS NOT NULL
-        |    AND list_dot_product(CAST(a.embedding AS DOUBLE[]),
-        |      CAST(a.embedding AS DOUBLE[])) > 0
-        |    AND list_dot_product(CAST(c.embedding AS DOUBLE[]),
-        |      CAST(c.embedding AS DOUBLE[])) > 0
-        |  QUALIFY row_number() OVER (PARTITION BY a.vec_id
-        |    ORDER BY round(list_cosine_similarity(
-        |      CAST(a.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), 6)
-        |      DESC, c.vec_id ASC) <= 10)
-        |SELECT ex.query_id,
-        |  CAST(count(i8.cand_id) AS BIGINT) AS n_found,
-        |  round(CAST(count(i8.cand_id) AS DOUBLE) / 10, 6) AS recall
-        |FROM ex LEFT JOIN i8
-        |  ON ex.query_id = i8.query_id AND ex.cand_id = i8.cand_id
-        |GROUP BY 1""".stripMargin,
-    // q222: the q122 bit-code chain ∩ the exact rounded-cosine top-k,
-    // per-query hit counts over the two k-lists
-    "q222_hamming_recall" ->
-      s"""WITH b AS (
-         |  SELECT vec_id, CAST(${signWordSql(0)} AS BIGINT) AS c0,
-         |    CAST(${signWordSql(1)} AS BIGINT) AS c1
-         |  FROM embeddings WHERE embedding IS NOT NULL),
-         |qq AS (SELECT * FROM b WHERE vec_id % 50 = 0),
-         |cc AS (SELECT * FROM b WHERE vec_id % 50 <> 0),
-         |ham AS (
-         |  SELECT qq.vec_id AS query_id, cc.vec_id AS cand_id
-         |  FROM qq CROSS JOIN cc
-         |  QUALIFY row_number() OVER (PARTITION BY qq.vec_id
-         |    ORDER BY bit_count(xor(qq.c0, cc.c0)) +
-         |      bit_count(xor(qq.c1, cc.c1)) ASC, cc.vec_id ASC) <= 10),
-         |ex AS (
-         |  SELECT a.vec_id AS query_id, c.vec_id AS cand_id
-         |  FROM embeddings a, embeddings c
-         |  WHERE a.vec_id % 50 = 0 AND c.vec_id % 50 <> 0
-         |    AND a.embedding IS NOT NULL AND c.embedding IS NOT NULL
-         |    AND list_dot_product(CAST(a.embedding AS DOUBLE[]),
-         |      CAST(a.embedding AS DOUBLE[])) > 0
-         |    AND list_dot_product(CAST(c.embedding AS DOUBLE[]),
-         |      CAST(c.embedding AS DOUBLE[])) > 0
-         |  QUALIFY row_number() OVER (PARTITION BY a.vec_id
-         |    ORDER BY round(list_cosine_similarity(
-         |      CAST(a.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), 6)
-         |      DESC, c.vec_id ASC) <= 10)
-         |SELECT ex.query_id,
-         |  CAST(count(ham.cand_id) AS BIGINT) AS n_found,
-         |  round(CAST(count(ham.cand_id) AS DOUBLE) / 10, 6) AS recall
-         |FROM ex LEFT JOIN ham
-         |  ON ex.query_id = ham.query_id AND ex.cand_id = ham.cand_id
-         |GROUP BY 1""".stripMargin,
-    // q221: the q53 curation chain + the q56 packing tail over survivors
-    "q221_curation_to_tape" ->
-      s"""$curationCtes,
-         |survivors AS (
-         |  SELECT a.doc_id FROM assign a WHERE a.cluster_id = a.doc_id),
-         |counted AS (
-         |  SELECT e.doc_id,
-         |    CAST(len(regexp_extract_all(e.text,
-         |      '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]')) AS BIGINT) AS n_tokens
-         |  FROM eligible e JOIN survivors s ON s.doc_id = e.doc_id),
-         |sharded AS (
-         |  SELECT doc_id, n_tokens,
-         |    CAST(${md5ModSql("doc_id", 4)} AS BIGINT) AS shard
-         |  FROM counted),
-         |wprev AS (
-         |  SELECT doc_id, n_tokens, shard,
-         |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
-         |      - n_tokens AS BIGINT) AS start_offset
-         |  FROM sharded)
-         |SELECT doc_id, n_tokens, shard, start_offset,
-         |  CAST(start_offset // 512 AS BIGINT) AS bin,
-         |  n_tokens > 512 AS oversize
-         |FROM wprev""".stripMargin,
-    // q220: same day-offset reduction, pairwise slopes, quantile_cont
-    // medians (slope first, then median residual intercept)
-    "q220_robust_trend" ->
-      """WITH daily AS (
-        |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-        |    sum(CAST(value AS DOUBLE)) AS v
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-        |  GROUP BY 1),
-        |b AS (SELECT min(d) AS d0 FROM daily),
-        |idx AS (SELECT CAST(datediff('day', b.d0, daily.d) AS DOUBLE) AS x, v
-        |  FROM daily, b),
-        |sl AS (
-        |  SELECT quantile_cont((bb.v - aa.v) / (bb.x - aa.x), 0.5) AS slope
-        |  FROM idx aa JOIN idx bb ON aa.x < bb.x)
-        |SELECT CAST(count(*) AS BIGINT) AS n_days,
-        |  round(sl.slope, 6) AS slope,
-        |  round(quantile_cont(idx.v - sl.slope * idx.x, 0.5), 6) AS intercept
-        |FROM idx, sl
-        |GROUP BY sl.slope""".stripMargin,
-    // q218/q219: identical DECIMAL(12,2) arithmetic — decimal sums are
-    // exact, so the ranks and revenues are bit-identical cross-engine
-    "q218_shipping_priority" ->
-      """SELECT o.o_orderkey, o.o_orderdate, o.o_orderpriority,
-        |  CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2)) *
-        |    (CAST(1 AS DECIMAL(12,2)) - CAST(l.l_discount AS DECIMAL(12,2))))
-        |    AS DOUBLE) AS revenue
-        |FROM customer c
-        |JOIN orders o ON c.c_custkey = o.o_custkey
-        |JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |WHERE c.c_mktsegment = 'BUILDING'
-        |  AND o.o_orderdate < TIMESTAMP '1998-07-01'
-        |  AND l.l_shipdate > TIMESTAMP '1998-07-01'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, o.o_orderkey ASC
-        |LIMIT 10""".stripMargin,
-    "q219_region_volume" ->
-      """SELECT n.n_name,
-        |  CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2)) *
-        |    (CAST(1 AS DECIMAL(12,2)) - CAST(l.l_discount AS DECIMAL(12,2))))
-        |    AS DOUBLE) AS revenue
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |  AND c.c_nationkey = s.s_nationkey
-        |JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |JOIN region r ON n.n_regionkey = r.r_regionkey
-        |WHERE r.r_name = 'ASIA'
-        |  AND o.o_orderdate >= TIMESTAMP '1997-01-01'
-        |  AND o.o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1""".stripMargin,
-    // q217: the q21 exact-pair chain and the q22 banded chain share one
-    // shingle CTE; recall = |lsh ∩ exact| / |exact|, both md5-replayed
-    "q217_dedup_recall" -> {
-      s"""WITH ${minhashCtes(3, 4, 3)},
-         |lsh AS (
-         |  SELECT p.id_a, p.id_b
-         |  FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id
-         |    JOIN sizes sb ON p.id_b = sb.doc_id
-         |  WHERE CAST(p.n_common AS DOUBLE) /
-         |    CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5),
-         |epairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |exact AS (
-         |  SELECT p.id_a, p.id_b
-         |  FROM epairs p JOIN sizes sa ON p.id_a = sa.doc_id
-         |    JOIN sizes sb ON p.id_b = sb.doc_id
-         |  WHERE CAST(p.n_common AS DOUBLE) /
-         |    CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5),
-         |ne AS (SELECT CAST(count(*) AS BIGINT) AS n_exact_pairs FROM exact),
-         |nf AS (SELECT CAST(count(*) AS BIGINT) AS n_lsh_found
-         |  FROM exact e JOIN lsh l ON e.id_a = l.id_a AND e.id_b = l.id_b)
-         |SELECT ne.n_exact_pairs, nf.n_lsh_found,
-         |  CASE WHEN ne.n_exact_pairs > 0 THEN
-         |    round(CAST(nf.n_lsh_found AS DOUBLE) / ne.n_exact_pairs, 6)
-         |  END AS recall
-         |FROM ne, nf""".stripMargin
-    },
-    // q216: both CMS matrices re-derived cell-by-cell (q184's device),
-    // per-row inner products, min over rows; exact side is Σ f_a·f_b
-    "q216_join_size_cms" -> {
-      def win(off: Int, item: String): String = (1 to 8).map(k =>
-        s"(strpos('0123456789abcdef', substr(md5($item), ${off + k}, 1)) - 1) * ${math.pow(16, 8 - k).toLong}")
-        .mkString(" + ")
-      def cellRows(src: String) = (0 until 4).map(r =>
-        s"SELECT $r AS r, ((${win(r * 8, "k")}) % 64) AS idx, f FROM $src")
-        .mkString("\n  UNION ALL ")
-      s"""WITH fa AS (SELECT CAST(o_custkey AS VARCHAR) AS k, count(*) AS f
-         |  FROM orders WHERE o_custkey IS NOT NULL GROUP BY 1),
-         |fb AS (SELECT CAST(c_custkey AS VARCHAR) AS k, count(*) AS f
-         |  FROM customer WHERE c_custkey IS NOT NULL GROUP BY 1),
-         |ha AS (${cellRows("fa")}),
-         |hb AS (${cellRows("fb")}),
-         |ca AS (SELECT r, idx, CAST(sum(f) AS BIGINT) AS c FROM ha GROUP BY 1, 2),
-         |cb AS (SELECT r, idx, CAST(sum(f) AS BIGINT) AS c FROM hb GROUP BY 1, 2),
-         |ip AS (SELECT ca.r, CAST(sum(ca.c * cb.c) AS BIGINT) AS s
-         |  FROM ca JOIN cb ON ca.r = cb.r AND ca.idx = cb.idx GROUP BY 1),
-         |est AS (SELECT min(s) AS join_size_est FROM ip),
-         |ex AS (SELECT CAST(coalesce(sum(fa.f * fb.f), 0) AS BIGINT)
-         |    AS join_size_exact
-         |  FROM fa JOIN fb USING (k))
-         |SELECT est.join_size_est, ex.join_size_exact,
-         |  est.join_size_est >= ex.join_size_exact AS never_under
-         |FROM est, ex""".stripMargin
-    },
-    // q215: the q214 training chain + the same 5 folds nested in
-    // training order over every document's words (level-unique lambda
-    // names keep DuckDB scoping unambiguous)
-    // q250: the exact verified-pair edges (q21's CTEs), symmetrized,
-    // then two unrolled peel rounds - degree aggs + keep-set joins
-    "q250_kcore_peel" ->
-      s"""WITH sh AS (${shingleSql(3)}),
-         |pr AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         |vp AS (SELECT p.id_a, p.id_b
-         |  FROM pr p JOIN sizes sa ON p.id_a = sa.doc_id
-         |    JOIN sizes sb ON p.id_b = sb.doc_id
-         |  WHERE CAST(p.n_common AS DOUBLE)
-         |    / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5),
-         |e0 AS (SELECT id_a AS a, id_b AS b FROM vp WHERE id_a <> id_b
-         |  UNION SELECT id_b, id_a FROM vp WHERE id_a <> id_b),
-         |d1 AS (SELECT a, count(*) AS deg FROM e0 GROUP BY 1),
-         |k1 AS (SELECT a FROM d1 WHERE deg >= 2),
-         |e1 AS (SELECT e.a, e.b FROM e0 e JOIN k1 x ON e.a = x.a
-         |  JOIN k1 y ON e.b = y.a),
-         |d2 AS (SELECT a, count(*) AS deg FROM e1 GROUP BY 1),
-         |k2 AS (SELECT a FROM d2 WHERE deg >= 2),
-         |e2 AS (SELECT e.a, e.b FROM e1 e JOIN k2 x ON e.a = x.a
-         |  JOIN k2 y ON e.b = y.a)
-         |SELECT a AS node, CAST(count(*) AS BIGINT) AS degree
-         |FROM e2 GROUP BY 1""".stripMargin,
-    // q249: the round-trip check re-derived end to end - same training
-    // replay as q215, then array_to_string(tokens) compared to the word
-    "q249_bpe_roundtrip" -> {
-      val (ctes, nested, bestsFrom) = bpeOracleParts(5)
-      s"""WITH $ctes,
-         |wd AS (
-         |  SELECT doc_id, w,
-         |    list_transform(generate_series(1, len(w)), i -> w[i:i]) AS chars
-         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-         |        FROM documents) WHERE len(w) > 0),
-         |tok AS (
-         |  SELECT doc_id,
-         |    CASE WHEN array_to_string($nested, '') = w THEN 1 ELSE 0 END AS ok
-         |  FROM wd, $bestsFrom)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         |  CAST(sum(ok) AS BIGINT) AS n_ok,
-         |  count(*) = sum(ok) AS all_ok
-         |FROM tok GROUP BY 1""".stripMargin
-    },
-    "q215_bpe_fertility" -> {
-      val (ctes, nested, bestsFrom) = bpeOracleParts(5)
-      s"""WITH $ctes,
-         |wd AS (
-         |  SELECT doc_id,
-         |    list_transform(generate_series(1, len(w)), i -> w[i:i]) AS chars
-         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-         |        FROM documents) WHERE len(w) > 0),
-         |tok AS (
-         |  SELECT doc_id, CAST(len(chars) AS BIGINT) AS nc,
-         |    CAST(len($nested) AS BIGINT) AS nt
-         |  FROM wd, $bestsFrom)
-         |SELECT doc_id, CAST(sum(nc) AS BIGINT) AS n_chars,
-         |  CAST(sum(nt) AS BIGINT) AS n_tokens,
-         |  round(CAST(sum(nc) AS DOUBLE) / sum(nt), 6) AS chars_per_token
-         |FROM tok GROUP BY 1""".stripMargin
-    },
-    // q213: name-level recursive closure (the q33 device over the 64
-    // distinct names), then the three survivorship reads as QUALIFY
-    // argmax CTEs — same total orders as the struct-min/max aggregates
-    "q213_golden_record" ->
-      """WITH RECURSIVE p AS (
-        |  SELECT p_partkey, p_name, p_brand, p_size, p_retailprice,
-        |    split_part(p_name, ' ', 2) AS blk FROM part),
-        |names AS (SELECT DISTINCT blk, p_name FROM p),
-        |jpairs AS (
-        |  SELECT a.p_name AS id_a, b.p_name AS id_b
-        |  FROM names a JOIN names b ON a.blk = b.blk
-        |    AND a.p_name < b.p_name
-        |    AND abs(len(a.p_name) - len(b.p_name)) <= 2
-        |    AND levenshtein(a.p_name, b.p_name) <= 2),
-        |sym AS (SELECT id_a AS a, id_b AS b FROM jpairs
-        |        UNION SELECT id_b, id_a FROM jpairs),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM sym
-        |  UNION
-        |  SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-        |assign AS (
-        |  SELECT n.p_name,
-        |    least(n.p_name, coalesce(min(r.b), n.p_name)) AS cluster_id
-        |  FROM names n LEFT JOIN reach r ON r.a = n.p_name
-        |  GROUP BY n.p_name),
-        |m AS (SELECT p.*, a.cluster_id FROM p JOIN assign a USING (p_name)),
-        |agg AS (
-        |  SELECT cluster_id, CAST(min(p_partkey) AS BIGINT) AS survivor_id,
-        |    CAST(count(*) AS BIGINT) AS n_members,
-        |    max(p_retailprice) AS p_retailprice
-        |  FROM m GROUP BY 1),
-        |longest AS (
-        |  SELECT cluster_id, p_name FROM m
-        |  QUALIFY row_number() OVER (PARTITION BY cluster_id
-        |    ORDER BY len(p_name) DESC, p_name DESC) = 1),
-        |prim AS (
-        |  SELECT cluster_id, p_brand, p_size FROM m
-        |  QUALIFY row_number() OVER (PARTITION BY cluster_id
-        |    ORDER BY p_partkey ASC) = 1)
-        |SELECT agg.cluster_id, agg.survivor_id, agg.n_members,
-        |  longest.p_name, agg.p_retailprice, prim.p_brand, prim.p_size
-        |FROM agg JOIN longest USING (cluster_id) JOIN prim USING (cluster_id)""".stripMargin,
-    // q212: same join-filter-rank chain; integer-µs window arithmetic,
-    // (ts, id) tie-broken ranks, 1/n at 6 dp
-    "q212_attribution" ->
-      """WITH conv AS (
-        |  SELECT user_id AS uid, event_id AS conv_id,
-        |    CAST(ts AS TIMESTAMP) AS conv_ts FROM events
-        |  WHERE event_type = 'purchase'),
-        |touch AS (
-        |  SELECT user_id AS uid, event_id AS touch_id,
-        |    event_type AS touch_type, CAST(ts AS TIMESTAMP) AS touch_ts
-        |  FROM events WHERE event_type IN ('view', 'click')),
-        |j AS (
-        |  SELECT c.conv_id, c.uid, c.conv_ts, t.touch_id, t.touch_type,
-        |    t.touch_ts,
-        |    row_number() OVER (PARTITION BY c.conv_id
-        |      ORDER BY t.touch_ts, t.touch_id) AS rk,
-        |    count(*) OVER (PARTITION BY c.conv_id) AS n
-        |  FROM conv c JOIN touch t USING (uid)
-        |  WHERE t.touch_ts < c.conv_ts
-        |    AND epoch_us(t.touch_ts) >= epoch_us(c.conv_ts) - 86400000000)
-        |SELECT conv_id, j.uid AS user_id, conv_ts, touch_id, touch_type,
-        |  touch_ts, CAST(n AS BIGINT) AS n_touches,
-        |  CAST(CASE WHEN rk = 1 THEN 1.0 ELSE 0.0 END AS DOUBLE) AS w_first,
-        |  CAST(CASE WHEN rk = n THEN 1.0 ELSE 0.0 END AS DOUBLE) AS w_last,
-        |  round(CAST(1.0 AS DOUBLE) / n, 6) AS w_linear
-        |FROM j""".stripMargin,
-    // q211: the q206 exact window recomputed; the sketch estimate is not
-    // emitted (registers aren't engine-replayable — q199's convention),
-    // only the bound boolean, pinned TRUE
-    "q211_wau_hll_bound" ->
-      """WITH ud AS (
-        |  SELECT DISTINCT user_id AS u, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |b AS (SELECT min(d) AS lo, max(d) AS hi FROM ud),
-        |days AS (
-        |  SELECT CAST(unnest(generate_series(b.lo, b.hi,
-        |    INTERVAL 1 DAY)) AS DATE) AS day FROM b)
-        |SELECT days.day,
-        |  CAST(count(DISTINCT ud.u) AS BIGINT) AS wau_exact,
-        |  TRUE AS within_bound
-        |FROM days LEFT JOIN ud
-        |  ON ud.d BETWEEN days.day - 6 AND days.day
-        |GROUP BY 1""".stripMargin,
-    // q209: same md5 start/length arithmetic; the island merge is the
-    // q114 gaps-and-islands window (running-max-of-end variant, since
-    // spans vary in length) — the fold and the window provably agree
-    "q209_span_corruption" -> {
-      val pStr = "CAST(doc_id AS VARCHAR) || '|' || CAST(p AS VARCHAR)"
-      s"""WITH d AS (SELECT doc_id, len(string_split(text, ' ')) AS n
-         |  FROM documents),
-         |pos AS (SELECT doc_id, n,
-         |    unnest(generate_series(0, n - 1)) AS p FROM d),
-         |st AS (SELECT doc_id, n, p AS s,
-         |    least(n - 1, p + ${md5ModSql(s"$pStr || '|L'", 3)}) AS e
-         |  FROM pos WHERE ${md5ModSql(pStr, 7)} = 0),
-         |m AS (SELECT doc_id, n, s, e,
-         |    max(e) OVER (PARTITION BY doc_id ORDER BY s
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-         |  FROM st),
-         |g AS (SELECT doc_id, n, s, e,
-         |    sum(CASE WHEN pmax IS NULL OR s > pmax + 1 THEN 1 ELSE 0 END)
-         |      OVER (PARTITION BY doc_id ORDER BY s) AS grp
-         |  FROM m)
-         |SELECT doc_id, CAST(n AS INTEGER) AS n_tokens,
-         |  CAST(min(s) AS INTEGER) AS span_start,
-         |  CAST(max(e) AS INTEGER) AS span_end,
-         |  CAST(max(e) - min(s) + 1 AS INTEGER) AS span_tokens
-         |FROM g GROUP BY doc_id, n, grp""".stripMargin
-    },
-    // q210: the q79 familiarity chain + per-language quantile_cont cuts,
-    // same strict-> comparisons (familiarity is integer/integer IEEE
-    // division — bit-identical, so the cuts interpolate identical inputs)
-    "q210_ppl_buckets" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |  FROM documents),
-        |stats AS (SELECT term, count(*) AS tf FROM toks GROUP BY 1),
-        |vocab AS (SELECT term FROM stats ORDER BY tf DESC, term LIMIT 40),
-        |fam AS (
-        |  SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |    CAST(sum(s.tf) AS DOUBLE) / count(*) AS f
-        |  FROM toks t JOIN stats s USING (term) GROUP BY 1),
-        |j AS (SELECT fam.doc_id, d.lang, fam.n_tokens, fam.f
-        |      FROM fam JOIN documents d USING (doc_id)),
-        |cuts AS (SELECT lang, quantile_cont(f, 1.0 / 3.0) AS c1,
-        |    quantile_cont(f, 2.0 / 3.0) AS c2 FROM j GROUP BY 1)
-        |SELECT j.doc_id, j.lang, j.n_tokens, round(j.f, 6) AS familiarity,
-        |  CASE WHEN j.f > cuts.c2 THEN 'head'
-        |       WHEN j.f > cuts.c1 THEN 'middle'
-        |       ELSE 'tail' END AS ppl_bucket
-        |FROM j JOIN cuts USING (lang)""".stripMargin,
-    // q208: the q163 edge chain + q91's aligned-unnest per-dim mean
-    "q208_neighbor_mean" ->
-      s"""WITH pc AS ($cosineSql),
-         |k AS (SELECT query_id, cand_id, cos FROM pc
-         |  QUALIFY row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, cand_id ASC) <= 3),
-         |e AS (SELECT query_id AS src, cand_id AS dst FROM k WHERE cos > 0),
-         |m AS (SELECT e.src AS node,
-         |    unnest(CAST(b.embedding AS DOUBLE[])) AS v,
-         |    unnest(generate_series(0, len(b.embedding) - 1)) AS dim
-         |  FROM e JOIN embeddings b ON e.dst = b.vec_id
-         |  WHERE b.embedding IS NOT NULL)
-         |SELECT node, CAST(count(*) AS BIGINT) AS degree,
-         |  CAST(dim AS INTEGER) AS dim, round(avg(v), 6) AS mean_val
-         |FROM m GROUP BY node, dim""".stripMargin,
-    // q206: the same (user, day) reduction; the window count is the
-    // range join the Spark side replaces with the bounded ×7 fan-out
-    "q206_rolling_active" ->
-      """WITH ud AS (
-        |  SELECT DISTINCT user_id AS u, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |b AS (SELECT min(d) AS lo, max(d) AS hi FROM ud),
-        |days AS (
-        |  SELECT CAST(unnest(generate_series(b.lo, b.hi,
-        |    INTERVAL 1 DAY)) AS DATE) AS day FROM b)
-        |SELECT days.day,
-        |  CAST(count(DISTINCT CASE WHEN ud.d = days.day THEN ud.u END)
-        |    AS BIGINT) AS dau,
-        |  CAST(count(DISTINCT ud.u) AS BIGINT) AS wau
-        |FROM days LEFT JOIN ud
-        |  ON ud.d BETWEEN days.day - 6 AND days.day
-        |GROUP BY 1""".stripMargin,
-    // q207: identical integer-µs fold arithmetic (double division then
-    // floor is bit-identical cross-engine below 2^53), same clamp trick
-    "q207_temporal_folds" -> {
-      val e = 3600000L * 1000L
-      def fold(t: String) =
-        s"CAST(least(4, floor((greatest(b.lo, least(b.hi, $t)) - b.lo)" +
-          s" * 5 / (b.hi - b.lo + 1))) AS INTEGER)"
-      s"""WITH base AS (
-         |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts,
-         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
-         |  FROM events WHERE ts IS NOT NULL),
-         |b AS (SELECT min(us) AS lo, max(us) AS hi FROM base)
-         |SELECT event_id, ts, ${fold("us")} AS fold,
-         |  ${fold(s"us - $e")} <> ${fold(s"us + $e")} AS is_embargo
-         |FROM base, b""".stripMargin
-    },
-    // q200: the q44 sign-band replay split corpus/batch, verified cosines
-    // q200: adaptive bits/bands from the STANDING CORPUS's count (the
-    // even-id side), both band tables built from the same p CTE
-    "q200_embed_dedup_across" -> {
-      s"""WITH emb_c AS (SELECT * FROM embeddings WHERE vec_id % 2 = 0),
-         |emb_b AS (SELECT * FROM embeddings WHERE vec_id % 2 = 1),
-         |p AS (SELECT bits, greatest(1, least(8, 64 // bits)) AS bands FROM (
-         |  SELECT ${bitsSqlFrom("(SELECT count(*) AS n FROM emb_c)")} AS bits)),
-         |bc AS (
-         |  ${dynamicBandedSql("emb_c")}),
-         |bd AS (
-         |  ${dynamicBandedSql("emb_b")}),
-         |cand AS (
-         |  SELECT DISTINCT c.vec_id AS corpus_id, d.vec_id AS batch_id
-         |  FROM bc c JOIN bd d ON c.band = d.band AND c.bucket = d.bucket),
-         |pc AS (
-         |  SELECT c.corpus_id, c.batch_id,
-         |    round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]),
-         |      CAST(y.embedding AS DOUBLE[])), 6) AS cos
-         |  FROM cand c
-         |  JOIN emb_c x ON x.vec_id = c.corpus_id
-         |  JOIN emb_b y ON y.vec_id = c.batch_id)
-         |SELECT corpus_id, batch_id, cos FROM pc WHERE cos >= 0.3""".stripMargin
-    },
-    // q197: exact token totals + heavy count; the MG theorems pinned TRUE
-    // (a merge-order bug in the aggregate becomes a hash mismatch)
-    "q197_mg_bound" -> mgBoundSql(5),
-    // q120: the same contract at the benchmark's scale point k=100
-    "q120_heavy_hitters_mg" -> mgBoundSql(100),
-    // q105: the KMV estimator replayed VALUE-exact — per source the k
-    // smallest distinct md5(shingle)s, then the same union-slice /
-    // common-minima / (k−1)/frac(kth) arithmetic as the Scala array
-    // expressions; merge-order cannot move a set's k minima, so the
-    // estimates (not just their bounds) hash-match
-    "q105_source_overlap_kmv" -> {
-      val k = 256
-      val nibSum = (1 to 12).map(i =>
-        s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1) * ${BigInt(16).pow(12 - i)}").mkString(" + ")
-      def fracOf(expr: String) =
-        s"(CAST((SELECT $nibSum FROM (SELECT $expr AS h)) AS DOUBLE) / ${math.pow(16, 12)})"
-      def cardOf(lst: String) =
-        s"(CASE WHEN len($lst) < $k THEN CAST(len($lst) AS DOUBLE) " +
-          s"ELSE ${k - 1}.0 / ${fracOf(s"$lst[$k]")} END)"
-      s"""WITH sh AS (
-         |  SELECT DISTINCT source AS src, md5(shingle) AS h FROM (
-         |    SELECT source, unnest(list_distinct(list_transform(
-         |      generate_series(1, len(ts) - 2),
-         |      i -> array_to_string(ts[i:i+2], ' ')))) AS shingle
-         |    FROM (SELECT source, string_split(text, ' ') AS ts FROM documents))),
-         |rk AS (SELECT src, h,
-         |    row_number() OVER (PARTITION BY src ORDER BY h) AS rn FROM sh),
-         |sk AS (SELECT src, list(h ORDER BY h) AS kmv
-         |  FROM rk WHERE rn <= $k GROUP BY src),
-         |pairs AS (SELECT a.src AS src_a, a.kmv AS kmv_a,
-         |    b.src AS src_b, b.kmv AS kmv_b
-         |  FROM sk a CROSS JOIN sk b WHERE a.src < b.src),
-         |comb AS (SELECT src_a, src_b, kmv_a, kmv_b,
-         |    (list_sort(list_distinct(kmv_a || kmv_b)))[1:$k] AS combined
-         |  FROM pairs),
-         |scored AS (SELECT src_a, src_b, kmv_a, kmv_b, combined,
-         |    CASE WHEN len(combined) = 0 THEN 0.0
-         |      ELSE CAST(len(list_filter(combined,
-         |          x -> list_contains(kmv_a, x) AND list_contains(kmv_b, x)))
-         |        AS DOUBLE) / CAST(len(combined) AS DOUBLE) END AS jac
-         |  FROM comb)
-         |SELECT src_a, src_b, round(jac, 2) AS est_jaccard,
-         |  round(CASE WHEN jac = 0.0 THEN 0.0
-         |    ELSE jac * ${cardOf("combined")}
-         |      / least(${cardOf("kmv_a")}, ${cardOf("kmv_b")}) END, 2)
-         |    AS est_containment
-         |FROM scored""".stripMargin
-    },
-    "q195_bigram_entropy" ->
-      """WITH t AS (SELECT source, string_split(text, ' ') AS ts FROM documents),
-        |p AS (SELECT source, unnest(list_transform(
-        |    generate_series(1, len(ts) - 1), i -> ts[i] || ' ' || ts[i + 1]))
-        |    AS pair
-        |  FROM t WHERE len(ts) >= 2),
-        |pc AS (SELECT source, pair, count(*) AS c FROM p GROUP BY 1, 2),
-        |tot AS (SELECT source, CAST(sum(c) AS BIGINT) AS n FROM pc GROUP BY 1),
-        |e AS (SELECT pc.source, CAST(max(tot.n) AS BIGINT) AS n_bigrams,
-        |    CAST(count(*) AS BIGINT) AS distinct_bigrams,
-        |    round(-sum((CAST(c AS DOUBLE) / CAST(tot.n AS DOUBLE)) *
-        |      ln(CAST(c AS DOUBLE) / CAST(tot.n AS DOUBLE))), 6) AS entropy
-        |  FROM pc JOIN tot ON pc.source = tot.source GROUP BY 1)
-        |SELECT source, n_bigrams, distinct_bigrams, entropy,
-        |  round(exp(entropy), 6) AS perplexity
-        |FROM e""".stripMargin,
-    // q191: the same asymmetric probe — short-doc shingles joined
-    // against the corpus table, containment on the short side's size
-    "q191_containment_pairs" -> {
-      s"""WITH sh AS (${shingleSql(3)}),
-         |shorts AS (SELECT doc_id FROM documents
-         |  WHERE len(string_split(text, ' ')) <= 80),
-         |a AS (SELECT sh.doc_id AS contained_id, shingle
-         |  FROM sh JOIN shorts USING (doc_id)),
-         |sizes AS (SELECT contained_id, count(*) AS na FROM a GROUP BY 1),
-         |common AS (SELECT a.contained_id, sh.doc_id AS container_id,
-         |    count(*) AS n_common
-         |  FROM a JOIN sh ON a.shingle = sh.shingle
-         |    AND a.contained_id <> sh.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT contained_id, container_id,
-         |  round(CAST(n_common AS DOUBLE) / na, 6) AS containment
-         |FROM common JOIN sizes USING (contained_id)
-         |WHERE round(CAST(n_common AS DOUBLE) / na, 6) >= 0.8""".stripMargin
-    },
-    // q192: exact integer power sums, identical division shapes
-    "q192_term_burstiness" ->
-      """WITH pd AS (SELECT doc_id, term, count(*) AS tf FROM
-        |    (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |     FROM documents) GROUP BY 1, 2)
-        |SELECT term, CAST(count(*) AS BIGINT) AS df_docs,
-        |  CAST(sum(tf) AS BIGINT) AS total_tf,
-        |  round(CAST(sum(tf) AS DOUBLE) / count(*), 6) AS mean_tf,
-        |  round((CAST(sum(tf * tf) AS DOUBLE) / count(*)
-        |    - (CAST(sum(tf) AS DOUBLE) / count(*))
-        |      * (CAST(sum(tf) AS DOUBLE) / count(*)))
-        |    / (CAST(sum(tf) AS DOUBLE) / count(*)), 6) AS vmr
-        |FROM pd GROUP BY 1 HAVING count(*) >= 5""".stripMargin,
-    // q193: distinct (user, day, type) baskets, directed pair join,
-    // broadcast totals, identical confidence/lift shapes
-    "q193_basket_rules" ->
-      """WITH it AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day,
-        |    event_type AS item FROM events WHERE event_type IS NOT NULL),
-        |nb AS (SELECT CAST(count(*) AS BIGINT) AS n FROM
-        |  (SELECT DISTINCT user_id, day FROM it)),
-        |ic AS (SELECT item, CAST(count(*) AS BIGINT) AS n FROM it GROUP BY 1),
-        |p AS (SELECT a.item AS antecedent, b.item AS consequent,
-        |    CAST(count(*) AS BIGINT) AS n_both
-        |  FROM it a JOIN it b ON a.user_id = b.user_id AND a.day = b.day
-        |    AND a.item <> b.item
-        |  GROUP BY 1, 2)
-        |SELECT antecedent, consequent, n_both, ia.n AS n_ant,
-        |  ic2.n AS n_cons,
-        |  round(CAST(n_both AS DOUBLE) / ia.n, 6) AS confidence,
-        |  round(CAST(n_both AS DOUBLE) * nb.n / (ia.n * ic2.n), 6) AS lift
-        |FROM p JOIN ic ia ON p.antecedent = ia.item
-        |JOIN ic ic2 ON p.consequent = ic2.item, nb""".stripMargin,
-    // q189: same confusion reduction, rounded precision/recall feeding
-    // the F1, null-not-NaN degenerate cells
-    "q189_classification_report" ->
-      """WITH pr AS (SELECT event_type AS l,
-        |    CASE WHEN substr(md5(CAST(event_id AS VARCHAR)), 1, 1) < '3'
-        |      THEN 'click' ELSE event_type END AS p FROM events),
-        |m AS (SELECT l, p, count(*) AS n FROM pr GROUP BY 1, 2),
-        |bt AS (SELECT l AS clazz, CAST(sum(n) AS BIGINT) AS n_true
-        |  FROM m GROUP BY 1),
-        |bp AS (SELECT p AS clazz, CAST(sum(n) AS BIGINT) AS n_pred
-        |  FROM m GROUP BY 1),
-        |tpc AS (SELECT l AS clazz, CAST(n AS BIGINT) AS tp FROM m
-        |  WHERE l IS NOT DISTINCT FROM p),
-        |j AS (SELECT coalesce(bt.clazz, bp.clazz) AS clazz,
-        |    coalesce(n_true, 0) AS n_true, coalesce(n_pred, 0) AS n_pred
-        |  FROM bt FULL OUTER JOIN bp
-        |  ON bt.clazz IS NOT DISTINCT FROM bp.clazz),
-        |r AS (SELECT j.clazz, j.n_true, j.n_pred, coalesce(tpc.tp, 0) AS tp
-        |  FROM j LEFT JOIN tpc ON j.clazz IS NOT DISTINCT FROM tpc.clazz),
-        |f AS (SELECT clazz, n_true, n_pred, tp,
-        |  CASE WHEN n_pred = 0 THEN NULL
-        |    ELSE round(CAST(tp AS DOUBLE) / n_pred, 6) END AS "precision",
-        |  CASE WHEN n_true = 0 THEN NULL
-        |    ELSE round(CAST(tp AS DOUBLE) / n_true, 6) END AS "recall"
-        |  FROM r)
-        |SELECT clazz, n_true, n_pred, tp, "precision", "recall",
-        |  CASE WHEN "precision" IS NULL OR "recall" IS NULL
-        |      OR "precision" + "recall" = 0 THEN NULL
-        |  ELSE round(2.0 * "precision" * "recall" /
-        |    ("precision" + "recall"), 6) END AS f1
-        |FROM f""".stripMargin,
-    // q190: same (day, bin) reduction, baseline = min day, add-one
-    // shares, per-day summed contribs rounded at the end
-    "q190_psi_timeline" ->
-      """WITH c AS (SELECT CAST(ts AS DATE) AS day,
-        |    greatest(0, least(19,
-        |      CAST(floor((CAST(value AS DOUBLE) - 0.0) / 12.5) AS BIGINT)))
-        |      AS bin, count(*) AS n
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |days AS (SELECT DISTINCT day FROM c),
-        |bins AS (SELECT unnest(generate_series(0, 19)) AS bin),
-        |g AS (SELECT d.day, b.bin, coalesce(c.n, 0) AS n
-        |  FROM days d CROSS JOIN bins b
-        |  LEFT JOIN c ON c.day = d.day AND c.bin = b.bin),
-        |t AS (SELECT day, CAST(sum(n) AS BIGINT) AS tt FROM g GROUP BY 1),
-        |bl AS (SELECT g.bin,
-        |    CAST(g.n + 1 AS DOUBLE) / CAST(t.tt + 20 AS DOUBLE) AS pb
-        |  FROM g JOIN t USING (day)
-        |  WHERE g.day = (SELECT min(day) FROM t)),
-        |x AS (SELECT g.day, t.tt,
-        |    (CAST(g.n + 1 AS DOUBLE) / CAST(t.tt + 20 AS DOUBLE) - bl.pb) *
-        |      ln((CAST(g.n + 1 AS DOUBLE) / CAST(t.tt + 20 AS DOUBLE))
-        |        / bl.pb) AS contrib
-        |  FROM g JOIN t USING (day) JOIN bl USING (bin))
-        |SELECT day, CAST(max(tt) AS BIGINT) AS n_rows,
-        |  round(sum(contrib), 6) AS psi
-        |FROM x GROUP BY 1""".stripMargin,
-    // q188: the greedy traversal unrolled — same ‖x−c‖² expansion (the
-    // double index-order dot is bit-identical to dotF), raw min-dist
-    // carried, round-before-argmax pick, id tie-break
-    "q188_kcenter_coreset" -> {
-      val k = 6
-      val head =
-        """WITH x AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v,
-          |    list_dot_product(CAST(embedding AS DOUBLE[]),
-          |      CAST(embedding AS DOUBLE[])) AS xx
-          |  FROM embeddings WHERE embedding IS NOT NULL),
-          |c1 AS (SELECT id, v, xx FROM x ORDER BY id ASC LIMIT 1),
-          |d1 AS (SELECT x.id, x.v, x.xx,
-          |    (x.xx - 2.0 * list_dot_product(x.v, c1.v) + c1.xx) AS draw
-          |  FROM x, c1 WHERE x.id <> c1.id)""".stripMargin
-      val rounds = (2 to k).map { i =>
-        val pick =
-          s"""c$i AS (SELECT id, v, xx, draw FROM d${i - 1}
-             |  ORDER BY round(draw, 6) DESC, id ASC LIMIT 1)""".stripMargin
-        val carry = if (i == k) "" else
-          s""",
-             |d$i AS (SELECT a.id, a.v, a.xx,
-             |    least(a.draw, (a.xx - 2.0 * list_dot_product(a.v, c$i.v)
-             |      + c$i.xx)) AS draw
-             |  FROM d${i - 1} a, c$i WHERE a.id <> c$i.id)""".stripMargin
-        pick + carry
-      }
-      val selects =
-        s"SELECT CAST(1 AS BIGINT) AS center_rank, id, CAST(NULL AS DOUBLE) AS radius FROM c1" +:
-          (2 to k).map(i =>
-            s"SELECT CAST($i AS BIGINT), id, round(draw, 6) FROM c$i")
-      (head +: rounds).mkString(",\n") + "\n" +
-        selects.mkString("\nUNION ALL ")
-    },
-    // q203: the q188 unrolled-greedy device — per-pick CTEs carrying the
-    // running max-similarity, the SAME λ / (1−λ) Scala double literals,
-    // round-before-argmax with id tie-break at every pick
-    "q203_mmr_rerank" -> {
-      val k = 5
-      val lambda = 0.7
-      val oneMinus = 1.0 - lambda
-      val head =
-        """WITH x AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-          |  FROM embeddings WHERE vec_id <> 1 AND embedding IS NOT NULL
-          |    AND list_dot_product(CAST(embedding AS DOUBLE[]),
-          |          CAST(embedding AS DOUBLE[])) > 0),
-          |qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q
-          |       FROM embeddings WHERE vec_id = 1),
-          |r AS (SELECT id, v, round(list_cosine_similarity(v, qv.q), 6) AS rel
-          |      FROM x, qv),
-          |c1 AS (SELECT id, v, rel FROM r ORDER BY rel DESC, id ASC LIMIT 1),
-          |d1 AS (SELECT a.id, a.v, a.rel,
-          |    round(list_cosine_similarity(a.v, c1.v), 6) AS msim
-          |  FROM r a, c1 WHERE a.id <> c1.id)""".stripMargin
-      val rounds = (2 to k).map { i =>
-        val pick =
-          s"""c$i AS (SELECT id, v, rel,
-             |    round($lambda * rel - $oneMinus * msim, 6) AS score
-             |  FROM d${i - 1}
-             |  ORDER BY round($lambda * rel - $oneMinus * msim, 6) DESC, id ASC
-             |  LIMIT 1)""".stripMargin
-        val carry = if (i == k) "" else
-          s""",
-             |d$i AS (SELECT a.id, a.v, a.rel,
-             |    greatest(a.msim,
-             |      round(list_cosine_similarity(a.v, c$i.v), 6)) AS msim
-             |  FROM d${i - 1} a, c$i WHERE a.id <> c$i.id)""".stripMargin
-        pick + carry
-      }
-      val selects =
-        s"SELECT CAST(1 AS BIGINT) AS mmr_rank, id, rel, CAST(NULL AS DOUBLE) AS score FROM c1" +:
-          (2 to k).map(i => s"SELECT CAST($i AS BIGINT), id, rel, score FROM c$i")
-      (head +: rounds).mkString(",\n") + "\n" + selects.mkString("\nUNION ALL ")
-    },
-    // q186: the O(n²) NOT-EXISTS skyline definition — the op's ordered
-    // single-pass must select exactly this set
-    "q186_pareto_frontier" ->
-      """WITH v AS (SELECT doc_id, n_chars,
-        |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
-        |      AS distinct_toks
-        |  FROM documents
-        |  WHERE n_chars IS NOT NULL AND text IS NOT NULL)
-        |SELECT doc_id, n_chars, distinct_toks FROM v p
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM v q
-        |  WHERE q.n_chars >= p.n_chars AND q.distinct_toks >= p.distinct_toks
-        |    AND (q.n_chars > p.n_chars OR q.distinct_toks > p.distinct_toks))""".stripMargin,
-    // q187: identical rank-sum identity on the reduced per-score table
-    "q187_roc_auc" ->
-      """WITH red AS (SELECT event_type, CAST(value AS DOUBLE) AS s,
-        |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS np,
-        |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 0 ELSE 1 END) AS BIGINT)
-        |      AS nn
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |cum AS (SELECT *, coalesce(CAST(sum(nn) OVER (PARTITION BY event_type
-        |    ORDER BY s ASC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |    AS BIGINT), 0) AS cum_neg,
-        |  CAST(np AS DOUBLE) * (coalesce(CAST(sum(nn) OVER (
-        |    PARTITION BY event_type ORDER BY s ASC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-        |    + CAST(nn AS DOUBLE) / 2.0) AS c
-        |  FROM red)
-        |SELECT event_type, CAST(sum(np) AS BIGINT) AS n_pos,
-        |  CAST(sum(nn) AS BIGINT) AS n_neg,
-        |  CASE WHEN sum(np) = 0 OR sum(nn) = 0 THEN NULL
-        |  ELSE round(sum(c) / (CAST(sum(np) AS BIGINT) *
-        |    CAST(sum(nn) AS BIGINT)), 6) END AS auc
-        |FROM cum GROUP BY 1""".stripMargin,
-    // q184: the 4×16 matrix re-derived — per md5-hex-window row, cell
-    // mass = Σ tf of the terms hashing there; estimate = min over rows
-    "q184_count_min" -> {
-      def win(off: Int): String = (1 to 8).map(k =>
-        s"(strpos('0123456789abcdef', substr(md5(term), ${off + k}, 1)) - 1) * ${math.pow(16, 8 - k).toLong}")
-        .mkString(" + ")
-      val rows = (0 until 4).map(r =>
-        s"SELECT term, tf_true, $r AS r, ((${win(r * 8)}) % 16) AS idx FROM tc")
-      s"""WITH tok AS (SELECT unnest(string_split(text, ' ')) AS term
-         |  FROM documents),
-         |tc AS (SELECT term, count(*) AS tf_true FROM tok GROUP BY 1),
-         |hashed AS (${rows.mkString("\n  UNION ALL ")}),
-         |cells AS (SELECT r, idx, CAST(sum(tf_true) AS BIGINT) AS c
-         |  FROM hashed GROUP BY 1, 2)
-         |SELECT h.term, CAST(max(h.tf_true) AS BIGINT) AS tf_true,
-         |  min(c.c) AS tf_est
-         |FROM hashed h JOIN cells c ON c.r = h.r AND c.idx = h.idx
-         |GROUP BY 1""".stripMargin
-    },
-    // q185: the identical recurrence as a recursive CTE over the same
-    // (ts, id) order — sequential IEEE fold, hash-exact (no rounding)
-    "q185_cusum_alerts" -> {
-      val drift = 60.0 + 20.0
-      s"""WITH RECURSIVE o AS (SELECT user_id, event_id, ts, value,
-         |    CAST(row_number() OVER (PARTITION BY user_id
-         |      ORDER BY ts, event_id) AS BIGINT) AS rn
-         |  FROM events WHERE value IS NOT NULL),
-         |c AS (
-         |  SELECT user_id, event_id, ts, value, rn,
-         |    greatest(0.0, 0.0 + (value - $drift)) AS s
-         |  FROM o WHERE rn = 1
-         |  UNION ALL
-         |  SELECT o.user_id, o.event_id, o.ts, o.value, o.rn,
-         |    greatest(0.0, c.s + (o.value - $drift))
-         |  FROM c JOIN o ON o.user_id = c.user_id AND o.rn = c.rn + 1)
-         |SELECT user_id, event_id AS id, CAST(ts AS TIMESTAMP) AS ts, value,
-         |  s AS cusum
-         |FROM c WHERE s > 200.0""".stripMargin
-    },
-    // q182: same canonicalization, lowest-apex wedge join, and corner
-    // fan-out over the exact 3-NN edges
-    "q182_triangle_stats" ->
-      s"""WITH pc AS ($cosineSql),
-         |k AS (SELECT query_id, cand_id, cos FROM pc
-         |  QUALIFY row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, cand_id ASC) <= 3),
-         |e AS (SELECT query_id AS s, cand_id AS d FROM k WHERE cos > 0),
-         |canon AS (SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-         |  FROM e WHERE s <> d),
-         |deg AS (SELECT node, count(*) AS degree FROM
-         |  (SELECT a AS node FROM canon UNION ALL SELECT b FROM canon)
-         |  GROUP BY 1),
-         |tri AS (SELECT w1.a, w1.b AS b1, w2.b AS b2
-         |  FROM canon w1 JOIN canon w2 ON w1.a = w2.a AND w1.b < w2.b
-         |  JOIN canon c ON c.a = w1.b AND c.b = w2.b),
-         |pn AS (SELECT node, count(*) AS triangles FROM
-         |  (SELECT a AS node FROM tri UNION ALL SELECT b1 FROM tri
-         |   UNION ALL SELECT b2 FROM tri) GROUP BY 1)
-         |SELECT deg.node, CAST(deg.degree AS BIGINT) AS degree,
-         |  CAST(coalesce(pn.triangles, 0) AS BIGINT) AS triangles,
-         |  CASE WHEN deg.degree < 2 THEN 0.0
-         |  ELSE round(2.0 * coalesce(pn.triangles, 0) /
-         |    (deg.degree * (deg.degree - 1)), 6) END AS coeff
-         |FROM deg LEFT JOIN pn ON deg.node = pn.node""".stripMargin,
-    // q183: the SAME literal sign matrix interpolated from
-    // projectionSigns, same dot/scale/round shapes; exploded to
-    // (vec_id, dim, v) rows to match the driver-facing shape
-    "q183_random_projection" -> {
-      val elems = graft.ops.Embeddings.projectionSigns(64, 16).map { r =>
-        val signs = r.map(v => if (v > 0) "1.0" else "-1.0").mkString(", ")
-        s"round(list_dot_product(CAST(embedding AS DOUBLE[]), [$signs]) / sqrt(16.0), 6)"
-      }
-      s"""WITH p AS (SELECT vec_id, [${elems.mkString(",\n  ")}] AS proj
-         |  FROM embeddings)
-         |SELECT vec_id, g.dim AS dim, proj[g.dim] AS v
-         |FROM p CROSS JOIN generate_series(1, 16) AS g(dim)""".stripMargin
-    },
-    // q181: q178's candidate CTEs + the same nibble vectors, fold-exact
-    // dots/norms (list_reduce replays the Spark HOF fold bit-for-bit),
-    // round-before-max cosines, tf-weighted mean
-    "q181_late_interaction" ->
-      s"""WITH $moreLikeThisCtes,
-         |mlt AS (SELECT query_id, cand_id FROM sc
-         |  QUALIFY row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, cand_id ASC) <= 10),
-         |tv AS (SELECT term,
-         |    list_transform(generate_series(1, 8), k ->
-         |      (strpos('0123456789abcdef', substr(md5(term), k, 1)) - 1 - 8)
-         |        / 8.0) AS v
-         |  FROM (SELECT DISTINCT term FROM tf)),
-         |tn AS (SELECT term, v,
-         |    list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)),
-         |      (a, b) -> a + b) AS n2 FROM tv),
-         |tp AS (SELECT m.query_id, m.cand_id, qt.term AS qtok, qt.tf AS qtf,
-         |    qv.v AS qvec, qv.n2 AS qn2, cv.v AS cvec, cv.n2 AS cn2
-         |  FROM mlt m
-         |  JOIN tf qt ON qt.doc = m.query_id
-         |  JOIN tn qv ON qv.term = qt.term
-         |  JOIN tf ct ON ct.doc = m.cand_id
-         |  JOIN tn cv ON cv.term = ct.term),
-         |tc AS (SELECT query_id, cand_id, qtok, qtf,
-         |    CASE WHEN qn2 = 0 OR cn2 = 0 THEN 0.0
-         |    ELSE round(list_reduce(list_prepend(0.0,
-         |        list_transform(generate_series(1, 8), k -> qvec[k] * cvec[k])),
-         |        (a, b) -> a + b) / sqrt(qn2 * cn2), 6) END AS cos
-         |  FROM tp),
-         |mx AS (SELECT query_id, cand_id, qtok, qtf, max(cos) AS mc
-         |  FROM tc GROUP BY 1, 2, 3, 4)
-         |SELECT query_id, cand_id,
-         |  round(sum(qtf * mc) / sum(qtf), 6) AS maxsim
-         |FROM mx GROUP BY 1, 2""".stripMargin,
-    // q179: same per-user lifetime reduction, censor rule, and reverse
-    // cumulative at-risk window over the reduced histogram
-    "q179_hazard_table" ->
-      """WITH pu AS (SELECT user_id,
-        |    date_diff('day', min(CAST(ts AS DATE)), max(CAST(ts AS DATE)))
-        |      AS life,
-        |    date_diff('day', max(CAST(ts AS DATE)), DATE '2024-02-01') >= 7
-        |      AS observed
-        |  FROM events GROUP BY 1),
-        |h AS (SELECT life AS lifetime_day, count(*) AS n,
-        |    CAST(sum(CASE WHEN observed THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_churned
-        |  FROM pu GROUP BY 1)
-        |SELECT CAST(lifetime_day AS BIGINT) AS lifetime_day,
-        |  CAST(sum(n) OVER w AS BIGINT) AS n_at_risk, n_churned,
-        |  round(CAST(n_churned AS DOUBLE) / (sum(n) OVER w), 6) AS hazard
-        |FROM h
-        |WINDOW w AS (ORDER BY lifetime_day
-        |  ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)""".stripMargin,
-    // q180: same exact-percentile grid (6 dp at build), same exact
-    // cume_dist ranks and ceil cell mapping
-    "q180_quantile_normalize" -> {
-      val ps = (1 to 100).map(_.toDouble / 100)
-      s"""WITH v AS (SELECT doc_id, source, n_chars AS score
-         |  FROM documents WHERE n_chars IS NOT NULL),
-         |g AS (SELECT list_transform(
-         |    quantile_cont(score, [${ps.mkString(", ")}]),
-         |    x -> round(x, 6)) AS grid FROM v),
-         |p AS (SELECT doc_id, source, score,
-         |    cume_dist() OVER (PARTITION BY source ORDER BY score) AS pp
-         |  FROM v)
-         |SELECT doc_id, source, score,
-         |  grid[CAST(ceil(pp * 100) AS INTEGER)] AS norm_score
-         |FROM p, g""".stripMargin
-    },
-    // q176: same per-class strip-and-diff counts (RE2 'g' flag), same
-    // division shapes; empty docs → null shares
-    "q176_script_shares" ->
-      """WITH c AS (SELECT doc_id, length(text) AS len,
-        |  length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g')) AS c_latin,
-        |  length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS c_digit,
-        |  length(text) - length(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g')) AS c_cjk,
-        |  length(text) - length(regexp_replace(text, '[\x{0400}-\x{04ff}]', '', 'g')) AS c_cyr,
-        |  length(text) - length(regexp_replace(text, '[ ]', '', 'g')) AS c_space
-        |  FROM documents)
-        |SELECT doc_id, CAST(coalesce(len, 0) AS BIGINT) AS n_chars,
-        |  CASE WHEN len > 0 THEN round(CAST(c_latin AS DOUBLE) / len, 6) END AS latin_share,
-        |  CASE WHEN len > 0 THEN round(CAST(c_digit AS DOUBLE) / len, 6) END AS digit_share,
-        |  CASE WHEN len > 0 THEN round(CAST(c_cjk AS DOUBLE) / len, 6) END AS cjk_share,
-        |  CASE WHEN len > 0 THEN round(CAST(c_cyr AS DOUBLE) / len, 6) END AS cyrillic_share,
-        |  CASE WHEN len > 0 THEN round(CAST(c_space AS DOUBLE) / len, 6) END AS space_share,
-        |  CASE WHEN len > 0 THEN round(CAST(len -
-        |    (c_latin + c_digit + c_cjk + c_cyr + c_space) AS DOUBLE) / len, 6)
-        |    END AS other_share
-        |FROM c""".stripMargin,
-    // q177: identical lag frames over the same (ts, id) total order;
-    // only full contexts survive
-    "q177_next_event_examples" ->
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |    lag(event_type, 3) OVER w AS l3,
-        |    lag(event_type, 2) OVER w AS l2,
-        |    lag(event_type, 1) OVER w AS l1
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT user_id, event_id, l3 || ' ' || l2 || ' ' || l1 AS context,
-        |  event_type AS next_event
-        |FROM o
-        |WHERE l3 IS NOT NULL AND l2 IS NOT NULL AND l1 IS NOT NULL""".stripMargin,
-    // q178: same smoothed-idf weights, df pruning, cosine shapes, and
-    // the q24 rank convention (CTE chain shared with q181's rerank)
-    "q178_more_like_this" ->
-      s"""WITH $moreLikeThisCtes
-         |SELECT query_id, cand_id, cos,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, cand_id ASC) AS INTEGER) AS rank
-         |FROM sc
-         |QUALIFY row_number() OVER (PARTITION BY query_id
-         |  ORDER BY cos DESC, cand_id ASC) <= 10""".stripMargin,
-    // q173: same clamped bins, 6 dp averages, spine-kept empty bins,
-    // contribs coalesced to 0 before the ECE sum
-    "q173_calibration" ->
-      """WITH e AS (SELECT least(1.0, CAST(value AS DOUBLE) / 250.0) AS score,
-        |    event_type = 'purchase' AS conv FROM events),
-        |c AS (SELECT greatest(0, least(9,
-        |    CAST(floor(score * 10) AS BIGINT))) AS bin,
-        |    count(*) AS n, round(avg(score), 6) AS mean_score,
-        |    round(avg(CASE WHEN coalesce(conv, false) THEN 1.0 ELSE 0.0 END), 6)
-        |      AS outcome_rate
-        |  FROM e WHERE score IS NOT NULL GROUP BY 1),
-        |sp AS (SELECT unnest(generate_series(0, 9)) AS bin),
-        |g AS (SELECT sp.bin, coalesce(c.n, 0) AS n, c.mean_score,
-        |    c.outcome_rate, round(abs(c.mean_score - c.outcome_rate), 6) AS gap
-        |  FROM sp LEFT JOIN c ON sp.bin = c.bin),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM g),
-        |w AS (SELECT g.*, coalesce(CAST(n AS DOUBLE) / tot * gap, 0.0)
-        |    AS contrib FROM g, t)
-        |SELECT CAST(bin AS BIGINT) AS bin, CAST(n AS BIGINT) AS n,
-        |  mean_score, outcome_rate, gap,
-        |  (SELECT round(sum(contrib), 6) FROM w) AS ece
-        |FROM w""".stripMargin,
-    // q174: cluster closure + within-cluster Levenshtein cost matrix;
-    // null text compares as '' (the op's rule), argmin ties to min id
-    // q174: the q43 LSH chain feeds the same medoid tail
-    "q174_cluster_medoids" ->
-      s"""WITH RECURSIVE ${minhashCtes(3, 4, 3)},
-         |jpairs AS (
-         |  SELECT p.id_a, p.id_b
-         |  FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id JOIN sizes sb ON p.id_b = sb.doc_id
-         |  WHERE CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5),
-         |${closureTailSql()},
-         |mem AS (SELECT a.cluster_id, a.doc_id, coalesce(d.text, '') AS text
-         |        FROM assign a JOIN documents d ON a.doc_id = d.doc_id),
-         |cost AS (SELECT l.cluster_id, l.doc_id,
-         |    CAST(coalesce(sum(CASE WHEN r.doc_id <> l.doc_id
-         |      THEN levenshtein(l.text, r.text) END), 0) AS BIGINT) AS cost
-         |  FROM mem l JOIN mem r ON l.cluster_id = r.cluster_id
-         |  GROUP BY l.cluster_id, l.doc_id, l.text),
-         |stats AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
-         |            CAST(min(cost) AS BIGINT) AS medoid_cost
-         |          FROM cost GROUP BY 1),
-         |best AS (SELECT cluster_id, doc_id,
-         |           row_number() OVER (PARTITION BY cluster_id
-         |             ORDER BY cost ASC, doc_id ASC) AS rn
-         |         FROM cost)
-         |SELECT s.cluster_id, b.doc_id AS medoid_id, s.n_members, s.medoid_cost
-         |FROM stats s JOIN best b ON s.cluster_id = b.cluster_id AND b.rn = 1""".stripMargin,
-    // q175: identical u estimation (collision probability incl. the null
-    // cohort), null-safe agreement, m and 1−m interpolated from the SAME
-    // Scala doubles so the literals are bit-identical
-    "q175_linkage_weights" -> {
-      val m = 0.9
-      s"""WITH c AS (SELECT c_custkey, c_nationkey, c_mktsegment,
-         |    CAST(floor(c_acctbal / 1000) AS BIGINT) AS bal_bucket FROM customer),
-         |u1 AS (SELECT sum(CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) /
-         |    (CAST(sum(n) AS DOUBLE) * CAST(sum(n) AS DOUBLE)) AS u
-         |  FROM (SELECT count(*) AS n FROM c GROUP BY c_mktsegment)),
-         |u2 AS (SELECT sum(CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) /
-         |    (CAST(sum(n) AS DOUBLE) * CAST(sum(n) AS DOUBLE)) AS u
-         |  FROM (SELECT count(*) AS n FROM c GROUP BY bal_bucket)),
-         |p AS (SELECT l.c_custkey AS id_a, r.c_custkey AS id_b,
-         |    l.c_mktsegment IS NOT DISTINCT FROM r.c_mktsegment AS a1,
-         |    l.bal_bucket IS NOT DISTINCT FROM r.bal_bucket AS a2
-         |  FROM c l JOIN c r
-         |  ON l.c_nationkey = r.c_nationkey AND l.c_custkey < r.c_custkey)
-         |SELECT id_a, id_b,
-         |  CAST((CASE WHEN a1 THEN 1 ELSE 0 END)
-         |     + (CASE WHEN a2 THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-         |  round((CASE WHEN a1 THEN log2($m / u1.u)
-         |              ELSE log2(${1.0 - m} / (1.0 - u1.u)) END)
-         |      + (CASE WHEN a2 THEN log2($m / u2.u)
-         |              ELSE log2(${1.0 - m} / (1.0 - u2.u)) END), 6) AS weight
-         |FROM p, u1, u2""".stripMargin
-    },
-    // q170: the same presence/label contingency grid with identical
-    // IEEE division shapes; zero cells contribute 0
-    "q170_term_label_mi" ->
-      """WITH raw AS (SELECT doc_id, lang AS label,
-        |    unnest(string_split(text, ' ')) AS term FROM documents),
-        |dt AS (SELECT DISTINCT doc_id, label, term FROM raw),
-        |tl AS (SELECT term, label, count(*) AS n_tl FROM dt GROUP BY 1, 2),
-        |lab AS (SELECT lang AS label, count(*) AS n_l FROM documents GROUP BY 1),
-        |nn AS (SELECT count(*) AS n FROM documents),
-        |nt AS (SELECT term, CAST(sum(n_tl) AS BIGINT) AS n_t FROM tl
-        |  GROUP BY 1 HAVING CAST(sum(n_tl) AS BIGINT) >= 5),
-        |grid AS (SELECT nt.term, nt.n_t, lab.label, lab.n_l,
-        |    coalesce(tl.n_tl, 0) AS n_tl
-        |  FROM nt CROSS JOIN lab
-        |  LEFT JOIN tl ON tl.term = nt.term
-        |    AND tl.label IS NOT DISTINCT FROM lab.label)
-        |SELECT term, CAST(max(n_t) AS BIGINT) AS df_docs,
-        |  round(sum(
-        |    CASE WHEN n_tl > 0 THEN
-        |      (CAST(n_tl AS DOUBLE) / CAST(n AS DOUBLE)) *
-        |      ln((CAST(n_tl AS DOUBLE) / CAST(n AS DOUBLE)) /
-        |         ((CAST(n_t AS DOUBLE) / CAST(n AS DOUBLE)) *
-        |          (CAST(n_l AS DOUBLE) / CAST(n AS DOUBLE)))) ELSE 0 END
-        |    + CASE WHEN n_l - n_tl > 0 THEN
-        |      (CAST(n_l - n_tl AS DOUBLE) / CAST(n AS DOUBLE)) *
-        |      ln((CAST(n_l - n_tl AS DOUBLE) / CAST(n AS DOUBLE)) /
-        |         ((1.0 - CAST(n_t AS DOUBLE) / CAST(n AS DOUBLE)) *
-        |          (CAST(n_l AS DOUBLE) / CAST(n AS DOUBLE)))) ELSE 0 END), 6)
-        |    AS mi
-        |FROM grid, nn GROUP BY 1""".stripMargin,
-    // q234: q170's grid with the chi² cells — identical left-to-right
-    // IEEE multiply/divide shapes; zero-expectation cells contribute 0
-    "q234_chi2_terms" ->
-      """WITH raw AS (SELECT doc_id, lang AS label,
-        |    unnest(string_split(text, ' ')) AS term FROM documents),
-        |dt AS (SELECT DISTINCT doc_id, label, term FROM raw),
-        |tl AS (SELECT term, label, count(*) AS n_tl FROM dt GROUP BY 1, 2),
-        |lab AS (SELECT lang AS label, count(*) AS n_l FROM documents GROUP BY 1),
-        |nn AS (SELECT count(*) AS n FROM documents),
-        |nt AS (SELECT term, CAST(sum(n_tl) AS BIGINT) AS n_t FROM tl
-        |  GROUP BY 1 HAVING CAST(sum(n_tl) AS BIGINT) >= 5),
-        |grid AS (SELECT nt.term, nt.n_t, lab.label, lab.n_l,
-        |    coalesce(tl.n_tl, 0) AS n_tl
-        |  FROM nt CROSS JOIN lab
-        |  LEFT JOIN tl ON tl.term = nt.term
-        |    AND tl.label IS NOT DISTINCT FROM lab.label),
-        |c AS (SELECT term, n_t,
-        |    CAST(n_t AS DOUBLE) * CAST(n_l AS DOUBLE) / CAST(n AS DOUBLE)
-        |      AS e11,
-        |    (CAST(n AS DOUBLE) - CAST(n_t AS DOUBLE)) * CAST(n_l AS DOUBLE)
-        |      / CAST(n AS DOUBLE) AS e01,
-        |    CAST(n_tl AS DOUBLE) AS o11,
-        |    CAST(n_l AS DOUBLE) - CAST(n_tl AS DOUBLE) AS o01
-        |  FROM grid, nn)
-        |SELECT term, CAST(max(n_t) AS BIGINT) AS df_docs,
-        |  round(sum(
-        |    CASE WHEN e11 > 0 THEN (o11 - e11) * (o11 - e11) / e11
-        |         ELSE 0.0 END
-        |    + CASE WHEN e01 > 0 THEN (o01 - e01) * (o01 - e01) / e01
-        |           ELSE 0.0 END), 6) AS chi2
-        |FROM c GROUP BY 1""".stripMargin,
-    // q235: q91's rounded-float centroid replay on the train split; the
-    // holdout cosines replay dotF's sequential double fold bit-for-bit
-    // (list_reduce — the q181 device; list_cosine_similarity's own
-    // summation lands an ulp away often enough to flip the 6th dp)
-    "q235_centroid_eval" ->
-      """WITH tr AS (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-        |    unnest(generate_series(0, len(embedding) - 1)) AS dim
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL AND label IS NOT NULL
-        |    AND vec_id % 5 <> 0),
-        |c AS (SELECT label AS cent_label, dim,
-        |    CAST(CAST(round(avg(v), 6) AS FLOAT) AS DOUBLE) AS cv
-        |  FROM tr GROUP BY 1, 2),
-        |cents AS (SELECT cent_label, list(cv ORDER BY dim) AS cvec
-        |  FROM c GROUP BY 1),
-        |cn AS (SELECT cent_label, cvec,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(cvec, x -> x * x)), (a, b) -> a + b)) AS cnorm
-        |  FROM cents),
-        |te AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL AND label IS NOT NULL
-        |    AND vec_id % 5 = 0),
-        |tn AS (SELECT vec_id, label, e,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(e, x -> x * x)), (a, b) -> a + b)) AS enorm
-        |  FROM te),
-        |sim AS (SELECT t.vec_id, t.label, c.cent_label,
-        |    round(list_reduce(list_prepend(0.0,
-        |        list_transform(generate_series(1, len(t.e)),
-        |          k -> t.e[k] * c.cvec[k])), (a, b) -> a + b)
-        |      / (t.enorm * c.cnorm), 6) AS csim
-        |  FROM tn t CROSS JOIN cn c),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY csim DESC, cent_label ASC) AS rn FROM sim)
-        |SELECT label, cent_label AS pred_label,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(round(csim * 1000000.0) AS BIGINT)) AS DOUBLE)
-        |    / (count(*) * CAST(1000000.0 AS DOUBLE)) AS mean_cos
-        |FROM r WHERE rn = 1 GROUP BY 1, 2""".stripMargin,
-    // q236: same rank arithmetic (⌈(n+1)·α⌉ clamped, id-tied order
-    // statistic) and the α(1−α) slack product interpolated from the SAME
-    // Scala double so both engines compare identical IEEE values
-    "q236_conformal_coverage" -> {
-      val alpha = 0.9
-      val varTerm = alpha * (1.0 - alpha)
-      s"""WITH b AS (SELECT event_id, event_type, CAST(value AS DOUBLE) AS v
-         |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-         |st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_calib,
-         |    round(avg(v), 6) AS mu
-         |  FROM b WHERE event_id % 5 <> 0 GROUP BY 1),
-         |sc AS (SELECT b.event_type, b.event_id, abs(b.v - st.mu) AS s,
-         |    st.n_calib
-         |  FROM b JOIN st USING (event_type) WHERE b.event_id % 5 <> 0),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY event_type
-         |    ORDER BY s, event_id) AS rn FROM sc),
-         |q AS (SELECT event_type, round(s, 6) AS qhat FROM r
-         |  WHERE rn = least(CAST(ceil((n_calib + 1) *
-         |    CAST($alpha AS DOUBLE)) AS BIGINT), n_calib)),
-         |h AS (SELECT st.event_type, st.n_calib, st.mu, q.qhat,
-         |    CAST(count(*) AS BIGINT) AS n_hold,
-         |    round(avg(CASE WHEN abs(b.v - st.mu) <= q.qhat
-         |      THEN 1.0 ELSE 0.0 END), 6) AS coverage
-         |  FROM b JOIN st USING (event_type) JOIN q USING (event_type)
-         |  WHERE b.event_id % 5 = 0 GROUP BY 1, 2, 3, 4)
-         |SELECT event_type, n_calib, n_hold, mu, qhat, coverage,
-         |  coverage >= CAST($alpha AS DOUBLE)
-         |    - 5.0 * sqrt(CAST($varTerm AS DOUBLE) / n_hold) AS covered
-         |FROM h""".stripMargin
-    },
-    // q238: the q22 signature/banding chain replayed; est, bound, and the
-    // comparison rebuilt with identical IEEE shapes (1/h interpolated from
-    // the SAME Scala double — a bare 1.0/12.0 is DECIMAL division here)
-    "q238_minhash_bound" -> {
-      val h = 12
-      val invH = 1.0 / h
-      val matchSum = (0 until h)
-        .map(i => s"CASE WHEN a.sig_$i = b.sig_$i THEN 1 ELSE 0 END")
-        .mkString(" + ")
-      s"""WITH ${minhashCtes(3, 4, 3)},
-         |jm AS (SELECT p.id_a, p.id_b,
-         |    CAST(p.n_common AS DOUBLE)
-         |      / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) AS jaccard
-         |  FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id
-         |               JOIN sizes sb ON p.id_b = sb.doc_id
-         |  WHERE CAST(p.n_common AS DOUBLE)
-         |    / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.2),
-         |mm AS (SELECT c.id_a, c.id_b, $matchSum AS n_matches
-         |  FROM cand c JOIN sigs a ON a.doc_id = c.id_a
-         |              JOIN sigs b ON b.doc_id = c.id_b)
-         |SELECT j.id_a, j.id_b, CAST(m.n_matches AS BIGINT) AS n_matches,
-         |  CAST(m.n_matches AS DOUBLE) / CAST($h.0 AS DOUBLE) AS est,
-         |  j.jaccard,
-         |  5.0 * sqrt(j.jaccard * (1.0 - j.jaccard)
-         |    / CAST($h.0 AS DOUBLE)) + $invH AS bound,
-         |  abs(CAST(m.n_matches AS DOUBLE) / CAST($h.0 AS DOUBLE) - j.jaccard)
-         |    <= 5.0 * sqrt(j.jaccard * (1.0 - j.jaccard)
-         |      / CAST($h.0 AS DOUBLE)) + $invH AS within
-         |FROM jm j JOIN mm m ON m.id_a = j.id_a AND m.id_b = j.id_b""".stripMargin
-    },
-    // q239: row_number + BIGINT floor-div file assignment replayed; the
-    // skip rule and the exact integer skip_ratio quotient are identical
-    "q239_zonemap_audit" ->
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-        |p AS (SELECT CAST(v[1] AS DOUBLE) AS pred_lo,
-        |    CAST(v[2] AS DOUBLE) AS pred_hi
-        |  FROM (VALUES ([0.0, 150.0]), ([200.0, 260.0]),
-        |               ([400.0, 2000.0])) t(v)),
-        |srt AS (SELECT n_chars, row_number() OVER (ORDER BY n_chars, doc_id)
-        |    AS r FROM documents),
-        |fs AS (SELECT ((r - 1) * 50) // n AS f,
-        |    min(n_chars) AS mn, max(n_chars) AS mx
-        |  FROM srt, nn GROUP BY 1),
-        |nat AS (SELECT n_chars, row_number() OVER (ORDER BY doc_id) AS r
-        |  FROM documents),
-        |fn AS (SELECT ((r - 1) * 50) // n AS f,
-        |    min(n_chars) AS mn, max(n_chars) AS mx
-        |  FROM nat, nn GROUP BY 1)
-        |SELECT 'sorted' AS layout, pred_lo, pred_hi,
-        |  CAST(count(*) AS BIGINT) AS n_files,
-        |  CAST(sum(CASE WHEN mx < pred_lo OR mn > pred_hi THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_skipped,
-        |  CAST(sum(CASE WHEN mx < pred_lo OR mn > pred_hi THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / CAST(count(*) AS DOUBLE) AS skip_ratio
-        |FROM fs CROSS JOIN p GROUP BY pred_lo, pred_hi
-        |UNION ALL
-        |SELECT 'natural' AS layout, pred_lo, pred_hi,
-        |  CAST(count(*) AS BIGINT) AS n_files,
-        |  CAST(sum(CASE WHEN mx < pred_lo OR mn > pred_hi THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_skipped,
-        |  CAST(sum(CASE WHEN mx < pred_lo OR mn > pred_hi THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / CAST(count(*) AS DOUBLE) AS skip_ratio
-        |FROM fn CROSS JOIN p GROUP BY pred_lo, pred_hi""".stripMargin,
-    // q240: the oracle recomputes the mart from the FULL fact in one
-    // pass — any incremental-merge error (count, cent sum, lattice, or
-    // sketch-union drift past the band) shows as a mismatch; money is
-    // snapped to exact integer cents so sum order cannot leak in
-    "q240_incremental_mart" ->
-      """WITH o AS (SELECT CAST(o_orderdate AS DATE) AS day,
-        |    o_totalprice, o_custkey
-        |  FROM orders WHERE o_orderdate IS NOT NULL),
-        |m AS (SELECT day, count(*) AS n_orders,
-        |    sum(CAST(round(o_totalprice * 100.0) AS BIGINT)) AS cents,
-        |    min(o_totalprice) AS min_order, max(o_totalprice) AS max_order
-        |  FROM o GROUP BY 1)
-        |SELECT day, CAST(n_orders AS BIGINT) AS n_orders,
-        |  CAST(cents AS DOUBLE) / 100.0 AS revenue,
-        |  min_order, max_order,
-        |  CAST((cents * 10000) // n_orders AS DOUBLE) / 1000000.0
-        |    AS avg_order,
-        |  TRUE AS est_ok
-        |FROM m""".stripMargin,
-    // q241: per candidate layout, ranks -> exact integer file
-    // assignment -> per-file zones of BOTH probe columns -> predicate
-    // grid; the same [[zoneMapAudit]] math, melted across layouts
-    "q241_sortkey_advisor" ->
-      """WITH base AS (SELECT l_orderkey * 8 + l_linenumber AS rid,
-        |    CAST(l_orderkey AS DOUBLE) AS c1,
-        |    CAST(l_extendedprice AS DOUBLE) AS c2
-        |  FROM lineitem),
-        |nn AS (SELECT count(*) AS n FROM base),
-        |p AS (SELECT probe_col, CAST(lo AS DOUBLE) AS pred_lo,
-        |    CAST(hi AS DOUBLE) AS pred_hi
-        |  FROM (VALUES
-        |    ('l_orderkey', 1000.0, 4000.0),
-        |    ('l_orderkey', 100000.0, 140000.0),
-        |    ('l_extendedprice', 1000.0, 2000.0),
-        |    ('l_extendedprice', 90000.0, 105000.0))
-        |  t(probe_col, lo, hi)),
-        |z1 AS (SELECT ((row_number() OVER (ORDER BY c1, rid) - 1) * 64)
-        |    // n AS f, c1, c2 FROM base, nn),
-        |f1 AS (SELECT f, min(c1) AS mn1, max(c1) AS mx1,
-        |    min(c2) AS mn2, max(c2) AS mx2 FROM z1 GROUP BY 1),
-        |z2 AS (SELECT ((row_number() OVER (ORDER BY c2, rid) - 1) * 64)
-        |    // n AS f, c1, c2 FROM base, nn),
-        |f2 AS (SELECT f, min(c1) AS mn1, max(c1) AS mx1,
-        |    min(c2) AS mn2, max(c2) AS mx2 FROM z2 GROUP BY 1),
-        |mm AS (
-        |  SELECT 'l_orderkey' AS sort_key, 'l_orderkey' AS probe_col,
-        |    mn1 AS mn, mx1 AS mx FROM f1
-        |  UNION ALL SELECT 'l_orderkey', 'l_extendedprice', mn2, mx2 FROM f1
-        |  UNION ALL SELECT 'l_extendedprice', 'l_orderkey', mn1, mx1 FROM f2
-        |  UNION ALL SELECT 'l_extendedprice', 'l_extendedprice', mn2, mx2
-        |    FROM f2)
-        |SELECT sort_key, probe_col, pred_lo, pred_hi,
-        |  CAST(count(*) AS BIGINT) AS n_files,
-        |  CAST(sum(CASE WHEN mx < pred_lo OR mn > pred_hi THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_skipped,
-        |  CAST(sum(CASE WHEN mx < pred_lo OR mn > pred_hi THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / CAST(count(*) AS DOUBLE) AS skip_ratio
-        |FROM mm JOIN p USING (probe_col)
-        |GROUP BY 1, 2, 3, 4""".stripMargin,
-    // q242: digit from the value's decimal string (exact), Benford
-    // shares via the same ln-ratio both engines round at 6 dp
-    "q242_benford_audit" ->
-      """WITH d AS (SELECT regexp_extract(CAST(l_extendedprice AS VARCHAR),
-        |      '[1-9]', 0) AS digit
-        |  FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_extendedprice > 0
-        |    AND regexp_extract(CAST(l_extendedprice AS VARCHAR),
-        |      '[1-9]', 0) <> ''),
-        |c AS (SELECT digit, count(*) AS n FROM d GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS DOUBLE) AS tot FROM c),
-        |s AS (SELECT digit, CAST(n AS BIGINT) AS n,
-        |    round(CAST(n AS DOUBLE) / tot, 6) AS share,
-        |    round(ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0), 6)
-        |      AS benford_share
-        |  FROM c, t)
-        |SELECT digit, n, share, benford_share,
-        |  round(abs(share - benford_share), 6) AS abs_gap
-        |FROM s""".stripMargin,
-    // q243: identical run-count arithmetic (runs -> 1 char minus
-    // runs -> 0 chars needs no marker byte), identical IEEE formula
-    // order, 4 dp rounds
-    "q243_readability" ->
-      """WITH b AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-        |c AS (SELECT doc_id,
-        |    length(regexp_replace(t, '\S+', 'x', 'g'))
-        |      - length(regexp_replace(t, '\S+', '', 'g')) AS w,
-        |    length(regexp_replace(t, '[.!?]+', 'x', 'g'))
-        |      - length(regexp_replace(t, '[.!?]+', '', 'g')) AS s,
-        |    length(regexp_replace(lower(t), '[aeiouy]+', 'x', 'g'))
-        |      - length(regexp_replace(lower(t), '[aeiouy]+', '', 'g')) AS y
-        |  FROM b)
-        |SELECT doc_id, CAST(w AS BIGINT) AS n_words,
-        |  CAST(s AS BIGINT) AS n_sentences, CAST(y AS BIGINT) AS n_syllables,
-        |  CASE WHEN w > 0 THEN round(206.835
-        |    - 1.015 * (CAST(greatest(w, 1) AS DOUBLE)
-        |               / CAST(greatest(s, 1) AS DOUBLE))
-        |    - 84.6 * (CAST(y AS DOUBLE) / CAST(greatest(w, 1) AS DOUBLE)), 4)
-        |  END AS flesch,
-        |  CASE WHEN w > 0 THEN round(0.39 * (CAST(greatest(w, 1) AS DOUBLE)
-        |               / CAST(greatest(s, 1) AS DOUBLE))
-        |    + 11.8 * (CAST(y AS DOUBLE) / CAST(greatest(w, 1) AS DOUBLE))
-        |    - 15.59, 4)
-        |  END AS fk_grade
-        |FROM c""".stripMargin,
-    // q244: counts from the same single-space pair stream as q166;
-    // the KN formula mirrored operation-for-operation at 6 dp
-    "q244_kneser_ney" ->
-      """WITH t AS (SELECT string_split(text, ' ') AS ts FROM documents),
-        |p AS (SELECT unnest(list_transform(generate_series(1, len(ts) - 1),
-        |        i -> ts[i] || ' ' || ts[i + 1])) AS pair
-        |      FROM t WHERE len(ts) >= 2),
-        |pc AS (SELECT pair, count(*) AS c_pair,
-        |    string_split(pair, ' ')[1] AS w1, string_split(pair, ' ')[2] AS w2
-        |  FROM p GROUP BY 1),
-        |l AS (SELECT w1, sum(c_pair) AS c_w1, count(*) AS n_follow
-        |  FROM pc GROUP BY 1),
-        |r AS (SELECT w2, count(*) AS n_precede FROM pc GROUP BY 1),
-        |b AS (SELECT CAST(count(*) AS BIGINT) AS bt FROM pc)
-        |SELECT pair, CAST(c_pair AS BIGINT) AS c_pair,
-        |  CAST(n_follow AS BIGINT) AS n_follow,
-        |  CAST(n_precede AS BIGINT) AS n_precede,
-        |  round((greatest(CAST(c_pair AS DOUBLE) - 0.75, 0.0)
-        |    + 0.75 * CAST(n_follow AS DOUBLE)
-        |      * (CAST(n_precede AS DOUBLE) / CAST(bt AS DOUBLE)))
-        |    / CAST(c_w1 AS DOUBLE), 6) AS p_kn
-        |FROM pc JOIN l USING (w1) JOIN r USING (w2), b
-        |QUALIFY row_number() OVER (ORDER BY c_pair DESC, pair) <= 50""".stripMargin,
-    // q245: identical to q240's full recompute - the stream-maintained
-    // partials must converge to the same mart
-    "q245_stream_mart_merge" ->
-      """WITH o AS (SELECT CAST(o_orderdate AS DATE) AS day,
-        |    o_totalprice, o_custkey
-        |  FROM orders WHERE o_orderdate IS NOT NULL),
-        |m AS (SELECT day, count(*) AS n_orders,
-        |    sum(CAST(round(o_totalprice * 100.0) AS BIGINT)) AS cents,
-        |    min(o_totalprice) AS min_order, max(o_totalprice) AS max_order
-        |  FROM o GROUP BY 1)
-        |SELECT day, CAST(n_orders AS BIGINT) AS n_orders,
-        |  CAST(cents AS DOUBLE) / 100.0 AS revenue,
-        |  min_order, max_order,
-        |  CAST((cents * 10000) // n_orders AS DOUBLE) / 1000000.0
-        |    AS avg_order,
-        |  TRUE AS est_ok
-        |FROM m""".stripMargin,
-    // q246: the same (user, type) min/max reduction and strict-precede
-    // predicate; counts are exact integers, only support rounds
-    "q246_seq_patterns" ->
-      """WITH r AS (SELECT user_id AS u, event_type AS t,
-        |    min(ts) AS mn, max(ts) AS mx
-        |  FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND event_type IS NOT NULL
-        |  GROUP BY 1, 2),
-        |tot AS (SELECT CAST(count(DISTINCT u) AS DOUBLE) AS users FROM r)
-        |SELECT a.t AS antecedent, b.t AS consequent,
-        |  CAST(count(*) AS BIGINT) AS n_users,
-        |  round(CAST(count(*) AS DOUBLE) / users, 6) AS support
-        |FROM r a JOIN r b ON a.u = b.u AND a.t <> b.t AND a.mn < b.mx, tot
-        |GROUP BY 1, 2, users""".stripMargin,
-    // q247: same md5 noisy rater as q189; po/pe/kappa are single
-    // divisions of exact LONG counts - no accumulation order to drift
-    "q247_cohens_kappa" ->
-      """WITH p AS (SELECT event_type AS r1,
-        |    CASE WHEN substr(md5(CAST(event_id AS VARCHAR)), 1, 1) < '3'
-        |      THEN 'click' ELSE event_type END AS r2
-        |  FROM events WHERE event_type IS NOT NULL),
-        |g AS (SELECT r1, r2, count(*) AS c FROM p GROUP BY 1, 2),
-        |n AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM g),
-        |a AS (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) AS agree
-        |  FROM g WHERE r1 = r2),
-        |m1 AS (SELECT r1, sum(c) AS c1 FROM g GROUP BY 1),
-        |m2 AS (SELECT r2, sum(c) AS c2 FROM g GROUP BY 1),
-        |ch AS (SELECT CAST(coalesce(sum(c1 * c2), 0) AS BIGINT) AS chance
-        |  FROM m1 JOIN m2 ON m1.r1 = m2.r2)
-        |SELECT n, round(CAST(agree AS DOUBLE) / CAST(n AS DOUBLE), 6) AS po,
-        |  round(CAST(chance AS DOUBLE) / CAST(n * n AS DOUBLE), 6) AS pe,
-        |  CASE WHEN chance < n * n THEN
-        |    round((CAST(agree AS DOUBLE) / CAST(n AS DOUBLE)
-        |      - CAST(chance AS DOUBLE) / CAST(n * n AS DOUBLE))
-        |      / (1.0 - CAST(chance AS DOUBLE) / CAST(n * n AS DOUBLE)), 6)
-        |  END AS kappa
-        |FROM n, a, ch WHERE n > 0""".stripMargin,
-    // q248: row_number replay of the rank-div buckets; every ratio is
-    // one division of exact LONG products
-    "q248_gains_table" ->
-      """WITH b AS (SELECT event_id, CAST(value AS DOUBLE) AS s,
-        |    CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS y
-        |  FROM events WHERE value IS NOT NULL),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(coalesce(sum(y), 0) AS BIGINT) AS pos FROM b),
-        |r AS (SELECT y, ((row_number() OVER (ORDER BY s DESC, event_id) - 1)
-        |    * 10) // n AS bkt FROM b, nn),
-        |g AS (SELECT bkt, CAST(count(*) AS BIGINT) AS nb,
-        |    CAST(coalesce(sum(y), 0) AS BIGINT) AS pb FROM r GROUP BY 1),
-        |c AS (SELECT *, CAST(sum(pb) OVER (ORDER BY bkt
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS cum FROM g)
-        |SELECT bkt AS bucket, nb AS n, pb AS n_pos,
-        |  round(CAST(pb AS DOUBLE) / CAST(nb AS DOUBLE), 6) AS resp_rate,
-        |  CASE WHEN pos > 0 THEN
-        |    round(CAST(cum AS DOUBLE) / CAST(pos AS DOUBLE), 6)
-        |  END AS cum_capture,
-        |  CASE WHEN pos > 0 THEN
-        |    round(CAST(pb * n AS DOUBLE) / CAST(nb * pos AS DOUBLE), 6)
-        |  END AS lift
-        |FROM c, nn""".stripMargin,
-    // q237: identical 6 dp daily totals → exact micro-integer errors;
-    // the MAEs and MASE are unrounded quotients of identical longs
-    "q237_seasonal_backtest" ->
-      """WITH d AS (SELECT event_type AS key,
-        |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    round(sum(coalesce(CAST(value AS DOUBLE), 0.0)), 6) AS v
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-        |m AS (SELECT key, day, CAST(round(v * 1000000.0) AS BIGINT) AS m
-        |  FROM d),
-        |j AS (SELECT c.key, c.day, c.m, s.m AS ms, o.m AS m1
-        |  FROM m c JOIN m s ON s.key = c.key AND s.day + 7 = c.day
-        |           JOIN m o ON o.key = c.key AND o.day + 1 = c.day)
-        |SELECT key, CAST(count(*) AS BIGINT) AS n_days,
-        |  CAST(sum(abs(m - ms)) AS DOUBLE)
-        |    / (count(*) * CAST(1000000.0 AS DOUBLE)) AS mae_seasonal,
-        |  CAST(sum(abs(m - m1)) AS DOUBLE)
-        |    / (count(*) * CAST(1000000.0 AS DOUBLE)) AS mae_naive,
-        |  CASE WHEN sum(abs(m - m1)) > 0 THEN
-        |    CAST(sum(abs(m - ms)) AS DOUBLE) / CAST(sum(abs(m - m1)) AS DOUBLE)
-        |  END AS mase
-        |FROM j GROUP BY 1""".stripMargin,
-    // q171: identical decay arithmetic — the λ literal is interpolated
-    // from the SAME Scala double, ages are exact integer micros
-    "q171_decayed_counts" -> {
-      val lambda = math.log(2.0) / 7.0
-      val asOfUs = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
-        .toLocalDateTime.toInstant(java.time.ZoneOffset.UTC)
-        .toEpochMilli * 1000L
-      s"""SELECT user_id, COUNT(*) AS n_events,
-         |  round(sum(exp(-$lambda *
-         |    (($asOfUs - epoch_us(ts)) / 86400000000.0))), 6)
-         |    AS decayed_count,
-         |  round(sum(exp(-$lambda *
-         |    (($asOfUs - epoch_us(ts)) / 86400000000.0))
-         |    * coalesce(value, 0)), 6) AS decayed_sum
-         |FROM events WHERE epoch_us(ts) <= $asOfUs GROUP BY 1""".stripMargin
-    },
-    // q172: same clamped fixed bins, add-one shares, per-bin rounds
-    "q172_psi_drift" ->
-      """WITH binsp AS (SELECT unnest(generate_series(0, 19)) AS bin),
-        |a AS (SELECT value FROM events
-        |  WHERE ts < TIMESTAMP '2024-01-16 00:00:00'),
-        |b AS (SELECT value FROM events
-        |  WHERE ts >= TIMESTAMP '2024-01-16 00:00:00'),
-        |ca AS (SELECT greatest(0, least(19,
-        |    CAST(floor((CAST(value AS DOUBLE) - 0.0) / 12.5) AS BIGINT)))
-        |    AS bin, count(*) AS n
-        |  FROM a WHERE value IS NOT NULL GROUP BY 1),
-        |cb AS (SELECT greatest(0, least(19,
-        |    CAST(floor((CAST(value AS DOUBLE) - 0.0) / 12.5) AS BIGINT)))
-        |    AS bin, count(*) AS n
-        |  FROM b WHERE value IS NOT NULL GROUP BY 1),
-        |g AS (SELECT binsp.bin, coalesce(ca.n, 0) AS n_a,
-        |    coalesce(cb.n, 0) AS n_b
-        |  FROM binsp LEFT JOIN ca ON binsp.bin = ca.bin
-        |  LEFT JOIN cb ON binsp.bin = cb.bin),
-        |t AS (SELECT CAST(sum(n_a) AS BIGINT) AS ta,
-        |  CAST(sum(n_b) AS BIGINT) AS tb FROM g),
-        |p AS (SELECT bin, n_a, n_b,
-        |  CAST(n_a + 1 AS DOUBLE) / CAST(ta + 20 AS DOUBLE) AS pa,
-        |  CAST(n_b + 1 AS DOUBLE) / CAST(tb + 20 AS DOUBLE) AS pb
-        |  FROM g, t),
-        |c AS (SELECT CAST(bin AS BIGINT) AS bin, CAST(n_a AS BIGINT) AS n_a,
-        |  CAST(n_b AS BIGINT) AS n_b, round(pa, 6) AS p_a, round(pb, 6) AS p_b,
-        |  round((pb - pa) * ln(pb / pa), 6) AS contrib FROM p)
-        |SELECT c.*, (SELECT round(sum(contrib), 6) FROM c) AS psi
-        |FROM c""".stripMargin,
-    "q17_top_customers_by_nation" ->
-      s"""WITH fact AS ($factSql),
-         |spend AS (SELECT NationName, CustomerID, SUM(TotalAmount) AS spend_d
-         |          FROM fact GROUP BY 1, 2)
-         |SELECT NationName, CustomerID, CAST(spend_d AS DOUBLE) AS spend,
-         |  CAST(row_number() OVER (PARTITION BY NationName ORDER BY spend_d DESC, CustomerID ASC) AS INTEGER) AS rank
-         |FROM spend
-         |QUALIFY row_number() OVER (PARTITION BY NationName ORDER BY spend_d DESC, CustomerID ASC) <= 3""".stripMargin,
-    "q20_dedup_exact" ->
-      """SELECT md5(text) AS text_md5, MIN(doc_id) AS kept_id, COUNT(*) AS n_copies
-        |FROM documents GROUP BY 1""".stripMargin,
-    "q21_dedup_ngram_jaccard" ->
-      s"""WITH sh AS (${shingleSql(3)}),
-         |$jaccardTailSql""".stripMargin,
-    "q22_dedup_minhash_lsh" -> minhashSql(3, 4, 3),
-    "q23_dedup_simhash" -> simhashSql,
-    "q33_dedup_clusters" ->
-      s"""$clusterChainSql
-         |SELECT doc_id, cluster_id FROM assign""".stripMargin,
-    "q35_dedup_drop" ->
-      s"""$clusterChainSql
-         |SELECT doc_id FROM assign WHERE cluster_id = doc_id""".stripMargin,
-    "q43_dedup_drop_lsh" ->
-      s"""WITH RECURSIVE ${minhashCtes(3, 4, 3)},
-         |jpairs AS (
-         |  SELECT p.id_a, p.id_b
-         |  FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id JOIN sizes sb ON p.id_b = sb.doc_id
-         |  WHERE CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5),
-         |${closureTailSql()}
-         |SELECT doc_id FROM assign WHERE cluster_id = doc_id""".stripMargin,
-    "q36_repetition" ->
-      """WITH g AS (
-        |  SELECT doc_id, list_transform(generate_series(1, len(ts) - 2),
-        |    i -> array_to_string(ts[i:i+2], ' ')) AS grams
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS ts FROM documents))
-        |SELECT doc_id,
-        |  CASE WHEN len(grams) <= 0 THEN 1.0
-        |       ELSE CAST(len(list_distinct(grams)) AS DOUBLE) / CAST(len(grams) AS DOUBLE)
-        |  END AS distinct_ngram_ratio
-        |FROM g""".stripMargin,
-    "q40_asof_join" ->
-      """WITH r AS (
-        |  SELECT o_custkey AS user_id, CAST(o_orderdate AS TIMESTAMP) AS order_ts,
-        |    max(o_orderkey) AS last_orderkey
-        |  FROM orders GROUP BY 1, 2),
-        |l AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id FROM events)
-        |SELECT l.user_id, l.event_id, l.ts,
-        |  r.last_orderkey, r.order_ts AS last_order_date
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.order_ts""".stripMargin,
-    // same default RANGE-to-current-row window frame as the Spark side;
-    // gaps in exact integer microseconds (epoch_us ↔ unix_micros)
-    // q90: the streaming sessionize's final-state reduction must equal the
-    // batch gap fold — q41's CTE chain, re-keyed to the stream's surface
-    // (start in epoch-ms via getTime, duration as ms-diff of ms-snapped
-    // endpoints — NOT the µs-diff // 1000 of q41, which differs when
-    // sub-ms precision exists)
-    "q90_stream_sessionize" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |marked AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |              OR epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM e),
-        |s AS (SELECT user_id, ts,
-        |        SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts) AS session_id
-        |      FROM marked)
-        |SELECT user_id,
-        |  min(epoch_us(ts) // 1000) AS session_start_ms,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  max(epoch_us(ts) // 1000) - min(epoch_us(ts) // 1000) AS duration_ms
-        |FROM s GROUP BY user_id, session_id""".stripMargin,
-    "q41_sessionize" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |marked AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |              OR epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM e),
-        |s AS (SELECT user_id, ts,
-        |        SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts) AS session_id
-        |      FROM marked)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |  min(ts) AS session_start, max(ts) AS session_end, count(*) AS n_events,
-        |  CAST((epoch_us(max(ts)) - epoch_us(min(ts))) // 1000 AS BIGINT) AS duration_ms
-        |FROM s GROUP BY 1, 2""".stripMargin,
-    "q42_salted_join" ->
-      """SELECT l.l_suppkey AS suppkey, l.l_orderkey, l.l_linenumber,
-        |  CAST(l.l_quantity AS DOUBLE) AS quantity, s.s_name, s.s_nationkey
-        |FROM lineitem l JOIN supplier s ON s.s_suppkey = l.l_suppkey""".stripMargin,
-    "q45_percentiles" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  round(avg(CAST(l_quantity AS DOUBLE)), 6) AS mean,
-        |  round(quantile_cont(CAST(l_quantity AS DOUBLE), 0.5), 6) AS p50,
-        |  round(quantile_cont(CAST(l_quantity AS DOUBLE), 0.9), 6) AS p90,
-        |  round(quantile_cont(CAST(l_quantity AS DOUBLE), 0.99), 6) AS p99
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    // q38: SCALE-ADAPTIVE cell count mirrored in SQL — nCells = ⌈√count⌉
-    // clamped to [4, 65536] (IEEE sqrt/ceil are exact at perfect squares,
-    // so the two engines can't ulp-diverge); centroid seed unchanged
-    // (lowest md5-of-id rows)
-    "q38_ivf_topk" ->
-      """WITH p AS (SELECT least(65536, greatest(4,
-        |    CAST(ceil(sqrt(CAST(count(*) AS DOUBLE))) AS INTEGER))) AS cells FROM embeddings),
-        |cents AS (
-        |  SELECT vec_id AS cent_id, embedding AS cvec
-        |  FROM embeddings CROSS JOIN p
-        |  QUALIFY row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) <= p.cells),
-        |sim AS (
-        |  SELECT e.vec_id, c.cent_id,
-        |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(c.cvec AS DOUBLE[])), 6) AS csim
-        |  FROM embeddings e CROSS JOIN cents c),
-        |ranked AS (
-        |  SELECT vec_id, cent_id,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id ASC) AS r
-        |  FROM sim),
-        |assigned AS (SELECT vec_id AS cand_id, cent_id AS cell FROM ranked WHERE r = 1),
-        |probes AS (SELECT vec_id AS query_id, cent_id AS cell FROM ranked WHERE r <= 2),
-        |pc AS (
-        |  SELECT p.query_id, a.cand_id,
-        |    round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[])), 6) AS cos
-        |  FROM probes p
-        |  JOIN assigned a ON a.cell = p.cell AND a.cand_id <> p.query_id
-        |  JOIN embeddings x ON x.vec_id = p.query_id
-        |  JOIN embeddings y ON y.vec_id = a.cand_id)
-        |SELECT query_id, cand_id, cos,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS INTEGER) AS rank
-        |FROM pc
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) <= 3""".stripMargin,
-    "q39_deterministic_split" ->
-      s"""SELECT doc_id,
-         |  CASE WHEN ${md5BucketSql("doc_id")} < 90 THEN 'train'
-         |       WHEN ${md5BucketSql("doc_id")} < 95 THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM documents""".stripMargin,
-    "q56_sequence_pack" ->
-      s"""WITH counted AS (
-         |  SELECT doc_id,
-         |    CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]')) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |sharded AS (
-         |  SELECT doc_id, n_tokens, CAST(${md5ModSql("doc_id", 4)} AS BIGINT) AS shard
-         |  FROM counted),
-         |w AS (
-         |  SELECT doc_id, n_tokens, shard,
-         |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) - n_tokens AS BIGINT) AS start_offset
-         |  FROM sharded)
-         |SELECT doc_id, n_tokens, shard, start_offset,
-         |  CAST(start_offset // 512 AS BIGINT) AS bin,
-         |  n_tokens > 512 AS oversize
-         |FROM w""".stripMargin,
-    "q57_pack_materialize" ->
-      s"""WITH counted AS (
-         |  SELECT doc_id, text,
-         |    CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]')) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |sharded AS (
-         |  SELECT doc_id, text, n_tokens, CAST(${md5ModSql("doc_id", 4)} AS BIGINT) AS shard
-         |  FROM counted),
-         |w AS (
-         |  SELECT doc_id, text, n_tokens, shard,
-         |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) - n_tokens AS BIGINT) AS start_offset
-         |  FROM sharded)
-         |SELECT shard, CAST(start_offset // 512 AS BIGINT) AS bin,
-         |  count(*) AS n_docs,
-         |  CAST(SUM(n_tokens) AS BIGINT) AS bin_tokens,
-         |  string_agg(text, chr(10) || chr(10) ORDER BY start_offset) AS packed_text
-         |FROM w GROUP BY 1, 2""".stripMargin,
-    "q58_vocabulary" ->
-      """WITH dt AS (
-        |  SELECT doc_id, t.term AS term, count(*) AS tf
-        |  FROM documents, unnest(string_split(text, ' ')) AS t(term)
-        |  GROUP BY 1, 2)
-        |SELECT term, CAST(SUM(tf) AS BIGINT) AS tf, count(*) AS df_docs
-        |FROM dt GROUP BY 1
-        |ORDER BY 2 DESC, 1 LIMIT 50""".stripMargin,
-    "q59_chunking" ->
-      """WITH d AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, n, toks, unnest(generate_series(0,
-        |    CASE WHEN n <= 64 THEN 0 ELSE (n - 64 + 47) // 48 END)) AS chunk_id
-        |  FROM d)
-        |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  array_to_string(toks[chunk_id*48 + 1 : chunk_id*48 + 64], ' ') AS chunk_text,
-        |  CAST(least(64, n - chunk_id*48) AS BIGINT) AS n_chunk_tokens
-        |FROM c""".stripMargin,
-    "q60_tfidf_topterms" ->
-      """WITH dt AS (
-        |  SELECT doc_id, t.term AS term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM documents, unnest(string_split(text, ' ')) AS t(term)
-        |  GROUP BY 1, 2),
-        |tdf AS (SELECT term, count(*) AS df_docs FROM dt GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)
-        |SELECT dt.doc_id, dt.term, dt.tf, tdf.df_docs,
-        |  CAST(dt.tf AS DOUBLE) * CAST(nd.n_docs AS DOUBLE)
-        |    / CAST(tdf.df_docs AS DOUBLE) AS tfidf,
-        |  CAST(row_number() OVER (PARTITION BY dt.doc_id
-        |    ORDER BY CAST(dt.tf AS DOUBLE) * CAST(nd.n_docs AS DOUBLE)
-        |      / CAST(tdf.df_docs AS DOUBLE) DESC, dt.term) AS BIGINT) AS rk
-        |FROM dt JOIN tdf USING (term), nd
-        |QUALIFY rk <= 3""".stripMargin,
-    "q61_histogram" ->
-      """SELECT greatest(0, least(19, CAST(floor((CAST(value AS DOUBLE) - 0.0) / 5.0) AS BIGINT))) AS bucket,
-        |  count(*) AS n, min(CAST(value AS DOUBLE)) AS min_val, max(CAST(value AS DOUBLE)) AS max_val
-        |FROM events WHERE value IS NOT NULL GROUP BY 1""".stripMargin,
-    "q62_zorder_value" -> zorderSql,
-    // q129: the oracle pins the FULL total order (score then id tie-break)
-    // as one ROW_NUMBER window — the operator must reproduce it exactly
-    // without ever planning a single-partition exchange
-    "q129_curriculum_rank" ->
-      """SELECT doc_id, CAST(length(text) AS BIGINT) AS doc_len,
-        |  CAST(row_number() OVER (ORDER BY length(text), doc_id) AS BIGINT) AS rank
-        |FROM documents""".stripMargin,
-    "q63_cap_per_source" ->
-      """SELECT doc_id, source FROM documents
-        |QUALIFY row_number() OVER (PARTITION BY source
-        |  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) <= 30""".stripMargin,
-    "q64_mad_outliers" ->
-      """WITH med AS (
-        |  SELECT round(quantile_cont(CAST(value AS DOUBLE), 0.5), 6) AS med0 FROM events),
-        |m2 AS (
-        |  SELECT round(quantile_cont(abs(CAST(value AS DOUBLE) - med0), 0.5), 6) AS mad,
-        |    max(med0) AS med
-        |  FROM events, med)
-        |SELECT event_id, value, m2.med, m2.mad,
-        |  CASE WHEN value IS NULL THEN FALSE
-        |       ELSE abs(CAST(value AS DOUBLE) - m2.med) > m2.mad * 3.0 END AS is_outlier
-        |FROM events, m2""".stripMargin,
-    "q65_kmeans_fit" -> kmeansFitSql,
-    "q116_pq_encode" -> pqEncodeSql,
-    "q117_pq_topk" -> pqTopKSql,
-    "q118_ivfpq_topk" -> ivfPqTopKSql,
-    "q121_binarize" -> binarizeSql,
-    "q122_hamming_topk" -> hammingTopKSql,
-    "q123_hybrid_rrf" -> hybridRrfSql,
-    // q126: the q40 ASOF lookup with the 7-day staleness bound — stale
-    // matches null their payload, the event row stays (left outer)
-    "q126_asof_tolerance" ->
-      """WITH r AS (
-        |  SELECT o_custkey AS user_id, CAST(o_orderdate AS TIMESTAMP) AS order_ts,
-        |    max(o_orderkey) AS last_orderkey
-        |  FROM orders GROUP BY 1, 2),
-        |l AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id FROM events),
-        |m AS (
-        |  SELECT l.user_id, l.event_id, l.ts, r.last_orderkey, r.order_ts
-        |  FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.order_ts)
-        |SELECT user_id, event_id, ts,
-        |  CASE WHEN epoch_us(ts) - epoch_us(order_ts) <= 604800000000 THEN last_orderkey END AS last_orderkey,
-        |  CASE WHEN epoch_us(ts) - epoch_us(order_ts) <= 604800000000 THEN order_ts END AS last_order_date
-        |FROM m""".stripMargin,
-    // q134: DuckDB's ASOF with <= IS the forward direction
-    "q134_asof_forward" ->
-      """WITH r AS (
-        |  SELECT o_custkey AS user_id, CAST(o_orderdate AS TIMESTAMP) AS order_ts,
-        |    max(o_orderkey) AS next_orderkey
-        |  FROM orders GROUP BY 1, 2),
-        |l AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id FROM events)
-        |SELECT l.user_id, l.event_id, l.ts,
-        |  r.next_orderkey, r.order_ts AS next_order_date
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.order_ts""".stripMargin,
-    // q135: both ASOF directions materialized per event, then the closer
-    // match chosen with the documented tie -> backward rule
-    "q135_asof_nearest" ->
-      """WITH r AS (
-        |  SELECT o_custkey AS user_id, CAST(o_orderdate AS TIMESTAMP) AS order_ts,
-        |    max(o_orderkey) AS near_orderkey
-        |  FROM orders GROUP BY 1, 2),
-        |l AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id FROM events),
-        |b AS (SELECT l.event_id, r.near_orderkey AS bk, r.order_ts AS bt
-        |      FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.order_ts),
-        |f AS (SELECT l.event_id, r.near_orderkey AS fk, r.order_ts AS ft
-        |      FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.order_ts)
-        |SELECT l.user_id, l.event_id, l.ts,
-        |  CASE WHEN bt IS NOT NULL AND (ft IS NULL
-        |         OR epoch_us(l.ts) - epoch_us(bt) <= epoch_us(ft) - epoch_us(l.ts))
-        |    THEN bk ELSE fk END AS near_orderkey,
-        |  CASE WHEN bt IS NOT NULL AND (ft IS NULL
-        |         OR epoch_us(l.ts) - epoch_us(bt) <= epoch_us(ft) - epoch_us(l.ts))
-        |    THEN bt ELSE ft END AS near_order_date
-        |FROM l JOIN b USING (event_id) JOIN f USING (event_id)""".stripMargin,
-    // q125: the bloom prefilter admits false positives ONLY, so the result
-    // is the plain inner join — which IS the oracle
-    "q125_bloom_join" ->
-      """SELECT l.l_suppkey AS suppkey, l.l_orderkey, l.l_linenumber,
-        |  CAST(l.l_quantity AS DOUBLE) AS quantity, s.s_name
-        |FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |WHERE s.s_nationkey < 5""".stripMargin,
-    // q124: the q41 session CTEs + a closed-interval inequality self-join
-    // (DuckDB's IEJoin) — the banded Spark plan must match it exactly
-    "q124_session_overlap" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |marked AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |              OR epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM e),
-        |s AS (SELECT user_id, ts,
-        |        SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts) AS session_id
-        |      FROM marked),
-        |sess AS (SELECT user_id, min(ts) AS st, max(ts) AS en
-        |         FROM s GROUP BY user_id, session_id),
-        |si AS (SELECT CAST(user_id AS VARCHAR) || '#' || CAST(epoch_us(st) AS VARCHAR) AS sid,
-        |         st, en FROM sess)
-        |SELECT a.sid AS id_a, b.sid AS id_b,
-        |  CAST((least(epoch_us(a.en), epoch_us(b.en))
-        |      - greatest(epoch_us(a.st), epoch_us(b.st))) // 1000 AS BIGINT) AS overlap_ms
-        |FROM si a JOIN si b
-        |  ON a.sid < b.sid AND a.st <= b.en AND b.st <= a.en""".stripMargin,
-    "q66_quantize_int8" ->
-      """WITH s AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS dv,
-        |    list_max(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x))) / 127.0 AS scale
-        |  FROM embeddings)
-        |SELECT vec_id, round(scale, 6) AS scale,
-        |  CAST(unnest(generate_series(0, len(dv) - 1)) AS INTEGER) AS dim,
-        |  unnest(list_transform(dv, x ->
-        |    CASE WHEN scale = 0 THEN CAST(0 AS INTEGER)
-        |         ELSE CAST(greatest(-127, least(127, round(x / scale))) AS INTEGER) END)) AS qval
-        |FROM s""".stripMargin,
-    "q67_text_normalize" ->
-      """WITH c AS (
-        |  SELECT doc_id, text,
-        |    trim(regexp_replace(regexp_replace(lower(text),
-        |      '[\x00-\x1f\x7f]', ' ', 'g'), ' {2,}', ' ', 'g')) AS norm_text
-        |  FROM documents)
-        |SELECT doc_id, norm_text, norm_text <> text AS changed FROM c""".stripMargin,
-    "q68_rebalance_mix" ->
-      s"""WITH w(lang, wt) AS (VALUES ('en', 0.5), ('de', 0.2), ('fr', 0.3)),
-         |n AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-         |sc AS (SELECT min(CAST(n.n AS DOUBLE) / w.wt) AS scale
-         |       FROM n JOIN w USING (lang)),
-         |r AS (SELECT w.lang, sc.scale * w.wt / CAST(n.n AS DOUBLE) AS rate
-         |      FROM w JOIN n USING (lang), sc)
-         |SELECT d.doc_id, d.lang FROM documents d JOIN r ON d.lang = r.lang
-         |WHERE ${md5ModSql("d.doc_id", 1000000)} < r.rate * 1000000.0""".stripMargin,
-    "q69_funnel" ->
-      """WITH a AS (
-        |  SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS ts_a
-        |  FROM events WHERE event_type = 'signup' GROUP BY 1),
-        |b AS (
-        |  SELECT e.user_id, min(CAST(e.ts AS TIMESTAMP)) AS ts_b
-        |  FROM events e JOIN a USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND CAST(e.ts AS TIMESTAMP) > a.ts_a
-        |  GROUP BY 1)
-        |SELECT a.user_id, a.ts_a, b.ts_b, b.ts_b IS NOT NULL AS converted
-        |FROM a LEFT JOIN b USING (user_id)""".stripMargin,
-    "q70_retention" ->
-      """WITH f AS (
-        |  SELECT user_id,
-        |    CAST(date_trunc('week', min(CAST(ts AS TIMESTAMP))) AS TIMESTAMP) AS cohort_week
-        |  FROM events GROUP BY 1)
-        |SELECT f.cohort_week,
-        |  CAST((CAST(date_trunc('week', CAST(e.ts AS TIMESTAMP)) AS DATE)
-        |    - CAST(f.cohort_week AS DATE)) // 7 AS BIGINT) AS week_offset,
-        |  CAST(count(DISTINCT e.user_id) AS BIGINT) AS active_users
-        |FROM events e JOIN f USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
-    "q71_dedup_audit" ->
-      s"""$clusterChainSql
-         |SELECT doc_id AS dropped_id, cluster_id AS kept_id
-         |FROM assign WHERE doc_id <> cluster_id""".stripMargin,
-    // q72 must equal the direct q58 vocabulary — the merge is exact, so
-    // the oracle is q58's own SQL
-    "q72_vocab_merge" ->
-      """WITH dt AS (
-        |  SELECT doc_id, t.term AS term, count(*) AS tf
-        |  FROM documents, unnest(string_split(text, ' ')) AS t(term)
-        |  GROUP BY 1, 2)
-        |SELECT term, CAST(SUM(tf) AS BIGINT) AS tf, count(*) AS df_docs
-        |FROM dt GROUP BY 1
-        |ORDER BY 2 DESC, 1 LIMIT 50""".stripMargin,
-    "q73_decontaminate" ->
-      s"""WITH bench AS (
-         |  SELECT doc_id, text FROM documents WHERE ${md5BucketSql("doc_id")} < 4),
-         |corp AS (
-         |  SELECT doc_id, text FROM documents WHERE ${md5BucketSql("doc_id")} >= 4),
-         |bs AS (SELECT DISTINCT shingle FROM (${shingleSql(5, "bench")})),
-         |cs AS (${shingleSql(5, "corp")}),
-         |bad AS (SELECT DISTINCT cs.doc_id FROM cs JOIN bs USING (shingle))
-         |SELECT c.doc_id, b.doc_id IS NOT NULL AS contaminated
-         |FROM corp c LEFT JOIN bad b USING (doc_id)""".stripMargin,
-    "q74_quality_drift" ->
-      s"""WITH q AS (
-         |  SELECT source,
-         |    len(string_split(text, ' ')) AS n_tokens,
-         |    CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS DOUBLE)
-         |      / CAST(length(text) AS DOUBLE) AS punct_ratio,
-         |    CAST(len(list_filter(string_split(text, ' '),
-         |      w -> list_contains(['the','a','of','and','to','in','is'], w))) AS DOUBLE)
-         |      / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stopword_ratio,
-         |    $qualityCaseSql AS quality
-         |  FROM documents)
-         |SELECT source, count(*) AS n_docs,
-         |  round(avg(n_tokens), 6) AS avg_tokens,
-         |  round(avg(punct_ratio), 6) AS avg_punct_ratio,
-         |  round(avg(stopword_ratio), 6) AS avg_stopword_ratio,
-         |  CAST(sum(CASE WHEN quality = 'high' THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE) AS share_high
-         |FROM q GROUP BY 1""".stripMargin,
-    "q77_scd2_asof" ->
-      s"""${stagedSql},
-         |ins AS (SELECT * FROM staged WHERE action IN ('INSERT', 'UPDATE')),
-         |keys AS (SELECT DISTINCT c_custkey FROM staged WHERE action = 'UPDATE'),
-         |hist AS (
-         |  SELECT c.c_custkey, c.c_name, c.c_nationkey, c.c_acctbal, c.c_mktsegment,
-         |    CASE WHEN k.c_custkey IS NOT NULL THEN FALSE ELSE TRUE END AS is_current,
-         |    TIMESTAMP '2026-01-01 00:00:00' AS effective_date,
-         |    CASE WHEN k.c_custkey IS NOT NULL THEN TIMESTAMP '2026-02-01 00:00:00' END AS end_date
-         |  FROM customer c LEFT JOIN keys k ON c.c_custkey = k.c_custkey
-         |  UNION ALL
-         |  SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
-         |    TRUE, TIMESTAMP '2026-02-01 00:00:00', NULL
-         |  FROM ins)
-         |SELECT * FROM hist
-         |WHERE effective_date <= TIMESTAMP '2026-01-01 00:00:00'
-         |  AND (end_date IS NULL OR end_date > TIMESTAMP '2026-01-01 00:00:00')""".stripMargin,
-    "q78_ref_audit" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_child,
-        |  CAST(sum(CASE WHEN e.vec_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans,
-        |  CAST(sum(CASE WHEN e.vec_id IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE) AS orphan_share
-        |FROM documents d
-        |LEFT JOIN (SELECT DISTINCT vec_id FROM embeddings) e ON d.doc_id = e.vec_id""".stripMargin,
-    "q79_lm_familiarity" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |stats AS (SELECT term, count(*) AS tf FROM toks GROUP BY 1),
-        |vocab AS (SELECT term FROM stats ORDER BY tf DESC, term LIMIT 40),
-        |j AS (SELECT t.doc_id, s.tf, v.term IS NOT NULL AS iv
-        |      FROM toks t JOIN stats s USING (term) LEFT JOIN vocab v USING (term))
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(sum(tf) AS BIGINT) AS familiar_sum,
-        |  CAST(sum(tf) AS DOUBLE) / count(*) AS familiarity,
-        |  CAST(count(*) - sum(CASE WHEN iv THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS oov_rate
-        |FROM j GROUP BY 1""".stripMargin,
-    "q80_bpe_pairs" ->
-      """WITH t AS (SELECT string_split(text, ' ') AS ts FROM documents),
-        |p AS (SELECT unnest(list_transform(generate_series(1, len(ts) - 1),
-        |        i -> ts[i] || ' ' || ts[i + 1])) AS pair
-        |      FROM t WHERE len(ts) >= 2)
-        |SELECT pair, CAST(count(*) AS BIGINT) AS n
-        |FROM p GROUP BY 1 ORDER BY n DESC, pair LIMIT 200""".stripMargin,
-    "q81_inverted_index" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |dt AS (SELECT DISTINCT doc_id, term FROM tok),
-        |d AS (SELECT term, CAST(count(*) AS BIGINT) AS df_docs FROM dt GROUP BY 1),
-        |r AS (SELECT term, doc_id,
-        |        CAST(row_number() OVER (PARTITION BY term ORDER BY doc_id) AS BIGINT) AS slot
-        |      FROM dt)
-        |SELECT r.term, d.df_docs, r.slot, r.doc_id
-        |FROM r JOIN d USING (term) WHERE r.slot <= 20""".stripMargin,
-    "q82_source_overlap" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT src, shingle FROM (
-        |    SELECT source AS src, unnest(list_distinct(list_transform(
-        |      generate_series(1, len(ts) - 2),
-        |      i -> array_to_string(ts[i:i+2], ' ')))) AS shingle
-        |    FROM (SELECT source, string_split(text, ' ') AS ts FROM documents))),
-        |sizes AS (SELECT src, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.src AS src_a, b.src AS src_b, CAST(count(*) AS BIGINT) AS n_common
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.src < b.src
-        |  GROUP BY 1, 2)
-        |SELECT i.src_a, i.src_b, i.n_common, sa.n_sh AS n_a, sb.n_sh AS n_b,
-        |  CAST(i.n_common AS DOUBLE) / least(sa.n_sh, sb.n_sh) AS containment
-        |FROM inter i JOIN sizes sa ON i.src_a = sa.src
-        |JOIN sizes sb ON i.src_b = sb.src""".stripMargin,
-    "q83_semantic_dedup" -> semanticDedupSql,
-    "q84_cooccurrence" ->
-      """WITH t AS (SELECT string_split(text, ' ') AS ts FROM documents),
-        |pr AS (SELECT unnest(flatten(list_transform(generate_series(1, len(ts) - 1),
-        |        i -> list_transform(generate_series(i + 1, least(i + 2, len(ts))),
-        |        j -> CASE WHEN ts[i] <= ts[j] THEN ts[i] || ' ' || ts[j]
-        |                  ELSE ts[j] || ' ' || ts[i] END)))) AS pair
-        |      FROM t WHERE len(ts) >= 2),
-        |pc AS (SELECT pair, CAST(count(*) AS BIGINT) AS n_ab FROM pr GROUP BY 1),
-        |tok AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
-        |tc AS (SELECT term, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM tok)
-        |SELECT split_part(pair, ' ', 1) AS term_a, split_part(pair, ' ', 2) AS term_b,
-        |  n_ab, a.n AS n_a, b.n AS n_b,
-        |  CAST(n_ab AS DOUBLE) * CAST(n_total AS DOUBLE)
-        |    / (CAST(a.n AS DOUBLE) * CAST(b.n AS DOUBLE)) AS lift
-        |FROM pc JOIN tc a ON split_part(pair, ' ', 1) = a.term
-        |JOIN tc b ON split_part(pair, ' ', 2) = b.term
-        |CROSS JOIN tot
-        |ORDER BY n_ab DESC, term_a, term_b LIMIT 300""".stripMargin,
-    "q85_hash_embed" -> {
-      val nib9 = "(strpos('0123456789abcdef', substr(md5(CAST(tok AS VARCHAR)), 9, 1)) - 1)"
-      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-         |h AS (SELECT doc_id,
-         |        CAST(${md5ModSql("tok", 16)} AS INTEGER) AS dim,
-         |        CAST(($nib9 % 2) * 2 - 1 AS BIGINT) AS sign
-         |      FROM tok)
-         |SELECT doc_id, dim, CAST(sum(sign) AS BIGINT) AS val
-         |FROM h GROUP BY 1, 2 HAVING sum(sign) <> 0""".stripMargin
-    },
-    "q86_bm25" ->
-      """WITH dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-        |            FROM documents),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |          CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl FROM dl),
-        |qt AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM (
-        |         SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-        |       WHERE term IN ('spark', 'table', 'agg') GROUP BY 1, 2),
-        |dfd AS (SELECT term, CAST(count(*) AS BIGINT) AS df_docs FROM qt GROUP BY 1),
-        |sc AS (SELECT q.doc_id, q.term,
-        |        ln(1.0 + (CAST(n_docs AS DOUBLE) - CAST(df_docs AS DOUBLE) + 0.5)
-        |          / (CAST(df_docs AS DOUBLE) + 0.5))
-        |         * (CAST(tf AS DOUBLE) * 2.5)
-        |         / (CAST(tf AS DOUBLE) + 1.5 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl)) AS s
-        |      FROM qt q JOIN dfd USING (term) JOIN dl USING (doc_id) CROSS JOIN tot),
-        |ag AS (SELECT doc_id,
-        |        sum(CASE WHEN term = 'spark' THEN s END) AS s0,
-        |        sum(CASE WHEN term = 'table' THEN s END) AS s1,
-        |        sum(CASE WHEN term = 'agg' THEN s END) AS s2
-        |      FROM sc GROUP BY 1)
-        |SELECT doc_id, round(coalesce(s0, 0) + coalesce(s1, 0) + coalesce(s2, 0), 6) AS bm25
-        |FROM ag ORDER BY bm25 DESC, doc_id LIMIT 50""".stripMargin,
-    "q87_skew_profile" ->
-      """WITH c AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS cnt
-        |           FROM orders GROUP BY 1),
-        |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_total FROM c)
-        |SELECT o_custkey, cnt, CAST(cnt AS DOUBLE) / CAST(n_total AS DOUBLE) AS share,
-        |  greatest(CAST(1 AS BIGINT),
-        |    CAST(ceil(CAST(cnt AS DOUBLE) / 10.0) AS BIGINT)) AS salt_factor
-        |FROM c CROSS JOIN t ORDER BY cnt DESC, o_custkey LIMIT 50""".stripMargin,
-    "q88_event_spikes" ->
-      """WITH hourly AS (
-        |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |st AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
-        |    CAST(sum(cnt) AS BIGINT) AS s1, CAST(sum(cnt * cnt) AS BIGINT) AS s2
-        |  FROM hourly GROUP BY 1),
-        |stx AS (
-        |  SELECT event_type,
-        |    CAST(s1 AS DOUBLE) / CAST(n_hours AS DOUBLE) AS mean,
-        |    CASE WHEN n_hours > 1 THEN sqrt(
-        |      CAST(n_hours * s2 - s1 * s1 AS DOUBLE)
-        |      / CAST(n_hours * (n_hours - 1) AS DOUBLE)) END AS sd
-        |  FROM st)
-        |SELECT h.hour, h.event_type, h.cnt, round(mean, 6) AS mean_cnt,
-        |  round(sd, 6) AS sd_cnt,
-        |  coalesce(CAST(h.cnt AS DOUBLE) > mean + 3 * sd, false) AS is_spike
-        |FROM hourly h JOIN stx USING (event_type)""".stripMargin,
-    "q89_scorecard" ->
-      s"""WITH feats AS (
-         |  SELECT doc_id,
-         |    CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
-         |    CAST(length(replace(text, ' ', '')) AS DOUBLE)
-         |      / CAST(len(string_split(text, ' ')) AS DOUBLE) AS avg_token_len,
-         |    CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS DOUBLE)
-         |      / CAST(length(text) AS DOUBLE) AS punct_ratio,
-         |    CAST(len(list_filter(string_split(text, ' '),
-         |        w -> w IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
-         |      / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stopword_ratio,
-         |    $qualityCaseSql AS quality
-         |  FROM documents),
-         |rep AS (
-         |  SELECT doc_id,
-         |    CASE WHEN len(grams) <= 0 THEN 1.0
-         |         ELSE CAST(len(list_distinct(grams)) AS DOUBLE) / CAST(len(grams) AS DOUBLE)
-         |    END AS distinct_ngram_ratio
-         |  FROM (SELECT doc_id, list_transform(generate_series(1, len(ts) - 2),
-         |          i -> array_to_string(ts[i:i+2], ' ')) AS grams
-         |        FROM (SELECT doc_id, string_split(text, ' ') AS ts FROM documents))),
-         |toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-         |stats AS (SELECT term, count(*) AS tf FROM toks GROUP BY 1),
-         |vocab AS (SELECT term FROM stats ORDER BY tf DESC, term LIMIT 40),
-         |fam AS (
-         |  SELECT doc_id,
-         |    CAST(sum(tf) AS DOUBLE) / count(*) AS familiarity,
-         |    CAST(count(*) - sum(CASE WHEN iv THEN 1 ELSE 0 END) AS DOUBLE)
-         |      / count(*) AS oov_rate
-         |  FROM (SELECT t.doc_id, s.tf, v.term IS NOT NULL AS iv
-         |        FROM toks t JOIN stats s USING (term) LEFT JOIN vocab v USING (term))
-         |  GROUP BY 1)
-         |SELECT f.doc_id, f.n_tokens, f.avg_token_len, f.punct_ratio,
-         |  f.stopword_ratio, f.quality, r.distinct_ngram_ratio,
-         |  m.familiarity, m.oov_rate,
-         |  (f.quality <> 'low' AND r.distinct_ngram_ratio >= 0.99
-         |    AND m.oov_rate <= 0.9) AS keep
-         |FROM feats f JOIN rep r USING (doc_id) JOIN fam m USING (doc_id)""".stripMargin,
-    "q91_label_centroids" ->
-      """WITH m AS (
-        |  SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-        |    unnest(generate_series(0, len(embedding) - 1)) AS dim
-        |  FROM embeddings)
-        |SELECT label, CAST(count(*) AS BIGINT) AS n_members,
-        |  CAST(dim AS INTEGER) AS dim, round(avg(v), 6) AS mean_val
-        |FROM m GROUP BY label, dim""".stripMargin,
-    "q92_fuzzy_match" ->
-      """WITH p AS (SELECT p_partkey, p_name, split_part(p_name, ' ', 1) AS blk FROM part)
-        |SELECT a.p_partkey AS id_a, a.p_name AS name_a,
-        |  b.p_partkey AS id_b, b.p_name AS name_b,
-        |  CAST(levenshtein(a.p_name, b.p_name) AS INTEGER) AS dist
-        |FROM p a JOIN p b ON a.blk = b.blk AND a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.p_name, b.p_name) <= 2""".stripMargin,
-    "q93_event_pivot" -> {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val cols = types.map { t =>
-        s"""  CAST(SUM(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS ${t}_n,
-           |  round(SUM(CASE WHEN event_type = '$t' THEN value END), 6) AS ${t}_val""".stripMargin
-      }.mkString(",\n")
-      s"""SELECT CAST(ts AS DATE) AS event_date,
-         |$cols
-         |FROM events GROUP BY 1""".stripMargin
-    },
-    // q262: q43's LSH keep chain, then flag-and-aggregate per source
-    // (no source-key join, so null sources and emptied sources fall out)
-    "q262_dedup_savings" ->
-      s"""WITH RECURSIVE ${minhashCtes(3, 4, 3)},
-         |jpairs AS (
-         |  SELECT p.id_a, p.id_b
-         |  FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id
-         |    JOIN sizes sb ON p.id_b = sb.doc_id
-         |  WHERE CAST(p.n_common AS DOUBLE)
-         |    / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5),
-         |${closureTailSql()},
-         |keep AS (SELECT doc_id FROM assign WHERE cluster_id = doc_id),
-         |d AS (SELECT doc_id, source,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS tok
-         |  FROM documents),
-         |f AS (SELECT d.source, d.tok,
-         |    CASE WHEN k.doc_id IS NOT NULL THEN 1 ELSE 0 END AS kept
-         |  FROM d LEFT JOIN keep k ON d.doc_id = k.doc_id)
-         |SELECT source, CAST(count(*) AS BIGINT) AS docs_before,
-         |  CAST(sum(kept) AS BIGINT) AS docs_after,
-         |  CAST(sum(tok) AS BIGINT) AS tokens_before,
-         |  CAST(sum(CASE WHEN kept = 1 THEN tok ELSE 0 END) AS BIGINT)
-         |    AS tokens_after,
-         |  round(CAST(count(*) - sum(kept) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE), 6) AS doc_drop_rate,
-         |  round(CAST(sum(tok) - sum(CASE WHEN kept = 1 THEN tok ELSE 0 END)
-         |      AS DOUBLE)
-         |    / CAST(sum(tok) AS DOUBLE), 6) AS token_drop_rate
-         |FROM f GROUP BY 1""".stripMargin,
-    // q263: full banded-LSH replay (q34's bucket CTE), cross-side filter,
-    // micro-integer top-3 means, the margin division mirrored verbatim,
-    // mutual argmax via the (a,b)=(b,a) self-join of per-query rank-1 rows
-    "q263_margin_mates" -> {
-      def bucket(b: Int) = (b * 8 + 1 to b * 8 + 8).map(i =>
-        s"CASE WHEN embedding[$i] >= 0 THEN '1' ELSE '0' END").mkString(" || ")
-      val bandRows = (0 until 3).map(b =>
-        s"SELECT vec_id, $b AS band, ${bucket(b)} AS bucket FROM embeddings")
-        .mkString("\n  UNION ALL\n  ")
-      s"""WITH banded AS (
-         |  $bandRows),
-         |sided AS (SELECT vec_id,
-         |    CASE WHEN vec_id % 2 = 0 THEN 'even' ELSE 'odd' END AS side
-         |  FROM embeddings),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS cand_id
-         |  FROM banded a JOIN banded b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-         |pc AS (
-         |  SELECT c.query_id, c.cand_id, sx.side AS sa, sy.side AS sb,
-         |    round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]),
-         |      CAST(y.embedding AS DOUBLE[])), 6) AS cos
-         |  FROM cand c
-         |  JOIN embeddings x ON x.vec_id = c.query_id
-         |  JOIN embeddings y ON y.vec_id = c.cand_id
-         |  JOIN sided sx ON sx.vec_id = c.query_id
-         |  JOIN sided sy ON sy.vec_id = c.cand_id
-         |  WHERE sx.side <> sy.side),
-         |micro AS (SELECT *,
-         |    CAST(round(cos * 1000000.0, 0) AS BIGINT) AS m FROM pc),
-         |knn AS (
-         |  SELECT query_id, CAST(sum(m) AS BIGINT) AS s,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, cand_id ASC) AS rn FROM micro)
-         |  WHERE rn <= 3 GROUP BY 1),
-         |marg AS (
-         |  SELECT p.query_id, p.cand_id, p.sa, p.sb, p.cos,
-         |    round(p.cos / (((CAST(ka.s AS DOUBLE) / ka.n
-         |      + CAST(kb.s AS DOUBLE) / kb.n) / 2.0) / 1000000.0), 6) AS margin
-         |  FROM micro p
-         |  JOIN knn ka ON ka.query_id = p.query_id
-         |  JOIN knn kb ON kb.query_id = p.cand_id),
-         |best AS (
-         |  SELECT query_id, cand_id, sa, sb, cos, margin,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY margin DESC, cand_id ASC) AS rn
-         |  FROM marg)
-         |SELECT x.query_id AS id_a, x.cand_id AS id_b, x.cos, x.margin
-         |FROM best x JOIN best y
-         |  ON y.rn = 1 AND x.query_id = y.cand_id AND x.cand_id = y.query_id
-         |WHERE x.rn = 1 AND x.sa < x.sb""".stripMargin
-    },
-    // q264: q150's ranked dictionary, a sizes VALUES grid theta-joined on
-    // term_id <= vocab_size, coverage as one double division of exact sums
-    "q264_vocab_coverage" ->
-      """WITH dt AS (
-        |  SELECT doc_id, t.term AS term, count(*) AS tf
-        |  FROM documents, unnest(string_split(text, ' ')) AS t(term)
-        |  GROUP BY 1, 2),
-        |ts AS (SELECT term, CAST(sum(tf) AS BIGINT) AS tf FROM dt GROUP BY 1),
-        |r AS (SELECT term, tf,
-        |    row_number() OVER (ORDER BY tf DESC, term) AS term_id FROM ts),
-        |tot AS (SELECT CAST(sum(tf) AS BIGINT) AS total_tokens FROM ts),
-        |sizes(vocab_size) AS (VALUES (100), (500), (1000), (2000), (4000))
-        |SELECT s.vocab_size,
-        |  CAST(coalesce(sum(r.tf), 0) AS BIGINT) AS covered_tokens,
-        |  (SELECT total_tokens FROM tot) AS total_tokens,
-        |  round(CAST(coalesce(sum(r.tf), 0) AS DOUBLE)
-        |    / CAST((SELECT total_tokens FROM tot) AS DOUBLE), 6) AS coverage,
-        |  round(CAST((SELECT total_tokens FROM tot) - coalesce(sum(r.tf), 0)
-        |      AS DOUBLE)
-        |    / CAST((SELECT total_tokens FROM tot) AS DOUBLE), 6) AS oov_rate
-        |FROM sizes s LEFT JOIN r ON r.term_id <= s.vocab_size
-        |GROUP BY 1""".stripMargin,
-    // q265: per-task (n, c) reduce, then the unrolled product
-    // Pi (n-c-i)/(n-i) in the same left-to-right order per k
-    "q265_pass_at_k" -> {
-      val parts = Seq(1, 5, 10).map { k =>
-        val prod = (0 until k).foldLeft("1.0") { (e, i) =>
-          s"($e * (CAST(n - c - $i AS DOUBLE) / CAST(n - $i AS DOUBLE)))"
-        }
-        s"""SELECT $k AS k, CAST(count(*) AS BIGINT) AS n_tasks,
-           |  round(avg(1.0 - $prod), 6) AS mean_pass_at_k
-           |FROM per WHERE n >= $k""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH per AS (
-         |  SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS c
-         |  FROM events GROUP BY 1)
-         |$parts""".stripMargin
-    },
-    // q266: frequency-of-frequencies off q150's term stats; chao1 and
-    // Good-Turing mass as single divisions of exact integer sums
-    "q266_vocab_richness" ->
-      """WITH dt AS (
-        |  SELECT doc_id, t.term AS term, count(*) AS tf
-        |  FROM documents, unnest(string_split(text, ' ')) AS t(term)
-        |  GROUP BY 1, 2),
-        |ts AS (SELECT term, CAST(sum(tf) AS BIGINT) AS tf FROM dt GROUP BY 1),
-        |sel AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS vocab_size,
-        |    CAST(sum(tf) AS BIGINT) AS total_tokens,
-        |    CAST(sum(CASE WHEN tf = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
-        |    CAST(sum(CASE WHEN tf = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2
-        |  FROM ts)
-        |SELECT vocab_size, total_tokens, f1, f2,
-        |  round(CAST(vocab_size AS DOUBLE)
-        |    + CAST(f1 * (f1 - 1) AS DOUBLE)
-        |      / (2.0 * CAST(f2 + 1 AS DOUBLE)), 6) AS chao1,
-        |  round(CAST(f1 AS DOUBLE) / CAST(total_tokens AS DOUBLE), 6)
-        |    AS gt_unseen_mass
-        |FROM sel""".stripMargin,
-    // q267: the same exact-integer Fleiss reduction - P-bar and P_e are
-    // single divisions of integer sums (HUGEINT where the square can
-    // overflow), kappa uses the UNROUNDED ratios like the Spark side
-    "q267_fleiss_kappa" ->
-      """WITH panel AS (
-        |  SELECT user_id, event_type FROM (
-        |    SELECT user_id, event_type,
-        |      row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS r
-        |    FROM events) WHERE r <= 5),
-        |grid AS (
-        |  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS c
-        |  FROM panel WHERE event_type IS NOT NULL GROUP BY 1, 2),
-        |kept AS (
-        |  SELECT * FROM (
-        |    SELECT user_id, event_type, c,
-        |      CAST(SUM(c) OVER (PARTITION BY user_id) AS BIGINT) AS tot
-        |    FROM grid) WHERE tot = 5),
-        |it AS (
-        |  SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_items,
-        |    CAST(sum(c * c) AS BIGINT) AS sumsq
-        |  FROM kept),
-        |mg AS (
-        |  SELECT CAST(sum(cj * cj) AS HUGEINT) AS sumcj2 FROM
-        |    (SELECT CAST(sum(c) AS HUGEINT) AS cj FROM kept GROUP BY event_type)),
-        |vals AS (
-        |  SELECT n_items, sumcj2,
-        |    CAST(n_items * 5 AS HUGEINT) * CAST(n_items * 5 AS HUGEINT) AS nn2,
-        |    CAST(sumsq - n_items * 5 AS DOUBLE)
-        |      / CAST(n_items * 5 * 4 AS DOUBLE) AS pb,
-        |    CAST(sumcj2 AS DOUBLE)
-        |      / CAST(CAST(n_items * 5 AS HUGEINT)
-        |             * CAST(n_items * 5 AS HUGEINT) AS DOUBLE) AS pe
-        |  FROM it, mg WHERE n_items > 0)
-        |SELECT n_items, CAST(5 AS INTEGER) AS n_raters,
-        |  round(pb, 6) AS p_bar, round(pe, 6) AS p_e,
-        |  CASE WHEN CAST(sumcj2 AS DOUBLE) < CAST(nn2 AS DOUBLE)
-        |    THEN round((pb - pe) / (1.0 - pe), 6) END AS kappa
-        |FROM vals""".stripMargin,
-    // q268: the full 3-round MM replay - every order-sensitive sum rides
-    // as micro-integer BIGINTs, so each round's strengths are single
-    // divisions of exact integers in both engines
-    "q268_bradley_terry" ->
-      """WITH duels AS (
-        |  SELECT
-        |    CASE WHEN a.l_shipdate < b.l_shipdate THEN a.l_suppkey
-        |         ELSE b.l_suppkey END AS w,
-        |    CASE WHEN a.l_shipdate < b.l_shipdate THEN b.l_suppkey
-        |         ELSE a.l_suppkey END AS l
-        |  FROM (SELECT * FROM lineitem
-        |        WHERE l_shipdate BETWEEN '1995-01-01' AND '1995-12-31') a
-        |  JOIN (SELECT * FROM lineitem
-        |        WHERE l_shipdate BETWEEN '1995-01-01' AND '1995-12-31') b
-        |    ON a.l_orderkey = b.l_orderkey
-        |   AND a.l_linenumber < b.l_linenumber
-        |   AND a.l_suppkey <> b.l_suppkey
-        |   AND a.l_shipdate <> b.l_shipdate),
-        |wins AS (
-        |  SELECT w AS a, l AS b, CAST(count(*) AS BIGINT) AS wab
-        |  FROM duels GROUP BY 1, 2),
-        |grid0 AS (
-        |  SELECT a, b, CAST(sum(w) AS BIGINT) AS w FROM (
-        |    SELECT a, b, wab AS w FROM wins
-        |    UNION ALL
-        |    SELECT b AS a, a AS b, 0 AS w FROM wins) GROUP BY 1, 2),
-        |grid AS (
-        |  SELECT a, b, w,
-        |    CAST(SUM(w) OVER (PARTITION BY LEAST(a, b), GREATEST(a, b))
-        |      AS BIGINT) AS n
-        |  FROM grid0),
-        |tot AS (
-        |  SELECT a AS player, CAST(sum(n) AS BIGINT) AS games,
-        |    CAST(sum(w) AS BIGINT) AS wins
-        |  FROM grid GROUP BY 1),
-        |p0 AS (SELECT player, 1.0 AS p FROM tot),
-        |d1 AS (
-        |  SELECT g.a AS player,
-        |    CAST(sum(CAST(round(CAST(g.n AS DOUBLE) * 1000000.0
-        |      / (pa.p + pb.p)) AS BIGINT)) AS BIGINT) AS den
-        |  FROM grid g JOIN p0 pa ON g.a = pa.player
-        |              JOIN p0 pb ON g.b = pb.player GROUP BY 1),
-        |r1 AS (
-        |  SELECT t.player, GREATEST(round(CAST(t.wins AS DOUBLE) * 1000000.0
-        |    / CAST(d.den AS DOUBLE), 6), 0.000001) AS snap
-        |  FROM tot t JOIN d1 d USING (player)),
-        |n1 AS (
-        |  SELECT CAST(sum(CAST(round(snap * 1000000.0) AS BIGINT)) AS BIGINT)
-        |      AS s, CAST(count(*) AS BIGINT) AS c
-        |  FROM r1),
-        |p1 AS (
-        |  SELECT player, GREATEST(round(snap * CAST(c AS DOUBLE)
-        |    / (CAST(s AS DOUBLE) / 1000000.0), 6), 0.000001) AS p
-        |  FROM r1, n1),
-        |d2 AS (
-        |  SELECT g.a AS player,
-        |    CAST(sum(CAST(round(CAST(g.n AS DOUBLE) * 1000000.0
-        |      / (pa.p + pb.p)) AS BIGINT)) AS BIGINT) AS den
-        |  FROM grid g JOIN p1 pa ON g.a = pa.player
-        |              JOIN p1 pb ON g.b = pb.player GROUP BY 1),
-        |r2 AS (
-        |  SELECT t.player, GREATEST(round(CAST(t.wins AS DOUBLE) * 1000000.0
-        |    / CAST(d.den AS DOUBLE), 6), 0.000001) AS snap
-        |  FROM tot t JOIN d2 d USING (player)),
-        |n2 AS (
-        |  SELECT CAST(sum(CAST(round(snap * 1000000.0) AS BIGINT)) AS BIGINT)
-        |      AS s, CAST(count(*) AS BIGINT) AS c
-        |  FROM r2),
-        |p2 AS (
-        |  SELECT player, GREATEST(round(snap * CAST(c AS DOUBLE)
-        |    / (CAST(s AS DOUBLE) / 1000000.0), 6), 0.000001) AS p
-        |  FROM r2, n2),
-        |d3 AS (
-        |  SELECT g.a AS player,
-        |    CAST(sum(CAST(round(CAST(g.n AS DOUBLE) * 1000000.0
-        |      / (pa.p + pb.p)) AS BIGINT)) AS BIGINT) AS den
-        |  FROM grid g JOIN p2 pa ON g.a = pa.player
-        |              JOIN p2 pb ON g.b = pb.player GROUP BY 1),
-        |r3 AS (
-        |  SELECT t.player, GREATEST(round(CAST(t.wins AS DOUBLE) * 1000000.0
-        |    / CAST(d.den AS DOUBLE), 6), 0.000001) AS snap
-        |  FROM tot t JOIN d3 d USING (player)),
-        |n3 AS (
-        |  SELECT CAST(sum(CAST(round(snap * 1000000.0) AS BIGINT)) AS BIGINT)
-        |      AS s, CAST(count(*) AS BIGINT) AS c
-        |  FROM r3),
-        |p3 AS (
-        |  SELECT player, GREATEST(round(snap * CAST(c AS DOUBLE)
-        |    / (CAST(s AS DOUBLE) / 1000000.0), 6), 0.000001) AS p
-        |  FROM r3, n3)
-        |SELECT t.player, t.games, t.wins, p3.p AS strength,
-        |  CAST(row_number() OVER (ORDER BY p3.p DESC, t.player ASC)
-        |    AS INTEGER) AS rank
-        |FROM tot t JOIN p3 USING (player)""".stripMargin,
-    // q269: the q56 pack replay + per-bin source entropy; abs() folds the
-    // IEEE -0.0 a single-source bin produces on both sides
-    "q269_bin_mixing" ->
-      s"""WITH counted AS (
-         |  SELECT doc_id, source,
-         |    CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]')) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |sharded AS (
-         |  SELECT doc_id, source, n_tokens,
-         |    CAST(${md5ModSql("doc_id", 4)} AS BIGINT) AS shard
-         |  FROM counted),
-         |packed AS (
-         |  SELECT doc_id, source, shard,
-         |    CAST((SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
-         |      - n_tokens) // 512 AS BIGINT) AS bin
-         |  FROM sharded),
-         |g AS (
-         |  SELECT shard, bin, source, CAST(count(*) AS BIGINT) AS c
-         |  FROM packed GROUP BY 1, 2, 3),
-         |sized AS (
-         |  SELECT shard, bin, source, c,
-         |    CAST(SUM(c) OVER (PARTITION BY shard, bin) AS BIGINT) AS n
-         |  FROM g)
-         |SELECT shard, bin, CAST(max(n) AS BIGINT) AS n_docs,
-         |  CAST(count(*) AS BIGINT) AS n_groups,
-         |  abs(round(-sum((CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-         |    * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))), 6)) AS entropy,
-         |  round(CAST(max(c) AS DOUBLE) / CAST(max(n) AS DOUBLE), 6)
-         |    AS top_share
-         |FROM sized GROUP BY 1, 2""".stripMargin,
-    // q270: one pass over doc lengths, conditional sums per grid length
-    "q270_truncation_loss" ->
-      """WITH d AS (
-        |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-        |  FROM documents),
-        |tot AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n) AS BIGINT) AS total_tokens
-        |  FROM d),
-        |g AS (SELECT unnest([128, 256, 512, 1024, 2048]) AS context_len),
-        |a AS (
-        |  SELECT g.context_len,
-        |    CAST(sum(CASE WHEN d.n > g.context_len THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS docs_truncated,
-        |    CAST(sum(CASE WHEN d.n > g.context_len THEN d.n - g.context_len
-        |      ELSE 0 END) AS BIGINT) AS tokens_lost
-        |  FROM g, d GROUP BY 1)
-        |SELECT a.context_len, tot.n_docs, a.docs_truncated,
-        |  round(CAST(a.docs_truncated AS DOUBLE) / CAST(tot.n_docs AS DOUBLE),
-        |    6) AS pct_docs_truncated,
-        |  tot.total_tokens, a.tokens_lost,
-        |  round(CAST(a.tokens_lost AS DOUBLE) / CAST(tot.total_tokens
-        |    AS DOUBLE), 6) AS pct_tokens_lost
-        |FROM a, tot WHERE tot.n_docs > 0""".stripMargin,
-    // q271: coincidence-matrix Krippendorff with the same micro-snapped
-    // per-item disagreement; category squares ride HUGEINT
-    "q271_krippendorff" ->
-      """WITH panel AS (
-        |  SELECT user_id, event_type FROM (
-        |    SELECT user_id, event_type,
-        |      row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS r
-        |    FROM events) WHERE r <= 7),
-        |grid AS (
-        |  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS c
-        |  FROM panel WHERE event_type IS NOT NULL GROUP BY 1, 2),
-        |items AS (
-        |  SELECT user_id, CAST(sum(c) AS BIGINT) AS m,
-        |    CAST(sum(c * c) AS BIGINT) AS sq
-        |  FROM grid GROUP BY 1 HAVING CAST(sum(c) AS BIGINT) >= 2),
-        |obs AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_items,
-        |    CAST(sum(m) AS BIGINT) AS n,
-        |    CAST(sum(CAST(round(CAST(m * m - sq AS DOUBLE) * 1000000.0
-        |      / CAST(m - 1 AS DOUBLE)) AS BIGINT)) AS BIGINT) AS o
-        |  FROM items),
-        |marg AS (
-        |  SELECT CAST(sum(nc * nc) AS HUGEINT) AS sumnc2 FROM (
-        |    SELECT CAST(sum(g.c) AS HUGEINT) AS nc
-        |    FROM grid g JOIN items i USING (user_id) GROUP BY g.event_type)),
-        |vals AS (
-        |  SELECT n_items, n, o,
-        |    CAST(CAST(n AS HUGEINT) * CAST(n AS HUGEINT) - sumnc2 AS DOUBLE)
-        |      AS den,
-        |    CAST(CAST(n AS HUGEINT) * (CAST(n AS HUGEINT) - 1) AS DOUBLE)
-        |      AS pairs
-        |  FROM obs, marg WHERE n > 0)
-        |SELECT n_items, n AS n_ratings,
-        |  round(CAST(o AS DOUBLE) / 1000000.0 / CAST(n AS DOUBLE), 6) AS d_o,
-        |  round(den / pairs, 6) AS d_e,
-        |  CASE WHEN den > 0.0 THEN
-        |    round(1.0 - CAST(o AS DOUBLE) / 1000000.0
-        |      * CAST(n - 1 AS DOUBLE) / den, 6) END AS alpha
-        |FROM vals""".stripMargin,
-    // q272: the q173 forecast, bin sums as exact integers (picto-exact
-    // per-row squares), per-bin terms micro-snapped like the Spark side
-    "q272_brier_decomposition" ->
-      """WITH rows0 AS (
-        |  SELECT round(least(1.0, CAST(value AS DOUBLE) / 250.0), 6) AS f,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events
-        |  WHERE least(1.0, CAST(value AS DOUBLE) / 250.0) IS NOT NULL
-        |    AND event_type IS NOT NULL),
-        |r2 AS (
-        |  SELECT greatest(0, least(CAST(floor(f * 10) AS BIGINT), 9)) AS b, y,
-        |    CAST(round(f * 1000000.0) AS BIGINT) AS fm,
-        |    CAST(round((f - y) * (f - y) * 1000000000000.0) AS HUGEINT) AS e
-        |  FROM rows0),
-        |bins AS (
-        |  SELECT b, CAST(count(*) AS BIGINT) AS nk, CAST(sum(y) AS BIGINT)
-        |      AS ok, CAST(sum(fm) AS BIGINT) AS fmk,
-        |    CAST(sum(e) AS HUGEINT) AS ek
-        |  FROM r2 GROUP BY 1),
-        |tot AS (
-        |  SELECT CAST(sum(nk) AS BIGINT) AS n, CAST(sum(ok) AS BIGINT) AS o,
-        |    CAST(sum(ek) AS HUGEINT) AS e
-        |  FROM bins),
-        |terms AS (
-        |  SELECT
-        |    CAST(sum(CAST(round((CAST(fmk AS DOUBLE) / 1000000.0
-        |        - CAST(ok AS DOUBLE))
-        |      * (CAST(fmk AS DOUBLE) / 1000000.0 - CAST(ok AS DOUBLE))
-        |      * 1000000.0 / CAST(nk AS DOUBLE)) AS BIGINT)) AS BIGINT) AS rl,
-        |    CAST(sum(CAST(round((CAST(ok AS DOUBLE) - CAST(nk AS DOUBLE)
-        |        * CAST(tot.o AS DOUBLE) / CAST(tot.n AS DOUBLE))
-        |      * (CAST(ok AS DOUBLE) - CAST(nk AS DOUBLE)
-        |        * CAST(tot.o AS DOUBLE) / CAST(tot.n AS DOUBLE))
-        |      * 1000000.0 / CAST(nk AS DOUBLE)) AS BIGINT)) AS BIGINT) AS rs
-        |  FROM bins, tot)
-        |SELECT tot.n AS n,
-        |  round(CAST(tot.e AS DOUBLE) / 1000000000000.0
-        |    / CAST(tot.n AS DOUBLE), 6) AS brier,
-        |  round(CAST(terms.rl AS DOUBLE) / 1000000.0 / CAST(tot.n AS DOUBLE),
-        |    6) AS reliability,
-        |  round(CAST(terms.rs AS DOUBLE) / 1000000.0 / CAST(tot.n AS DOUBLE),
-        |    6) AS resolution,
-        |  round((CAST(tot.o AS DOUBLE) / CAST(tot.n AS DOUBLE))
-        |    * (1.0 - CAST(tot.o AS DOUBLE) / CAST(tot.n AS DOUBLE)), 6)
-        |    AS uncertainty,
-        |  round(CAST(tot.e AS DOUBLE) / 1000000000000.0
-        |      / CAST(tot.n AS DOUBLE)
-        |    - (CAST(terms.rl AS DOUBLE) / 1000000.0 / CAST(tot.n AS DOUBLE)
-        |      - CAST(terms.rs AS DOUBLE) / 1000000.0 / CAST(tot.n AS DOUBLE)
-        |      + (CAST(tot.o AS DOUBLE) / CAST(tot.n AS DOUBLE))
-        |        * (1.0 - CAST(tot.o AS DOUBLE) / CAST(tot.n AS DOUBLE))), 6)
-        |    + 0.0 AS within_bin_var
-        |FROM tot, terms WHERE tot.n > 0""".stripMargin,
-    // q273: the q136 chain re-derived, then Kish ESS off nano-snapped
-    // max-normalized weights (exact HUGEINT sums)
-    "q273_importance_ess" ->
-      s"""WITH rawterm AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-         |rawt AS (
-         |  SELECT doc_id, ${md5ModSql("term", 256)} AS b FROM rawterm),
-         |tgtt AS (
-         |  SELECT ${md5ModSql("term", 256)} AS b
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS term
-         |        FROM documents WHERE source IN ('src0', 'src1', 'src2'))),
-         |rb AS (SELECT b, count(*) AS rn FROM rawt GROUP BY 1),
-         |tb AS (SELECT b, count(*) AS tn FROM tgtt GROUP BY 1),
-         |tots AS (SELECT (SELECT sum(rn) FROM rb) AS rt, (SELECT sum(tn) FROM tb) AS tt),
-         |l AS (
-         |  SELECT rb.b,
-         |    ln((COALESCE(tb.tn, 0) + 1.0) / (tots.tt + 256.0))
-         |      - ln((rb.rn + 1.0) / (tots.rt + 256.0)) AS lr
-         |  FROM rb LEFT JOIN tb USING (b) CROSS JOIN tots),
-         |lw AS (
-         |  SELECT doc_id, round(sum(lr), 6) AS log_weight
-         |  FROM rawt JOIN l USING (b) GROUP BY doc_id),
-         |mx AS (SELECT max(log_weight) AS m FROM lw),
-         |nano AS (
-         |  SELECT CAST(round(exp(log_weight - mx.m) * 1000000000.0)
-         |    AS HUGEINT) AS w, mx.m AS m
-         |  FROM lw, mx WHERE log_weight IS NOT NULL),
-         |s AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n, max(m) AS m,
-         |    CAST(sum(w) AS HUGEINT) AS s1, CAST(sum(w * w) AS HUGEINT) AS s2
-         |  FROM nano)
-         |SELECT n, round(m, 6) AS max_log_weight,
-         |  round(CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-         |    / CAST(s2 AS DOUBLE), 6) AS ess,
-         |  round(CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-         |    / CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE), 6) AS ess_ratio
-         |FROM s WHERE n > 0 AND s2 > 0""".stripMargin,
-    // q274: the same micro-snapped rank-sum reduction — average ranks
-    // via the exclusive cumsum, tie-corrected sigma, exact HUGEINT 2R
-    "q274_mann_whitney" ->
-      """WITH j AS (
-        |  SELECT c.c_nationkey AS g, c.c_mktsegment AS var,
-        |    CAST(round(CAST(o.o_totalprice AS DOUBLE) * 1000000.0)
-        |      AS BIGINT) AS vm
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
-        |    AND o.o_totalprice IS NOT NULL),
-        |grid AS (
-        |  SELECT g, vm,
-        |    CAST(count(*) FILTER (var = 'BUILDING') AS HUGEINT) AS ca,
-        |    CAST(count(*) FILTER (var = 'MACHINERY') AS HUGEINT) AS cb
-        |  FROM j GROUP BY 1, 2),
-        |win AS (
-        |  SELECT g, ca, cb, ca + cb AS t,
-        |    COALESCE(sum(ca + cb) OVER (PARTITION BY g ORDER BY vm
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |      0) AS cum
-        |  FROM grid),
-        |red AS (
-        |  SELECT g, CAST(sum(ca) AS BIGINT) AS n_a,
-        |    CAST(sum(cb) AS BIGINT) AS n_b,
-        |    CAST(sum(ca * (cum * 2 + t + 1)) AS HUGEINT) AS r2,
-        |    CAST(sum(t * t * t - t) AS HUGEINT) AS ties
-        |  FROM win GROUP BY 1),
-        |st AS (
-        |  SELECT g, n_a, n_b,
-        |    r2 - CAST(n_a AS HUGEINT) * (CAST(n_a AS HUGEINT) + 1) AS u2,
-        |    CAST(CAST(n_a AS HUGEINT) * CAST(n_b AS HUGEINT) AS DOUBLE)
-        |      AS nm,
-        |    CAST(CAST(n_a AS HUGEINT) * CAST(n_b AS HUGEINT) AS DOUBLE)
-        |      / 12.0 *
-        |      (CAST(CAST(n_a AS HUGEINT) + n_b + 1 AS DOUBLE)
-        |       - CAST(ties AS DOUBLE)
-        |         / CAST((CAST(n_a AS HUGEINT) + n_b)
-        |             * (CAST(n_a AS HUGEINT) + n_b - 1) AS DOUBLE))
-        |      AS sigma2
-        |  FROM red)
-        |SELECT g AS c_nationkey, n_a, n_b,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1
-        |       THEN CAST(u2 AS DOUBLE) / 2.0 END AS u_a,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1 AND sigma2 > 0
-        |       THEN round((CAST(u2 AS DOUBLE) - nm)
-        |         / (2.0 * sqrt(sigma2)), 6) END AS z,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1
-        |       THEN round(CAST(u2 AS DOUBLE) / nm - 1.0, 6)
-        |       END AS cliffs_delta,
-        |  COALESCE(CASE WHEN n_a >= 1 AND n_b >= 1 AND sigma2 > 0
-        |    THEN abs((CAST(u2 AS DOUBLE) - nm) / (2.0 * sqrt(sigma2)))
-        |      > 1.959964 END, FALSE) AS significant
-        |FROM st""".stripMargin,
-    // q275: one distinct-value grid feeds both statistics; exact HUGEINT
-    // numerators over the shared n_a*n_b denominator
-    "q275_ecdf_distance" ->
-      """WITH e AS (
-        |  SELECT event_type AS g,
-        |    CASE WHEN dayofweek(CAST(ts AS TIMESTAMP)) IN (0, 6)
-        |         THEN 'weekend' ELSE 'weekday' END AS var,
-        |    CAST(round(value * 1000000.0) AS BIGINT) AS vm
-        |  FROM events WHERE value IS NOT NULL),
-        |grid AS (
-        |  SELECT g, vm,
-        |    CAST(count(*) FILTER (var = 'weekday') AS HUGEINT) AS ca,
-        |    CAST(count(*) FILTER (var = 'weekend') AS HUGEINT) AS cb
-        |  FROM e GROUP BY 1, 2),
-        |win AS (
-        |  SELECT g, ca, cb, vm,
-        |    sum(ca) OVER w AS cuma, sum(cb) OVER w AS cumb,
-        |    sum(ca) OVER (PARTITION BY g) AS na,
-        |    sum(cb) OVER (PARTITION BY g) AS nb,
-        |    lead(vm) OVER w AS nxt
-        |  FROM grid WINDOW w AS (PARTITION BY g ORDER BY vm)),
-        |d AS (
-        |  SELECT g, ca, cb,
-        |    abs(cuma * nb - cumb * na) AS dn,
-        |    COALESCE(CAST(nxt - vm AS HUGEINT), 0)
-        |      * abs(cuma * nb - cumb * na) AS w1
-        |  FROM win),
-        |red AS (
-        |  SELECT g, CAST(sum(ca) AS BIGINT) AS n_a,
-        |    CAST(sum(cb) AS BIGINT) AS n_b,
-        |    max(dn) AS dmax, CAST(sum(w1) AS HUGEINT) AS w1n
-        |  FROM d GROUP BY 1)
-        |SELECT g AS event_type, n_a, n_b,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1 THEN
-        |    round(CAST(dmax AS DOUBLE)
-        |      / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)), 6)
-        |    END AS ks_d,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1 THEN
-        |    round(sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)
-        |        / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)))
-        |      * (CAST(dmax AS DOUBLE)
-        |        / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE))), 6)
-        |    END AS ks_stat,
-        |  COALESCE(CASE WHEN n_a >= 1 AND n_b >= 1 THEN
-        |    round(sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)
-        |        / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)))
-        |      * (CAST(dmax AS DOUBLE)
-        |        / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE))), 6)
-        |      > 1.358102 END, FALSE) AS reject_95,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1 THEN
-        |    round(CAST(w1n AS DOUBLE) / 1000000.0
-        |      / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)), 6)
-        |    END AS wasserstein1
-        |FROM red""".stripMargin,
-    // q276: thresholds are the distinct snapped scores; each step term
-    // micro-snaps before the BIGINT sum (the bradleyTerry device)
-    "q276_average_precision" ->
-      """WITH e AS (
-        |  SELECT CAST(round(least(1.0, CAST(value AS DOUBLE) / 250.0)
-        |      * 1000000.0) AS BIGINT) AS sm,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events
-        |  WHERE least(1.0, CAST(value AS DOUBLE) / 250.0) IS NOT NULL
-        |    AND event_type IS NOT NULL),
-        |grid AS (
-        |  SELECT sm, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(y) AS BIGINT) AS np
-        |  FROM e GROUP BY 1),
-        |win AS (
-        |  SELECT n, np,
-        |    sum(n) OVER (ORDER BY sm DESC) AS cn,
-        |    sum(np) OVER (ORDER BY sm DESC) AS cp,
-        |    sum(np) OVER () AS npos
-        |  FROM grid),
-        |terms AS (
-        |  SELECT CAST(sum(n) AS BIGINT) AS n,
-        |    CAST(max(npos) AS BIGINT) AS n_pos,
-        |    CAST(sum(CASE WHEN npos > 0 AND np > 0 THEN
-        |      CAST(round(CAST(np AS DOUBLE) * CAST(cp AS DOUBLE)
-        |        * 1000000.0
-        |        / (CAST(npos AS DOUBLE) * CAST(cn AS DOUBLE))) AS BIGINT)
-        |      ELSE 0 END) AS BIGINT) AS ap
-        |  FROM win)
-        |SELECT n, n_pos,
-        |  round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 6) AS base_rate,
-        |  CASE WHEN n_pos > 0
-        |       THEN round(CAST(ap AS DOUBLE) / 1000000.0, 6)
-        |       END AS average_precision
-        |FROM terms WHERE n > 0""".stripMargin,
-    // q277: the rank-block identity 2*sum(i*x) = sum(v*(2*t*cum+t(t+1)))
-    // over the distinct-length histogram, exact HUGEINT
-    "q277_token_gini" ->
-      """WITH d AS (
-        |  SELECT source AS g,
-        |    CAST(round(CAST(len(string_split(text, ' ')) AS DOUBLE)
-        |      * 1000000.0) AS BIGINT) AS vm
-        |  FROM documents),
-        |grid AS (
-        |  SELECT g, vm, CAST(count(*) AS HUGEINT) AS t
-        |  FROM d GROUP BY 1, 2),
-        |win AS (
-        |  SELECT g, vm, t,
-        |    COALESCE(sum(t) OVER (PARTITION BY g ORDER BY vm
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |      0) AS cum
-        |  FROM grid),
-        |red AS (
-        |  SELECT g, CAST(sum(t) AS BIGINT) AS n, min(vm) AS mn,
-        |    CAST(sum(CAST(vm AS HUGEINT) * (t * cum * 2 + t * (t + 1)))
-        |      AS HUGEINT) AS r,
-        |    CAST(sum(CAST(vm AS HUGEINT) * t) AS HUGEINT) AS s
-        |  FROM win GROUP BY 1)
-        |SELECT g AS source, n,
-        |  round(CAST(s AS DOUBLE) / 1000000.0, 6) AS total,
-        |  CASE WHEN mn >= 0 AND s > 0 THEN
-        |    round(CAST(r AS DOUBLE)
-        |        / (CAST(n AS DOUBLE) * CAST(s AS DOUBLE))
-        |      - (CAST(n AS DOUBLE) + 1.0) / CAST(n AS DOUBLE), 6)
-        |    END AS gini
-        |FROM red""".stripMargin,
-    // q278: the same discordant-count reduction; chi2 one division of
-    // exact integers, continuity correction clamped at 0
-    "q278_mcnemar" ->
-      """WITH e AS (
-        |  SELECT event_type AS lab,
-        |    CASE WHEN substr(md5(CAST(event_id AS VARCHAR)), 1, 1) < '3'
-        |         THEN 'click' ELSE event_type END AS pa,
-        |    CASE WHEN value > 125.0 THEN 'purchase' ELSE 'click' END AS pb
-        |  FROM events WHERE event_type IS NOT NULL),
-        |m AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(count(*) FILTER (pa = lab AND pb = lab) AS BIGINT)
-        |      AS both_correct,
-        |    CAST(count(*) FILTER (pa = lab AND pb <> lab) AS BIGINT)
-        |      AS only_a,
-        |    CAST(count(*) FILTER (pa <> lab AND pb = lab) AS BIGINT)
-        |      AS only_b,
-        |    CAST(count(*) FILTER (pa <> lab AND pb <> lab) AS BIGINT)
-        |      AS both_wrong
-        |  FROM e)
-        |SELECT n, both_correct, only_a, only_b, both_wrong,
-        |  CASE WHEN only_a + only_b > 0 THEN
-        |    round(greatest(0.0, abs(CAST(only_a AS DOUBLE)
-        |        - CAST(only_b AS DOUBLE)) - 1.0)
-        |      * greatest(0.0, abs(CAST(only_a AS DOUBLE)
-        |        - CAST(only_b AS DOUBLE)) - 1.0)
-        |      / (CAST(only_a AS DOUBLE) + CAST(only_b AS DOUBLE)), 6)
-        |    END AS chi2_cc,
-        |  COALESCE(CASE WHEN only_a + only_b > 0 THEN
-        |    greatest(0.0, abs(CAST(only_a AS DOUBLE)
-        |        - CAST(only_b AS DOUBLE)) - 1.0)
-        |      * greatest(0.0, abs(CAST(only_a AS DOUBLE)
-        |        - CAST(only_b AS DOUBLE)) - 1.0)
-        |      / (CAST(only_a AS DOUBLE) + CAST(only_b AS DOUBLE))
-        |      > 3.841459 END, FALSE) AS significant
-        |FROM m WHERE n > 0""".stripMargin,
-    // q279: DeLong placements as exact integer numerators off the
-    // distinct-score histogram; variance terms in HUGEINT
-    "q279_auc_delong" ->
-      """WITH e AS (
-        |  SELECT CAST(round(least(1.0, CAST(value AS DOUBLE) / 250.0)
-        |      * 1000000.0) AS BIGINT) AS sm,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events
-        |  WHERE least(1.0, CAST(value AS DOUBLE) / 250.0) IS NOT NULL
-        |    AND event_type IS NOT NULL),
-        |grid AS (
-        |  SELECT sm, CAST(sum(y) AS BIGINT) AS np,
-        |    CAST(count(*) - sum(y) AS BIGINT) AS nn
-        |  FROM e GROUP BY 1),
-        |win AS (
-        |  SELECT np, nn,
-        |    COALESCE(sum(nn) OVER (ORDER BY sm
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |      0) AS negb,
-        |    COALESCE(sum(np) OVER (ORDER BY sm
-        |      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING),
-        |      0) AS posa
-        |  FROM grid),
-        |red AS (
-        |  SELECT CAST(sum(np) AS HUGEINT) AS p,
-        |    CAST(sum(nn) AS HUGEINT) AS m,
-        |    CAST(sum(CAST(np AS HUGEINT) * (negb * 2 + nn)) AS HUGEINT)
-        |      AS s1,
-        |    CAST(sum(CAST(np AS HUGEINT) * (negb * 2 + nn)
-        |      * (negb * 2 + nn)) AS HUGEINT) AS s2,
-        |    CAST(sum(CAST(nn AS HUGEINT) * (posa * 2 + np)) AS HUGEINT)
-        |      AS t1,
-        |    CAST(sum(CAST(nn AS HUGEINT) * (posa * 2 + np)
-        |      * (posa * 2 + np)) AS HUGEINT) AS t2
-        |  FROM win)
-        |SELECT CAST(p AS BIGINT) AS n_pos, CAST(m AS BIGINT) AS n_neg,
-        |  CASE WHEN p > 0 AND m > 0 THEN
-        |    round(CAST(s1 AS DOUBLE)
-        |      / (2.0 * CAST(m AS DOUBLE) * CAST(p AS DOUBLE)), 6)
-        |    END AS auc,
-        |  CASE WHEN p >= 2 AND m >= 2 THEN
-        |    round(sqrt(
-        |      ((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-        |          / CAST(p AS DOUBLE)) / (CAST(p AS DOUBLE) - 1.0))
-        |        / (CAST(p AS DOUBLE) * (2.0 * CAST(m AS DOUBLE))
-        |          * (2.0 * CAST(m AS DOUBLE)))
-        |      + ((CAST(t2 AS DOUBLE) - CAST(t1 AS DOUBLE)
-        |          * CAST(t1 AS DOUBLE) / CAST(m AS DOUBLE))
-        |          / (CAST(m AS DOUBLE) - 1.0))
-        |        / (CAST(m AS DOUBLE) * (2.0 * CAST(p AS DOUBLE))
-        |          * (2.0 * CAST(p AS DOUBLE)))), 6)
-        |    END AS se,
-        |  CASE WHEN p >= 2 AND m >= 2 THEN
-        |    round(CAST(s1 AS DOUBLE)
-        |        / (2.0 * CAST(m AS DOUBLE) * CAST(p AS DOUBLE))
-        |      - 1.959964 * sqrt(
-        |      ((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-        |          / CAST(p AS DOUBLE)) / (CAST(p AS DOUBLE) - 1.0))
-        |        / (CAST(p AS DOUBLE) * (2.0 * CAST(m AS DOUBLE))
-        |          * (2.0 * CAST(m AS DOUBLE)))
-        |      + ((CAST(t2 AS DOUBLE) - CAST(t1 AS DOUBLE)
-        |          * CAST(t1 AS DOUBLE) / CAST(m AS DOUBLE))
-        |          / (CAST(m AS DOUBLE) - 1.0))
-        |        / (CAST(m AS DOUBLE) * (2.0 * CAST(p AS DOUBLE))
-        |          * (2.0 * CAST(p AS DOUBLE)))), 6)
-        |    END AS ci_lo,
-        |  CASE WHEN p >= 2 AND m >= 2 THEN
-        |    round(CAST(s1 AS DOUBLE)
-        |        / (2.0 * CAST(m AS DOUBLE) * CAST(p AS DOUBLE))
-        |      + 1.959964 * sqrt(
-        |      ((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-        |          / CAST(p AS DOUBLE)) / (CAST(p AS DOUBLE) - 1.0))
-        |        / (CAST(p AS DOUBLE) * (2.0 * CAST(m AS DOUBLE))
-        |          * (2.0 * CAST(m AS DOUBLE)))
-        |      + ((CAST(t2 AS DOUBLE) - CAST(t1 AS DOUBLE)
-        |          * CAST(t1 AS DOUBLE) / CAST(m AS DOUBLE))
-        |          / (CAST(m AS DOUBLE) - 1.0))
-        |        / (CAST(m AS DOUBLE) * (2.0 * CAST(p AS DOUBLE))
-        |          * (2.0 * CAST(p AS DOUBLE)))), 6)
-        |    END AS ci_hi
-        |FROM red WHERE p + m > 0""".stripMargin,
-    // q280: the welch moment pass re-pointed at planning - same pivot,
-    // (z_a + z_b) * welch SE
-    "q280_mde" ->
-      """WITH j AS (
-        |  SELECT c.c_nationkey AS g, c.c_mktsegment AS var,
-        |    CAST(o.o_totalprice AS DOUBLE) AS v
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
-        |    AND o.o_totalprice IS NOT NULL),
-        |red AS (
-        |  SELECT g, var, CAST(count(*) AS BIGINT) AS n,
-        |    sum(v) AS s, sum(v * v) AS s2
-        |  FROM j GROUP BY 1, 2),
-        |piv AS (
-        |  SELECT g,
-        |    COALESCE(max(CASE WHEN var = 'BUILDING' THEN n END), 0) AS n_a,
-        |    COALESCE(max(CASE WHEN var = 'MACHINERY' THEN n END), 0) AS n_b,
-        |    max(CASE WHEN var = 'BUILDING' THEN s END) AS sa,
-        |    max(CASE WHEN var = 'MACHINERY' THEN s END) AS sb,
-        |    max(CASE WHEN var = 'BUILDING' THEN s2 END) AS sa2,
-        |    max(CASE WHEN var = 'MACHINERY' THEN s2 END) AS sb2
-        |  FROM red GROUP BY 1)
-        |SELECT g AS c_nationkey, n_a, n_b,
-        |  CASE WHEN n_a > 0 THEN round(sa / CAST(n_a AS DOUBLE), 6) END
-        |    AS mean_a,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 THEN
-        |    round((1.959963984540054 + 0.8416212335729143) * sqrt(
-        |      ((sa2 - sa * sa / CAST(n_a AS DOUBLE))
-        |        / (CAST(n_a AS DOUBLE) - 1.0)) / CAST(n_a AS DOUBLE)
-        |      + ((sb2 - sb * sb / CAST(n_b AS DOUBLE))
-        |        / (CAST(n_b AS DOUBLE) - 1.0)) / CAST(n_b AS DOUBLE)), 6)
-        |    END AS mde_abs,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2
-        |        AND sa / CAST(n_a AS DOUBLE) <> 0.0 THEN
-        |    round((1.959963984540054 + 0.8416212335729143) * sqrt(
-        |      ((sa2 - sa * sa / CAST(n_a AS DOUBLE))
-        |        / (CAST(n_a AS DOUBLE) - 1.0)) / CAST(n_a AS DOUBLE)
-        |      + ((sb2 - sb * sb / CAST(n_b AS DOUBLE))
-        |        / (CAST(n_b AS DOUBLE) - 1.0)) / CAST(n_b AS DOUBLE))
-        |      / (sa / CAST(n_a AS DOUBLE)), 6)
-        |    END AS mde_rel
-        |FROM piv""".stripMargin,
-    // q302: per-cohort mean/SS scalars snapped to micro^2 integers before
-    // the cohort sum, mirroring anovaTail's determinism device
-    "q302_anova_f" ->
-      """WITH j AS (
-        |  SELECT c.c_nationkey AS g, c.c_mktsegment AS coh,
-        |    CAST(round(CAST(o.o_totalprice AS DOUBLE) * 1000000.0)
-        |      AS BIGINT) AS vm
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE o.o_totalprice IS NOT NULL),
-        |p AS (
-        |  SELECT g, coh, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(vm AS DECIMAL(38,0))) AS s,
-        |    sum(CAST(vm AS DECIMAL(38,0)) * CAST(vm AS DECIMAL(38,0))) AS s2
-        |  FROM j GROUP BY 1, 2),
-        |w AS (
-        |  SELECT g, n, s, s2,
-        |    CAST(sum(s) OVER (PARTITION BY g) AS DOUBLE)
-        |      / CAST(sum(n) OVER (PARTITION BY g) AS DOUBLE) AS mall
-        |  FROM p),
-        |snap AS (
-        |  SELECT g, n,
-        |    CAST(round(CAST(n AS DOUBLE)
-        |      * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE) - mall)
-        |      * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE) - mall))
-        |      AS DECIMAL(38,0)) AS bt,
-        |    CAST(round(CAST(s2 AS DOUBLE)
-        |      - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(s AS DOUBLE))
-        |      AS DECIMAL(38,0)) AS wt
-        |  FROM w),
-        |red AS (
-        |  SELECT g, CAST(count(*) AS BIGINT) AS k_cohorts,
-        |    CAST(sum(n) AS BIGINT) AS n,
-        |    greatest(CAST(sum(bt) AS DOUBLE) / 1e12, 0.0) AS ssb,
-        |    greatest(CAST(sum(wt) AS DOUBLE) / 1e12, 0.0) AS ssw
-        |  FROM snap GROUP BY 1)
-        |SELECT g AS c_nationkey, k_cohorts, n,
-        |  round(ssb / 1e6, 6) AS ss_between_m,
-        |  round(ssw / 1e6, 6) AS ss_within_m,
-        |  CASE WHEN k_cohorts >= 2 AND n > k_cohorts AND ssw > 0 THEN
-        |    round((ssb / (CAST(k_cohorts AS DOUBLE) - 1.0))
-        |      / (ssw / (CAST(n AS DOUBLE) - CAST(k_cohorts AS DOUBLE))), 6)
-        |  END AS f_stat,
-        |  CASE WHEN k_cohorts >= 2 AND n > k_cohorts AND ssb + ssw > 0
-        |    THEN round(ssb / (ssb + ssw), 6) END AS eta_sq
-        |FROM red""".stripMargin,
-    // q303: doubled average ranks off the per-group distinct-value
-    // histogram; the tie term t^3-t rides exact decimals
-    "q303_kruskal_wallis" ->
-      """WITH e AS (
-        |  SELECT event_type AS g, dayofweek(ts) + 1 AS coh,
-        |    CAST(round(value * 1000000.0) AS BIGINT) AS vm
-        |  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL),
-        |grid AS (
-        |  SELECT g, coh, vm, CAST(count(*) AS BIGINT) AS c
-        |  FROM e GROUP BY 1, 2, 3),
-        |w AS (
-        |  SELECT g, coh, c,
-        |    CAST(sum(c) OVER (PARTITION BY g ORDER BY vm)
-        |      AS DECIMAL(38,0)) AS cumincl,
-        |    CAST(sum(c) OVER (PARTITION BY g, vm) AS DECIMAL(38,0)) AS t,
-        |    row_number() OVER (PARTITION BY g, vm ORDER BY coh) AS rn
-        |  FROM grid),
-        |staged AS (
-        |  SELECT g, coh, c,
-        |    CAST(c AS DECIMAL(38,0)) * ((cumincl - t) * 2 + t + 1) AS r2,
-        |    CASE WHEN rn = 1 THEN t * t * t - t
-        |         ELSE CAST(0 AS DECIMAL(38,0)) END AS tie
-        |  FROM w),
-        |percoh AS (
-        |  SELECT g, coh, CAST(sum(c) AS BIGINT) AS n,
-        |    sum(r2) AS r2s, sum(tie) AS ties
-        |  FROM staged GROUP BY 1, 2),
-        |w2 AS (
-        |  SELECT g, n, ties, r2s,
-        |    CAST(sum(n) OVER (PARTITION BY g) AS DOUBLE) AS nn
-        |  FROM percoh),
-        |snap AS (
-        |  SELECT g, n, ties,
-        |    CAST(round(CAST(r2s AS DOUBLE) * CAST(r2s AS DOUBLE)
-        |      / (4.0 * CAST(n AS DOUBLE) * nn * (nn + 1.0)) * 1000000.0)
-        |      AS DECIMAL(38,0)) AS tt
-        |  FROM w2),
-        |red AS (
-        |  SELECT g, CAST(count(*) AS BIGINT) AS k_cohorts,
-        |    CAST(sum(n) AS BIGINT) AS n,
-        |    CAST(sum(tt) AS DOUBLE) AS tts,
-        |    CAST(sum(ties) AS DOUBLE) AS tiesum
-        |  FROM snap GROUP BY 1),
-        |fin AS (
-        |  SELECT g, k_cohorts, n,
-        |    12.0 * tts / 1000000.0 - 3.0 * (CAST(n AS DOUBLE) + 1.0) AS h,
-        |    1.0 - tiesum / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-        |      * CAST(n AS DOUBLE) - CAST(n AS DOUBLE)) AS corr
-        |  FROM red)
-        |SELECT g AS event_type, k_cohorts, n,
-        |  CASE WHEN k_cohorts >= 2 AND n > k_cohorts
-        |    THEN CAST(k_cohorts - 1 AS BIGINT) END AS df,
-        |  CASE WHEN k_cohorts >= 2 AND n > k_cohorts
-        |    THEN round(h, 6) END AS h,
-        |  CASE WHEN k_cohorts >= 2 AND n > k_cohorts AND corr > 0
-        |    THEN round(h / corr, 6) END AS h_corrected
-        |FROM fin""".stripMargin,
-    // q304: exact lower-median per cohort off the cumulative histogram,
-    // micro-integer absolute deviations through the q302 ANOVA tail
-    "q304_levene_bf" ->
-      """WITH j AS (
-        |  SELECT c.c_nationkey AS g, c.c_mktsegment AS coh,
-        |    CAST(round(CAST(o.o_totalprice AS DOUBLE) * 1000000.0)
-        |      AS BIGINT) AS vm
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE o.o_totalprice IS NOT NULL),
-        |grid AS (
-        |  SELECT g, coh, vm, CAST(count(*) AS BIGINT) AS c
-        |  FROM j GROUP BY 1, 2, 3),
-        |w AS (
-        |  SELECT g, coh, vm, c,
-        |    sum(c) OVER (PARTITION BY g, coh ORDER BY vm) AS cum,
-        |    sum(c) OVER (PARTITION BY g, coh) AS nc
-        |  FROM grid),
-        |m AS (
-        |  SELECT g, coh, vm, c,
-        |    min(CASE WHEN cum * 2 >= nc THEN vm END)
-        |      OVER (PARTITION BY g, coh) AS med
-        |  FROM w),
-        |p AS (
-        |  SELECT g, coh, CAST(sum(c) AS BIGINT) AS n,
-        |    sum(CAST(c AS DECIMAL(38,0))
-        |      * CAST(abs(vm - med) AS DECIMAL(38,0))) AS s,
-        |    sum(CAST(c AS DECIMAL(38,0))
-        |      * CAST(abs(vm - med) AS DECIMAL(38,0))
-        |      * CAST(abs(vm - med) AS DECIMAL(38,0))) AS s2
-        |  FROM m GROUP BY 1, 2),
-        |w2 AS (
-        |  SELECT g, n, s, s2,
-        |    CAST(sum(s) OVER (PARTITION BY g) AS DOUBLE)
-        |      / CAST(sum(n) OVER (PARTITION BY g) AS DOUBLE) AS mall
-        |  FROM p),
-        |snap AS (
-        |  SELECT g, n,
-        |    CAST(round(CAST(n AS DOUBLE)
-        |      * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE) - mall)
-        |      * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE) - mall))
-        |      AS DECIMAL(38,0)) AS bt,
-        |    CAST(round(CAST(s2 AS DOUBLE)
-        |      - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(s AS DOUBLE))
-        |      AS DECIMAL(38,0)) AS wt
-        |  FROM w2),
-        |red AS (
-        |  SELECT g, CAST(count(*) AS BIGINT) AS k_cohorts,
-        |    CAST(sum(n) AS BIGINT) AS n,
-        |    greatest(CAST(sum(bt) AS DOUBLE) / 1e12, 0.0) AS ssb,
-        |    greatest(CAST(sum(wt) AS DOUBLE) / 1e12, 0.0) AS ssw
-        |  FROM snap GROUP BY 1)
-        |SELECT g AS c_nationkey, k_cohorts, n,
-        |  round(ssb / 1e6, 6) AS ss_between_m,
-        |  round(ssw / 1e6, 6) AS ss_within_m,
-        |  CASE WHEN k_cohorts >= 2 AND n > k_cohorts AND ssw > 0 THEN
-        |    round((ssb / (CAST(k_cohorts AS DOUBLE) - 1.0))
-        |      / (ssw / (CAST(n AS DOUBLE) - CAST(k_cohorts AS DOUBLE))), 6)
-        |  END AS f_stat,
-        |  CASE WHEN k_cohorts >= 2 AND n > k_cohorts AND ssb + ssw > 0
-        |    THEN round(ssb / (ssb + ssw), 6) END AS eta_sq
-        |FROM red""".stripMargin,
-    // q305: every scan-stage metric from ONE aggregate row; the unique
-    // check's exact distinct in the same CTE; passed on the raw metric
-    "q305_expectations" ->
-      """WITH s AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(count(l_orderkey) AS BIGINT) AS p0,
-        |    CAST(count(l_quantity) AS BIGINT) AS p1,
-        |    CAST(count(CASE WHEN CAST(l_quantity AS DOUBLE)
-        |      BETWEEN 1.0 AND 50.0 THEN 1 END) AS BIGINT) AS q1,
-        |    CAST(count(l_discount) AS BIGINT) AS p2,
-        |    CAST(count(CASE WHEN CAST(l_discount AS DOUBLE)
-        |      BETWEEN 0.0 AND 0.05 THEN 1 END) AS BIGINT) AS q2,
-        |    CAST(count(l_linestatus) AS BIGINT) AS p3,
-        |    CAST(count(CASE WHEN regexp_matches(l_linestatus, '^[OF]$')
-        |      THEN 1 END) AS BIGINT) AS q3,
-        |    CAST(count(l_returnflag) AS BIGINT) AS p4,
-        |    CAST(count(CASE WHEN l_returnflag IN ('A','N','R')
-        |      THEN 1 END) AS BIGINT) AS q4,
-        |    CAST(count(l_orderkey) AS BIGINT) AS p5,
-        |    CAST(count(DISTINCT l_orderkey) AS BIGINT) AS q5,
-        |    CAST(count(l_extendedprice) AS BIGINT) AS p7,
-        |    sum(CAST(CAST(round(CAST(l_extendedprice AS DOUBLE)
-        |      * 1000000.0) AS BIGINT) AS DECIMAL(38,0))) AS s7
-        |  FROM lineitem)
-        |SELECT CAST(0 AS BIGINT) AS check_id,
-        |  'complete(l_orderkey)' AS check_name, 'l_orderkey' AS col_name,
-        |  round(CASE WHEN n > 0
-        |    THEN CAST(p0 AS DOUBLE) / CAST(n AS DOUBLE) END, 6) AS observed,
-        |  CAST(1.0 AS DOUBLE) AS lo, CAST(NULL AS DOUBLE) AS hi,
-        |  coalesce(CASE WHEN n > 0
-        |    THEN CAST(p0 AS DOUBLE) / CAST(n AS DOUBLE) END >= 1.0,
-        |    false) AS passed
-        |FROM s
-        |UNION ALL SELECT CAST(1 AS BIGINT), 'between(l_quantity)',
-        |  'l_quantity',
-        |  round(CASE WHEN p1 > 0
-        |    THEN CAST(q1 AS DOUBLE) / CAST(p1 AS DOUBLE) END, 6),
-        |  CAST(1.0 AS DOUBLE), CAST(NULL AS DOUBLE),
-        |  coalesce(CASE WHEN p1 > 0
-        |    THEN CAST(q1 AS DOUBLE) / CAST(p1 AS DOUBLE) END >= 1.0, false)
-        |FROM s
-        |UNION ALL SELECT CAST(2 AS BIGINT), 'between(l_discount)',
-        |  'l_discount',
-        |  round(CASE WHEN p2 > 0
-        |    THEN CAST(q2 AS DOUBLE) / CAST(p2 AS DOUBLE) END, 6),
-        |  CAST(0.9 AS DOUBLE), CAST(NULL AS DOUBLE),
-        |  coalesce(CASE WHEN p2 > 0
-        |    THEN CAST(q2 AS DOUBLE) / CAST(p2 AS DOUBLE) END >= 0.9, false)
-        |FROM s
-        |UNION ALL SELECT CAST(3 AS BIGINT), 'matches(l_linestatus)',
-        |  'l_linestatus',
-        |  round(CASE WHEN p3 > 0
-        |    THEN CAST(q3 AS DOUBLE) / CAST(p3 AS DOUBLE) END, 6),
-        |  CAST(1.0 AS DOUBLE), CAST(NULL AS DOUBLE),
-        |  coalesce(CASE WHEN p3 > 0
-        |    THEN CAST(q3 AS DOUBLE) / CAST(p3 AS DOUBLE) END >= 1.0, false)
-        |FROM s
-        |UNION ALL SELECT CAST(4 AS BIGINT), 'in_set(l_returnflag)',
-        |  'l_returnflag',
-        |  round(CASE WHEN p4 > 0
-        |    THEN CAST(q4 AS DOUBLE) / CAST(p4 AS DOUBLE) END, 6),
-        |  CAST(1.0 AS DOUBLE), CAST(NULL AS DOUBLE),
-        |  coalesce(CASE WHEN p4 > 0
-        |    THEN CAST(q4 AS DOUBLE) / CAST(p4 AS DOUBLE) END >= 1.0, false)
-        |FROM s
-        |UNION ALL SELECT CAST(5 AS BIGINT), 'unique(l_orderkey)',
-        |  'l_orderkey',
-        |  round(CASE WHEN p5 > 0
-        |    THEN CAST(q5 AS DOUBLE) / CAST(p5 AS DOUBLE) END, 6),
-        |  CAST(1.0 AS DOUBLE), CAST(NULL AS DOUBLE),
-        |  coalesce(p5 > 0 AND q5 = p5, false)
-        |FROM s
-        |UNION ALL SELECT CAST(6 AS BIGINT), 'row_count',
-        |  CAST(NULL AS VARCHAR),
-        |  round(CAST(n AS DOUBLE), 6), CAST(1.0 AS DOUBLE),
-        |  CAST(10000000.0 AS DOUBLE),
-        |  coalesce(n >= 1 AND n <= 10000000, false)
-        |FROM s
-        |UNION ALL SELECT CAST(7 AS BIGINT), 'mean(l_extendedprice)',
-        |  'l_extendedprice',
-        |  round(CASE WHEN p7 > 0 THEN CAST(s7 AS DOUBLE)
-        |    / (1000000.0 * CAST(p7 AS DOUBLE)) END, 6),
-        |  CAST(20000.0 AS DOUBLE), CAST(60000.0 AS DOUBLE),
-        |  coalesce(CASE WHEN p7 > 0 THEN CAST(s7 AS DOUBLE)
-        |      / (1000000.0 * CAST(p7 AS DOUBLE)) END >= 20000.0
-        |    AND CASE WHEN p7 > 0 THEN CAST(s7 AS DOUBLE)
-        |      / (1000000.0 * CAST(p7 AS DOUBLE)) END <= 60000.0,
-        |    false)
-        |FROM s""".stripMargin,
-    // q306: row_number doc ranks, exact integer checkpoint buckets,
-    // first-occurrence bucket per term, micro-snapped log-log OLS
-    "q306_heaps_law" ->
-      """WITH ranked AS (
-        |  SELECT text, row_number() OVER (ORDER BY doc_id) AS r,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
-        |  FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL),
-        |meta AS (
-        |  SELECT d, least(8, d) AS cp
-        |  FROM (SELECT max(r) AS d FROM ranked)),
-        |b AS (
-        |  SELECT ranked.*, ((r * cp + d - 1) // d) AS j
-        |  FROM ranked, meta),
-        |pb AS (
-        |  SELECT j, CAST(count(*) AS BIGINT) AS docs,
-        |    CAST(sum(ntok) AS BIGINT) AS toks
-        |  FROM b GROUP BY 1),
-        |fb AS (
-        |  SELECT j, CAST(count(*) AS BIGINT) AS newterms FROM (
-        |    SELECT term, min(j) AS j FROM (
-        |      SELECT j, unnest(string_split(text, ' ')) AS term FROM b)
-        |    GROUP BY 1)
-        |  GROUP BY 1),
-        |pts AS (
-        |  SELECT pb.j AS ckpt,
-        |    CAST(sum(docs) OVER (ORDER BY pb.j) AS BIGINT) AS n_docs,
-        |    CAST(sum(toks) OVER (ORDER BY pb.j) AS BIGINT) AS n_tokens,
-        |    CAST(sum(coalesce(newterms, 0)) OVER (ORDER BY pb.j)
-        |      AS BIGINT) AS vocab
-        |  FROM pb LEFT JOIN fb ON pb.j = fb.j),
-        |xy AS (
-        |  SELECT
-        |    CAST(round(ln(CAST(n_tokens AS DOUBLE)) * 1000000.0)
-        |      AS BIGINT) AS x,
-        |    CAST(round(ln(CAST(vocab AS DOUBLE)) * 1000000.0)
-        |      AS BIGINT) AS y
-        |  FROM pts WHERE n_tokens > 0 AND vocab > 0),
-        |f AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |    CAST(sum(x * y) AS BIGINT) AS sxy,
-        |    CAST(sum(x * x) AS BIGINT) AS sxx
-        |  FROM xy),
-        |fit AS (
-        |  SELECT k,
-        |    CAST(k AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS num,
-        |    CAST(k AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS den,
-        |    CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-        |    CAST(k AS DOUBLE) AS kd
-        |  FROM f)
-        |SELECT ckpt, n_docs, n_tokens, vocab,
-        |  CASE WHEN k >= 2 AND den > 0 THEN round(num / den, 6) END AS beta,
-        |  CASE WHEN k >= 2 AND den > 0 THEN
-        |    round(exp((syd - (num / den) * sxd) / kd / 1000000.0), 6)
-        |  END AS k_coef
-        |FROM pts, fit""".stripMargin,
-    // q307: four (treated, post) cell partials as exact micro decimals,
-    // Welch-style SE across the cells, one mirrored expression tail
-    "q307_did" ->
-      """WITH b AS (
-        |  SELECT event_type AS g, (user_id % 2 = 0) AS tr,
-        |    (CAST(ts AS TIMESTAMP) >= TIMESTAMP '2024-02-01 00:00:00')
-        |      AS post,
-        |    CAST(CAST(round(CAST(value AS DOUBLE) * 1000000.0) AS BIGINT)
-        |      AS DECIMAL(38,0)) AS vm
-        |  FROM events
-        |  WHERE ts IS NOT NULL AND value IS NOT NULL
-        |    AND user_id IS NOT NULL),
-        |p AS (
-        |  SELECT g,
-        |    CAST(count(CASE WHEN tr AND post THEN 1 END) AS BIGINT) AS nt1,
-        |    sum(CASE WHEN tr AND post THEN vm END) AS st1,
-        |    sum(CASE WHEN tr AND post THEN vm * vm END) AS s2t1,
-        |    CAST(count(CASE WHEN tr AND NOT post THEN 1 END) AS BIGINT)
-        |      AS nt0,
-        |    sum(CASE WHEN tr AND NOT post THEN vm END) AS st0,
-        |    sum(CASE WHEN tr AND NOT post THEN vm * vm END) AS s2t0,
-        |    CAST(count(CASE WHEN NOT tr AND post THEN 1 END) AS BIGINT)
-        |      AS nc1,
-        |    sum(CASE WHEN NOT tr AND post THEN vm END) AS sc1,
-        |    sum(CASE WHEN NOT tr AND post THEN vm * vm END) AS s2c1,
-        |    CAST(count(CASE WHEN NOT tr AND NOT post THEN 1 END) AS BIGINT)
-        |      AS nc0,
-        |    sum(CASE WHEN NOT tr AND NOT post THEN vm END) AS sc0,
-        |    sum(CASE WHEN NOT tr AND NOT post THEN vm * vm END) AS s2c0
-        |  FROM b GROUP BY 1),
-        |e AS (
-        |  SELECT g, nt1, nt0, nc1, nc0,
-        |    CAST(st1 AS DOUBLE) / CAST(nt1 AS DOUBLE) / 1000000.0 AS mt1,
-        |    CAST(st0 AS DOUBLE) / CAST(nt0 AS DOUBLE) / 1000000.0 AS mt0,
-        |    CAST(sc1 AS DOUBLE) / CAST(nc1 AS DOUBLE) / 1000000.0 AS mc1,
-        |    CAST(sc0 AS DOUBLE) / CAST(nc0 AS DOUBLE) / 1000000.0 AS mc0,
-        |    (CAST(s2t1 AS DOUBLE) - CAST(st1 AS DOUBLE)
-        |      * CAST(st1 AS DOUBLE) / CAST(nt1 AS DOUBLE))
-        |      / (CAST(nt1 AS DOUBLE) - 1.0) / 1e12 AS vt1,
-        |    (CAST(s2t0 AS DOUBLE) - CAST(st0 AS DOUBLE)
-        |      * CAST(st0 AS DOUBLE) / CAST(nt0 AS DOUBLE))
-        |      / (CAST(nt0 AS DOUBLE) - 1.0) / 1e12 AS vt0,
-        |    (CAST(s2c1 AS DOUBLE) - CAST(sc1 AS DOUBLE)
-        |      * CAST(sc1 AS DOUBLE) / CAST(nc1 AS DOUBLE))
-        |      / (CAST(nc1 AS DOUBLE) - 1.0) / 1e12 AS vc1,
-        |    (CAST(s2c0 AS DOUBLE) - CAST(sc0 AS DOUBLE)
-        |      * CAST(sc0 AS DOUBLE) / CAST(nc0 AS DOUBLE))
-        |      / (CAST(nc0 AS DOUBLE) - 1.0) / 1e12 AS vc0
-        |  FROM p)
-        |SELECT g AS event_type, nt1 + nt0 + nc1 + nc0 AS n,
-        |  CASE WHEN nt0 > 0 THEN round(mt0, 6) END AS m_treat_pre,
-        |  CASE WHEN nt1 > 0 THEN round(mt1, 6) END AS m_treat_post,
-        |  CASE WHEN nc0 > 0 THEN round(mc0, 6) END AS m_ctrl_pre,
-        |  CASE WHEN nc1 > 0 THEN round(mc1, 6) END AS m_ctrl_post,
-        |  CASE WHEN nt1 > 0 AND nt0 > 0 AND nc1 > 0 AND nc0 > 0
-        |    THEN round((mt1 - mt0) - (mc1 - mc0), 6) END AS did,
-        |  CASE WHEN nt1 >= 2 AND nt0 >= 2 AND nc1 >= 2 AND nc0 >= 2
-        |      AND sqrt(vt1 / CAST(nt1 AS DOUBLE) + vt0 / CAST(nt0 AS DOUBLE)
-        |        + vc1 / CAST(nc1 AS DOUBLE) + vc0 / CAST(nc0 AS DOUBLE)) > 0
-        |    THEN round(sqrt(vt1 / CAST(nt1 AS DOUBLE)
-        |      + vt0 / CAST(nt0 AS DOUBLE) + vc1 / CAST(nc1 AS DOUBLE)
-        |      + vc0 / CAST(nc0 AS DOUBLE)), 6) END AS se,
-        |  CASE WHEN nt1 >= 2 AND nt0 >= 2 AND nc1 >= 2 AND nc0 >= 2
-        |      AND sqrt(vt1 / CAST(nt1 AS DOUBLE) + vt0 / CAST(nt0 AS DOUBLE)
-        |        + vc1 / CAST(nc1 AS DOUBLE) + vc0 / CAST(nc0 AS DOUBLE)) > 0
-        |    THEN round(((mt1 - mt0) - (mc1 - mc0))
-        |      / sqrt(vt1 / CAST(nt1 AS DOUBLE) + vt0 / CAST(nt0 AS DOUBLE)
-        |        + vc1 / CAST(nc1 AS DOUBLE) + vc0 / CAST(nc0 AS DOUBLE)), 6)
-        |  END AS z
-        |FROM e""".stripMargin,
-    // q308: the q289 GD replay (per-round 6dp weight snaps) + clipped
-    // 6dp propensities -> micro-integer weighted sums, one mirrored tail
-    "q308_ipw_ate" ->
-      """WITH base AS (
-        |  SELECT CASE WHEN c.c_mktsegment = 'AUTOMOBILE'
-        |      THEN 1.0 ELSE 0.0 END AS y,
-        |    CAST(o.o_totalprice AS DOUBLE) AS yout,
-        |    CAST(c.c_acctbal AS DOUBLE) AS x0
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE c.c_mktsegment IS NOT NULL AND c.c_acctbal IS NOT NULL
-        |    AND o.o_totalprice IS NOT NULL),
-        |st AS (SELECT round(avg(x0), 6) AS m0,
-        |    round(stddev_pop(x0), 6) AS s0 FROM base),
-        |z AS (SELECT y, yout, (x0 - m0) / s0 AS z0 FROM base, st),
-        |w1 AS (SELECT round(0 - 0.5 * avg(0.5 - y), 6) AS b,
-        |    round(0 - 0.5 * avg((0.5 - y) * z0), 6) AS wa FROM z),
-        |p2 AS (SELECT z.*,
-        |    1.0 / (1.0 + exp(-(w1.b + w1.wa * z0))) AS p,
-        |    w1.b AS pb, w1.wa AS pwa FROM z, w1),
-        |w2 AS (SELECT round(first(pb) - 0.5 * avg(p - y), 6) AS b,
-        |    round(first(pwa) - 0.5 * avg((p - y) * z0), 6) AS wa FROM p2),
-        |p3 AS (SELECT z.*,
-        |    1.0 / (1.0 + exp(-(w2.b + w2.wa * z0))) AS p,
-        |    w2.b AS pb, w2.wa AS pwa FROM z, w2),
-        |w3 AS (SELECT round(first(pb) - 0.5 * avg(p - y), 6) AS b,
-        |    round(first(pwa) - 0.5 * avg((p - y) * z0), 6) AS wa FROM p3),
-        |sel AS (SELECT z.y, z.yout, w3.b + w3.wa * z0 AS zf FROM z, w3),
-        |ww AS (SELECT y, yout,
-        |    round(CASE WHEN y = 1.0 THEN 1.0 / e
-        |      ELSE 1.0 / (1.0 - e) END, 6) AS w
-        |  FROM (SELECT y, yout,
-        |      round(least(greatest(1.0 / (1.0 + exp(-zf)), 0.05),
-        |        0.95), 6) AS e
-        |    FROM sel)),
-        |red AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(count(CASE WHEN y = 1.0 THEN 1 END) AS BIGINT) AS n_treat,
-        |    CAST(count(CASE WHEN y = 0.0 THEN 1 END) AS BIGINT) AS n_ctrl,
-        |    sum(CASE WHEN y = 1.0 THEN CAST(CAST(round(w * 1000000.0)
-        |      AS BIGINT) AS HUGEINT) END) AS wt1,
-        |    sum(CASE WHEN y = 1.0 THEN CAST(CAST(round(w * yout
-        |      * 1000000.0) AS BIGINT) AS HUGEINT) END) AS wy1,
-        |    sum(CASE WHEN y = 1.0 THEN CAST(CAST(round(w * w * 1000000.0)
-        |      AS BIGINT) AS HUGEINT) END) AS w21,
-        |    sum(CASE WHEN y = 0.0 THEN CAST(CAST(round(w * 1000000.0)
-        |      AS BIGINT) AS HUGEINT) END) AS wt0,
-        |    sum(CASE WHEN y = 0.0 THEN CAST(CAST(round(w * yout
-        |      * 1000000.0) AS BIGINT) AS HUGEINT) END) AS wy0,
-        |    sum(CASE WHEN y = 0.0 THEN CAST(CAST(round(w * w * 1000000.0)
-        |      AS BIGINT) AS HUGEINT) END) AS w20
-        |  FROM ww)
-        |SELECT n, n_treat, n_ctrl,
-        |  CASE WHEN n_treat > 0 THEN round(CAST(wt1 AS DOUBLE)
-        |    * CAST(wt1 AS DOUBLE) / CAST(w21 AS DOUBLE) / 1000000.0, 6)
-        |  END AS ess_treat,
-        |  CASE WHEN n_ctrl > 0 THEN round(CAST(wt0 AS DOUBLE)
-        |    * CAST(wt0 AS DOUBLE) / CAST(w20 AS DOUBLE) / 1000000.0, 6)
-        |  END AS ess_ctrl,
-        |  CASE WHEN n_treat > 0 THEN
-        |    round(CAST(wy1 AS DOUBLE) / CAST(wt1 AS DOUBLE), 6)
-        |  END AS mean_treat_w,
-        |  CASE WHEN n_ctrl > 0 THEN
-        |    round(CAST(wy0 AS DOUBLE) / CAST(wt0 AS DOUBLE), 6)
-        |  END AS mean_ctrl_w,
-        |  CASE WHEN n_treat > 0 AND n_ctrl > 0 THEN
-        |    round(CAST(wy1 AS DOUBLE) / CAST(wt1 AS DOUBLE)
-        |      - CAST(wy0 AS DOUBLE) / CAST(wt0 AS DOUBLE), 6)
-        |  END AS ate
-        |FROM red""".stripMargin,
-    // q309: exact pair-sum identities 2(m*Q - S^2) over HUGEINT micro
-    // values; the per-unit (m-1) division micro-snapped before the sum
-    "q309_krippendorff_interval" ->
-      """WITH v AS (
-        |  SELECT user_id AS item,
-        |    CAST(CAST(round(CAST(value AS DOUBLE) * 1000000.0) AS BIGINT)
-        |      AS HUGEINT) AS vm
-        |  FROM events WHERE value IS NOT NULL),
-        |per AS (
-        |  SELECT item, CAST(count(*) AS BIGINT) AS m,
-        |    sum(vm) AS s, sum(vm * vm) AS q
-        |  FROM v GROUP BY 1
-        |  HAVING count(*) >= 2),
-        |obs AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_items,
-        |    CAST(coalesce(sum(m), 0) AS BIGINT) AS n,
-        |    coalesce(sum(CAST(round(
-        |      CAST(CAST(m AS HUGEINT) * q - s * s AS DOUBLE) * 2.0 / 1e12
-        |        / (CAST(m AS DOUBLE) - 1.0) * 1000000.0)
-        |      AS HUGEINT)), 0) AS o,
-        |    sum(s) AS sg, sum(q) AS qg
-        |  FROM per)
-        |SELECT n_items, n AS n_ratings,
-        |  round(CAST(o AS DOUBLE) / 1000000.0 / CAST(n AS DOUBLE), 6)
-        |    AS d_o,
-        |  round(CAST(CAST(n AS HUGEINT) * qg - sg * sg AS DOUBLE) * 2.0
-        |    / 1e12 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)), 6)
-        |    AS d_e,
-        |  CASE WHEN CAST(CAST(n AS HUGEINT) * qg - sg * sg AS DOUBLE)
-        |      * 2.0 / 1e12 > 0 THEN
-        |    round(1.0 - (CAST(o AS DOUBLE) / 1000000.0
-        |        / CAST(n AS DOUBLE))
-        |      / (CAST(CAST(n AS HUGEINT) * qg - sg * sg AS DOUBLE) * 2.0
-        |        / 1e12 / (CAST(n AS DOUBLE)
-        |        * (CAST(n AS DOUBLE) - 1.0))), 6)
-        |  END AS alpha
-        |FROM obs
-        |WHERE n > 0""".stripMargin,
-    // q310: shared distinct-value grid, group-partitioned cumsums, exact
-    // integer cross-multiplied ECDF gaps, ONE division at the end
-    "q310_wasserstein_shift" ->
-      """WITH cells AS (
-        |  SELECT source AS g,
-        |    CAST(round(CAST(n_chars AS DOUBLE) * 1000000.0) AS BIGINT)
-        |      AS vm,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM documents WHERE n_chars IS NOT NULL GROUP BY 1, 2),
-        |grid AS (SELECT vm, CAST(sum(c) AS BIGINT) AS cg
-        |  FROM cells GROUP BY 1),
-        |grp AS (SELECT g, CAST(sum(c) AS BIGINT) AS ng
-        |  FROM cells GROUP BY 1),
-        |panel AS (
-        |  SELECT grp.g, grid.vm, grp.ng, grid.cg,
-        |    coalesce(cells.c, 0) AS cgrp
-        |  FROM grid CROSS JOIN grp
-        |  LEFT JOIN cells ON cells.g IS NOT DISTINCT FROM grp.g
-        |    AND cells.vm = grid.vm),
-        |w AS (
-        |  SELECT g, ng, vm,
-        |    sum(cgrp) OVER (PARTITION BY g ORDER BY vm) AS fg,
-        |    sum(cg) OVER (PARTITION BY g ORDER BY vm) AS f,
-        |    lead(vm) OVER (PARTITION BY g ORDER BY vm) - vm AS dx,
-        |    sum(cg) OVER (PARTITION BY g) AS n
-        |  FROM panel),
-        |red AS (
-        |  SELECT g, CAST(max(ng) AS BIGINT) AS n_group,
-        |    CAST(max(n) AS BIGINT) AS n_total,
-        |    coalesce(sum(abs(CAST(fg AS HUGEINT) * n
-        |      - CAST(f AS HUGEINT) * ng) * dx), 0) AS wsum
-        |  FROM w WHERE dx IS NOT NULL GROUP BY 1)
-        |SELECT g AS source, n_group, n_total,
-        |  round(CAST(wsum AS DOUBLE)
-        |    / (CAST(n_group AS DOUBLE) * CAST(n_total AS DOUBLE))
-        |    / 1000000.0, 6) AS w1
-        |FROM red""".stripMargin,
-    // q311: the q152 tape replayed, runs counted via lag over the same
-    // total order, Barton-David moments from exact integer sums
-    "q311_tape_mixing" ->
-      """WITH r0 AS (
-        |  SELECT doc_id, source, CAST(row_number() OVER (
-        |    PARTITION BY source
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT)
-        |    AS source_rank
-        |  FROM documents
-        |  WHERE source IN ('src0', 'src1', 'src2', 'src3')),
-        |tape AS (
-        |  SELECT doc_id, source,
-        |    source_rank / (CASE source WHEN 'src0' THEN 3.0
-        |      WHEN 'src1' THEN 1.5 WHEN 'src2' THEN 1.0
-        |      ELSE 0.5 END) AS sk
-        |  FROM r0),
-        |seq AS (
-        |  SELECT source,
-        |    lag(source) OVER (ORDER BY sk, doc_id) AS prev
-        |  FROM tape),
-        |brk AS (
-        |  SELECT CAST(count(CASE WHEN prev IS NOT NULL
-        |    AND prev IS DISTINCT FROM source THEN 1 END) AS BIGINT) AS b
-        |  FROM seq),
-        |m AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS k,
-        |    CAST(coalesce(sum(n), 0) AS BIGINT) AS nn,
-        |    CAST(coalesce(sum(n * n), 0) AS BIGINT) AS s2,
-        |    CAST(coalesce(sum(n * n * n), 0) AS BIGINT) AS s3
-        |  FROM (SELECT CAST(count(*) AS BIGINT) AS n
-        |    FROM tape GROUP BY source))
-        |SELECT nn AS n, k AS k_labels,
-        |  CASE WHEN nn > 0 THEN b + 1 END AS runs,
-        |  CASE WHEN nn >= 2 THEN
-        |    round(CAST(nn AS DOUBLE) + 1.0
-        |      - CAST(s2 AS DOUBLE) / CAST(nn AS DOUBLE), 6) END AS runs_exp,
-        |  CASE WHEN nn >= 2 THEN
-        |    round((CAST(s2 AS DOUBLE) * (CAST(s2 AS DOUBLE)
-        |        + CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) + 1.0))
-        |      - 2.0 * CAST(nn AS DOUBLE) * CAST(s3 AS DOUBLE)
-        |      - CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)
-        |        * CAST(nn AS DOUBLE))
-        |      / (CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)
-        |        * (CAST(nn AS DOUBLE) - 1.0)), 6) END AS runs_var,
-        |  CASE WHEN nn >= 2 AND
-        |    (CAST(s2 AS DOUBLE) * (CAST(s2 AS DOUBLE)
-        |        + CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) + 1.0))
-        |      - 2.0 * CAST(nn AS DOUBLE) * CAST(s3 AS DOUBLE)
-        |      - CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)
-        |        * CAST(nn AS DOUBLE))
-        |      / (CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)
-        |        * (CAST(nn AS DOUBLE) - 1.0)) > 0 THEN
-        |    round((CAST(b + 1 AS DOUBLE)
-        |      - (CAST(nn AS DOUBLE) + 1.0
-        |        - CAST(s2 AS DOUBLE) / CAST(nn AS DOUBLE)))
-        |      / sqrt((CAST(s2 AS DOUBLE) * (CAST(s2 AS DOUBLE)
-        |          + CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) + 1.0))
-        |        - 2.0 * CAST(nn AS DOUBLE) * CAST(s3 AS DOUBLE)
-        |        - CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)
-        |          * CAST(nn AS DOUBLE))
-        |        / (CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)
-        |          * (CAST(nn AS DOUBLE) - 1.0))), 6) END AS z
-        |FROM m, brk""".stripMargin,
-    // q312: same unrounded eff-n expression both sides; the (1.0-0.999)
-    // subtraction is written out so both engines share the exact double
-    "q312_class_weights" ->
-      """WITH c AS (
-        |  SELECT label, CAST(count(*) AS BIGINT) AS n
-        |  FROM embeddings GROUP BY 1),
-        |r AS (
-        |  SELECT label, n,
-        |    round((1.0 - power(0.999, CAST(n AS DOUBLE)))
-        |      / (1.0 - 0.999), 6) AS eff_n,
-        |    CAST(round(1.0 / ((1.0 - power(0.999, CAST(n AS DOUBLE)))
-        |      / (1.0 - 0.999)) * 1000000.0) AS BIGINT) AS wm
-        |  FROM c),
-        |t AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS k,
-        |    CAST(coalesce(sum(wm), 0) AS BIGINT) AS sw
-        |  FROM r)
-        |SELECT label, n, eff_n,
-        |  round(CAST(wm AS DOUBLE) * CAST(k AS DOUBLE)
-        |    / CAST(sw AS DOUBLE), 6) AS weight
-        |FROM r, t""".stripMargin,
-    // q313: the q289 GD replay with ALL THREE weight snapshots in scope;
-    // per-row confidence folds and bucket cuts mirrored expression-for-
-    // expression, bucket means over micro-integer sums
-    "q313_data_cartography" ->
-      """WITH base AS (
-        |  SELECT CASE WHEN source = 'src1' THEN 1.0 ELSE 0.0 END AS y,
-        |    CAST(n_chars AS DOUBLE) AS x0,
-        |    CAST(len(string_split(text, ' ')) AS DOUBLE) AS x1
-        |  FROM documents WHERE source IN ('src0', 'src1')
-        |    AND n_chars IS NOT NULL AND text IS NOT NULL),
-        |st AS (SELECT round(avg(x0), 6) AS m0,
-        |    round(stddev_pop(x0), 6) AS s0,
-        |    round(avg(x1), 6) AS m1, round(stddev_pop(x1), 6) AS s1
-        |  FROM base),
-        |z AS (SELECT y, (x0 - m0) / s0 AS z0, (x1 - m1) / s1 AS z1
-        |  FROM base, st),
-        |w1 AS (SELECT round(0 - 0.5 * avg(0.5 - y), 6) AS b,
-        |    round(0 - 0.5 * avg((0.5 - y) * z0), 6) AS wa,
-        |    round(0 - 0.5 * avg((0.5 - y) * z1), 6) AS wb FROM z),
-        |p2 AS (SELECT z.*,
-        |    1.0 / (1.0 + exp(-(w1.b + w1.wa * z0 + w1.wb * z1))) AS p,
-        |    w1.b AS pb, w1.wa AS pwa, w1.wb AS pwb FROM z, w1),
-        |w2 AS (SELECT round(first(pb) - 0.5 * avg(p - y), 6) AS b,
-        |    round(first(pwa) - 0.5 * avg((p - y) * z0), 6) AS wa,
-        |    round(first(pwb) - 0.5 * avg((p - y) * z1), 6) AS wb FROM p2),
-        |p3 AS (SELECT z.*,
-        |    1.0 / (1.0 + exp(-(w2.b + w2.wa * z0 + w2.wb * z1))) AS p,
-        |    w2.b AS pb, w2.wa AS pwa, w2.wb AS pwb FROM z, w2),
-        |w3 AS (SELECT round(first(pb) - 0.5 * avg(p - y), 6) AS b,
-        |    round(first(pwa) - 0.5 * avg((p - y) * z0), 6) AS wa,
-        |    round(first(pwb) - 0.5 * avg((p - y) * z1), 6) AS wb FROM p3),
-        |cr AS (SELECT z.y,
-        |    1.0 / (1.0 + exp(-(w1.b + w1.wa * z0 + w1.wb * z1))) AS q1,
-        |    1.0 / (1.0 + exp(-(w2.b + w2.wa * z0 + w2.wb * z1))) AS q2,
-        |    1.0 / (1.0 + exp(-(w3.b + w3.wa * z0 + w3.wb * z1))) AS q3
-        |  FROM z, w1, w2, w3),
-        |cc AS (SELECT
-        |    CASE WHEN y = 1.0 THEN q1 ELSE 1.0 - q1 END AS c1,
-        |    CASE WHEN y = 1.0 THEN q2 ELSE 1.0 - q2 END AS c2,
-        |    CASE WHEN y = 1.0 THEN q3 ELSE 1.0 - q3 END AS c3
-        |  FROM cr),
-        |mm AS (SELECT c1, c2, c3,
-        |    (0.0 + c1 + c2 + c3) / 3.0 AS m FROM cc),
-        |sn AS (SELECT
-        |    round(m, 6) AS conf6,
-        |    round(sqrt((0.0 + (c1 - m) * (c1 - m) + (c2 - m) * (c2 - m)
-        |      + (c3 - m) * (c3 - m)) / 3.0), 6) AS var6
-        |  FROM mm),
-        |bk0 AS (SELECT
-        |    CAST(round(conf6 * 1000000.0) AS BIGINT) AS cm,
-        |    CAST(round(var6 * 1000000.0) AS BIGINT) AS vm
-        |  FROM sn),
-        |mc AS (SELECT min(cm) AS medc FROM (
-        |    SELECT cm, sum(n) OVER (ORDER BY cm) AS cum,
-        |      sum(n) OVER () AS tot
-        |    FROM (SELECT cm, CAST(count(*) AS BIGINT) AS n
-        |      FROM bk0 GROUP BY 1))
-        |  WHERE cum * 2 >= tot),
-        |mv AS (SELECT min(vm) AS medv FROM (
-        |    SELECT vm, sum(n) OVER (ORDER BY vm) AS cum,
-        |      sum(n) OVER () AS tot
-        |    FROM (SELECT vm, CAST(count(*) AS BIGINT) AS n
-        |      FROM bk0 GROUP BY 1))
-        |  WHERE cum * 2 >= tot),
-        |bk AS (SELECT
-        |    CASE WHEN vm >= medv THEN 'ambiguous'
-        |      WHEN cm >= medc THEN 'easy_to_learn'
-        |      ELSE 'hard_to_learn' END AS bucket, cm, vm
-        |  FROM bk0, mc, mv)
-        |SELECT bucket, CAST(count(*) AS BIGINT) AS n,
-        |  round(CAST(sum(cm) AS DOUBLE)
-        |    / (CAST(count(*) AS DOUBLE) * 1000000.0), 6) AS mean_conf,
-        |  round(CAST(sum(vm) AS DOUBLE)
-        |    / (CAST(count(*) AS DOUBLE) * 1000000.0), 6) AS mean_var
-        |FROM bk GROUP BY 1""".stripMargin,
-    // q314: the q235 centroid pipeline replayed once per md5 training
-    // fraction (generated CTE chain), then the q306 micro-snapped
-    // log-log OLS and the 10x extrapolation, mirrored term-for-term
-    "q314_learning_curve" -> {
-      val hex = "0123456789abcdef"
-      def maskSql(f: Int): String =
-        if (f >= 16) ""
-        else s"""
-           |    AND substring(md5(CAST(vec_id AS VARCHAR)), 1, 1) < '${hex.charAt(f)}'""".stripMargin
-      def perFrac(f: Int): String =
-        s"""tr$f AS (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-           |    unnest(generate_series(0, len(embedding) - 1)) AS dim
-           |  FROM embeddings
-           |  WHERE embedding IS NOT NULL AND label IS NOT NULL
-           |    AND vec_id % 5 <> 0${maskSql(f)}),
-           |c$f AS (SELECT label AS cent_label, dim,
-           |    CAST(CAST(round(avg(v), 6) AS FLOAT) AS DOUBLE) AS cv
-           |  FROM tr$f GROUP BY 1, 2),
-           |cents$f AS (SELECT cent_label, list(cv ORDER BY dim) AS cvec
-           |  FROM c$f GROUP BY 1),
-           |cn$f AS (SELECT cent_label, cvec,
-           |    sqrt(list_reduce(list_prepend(0.0,
-           |      list_transform(cvec, x -> x * x)), (a, b) -> a + b))
-           |      AS cnorm
-           |  FROM cents$f),
-           |sim$f AS (SELECT t.vec_id, t.label, c.cent_label,
-           |    round(list_reduce(list_prepend(0.0,
-           |        list_transform(generate_series(1, len(t.e)),
-           |          k -> t.e[k] * c.cvec[k])), (a, b) -> a + b)
-           |      / (t.enorm * c.cnorm), 6) AS csim
-           |  FROM tn t CROSS JOIN cn$f c),
-           |r$f AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-           |    ORDER BY csim DESC, cent_label ASC) AS rn FROM sim$f),
-           |a$f AS (SELECT
-           |    CAST(count(CASE WHEN label = cent_label THEN 1 END)
-           |      AS BIGINT) AS diag,
-           |    CAST(count(*) AS BIGINT) AS tot
-           |  FROM r$f WHERE rn = 1),
-           |t$f AS (SELECT CAST(count(*) AS BIGINT) AS n_train
-           |  FROM embeddings
-           |  WHERE vec_id % 5 <> 0 AND embedding IS NOT NULL
-           |    AND label IS NOT NULL${maskSql(f)})""".stripMargin
-      def pointSel(f: Int): String =
-        s"""SELECT CAST($f AS BIGINT) AS frac_16ths, t$f.n_train,
-           |  CASE WHEN a$f.tot > 0 THEN CAST(a$f.diag AS DOUBLE)
-           |    / CAST(a$f.tot AS DOUBLE) END AS acc
-           |FROM a$f, t$f""".stripMargin
-      val fracs = Seq(4, 8, 12, 16)
-      s"""WITH te AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
-         |  FROM embeddings
-         |  WHERE embedding IS NOT NULL AND label IS NOT NULL
-         |    AND vec_id % 5 = 0),
-         |tn AS (SELECT vec_id, label, e,
-         |    sqrt(list_reduce(list_prepend(0.0,
-         |      list_transform(e, x -> x * x)), (a, b) -> a + b)) AS enorm
-         |  FROM te),
-         |${fracs.map(perFrac).mkString(",\n")},
-         |pts AS (${fracs.map(pointSel).mkString("\nUNION ALL\n")}),
-         |pe AS (SELECT frac_16ths, n_train, acc, 1.0 - acc AS err
-         |  FROM pts),
-         |xy AS (SELECT
-         |    CAST(round(ln(CAST(n_train AS DOUBLE)) * 1000000.0)
-         |      AS BIGINT) AS x,
-         |    CAST(round(ln(err) * 1000000.0) AS BIGINT) AS y, n_train
-         |  FROM pe WHERE n_train > 0 AND err > 0),
-         |f AS (SELECT CAST(count(*) AS BIGINT) AS k,
-         |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         |    CAST(sum(x * y) AS BIGINT) AS sxy,
-         |    CAST(sum(x * x) AS BIGINT) AS sxx,
-         |    CAST(max(n_train) AS BIGINT) AS nfull
-         |  FROM xy),
-         |fit AS (SELECT k,
-         |    CAST(k AS DOUBLE) * CAST(sxy AS DOUBLE)
-         |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS num,
-         |    CAST(k AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS den,
-         |    CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-         |    CAST(k AS DOUBLE) AS kd, nfull
-         |  FROM f)
-         |SELECT pe.frac_16ths, pe.n_train, round(pe.acc, 6) AS accuracy,
-         |  round(pe.err, 6) AS err,
-         |  CASE WHEN k >= 2 AND den > 0
-         |    THEN round(-(num / den), 6) END AS decay_b,
-         |  CASE WHEN k >= 2 AND den > 0 THEN
-         |    round(exp((syd - (num / den) * sxd) / kd / 1000000.0
-         |      + (num / den)
-         |        * ln(10.0 * CAST(nfull AS DOUBLE))), 6) END AS err_at_10x
-         |FROM pe, fit""".stripMargin
-    },
-    // q315: exact lower order statistics off both cumulative histograms,
-    // all-integer rank comparisons, values back to units at the end
-    "q315_quantile_mapping" ->
-      """WITH cells AS (
-        |  SELECT source AS g,
-        |    CAST(round(CAST(n_chars AS DOUBLE) * 1000000.0) AS BIGINT)
-        |      AS vm,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM documents WHERE n_chars IS NOT NULL GROUP BY 1, 2),
-        |qs AS (SELECT unnest(generate_series(1, 9)) AS q),
-        |sh AS (
-        |  SELECT g, vm, sum(c) OVER (PARTITION BY g ORDER BY vm) AS cum,
-        |    sum(c) OVER (PARTITION BY g) AS n
-        |  FROM cells),
-        |src AS (
-        |  SELECT g, q, CAST(max(n) AS BIGINT) AS n_group,
-        |    min(vm) AS sv
-        |  FROM sh CROSS JOIN qs WHERE cum * 10 >= q * n GROUP BY 1, 2),
-        |ch AS (
-        |  SELECT vm, sum(cc) OVER (ORDER BY vm) AS cum,
-        |    sum(cc) OVER () AS n
-        |  FROM (SELECT vm, sum(c) AS cc FROM cells GROUP BY 1)),
-        |corp AS (
-        |  SELECT q, min(vm) AS cv
-        |  FROM ch CROSS JOIN qs WHERE cum * 10 >= q * n GROUP BY 1)
-        |SELECT src.g AS source, CAST(src.q AS BIGINT) AS q, src.n_group,
-        |  round(CAST(sv AS DOUBLE) / 1000000.0, 6) AS src_value,
-        |  round(CAST(cv AS DOUBLE) / 1000000.0, 6) AS corpus_value,
-        |  round(CAST(sv - cv AS DOUBLE) / 1000000.0, 6) AS shift
-        |FROM src JOIN corp USING (q)""".stripMargin,
-    // q316: micro-snapped relative frequencies, exact per-term panel
-    // moments in term windows, |z| micro-snapped before the group mean
-    "q316_burrows_delta" ->
-      """WITH toks AS (
-        |  SELECT source AS g, unnest(string_split(text, ' ')) AS term
-        |  FROM documents WHERE text IS NOT NULL),
-        |gt AS (SELECT g, term, CAST(count(*) AS BIGINT) AS c
-        |  FROM toks GROUP BY 1, 2),
-        |vocab AS (SELECT term FROM (
-        |    SELECT term, sum(c) AS tf FROM gt GROUP BY 1)
-        |  ORDER BY tf DESC, term LIMIT 50),
-        |grp AS (SELECT g, CAST(sum(c) AS BIGINT) AS ntok
-        |  FROM gt GROUP BY 1),
-        |panel AS (
-        |  SELECT grp.g, vocab.term, grp.ntok, coalesce(gt.c, 0) AS c
-        |  FROM grp CROSS JOIN vocab
-        |  LEFT JOIN gt ON gt.g IS NOT DISTINCT FROM grp.g
-        |    AND gt.term = vocab.term),
-        |fmp AS (
-        |  SELECT g, term,
-        |    CAST(round(CAST(c AS DOUBLE) / CAST(ntok AS DOUBLE)
-        |      * 1000000.0) AS BIGINT) AS fm
-        |  FROM panel),
-        |st AS (
-        |  SELECT g, term, fm,
-        |    CAST(count(*) OVER (PARTITION BY term) AS BIGINT) AS k,
-        |    CAST(sum(fm) OVER (PARTITION BY term) AS BIGINT) AS sf,
-        |    CAST(sum(fm * fm) OVER (PARTITION BY term) AS BIGINT) AS sf2
-        |  FROM fmp),
-        |zz AS (
-        |  SELECT g,
-        |    CAST(round(abs((CAST(fm AS DOUBLE)
-        |        - CAST(sf AS DOUBLE) / CAST(k AS DOUBLE))
-        |      / sqrt(CAST(sf2 AS DOUBLE) / CAST(k AS DOUBLE)
-        |        - (CAST(sf AS DOUBLE) / CAST(k AS DOUBLE))
-        |          * (CAST(sf AS DOUBLE) / CAST(k AS DOUBLE))))
-        |      * 1000000.0) AS BIGINT) AS zm
-        |  FROM st
-        |  WHERE CAST(sf2 AS DOUBLE) * CAST(k AS DOUBLE)
-        |    > CAST(sf AS DOUBLE) * CAST(sf AS DOUBLE))
-        |SELECT g AS source, CAST(count(*) AS BIGINT) AS n_terms,
-        |  round(CAST(sum(zm) AS DOUBLE)
-        |    / (CAST(count(*) AS DOUBLE) * 1000000.0), 6) AS delta
-        |FROM zz GROUP BY 1""".stripMargin,
-    // q317: the q235 centroid/cosine replay extended with the confident
-    // joint — the threshold clear test cross-multiplies in HUGEINT, so
-    // the boundary is integer-exact on both engines
-    "q317_label_noise" ->
-      """WITH tr AS (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-        |    unnest(generate_series(0, len(embedding) - 1)) AS dim
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL AND label IS NOT NULL
-        |    AND vec_id % 5 <> 0),
-        |c AS (SELECT label AS cent_label, dim,
-        |    CAST(CAST(round(avg(v), 6) AS FLOAT) AS DOUBLE) AS cv
-        |  FROM tr GROUP BY 1, 2),
-        |cents AS (SELECT cent_label, list(cv ORDER BY dim) AS cvec
-        |  FROM c GROUP BY 1),
-        |cn AS (SELECT cent_label, cvec,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(cvec, x -> x * x)), (a, b) -> a + b)) AS cnorm
-        |  FROM cents),
-        |te AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL AND label IS NOT NULL
-        |    AND vec_id % 5 = 0),
-        |tv AS (SELECT vec_id, label, e,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(e, x -> x * x)), (a, b) -> a + b)) AS enorm
-        |  FROM te),
-        |sim AS (SELECT t.vec_id, t.label AS given_label, c.cent_label,
-        |    CAST(round(round(list_reduce(list_prepend(0.0,
-        |        list_transform(generate_series(1, len(t.e)),
-        |          k -> t.e[k] * c.cvec[k])), (a, b) -> a + b)
-        |      / (t.enorm * c.cnorm), 6) * 1000000.0) AS BIGINT) AS sm
-        |  FROM tv t CROSS JOIN cn c),
-        |thr AS (SELECT cent_label AS t_label, CAST(sum(sm) AS HUGEINT) AS tsum,
-        |    CAST(count(*) AS HUGEINT) AS tcnt
-        |  FROM sim WHERE given_label = cent_label GROUP BY 1),
-        |pass AS (SELECT s.vec_id, s.given_label, s.cent_label,
-        |    row_number() OVER (PARTITION BY s.vec_id
-        |      ORDER BY s.sm DESC, s.cent_label ASC) AS rn
-        |  FROM sim s JOIN thr t ON s.cent_label = t.t_label
-        |  WHERE CAST(s.sm AS HUGEINT) * t.tcnt >= t.tsum),
-        |joint AS (SELECT given_label, cent_label AS suspected_label,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM pass WHERE rn = 1 GROUP BY 1, 2),
-        |tot AS (SELECT given_label,
-        |    CAST(count(DISTINCT vec_id) AS BIGINT) AS tot
-        |  FROM sim GROUP BY 1),
-        |conf AS (SELECT given_label, CAST(sum(n) AS BIGINT) AS c
-        |  FROM joint GROUP BY 1)
-        |SELECT given_label, suspected_label, n,
-        |  round(CAST(n AS DOUBLE)
-        |    / sum(n) OVER (PARTITION BY given_label), 6) AS frac,
-        |  given_label <> suspected_label AS flagged
-        |FROM joint
-        |UNION ALL
-        |SELECT t.given_label, NULL AS suspected_label,
-        |  t.tot - coalesce(c.c, 0) AS n, NULL AS frac, false AS flagged
-        |FROM tot t LEFT JOIN conf c USING (given_label)
-        |WHERE t.tot - coalesce(c.c, 0) > 0""".stripMargin,
-    // q318: the md5 block/slot draw chain replayed; the A-side cut
-    // cross-multiplies u·N < n_a·2³² in HUGEINT, each diff snaps to a
-    // micro-LONG before the tail count
-    "q318_permutation_test" -> {
-      val reps = 200
-      val blocks = (reps + 3) / 4
-      val nibSum = (1 to 8).map(k =>
-        s"(strpos('0123456789abcdef', substr(h, 8 * slot + $k, 1)) - 1) " +
-          s"* ${math.pow(16, 8 - k).toLong}").mkString(" + ")
-      s"""WITH base AS (
-         |  SELECT CAST(event_id AS VARCHAR) AS id,
-         |    CASE WHEN ${md5ModSql("user_id", 2)} = 0 THEN 'a' ELSE 'b' END
-         |      AS var,
-         |    CAST(round(CAST(value AS DOUBLE) * 1000000.0) AS BIGINT) AS vm
-         |  FROM events WHERE event_id IS NOT NULL AND value IS NOT NULL),
-         |obs AS (SELECT
-         |    CAST(count(CASE WHEN var = 'a' THEN 1 END) AS BIGINT) AS n_a,
-         |    CAST(count(CASE WHEN var = 'b' THEN 1 END) AS BIGINT) AS n_b,
-         |    CAST(sum(CASE WHEN var = 'a' THEN vm END) AS BIGINT) AS sa,
-         |    CAST(sum(CASE WHEN var = 'b' THEN vm END) AS BIGINT) AS sb
-         |  FROM base),
-         |blks AS (SELECT unnest(generate_series(0, ${blocks - 1})) AS blk),
-         |slots AS (SELECT unnest(generate_series(0, 3)) AS slot),
-         |draws AS (SELECT blk * 4 + slot AS j, slot, b.vm,
-         |    md5('perm|' || blk || '|' || b.id) AS h
-         |  FROM base b CROSS JOIN blks CROSS JOIN slots
-         |  WHERE blk * 4 + slot < $reps),
-         |cut AS (SELECT CAST((aa - aa % nn) // nn
-         |      + CASE WHEN aa % nn <> 0 THEN 1 ELSE 0 END AS BIGINT) AS cut
-         |  FROM (SELECT CAST(n_a AS HUGEINT) * 4294967296 AS aa,
-         |      CAST(n_a + n_b AS HUGEINT) AS nn FROM obs)),
-         |assigned AS (SELECT j, vm,
-         |    CAST($nibSum AS BIGINT) < c.cut AS is_a
-         |  FROM draws CROSS JOIN cut c),
-         |rep AS (SELECT j,
-         |    count(CASE WHEN is_a THEN 1 END) AS pna,
-         |    CAST(sum(CASE WHEN is_a THEN vm END) AS BIGINT) AS psa,
-         |    count(CASE WHEN NOT is_a THEN 1 END) AS pnb,
-         |    CAST(sum(CASE WHEN NOT is_a THEN vm END) AS BIGINT) AS psb
-         |  FROM assigned GROUP BY 1),
-         |nulld AS (SELECT CAST(round(CAST(psa AS DOUBLE) / pna
-         |      - CAST(psb AS DOUBLE) / pnb) AS BIGINT) AS dm
-         |  FROM rep WHERE pna > 0 AND pnb > 0),
-         |od AS (SELECT n_a, n_b,
-         |    CAST(round(CAST(sa AS DOUBLE) / n_a
-         |      - CAST(sb AS DOUBLE) / n_b) AS BIGINT) AS dmo
-         |  FROM obs),
-         |fin AS (SELECT od.n_a, od.n_b,
-         |    round(CAST(od.dmo AS DOUBLE) / 1000000.0, 6) AS diff,
-         |    CAST(count(*) AS BIGINT) AS reps,
-         |    round((count(CASE WHEN abs(dm) >= abs(dmo) THEN 1 END) + 1.0)
-         |      / (count(*) + 1.0), 6) AS p_value
-         |  FROM nulld CROSS JOIN od GROUP BY 1, 2, 3)
-         |SELECT n_a, n_b, diff, reps, p_value, p_value <= 0.05 AS significant
-         |FROM fin""".stripMargin
-    },
-    // q319: cumulative exact micro partials over the day calendar, lnΛ
-    // snapped to a micro-LONG, the always-valid p as exp(−running max)
-    "q319_msprt" -> {
-      val tau2 = 0.1 * 0.1
-      s"""WITH e AS (
-         |  SELECT CAST(ts AS DATE) AS day,
-         |    CASE WHEN ${md5ModSql("user_id", 2)} = 0 THEN 'a' ELSE 'b' END
-         |      AS var,
-         |    CAST(round(CAST(value AS DOUBLE) * 1000000.0) AS BIGINT) AS vm
-         |  FROM events WHERE value IS NOT NULL),
-         |daily AS (SELECT day, var, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(vm) AS BIGINT) AS s,
-         |    CAST(sum(CAST(vm AS HUGEINT) * vm) AS HUGEINT) AS s2
-         |  FROM e GROUP BY 1, 2),
-         |byday AS (SELECT day,
-         |    coalesce(max(CASE WHEN var = 'a' THEN n END), 0) AS dna,
-         |    coalesce(max(CASE WHEN var = 'b' THEN n END), 0) AS dnb,
-         |    coalesce(max(CASE WHEN var = 'a' THEN s END), 0) AS dsa,
-         |    coalesce(max(CASE WHEN var = 'b' THEN s END), 0) AS dsb,
-         |    coalesce(max(CASE WHEN var = 'a' THEN s2 END),
-         |      CAST(0 AS HUGEINT)) AS dqa,
-         |    coalesce(max(CASE WHEN var = 'b' THEN s2 END),
-         |      CAST(0 AS HUGEINT)) AS dqb
-         |  FROM daily GROUP BY 1),
-         |cum AS (SELECT day,
-         |    CAST(sum(dna) OVER w AS BIGINT) AS n_a,
-         |    CAST(sum(dnb) OVER w AS BIGINT) AS n_b,
-         |    CAST(sum(dsa) OVER w AS BIGINT) AS sa,
-         |    CAST(sum(dsb) OVER w AS BIGINT) AS sb,
-         |    CAST(sum(dqa) OVER w AS HUGEINT) AS qa,
-         |    CAST(sum(dqb) OVER w AS HUGEINT) AS qb
-         |  FROM byday
-         |  WINDOW w AS (ORDER BY day
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         |st AS (SELECT day, n_a, n_b,
-         |    CAST(sa AS DOUBLE) / (CAST(n_a AS DOUBLE) * 1e6) AS ma,
-         |    CAST(sb AS DOUBLE) / (CAST(n_b AS DOUBLE) * 1e6) AS mb,
-         |    CAST(qa AS DOUBLE) / 1e12 AS qad,
-         |    CAST(qb AS DOUBLE) / 1e12 AS qbd
-         |  FROM cum),
-         |lam AS (SELECT day, n_a, n_b, ma, mb,
-         |    (qad - n_a * ma * ma + qbd - n_b * mb * mb)
-         |      / (n_a + n_b - 2.0) AS sig2
-         |  FROM st),
-         |ln1 AS (SELECT day, n_a, n_b, ma, mb, sig2,
-         |    sig2 * (1.0 / n_a + 1.0 / n_b) AS vn,
-         |    n_a >= 2 AND n_b >= 2 AND sig2 > 0 AS ok
-         |  FROM lam),
-         |ln2 AS (SELECT day, n_a, n_b, ma, mb, ok,
-         |    CASE WHEN ok THEN CAST(round(
-         |      (0.5 * ln(vn / (vn + CAST($tau2 AS DOUBLE)))
-         |        + (ma - mb) * (ma - mb) * CAST($tau2 AS DOUBLE)
-         |          / (2.0 * vn * (vn + CAST($tau2 AS DOUBLE))))
-         |      * 1000000.0) AS BIGINT) END AS lnm
-         |  FROM ln1),
-         |mx AS (SELECT *, max(lnm) OVER (ORDER BY day
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_max
-         |  FROM ln2)
-         |SELECT day, n_a, n_b,
-         |  CASE WHEN ok THEN round(ma - mb, 6) END AS diff,
-         |  CAST(lnm AS DOUBLE) / 1000000.0 AS ln_lambda,
-         |  CASE WHEN run_max IS NOT NULL THEN round(least(1.0,
-         |    exp(-CAST(run_max AS DOUBLE) / 1e6)), 6) END AS p_always_valid,
-         |  coalesce(CASE WHEN run_max IS NOT NULL THEN round(least(1.0,
-         |    exp(-CAST(run_max AS DOUBLE) / 1e6)), 6) <= 0.05 END, false)
-         |    AS significant
-         |FROM mx""".stripMargin
-    },
-    // q320: q119's entropy replay feeds the second ranking; the p^d/d
-    // terms snap to micro-LONGs per term, suffix-summed into c(m)
-    "q320_rbo" -> {
-      val k = 50
-      val p = 0.9
-      val coef = (1.0 - p) / p
-      s"""WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS c
-         |  FROM documents WHERE text IS NOT NULL),
-         |cc AS (SELECT doc_id, c, count(*) AS n FROM ch GROUP BY 1, 2),
-         |tot AS (SELECT doc_id, sum(n) AS tn FROM cc GROUP BY 1),
-         |ent AS (SELECT cc.doc_id,
-         |    round(-sum((CAST(n AS DOUBLE) / tn)
-         |      * log2(CAST(n AS DOUBLE) / tn)), 6) AS entropy
-         |  FROM cc JOIN tot USING (doc_id) GROUP BY cc.doc_id),
-         |base AS (SELECT d.source AS g, d.doc_id AS id,
-         |    CAST(round(CAST(d.n_chars AS DOUBLE) * 1000000.0) AS BIGINT)
-         |      AS am,
-         |    CAST(round(ent.entropy * 1000000.0) AS BIGINT) AS bm
-         |  FROM documents d JOIN ent ON d.doc_id = ent.doc_id
-         |  WHERE d.n_chars IS NOT NULL AND d.doc_id IS NOT NULL),
-         |rk AS (SELECT g, id, am, bm,
-         |    row_number() OVER (PARTITION BY g ORDER BY am DESC, id ASC)
-         |      AS ra,
-         |    row_number() OVER (PARTITION BY g ORDER BY bm DESC, id ASC)
-         |      AS rb
-         |  FROM base),
-         |terms AS (SELECT d,
-         |    CAST(round(pow(CAST($p AS DOUBLE), d) / d * 1000000.0)
-         |      AS BIGINT) AS t
-         |  FROM (SELECT unnest(generate_series(1, $k)) AS d)),
-         |coefs AS (SELECT d AS m, CAST(sum(t) OVER (ORDER BY d DESC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |      AS c
-         |  FROM terms),
-         |common AS (SELECT rk.g, coefs.c
-         |  FROM rk JOIN coefs ON greatest(rk.ra, rk.rb) = coefs.m
-         |  WHERE rk.ra <= $k AND rk.rb <= $k),
-         |agg AS (SELECT g, CAST(count(*) AS BIGINT) AS n_common,
-         |    CAST(sum(c) AS BIGINT) AS csum FROM common GROUP BY 1),
-         |items AS (SELECT g, CAST(count(*) AS BIGINT) AS n_items
-         |  FROM base GROUP BY 1)
-         |SELECT items.g AS source, items.n_items,
-         |  coalesce(agg.n_common, 0) AS n_common,
-         |  round(CAST(coalesce(agg.n_common, 0) AS DOUBLE) / $k, 6)
-         |    AS overlap_at_k,
-         |  round(CAST($coef AS DOUBLE)
-         |    * CAST(coalesce(agg.csum, 0) AS DOUBLE) / 1000000.0, 6) AS rbo
-         |FROM items LEFT JOIN agg ON items.g IS NOT DISTINCT FROM agg.g"""
-        .stripMargin
-    },
-    // q321: the q173 bins replayed; every block mean is one division of
-    // exact integer prefix-sum differences, so the minimax folds over
-    // identical IEEE doubles on both engines
-    "q321_isotonic_calibration" ->
-      """WITH e AS (SELECT least(1.0, CAST(value AS DOUBLE) / 250.0) AS score,
-        |    event_type = 'purchase' AS conv FROM events
-        |  WHERE value IS NOT NULL),
-        |b AS (SELECT greatest(0, least(9,
-        |      CAST(floor(score * 10) AS BIGINT))) AS bin,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN coalesce(conv, false) THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS pos,
-        |    round(avg(score), 6) AS mean_score
-        |  FROM e GROUP BY 1),
-        |c AS (SELECT bin, n, pos, mean_score,
-        |    CAST(sum(n) OVER w AS BIGINT) AS cn,
-        |    CAST(sum(pos) OVER w AS BIGINT) AS cp
-        |  FROM b WINDOW w AS (ORDER BY bin
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |pm AS (SELECT j.bin AS jb, kk.bin AS kb,
-        |    CAST(kk.cp - (j.cp - j.pos) AS DOUBLE)
-        |      / CAST(kk.cn - (j.cn - j.n) AS DOUBLE) AS m
-        |  FROM c j JOIN c kk ON j.bin <= kk.bin),
-        |innr AS (SELECT i.bin AS ib, pm.jb, min(pm.m) AS minm
-        |  FROM c i JOIN pm ON pm.jb <= i.bin AND pm.kb >= i.bin
-        |  GROUP BY 1, 2),
-        |iso AS (SELECT ib AS bin, round(max(minm), 6) AS iso_rate
-        |  FROM innr GROUP BY 1)
-        |SELECT b.bin, b.n, b.mean_score,
-        |  round(CAST(b.pos AS DOUBLE) / CAST(b.n AS DOUBLE), 6)
-        |    AS outcome_rate,
-        |  iso.iso_rate,
-        |  coalesce(iso.iso_rate >= lag(iso.iso_rate) OVER (ORDER BY b.bin),
-        |    true) AS monotone_ok
-        |FROM b JOIN iso ON b.bin = iso.bin""".stripMargin,
-    // q322: the q317 centroid/cosine replay, then margins between the
-    // micro-snapped top-2 scores and the two deterministic pick windows
-    "q322_active_learning" ->
-      """WITH tr AS (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-        |    unnest(generate_series(0, len(embedding) - 1)) AS dim
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL AND label IS NOT NULL
-        |    AND vec_id % 5 <> 0),
-        |c AS (SELECT label AS cent_label, dim,
-        |    CAST(CAST(round(avg(v), 6) AS FLOAT) AS DOUBLE) AS cv
-        |  FROM tr GROUP BY 1, 2),
-        |cents AS (SELECT cent_label, list(cv ORDER BY dim) AS cvec
-        |  FROM c GROUP BY 1),
-        |cn AS (SELECT cent_label, cvec,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(cvec, x -> x * x)), (a, b) -> a + b)) AS cnorm
-        |  FROM cents),
-        |te AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL AND label IS NOT NULL
-        |    AND vec_id % 5 = 0),
-        |tv AS (SELECT vec_id, e,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(e, x -> x * x)), (a, b) -> a + b)) AS enorm
-        |  FROM te),
-        |sim AS (SELECT t.vec_id, c.cent_label,
-        |    CAST(round(round(list_reduce(list_prepend(0.0,
-        |        list_transform(generate_series(1, len(t.e)),
-        |          k -> t.e[k] * c.cvec[k])), (a, b) -> a + b)
-        |      / (t.enorm * c.cnorm), 6) * 1000000.0) AS BIGINT) AS sm
-        |  FROM tv t CROSS JOIN cn c),
-        |r AS (SELECT vec_id, cent_label, sm,
-        |    row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY sm DESC, cent_label ASC) AS rn
-        |  FROM sim),
-        |t2 AS (SELECT vec_id,
-        |    max(CASE WHEN rn = 1 THEN cent_label END) AS nearest_label,
-        |    max(CASE WHEN rn = 2 THEN cent_label END) AS second_label,
-        |    max(CASE WHEN rn = 1 THEN sm END) AS sm1,
-        |    max(CASE WHEN rn = 2 THEN sm END) AS sm2
-        |  FROM r WHERE rn <= 2 GROUP BY 1),
-        |mg AS (SELECT *, sm1 - sm2 AS margin FROM t2 WHERE sm2 IS NOT NULL),
-        |cap AS (SELECT *, row_number() OVER (PARTITION BY nearest_label
-        |    ORDER BY margin ASC, vec_id ASC) AS cr FROM mg),
-        |pick AS (SELECT *, row_number() OVER
-        |    (ORDER BY margin ASC, vec_id ASC) AS pick_rank
-        |  FROM cap WHERE cr <= 5)
-        |SELECT vec_id, nearest_label, second_label,
-        |  round(CAST(sm1 AS DOUBLE) / 1000000.0, 6) AS sim,
-        |  round(CAST(margin AS DOUBLE) / 1000000.0, 6) AS margin,
-        |  CAST(pick_rank AS BIGINT) AS pick_rank
-        |FROM pick WHERE pick_rank <= 20""".stripMargin,
-    // q323: the q22 LSH pair replay feeds the edge list; every count is
-    // an exact LONG and each cell's Q term is two mirrored divisions
-    "q323_dup_modularity" ->
-      s"""WITH ${minhashCtes(3, 4, 3)},
-         |ep AS (SELECT p.id_a, p.id_b FROM pairs p
-         |  JOIN sizes sa ON p.id_a = sa.doc_id
-         |  JOIN sizes sb ON p.id_b = sb.doc_id
-         |  WHERE CAST(p.n_common AS DOUBLE)
-         |    / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5),
-         |canon AS (SELECT DISTINCT least(id_a, id_b) AS a,
-         |    greatest(id_a, id_b) AS b FROM ep WHERE id_a <> id_b),
-         |tagged AS (SELECT cc.a, cc.b,
-         |    coalesce(da.source, '__node:' || cc.a) AS ca,
-         |    coalesce(db.source, '__node:' || cc.b) AS cb
-         |  FROM canon cc LEFT JOIN documents da ON cc.a = da.doc_id
-         |  LEFT JOIN documents db ON cc.b = db.doc_id),
-         |m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM tagged),
-         |wth AS (SELECT ca AS c, CAST(count(*) AS BIGINT) AS within_edges
-         |  FROM tagged WHERE ca IS NOT DISTINCT FROM cb GROUP BY 1),
-         |deg AS (SELECT c, CAST(count(*) AS BIGINT) AS degree_sum,
-         |    CAST(count(DISTINCT node) AS BIGINT) AS n_nodes
-         |  FROM (SELECT a AS node, ca AS c FROM tagged
-         |        UNION ALL SELECT b, cb FROM tagged) GROUP BY 1),
-         |cells AS (SELECT deg.c AS community, n_nodes, degree_sum,
-         |    coalesce(w.within_edges, 0) AS within_edges,
-         |    round(CAST(coalesce(w.within_edges, 0) AS DOUBLE)
-         |        / CAST(m.m AS DOUBLE)
-         |      - (CAST(degree_sum AS DOUBLE) / (2.0 * CAST(m.m AS DOUBLE)))
-         |        * (CAST(degree_sum AS DOUBLE) / (2.0 * CAST(m.m AS DOUBLE))),
-         |      6) AS q_contrib
-         |  FROM deg LEFT JOIN wth w ON deg.c IS NOT DISTINCT FROM w.c
-         |  CROSS JOIN m)
-         |SELECT cells.*, t.modularity FROM cells CROSS JOIN
-         |  (SELECT round(sum(q_contrib), 6) AS modularity FROM cells) t"""
-        .stripMargin,
-    // q324: one (quasi × band) grid, the dominant share from the same
-    // deterministic argmax window (ties to the lowest band, nulls last)
-    "q324_l_diversity" ->
-      """WITH b AS (SELECT c_nationkey, c_mktsegment,
-        |    CAST(floor(c_acctbal / 1000) AS BIGINT) AS bal_band
-        |  FROM customer),
-        |cells AS (SELECT c_nationkey, c_mktsegment, bal_band,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM b GROUP BY 1, 2, 3),
-        |r AS (SELECT *, row_number() OVER
-        |    (PARTITION BY c_nationkey, c_mktsegment
-        |     ORDER BY n DESC, bal_band ASC NULLS LAST) AS rn
-        |  FROM cells)
-        |SELECT c_nationkey, c_mktsegment,
-        |  CAST(sum(n) AS BIGINT) AS group_size,
-        |  CAST(count(*) AS BIGINT) AS distinct_sensitive,
-        |  round(CAST(max(CASE WHEN rn = 1 THEN n END) AS DOUBLE)
-        |    / CAST(sum(n) AS DOUBLE), 6) AS dominant_share,
-        |  count(*) < 3 AS at_risk
-        |FROM r GROUP BY 1, 2""".stripMargin,
-    // q325: the q33 closure replay labels clusters, both split devices
-    // are the same exact-integer md5 cut, leak counts re-walk jpairs
-    "q325_cluster_safe_split" -> {
-      val cut = math.floor(0.2 * 4294967296.0).toLong
-      s"""$lshClusterChainSql,
-         |lab AS (SELECT doc_id, cluster_id,
-         |    CASE WHEN (${md5PrefixSql("'split|' || cluster_id")}) < $cut
-         |      THEN 'test' ELSE 'train' END AS split,
-         |    CASE WHEN (${md5PrefixSql("'split|' || doc_id")}) < $cut
-         |      THEN 'test' ELSE 'train' END AS naive
-         |  FROM assign),
-         |leaks AS (SELECT
-         |    CAST(coalesce(sum(CASE WHEN la.naive <> lb.naive THEN 1 END),
-         |      0) AS BIGINT) AS naive_leaked_pairs,
-         |    CAST(coalesce(sum(CASE WHEN la.split <> lb.split THEN 1 END),
-         |      0) AS BIGINT) AS cluster_leaked_pairs
-         |  FROM jpairs j JOIN lab la ON j.id_a = la.doc_id
-         |  JOIN lab lb ON j.id_b = lb.doc_id)
-         |SELECT split, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(count(DISTINCT cluster_id) AS BIGINT) AS n_clusters,
-         |  naive_leaked_pairs, cluster_leaked_pairs
-         |FROM lab CROSS JOIN leaks GROUP BY 1, 4, 5""".stripMargin
-    },
-    // q326: exact whitespace-token total, closed-form grid — sqrt is
-    // IEEE-correctly-rounded on both engines
-    "q326_chinchilla_plan" ->
-      """WITH t AS (SELECT CAST(coalesce(sum(len(string_split(text, ' '))),
-        |    0) AS BIGINT) AS corpus_tokens
-        |  FROM documents WHERE text IS NOT NULL),
-        |g AS (SELECT unnest([1e18, 1e19, 1e20,
-        |    1e21, 1e22, 1e23]) AS flops_budget)
-        |SELECT flops_budget, corpus_tokens,
-        |  CAST(round(sqrt(flops_budget / 120.0)) AS BIGINT) AS opt_params,
-        |  CAST(round(sqrt(flops_budget / 120.0) * 20.0) AS BIGINT)
-        |    AS opt_tokens,
-        |  round(sqrt(flops_budget / 120.0) * 20.0
-        |    / CAST(corpus_tokens AS DOUBLE), 6) AS epochs_needed,
-        |  round(sqrt(flops_budget / 120.0) * 20.0)
-        |    > CAST(corpus_tokens AS DOUBLE) AS data_limited
-        |FROM g CROSS JOIN t""".stripMargin,
-    // q327: the q83 within-cell scaffold, symmetrized, kth-cosine via
-    // the same deterministic window; missing kth (cell too small) stays
-    // NULL through the left join
-    "q327_knn_outliers" ->
-      s"""$withinCellPairsPrefix,
-         |sym AS (SELECT id_a AS id, id_b AS nbr, cos FROM pc
-         |        UNION ALL SELECT id_b, id_a, cos FROM pc),
-         |kth AS (SELECT id, cos AS kth_cos FROM (
-         |    SELECT id, cos, row_number() OVER (PARTITION BY id
-         |      ORDER BY cos DESC, nbr ASC) AS r FROM sym)
-         |  WHERE r = 3),
-         |sizes AS (SELECT cent_id AS cell, CAST(count(*) AS BIGINT)
-         |    AS n_in_cell
-         |  FROM a3 GROUP BY 1)
-         |SELECT a3.vec_id, a3.cent_id AS cell, s.n_in_cell, k.kth_cos,
-         |  round(1.0 - k.kth_cos, 6) AS outlier_score
-         |FROM a3 JOIN sizes s ON a3.cent_id = s.cell
-         |LEFT JOIN kth k ON a3.vec_id = k.id""".stripMargin,
-    // q328: same top-(k+1) multiset (tie-order-invariant), ln on
-    // identical doubles, one mirrored division
-    "q328_hill_tail" ->
-      """WITH base AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v
-        |  FROM events WHERE value IS NOT NULL AND value > 0),
-        |cnt AS (SELECT g, CAST(count(*) AS BIGINT) AS n_pos
-        |  FROM base GROUP BY 1),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY v DESC) AS rn
-        |  FROM base),
-        |top AS (SELECT g, max(CASE WHEN rn = 51 THEN v END) AS xk1,
-        |    sum(CASE WHEN rn <= 50 THEN ln(v) END) AS lnsum
-        |  FROM r WHERE rn <= 51 GROUP BY 1)
-        |SELECT cnt.g AS event_type, cnt.n_pos,
-        |  round(top.xk1, 6) AS x_kplus1,
-        |  CASE WHEN top.lnsum - 50.0 * ln(top.xk1) > 0
-        |    THEN round(50.0 / (top.lnsum - 50.0 * ln(top.xk1)), 6) END
-        |    AS alpha,
-        |  coalesce(CASE WHEN top.lnsum - 50.0 * ln(top.xk1) > 0
-        |    THEN round(50.0 / (top.lnsum - 50.0 * ln(top.xk1)), 6) END < 2.0,
-        |    false) AS heavy_tail
-        |FROM cnt JOIN top ON cnt.g = top.g""".stripMargin,
-    // q329: one exact pair table at the floor threshold, the grid
-    // re-filter and both counts mirrored
-    "q329_threshold_sweep" -> {
-      val gridSql = Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
-        .map(t => s"CAST($t AS DOUBLE)").mkString(", ")
-      s"""WITH sh AS (${shingleSql(3)}),
-         |pairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-         |    AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         |jf AS (SELECT p.id_a, p.id_b,
-         |    CAST(p.n_common AS DOUBLE)
-         |      / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) AS j
-         |  FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id
-         |  JOIN sizes sb ON p.id_b = sb.doc_id
-         |  WHERE CAST(p.n_common AS DOUBLE)
-         |    / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.1),
-         |g AS (SELECT unnest([$gridSql]) AS threshold),
-         |k AS (SELECT g.threshold, jf.id_a, jf.id_b
-         |  FROM g JOIN jf ON jf.j >= g.threshold),
-         |pc AS (SELECT threshold, CAST(count(*) AS BIGINT) AS pairs_kept
-         |  FROM k GROUP BY 1),
-         |dc AS (SELECT threshold, CAST(count(DISTINCT d) AS BIGINT)
-         |    AS docs_involved
-         |  FROM (SELECT threshold, id_a AS d FROM k
-         |        UNION ALL SELECT threshold, id_b AS d FROM k) GROUP BY 1)
-         |SELECT g.threshold, coalesce(pc.pairs_kept, 0) AS pairs_kept,
-         |  coalesce(dc.docs_involved, 0) AS docs_involved
-         |FROM g LEFT JOIN pc ON g.threshold = pc.threshold
-         |LEFT JOIN dc ON g.threshold = dc.threshold""".stripMargin
-    },
-    // q330: micro-LONG daily totals, mirrored integer re-snaps between
-    // stages; the dow key differs numerically per engine (Spark 1-7 vs
-    // DuckDB 0-6) but induces the identical partition of days
-    "q330_seasonal_decompose" ->
-      """WITH obs AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(sum(CAST(round(coalesce(value, 0) * 1000000.0) AS BIGINT))
-        |      AS BIGINT) AS om
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-        |cal AS (SELECT CAST(unnest(generate_series(
-        |      CAST(min(day) AS TIMESTAMP), CAST(max(day) AS TIMESTAMP),
-        |      INTERVAL 1 DAY)) AS DATE) AS day FROM obs),
-        |daily AS (SELECT c.day, coalesce(o.om, 0) AS tm
-        |  FROM cal c LEFT JOIN obs o USING (day)),
-        |tr AS (SELECT day, tm,
-        |    CAST(round(CAST(sum(tm) OVER w AS DOUBLE)
-        |      / CAST(count(*) OVER w AS DOUBLE)) AS BIGINT) AS trm
-        |  FROM daily WINDOW w AS (ORDER BY day
-        |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |dt AS (SELECT day, tm, trm, tm - trm AS dtm,
-        |    dayofweek(day) AS dow FROM tr),
-        |se AS (SELECT dow, CAST(round(CAST(sum(dtm) AS DOUBLE)
-        |      / CAST(count(*) AS DOUBLE)) AS BIGINT) AS sm
-        |  FROM dt GROUP BY 1),
-        |rs AS (SELECT day, tm, trm, sm, dtm - sm AS rm
-        |  FROM dt JOIN se USING (dow)),
-        |gate AS (SELECT quantile_cont(CAST(abs(rm) AS DOUBLE), 0.5) AS mad
-        |  FROM rs)
-        |SELECT day,
-        |  round(CAST(tm AS DOUBLE) / 1e6, 6) AS total,
-        |  round(CAST(trm AS DOUBLE) / 1e6, 6) AS trend,
-        |  round(CAST(sm AS DOUBLE) / 1e6, 6) AS seasonal,
-        |  round(CAST(rm AS DOUBLE) / 1e6, 6) AS residual,
-        |  CAST(abs(rm) AS DOUBLE) > 3.0 * gate.mad AS anomaly
-        |FROM rs CROSS JOIN gate""".stripMargin,
-    // q331: the q27 marker-score argmax replayed, then one grid +
-    // null-safe agreement reduce
-    "q331_lang_purity" ->
-      s"""WITH sc AS (SELECT source, lang AS recorded_lang,
-         |    $langScoreSql
-         |  FROM documents WHERE text IS NOT NULL),
-         |d AS (SELECT source, recorded_lang,
-         |    CASE
-         |      WHEN score_en >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'en'
-         |      WHEN score_de >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'de'
-         |      WHEN score_es >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'es'
-         |      WHEN score_fr >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'fr'
-         |      ELSE 'zh' END AS detected_lang
-         |  FROM sc),
-         |grid AS (SELECT source, recorded_lang, detected_lang,
-         |    CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1, 2, 3),
-         |tot AS (SELECT source, CAST(sum(n) AS BIGINT) AS t,
-         |    CAST(coalesce(sum(CASE WHEN recorded_lang IS NOT DISTINCT FROM
-         |      detected_lang THEN n END), 0) AS BIGINT) AS agr
-         |  FROM grid GROUP BY 1)
-         |SELECT g.source, g.recorded_lang, g.detected_lang, g.n,
-         |  round(CAST(g.n AS DOUBLE) / CAST(t.t AS DOUBLE), 6)
-         |    AS share_of_source,
-         |  g.recorded_lang IS NOT DISTINCT FROM g.detected_lang AS agree,
-         |  round(CAST(t.agr AS DOUBLE) / CAST(t.t AS DOUBLE), 6)
-         |    AS source_purity
-         |FROM grid g JOIN tot t ON g.source = t.source""".stripMargin,
-    // q332: the journey/transition chain mirrored, then the 12 absorption
-    // rounds unrolled as REPLACE CTEs — every term in the same fixed
-    // channel order as the Spark expression tree
-    "q332_markov_attribution" -> {
-      val channels = Seq("view", "click", "signup")
-      val iters = 12
-      val srcs = "START" +: channels
-      def vn(scen: Int, i: Int) =
-        s"v_${if (scen < 0) "m1" else scen.toString}_$i"
-      def pr(i: Int, j: Int) =
-        s"(CASE WHEN d_$i > 0 THEN CAST(n_${i}_$j AS DOUBLE) / CAST(d_$i AS DOUBLE) ELSE 0.0 END)"
-      def pc(i: Int) =
-        s"(CASE WHEN d_$i > 0 THEN CAST(nc_$i AS DOUBLE) / CAST(d_$i AS DOUBLE) ELSE 0.0 END)"
-      val scenarios = -1 +: channels.indices.toSeq
-      val live = for (scen <- scenarios; i <- srcs.indices
-                      if !(scen >= 0 && i == scen + 1)) yield (scen, i)
-      val pivotCols = ((for {
-          (s, i) <- srcs.zipWithIndex; (d, j) <- channels.zipWithIndex
-        } yield s"CAST(coalesce(sum(CASE WHEN src = '$s' AND dst = '$d' THEN n END), 0) AS BIGINT) AS n_${i}_$j") ++
-        srcs.zipWithIndex.map { case (s, i) =>
-          s"CAST(coalesce(sum(CASE WHEN src = '$s' AND dst = 'CONV' THEN n END), 0) AS BIGINT) AS nc_$i" } ++
-        srcs.zipWithIndex.map { case (s, i) =>
-          s"CAST(coalesce(sum(CASE WHEN src = '$s' THEN n END), 0) AS BIGINT) AS d_$i" } :+
-        "CAST(coalesce(sum(CASE WHEN dst = 'CONV' THEN n END), 0) AS BIGINT) AS nconv")
-        .mkString(",\n    ")
-      val zeros = live.map { case (s, i) => s"0.0 AS ${vn(s, i)}" }
-        .mkString(", ")
-      val rounds = (1 to iters).map { t =>
-        val reps = live.map { case (scen, i) =>
-          val terms = channels.indices
-            .filter(j => !(scen >= 0 && j == scen))
-            .map(j => s" + ${pr(i, j)} * ${vn(scen, j + 1)}").mkString
-          s"round(${pc(i)}$terms, 6) AS ${vn(scen, i)}"
-        }.mkString(", ")
-        s"r$t AS (SELECT * REPLACE ($reps) FROM r${t - 1})"
-      }.mkString(",\n")
-      def eff(k: Int) = s"round(v_m1_0 - v_${k}_0, 6)"
-      val effTot = channels.indices.map(eff).mkString(" + ")
-      val chanRows = channels.zipWithIndex.map { case (ch, k) =>
-        s"SELECT '$ch' AS channel, ${eff(k)} AS removal_effect, ($effTot) AS tot, v_m1_0 AS base, nconv FROM r$iters"
-      }.mkString("\n  UNION ALL ")
-      s"""WITH conv AS (SELECT u, cts, cid FROM (
-         |    SELECT user_id AS u, ts AS cts, event_id AS cid,
-         |      row_number() OVER (PARTITION BY user_id
-         |        ORDER BY ts, event_id) AS rn
-         |    FROM events WHERE event_type = 'purchase') WHERE rn = 1),
-         |tch AS (SELECT e.user_id AS u, e.ts, e.event_id AS id,
-         |    e.event_type AS ch, c.cts IS NOT NULL AS cv
-         |  FROM events e LEFT JOIN conv c ON e.user_id = c.u
-         |  WHERE e.event_type IN ('view', 'click', 'signup')
-         |    AND (c.cts IS NULL OR e.ts < c.cts
-         |      OR (e.ts = c.cts AND e.event_id < c.cid))),
-         |sq AS (SELECT u, ch, cv,
-         |    lead(ch) OVER (PARTITION BY u ORDER BY ts, id) AS nxt,
-         |    row_number() OVER (PARTITION BY u ORDER BY ts, id) AS rn
-         |  FROM tch),
-         |mid AS (SELECT ch AS src, coalesce(nxt,
-         |    CASE WHEN cv THEN 'CONV' ELSE 'NULL' END) AS dst FROM sq),
-         |st AS (SELECT 'START' AS src, ch AS dst FROM sq WHERE rn = 1),
-         |nt AS (SELECT 'START' AS src, 'CONV' AS dst FROM conv c
-         |  WHERE NOT EXISTS (SELECT 1 FROM tch t WHERE t.u = c.u)),
-         |tr AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS n FROM
-         |  (SELECT * FROM mid UNION ALL SELECT * FROM st
-         |   UNION ALL SELECT * FROM nt) GROUP BY 1, 2),
-         |r0 AS (SELECT
-         |    $pivotCols,
-         |    $zeros
-         |  FROM tr),
-         |$rounds
-         |SELECT channel, removal_effect,
-         |  round(CASE WHEN tot > 0 THEN removal_effect / tot
-         |    ELSE 0.0 END, 6) AS share,
-         |  round((CASE WHEN tot > 0 THEN removal_effect / tot
-         |    ELSE 0.0 END) * CAST(nconv AS DOUBLE), 6)
-         |    AS credited_conversions,
-         |  round(base, 6) AS base_conv_prob
-         |FROM ($chanRows)""".stripMargin
-    },
-    // q333: the q310 panel with Δx = one rank step and the (m−1)
-    // normalizer; integer cross-products in HUGEINT
-    "q333_t_closeness" ->
-      """WITH cells AS (SELECT
-        |    CAST(c_nationkey AS VARCHAR) || '|' || c_mktsegment AS g,
-        |    CAST(round(CAST(c_acctbal AS DOUBLE) * 1000000.0) AS BIGINT)
-        |      AS vm,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM customer WHERE c_acctbal IS NOT NULL GROUP BY 1, 2),
-        |grid AS (SELECT vm, CAST(sum(c) AS BIGINT) AS cg
-        |  FROM cells GROUP BY 1),
-        |grp AS (SELECT g, CAST(sum(c) AS BIGINT) AS ng
-        |  FROM cells GROUP BY 1),
-        |panel AS (SELECT grp.g, grid.vm, grp.ng, grid.cg,
-        |    coalesce(cells.c, 0) AS cgrp
-        |  FROM grid CROSS JOIN grp
-        |  LEFT JOIN cells ON cells.g IS NOT DISTINCT FROM grp.g
-        |    AND cells.vm = grid.vm),
-        |w AS (SELECT g, ng, vm,
-        |    sum(cgrp) OVER (PARTITION BY g ORDER BY vm) AS fg,
-        |    sum(cg) OVER (PARTITION BY g ORDER BY vm) AS f,
-        |    lead(vm) OVER (PARTITION BY g ORDER BY vm) AS nxt,
-        |    sum(cg) OVER (PARTITION BY g) AS n,
-        |    count(*) OVER (PARTITION BY g) AS m
-        |  FROM panel),
-        |red AS (SELECT g, CAST(max(ng) AS BIGINT) AS n_cohort,
-        |    CAST(max(n) AS BIGINT) AS nt, CAST(max(m) AS BIGINT) AS m_values,
-        |    coalesce(sum(CASE WHEN nxt IS NOT NULL THEN
-        |      abs(CAST(fg AS HUGEINT) * n - CAST(f AS HUGEINT) * ng) END),
-        |      0) AS wsum
-        |  FROM w GROUP BY 1)
-        |SELECT g AS cohort, n_cohort, m_values,
-        |  CASE WHEN m_values > 1 THEN round(CAST(wsum AS DOUBLE)
-        |    / (CAST(n_cohort AS DOUBLE) * CAST(nt AS DOUBLE)
-        |      * CAST(m_values - 1 AS DOUBLE)), 6) END AS t_value,
-        |  coalesce(CASE WHEN m_values > 1 THEN round(CAST(wsum AS DOUBLE)
-        |    / (CAST(n_cohort AS DOUBLE) * CAST(nt AS DOUBLE)
-        |      * CAST(m_values - 1 AS DOUBLE)), 6) > 0.2 END, false)
-        |    AS at_risk
-        |FROM red""".stripMargin,
-    // q334: the q84 pair chain symmetrized into edges, then the q163
-    // unrolled PageRank rounds and a bounded top-k window
-    "q334_textrank" -> {
-      val rounds = (1 to 3).map { t =>
-        s"""c$t AS (SELECT e.dst AS node, sum(e.w / outw.ow * r${t - 1}.rank) AS s
-           |  FROM e JOIN outw ON e.src = outw.src
-           |  JOIN r${t - 1} ON e.src = r${t - 1}.node GROUP BY 1),
-           |r$t AS (SELECT nodes.node,
-           |  round((1 - 0.85) / nn.cnt + 0.85 * coalesce(c$t.s, 0), 6) AS rank
-           |  FROM nodes CROSS JOIN nn
-           |  LEFT JOIN c$t ON nodes.node = c$t.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH t AS (SELECT string_split(text, ' ') AS ts FROM documents),
-         |pr AS (SELECT unnest(flatten(list_transform(generate_series(1, len(ts) - 1),
-         |        i -> list_transform(generate_series(i + 1, least(i + 2, len(ts))),
-         |        j -> CASE WHEN ts[i] <= ts[j] THEN ts[i] || ' ' || ts[j]
-         |                  ELSE ts[j] || ' ' || ts[i] END)))) AS pair
-         |      FROM t WHERE len(ts) >= 2),
-         |pc AS (SELECT pair, CAST(count(*) AS BIGINT) AS n_ab FROM pr GROUP BY 1),
-         |pp AS (SELECT split_part(pair, ' ', 1) AS a,
-         |    split_part(pair, ' ', 2) AS b, n_ab FROM pc),
-         |e AS (SELECT a AS src, b AS dst, CAST(n_ab AS DOUBLE) AS w
-         |      FROM pp WHERE a <> b
-         |      UNION ALL SELECT b, a, CAST(n_ab AS DOUBLE) FROM pp WHERE a <> b),
-         |outw AS (SELECT src, sum(w) AS ow FROM e GROUP BY 1),
-         |nodes AS (SELECT DISTINCT node FROM
-         |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-         |nn AS (SELECT CAST(count(*) AS DOUBLE) AS cnt FROM nodes),
-         |r0 AS (SELECT node, round(1.0 / cnt, 6) AS rank FROM nodes, nn),
-         |$rounds
-         |SELECT node AS term, rank,
-         |  CAST(row_number() OVER (ORDER BY rank DESC, node ASC) AS BIGINT)
-         |    AS kw_rank
-         |FROM r3
-         |QUALIFY row_number() OVER (ORDER BY rank DESC, node ASC) <= 50"""
-        .stripMargin
-    },
-    // q335: the q33 closure labels guard the q164-style md5 pool draw;
-    // positives rank by partner id
-    "q335_contrastive_pairs" ->
-      s"""$lshClusterChainSql,
-         |pool AS (SELECT doc_id AS cand, cluster_id AS cc FROM assign
-         |  ORDER BY md5('neg|pool|' || doc_id), doc_id LIMIT 50),
-         |anch AS (SELECT DISTINCT j.id_a AS anchor FROM jpairs j),
-         |alab AS (SELECT anch.anchor, a.cluster_id AS ac
-         |  FROM anch JOIN assign a ON anch.anchor = a.doc_id),
-         |negs AS (SELECT anchor AS id_a, cand AS id_b, FALSE AS is_positive,
-         |    CAST(row_number() OVER (PARTITION BY anchor
-         |      ORDER BY md5('neg|' || anchor || '|' || cand), cand)
-         |      AS BIGINT) AS pair_rank
-         |  FROM alab JOIN pool ON ac <> cc
-         |  QUALIFY pair_rank <= 3),
-         |pos AS (SELECT id_a, id_b, TRUE AS is_positive,
-         |    CAST(row_number() OVER (PARTITION BY id_a ORDER BY id_b)
-         |      AS BIGINT) AS pair_rank
-         |  FROM jpairs)
-         |SELECT * FROM pos UNION ALL SELECT * FROM negs""".stripMargin,
-    // q301: strict row_number ranks over the complete panel, exact
-    // integer rank sums, one mirrored division
-    "q301_kendalls_w" ->
-      """WITH sc0 AS (
-        |  SELECT user_id AS r, event_type AS i, round(sum(value), 6) AS s
-        |  FROM events
-        |  WHERE user_id <= 8 AND user_id IS NOT NULL
-        |    AND event_type IS NOT NULL
-        |  GROUP BY 1, 2),
-        |sc AS (SELECT * FROM sc0 WHERE s IS NOT NULL),
-        |m AS (SELECT count(DISTINCT r) AS mm FROM sc),
-        |common AS (
-        |  SELECT i FROM sc GROUP BY i
-        |  HAVING count(*) = (SELECT mm FROM m)),
-        |rk AS (
-        |  SELECT sc.r, sc.i,
-        |    row_number() OVER (PARTITION BY sc.r
-        |      ORDER BY sc.s DESC, sc.i ASC) AS rnk
-        |  FROM sc JOIN common USING (i)),
-        |si AS (SELECT i, CAST(sum(rnk) AS HUGEINT) AS ri FROM rk GROUP BY 1),
-        |agg AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(COALESCE(sum(ri * ri), 0) AS HUGEINT) AS ss
-        |  FROM si)
-        |SELECT (SELECT CAST(mm AS BIGINT) FROM m) AS n_raters,
-        |  n AS n_items,
-        |  CASE WHEN n >= 2 THEN
-        |    round((12.0 * CAST(ss AS DOUBLE)
-        |      - 3.0 * CAST((SELECT mm FROM m) AS DOUBLE)
-        |        * CAST((SELECT mm FROM m) AS DOUBLE)
-        |        * CAST(n AS DOUBLE)
-        |        * (CAST(n AS DOUBLE) + 1.0) * (CAST(n AS DOUBLE) + 1.0))
-        |      / (CAST((SELECT mm FROM m) AS DOUBLE)
-        |        * CAST((SELECT mm FROM m) AS DOUBLE)
-        |        * CAST(n AS DOUBLE)
-        |        * (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - 1.0)), 6)
-        |    END AS w
-        |FROM agg""".stripMargin,
-    // q300: the welch pivot re-read as a standardized magnitude; J
-    // correction and bands on the same mirrored doubles
-    "q300_effect_size" ->
-      """WITH j AS (
-        |  SELECT c.c_nationkey AS g, c.c_mktsegment AS var,
-        |    CAST(o.o_totalprice AS DOUBLE) AS v
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
-        |    AND o.o_totalprice IS NOT NULL),
-        |red AS (
-        |  SELECT g, var, CAST(count(*) AS BIGINT) AS n,
-        |    sum(v) AS s, sum(v * v) AS s2
-        |  FROM j GROUP BY 1, 2),
-        |piv AS (
-        |  SELECT g,
-        |    COALESCE(max(CASE WHEN var = 'BUILDING' THEN n END), 0) AS n_a,
-        |    COALESCE(max(CASE WHEN var = 'MACHINERY' THEN n END), 0) AS n_b,
-        |    max(CASE WHEN var = 'BUILDING' THEN s END) AS sa,
-        |    max(CASE WHEN var = 'MACHINERY' THEN s END) AS sb,
-        |    max(CASE WHEN var = 'BUILDING' THEN s2 END) AS sa2,
-        |    max(CASE WHEN var = 'MACHINERY' THEN s2 END) AS sb2
-        |  FROM red GROUP BY 1),
-        |d AS (
-        |  SELECT g, n_a, n_b,
-        |    sb / CAST(n_b AS DOUBLE) - sa / CAST(n_a AS DOUBLE) AS diff,
-        |    sqrt(((sa2 - sa * sa / CAST(n_a AS DOUBLE))
-        |      + (sb2 - sb * sb / CAST(n_b AS DOUBLE)))
-        |      / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) - 2.0)) AS sp,
-        |    CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) - 2.0 AS dfree
-        |  FROM piv)
-        |SELECT g AS c_nationkey, n_a, n_b,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1 THEN round(diff, 6) END AS diff,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 THEN round(sp, 6) END
-        |    AS pooled_sd,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 AND sp > 0 THEN
-        |    round(diff / sp, 6) END AS cohens_d,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 AND sp > 0 THEN
-        |    round((1.0 - 3.0 / (4.0 * dfree - 1.0)) * (diff / sp), 6) END
-        |    AS hedges_g,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 AND sp > 0 THEN
-        |    CASE WHEN abs((1.0 - 3.0 / (4.0 * dfree - 1.0)) * (diff / sp))
-        |           < 0.2 THEN 'negligible'
-        |         WHEN abs((1.0 - 3.0 / (4.0 * dfree - 1.0)) * (diff / sp))
-        |           < 0.5 THEN 'small'
-        |         WHEN abs((1.0 - 3.0 / (4.0 * dfree - 1.0)) * (diff / sp))
-        |           < 0.8 THEN 'medium'
-        |         ELSE 'large' END END AS magnitude
-        |FROM d""".stripMargin,
-    // q298: the same clamped binomial ranks read off the cumulative
-    // histogram as exact order statistics
-    "q298_median_ci" ->
-      """WITH g AS (
-        |  SELECT event_type AS grp,
-        |    CAST(round(value * 1000000.0) AS BIGINT) AS vm
-        |  FROM events WHERE value IS NOT NULL),
-        |grid AS (
-        |  SELECT grp, vm, CAST(count(*) AS BIGINT) AS c
-        |  FROM g GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT grp, vm,
-        |    sum(c) OVER (PARTITION BY grp ORDER BY vm) AS cw,
-        |    sum(c) OVER (PARTITION BY grp) AS n
-        |  FROM grid),
-        |k AS (
-        |  SELECT grp, vm, cw, n,
-        |    least(greatest(CAST(ceil(CAST(n AS DOUBLE) / 2.0) AS BIGINT),
-        |      1), n) AS km,
-        |    least(greatest(CAST(ceil(CAST(n AS DOUBLE) / 2.0
-        |      - 1.959964 * sqrt(CAST(n AS DOUBLE)) / 2.0) AS BIGINT),
-        |      1), n) AS kl,
-        |    least(greatest(CAST(floor(CAST(n AS DOUBLE) / 2.0 + 1.0
-        |      + 1.959964 * sqrt(CAST(n AS DOUBLE)) / 2.0) AS BIGINT),
-        |      1), n) AS kh
-        |  FROM cum)
-        |SELECT grp AS event_type, CAST(max(n) AS BIGINT) AS n,
-        |  round(CAST(min(CASE WHEN cw >= km THEN vm END) AS DOUBLE)
-        |    / 1000000.0, 6) AS median,
-        |  round(CAST(min(CASE WHEN cw >= kl THEN vm END) AS DOUBLE)
-        |    / 1000000.0, 6) AS ci_lo,
-        |  round(CAST(min(CASE WHEN cw >= kh THEN vm END) AS DOUBLE)
-        |    / 1000000.0, 6) AS ci_hi
-        |FROM k GROUP BY 1""".stripMargin,
-    // q299: the same five raw power sums and the same central-moment
-    // expansion, mirrored term order
-    "q299_jarque_bera" ->
-      """WITH red AS (
-        |  SELECT event_type AS grp, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(value AS DOUBLE)) AS s1,
-        |    sum(CAST(value AS DOUBLE) * CAST(value AS DOUBLE)) AS s2,
-        |    sum(CAST(value AS DOUBLE) * CAST(value AS DOUBLE)
-        |      * CAST(value AS DOUBLE)) AS s3,
-        |    sum(CAST(value AS DOUBLE) * CAST(value AS DOUBLE)
-        |      * CAST(value AS DOUBLE) * CAST(value AS DOUBLE)) AS s4
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |m AS (
-        |  SELECT grp, n,
-        |    s2 / CAST(n AS DOUBLE)
-        |      - (s1 / CAST(n AS DOUBLE)) * (s1 / CAST(n AS DOUBLE)) AS m2,
-        |    s3 / CAST(n AS DOUBLE)
-        |      - 3.0 * (s1 / CAST(n AS DOUBLE)) * (s2 / CAST(n AS DOUBLE))
-        |      + 2.0 * (s1 / CAST(n AS DOUBLE)) * (s1 / CAST(n AS DOUBLE))
-        |        * (s1 / CAST(n AS DOUBLE)) AS m3,
-        |    s4 / CAST(n AS DOUBLE)
-        |      - 4.0 * (s1 / CAST(n AS DOUBLE)) * (s3 / CAST(n AS DOUBLE))
-        |      + 6.0 * (s1 / CAST(n AS DOUBLE)) * (s1 / CAST(n AS DOUBLE))
-        |        * (s2 / CAST(n AS DOUBLE))
-        |      - 3.0 * (s1 / CAST(n AS DOUBLE)) * (s1 / CAST(n AS DOUBLE))
-        |        * (s1 / CAST(n AS DOUBLE)) * (s1 / CAST(n AS DOUBLE)) AS m4
-        |  FROM red)
-        |SELECT grp AS event_type, n,
-        |  CASE WHEN n >= 4 AND m2 > 0 THEN
-        |    round(m3 / sqrt(m2 * m2 * m2), 6) END AS skewness,
-        |  CASE WHEN n >= 4 AND m2 > 0 THEN
-        |    round(m4 / (m2 * m2), 6) END AS kurtosis,
-        |  CASE WHEN n >= 4 AND m2 > 0 THEN
-        |    round(CAST(n AS DOUBLE) / 6.0
-        |      * ((m3 / sqrt(m2 * m2 * m2)) * (m3 / sqrt(m2 * m2 * m2))
-        |        + (m4 / (m2 * m2) - 3.0) * (m4 / (m2 * m2) - 3.0) / 4.0),
-        |      6) END AS jb,
-        |  COALESCE(CASE WHEN n >= 4 AND m2 > 0 THEN
-        |    CAST(n AS DOUBLE) / 6.0
-        |      * ((m3 / sqrt(m2 * m2 * m2)) * (m3 / sqrt(m2 * m2 * m2))
-        |        + (m4 / (m2 * m2) - 3.0) * (m4 / (m2 * m2) - 3.0) / 4.0)
-        |      > 5.991465 END, FALSE) AS reject_normal
-        |FROM m""".stripMargin,
-    // q294: zero-filled calendar counts -> exact moments -> the
-    // chi-square normal approximation, mirrored
-    "q294_overdispersion" ->
-      """WITH daily AS (
-        |  SELECT event_type AS k, CAST(CAST(ts AS TIMESTAMP) AS DATE)
-        |      AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-        |span AS (
-        |  SELECT k, min(day) AS d0,
-        |    datediff('day', min(day), max(day)) AS nd
-        |  FROM daily GROUP BY 1),
-        |cal AS (
-        |  SELECT s.k, s.d0 + CAST(g.g AS INT) AS day
-        |  FROM span s, LATERAL unnest(generate_series(0, s.nd)) AS g(g)),
-        |series AS (
-        |  SELECT c.k, COALESCE(d.y, 0) AS y
-        |  FROM cal c LEFT JOIN daily d ON c.k = d.k AND c.day = d.day),
-        |red AS (
-        |  SELECT k, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(y) AS BIGINT) AS s,
-        |    CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS s2
-        |  FROM series GROUP BY 1),
-        |m AS (
-        |  SELECT k, n, s,
-        |    CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mean,
-        |    (CAST(s2 AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-        |      / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0) AS vr
-        |  FROM red)
-        |SELECT k AS event_type, n AS n_days, round(mean, 6) AS mean,
-        |  CASE WHEN n >= 2 THEN round(vr, 6) END AS variance,
-        |  CASE WHEN s > 0 AND n >= 2 THEN round(vr / mean, 6) END
-        |    AS dispersion,
-        |  CASE WHEN s > 0 AND n >= 2 THEN
-        |    round((vr / mean - 1.0)
-        |      * sqrt((CAST(n AS DOUBLE) - 1.0) / 2.0), 6) END AS z,
-        |  COALESCE(CASE WHEN s > 0 AND n >= 2 THEN
-        |    (vr / mean - 1.0) * sqrt((CAST(n AS DOUBLE) - 1.0) / 2.0)
-        |      > 1.644854 END, FALSE) AS overdispersed
-        |FROM m""".stripMargin,
-    // q295: one lag-window pass over the same calendar, the mean
-    // expansion on exact integer pieces
-    "q295_autocorrelation" ->
-      """WITH daily AS (
-        |  SELECT event_type AS k, CAST(CAST(ts AS TIMESTAMP) AS DATE)
-        |      AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-        |span AS (
-        |  SELECT k, min(day) AS d0,
-        |    datediff('day', min(day), max(day)) AS nd
-        |  FROM daily GROUP BY 1),
-        |cal AS (
-        |  SELECT s.k, CAST(g.g AS INT) AS t, s.d0 + CAST(g.g AS INT)
-        |      AS day
-        |  FROM span s, LATERAL unnest(generate_series(0, s.nd)) AS g(g)),
-        |series AS (
-        |  SELECT c.k, c.t, COALESCE(d.y, 0) AS y
-        |  FROM cal c LEFT JOIN daily d ON c.k = d.k AND c.day = d.day),
-        |lagged AS (
-        |  SELECT k, y,
-        |    lag(y, 1) OVER w AS l1, lag(y, 7) OVER w AS l7,
-        |    lag(y, 14) OVER w AS l14
-        |  FROM series WINDOW w AS (PARTITION BY k ORDER BY t)),
-        |red AS (
-        |  SELECT k, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(y) AS BIGINT) AS s,
-        |    CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS s2,
-        |    CAST(sum(CAST(y AS HUGEINT) * l1) AS HUGEINT) AS xy1,
-        |    CAST(sum(y) FILTER (l1 IS NOT NULL) AS BIGINT) AS p1_1,
-        |    CAST(sum(l1) AS BIGINT) AS p2_1,
-        |    CAST(sum(CAST(y AS HUGEINT) * l7) AS HUGEINT) AS xy7,
-        |    CAST(sum(y) FILTER (l7 IS NOT NULL) AS BIGINT) AS p1_7,
-        |    CAST(sum(l7) AS BIGINT) AS p2_7,
-        |    CAST(sum(CAST(y AS HUGEINT) * l14) AS HUGEINT) AS xy14,
-        |    CAST(sum(y) FILTER (l14 IS NOT NULL) AS BIGINT) AS p1_14,
-        |    CAST(sum(l14) AS BIGINT) AS p2_14
-        |  FROM lagged GROUP BY 1),
-        |g AS (SELECT unnest([1, 7, 14]) AS lag),
-        |j AS (
-        |  SELECT red.k, CAST(g.lag AS INT) AS lag, red.n,
-        |    CAST(red.s AS DOUBLE) / CAST(red.n AS DOUBLE) AS mean,
-        |    CAST(red.s2 AS DOUBLE) - CAST(red.s AS DOUBLE)
-        |      * CAST(red.s AS DOUBLE) / CAST(red.n AS DOUBLE) AS denom,
-        |    CASE g.lag WHEN 1 THEN CAST(red.xy1 AS DOUBLE)
-        |      WHEN 7 THEN CAST(red.xy7 AS DOUBLE)
-        |      ELSE CAST(red.xy14 AS DOUBLE) END AS xy,
-        |    CASE g.lag WHEN 1 THEN CAST(red.p1_1 + red.p2_1 AS DOUBLE)
-        |      WHEN 7 THEN CAST(red.p1_7 + red.p2_7 AS DOUBLE)
-        |      ELSE CAST(red.p1_14 + red.p2_14 AS DOUBLE) END AS p12
-        |  FROM red, g)
-        |SELECT k AS event_type, lag, n AS n_days,
-        |  CASE WHEN denom > 0 AND n >= CAST(lag AS DOUBLE) + 2 THEN
-        |    round((xy - mean * p12
-        |      + (CAST(n AS DOUBLE) - CAST(lag AS DOUBLE)) * mean * mean)
-        |      / denom, 6) END AS acf
-        |FROM j""".stripMargin,
-    // q296: the q284 reduction re-aggregated into the per-group sign
-    // census vs the pooled sign
-    "q296_simpson_check" ->
-      """WITH j AS (
-        |  SELECT c.c_nationkey AS g, c.c_mktsegment AS var,
-        |    CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS y
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
-        |    AND o.o_orderpriority IS NOT NULL),
-        |red AS (
-        |  SELECT g, var, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(y) AS BIGINT) AS x
-        |  FROM j GROUP BY 1, 2),
-        |piv AS (
-        |  SELECT g,
-        |    COALESCE(max(CASE WHEN var = 'BUILDING' THEN n END), 0) AS na,
-        |    COALESCE(max(CASE WHEN var = 'BUILDING' THEN x END), 0) AS xa,
-        |    COALESCE(max(CASE WHEN var = 'MACHINERY' THEN n END), 0) AS nb,
-        |    COALESCE(max(CASE WHEN var = 'MACHINERY' THEN x END), 0) AS xb
-        |  FROM red GROUP BY 1),
-        |d AS (
-        |  SELECT *, na >= 1 AND nb >= 1 AS hasboth,
-        |    CAST(xb AS DOUBLE) / CAST(nb AS DOUBLE)
-        |      - CAST(xa AS DOUBLE) / CAST(na AS DOUBLE) AS gd
-        |  FROM piv),
-        |tot AS (
-        |  SELECT CAST(count(*) FILTER (hasboth) AS BIGINT) AS n_groups,
-        |    CAST(COALESCE(sum(na), 0) AS BIGINT) AS tna,
-        |    CAST(COALESCE(sum(xa), 0) AS BIGINT) AS txa,
-        |    CAST(COALESCE(sum(nb), 0) AS BIGINT) AS tnb,
-        |    CAST(COALESCE(sum(xb), 0) AS BIGINT) AS txb,
-        |    CAST(count(*) FILTER (hasboth AND gd > 0) AS BIGINT)
-        |      AS groups_b_better,
-        |    CAST(count(*) FILTER (hasboth AND gd < 0) AS BIGINT)
-        |      AS groups_a_better,
-        |    CAST(count(*) FILTER (hasboth AND gd = 0.0) AS BIGINT)
-        |      AS groups_tied
-        |  FROM d),
-        |p AS (
-        |  SELECT *,
-        |    CAST(txa AS DOUBLE) / CAST(tna AS DOUBLE) AS pa,
-        |    CAST(txb AS DOUBLE) / CAST(tnb AS DOUBLE) AS pb
-        |  FROM tot)
-        |SELECT n_groups,
-        |  CASE WHEN tna >= 1 THEN round(pa, 6) END AS pooled_p_a,
-        |  CASE WHEN tnb >= 1 THEN round(pb, 6) END AS pooled_p_b,
-        |  CASE WHEN tna >= 1 AND tnb >= 1 THEN round(pb - pa, 6) END
-        |    AS pooled_diff,
-        |  groups_b_better, groups_a_better, groups_tied,
-        |  COALESCE(CASE WHEN tna >= 1 AND tnb >= 1 AND n_groups > 0 THEN
-        |    (pb - pa > 0 AND groups_b_better = 0 AND groups_a_better > 0)
-        |    OR (pb - pa < 0 AND groups_a_better = 0
-        |      AND groups_b_better > 0) END, FALSE) AS reversal
-        |FROM p""".stripMargin,
-    // q293: the same nine exact micro moments, the same fixed-order
-    // Cramer expansion, weights re-snapped before the residual pass
-    "q293_ridge" ->
-      """WITH b AS (
-        |  SELECT CAST(round(CAST(l_quantity AS DOUBLE) * 1000000.0)
-        |      AS BIGINT) AS x1,
-        |    CAST(round(CAST(l_discount AS DOUBLE) * 1000000.0)
-        |      AS BIGINT) AS x2,
-        |    CAST(round(CAST(l_extendedprice AS DOUBLE) * 1000000.0)
-        |      AS BIGINT) AS y
-        |  FROM lineitem WHERE l_quantity IS NOT NULL
-        |    AND l_discount IS NOT NULL AND l_extendedprice IS NOT NULL),
-        |mom AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(x1) AS HUGEINT) AS s1, CAST(sum(x2) AS HUGEINT) AS s2,
-        |    CAST(sum(y) AS HUGEINT) AS sy,
-        |    CAST(sum(CAST(x1 AS HUGEINT) * x1) AS HUGEINT) AS s11,
-        |    CAST(sum(CAST(x2 AS HUGEINT) * x2) AS HUGEINT) AS s22,
-        |    CAST(sum(CAST(x1 AS HUGEINT) * x2) AS HUGEINT) AS s12,
-        |    CAST(sum(CAST(x1 AS HUGEINT) * y) AS HUGEINT) AS s1y,
-        |    CAST(sum(CAST(x2 AS HUGEINT) * y) AS HUGEINT) AS s2y,
-        |    CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
-        |  FROM b),
-        |d AS (
-        |  SELECT n, sy, syy,
-        |    CAST(n AS DOUBLE) AS nd,
-        |    CAST(s1 AS DOUBLE) / 1000000.0 AS s1d,
-        |    CAST(s2 AS DOUBLE) / 1000000.0 AS s2d,
-        |    CAST(sy AS DOUBLE) / 1000000.0 AS syd,
-        |    CAST(s11 AS DOUBLE) / 1000000000000.0 + 1.0 AS m11,
-        |    CAST(s22 AS DOUBLE) / 1000000000000.0 + 1.0 AS m22,
-        |    CAST(s12 AS DOUBLE) / 1000000000000.0 AS m12,
-        |    CAST(s1y AS DOUBLE) / 1000000000000.0 AS s1yd,
-        |    CAST(s2y AS DOUBLE) / 1000000000000.0 AS s2yd,
-        |    CAST(syy AS DOUBLE) / 1000000000000.0 AS syyd
-        |  FROM mom WHERE n > 0),
-        |fit AS (
-        |  SELECT n, nd, syd, syyd,
-        |    round((syd * (m11 * m22 - m12 * m12)
-        |      - s1d * (s1yd * m22 - m12 * s2yd)
-        |      + s2d * (s1yd * m12 - m11 * s2yd))
-        |      / (nd * (m11 * m22 - m12 * m12)
-        |        - s1d * (s1d * m22 - m12 * s2d)
-        |        + s2d * (s1d * m12 - m11 * s2d)), 6) AS bias,
-        |    round((nd * (s1yd * m22 - m12 * s2yd)
-        |      - syd * (s1d * m22 - m12 * s2d)
-        |      + s2d * (s1d * s2yd - s1yd * s2d))
-        |      / (nd * (m11 * m22 - m12 * m12)
-        |        - s1d * (s1d * m22 - m12 * s2d)
-        |        + s2d * (s1d * m12 - m11 * s2d)), 6) AS w1,
-        |    round((nd * (m11 * s2yd - s1yd * m12)
-        |      - s1d * (s1d * s2yd - s1yd * s2d)
-        |      + syd * (s1d * m12 - m11 * s2d))
-        |      / (nd * (m11 * m22 - m12 * m12)
-        |        - s1d * (s1d * m22 - m12 * s2d)
-        |        + s2d * (s1d * m12 - m11 * s2d)), 6) AS w2
-        |  FROM d),
-        |sse AS (
-        |  SELECT CAST(COALESCE(sum(CAST(round(
-        |      (CAST(b.y AS DOUBLE) / 1000000.0
-        |        - (fit.bias + fit.w1 * (CAST(b.x1 AS DOUBLE) / 1000000.0)
-        |          + fit.w2 * (CAST(b.x2 AS DOUBLE) / 1000000.0)))
-        |      * (CAST(b.y AS DOUBLE) / 1000000.0
-        |        - (fit.bias + fit.w1 * (CAST(b.x1 AS DOUBLE) / 1000000.0)
-        |          + fit.w2 * (CAST(b.x2 AS DOUBLE) / 1000000.0)))
-        |      * 1000000.0) AS HUGEINT)), 0) AS HUGEINT) AS ssem
-        |  FROM b, fit)
-        |SELECT fit.n AS n_rows, CAST(1.0 AS DOUBLE) AS lambda, fit.bias,
-        |  fit.w1 AS w_l_quantity, fit.w2 AS w_l_discount,
-        |  CASE WHEN syyd - syd * syd / nd > 0 THEN
-        |    round(1.0 - CAST(sse.ssem AS DOUBLE) / 1000000.0
-        |      / (syyd - syd * syd / nd), 6) END AS r2
-        |FROM fit, sse""".stripMargin,
-    // q292: the same step-edge KS against the fitted exponential; the
-    // transcendental F rides mirrored doubles under the 6dp quantum
-    "q292_exponential_gof" ->
-      """WITH g AS (
-        |  SELECT event_type AS grp,
-        |    CAST(round((CAST(epoch_us(CAST(ts AS TIMESTAMP))
-        |      - lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
-        |        (PARTITION BY user_id, event_type
-        |         ORDER BY CAST(ts AS TIMESTAMP), event_id) AS DOUBLE)
-        |      / 1000000.0) * 1000000.0) AS BIGINT) AS vm
-        |  FROM events),
-        |g2 AS (SELECT grp, vm FROM g WHERE vm IS NOT NULL AND vm >= 0),
-        |grid AS (
-        |  SELECT grp, vm, CAST(count(*) AS BIGINT) AS c
-        |  FROM g2 GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT grp, vm, c,
-        |    sum(c) OVER (PARTITION BY grp ORDER BY vm) AS cw,
-        |    sum(CAST(c AS HUGEINT) * vm) OVER (PARTITION BY grp) AS sv,
-        |    sum(c) OVER (PARTITION BY grp) AS n
-        |  FROM grid),
-        |t AS (
-        |  SELECT grp, n,
-        |    CAST(sv AS DOUBLE) / 1000000.0 / CAST(n AS DOUBLE) AS mean,
-        |    CASE WHEN sv > 0 THEN greatest(
-        |      abs(CAST(cw AS DOUBLE) / CAST(n AS DOUBLE)
-        |        - (1.0 - exp(-1.0 * (1.0 / (CAST(sv AS DOUBLE) / 1000000.0
-        |            / CAST(n AS DOUBLE)))
-        |          * (CAST(vm AS DOUBLE) / 1000000.0)))),
-        |      abs(CAST(cw - c AS DOUBLE) / CAST(n AS DOUBLE)
-        |        - (1.0 - exp(-1.0 * (1.0 / (CAST(sv AS DOUBLE) / 1000000.0
-        |            / CAST(n AS DOUBLE)))
-        |          * (CAST(vm AS DOUBLE) / 1000000.0))))) END AS d
-        |  FROM cum),
-        |red AS (
-        |  SELECT grp, CAST(max(n) AS BIGINT) AS n, max(mean) AS mean,
-        |    max(d) AS dmax
-        |  FROM t GROUP BY 1)
-        |SELECT grp AS event_type, n, round(mean, 6) AS mean,
-        |  CASE WHEN mean > 0 THEN round(1.0 / mean, 6) END AS lambda,
-        |  CASE WHEN mean > 0 THEN round(dmax, 6) END AS ks_d,
-        |  COALESCE(CASE WHEN mean > 0 THEN
-        |    dmax > 1.358 / sqrt(CAST(n AS DOUBLE)) END, FALSE)
-        |    AS reject_95_conservative
-        |FROM red""".stripMargin,
-    // q290: exact micro moments -> mirrored sd/weights, micro-snapped
-    // fractional parts, largest-remainder ranks tie to the smaller key
-    "q290_neyman_alloc" ->
-      """WITH d AS (
-        |  SELECT source AS st,
-        |    CAST(round(CAST(len(string_split(text, ' ')) AS DOUBLE)
-        |      * 1000000.0) AS BIGINT) AS vm
-        |  FROM documents),
-        |red AS (
-        |  SELECT st, CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(sum(vm) AS HUGEINT) AS s1,
-        |    CAST(sum(CAST(vm AS HUGEINT) * vm) AS HUGEINT) AS s2
-        |  FROM d GROUP BY 1),
-        |sdw AS (
-        |  SELECT st, n_rows,
-        |    sqrt(greatest((CAST(s2 AS DOUBLE) / 1000000000000.0
-        |      - (CAST(s1 AS DOUBLE) / 1000000.0)
-        |        * (CAST(s1 AS DOUBLE) / 1000000.0)
-        |        / CAST(n_rows AS DOUBLE))
-        |      / CAST(n_rows AS DOUBLE), 0.0)) AS sd
-        |  FROM red),
-        |w AS (
-        |  SELECT st, n_rows, sd, CAST(n_rows AS DOUBLE) * sd AS wgt,
-        |    (SELECT sum(CAST(n_rows AS DOUBLE) * sd) FROM sdw) AS wt
-        |  FROM sdw),
-        |calc AS (
-        |  SELECT *, 10000.0 * wgt / wt AS raw FROM w),
-        |fl AS (
-        |  SELECT *,
-        |    CASE WHEN wt > 0 THEN CAST(floor(raw) AS BIGINT) END AS flr,
-        |    CAST(round((raw - floor(raw)) * 1000000.0) AS BIGINT) AS fracm
-        |  FROM calc),
-        |rk AS (
-        |  SELECT *,
-        |    CAST(row_number() OVER (ORDER BY fracm DESC, st ASC)
-        |      AS BIGINT) AS r,
-        |    (SELECT 10000 - sum(flr) FROM fl) AS rem
-        |  FROM fl)
-        |SELECT st AS source, n_rows, round(sd, 6) AS sd,
-        |  CASE WHEN wt > 0 THEN round(wgt / wt, 6) END AS weight_share,
-        |  CASE WHEN wt > 0 THEN
-        |    flr + CASE WHEN r <= rem THEN 1 ELSE 0 END END AS alloc,
-        |  CASE WHEN wt > 0 THEN least(
-        |    flr + CASE WHEN r <= rem THEN 1 ELSE 0 END, n_rows) END
-        |    AS feasible_alloc
-        |FROM rk""".stripMargin,
-    // q291: the same weighted histogram cut at ceil(p*W) micro-units
-    "q291_weighted_percentiles" ->
-      """WITH d AS (
-        |  SELECT CAST(round(CAST(len(string_split(text, ' ')) AS DOUBLE)
-        |    * 1000000.0) AS BIGINT) AS vm
-        |  FROM documents
-        |  WHERE CAST(len(string_split(text, ' ')) AS DOUBLE) > 0),
-        |hist AS (
-        |  SELECT vm, CAST(sum(vm) AS HUGEINT) AS w FROM d GROUP BY 1),
-        |cum AS (
-        |  SELECT vm, sum(w) OVER (ORDER BY vm) AS cw,
-        |    sum(w) OVER () AS tw
-        |  FROM hist),
-        |g AS (SELECT unnest([CAST(0.25 AS DOUBLE), CAST(0.5 AS DOUBLE),
-        |  CAST(0.9 AS DOUBLE), CAST(0.99 AS DOUBLE)]) AS p)
-        |SELECT g.p,
-        |  round(CAST(max(cum.tw) AS DOUBLE) / 1000000.0, 6)
-        |    AS total_weight,
-        |  round(CAST(min(CASE WHEN CAST(cum.cw AS DOUBLE)
-        |      >= ceil(g.p * CAST(cum.tw AS DOUBLE)) THEN cum.vm END)
-        |    AS DOUBLE) / 1000000.0, 6) AS q
-        |FROM g, cum GROUP BY 1""".stripMargin,
-    // q289: the q231 unrolled-GD replay over document features, plus the
-    // binomial noise band on the SAME rounded accuracy
-    "q289_c2st" ->
-      """WITH base AS (
-        |  SELECT CASE WHEN source = 'src1' THEN 1.0 ELSE 0.0 END AS y,
-        |    CAST(n_chars AS DOUBLE) AS x0,
-        |    CAST(len(string_split(text, ' ')) AS DOUBLE) AS x1
-        |  FROM documents WHERE source IN ('src0', 'src1')
-        |    AND n_chars IS NOT NULL AND text IS NOT NULL),
-        |st AS (SELECT round(avg(x0), 6) AS m0,
-        |    round(stddev_pop(x0), 6) AS s0,
-        |    round(avg(x1), 6) AS m1, round(stddev_pop(x1), 6) AS s1
-        |  FROM base),
-        |z AS (SELECT y, (x0 - m0) / s0 AS z0, (x1 - m1) / s1 AS z1
-        |  FROM base, st),
-        |w1 AS (SELECT round(0 - 0.5 * avg(0.5 - y), 6) AS b,
-        |    round(0 - 0.5 * avg((0.5 - y) * z0), 6) AS wa,
-        |    round(0 - 0.5 * avg((0.5 - y) * z1), 6) AS wb FROM z),
-        |p2 AS (SELECT z.*,
-        |    1.0 / (1.0 + exp(-(w1.b + w1.wa * z0 + w1.wb * z1))) AS p,
-        |    w1.b AS pb, w1.wa AS pwa, w1.wb AS pwb FROM z, w1),
-        |w2 AS (SELECT round(first(pb) - 0.5 * avg(p - y), 6) AS b,
-        |    round(first(pwa) - 0.5 * avg((p - y) * z0), 6) AS wa,
-        |    round(first(pwb) - 0.5 * avg((p - y) * z1), 6) AS wb FROM p2),
-        |p3 AS (SELECT z.*,
-        |    1.0 / (1.0 + exp(-(w2.b + w2.wa * z0 + w2.wb * z1))) AS p,
-        |    w2.b AS pb, w2.wa AS pwa, w2.wb AS pwb FROM z, w2),
-        |w3 AS (SELECT round(first(pb) - 0.5 * avg(p - y), 6) AS b,
-        |    round(first(pwa) - 0.5 * avg((p - y) * z0), 6) AS wa,
-        |    round(first(pwb) - 0.5 * avg((p - y) * z1), 6) AS wb FROM p3),
-        |sel AS (SELECT z.y, z.z0, z.z1,
-        |    w3.b + w3.wa * z0 + w3.wb * z1 AS zf,
-        |    w3.b AS b, w3.wa AS wa, w3.wb AS wb FROM z, w3),
-        |fit AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(3 AS BIGINT) AS n_iters,
-        |  first(b) AS bias, first(wa) AS w_n_chars, first(wb) AS w_n_tokens,
-        |  round(avg(greatest(zf, 0.0) - y * zf
-        |    + ln(1.0 + exp(-abs(zf)))), 6) AS log_loss,
-        |  round(avg(CASE WHEN (CASE WHEN zf >= 0 THEN 1.0 ELSE 0.0 END) = y
-        |    THEN 1.0 ELSE 0.0 END), 6) AS accuracy
-        |FROM sel)
-        |SELECT *,
-        |  abs(accuracy - 0.5)
-        |    > 1.959964 * sqrt(0.25 / CAST(n_rows AS DOUBLE)) AS shifted
-        |FROM fit""".stripMargin,
-    // q288: the same two key profiles + exact HUGEINT products; the
-    // verdict replays off identical integers
-    "q288_join_advisor" ->
-      """WITH ca AS (
-        |  SELECT CAST(o_custkey AS VARCHAR) AS k,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM orders WHERE o_custkey IS NOT NULL GROUP BY 1),
-        |cb AS (
-        |  SELECT CAST(c_custkey AS VARCHAR) AS k,
-        |    CAST(count(*) AS BIGINT) AS m
-        |  FROM customer WHERE c_custkey IS NOT NULL GROUP BY 1),
-        |sa AS (
-        |  SELECT CAST(COALESCE(sum(n), 0) AS BIGINT) AS rows_a,
-        |    CAST(count(*) AS BIGINT) AS ndv_a,
-        |    CAST(COALESCE(max(n), 0) AS BIGINT) AS max_mult_a
-        |  FROM ca),
-        |sb AS (
-        |  SELECT CAST(COALESCE(sum(m), 0) AS BIGINT) AS rows_b,
-        |    CAST(count(*) AS BIGINT) AS ndv_b,
-        |    CAST(COALESCE(max(m), 0) AS BIGINT) AS max_mult_b
-        |  FROM cb),
-        |prod AS (
-        |  SELECT ca.k, CAST(ca.n AS HUGEINT) * cb.m AS p
-        |  FROM ca JOIN cb USING (k)),
-        |tot AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS matched_keys,
-        |    CAST(COALESCE(sum(p), 0) AS HUGEINT) AS join_rows,
-        |    max(p) AS pmax
-        |  FROM prod),
-        |top AS (
-        |  SELECT min(prod.k) AS top_key FROM prod, tot
-        |  WHERE prod.p = tot.pmax)
-        |SELECT sa.rows_a, sa.ndv_a, sa.max_mult_a,
-        |  sb.rows_b, sb.ndv_b, sb.max_mult_b,
-        |  tot.matched_keys, CAST(tot.join_rows AS BIGINT) AS join_rows,
-        |  top.top_key,
-        |  CASE WHEN tot.matched_keys > 0 THEN
-        |    round(CAST(tot.pmax AS DOUBLE)
-        |      / CAST(tot.join_rows AS DOUBLE), 6) END AS top_share,
-        |  CASE WHEN sb.rows_b <= 1000 THEN 'broadcast'
-        |       WHEN tot.matched_keys > 0 AND CAST(tot.pmax AS DOUBLE)
-        |         > 10.0 * (CAST(tot.join_rows AS DOUBLE)
-        |           / CAST(tot.matched_keys AS DOUBLE)) THEN 'salted_shuffle'
-        |       ELSE 'shuffle' END AS strategy
-        |FROM sa, sb, tot, top""".stripMargin,
-    // q287: the same zero-filled calendar + the recurrence as a recursive
-    // CTE, state re-rounded to 6 dp each step exactly like the fold
-    "q287_holt_forecast" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type AS k, CAST(CAST(ts AS TIMESTAMP) AS DATE)
-        |      AS day,
-        |    round(sum(CAST(value AS DOUBLE)), 6) AS y
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-        |  GROUP BY 1, 2),
-        |span AS (
-        |  SELECT k, min(day) AS d0,
-        |    datediff('day', min(day), max(day)) AS nd
-        |  FROM daily GROUP BY 1),
-        |cal AS (
-        |  SELECT s.k, s.d0 + CAST(gs.g AS INT) AS day
-        |  FROM span s, LATERAL unnest(generate_series(0, s.nd)) AS gs(g)),
-        |series AS (
-        |  SELECT c.k,
-        |    row_number() OVER (PARTITION BY c.k ORDER BY c.day) AS t,
-        |    COALESCE(d.y, 0.0) AS y
-        |  FROM cal c LEFT JOIN daily d ON c.k = d.k AND c.day = d.day),
-        |nn AS (SELECT k, CAST(max(t) AS BIGINT) AS n FROM series GROUP BY 1),
-        |rec AS (
-        |  SELECT y2.k, 2 AS t, y2.y AS l, round(y2.y - y1.y, 6) AS b
-        |  FROM series y1 JOIN series y2 ON y1.k = y2.k
-        |  WHERE y1.t = 1 AND y2.t = 2
-        |  UNION ALL
-        |  SELECT k, t, l2 AS l, round(0.3 * (l2 - l) + 0.7 * b, 6) AS b
-        |  FROM (
-        |    SELECT r.k, r.t + 1 AS t, r.l, r.b,
-        |      round(0.5 * s.y + 0.5 * (r.l + r.b), 6) AS l2
-        |    FROM rec r JOIN series s ON s.k = r.k AND s.t = r.t + 1)),
-        |last AS (
-        |  SELECT rec.k, rec.l, rec.b FROM rec JOIN nn ON rec.k = nn.k
-        |  WHERE rec.t = nn.n),
-        |base AS (
-        |  SELECT nn.k, nn.n AS n_days,
-        |    CASE WHEN nn.n >= 2 THEN last.l
-        |         ELSE (SELECT y FROM series WHERE series.k = nn.k
-        |               AND series.t = 1) END AS level,
-        |    CASE WHEN nn.n >= 2 THEN last.b END AS trend
-        |  FROM nn LEFT JOIN last ON nn.k = last.k)
-        |SELECT b.k AS event_type, CAST(b.n_days AS INT) AS n_days,
-        |  b.level, b.trend, CAST(h.h AS INT) AS h,
-        |  CASE WHEN b.n_days >= 2 THEN
-        |    round(b.level + CAST(h.h AS DOUBLE) * b.trend, 6) END
-        |    AS forecast
-        |FROM base b, LATERAL unnest(generate_series(1, 7)) AS h(h)""".stripMargin,
-    // q284: pooled z + Wilson, every statistic closed-form arithmetic on
-    // the same exact counts (z constants as in-engine products)
-    "q284_conversion_ab" ->
-      """WITH j AS (
-        |  SELECT c.c_nationkey AS g, c.c_mktsegment AS var,
-        |    CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS y
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
-        |    AND o.o_orderpriority IS NOT NULL),
-        |red AS (
-        |  SELECT g, var, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(y) AS BIGINT) AS x
-        |  FROM j GROUP BY 1, 2),
-        |piv AS (
-        |  SELECT g,
-        |    COALESCE(max(CASE WHEN var = 'BUILDING' THEN n END), 0) AS n_a,
-        |    COALESCE(max(CASE WHEN var = 'BUILDING' THEN x END), 0) AS x_a,
-        |    COALESCE(max(CASE WHEN var = 'MACHINERY' THEN n END), 0) AS n_b,
-        |    COALESCE(max(CASE WHEN var = 'MACHINERY' THEN x END), 0) AS x_b
-        |  FROM red GROUP BY 1),
-        |d AS (
-        |  SELECT g, n_a, x_a, n_b, x_b,
-        |    CAST(n_a AS DOUBLE) AS na, CAST(x_a AS DOUBLE) AS xa,
-        |    CAST(n_b AS DOUBLE) AS nb, CAST(x_b AS DOUBLE) AS xb
-        |  FROM piv),
-        |s AS (
-        |  SELECT *,
-        |    (xa + xb) / (na + nb) AS pool,
-        |    xb / nb - xa / na AS diff
-        |  FROM d)
-        |SELECT g AS c_nationkey, n_a, x_a, n_b, x_b,
-        |  CASE WHEN n_a >= 1 THEN round(xa / na, 6) END AS p_a,
-        |  CASE WHEN n_a >= 1 THEN round(
-        |    ((xa + 1.959964 * 1.959964 / 2.0) - 1.959964 *
-        |      sqrt(xa * (na - xa) / na + 1.959964 * 1.959964 / 4.0))
-        |    / (na + 1.959964 * 1.959964), 6) END AS p_a_lo,
-        |  CASE WHEN n_a >= 1 THEN round(
-        |    ((xa + 1.959964 * 1.959964 / 2.0) + 1.959964 *
-        |      sqrt(xa * (na - xa) / na + 1.959964 * 1.959964 / 4.0))
-        |    / (na + 1.959964 * 1.959964), 6) END AS p_a_hi,
-        |  CASE WHEN n_b >= 1 THEN round(xb / nb, 6) END AS p_b,
-        |  CASE WHEN n_b >= 1 THEN round(
-        |    ((xb + 1.959964 * 1.959964 / 2.0) - 1.959964 *
-        |      sqrt(xb * (nb - xb) / nb + 1.959964 * 1.959964 / 4.0))
-        |    / (nb + 1.959964 * 1.959964), 6) END AS p_b_lo,
-        |  CASE WHEN n_b >= 1 THEN round(
-        |    ((xb + 1.959964 * 1.959964 / 2.0) + 1.959964 *
-        |      sqrt(xb * (nb - xb) / nb + 1.959964 * 1.959964 / 4.0))
-        |    / (nb + 1.959964 * 1.959964), 6) END AS p_b_hi,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1 THEN round(diff, 6) END AS diff,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1 AND x_a + x_b > 0
-        |        AND x_a + x_b < n_a + n_b THEN
-        |    round(diff / sqrt(pool * (1.0 - pool)
-        |      * (1.0 / na + 1.0 / nb)), 6) END AS z,
-        |  COALESCE(CASE WHEN n_a >= 1 AND n_b >= 1 AND x_a + x_b > 0
-        |        AND x_a + x_b < n_a + n_b THEN
-        |    abs(diff / sqrt(pool * (1.0 - pool)
-        |      * (1.0 / na + 1.0 / nb))) > 1.959964 END, FALSE)
-        |    AS significant
-        |FROM s""".stripMargin,
-    // q285: exact order statistics read off the cumulative histogram,
-    // rank = clamp(ceil(p*n)), quantile grid cast to DOUBLE
-    "q285_qte" ->
-      """WITH j AS (
-        |  SELECT c.c_mktsegment AS var,
-        |    CAST(round(CAST(o.o_totalprice AS DOUBLE) * 1000000.0)
-        |      AS BIGINT) AS vm
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
-        |    AND o.o_totalprice IS NOT NULL),
-        |grid AS (
-        |  SELECT vm,
-        |    CAST(count(*) FILTER (var = 'BUILDING') AS BIGINT) AS ca,
-        |    CAST(count(*) FILTER (var = 'MACHINERY') AS BIGINT) AS cb
-        |  FROM j GROUP BY 1),
-        |cum AS (
-        |  SELECT vm,
-        |    sum(ca) OVER (ORDER BY vm) AS cuma,
-        |    sum(cb) OVER (ORDER BY vm) AS cumb,
-        |    sum(ca) OVER () AS na, sum(cb) OVER () AS nb
-        |  FROM grid),
-        |q AS (
-        |  SELECT unnest([CAST(0.1 AS DOUBLE), CAST(0.25 AS DOUBLE),
-        |    CAST(0.5 AS DOUBLE), CAST(0.75 AS DOUBLE),
-        |    CAST(0.9 AS DOUBLE), CAST(0.99 AS DOUBLE)]) AS quantile),
-        |hits AS (
-        |  SELECT q.quantile,
-        |    CAST(max(cum.na) AS BIGINT) AS n_a,
-        |    CAST(max(cum.nb) AS BIGINT) AS n_b,
-        |    min(CASE WHEN cum.cuma >= least(greatest(
-        |        CAST(ceil(q.quantile * CAST(cum.na AS DOUBLE)) AS BIGINT),
-        |        1), cum.na) THEN cum.vm END) AS qa,
-        |    min(CASE WHEN cum.cumb >= least(greatest(
-        |        CAST(ceil(q.quantile * CAST(cum.nb AS DOUBLE)) AS BIGINT),
-        |        1), cum.nb) THEN cum.vm END) AS qb
-        |  FROM q, cum GROUP BY 1)
-        |SELECT quantile, n_a, n_b,
-        |  CASE WHEN n_a >= 1
-        |       THEN round(CAST(qa AS DOUBLE) / 1000000.0, 6) END AS q_a,
-        |  CASE WHEN n_b >= 1
-        |       THEN round(CAST(qb AS DOUBLE) / 1000000.0, 6) END AS q_b,
-        |  CASE WHEN n_a >= 1 AND n_b >= 1
-        |       THEN round(CAST(qb - qa AS DOUBLE) / 1000000.0, 6) END AS qte
-        |FROM hits""".stripMargin,
-    // q286: per value block, kept copies = overlap of its rank span with
-    // [t+1, n-t]; micro-sums exact in HUGEINT
-    "q286_trimmed_diff" ->
-      """WITH e AS (
-        |  SELECT event_type AS var,
-        |    CAST(round(value * 1000000.0) AS BIGINT) AS vm
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'purchase')),
-        |grid AS (
-        |  SELECT vm,
-        |    CAST(count(*) FILTER (var = 'click') AS BIGINT) AS ca,
-        |    CAST(count(*) FILTER (var = 'purchase') AS BIGINT) AS cb
-        |  FROM e GROUP BY 1),
-        |cum AS (
-        |  SELECT vm, ca, cb,
-        |    sum(ca) OVER (ORDER BY vm) AS cuma,
-        |    sum(cb) OVER (ORDER BY vm) AS cumb,
-        |    sum(ca) OVER () AS na, sum(cb) OVER () AS nb
-        |  FROM grid),
-        |k AS (
-        |  SELECT vm, na, nb,
-        |    greatest(0, least(cuma, na - ta) - greatest(cuma - ca, ta))
-        |      AS ka,
-        |    greatest(0, least(cumb, nb - tb) - greatest(cumb - cb, tb))
-        |      AS kb
-        |  FROM (SELECT *,
-        |      CAST(floor(0.05 * CAST(na AS DOUBLE)) AS BIGINT) AS ta,
-        |      CAST(floor(0.05 * CAST(nb AS DOUBLE)) AS BIGINT) AS tb
-        |    FROM cum)),
-        |red AS (
-        |  SELECT CAST(max(na) AS BIGINT) AS n_a,
-        |    CAST(max(nb) AS BIGINT) AS n_b,
-        |    CAST(COALESCE(sum(ka), 0) AS BIGINT) AS kept_a,
-        |    CAST(COALESCE(sum(kb), 0) AS BIGINT) AS kept_b,
-        |    CAST(sum(CAST(ka AS HUGEINT) * vm) AS HUGEINT) AS sa,
-        |    CAST(sum(CAST(kb AS HUGEINT) * vm) AS HUGEINT) AS sb
-        |  FROM k)
-        |SELECT n_a, n_b, kept_a, kept_b,
-        |  CASE WHEN kept_a > 0 THEN round(CAST(sa AS DOUBLE)
-        |    / (1000000.0 * CAST(kept_a AS DOUBLE)), 6) END AS tmean_a,
-        |  CASE WHEN kept_b > 0 THEN round(CAST(sb AS DOUBLE)
-        |    / (1000000.0 * CAST(kept_b AS DOUBLE)), 6) END AS tmean_b,
-        |  CASE WHEN kept_a > 0 AND kept_b > 0 THEN
-        |    round(CAST(sb AS DOUBLE) / (1000000.0 * CAST(kept_b AS DOUBLE))
-        |      - CAST(sa AS DOUBLE) / (1000000.0 * CAST(kept_a AS DOUBLE)),
-        |      6) END AS diff
-        |FROM red WHERE n_a + n_b > 0""".stripMargin,
-    // q283: same md5 jitter, integer floor-division batches, running max
-    // over the batch table, exact microsecond lateness
-    "q283_watermark_plan" ->
-      s"""WITH e AS (
-         |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-         |    epoch_us(CAST(ts AS TIMESTAMP))
-         |      + ${md5ModSql("event_id", 30000000)} AS arr
-         |  FROM events WHERE ts IS NOT NULL),
-         |ev AS (SELECT us, arr // 10000000 AS b FROM e),
-         |wm AS (
-         |  SELECT b, max(bmax) OVER (ORDER BY b
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS w
-         |  FROM (SELECT b, max(us) AS bmax FROM ev GROUP BY 1)),
-         |late AS (
-         |  SELECT greatest(0, COALESCE(wm.w - ev.us, 0)) AS l
-         |  FROM ev JOIN wm USING (b)),
-         |wide AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(COALESCE(max(l), 0) AS BIGINT) AS mx,
-         |    CAST(sum(CASE WHEN l > 0 THEN 1 ELSE 0 END) AS BIGINT) AS d0,
-         |    CAST(sum(CASE WHEN l > 1000000 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS d1,
-         |    CAST(sum(CASE WHEN l > 5000000 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS d5,
-         |    CAST(sum(CASE WHEN l > 10000000 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS d10,
-         |    CAST(sum(CASE WHEN l > 30000000 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS d30
-         |  FROM late),
-         |g AS (
-         |  SELECT unnest([0, 1000000, 5000000, 10000000, 30000000])
-         |      AS delay_us,
-         |    unnest(['d0', 'd1', 'd5', 'd10', 'd30']) AS tag)
-         |SELECT CAST(g.delay_us AS BIGINT) AS delay_us, wide.n AS n_events,
-         |  CASE g.tag WHEN 'd0' THEN d0 WHEN 'd1' THEN d1 WHEN 'd5' THEN d5
-         |    WHEN 'd10' THEN d10 ELSE d30 END AS n_dropped,
-         |  round(CAST(CASE g.tag WHEN 'd0' THEN d0 WHEN 'd1' THEN d1
-         |      WHEN 'd5' THEN d5 WHEN 'd10' THEN d10 ELSE d30 END AS DOUBLE)
-         |    / CAST(wide.n AS DOUBLE), 6) AS pct_dropped,
-         |  wide.mx AS max_lateness_us
-         |FROM g, wide WHERE wide.n > 0""".stripMargin,
-    // q282: the same leave-out algebra - micro-snapped per-(label,shard)
-    // partials, float-roundtripped centroids, argmax with smaller-label
-    // ties, accuracies as divisions of exact counts
-    "q282_source_influence" ->
-      """WITH b AS (
-        |  SELECT vec_id, CAST(vec_id % 4 AS VARCHAR) AS g, label,
-        |    CAST(embedding AS DOUBLE[]) AS e
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL AND label IS NOT NULL),
-        |dims AS (
-        |  SELECT label, g, unnest(e) AS v,
-        |    unnest(generate_series(0, len(e) - 1)) AS dim
-        |  FROM b),
-        |lg AS (
-        |  SELECT label, g, dim,
-        |    CAST(round(sum(v) * 1000000.0) AS BIGINT) AS sm,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM dims GROUP BY 1, 2, 3),
-        |models AS (
-        |  SELECT DISTINCT g AS excl FROM b
-        |  UNION ALL SELECT '__full__'),
-        |cent AS (
-        |  SELECT m.excl, l.label, l.dim,
-        |    CAST(CAST(round(CAST(sum(l.sm) AS DOUBLE)
-        |      / (1000000.0 * CAST(sum(l.n) AS DOUBLE)), 6) AS FLOAT)
-        |      AS DOUBLE) AS cv
-        |  FROM models m JOIN lg l
-        |    ON m.excl = '__full__' OR l.g IS DISTINCT FROM m.excl
-        |  GROUP BY 1, 2, 3
-        |  HAVING sum(l.n) > 0),
-        |cvecs AS (
-        |  SELECT excl, label AS cent_label, list(cv ORDER BY dim) AS cvec
-        |  FROM cent GROUP BY 1, 2),
-        |cn AS (
-        |  SELECT excl, cent_label, cvec,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(cvec, x -> x * x)), (a, y) -> a + y)) AS cnorm
-        |  FROM cvecs),
-        |bn AS (
-        |  SELECT vec_id, g, label, e,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(e, x -> x * x)), (a, y) -> a + y)) AS enorm
-        |  FROM b),
-        |sim AS (
-        |  SELECT t.vec_id, t.label, c.excl, c.cent_label,
-        |    round(list_reduce(list_prepend(0.0,
-        |        list_transform(generate_series(1, len(t.e)),
-        |          k -> t.e[k] * c.cvec[k])), (a, y) -> a + y)
-        |      / (t.enorm * c.cnorm), 6) AS csim
-        |  FROM bn t CROSS JOIN cn c),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id, excl
-        |    ORDER BY csim DESC, cent_label ASC) AS rn
-        |  FROM sim),
-        |accs AS (
-        |  SELECT excl, CAST(count(*) AS BIGINT) AS ne,
-        |    CAST(count(*) FILTER (cent_label IS NOT DISTINCT FROM label)
-        |      AS BIGINT) AS nc
-        |  FROM r WHERE rn = 1 GROUP BY 1),
-        |af AS (
-        |  SELECT CAST(nc AS DOUBLE) / CAST(ne AS DOUBLE) AS v
-        |  FROM accs WHERE excl = '__full__'),
-        |sizes AS (
-        |  SELECT g, CAST(count(*) AS BIGINT) AS n_members FROM b GROUP BY 1)
-        |SELECT s.g AS shard, s.n_members,
-        |  round(af.v, 6) AS acc_full,
-        |  round(CAST(a.nc AS DOUBLE) / CAST(a.ne AS DOUBLE), 6) AS acc_loo,
-        |  round(af.v - CAST(a.nc AS DOUBLE) / CAST(a.ne AS DOUBLE), 6)
-        |    AS influence
-        |FROM sizes s
-        |LEFT JOIN accs a ON s.g IS NOT DISTINCT FROM a.excl
-        |CROSS JOIN af""".stripMargin,
-    // q281: the binomial CDF via the integer recurrence in a recursive
-    // CTE (exact in doubles for n <= 50), then the exact-integer BH cut
-    "q281_sign_fdr" ->
-      """WITH RECURSIVE pm AS (
-        |  SELECT l_suppkey AS k, month(l_shipdate) AS mo,
-        |    CAST(count(*) FILTER (year(l_shipdate) = 1996) AS BIGINT)
-        |      - CAST(count(*) FILTER (year(l_shipdate) = 1995) AS BIGINT)
-        |      AS diff
-        |  FROM lineitem WHERE year(l_shipdate) IN (1995, 1996)
-        |  GROUP BY 1, 2),
-        |sg AS (
-        |  SELECT k, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(count(*) FILTER (diff > 0) AS BIGINT) AS np,
-        |    CAST(count(*) FILTER (diff < 0) AS BIGINT) AS nn
-        |  FROM pm WHERE diff <> 0 GROUP BY 1),
-        |r AS (
-        |  SELECT k, n, least(np, nn) AS kk, 0 AS i,
-        |    CAST(1.0 AS DOUBLE) AS c, CAST(1.0 AS DOUBLE) AS s
-        |  FROM sg WHERE n <= 50
-        |  UNION ALL
-        |  SELECT k, n, kk, i + 1,
-        |    c * (CAST(n AS DOUBLE) - i) / (i + 1),
-        |    s + c * (CAST(n AS DOUBLE) - i) / (i + 1)
-        |  FROM r WHERE i < kk),
-        |cdf AS (SELECT k, s FROM r WHERE i = kk),
-        |pv AS (
-        |  SELECT sg.k,
-        |    CASE WHEN sg.n >= 1 AND sg.n <= 50 THEN
-        |      round(least(1.0, 2.0 * (cdf.s
-        |        / pow(2.0, CAST(sg.n AS DOUBLE)))), 6) END AS p
-        |  FROM sg LEFT JOIN cdf ON sg.k = cdf.k),
-        |fam AS (
-        |  SELECT k, p, CAST(round(p * 1000000.0) AS BIGINT) AS pm6
-        |  FROM pv WHERE p IS NOT NULL),
-        |rk AS (
-        |  SELECT k, p, pm6,
-        |    CAST(row_number() OVER (ORDER BY pm6, k) AS INT) AS rank,
-        |    count(*) OVER () AS m
-        |  FROM fam),
-        |fl AS (
-        |  SELECT k, p, rank, pm6 * m <= rank * 100000 AS flag FROM rk),
-        |ct AS (
-        |  SELECT k, p, rank,
-        |    max(CASE WHEN flag THEN rank END) OVER () AS cutoff
-        |  FROM fl)
-        |SELECT k AS l_suppkey, p, rank,
-        |  rank <= COALESCE(cutoff, 0) AS rejected
-        |FROM ct""".stripMargin,
-    // q261: the q215 training replay grouped by language; fertility is
-    // one division of HUGEINT-exact sums, parity divides by the window
-    // max of the same raw ratio
-    "q261_fertility_parity" -> {
-      val (ctes, nested, bestsFrom) = bpeOracleParts(5)
-      s"""WITH $ctes,
-         |wd AS (
-         |  SELECT doc_id, lang,
-         |    list_transform(generate_series(1, len(w)), i -> w[i:i]) AS chars
-         |  FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
-         |        FROM documents) WHERE len(w) > 0),
-         |tok AS (
-         |  SELECT doc_id, lang, CAST(len(chars) AS BIGINT) AS nc,
-         |    CAST(len($nested) AS BIGINT) AS nt
-         |  FROM wd, $bestsFrom),
-         |per AS (SELECT doc_id, any_value(lang) AS lang,
-         |    CAST(sum(nc) AS BIGINT) AS nc, CAST(sum(nt) AS BIGINT) AS nt
-         |  FROM tok GROUP BY 1),
-         |g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(nc) AS BIGINT) AS n_chars,
-         |    CAST(sum(nt) AS BIGINT) AS n_tokens,
-         |    CAST(sum(nc) AS DOUBLE) / CAST(sum(nt) AS DOUBLE) AS r
-         |  FROM per GROUP BY 1)
-         |SELECT lang, n_docs, n_chars, n_tokens,
-         |  round(r, 6) AS chars_per_token,
-         |  round(r / max(r) OVER (), 6) AS parity
-         |FROM g""".stripMargin
-    },
-    // q260: the Morton interleave replayed as 2*bits masked shifts over
-    // the same clamped buckets (powers-of-two widths are exact doubles);
-    // then q241's rank-div zone machinery per layout
-    "q260_zorder_audit" -> {
-      val zExpr = (0 until 8).map(i =>
-        s"((xb & ${1L << i}) << $i) | ((yb & ${1L << i}) << ${i + 1})")
-        .mkString(" | ")
-      s"""WITH raw AS (SELECT l_orderkey * 8 + l_linenumber AS rid,
-         |    CAST(l_partkey AS DOUBLE) AS c1,
-         |    CAST(l_suppkey AS DOUBLE) AS c2,
-         |    GREATEST(0, LEAST(255, CAST(floor(
-         |      (CAST(l_partkey AS DOUBLE) - 0.0) / 78.125) AS BIGINT))) AS xb,
-         |    GREATEST(0, LEAST(255, CAST(floor(
-         |      (CAST(l_suppkey AS DOUBLE) - 0.0) / 3.90625) AS BIGINT))) AS yb
-         |  FROM lineitem),
-         |base AS (SELECT rid, c1, c2, CAST($zExpr AS DOUBLE) AS zv FROM raw),
-         |nn AS (SELECT count(*) AS n FROM base),
-         |p AS (SELECT probe_col, CAST(lo AS DOUBLE) AS pred_lo,
-         |    CAST(hi AS DOUBLE) AS pred_hi
-         |  FROM (VALUES ('l_partkey', 1000.0, 2000.0),
-         |               ('l_suppkey', 100.0, 150.0)) t(probe_col, lo, hi)),
-         |z1 AS (SELECT ((row_number() OVER (ORDER BY c1, rid) - 1) * 64)
-         |    // n AS f, c1, c2 FROM base, nn),
-         |f1 AS (SELECT f, min(c1) AS mn1, max(c1) AS mx1,
-         |    min(c2) AS mn2, max(c2) AS mx2 FROM z1 GROUP BY 1),
-         |z2 AS (SELECT ((row_number() OVER (ORDER BY zv, rid) - 1) * 64)
-         |    // n AS f, c1, c2 FROM base, nn),
-         |f2 AS (SELECT f, min(c1) AS mn1, max(c1) AS mx1,
-         |    min(c2) AS mn2, max(c2) AS mx2 FROM z2 GROUP BY 1),
-         |mm AS (
-         |  SELECT 'l_partkey' AS sort_key, 'l_partkey' AS probe_col,
-         |    mn1 AS mn, mx1 AS mx FROM f1
-         |  UNION ALL SELECT 'l_partkey', 'l_suppkey', mn2, mx2 FROM f1
-         |  UNION ALL SELECT 'zv', 'l_partkey', mn1, mx1 FROM f2
-         |  UNION ALL SELECT 'zv', 'l_suppkey', mn2, mx2 FROM f2)
-         |SELECT sort_key, probe_col, pred_lo, pred_hi,
-         |  CAST(count(*) AS BIGINT) AS n_files,
-         |  CAST(sum(CASE WHEN mx < pred_lo OR mn > pred_hi THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_skipped,
-         |  CAST(sum(CASE WHEN mx < pred_lo OR mn > pred_hi THEN 1 ELSE 0 END)
-         |    AS DOUBLE) / CAST(count(*) AS DOUBLE) AS skip_ratio
-         |FROM mm JOIN p USING (probe_col)
-         |GROUP BY 1, 2, 3, 4""".stripMargin
-    },
-    // q257: row_number file replay per layout, exact membership counts;
-    // absent probes skip everything
-    "q257_pointskip_audit" ->
-      """WITH base AS (SELECT l_orderkey * 8 + l_linenumber AS rid,
-        |    CAST(l_partkey AS BIGINT) AS k
-        |  FROM lineitem),
-        |nn AS (SELECT count(*) AS n FROM base),
-        |p AS (SELECT CAST(v AS BIGINT) AS probe
-        |  FROM (VALUES (100), (1999), (19999)) t(v)),
-        |s1 AS (SELECT k, ((row_number() OVER (ORDER BY k, rid) - 1) * 64)
-        |    // n AS f FROM base, nn),
-        |c1 AS (SELECT k AS probe, CAST(count(DISTINCT f) AS BIGINT) AS c
-        |  FROM s1 WHERE k IN (100, 1999, 19999) GROUP BY 1),
-        |s2 AS (SELECT k, ((row_number() OVER (ORDER BY rid) - 1) * 64)
-        |    // n AS f FROM base, nn),
-        |c2 AS (SELECT k AS probe, CAST(count(DISTINCT f) AS BIGINT) AS c
-        |  FROM s2 WHERE k IN (100, 1999, 19999) GROUP BY 1)
-        |SELECT 'sorted' AS layout, p.probe, CAST(64 AS BIGINT) AS n_files,
-        |  coalesce(c1.c, 0) AS n_containing,
-        |  CAST(64 - coalesce(c1.c, 0) AS DOUBLE) / 64.0 AS skip_ratio
-        |FROM p LEFT JOIN c1 ON p.probe = c1.probe
-        |UNION ALL
-        |SELECT 'natural', p.probe, CAST(64 AS BIGINT),
-        |  coalesce(c2.c, 0),
-        |  CAST(64 - coalesce(c2.c, 0) AS DOUBLE) / 64.0
-        |FROM p LEFT JOIN c2 ON p.probe = c2.probe""".stripMargin,
-    // q256: same first-seen reduction, strict-forward deltas, q45's
-    // quantile_cont convention
-    "q256_funnel_latency" -> {
-      val steps = Seq("view", "click", "signup", "purchase")
-      val pairs = steps.sliding(2).map { case Seq(a, b) =>
-        s"""SELECT '$a' AS step_from, '$b' AS step_to,
-           |    CAST(b.t - a.t AS DOUBLE) / 1000000.0 AS delta_s
-           |  FROM f a JOIN f b ON a.u = b.u
-           |    AND a.s = '$a' AND b.s = '$b' AND b.t > a.t""".stripMargin
-      }.mkString("\n  UNION ALL\n")
-      s"""WITH f AS (SELECT user_id AS u, event_type AS s,
-         |    min(epoch_us(CAST(ts AS TIMESTAMP))) AS t
-         |  FROM events
-         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-         |    AND event_type IN ('view', 'click', 'signup', 'purchase')
-         |  GROUP BY 1, 2),
-         |d AS (
-         |  $pairs)
-         |SELECT step_from, step_to, CAST(count(*) AS BIGINT) AS n,
-         |  round(avg(delta_s), 6) AS mean,
-         |  round(quantile_cont(delta_s, 0.5), 6) AS p50,
-         |  round(quantile_cont(delta_s, 0.9), 6) AS p90,
-         |  round(quantile_cont(delta_s, 0.99), 6) AS p99
-         |FROM d GROUP BY 1, 2""".stripMargin
-    },
-    // q255: identical micro-snapped dailies, row_number ranks under the
-    // same (metric, day) strict order, HUGEINT-exact sums
-    "q255_spearman_daily" ->
-      """WITH daily AS (SELECT event_type AS k,
-        |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-        |    CAST(round(round(sum(CAST(value AS DOUBLE)), 6) * 1000000.0)
-        |      AS BIGINT) AS m,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-        |  GROUP BY 1, 2),
-        |r AS (SELECT k,
-        |    CAST(row_number() OVER (PARTITION BY k ORDER BY m, d)
-        |      AS BIGINT) AS rx,
-        |    CAST(row_number() OVER (PARTITION BY k ORDER BY c, d)
-        |      AS BIGINT) AS ry
-        |  FROM daily),
-        |s AS (SELECT k, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(rx) AS BIGINT) AS sx, CAST(sum(ry) AS BIGINT) AS sy,
-        |    CAST(sum(rx * ry) AS BIGINT) AS sxy,
-        |    CAST(sum(rx * rx) AS BIGINT) AS sxx,
-        |    CAST(sum(ry * ry) AS BIGINT) AS syy
-        |  FROM r GROUP BY 1)
-        |SELECT k AS key, n AS n_days,
-        |  CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
-        |    AND CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0 THEN
-        |    round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |      / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |        * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-        |  END AS rho
-        |FROM s""".stripMargin,
-    // q254: same epoch-anchored dow, same micro-long cell snap, null-
-    // safe marginal joins; integer sums carry no accumulation order
-    "q254_categorical_mi" ->
-      """WITH e AS (SELECT event_type AS a,
-        |    datediff('day', DATE '1970-01-01',
-        |      CAST(CAST(ts AS TIMESTAMP) AS DATE)) % 7 AS b
-        |  FROM events WHERE ts IS NOT NULL),
-        |g AS (SELECT a, b, count(*) AS nij FROM e GROUP BY 1, 2),
-        |ma AS (SELECT a, CAST(sum(nij) AS BIGINT) AS ni FROM g GROUP BY 1),
-        |mb AS (SELECT b, CAST(sum(nij) AS BIGINT) AS nj FROM g GROUP BY 1),
-        |t AS (SELECT CAST(sum(nij) AS BIGINT) AS n FROM g),
-        |mi AS (SELECT CAST(sum(CAST(round((CAST(nij AS DOUBLE) / n)
-        |      * ln(n * CAST(nij AS DOUBLE)
-        |        / (CAST(ni AS DOUBLE) * CAST(nj AS DOUBLE)))
-        |      * 1000000.0) AS BIGINT)) AS BIGINT) AS mim
-        |  FROM g JOIN ma ON g.a IS NOT DISTINCT FROM ma.a
-        |    JOIN mb ON g.b IS NOT DISTINCT FROM mb.b, t),
-        |ha AS (SELECT CAST(sum(CAST(round(-(CAST(ni AS DOUBLE) / n)
-        |      * ln(CAST(ni AS DOUBLE) / n) * 1000000.0) AS BIGINT))
-        |    AS BIGINT) AS ham FROM ma, t),
-        |hb AS (SELECT CAST(sum(CAST(round(-(CAST(nj AS DOUBLE) / n)
-        |      * ln(CAST(nj AS DOUBLE) / n) * 1000000.0) AS BIGINT))
-        |    AS BIGINT) AS hbm FROM mb, t),
-        |na AS (SELECT CAST(count(*) AS BIGINT) AS n_a FROM ma),
-        |nb AS (SELECT CAST(count(*) AS BIGINT) AS n_b FROM mb)
-        |SELECT t.n AS n, na.n_a, nb.n_b,
-        |  CAST(ham AS DOUBLE) / 1000000.0 AS h_a,
-        |  CAST(hbm AS DOUBLE) / 1000000.0 AS h_b,
-        |  CAST(mim AS DOUBLE) / 1000000.0 AS mi,
-        |  CASE WHEN ham > 0 THEN
-        |    round(CAST(mim AS DOUBLE) / CAST(ham AS DOUBLE), 6)
-        |  END AS u_a_given_b,
-        |  CASE WHEN hbm > 0 THEN
-        |    round(CAST(mim AS DOUBLE) / CAST(hbm AS DOUBLE), 6)
-        |  END AS u_b_given_a
-        |FROM t, mi, ha, hb, na, nb""".stripMargin,
-    // q253: full training replay - same smoothed grid, same micro-long
-    // snap (round-half-away matches on both engines), same integer
-    // score sums and DESC/label-ASC argmax
-    "q253_naive_bayes" ->
-      """WITH b AS (SELECT doc_id, text, lang,
-        |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < '3' AS te
-        |  FROM documents WHERE lang IS NOT NULL AND text IS NOT NULL),
-        |tr AS (SELECT * FROM b WHERE NOT te),
-        |tl AS (SELECT l, t, count(*) AS c FROM (
-        |    SELECT lang AS l, unnest(string_split(text, ' ')) AS t FROM tr)
-        |  WHERE len(t) > 0 GROUP BY 1, 2),
-        |cl AS (SELECT l, CAST(sum(c) AS BIGINT) AS clt FROM tl GROUP BY 1),
-        |vo AS (SELECT DISTINCT t FROM tl),
-        |vs AS (SELECT CAST(count(*) AS BIGINT) AS v FROM vo),
-        |grid AS (SELECT cl.l, vo.t,
-        |    CAST(round(ln(CAST(coalesce(tl.c, 0) + 1 AS DOUBLE)
-        |      / CAST(cl.clt + vs.v AS DOUBLE)) * 1000000.0) AS BIGINT) AS lp
-        |  FROM vo CROSS JOIN cl
-        |    LEFT JOIN tl ON tl.l = cl.l AND tl.t = vo.t, vs),
-        |pr AS (SELECT l, CAST(round(ln(CAST(dl AS DOUBLE) / CAST(d AS DOUBLE))
-        |      * 1000000.0) AS BIGINT) AS plp
-        |  FROM (SELECT lang AS l, count(*) AS dl FROM tr GROUP BY 1),
-        |       (SELECT count(*) AS d FROM tr)),
-        |dt AS (SELECT doc, tru, t, count(*) AS tf FROM (
-        |    SELECT doc_id AS doc, lang AS tru,
-        |      unnest(string_split(text, ' ')) AS t
-        |    FROM b WHERE te)
-        |  WHERE len(t) > 0 GROUP BY 1, 2, 3),
-        |sc AS (SELECT dt.doc, dt.tru, g.l,
-        |    CAST(sum(dt.tf * g.lp) AS BIGINT) AS s
-        |  FROM dt JOIN grid g ON dt.t = g.t GROUP BY 1, 2, 3),
-        |sc2 AS (SELECT sc.doc, sc.tru, sc.l, sc.s + pr.plp AS score
-        |  FROM sc JOIN pr ON sc.l = pr.l),
-        |w AS (SELECT doc, tru, l FROM sc2
-        |  QUALIFY row_number() OVER (PARTITION BY doc
-        |    ORDER BY score DESC, l ASC) = 1)
-        |SELECT tru AS true_label, l AS pred_label,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM w GROUP BY 1, 2""".stripMargin,
-    // q252: HUGEINT-exact sufficient statistics, the closed form as one
-    // mirrored double expression over identical long-valued inputs
-    "q252_ols_trend" ->
-      """WITH daily AS (SELECT event_type AS k,
-        |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-        |    round(sum(CAST(value AS DOUBLE)), 6) AS v
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-        |  GROUP BY 1, 2),
-        |m AS (SELECT k, d, CAST(round(v * 1000000.0) AS BIGINT) AS m
-        |  FROM daily),
-        |b AS (SELECT k, min(d) AS d0 FROM m GROUP BY 1),
-        |x AS (SELECT m.k, CAST(datediff('day', b.d0, m.d) AS BIGINT) AS x,
-        |    m.m FROM m JOIN b ON m.k IS NOT DISTINCT FROM b.k),
-        |s AS (SELECT k, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(m) AS BIGINT) AS sy,
-        |    CAST(sum(x * m) AS BIGINT) AS sxy,
-        |    CAST(sum(x * x) AS BIGINT) AS sxx
-        |  FROM x GROUP BY 1)
-        |SELECT k AS key, n AS n_days,
-        |  CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0 THEN
-        |    round(((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |      / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))) / 1000000.0, 6)
-        |  END AS slope,
-        |  CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0 THEN
-        |    round(((CAST(sy AS DOUBLE) - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |      / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))) * CAST(sx AS DOUBLE))
-        |      / CAST(n AS DOUBLE)) / 1000000.0, 6)
-        |  END AS intercept
-        |FROM s""".stripMargin,
-    "q94_value_moments" -> momentsOracleSql,
-    // q251: identical full-scan recompute - the stream's additive
-    // power-sum merges must finish to the same profile
-    "q251_stream_moments" -> momentsOracleSql,
-    "q95_cluster_best_rep" ->
-      s"""$clusterChainSql,
-         |scored AS (SELECT a.cluster_id, a.doc_id, length(d.text) AS len
-         |           FROM assign a JOIN documents d ON a.doc_id = d.doc_id),
-         |best AS (SELECT cluster_id, doc_id,
-         |           row_number() OVER (PARTITION BY cluster_id
-         |             ORDER BY len DESC, doc_id ASC) AS rn
-         |         FROM scored),
-         |stats AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
-         |            CAST(max(len) AS INTEGER) AS rep_len FROM scored GROUP BY 1)
-         |SELECT s.cluster_id, b.doc_id AS rep_id, s.n_members, s.rep_len
-         |FROM stats s JOIN best b ON s.cluster_id = b.cluster_id AND b.rn = 1""".stripMargin,
-    "q96_split_leakage" ->
-      s"""WITH sh AS (${shingleSql(3)}),
-         |b AS (SELECT doc_id, shingle, ${md5BucketSql("doc_id")} < 90 AS train FROM sh),
-         |tg AS (SELECT DISTINCT shingle FROM b WHERE train),
-         |held AS (SELECT doc_id, shingle FROM b WHERE NOT train),
-         |tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM held GROUP BY 1),
-         |lk AS (SELECT h.doc_id, CAST(count(*) AS BIGINT) AS n_leaked
-         |       FROM held h JOIN tg USING (shingle) GROUP BY 1)
-         |SELECT t.doc_id, t.n_grams,
-         |  coalesce(l.n_leaked, CAST(0 AS BIGINT)) AS n_leaked,
-         |  round(CAST(coalesce(l.n_leaked, 0) AS DOUBLE) / CAST(t.n_grams AS DOUBLE), 6) AS leak_ratio,
-         |  round(CAST(coalesce(l.n_leaked, 0) AS DOUBLE) / CAST(t.n_grams AS DOUBLE), 6) >= 0.5 AS leaky
-         |FROM tot t LEFT JOIN lk l ON t.doc_id = l.doc_id""".stripMargin,
-    "q97_principal_component" -> powerIterSql(64, 3),
-    "q98_label_outliers" ->
-      """WITH m AS (
-        |  SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-        |    unnest(generate_series(0, len(embedding) - 1)) AS dim
-        |  FROM embeddings),
-        |c AS (SELECT label, dim, CAST(CAST(round(avg(v), 6) AS FLOAT) AS DOUBLE) AS cv
-        |      FROM m GROUP BY 1, 2),
-        |cents AS (SELECT label, list(cv ORDER BY dim) AS cvec FROM c GROUP BY 1),
-        |scored AS (
-        |  SELECT e.vec_id, e.label,
-        |    CASE WHEN sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-        |                                    CAST(e.embedding AS DOUBLE[])))
-        |           * sqrt(list_dot_product(t.cvec, t.cvec)) <> 0
-        |      THEN round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), t.cvec), 6)
-        |    END AS cos_to_centroid
-        |  FROM embeddings e JOIN cents t ON e.label = t.label)
-        |SELECT vec_id, label, cos_to_centroid,
-        |  coalesce(cos_to_centroid < 0.2, false) AS is_outlier
-        |FROM scored""".stripMargin,
-    "q100_quantile_filter" ->
-      // the keep threshold is written `1.0 - 0.3` (not `0.7`): the Spark
-      // side computes lit(1.0) - lit(q), and the two IEEE doubles differ
-      // in the last ulp — a boundary row would flip between engines. The
-      // verdict compares the RAW cume_dist (exact k/n), rounding only the
-      // displayed column.
-      """WITH r AS (
-        |  SELECT doc_id, source, n_chars,
-        |    cume_dist() OVER (PARTITION BY source ORDER BY n_chars) AS cd
-        |  FROM documents)
-        |SELECT doc_id, source, n_chars, round(cd, 6) AS cume_dist,
-        |  cd > 1.0 - 0.3 AS kept
-        |FROM r""".stripMargin,
-    "q101_weighted_sample" ->
-      s"""WITH ky AS (
-         |  SELECT doc_id, source, n_chars,
-         |    round(pow(${md5UniformSql("doc_id")}, 1.0 / CAST(n_chars AS DOUBLE)), 6) AS wkey
-         |  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY source
-         |        ORDER BY wkey DESC, doc_id) AS rn FROM ky)
-         |SELECT doc_id, source, n_chars, wkey FROM r WHERE rn <= 10""".stripMargin,
-    // q339: the same %-derived old/new snapshots, id-keyed full outer on
-    // content hashes, rekey audit via distinct-hash membership
-    "q339_corpus_diff" ->
-      """WITH o AS (SELECT doc_id AS id, md5(coalesce(text, '')) AS h
-        |  FROM documents WHERE doc_id % 11 <> 0),
-        |base_new AS (
-        |  SELECT doc_id AS id,
-        |    CASE WHEN doc_id % 3 = 0 THEN 'edited ' || text ELSE text END
-        |      AS text
-        |  FROM documents WHERE doc_id % 5 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS id, text FROM documents
-        |  WHERE doc_id % 13 = 0),
-        |n AS (SELECT id, md5(coalesce(text, '')) AS h FROM base_new),
-        |j AS (SELECT o.h AS ho, n.h AS hn
-        |  FROM o FULL OUTER JOIN n ON o.id = n.id),
-        |st AS (SELECT CASE WHEN ho IS NULL THEN 'added'
-        |    WHEN hn IS NULL THEN 'removed'
-        |    WHEN ho = hn THEN 'unchanged' ELSE 'changed' END AS status,
-        |    ho, hn FROM j),
-        |oh AS (SELECT DISTINCT h FROM o),
-        |nh AS (SELECT DISTINCT h FROM n)
-        |SELECT status, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(coalesce(sum(CASE
-        |    WHEN status = 'added' AND hn IN (SELECT h FROM oh) THEN 1
-        |    WHEN status = 'removed' AND ho IN (SELECT h FROM nh) THEN 1
-        |    ELSE 0 END), 0) AS BIGINT) AS n_content_rekeyed
-        |FROM st GROUP BY 1""".stripMargin,
-    "q102_novelty" ->
-      s"""WITH sh AS (${shingleSql(3)}),
-         |dfc AS (SELECT shingle, CAST(count(*) AS BIGINT) AS dfn FROM sh GROUP BY 1)
-         |SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-         |  CAST(sum(CASE WHEN d.dfn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique,
-         |  round(CAST(sum(CASE WHEN d.dfn = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE), 6) AS novelty
-         |FROM sh s JOIN dfc d ON s.shingle = d.shingle
-         |GROUP BY s.doc_id""".stripMargin,
-    "q103_equidepth" ->
-      """WITH b AS (
-        |  SELECT ntile(10) OVER (ORDER BY l_extendedprice) - 1 AS bucket,
-        |    l_extendedprice AS v
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL)
-        |SELECT CAST(bucket AS BIGINT) AS bucket, CAST(count(*) AS BIGINT) AS n,
-        |  min(v) AS min_val, max(v) AS max_val
-        |FROM b GROUP BY 1""".stripMargin,
-    "q104_rolling_features" ->
-      """SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |  CAST(count(value) OVER w AS BIGINT) AS roll_n,
-        |  round(sum(value) OVER w, 6) AS roll_sum,
-        |  round(avg(value) OVER w, 6) AS roll_avg
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
-        |             ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "q99_column_profile" -> {
-      def prof(c: String, numeric: Boolean): String = {
-        val mn = if (numeric) s"round(CAST(min($c) AS DOUBLE), 6)" else "CAST(NULL AS DOUBLE)"
-        val mx = if (numeric) s"round(CAST(max($c) AS DOUBLE), 6)" else "CAST(NULL AS DOUBLE)"
-        s"""SELECT '$c' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
-           |  CAST(count(*) - count($c) AS BIGINT) AS n_null,
-           |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-           |  $mn AS min_val, $mx AS max_val
-           |FROM lineitem""".stripMargin
-      }
-      Seq("l_orderkey" -> true, "l_suppkey" -> true, "l_quantity" -> true,
-        "l_extendedprice" -> true, "l_returnflag" -> false, "l_shipdate" -> false)
-        .map((prof _).tupled).mkString("\nUNION ALL\n")
-    },
-    "q75_transitions" ->
-      """WITH o AS (
-        |  SELECT event_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY CAST(ts AS TIMESTAMP), event_id) AS next_type
-        |  FROM events)
-        |SELECT event_type AS from_type, next_type AS to_type, count(*) AS n
-        |FROM o WHERE next_type IS NOT NULL GROUP BY 1, 2""".stripMargin,
-    "q76_interarrival" ->
-      """WITH g AS (
-        |  SELECT event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP))
-        |      - lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER (PARTITION BY user_id
-        |          ORDER BY CAST(ts AS TIMESTAMP), event_id) AS gap_us
-        |  FROM events)
-        |SELECT event_type, count(*) AS n,
-        |  CAST(CAST(sum(gap_us) AS BIGINT) AS DOUBLE) / count(*)
-        |    AS mean_gap_us,
-        |  round(quantile_cont(CAST(gap_us AS DOUBLE), 0.5), 6) AS p50_gap_us,
-        |  round(quantile_cont(CAST(gap_us AS DOUBLE), 0.9), 6) AS p90_gap_us
-        |FROM g WHERE gap_us IS NOT NULL GROUP BY 1""".stripMargin,
-    "q55_quality_audit" ->
-      """SELECT count(*) AS total_rows,
-        |  CAST(sum(CASE WHEN NOT coalesce(l_quantity >= 1 AND l_quantity <= 30, FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS viol_qty_range,
-        |  CAST(sum(CASE WHEN NOT coalesce(l_extendedprice > 0, FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS viol_price_positive,
-        |  CAST(sum(CASE WHEN NOT coalesce(l_returnflag IN ('A','N','R'), FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS viol_flag_domain,
-        |  CAST(sum(CASE WHEN NOT coalesce(l_discount <= 0.05, FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS viol_discount_cap
-        |FROM lineitem""".stripMargin,
-    "q54_revenue_trend" ->
-      s"""WITH fact AS ($factSql), daily AS ($dailySql),
-         |monthly AS (
-         |  SELECT SellerID, SellerName, year, month, SUM(total_revenue) AS rev
-         |  FROM daily GROUP BY 1, 2, 3, 4)
-         |SELECT SellerID, SellerName, year, month,
-         |  CAST(rev AS DOUBLE) AS total_revenue,
-         |  CAST(SUM(rev) OVER w AS DOUBLE) AS cumulative_revenue,
-         |  CAST(lag(rev) OVER w AS DOUBLE) AS prev_revenue,
-         |  round(CASE WHEN lag(rev) OVER w IS NULL OR lag(rev) OVER w = 0 THEN NULL
-         |        ELSE (CAST(rev AS DOUBLE) - CAST(lag(rev) OVER w AS DOUBLE))
-         |             / CAST(lag(rev) OVER w AS DOUBLE) END, 6) AS mom_growth
-         |FROM monthly
-         |WINDOW w AS (PARTITION BY SellerID ORDER BY year, month)""".stripMargin,
-    "q52_stratified_sample" ->
-      s"""WITH lang AS (
-         |SELECT doc_id,
-         |  $langScoreSql,
-         |  CASE
-         |    WHEN score_en >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'en'
-         |    WHEN score_de >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'de'
-         |    WHEN score_es >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'es'
-         |    WHEN score_fr >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'fr'
-         |    ELSE 'zh' END AS detected_lang
-         |FROM documents)
-         |SELECT doc_id, detected_lang FROM lang
-         |WHERE ${md5BucketSql("doc_id")} <
-         |  CASE detected_lang WHEN 'en' THEN 40 WHEN 'zh' THEN 100 ELSE 70 END""".stripMargin,
-    "q53_corpus_curation" -> corpusCurationSql,
-    "q37_pii_scrub" -> {
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val url = "https?://[^ ]+"
-      val digits = "[0-9]{7,}"
-      s"""SELECT doc_id,
-         |  regexp_replace(regexp_replace(regexp_replace(text,
-         |    '$url', '<URL>', 'g'), '$email', '<EMAIL>', 'g'), '$digits', '<NUM>', 'g') AS clean_text,
-         |  CAST(len(regexp_extract_all(text, '$email')) AS INTEGER) AS n_emails,
-         |  CAST(len(regexp_extract_all(text, '$url')) AS INTEGER) AS n_urls,
-         |  CAST(len(regexp_extract_all(text, '$digits')) AS INTEGER) AS n_digit_runs
-         |FROM documents""".stripMargin
-    },
-    "q24_cosine_topk" ->
-      s"""WITH pc AS ($cosineSql)
-         |SELECT query_id, cand_id, cos,
-         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS INTEGER) AS rank
-         |FROM pc
-         |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) <= 5""".stripMargin,
-    // q25: adaptive single-band bucket — the leading `bits` dims' sign
-    // pattern, bits derived from count(*) exactly like the Scala side
-    "q25_ann_lsh_topk" ->
-      s"""WITH p AS (SELECT ${bitsSqlFrom("(SELECT count(*) AS n FROM embeddings)")} AS bits),
-         |bucketed AS (
-         |  SELECT vec_id, embedding,
-         |    array_to_string(list_transform(generate_series(1, p.bits),
-         |      i -> CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END), '') AS bucket
-         |  FROM embeddings CROSS JOIN p),
-         |pc AS (
-         |  SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-         |    round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS cos
-         |  FROM bucketed a JOIN bucketed b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id)
-         |SELECT query_id, cand_id, cos,
-         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS INTEGER) AS rank
-         |FROM pc
-         |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) <= 3""".stripMargin,
-    "q26_embed_neardup" ->
-      s"""WITH pc AS ($cosineSql)
-         |SELECT query_id AS id_a, cand_id AS id_b, cos
-         |FROM pc WHERE query_id < cand_id AND cos >= 0.4""".stripMargin,
-    // q139: the q24 cross join restricted to label-mismatched pairs
-    "q139_hard_negatives" ->
-      """WITH pc AS (
-        |  SELECT a.vec_id AS query_id, a.label AS query_label,
-        |    b.vec_id AS cand_id, b.label AS cand_label,
-        |    round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS cos
-        |  FROM embeddings a, embeddings b
-        |  WHERE a.vec_id <> b.vec_id AND a.label IS DISTINCT FROM b.label)
-        |SELECT query_id, query_label, cand_id, cand_label, cos,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS INTEGER) AS rank
-        |FROM pc
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) <= 5""".stripMargin,
-    // q44: SCALE-ADAPTIVE calibration mirrored in SQL — bits is the
-    // smallest b in [2,24] with 150·2^b ≥ count(*) (the integer form of
-    // ⌈log2(n/150)⌉, exact at power-of-two boundaries on both engines),
-    // bands = min(8, 64 // bits); band b buckets on the sign pattern of
-    // dims [b·bits, (b+1)·bits), built dynamically via list_transform
-    "q44_embed_neardup_lsh" ->
-      s"""WITH p AS (SELECT bits, greatest(1, least(8, 64 // bits)) AS bands FROM (
-        |  SELECT ${bitsSqlFrom("(SELECT count(*) AS n FROM embeddings)")} AS bits)),
-        |banded AS (
-        |  ${dynamicBandedSql("embeddings")}),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM banded a JOIN banded b
-        |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-        |pc AS (
-        |  SELECT c.id_a, c.id_b,
-        |    round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[])), 6) AS cos
-        |  FROM cand c
-        |  JOIN embeddings x ON x.vec_id = c.id_a
-        |  JOIN embeddings y ON y.vec_id = c.id_b)
-        |SELECT id_a, id_b, cos FROM pc WHERE cos >= 0.4""".stripMargin,
-    // q340: the q44 banded candidate machinery re-derived at 10·count(*)
-    // (the NEXT decade's calibration), judged against the exact
-    // cosine-threshold pair set; subset + floor pinned as literal TRUE
-    "q340_lsh_recall_scaled" ->
-      s"""WITH p AS (SELECT bits, greatest(1, least(8, 64 // bits)) AS bands FROM (
-         |  SELECT ${bitsSqlFrom("(SELECT 10 * count(*) AS n FROM embeddings)")} AS bits)),
-         |banded AS (
-         |  ${dynamicBandedSql("embeddings")}),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |  FROM banded a JOIN banded b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         |bp AS (
-         |  SELECT c.id_a, c.id_b
-         |  FROM cand c
-         |  JOIN embeddings x ON x.vec_id = c.id_a
-         |  JOIN embeddings y ON y.vec_id = c.id_b
-         |  WHERE round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[])), 6) >= 0.4),
-         |pc AS ($cosineSql),
-         |ex AS (SELECT CAST(count(*) AS BIGINT) AS n_exact FROM pc
-         |  WHERE query_id < cand_id AND cos >= 0.4),
-         |bn AS (SELECT CAST(count(*) AS BIGINT) AS n_banded FROM bp)
-         |SELECT CAST((SELECT bits FROM p) AS INTEGER) AS bits,
-         |  CAST((SELECT bands FROM p) AS INTEGER) AS bands,
-         |  n_exact, n_banded,
-         |  CASE WHEN n_exact = 0 THEN 1.0
-         |    ELSE round(CAST(n_banded AS DOUBLE) / n_exact, 6) END AS recall,
-         |  TRUE AS banded_subset_exact,
-         |  TRUE AS meets_floor
-         |FROM ex CROSS JOIN bn""".stripMargin,
-    // q341: every md5-derived plane sign and bucket bit replayed; then
-    // the standard candidate→exact-cosine verify tail
-    "q341_rplsh_neardup" ->
-      s"""WITH ${rpBandedCtes(16)},
-         |pc AS (
-         |  SELECT c.id_a, c.id_b,
-         |    round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[])), 6) AS cos
-         |  FROM cand c
-         |  JOIN embeddings x ON x.vec_id = c.id_a
-         |  JOIN embeddings y ON y.vec_id = c.id_b)
-         |SELECT id_a, id_b, cos FROM pc WHERE cos >= 0.4""".stripMargin,
-    // q342/q350: the q341 machinery judged against the exact pair set;
-    // subset + floor pinned as literal TRUE (the floor is half the
-    // closed-form model at (threshold, bits, 16), computed Scala-side
-    // only — the oracle pins the boolean)
-    "q342_rplsh_recall" -> rpRecallSql("0.4"),
-    // q350: the same contract at the deployment threshold (no driver-SF
-    // pair reaches 0.8, so n_exact = 0 → recall 1.0 here; the planted
-    // scale fixture is where this row measures)
-    "q350_rplsh_recall_strong" -> rpRecallSql("0.8"),
-    // q344/q345: multi-probe machinery in SQL — the flip position is the
-    // row_number-1 bit by (rounded |value| in DOUBLE space, bit), the
-    // probe bucket is substr surgery on the base bucket, and candidates
-    // join (base ∪ probed) × base
-    "q344_lsh_multiprobe" ->
-      s"""WITH p AS (SELECT bits, greatest(1, least(8, 64 // bits)) AS bands FROM (
-         |  SELECT ${bitsSqlFrom("(SELECT count(*) AS n FROM embeddings)")} AS bits)),
-         |banded AS (
-         |  ${dynamicBandedSql("embeddings")}),
-         |bandgrid AS (
-         |  SELECT e.vec_id, e.embedding, p.bits,
-         |    unnest(generate_series(0, p.bands - 1)) AS band
-         |  FROM embeddings e CROSS JOIN p),
-         |bitgrid AS (
-         |  SELECT vec_id, band, bits, embedding,
-         |    unnest(generate_series(0, bits - 1)) AS bit
-         |  FROM bandgrid),
-         |jst AS (
-         |  SELECT vec_id, band, bit AS jstar FROM (
-         |    SELECT vec_id, band, bit,
-         |      row_number() OVER (PARTITION BY vec_id, band
-         |        ORDER BY round(abs(CAST(embedding[band * bits + bit + 1] AS DOUBLE)), 6), bit) AS r
-         |    FROM bitgrid) WHERE r = 1),
-         |probed AS (
-         |  SELECT b.vec_id, b.band,
-         |    substr(b.bucket, 1, j.jstar) ||
-         |    CASE WHEN substr(b.bucket, j.jstar + 1, 1) = '1' THEN '0' ELSE '1' END ||
-         |    substr(b.bucket, j.jstar + 2) AS bucket
-         |  FROM banded b JOIN jst j ON b.vec_id = j.vec_id AND b.band = j.band),
-         |allp AS (SELECT * FROM banded UNION ALL SELECT * FROM probed),
-         |cand AS (
-         |  SELECT DISTINCT least(x.vec_id, y.vec_id) AS id_a,
-         |    greatest(x.vec_id, y.vec_id) AS id_b
-         |  FROM allp x JOIN banded y
-         |    ON x.band = y.band AND x.bucket = y.bucket AND x.vec_id <> y.vec_id),
-         |pc AS (
-         |  SELECT c.id_a, c.id_b,
-         |    round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[])), 6) AS cos
-         |  FROM cand c
-         |  JOIN embeddings x ON x.vec_id = c.id_a
-         |  JOIN embeddings y ON y.vec_id = c.id_b)
-         |SELECT id_a, id_b, cos FROM pc WHERE cos >= 0.4""".stripMargin,
-    // q345/q351: base (q44 tail) and multiprobe (q344 tail) pair sets
-    // against the exact judge; superset and nonneg gain pinned TRUE
-    "q345_multiprobe_gain" -> multiProbeGainSql("0.4"),
-    // q351: the gain laws at the deployment threshold (driver-SF
-    // n_exact = 0; the planted scale fixture measures what one extra
-    // probe buys on strong pairs)
-    "q351_multiprobe_strong" -> multiProbeGainSql("0.8"),
-    // q343: the two-sided RP bucket tables from the same plane CTEs; bits
-    // from the standing corpus's count, exactly like the Scala side
-    "q343_rplsh_dedup_across" ->
-      s"""WITH emb_c AS (SELECT * FROM embeddings WHERE vec_id % 2 = 0),
-         |emb_b AS (SELECT * FROM embeddings WHERE vec_id % 2 = 1),
-         |${rpPlanesCtes(16, "(SELECT count(*) AS n FROM emb_c)")},
-         |bc AS (
-         |  ${rpBucketSql("emb_c")}),
-         |bd AS (
-         |  ${rpBucketSql("emb_b")}),
-         |cand AS (
-         |  SELECT DISTINCT c.vec_id AS corpus_id, d.vec_id AS batch_id
-         |  FROM bc c JOIN bd d ON c.band = d.band AND c.bucket = d.bucket),
-         |pc AS (
-         |  SELECT c.corpus_id, c.batch_id,
-         |    round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]),
-         |      CAST(y.embedding AS DOUBLE[])), 6) AS cos
-         |  FROM cand c
-         |  JOIN emb_c x ON x.vec_id = c.corpus_id
-         |  JOIN emb_b y ON y.vec_id = c.batch_id)
-         |SELECT corpus_id, batch_id, cos FROM pc WHERE cos >= 0.3""".stripMargin,
-    // q34: adaptive bits, bands = greatest(1, least(3, 64 // bits)) —
-    // identical arithmetic to the Scala registration
-    "q34_ann_multiband" ->
-      s"""WITH p AS (SELECT bits, greatest(1, least(3, 64 // bits)) AS bands FROM (
-         |  SELECT ${bitsSqlFrom("(SELECT count(*) AS n FROM embeddings)")} AS bits)),
-         |banded AS (
-         |  ${dynamicBandedSql("embeddings")}),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS cand_id
-         |  FROM banded a JOIN banded b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-         |pc AS (
-         |  SELECT c.query_id, c.cand_id,
-         |    round(list_cosine_similarity(CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[])), 6) AS cos
-         |  FROM cand c
-         |  JOIN embeddings x ON x.vec_id = c.query_id
-         |  JOIN embeddings y ON y.vec_id = c.cand_id)
-         |SELECT query_id, cand_id, cos,
-         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS INTEGER) AS rank
-         |FROM pc
-         |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) <= 3""".stripMargin,
-    "q27_lang_id" ->
-      s"""SELECT doc_id,
-         |  $langScoreSql,
-         |  CASE
-         |    WHEN score_en >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'en'
-         |    WHEN score_de >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'de'
-         |    WHEN score_es >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'es'
-         |    WHEN score_fr >= greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'fr'
-         |    ELSE 'zh' END AS detected_lang
-         |FROM documents""".stripMargin,
-    "q28_text_quality" ->
-      """SELECT doc_id,
-        |  CAST(length(text) AS INTEGER) AS n_chars,
-        |  CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
-        |  CAST(length(replace(text, ' ', '')) AS DOUBLE) / CAST(len(string_split(text, ' ')) AS DOUBLE) AS avg_token_len,
-        |  CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS DOUBLE) / CAST(length(text) AS DOUBLE) AS punct_ratio,
-        |  CAST(len(list_filter(string_split(text, ' '), w -> w IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
-        |    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stopword_ratio,
-        |  CASE WHEN len(string_split(text, ' ')) >= 50
-        |         AND CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS DOUBLE) / CAST(length(text) AS DOUBLE) < 0.1
-        |         AND CAST(length(replace(text, ' ', '')) AS DOUBLE) / CAST(len(string_split(text, ' ')) AS DOUBLE) >= 3
-        |         AND CAST(length(replace(text, ' ', '')) AS DOUBLE) / CAST(len(string_split(text, ' ')) AS DOUBLE) <= 10 THEN 'high'
-        |       WHEN len(string_split(text, ' ')) >= 10 THEN 'medium'
-        |       ELSE 'low' END AS quality
-        |FROM documents""".stripMargin,
-    "q29_token_counts" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS INTEGER) AS n_ws_tokens,
-        |  CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]')) AS INTEGER) AS n_bpeish_tokens
-        |FROM documents""".stripMargin,
-    "q30_fingerprints" ->
-      """SELECT doc_id, md5(text) AS content_md5,
-        |  CASE WHEN length(text) < 8 THEN md5(text)
-        |       ELSE list_min(list_transform(generate_series(1, length(text) - 7),
-        |                     i -> md5(text[i:i+7]))) END AS min_gram_md5
-        |FROM documents""".stripMargin,
-    // q127: both engines implement the same Unicode canonical composition
-    "q127_nfc_normalize" ->
-      "SELECT doc_id, nfc_normalize(text) AS text_nfc FROM documents",
-    // q119: grouped-sum formulation — a different summation ORDER than the
-    // kernel's code-point-ascending pass, identical at 6 dp (Σ of ≤ a few
-    // hundred log terms carries ~1e-15 relative error)
-    "q119_char_entropy" ->
-      """WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS c FROM documents),
-        |cc AS (SELECT doc_id, c, count(*) AS n FROM ch GROUP BY 1, 2),
-        |tot AS (SELECT doc_id, sum(n) AS tn FROM cc GROUP BY 1)
-        |SELECT cc.doc_id,
-        |  round(-sum((CAST(n AS DOUBLE) / tn) * log2(CAST(n AS DOUBLE) / tn)), 6) AS char_entropy
-        |FROM cc JOIN tot USING (doc_id) GROUP BY cc.doc_id""".stripMargin,
-    "q31_multimodal_meta" ->
-      """SELECT doc_id AS id, CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-        |  md5(text) AS content_hash, 'text' AS kind
-        |FROM documents""".stripMargin,
-    "q32_multimodal_decode" -> decodeSql,
-    // q346: every PCM sample replayed from the md5 chain — block j's 16
-    // digest bytes are 8 little-endian int16s (high hex pair || low), the
-    // features are exact integer folds
-    "q346_wav_decode" ->
-      """WITH bl AS (SELECT doc_id, text, unnest(generate_series(0, 3)) AS j
-        |  FROM documents WHERE text IS NOT NULL),
-        |hx AS (SELECT doc_id, j, md5(text || ':' || j) AS h FROM bl),
-        |smp AS (SELECT doc_id,
-        |    CAST(('0x' || substr(h, 4 * s + 3, 2) || substr(h, 4 * s + 1, 2)) AS INTEGER) AS u
-        |  FROM hx CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS s)),
-        |sv AS (SELECT doc_id, CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS v FROM smp)
-        |SELECT doc_id AS id, CAST(16000 AS INTEGER) AS sample_rate,
-        |  CAST(count(*) AS BIGINT) AS n_samples,
-        |  CAST(sum(CAST(v AS BIGINT) * v) AS BIGINT) AS sum_sq,
-        |  CAST(max(abs(v)) AS BIGINT) AS peak
-        |FROM sv GROUP BY 1""".stripMargin,
-    // q347: the 48 pixel bytes (4×4 RGB) replayed bytewise from the
-    // ':img:' md5 chain; channel = byte index mod 3
-    "q347_ppm_decode" ->
-      """WITH bl AS (SELECT doc_id, text, unnest(generate_series(0, 2)) AS j
-        |  FROM documents WHERE text IS NOT NULL),
-        |hx AS (SELECT doc_id, j, md5(text || ':img:' || j) AS h FROM bl),
-        |bytes AS (SELECT doc_id, j * 16 + m AS k,
-        |    CAST(('0x' || substr(h, 2 * m + 1, 2)) AS INTEGER) AS v
-        |  FROM hx CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS m))
-        |SELECT doc_id AS id, CAST(4 AS INTEGER) AS width, CAST(4 AS INTEGER) AS height,
-        |  CAST(sum(CASE WHEN k % 3 = 0 THEN v END) AS BIGINT) AS sum_r,
-        |  CAST(sum(CASE WHEN k % 3 = 1 THEN v END) AS BIGINT) AS sum_g,
-        |  CAST(sum(CASE WHEN k % 3 = 2 THEN v END) AS BIGINT) AS sum_b
-        |FROM bytes GROUP BY 1""".stripMargin,
-    // q336: every fingerprint BIT replayed — per content 4-gram the first
-    // 16 md5 hex chars form the 64-bit vote word (char c, nibble bit b ↔
-    // bit 64−4c+b); the (c, value) count grid folds the votes, nibbles
-    // reassemble via a 16-row multiplier table in HUGEINT with a two's-
-    // complement wrap to BIGINT, then the same SCALE-ADAPTIVE band bucket
-    // join (width from count(documents), perceptualBandTailCtes) +
-    // Hamming ≤ 12 verify as the Scala plan
-    "q336_perceptual_neardup" ->
-      s"""WITH $perceptualFpsCtes,
-         |$perceptualBandTailCtes,
-         |$perceptual64SweepTailCtes
-         |SELECT id_a, id_b, ham AS hamming
-         |FROM p64ham WHERE ham <= (SELECT rr FROM p64rad)""".stripMargin,
-    // q348: the container-true chain — decoded-luma content (rdocs)
-    // replayed from the word-sampled md5 chain, then the 128-BIT
-    // fingerprint grid + {4,8,16,32}-width band tail (q364's device; pnn
-    // still counts documents, the corpus the Scala side calibrates on)
-    "q348_ppm_neardup_real" ->
-      s"""WITH $ppmRealContentCtes,
-         |${perceptual128FpsCtesOver("rdocs")},
-         |$perceptual128BandTailCtes
-         |$perceptual128PairSelect""".stripMargin,
-    // q349: q365's recall-contract tail over the container-true
-    // fingerprints; subset pinned TRUE
-    "q349_ppm_recall_real" ->
-      s"""WITH $ppmRealContentCtes,
-         |${perceptual128FpsCtesOver("rdocs")},
-         |$perceptual128BandTailCtes,
-         |$perceptual128RecallTail""".stripMargin,
-    // q352: the audio container-true chain — decoded-PCM content (wdocs)
-    // replayed from the word-sampled md5 chain, then the SAME 128-bit
-    // grid + band tail as q348
-    "q352_wav_neardup_real" ->
-      s"""WITH $wavRealContentCtes,
-         |${perceptual128FpsCtesOver("wdocs")},
-         |$perceptual128BandTailCtes
-         |$perceptual128PairSelect""".stripMargin,
-    // q353: the recall-contract tail over the decoded-PCM fingerprints
-    "q353_wav_recall_real" ->
-      s"""WITH $wavRealContentCtes,
-         |${perceptual128FpsCtesOver("wdocs")},
-         |$perceptual128BandTailCtes,
-         |$perceptual128RecallTail""".stripMargin,
-    // q366: the two-stage incremental ANN semantics spelled out — batch 1
-    // checked against the fixed even-id corpus; batch 2 against corpus ∪
-    // batch-1 survivors; ONE calibration CTE (bits/bands from the
-    // standing corpus's count, the Scala side's pinned parameters)
-    "q366_stream_ann_ingest" -> {
-      def annCross(corpusRel: String, batchRel: String, sfx: String): String =
-        s"""bc_$sfx AS (
-           |  ${dynamicBandedSql(corpusRel)}),
-           |bb_$sfx AS (
-           |  ${dynamicBandedSql(batchRel)}),
-           |vp_$sfx AS (
-           |  SELECT DISTINCT c.batch_id FROM (
-           |    SELECT DISTINCT x.vec_id AS corpus_id, y.vec_id AS batch_id
-           |    FROM bc_$sfx x JOIN bb_$sfx y
-           |      ON x.band = y.band AND x.bucket = y.bucket) c
-           |  JOIN $corpusRel a ON a.vec_id = c.corpus_id
-           |  JOIN $batchRel b ON b.vec_id = c.batch_id
-           |  WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-           |    CAST(b.embedding AS DOUBLE[])), 6) >= 0.3)""".stripMargin
-      s"""WITH emb_c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0),
-         |b1 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 4 = 1),
-         |b2 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 4 = 3),
-         |p AS (SELECT bits, greatest(1, least(8, 64 // bits)) AS bands FROM (
-         |  SELECT ${bitsSqlFrom("(SELECT count(*) AS n FROM emb_c)")} AS bits)),
-         |${annCross("emb_c", "b1", "s1")},
-         |surv1 AS (SELECT vec_id, embedding FROM b1
-         |          WHERE vec_id NOT IN (SELECT batch_id FROM vp_s1)),
-         |standing2 AS (SELECT * FROM emb_c UNION ALL SELECT * FROM surv1),
-         |${annCross("standing2", "b2", "s2")},
-         |surv2 AS (SELECT vec_id, embedding FROM b2
-         |          WHERE vec_id NOT IN (SELECT batch_id FROM vp_s2))
-         |SELECT vec_id FROM surv1
-         |UNION ALL
-         |SELECT vec_id FROM surv2""".stripMargin
-    },
-    // q371: the ANN gate's intra-batch reduction spelled out — banded
-    // self-pairs within the batch (cosine-verified), the recursive
-    // min-label closure, representatives = own cluster id, then the
-    // corpus cross-check over the representatives only (q366's chain)
-    "q371_stream_ann_intra_batch" ->
-      s"""WITH RECURSIVE emb_c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0),
-         |b1 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 1),
-         |p AS (SELECT bits, greatest(1, least(8, 64 // bits)) AS bands FROM (
-         |  SELECT ${bitsSqlFrom("(SELECT count(*) AS n FROM emb_c)")} AS bits)),
-         |bb_i AS (
-         |  ${dynamicBandedSql("b1")}),
-         |jpairs AS (
-         |  SELECT c.id_a, c.id_b FROM (
-         |    SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
-         |    FROM bb_i x JOIN bb_i y
-         |      ON x.band = y.band AND x.bucket = y.bucket AND x.vec_id < y.vec_id) c
-         |  JOIN b1 a ON a.vec_id = c.id_a
-         |  JOIN b1 b ON b.vec_id = c.id_b
-         |  WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-         |    CAST(b.embedding AS DOUBLE[])), 6) >= 0.3),
-         |bdocs AS (SELECT vec_id AS doc_id FROM b1),
-         |${closureTailSql("bdocs")},
-         |reps AS (SELECT b.vec_id, b.embedding FROM b1 b
-         |         JOIN assign a ON a.doc_id = b.vec_id AND a.cluster_id = b.vec_id),
-         |bc_x AS (
-         |  ${dynamicBandedSql("emb_c")}),
-         |bb_x AS (
-         |  ${dynamicBandedSql("reps")}),
-         |vp_x AS (
-         |  SELECT DISTINCT c.batch_id FROM (
-         |    SELECT DISTINCT x.vec_id AS corpus_id, y.vec_id AS batch_id
-         |    FROM bc_x x JOIN bb_x y
-         |      ON x.band = y.band AND x.bucket = y.bucket) c
-         |  JOIN emb_c a ON a.vec_id = c.corpus_id
-         |  JOIN reps b ON b.vec_id = c.batch_id
-         |  WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-         |    CAST(b.embedding AS DOUBLE[])), 6) >= 0.3)
-         |SELECT vec_id FROM reps
-         |WHERE vec_id NOT IN (SELECT batch_id FROM vp_x)""".stripMargin,
-    // q372: the text gate's Jaccard floor priced — the q110 banded
-    // corpus↔batch chain UNthresholded (minJ = 0), then pair / dropped-row
-    // counts per grid floor; the 0.5 operating point flagged
-    "q372_text_threshold_sweep" ->
-      s"""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-         |batch AS (SELECT * FROM documents WHERE doc_id % 4 = 1),
-         |${minhashCrossCtes(3, 4, 3, 0.0, "corpus", "batch", "x")},
-         |grid(threshold) AS (VALUES (0.2), (0.3), (0.4), (0.5), (0.6), (0.7), (0.8), (0.9))
-         |SELECT CAST(g.threshold AS DOUBLE) AS threshold,
-         |  CAST(count(v.jaccard) AS BIGINT) AS n_pairs,
-         |  CAST(count(DISTINCT v.id_b) AS BIGINT) AS n_dropped,
-         |  CAST(g.threshold AS DOUBLE) = 0.5 AS chosen
-         |FROM grid g LEFT JOIN vp_x v ON v.jaccard >= CAST(g.threshold AS DOUBLE)
-         |GROUP BY 1""".stripMargin,
-    // q373: the ANN gate's cosine threshold priced — q366's banded
-    // candidate chain at the gate's own calibration, exact cosines
-    // computed once, counts per grid cut; the 0.3 operating point flagged
-    "q373_ann_threshold_sweep" ->
-      s"""WITH emb_c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0),
-         |b1 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 4 = 1),
-         |p AS (SELECT bits, greatest(1, least(8, 64 // bits)) AS bands FROM (
-         |  SELECT ${bitsSqlFrom("(SELECT count(*) AS n FROM emb_c)")} AS bits)),
-         |bc_x AS (
-         |  ${dynamicBandedSql("emb_c")}),
-         |bb_x AS (
-         |  ${dynamicBandedSql("b1")}),
-         |cand AS (SELECT DISTINCT x.vec_id AS corpus_id, y.vec_id AS batch_id
-         |  FROM bc_x x JOIN bb_x y ON x.band = y.band AND x.bucket = y.bucket),
-         |vc AS (SELECT c.batch_id,
-         |    round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-         |      CAST(b.embedding AS DOUBLE[])), 6) AS cos
-         |  FROM cand c JOIN emb_c a ON a.vec_id = c.corpus_id
-         |  JOIN b1 b ON b.vec_id = c.batch_id),
-         |grid(threshold) AS (VALUES (0.1), (0.2), (0.3), (0.4), (0.5), (0.6), (0.7), (0.8), (0.9))
-         |SELECT CAST(g.threshold AS DOUBLE) AS threshold,
-         |  CAST(count(v.cos) AS BIGINT) AS n_pairs,
-         |  CAST(count(DISTINCT v.batch_id) AS BIGINT) AS n_dropped,
-         |  CAST(g.threshold AS DOUBLE) = 0.3 AS chosen
-         |FROM grid g LEFT JOIN vc v ON v.cos >= CAST(g.threshold AS DOUBLE)
-         |GROUP BY 1""".stripMargin,
-    // q364: the 128-bit grid (chars 1–32 → fph/fpl), the {4,8,16,32}
-    // width rule, and the two-half Hamming verify — every bit replayed
-    "q364_perceptual128_neardup" ->
-      s"""WITH ${perceptual128FpsCtesOver("documents")},
-         |$perceptual128BandTailCtes
-         |$perceptual128PairSelect""".stripMargin,
-    // q365: the recall-contract tail at 128 bits
-    "q365_perceptual128_recall" ->
-      s"""WITH ${perceptual128FpsCtesOver("documents")},
-         |$perceptual128BandTailCtes,
-         |$perceptual128RecallTail""".stripMargin,
-    // q369: the radius decision's ledger — the per-radius banded pair
-    // counts (psw) and the rule's pick (prad), replayed by the same
-    // CTEs every 128-bit pair oracle now derives its radius from
-    "q369_hamming_radius_sweep" ->
-      s"""WITH ${perceptual128FpsCtesOver("documents")},
-         |$perceptual128BandTailCtes
-         |SELECT r AS radius, n AS n_pairs,
-         |  r = (SELECT rr FROM prad) AS chosen
-         |FROM psw""".stripMargin,
-    // q367: the video recall ledger — the 128-bit frame grid over the
-    // 1-in-5 video subsample (sfps), the SAME width derivation as q355
-    // (vnn counts the FULL sampled-frame corpus — the registered
-    // calibration), banded video pairs (vver → ≥ 2 frames) vs the exact
-    // frame-aligned judge; subset pinned TRUE
-    "q367_video128_recall" ->
-      s"""WITH $y4mRealContentCtes,
-         |${perceptual128FpsCtesOver("vdocs")},
-         |sfps AS (SELECT * FROM pfps WHERE (id // 64) % 5 = 0),
-         |${video128BandTailCtesOver("sfps")},
-         |vband AS (SELECT id_a // 64 AS id_a, id_b // 64 AS id_b
-         |  FROM vver GROUP BY 1, 2 HAVING count(*) >= 2),
-         |vex AS (SELECT a.id // 64 AS id_a, b.id // 64 AS id_b
-         |  FROM sfps a JOIN sfps b
-         |    ON a.id % 64 = b.id % 64 AND a.id // 64 < b.id // 64
-         |  WHERE bit_count(xor(a.fph, b.fph)) + bit_count(xor(a.fpl, b.fpl))
-         |    <= (SELECT rr FROM vrad)
-         |  GROUP BY 1, 2 HAVING count(*) >= 2),
-         |e AS (SELECT CAST(count(*) AS BIGINT) AS n_exact FROM vex),
-         |bn AS (SELECT CAST(count(*) AS BIGINT) AS n_banded FROM vband)
-         |SELECT (SELECT w FROM vwb) AS width, n_exact, n_banded,
-         |  CASE WHEN n_exact = 0 THEN 1.0
-         |    ELSE round(CAST(n_banded AS DOUBLE) / n_exact, 6) END AS recall,
-         |  TRUE AS banded_subset_exact
-         |FROM e CROSS JOIN bn""".stripMargin,
-    // q368: the lossy-codec contract — the three engine-measured
-    // properties (geometry, decode determinism, bounded error) are
-    // booleans the oracle pins TRUE; n_images replays from the corpus
-    "q368_jpeg_lossy_contract" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_images, TRUE AS dims_match,
-        |  TRUE AS decode_deterministic, TRUE AS mae_within_bound
-        |FROM documents WHERE text IS NOT NULL""".stripMargin,
-    // q363: identical planted bytes (md5-derived email + dotted quad),
-    // identical RE2-portable patterns, global replace + match counts —
-    // n_emails on the original text, n_ips on the email-scrubbed text,
-    // exactly the Spark operator's scan order
-    "q363_pii_redact" -> {
-      // DuckDB standard strings pass backslashes through verbatim, so the
-      // shared Scala pattern constants interpolate unchanged
-      val emailRe = graft.ops.TextStats.EmailRe
-      val ipRe = graft.ops.TextStats.Ipv4Re
-      def octSql(i: Int) =
-        s"CAST(CAST(('0x' || substr(md5(doc_id || ':pip'), ${2 * i + 1}, 2)) AS INTEGER) AS VARCHAR)"
-      s"""WITH planted AS (SELECT doc_id,
-         |    CASE WHEN doc_id % 5 = 0 THEN text || ' contact ' ||
-         |      substr(md5(doc_id || ':pii'), 1, 8) || '@example.com from ' ||
-         |      ${octSql(0)} || '.' || ${octSql(1)} || '.' || ${octSql(2)} || '.' || ${octSql(3)}
-         |    ELSE text END AS text
-         |  FROM documents WHERE text IS NOT NULL),
-         |scrub AS (SELECT doc_id, text,
-         |    regexp_replace(text, '$emailRe', '<EMAIL>', 'g') AS no_email
-         |  FROM planted)
-         |SELECT doc_id AS id,
-         |  regexp_replace(no_email, '$ipRe', '<IP>', 'g') AS redacted,
-         |  CAST(len(regexp_extract_all(text, '$emailRe')) AS BIGINT) AS n_emails,
-         |  CAST(len(regexp_extract_all(no_email, '$ipRe')) AS BIGINT) AS n_ips
-         |FROM scrub""".stripMargin
-    },
-    // q362: the box-sum pyramid cell (x, y) sums the lumas of pixels
-    // px with (px%8)//2 = x and (px//8)//2 = y — integer-exact, replayed
-    // from the same ':pximg:' chain as q348
-    "q362_image_resize" ->
-      s"""WITH $ppmRealContentCtes
-         |SELECT doc_id AS id, CAST((px % 8) // 2 AS BIGINT) AS x,
-         |  CAST((px // 8) // 2 AS BIGINT) AS y,
-         |  CAST(sum(luma) AS BIGINT) AS luma
-         |FROM rluma GROUP BY 1, 2, 3""".stripMargin,
-    // q361: the three REAL-decoded modality pair chains (each a nested
-    // WITH so the shared CTE names stay isolated, the q338 device),
-    // composed on the normalized pair key by an N-way vote
-    "q361_trimodal_consensus" ->
-      s"""WITH ipairs AS (SELECT id_a, id_b FROM (
-         |  WITH $ppmRealContentCtes,
-         |  ${perceptual128FpsCtesOver("rdocs")},
-         |  $perceptual128BandTailCtes
-         |  $perceptual128PairSelect)),
-         |apairs AS (SELECT id_a, id_b FROM (
-         |  WITH $wavRealContentCtes,
-         |  ${perceptual128FpsCtesOver("wdocs")},
-         |  $perceptual128BandTailCtes
-         |  $perceptual128PairSelect)),
-         |vpairs AS (SELECT id_a, id_b FROM (
-         |  WITH $y4mRealContentCtes,
-         |  ${perceptual128FpsCtesOver("vdocs")},
-         |  $video128BandTailCtes
-         |  SELECT id_a // 64 AS id_a, id_b // 64 AS id_b
-         |  FROM vver GROUP BY 1, 2 HAVING count(*) >= 2)),
-         |allm AS (
-         |  SELECT id_a, id_b, 'image' AS m FROM ipairs
-         |  UNION ALL SELECT id_a, id_b, 'audio' AS m FROM apairs
-         |  UNION ALL SELECT id_a, id_b, 'video' AS m FROM vpairs)
-         |SELECT id_a, id_b,
-         |  bool_or(m = 'image') AS in_image,
-         |  bool_or(m = 'audio') AS in_audio,
-         |  bool_or(m = 'video') AS in_video,
-         |  CAST(count(DISTINCT m) AS BIGINT) AS n_modalities,
-         |  count(DISTINCT m) >= 2 AS consensus
-         |FROM allm GROUP BY 1, 2""".stripMargin,
-    // q360: the gzip round trip is lossless, so the oracle IS the
-    // original text — any divergence in content or the counts derived
-    // from it means the compress/inflate chain corrupted a byte
-    "q360_gzip_ingest" ->
-      """SELECT doc_id AS id, text AS content,
-        |  CAST(len(text) AS BIGINT) AS n_chars,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words
-        |FROM documents WHERE text IS NOT NULL""".stripMargin,
-    // q357: the codec decode's channel sums replayed from the ':pxpng:'
-    // chain — valid because PNG is lossless (decoded grid == synthesized
-    // grid); channel = byte index mod 3
-    "q357_png_decode" ->
-      s"""WITH $pngRealContentCtes
-         |SELECT doc_id AS id, CAST(8 AS INTEGER) AS width,
-         |  CAST(8 AS INTEGER) AS height,
-         |  CAST(sum(CASE WHEN k % 3 = 0 THEN v END) AS BIGINT) AS sum_r,
-         |  CAST(sum(CASE WHEN k % 3 = 1 THEN v END) AS BIGINT) AS sum_g,
-         |  CAST(sum(CASE WHEN k % 3 = 2 THEN v END) AS BIGINT) AS sum_b
-         |FROM gbytes GROUP BY 1""".stripMargin,
-    // q358: the codec-true chain — DEFLATE-decoded luma content (gdocs),
-    // then the SAME 128-bit grid + band tail as q348
-    "q358_png_neardup_real" ->
-      s"""WITH $pngRealContentCtes,
-         |${perceptual128FpsCtesOver("gdocs")},
-         |$perceptual128BandTailCtes
-         |$perceptual128PairSelect""".stripMargin,
-    // q359: the recall-contract tail over the codec-true fingerprints
-    "q359_png_recall_real" ->
-      s"""WITH $pngRealContentCtes,
-         |${perceptual128FpsCtesOver("gdocs")},
-         |$perceptual128BandTailCtes,
-         |$perceptual128RecallTail""".stripMargin,
-    // q354: every SAMPLED frame's decoded luma grid replayed byte-exact
-    // from the word-sampled ':pxvid:' md5 chain — frames 0,2,4,6, one
-    // content row per (video, frame)
-    "q354_y4m_frame_sample" ->
-      s"""WITH $y4mRealContentCtes
-         |SELECT doc_id AS id, CAST(f AS BIGINT) AS frame,
-         |  string_agg(CAST(v AS VARCHAR), ' ' ORDER BY k) AS content
-         |FROM vbytes GROUP BY 1, 2""".stripMargin,
-    // q355: the frame-aligned video near-dup — per-frame 128-bit
-    // fingerprint grid over composite ids (doc·64+frame), the
-    // {4,8,16,32}-width band tail with the frame index in the join key,
-    // then ≥ 2 matched sampled frames per video pair
-    "q355_y4m_neardup_real" ->
-      s"""WITH $y4mRealContentCtes,
-         |${perceptual128FpsCtesOver("vdocs")},
-         |$video128BandTailCtes
-         |SELECT id_a // 64 AS id_a, id_b // 64 AS id_b,
-         |  CAST(count(*) AS BIGINT) AS n_frames
-         |FROM vver GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
-    // q356: shot-boundary detection — 128-bit Hamming delta between
-    // consecutive sampled-frame fingerprints (composite ids two apart
-    // within a video), cut when > 32 of 128 bits flip
-    "q356_y4m_scene_change" ->
-      s"""WITH $y4mRealContentCtes,
-         |${perceptual128FpsCtesOver("vdocs")}
-         |SELECT a.id // 64 AS id, CAST(a.id % 64 AS BIGINT) AS frame_from,
-         |  CAST(b.id % 64 AS BIGINT) AS frame_to,
-         |  CAST(bit_count(xor(a.fph, b.fph)) + bit_count(xor(a.fpl, b.fpl)) AS BIGINT) AS hamming,
-         |  bit_count(xor(a.fph, b.fph)) + bit_count(xor(a.fpl, b.fpl)) > 32 AS is_cut
-         |FROM pfps a JOIN pfps b
-         |  ON a.id // 64 = b.id // 64 AND b.id % 64 = a.id % 64 + 2""".stripMargin,
-    // q337: the q217 recall-contract device for the perceptual tier —
-    // exact Hamming pair count vs the banded set's; subset pinned TRUE
-    // (the banded path verifies with the same exact filter)
-    "q337_perceptual_recall" ->
-      s"""WITH $perceptualFpsCtes,
-         |$perceptualBandTailCtes,
-         |$perceptual64SweepTailCtes,
-         |banded AS (SELECT id_a, id_b
-         |  FROM p64ham WHERE ham <= (SELECT rr FROM p64rad)),
-         |ex AS (SELECT CAST(count(*) AS BIGINT) AS n_exact
-         |  FROM pfps a JOIN pfps b ON a.id < b.id
-         |  WHERE bit_count(xor(a.fp, b.fp)) <= (SELECT rr FROM p64rad)),
-         |bn AS (SELECT CAST(count(*) AS BIGINT) AS n_banded FROM banded)
-         |SELECT n_exact, n_banded,
-         |  CASE WHEN n_exact = 0 THEN 1.0
-         |    ELSE round(CAST(n_banded AS DOUBLE) / n_exact, 6) END AS recall,
-         |  TRUE AS banded_subset_exact
-         |FROM ex CROSS JOIN bn""".stripMargin,
-    // q338: both modality pair oracles composed on the normalized pair key
-    "q338_crossmodal_consensus" ->
-      s"""WITH sh AS (${shingleSql(3)}),
-         |tpairs AS (
-         |  SELECT * FROM (
-         |    WITH pairs AS (
-         |      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-         |      FROM sh a JOIN sh b ON a.shingle = b.shingle
-         |        AND a.doc_id < b.doc_id
-         |      GROUP BY 1, 2),
-         |    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)
-         |    SELECT p.id_a, p.id_b,
-         |      CAST(p.n_common AS DOUBLE)
-         |        / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) AS text_score
-         |    FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id
-         |    JOIN sizes sb ON p.id_b = sb.doc_id
-         |    WHERE CAST(p.n_common AS DOUBLE)
-         |      / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5)),
-         |$perceptualFpsCtes,
-         |$perceptualBandTailCtes,
-         |$perceptual64SweepTailCtes,
-         |mpairs AS (SELECT id_a, id_b, ham AS media_hamming
-         |  FROM p64ham WHERE ham <= (SELECT rr FROM p64rad))
-         |SELECT coalesce(t.id_a, m.id_a) AS id_a,
-         |  coalesce(t.id_b, m.id_b) AS id_b,
-         |  t.text_score, m.media_hamming,
-         |  t.id_a IS NOT NULL AS in_text,
-         |  m.id_a IS NOT NULL AS in_media,
-         |  t.id_a IS NOT NULL AND m.id_a IS NOT NULL AS consensus
-         |FROM tpairs t FULL OUTER JOIN mpairs m
-         |  ON t.id_a = m.id_a AND t.id_b = m.id_b""".stripMargin,
-    // q106: the read-back shard rows must equal the md5 shard assignment —
-    // membership is a pure function of the id, independent of how the
-    // writer was partitioned
-    "q106_jsonl_export" ->
-      s"""SELECT CAST(${md5ModSql("doc_id", 8)} AS BIGINT) AS shard, doc_id, text, source
-         |FROM documents""".stripMargin,
-    // q113: integer count/sum aggregates, VALUES weights normalized over
-    // the listed sources, one rounded division per planning column
-    "q113_token_budget_plan" ->
-      """WITH w(source, share) AS (VALUES
-        |  ('src0', 0.5), ('src1', 0.3), ('src2', 0.2)),
-        |wd AS (SELECT source, CAST(share AS DOUBLE) AS share FROM w),
-        |agg AS (
-        |  SELECT source, count(*) AS n_docs,
-        |    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY 1)
-        |SELECT a.source, a.n_docs, a.n_tokens,
-        |  round(wd.share, 6) AS target_share,
-        |  CAST(round(wd.share * 1000000) AS BIGINT) AS target_tokens,
-        |  round(CAST(round(wd.share * 1000000) AS DOUBLE) / a.n_tokens, 6) AS epochs
-        |FROM agg a JOIN wd ON a.source = wd.source""".stripMargin,
-    // q114: positional 3-grams (WITH multiplicity — no list_distinct, a
-    // within-doc repeat is still a repeat), corpus occurrence counts,
-    // gaps-and-islands merge of consecutive duplicated positions
-    "q114_repeated_spans" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-        |grams AS (
-        |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-        |    array_to_string(ts[i:i+2], ' ') AS gram
-        |  FROM toks, unnest(generate_series(1, len(ts) - 2)) AS u(i)),
-        |dup AS (SELECT gram FROM grams GROUP BY gram HAVING count(*) >= 2),
-        |hits AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gram)),
-        |isl AS (SELECT doc_id, pos,
-        |  pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-        |  FROM hits)
-        |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-        |  CAST(count(*) + 2 AS BIGINT) AS span_tokens
-        |FROM isl GROUP BY doc_id, grp""".stripMargin,
-    // q115: expand duplicated gram starts to covered token positions,
-    // splice survivors back in order; LEFT joins keep full cardinality
-    "q115_remove_repeated_spans" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-        |grams AS (
-        |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-        |    array_to_string(ts[i:i+2], ' ') AS gram
-        |  FROM toks, unnest(generate_series(1, len(ts) - 2)) AS u(i)),
-        |dup AS (SELECT gram FROM grams GROUP BY gram HAVING count(*) >= 2),
-        |hits AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gram)),
-        |cov AS (SELECT DISTINCT doc_id, pos + o AS p
-        |  FROM hits, unnest(generate_series(0, 2)) AS v(o)),
-        |tok AS (SELECT doc_id, CAST(i AS BIGINT) AS p, ts[i] AS tk
-        |  FROM toks, unnest(generate_series(1, len(ts))) AS w(i)),
-        |cl AS (
-        |  SELECT tok.doc_id,
-        |    string_agg(tok.tk, ' ' ORDER BY tok.p) FILTER (WHERE cov.p IS NULL) AS ct,
-        |    count(*) FILTER (WHERE cov.p IS NOT NULL) AS nd
-        |  FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.p = cov.p
-        |  GROUP BY tok.doc_id)
-        |SELECT d.doc_id, coalesce(cl.ct, '') AS clean_text,
-        |  CAST(coalesce(cl.nd, 0) AS BIGINT) AS n_dropped
-        |FROM documents d LEFT JOIN cl USING (doc_id)""".stripMargin,
-    // q112: small-side cross product + per-corpus-row max, mirroring the
-    // float-kernel cosine with DOUBLE[] list_cosine_similarity at 6 dp
-    "q112_semantic_contamination" ->
-      """WITH bench AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        |  WHERE vec_id % 25 = 0 AND embedding IS NOT NULL),
-        |corp AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        |  WHERE vec_id % 25 <> 0 AND embedding IS NOT NULL),
-        |sims AS (
-        |  SELECT c.vec_id, round(list_cosine_similarity(c.e, b.e), 6) AS cos
-        |  FROM corp c, bench b)
-        |SELECT vec_id, max(cos) AS max_cos, max(cos) >= 0.30 AS contaminated
-        |FROM sims GROUP BY 1""".stripMargin,
-    // q111: aligned-unnest segment table → df counts → ordered string_agg
-    // reassembly; all-boilerplate docs come back as empty strings
-    "q111_boilerplate_segments" ->
-      """WITH segs AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(text, ' ')) AS seg,
-        |    unnest(generate_series(1, len(string_split(text, ' ')))) AS pos
-        |  FROM documents),
-        |dfc AS (SELECT seg, count(DISTINCT doc_id) AS df FROM segs GROUP BY 1),
-        |kept AS (
-        |  SELECT s.doc_id,
-        |    string_agg(s.seg, ' ' ORDER BY s.pos) AS clean_text,
-        |    count(*) AS n_kept
-        |  FROM segs s JOIN dfc ON s.seg = dfc.seg
-        |  WHERE dfc.df <= 390 GROUP BY 1)
-        |SELECT d.doc_id,
-        |  coalesce(k.clean_text, '') AS clean_text,
-        |  CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept,
-        |  CAST(len(string_split(d.text, ' ')) - coalesce(k.n_kept, 0) AS BIGINT) AS n_removed
-        |FROM documents d LEFT JOIN kept k ON d.doc_id = k.doc_id""".stripMargin,
-    // q107: inner-join semantics — the drained stream equals the batch
-    // inequality join
-    "q107_stream_interval_join" ->
-      """SELECT l.user_id, l.event_id AS click_id, CAST(l.ts AS TIMESTAMP) AS click_ts,
-        |  r.event_id AS purchase_id, CAST(r.ts AS TIMESTAMP) AS purchase_ts
-        |FROM events l JOIN events r
-        |  ON l.user_id = r.user_id
-        | AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 24 HOUR
-        |WHERE l.event_type = 'click' AND r.event_type = 'purchase'""".stripMargin,
-    // q109: identical contract to q15 — the bucketed layout must be
-    // invisible in the merge RESULT (it only changes the exchange plan)
-    "q109_bucketed_scd2_merge" ->
-      s"""${stagedSql},
-         |ins AS (SELECT * FROM staged WHERE action IN ('INSERT', 'UPDATE')),
-         |keys AS (SELECT DISTINCT c_custkey FROM staged WHERE action = 'UPDATE')
-         |SELECT c.c_custkey, c.c_name, c.c_nationkey, c.c_acctbal, c.c_mktsegment,
-         |  CASE WHEN k.c_custkey IS NOT NULL THEN FALSE ELSE TRUE END AS is_current,
-         |  TIMESTAMP '2026-01-01 00:00:00' AS effective_date,
-         |  CASE WHEN k.c_custkey IS NOT NULL THEN TIMESTAMP '2026-02-01 00:00:00' END AS end_date
-         |FROM customer c LEFT JOIN keys k ON c.c_custkey = k.c_custkey
-         |UNION ALL
-         |SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
-         |  TRUE, TIMESTAMP '2026-02-01 00:00:00', NULL
-         |FROM ins""".stripMargin,
-    // q128: version 1 = the %3=0 base plus the %3=1 append; the current
-    // pointer (v2) holds the disjoint %3=2 slice, so any pointer-following
-    // bug produces a full hash mismatch
-    "q128_time_travel" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-        |WHERE c_custkey % 3 <> 2""".stripMargin,
-    // q130: the full-replacement diff enumerated — v2's slice inserts,
-    // v1's union deletes
-    "q130_version_diff" ->
-      """SELECT c_custkey, c_name, c_acctbal, 'insert' AS change
-        |FROM customer WHERE c_custkey % 3 = 2
-        |UNION ALL
-        |SELECT c_custkey, c_name, c_acctbal, 'delete' AS change
-        |FROM customer WHERE c_custkey % 3 <> 2""".stripMargin,
-    // q259: the oracle recomputes the mart from the NEW version's rows
-    // (same mod rules) - any retraction error shows as a mismatch
-    "q259_ivm_apply" ->
-      """WITH v1 AS (SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CASE WHEN o_orderkey % 6 = 1 THEN o_totalprice + 100.0
-        |      ELSE o_totalprice END AS p
-        |  FROM orders
-        |  WHERE o_orderdate IS NOT NULL AND o_orderkey % 3 >= 1),
-        |m AS (SELECT day, count(*) AS n_orders,
-        |    sum(CAST(round(p * 100.0) AS BIGINT)) AS cents
-        |  FROM v1 GROUP BY 1)
-        |SELECT day, CAST(n_orders AS BIGINT) AS n_orders,
-        |  CAST(cents AS DOUBLE) / 100.0 AS revenue,
-        |  CAST((cents * 10000) // n_orders AS DOUBLE) / 1000000.0
-        |    AS avg_order
-        |FROM m""".stripMargin,
-    // q258: the expected feed derived directly from the same mod rules;
-    // +100.0 is the identical double addition on both engines
-    "q258_change_feed" ->
-      """SELECT c_custkey, c_name, c_acctbal, 'delete' AS change
-        |FROM customer WHERE c_custkey % 3 = 0
-        |UNION ALL
-        |SELECT c_custkey, c_name, c_acctbal, 'insert' AS change
-        |FROM customer WHERE c_custkey % 3 = 2
-        |UNION ALL
-        |SELECT c_custkey, c_name, c_acctbal, 'update_preimage' AS change
-        |FROM customer WHERE c_custkey % 6 = 1
-        |UNION ALL
-        |SELECT c_custkey, c_name, c_acctbal + 100.0, 'update_postimage'
-        |  AS change
-        |FROM customer WHERE c_custkey % 6 = 1""".stripMargin,
-    "q131_k_anonymity" ->
-      """SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS group_size,
-        |  count(*) < 10 AS at_risk
-        |FROM customer GROUP BY 1, 2""".stripMargin,
-    // q132: shares are exact integer ratios; pow and the divisions are
-    // single double ops, so 6 dp rounding is engine-stable
-    "q132_temperature_mix" ->
-      """WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-        |           FROM documents GROUP BY 1),
-        |s AS (SELECT source, n_docs,
-        |        CAST(n_docs AS DOUBLE) / CAST(sum(n_docs) OVER () AS DOUBLE) AS p
-        |      FROM c),
-        |t AS (SELECT source, n_docs, p,
-        |        pow(p, 0.3) / sum(pow(p, 0.3)) OVER () AS q
-        |      FROM s)
-        |SELECT source, n_docs, round(p, 6) AS share, round(q, 6) AS temp_share,
-        |  round((q / p) / max(q / p) OVER (), 6) AS sample_rate
-        |FROM t""".stripMargin,
-    // q133: squares in FLOAT (the storage precision, matching the Spark
-    // kernel), accumulation in DOUBLE; variance via the clamped
-    // sum-of-squares identity on both engines
-    "q133_dim_stats" ->
-      """WITH m AS (
-        |  SELECT unnest(CAST(embedding AS DOUBLE[])) AS v,
-        |    unnest(list_transform(embedding, x -> CAST(x * x AS DOUBLE))) AS v2,
-        |    unnest(generate_series(0, len(embedding) - 1)) AS dim
-        |  FROM embeddings WHERE embedding IS NOT NULL)
-        |SELECT dim, round(avg(v), 6) AS mean_val,
-        |  round(sqrt(greatest(
-        |    sum(v2) / count(*) - avg(v) * avg(v), 0.0)), 6) AS std_val
-        |FROM m GROUP BY dim""".stripMargin,
-    // q110: the two-stage incremental semantics spelled out — batch 1 is
-    // checked against the fixed corpus; batch 2 against corpus ∪ batch-1
-    // survivors; the final table is the union of survivors
-    "q110_stream_dedup_ingest" ->
-      s"""WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-         |b1 AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 1),
-         |b2 AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 3),
-         |${minhashCrossCtes(3, 4, 3, 0.5, "corpus", "b1", "s1")},
-         |surv1 AS (SELECT doc_id, text FROM b1
-         |          WHERE doc_id NOT IN (SELECT id_b FROM vp_s1)),
-         |standing2 AS (SELECT * FROM corpus UNION ALL SELECT * FROM surv1),
-         |${minhashCrossCtes(3, 4, 3, 0.5, "standing2", "b2", "s2")},
-         |surv2 AS (SELECT doc_id, text FROM b2
-         |          WHERE doc_id NOT IN (SELECT id_b FROM vp_s2))
-         |SELECT doc_id, text FROM surv1
-         |UNION ALL
-         |SELECT doc_id, text FROM surv2""".stripMargin,
-    // q370: the intra-batch reduction spelled out — the batch's own
-    // banded pairs (q22's chain), the recursive min-label closure (q43's
-    // chain), representatives = docs that are their own cluster id, then
-    // the corpus cross-check over the representatives only
-    "q370_stream_intra_batch" ->
-      s"""WITH RECURSIVE corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
-         |batch AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1),
-         |${minhashCtes(3, 4, 3, "batch")},
-         |jpairs AS (
-         |  SELECT p.id_a, p.id_b
-         |  FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id JOIN sizes sb ON p.id_b = sb.doc_id
-         |  WHERE CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5),
-         |${closureTailSql("batch")},
-         |reps AS (SELECT b.doc_id, b.text FROM batch b
-         |         JOIN assign a ON a.doc_id = b.doc_id AND a.cluster_id = b.doc_id),
-         |${minhashCrossCtes(3, 4, 3, 0.5, "corpus", "reps", "x")}
-         |SELECT doc_id, text FROM reps
-         |WHERE doc_id NOT IN (SELECT id_b FROM vp_x)""".stripMargin,
-    // q108: the drained two-batch streaming upsert must equal the batch
-    // merge — q15's oracle verbatim
-    "q108_stream_scd2_upsert" ->
-      s"""${stagedSql},
-         |ins AS (SELECT * FROM staged WHERE action IN ('INSERT', 'UPDATE')),
-         |keys AS (SELECT DISTINCT c_custkey FROM staged WHERE action = 'UPDATE')
-         |SELECT c.c_custkey, c.c_name, c.c_nationkey, c.c_acctbal, c.c_mktsegment,
-         |  CASE WHEN k.c_custkey IS NOT NULL THEN FALSE ELSE TRUE END AS is_current,
-         |  TIMESTAMP '2026-01-01 00:00:00' AS effective_date,
-         |  CASE WHEN k.c_custkey IS NOT NULL THEN TIMESTAMP '2026-02-01 00:00:00' END AS end_date
-         |FROM customer c LEFT JOIN keys k ON c.c_custkey = k.c_custkey
-         |UNION ALL
-         |SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
-         |  TRUE, TIMESTAMP '2026-02-01 00:00:00', NULL
-         |FROM ins""".stripMargin,
-    // q142: both centroids from 6 dp-rounded per-dim means (the q91
-    // shape), cosine over the rounded operands, rounded at 6
-    "q142_centroid_drift" ->
-      """WITH m AS (
-        |  SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-        |    unnest(generate_series(0, len(embedding) - 1)) AS dim
-        |  FROM embeddings),
-        |lc AS (SELECT label, dim, CAST(count(*) AS BIGINT) AS n,
-        |         round(avg(v), 6) AS lm
-        |       FROM m GROUP BY label, dim),
-        |gc AS (SELECT dim, round(avg(v), 6) AS gm FROM m GROUP BY dim)
-        |SELECT label, n AS n_members,
-        |  CASE WHEN sum(lm * lm) = 0 OR sum(gm * gm) = 0 THEN 0.0
-        |       ELSE round(sum(lm * gm) / (sqrt(sum(lm * lm)) * sqrt(sum(gm * gm))), 6)
-        |       END AS drift_cosine
-        |FROM lc JOIN gc USING (dim)
-        |GROUP BY label, n""".stripMargin,
-    // q143: the k-prefix of the md5 total order
-    "q143_exact_k_sample" ->
-      """SELECT doc_id, source FROM documents
-        |ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT 100""".stripMargin,
-    // q144: the per-stratum k-prefix of the same md5 order
-    "q144_stratified_exact_k" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source, row_number() OVER (
-        |    PARTITION BY source
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |  FROM documents) WHERE rn <= 20""".stripMargin,
-    // q145: the same norm-of-sum identity over float-rounded unit
-    // vectors, per-dim sums rounded at 6 before the square
-    "q145_group_diversity" ->
-      """WITH v AS (
-        |  SELECT label, CAST(embedding AS DOUBLE[]) AS e,
-        |    sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]),
-        |                                 x -> x * x))) AS nrm
-        |  FROM embeddings),
-        |u AS (
-        |  SELECT label, nrm,
-        |    unnest(list_transform(e,
-        |      x -> CAST(CAST(x / nrm AS REAL) AS DOUBLE))) AS uf,
-        |    unnest(generate_series(0, len(e) - 1)) AS dim
-        |  FROM v WHERE nrm > 0),
-        |s AS (SELECT label, dim, round(sum(uf), 6) AS sd
-        |      FROM u GROUP BY label, dim),
-        |n AS (SELECT label, CAST(count(*) AS BIGINT) AS n
-        |      FROM v WHERE nrm > 0 GROUP BY label)
-        |SELECT label, n AS n_members,
-        |  CASE WHEN n < 2 THEN NULL
-        |       ELSE round((sum(sd * sd) - n) / (n * (n - 1.0)), 6) END
-        |    AS mean_pairwise_cosine
-        |FROM s JOIN n USING (label)
-        |GROUP BY label, n""".stripMargin,
-    // q146: q41's session CTE + an ordered list() over (ts, event_id)
-    "q146_session_sequences" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |             CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |marked AS (
-        |  SELECT user_id, event_id, event_type, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |              OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, event_id, event_type, ts,
-        |        SUM(new_session) OVER (
-        |          PARTITION BY user_id ORDER BY ts, event_id) AS session_id
-        |      FROM marked)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |  min(ts) AS session_start, count(*) AS n_events,
-        |  string_agg(event_type, '|' ORDER BY ts, event_id) AS event_seq
-        |FROM s GROUP BY 1, 2""".stripMargin,
-    // q147: the same comment/tag/entity/whitespace chain (RE2-safe)
-    "q147_strip_markup" ->
-      """SELECT doc_id, trim(regexp_replace(
-        |  replace(replace(replace(replace(replace(replace(
-        |    regexp_replace(regexp_replace(text, '(?s)<!--.*?-->', ' ', 'g'),
-        |                   '<[^>]*>', ' ', 'g'),
-        |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |    '&nbsp;', ' '), '&amp;', '&'),
-        |  '\s+', ' ', 'g')) AS clean_text
-        |FROM documents""".stripMargin,
-    // q148: Hill estimator over the tf >= 5 tail, continuity-corrected
-    "q148_zipf_alpha" ->
-      """WITH dt AS (
-        |  SELECT doc_id, t.term AS term, count(*) AS tf
-        |  FROM documents, unnest(string_split(text, ' ')) AS t(term)
-        |  GROUP BY 1, 2),
-        |ts AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS tf FROM dt GROUP BY 1)
-        |SELECT CAST(count(*) AS BIGINT) AS n_tail_terms,
-        |  round(1.0 + count(*) / sum(ln(tf / 4.5)), 6) AS alpha
-        |FROM ts WHERE tf >= 5""".stripMargin,
-    // q149: the DIRECT computation — partial-then-merge must land on the
-    // exact same profile q94 pins
-    "q149_incremental_moments" ->
-      """WITH a AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n, sum(value) AS s1,
-        |    sum(value*value) AS s2, sum(value*value*value) AS s3,
-        |    sum(value*value*value*value) AS s4
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1)
-        |SELECT event_type, n,
-        |  round(s1/n, 6) AS mean,
-        |  round(s2/n - (s1/n)*(s1/n), 6) AS variance,
-        |  round(CASE WHEN s2/n - (s1/n)*(s1/n) > 0 THEN
-        |    (s3/n - 3.0*(s1/n)*(s2/n) + 2.0*(s1/n)*(s1/n)*(s1/n))
-        |      / pow(s2/n - (s1/n)*(s1/n), 1.5) END, 6) AS skewness,
-        |  round(CASE WHEN s2/n - (s1/n)*(s1/n) > 0 THEN
-        |    (s4/n - 4.0*(s1/n)*(s3/n) + 6.0*(s1/n)*(s1/n)*(s2/n)
-        |       - 3.0*(s1/n)*(s1/n)*(s1/n)*(s1/n))
-        |      / ((s2/n - (s1/n)*(s1/n)) * (s2/n - (s1/n)*(s1/n))) - 3.0 END, 6) AS kurtosis
-        |FROM a""".stripMargin,
-    // q150: row_number over (tf DESC, term) = the range-exchange rank
-    "q150_term_ids" ->
-      """WITH dt AS (
-        |  SELECT doc_id, t.term AS term, count(*) AS tf
-        |  FROM documents, unnest(string_split(text, ' ')) AS t(term)
-        |  GROUP BY 1, 2),
-        |ts AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS tf,
-        |         count(*) AS df_docs FROM dt GROUP BY 1)
-        |SELECT term, tf, df_docs,
-        |  row_number() OVER (ORDER BY tf DESC, term) AS term_id
-        |FROM ts WHERE tf >= 2""".stripMargin,
-    // q151: smallest power-of-two bucket per doc, aggregated waste
-    "q151_padding_buckets" ->
-      """WITH t AS (SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-        |           FROM documents),
-        |b AS (SELECT n, CAST(pow(2, ceil(log2(n))) AS BIGINT) AS bucket FROM t)
-        |SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n) AS BIGINT) AS sum_tokens,
-        |  CAST(bucket * count(*) AS BIGINT) AS padded_tokens,
-        |  round(1.0 - sum(n) / CAST(bucket * count(*) AS DOUBLE), 6) AS waste_ratio
-        |FROM b GROUP BY 1""".stripMargin,
-    // q152: per-source md5 rank / weight — exact IEEE division
-    "q152_mixture_schedule" ->
-      """WITH r AS (
-        |  SELECT doc_id, source, CAST(row_number() OVER (
-        |    PARTITION BY source
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS source_rank
-        |  FROM documents WHERE source IN ('src0', 'src1', 'src2', 'src3'))
-        |SELECT doc_id, source, source_rank,
-        |  source_rank / (CASE source WHEN 'src0' THEN 3.0 WHEN 'src1' THEN 1.5
-        |                 WHEN 'src2' THEN 1.0 ELSE 0.5 END) AS sched_key
-        |FROM r""".stripMargin,
-    // q153: the same per-group row_number cut, n_chars DESC
-    "q153_topk_per_group" ->
-      """SELECT doc_id, source, n_chars, grp_rank FROM (
-        |  SELECT doc_id, source, n_chars, CAST(row_number() OVER (
-        |    PARTITION BY source ORDER BY n_chars DESC, doc_id) AS BIGINT) AS grp_rank
-        |  FROM documents) WHERE grp_rank <= 20""".stripMargin,
-    // q154: RFM block as of the pinned date
-    "q154_user_snapshot" ->
-      """SELECT user_id,
-        |  CAST(date_diff('day', CAST(max(ts) AS DATE), DATE '2024-02-15')
-        |    AS BIGINT) AS recency_days,
-        |  count(*) AS frequency,
-        |  round(sum(coalesce(value, 0.0)), 6) AS monetary,
-        |  CAST(date_diff('day', CAST(min(ts) AS DATE), DATE '2024-02-15')
-        |    AS BIGINT) AS tenure_days,
-        |  CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_active_days
-        |FROM events GROUP BY 1""".stripMargin,
-    // q155: exact integer ceil-division file math, byte shares 6 dp
-    "q155_write_plan" ->
-      """WITH per AS (
-        |  SELECT source, lang, count(*) AS n_rows,
-        |    CAST(sum(n_chars) AS BIGINT) AS est_bytes
-        |  FROM documents GROUP BY 1, 2),
-        |tot AS (SELECT CAST(sum(est_bytes) AS DOUBLE) AS total_bytes FROM per)
-        |SELECT source, lang, n_rows, est_bytes,
-        |  greatest(1, (est_bytes + 32767) // 32768) AS n_files,
-        |  (n_rows + greatest(1, (est_bytes + 32767) // 32768) - 1)
-        |    // greatest(1, (est_bytes + 32767) // 32768) AS rows_per_file,
-        |  round(est_bytes / total_bytes, 6) AS bytes_share
-        |FROM per, tot""".stripMargin,
-    // q156: list slice + sequential double fold, 6 dp — zero-norm → zeros;
-    // exploded to (vec_id, dim, v) rows to match the driver-facing shape
-    "q156_matryoshka" ->
-      """WITH s AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding[1:8], x -> CAST(x AS DOUBLE)) AS sl
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, sl,
-        |    sqrt(list_aggregate(list_transform(sl, x -> x * x), 'sum')) AS nrm
-        |  FROM s)
-        |SELECT vec_id, g.dim AS dim,
-        |  CASE WHEN nrm = 0 THEN 0.0
-        |       ELSE round(sl[g.dim] / nrm, 6) END AS v
-        |FROM n CROSS JOIN generate_series(1, 8) AS g(dim)""".stripMargin,
-    // q157: every label cut to the global minority count, md5 order
-    "q157_balance_labels" ->
-      """WITH c AS (SELECT label, count(*) AS n FROM embeddings GROUP BY 1),
-        |m AS (SELECT min(n) AS k FROM c),
-        |r AS (
-        |  SELECT vec_id, label, row_number() OVER (
-        |    PARTITION BY label
-        |    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-        |  FROM embeddings)
-        |SELECT vec_id, label FROM r, m WHERE rn <= k""".stripMargin,
-    // q158: staged strictly-after mins — greedy earliest = staged optimum
-    "q158_funnel_steps" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS t
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (
-        |  SELECT e.user_id, min(CAST(e.ts AS TIMESTAMP)) AS t
-        |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |    AND CAST(e.ts AS TIMESTAMP) > s1.t
-        |  WHERE e.event_type = 'click' GROUP BY 1),
-        |s3 AS (
-        |  SELECT e.user_id, min(CAST(e.ts AS TIMESTAMP)) AS t
-        |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-        |    AND CAST(e.ts AS TIMESTAMP) > s2.t
-        |  WHERE e.event_type = 'purchase' GROUP BY 1),
-        |f AS (
-        |  SELECT 1 AS step, 'view' AS step_type, count(*) AS n FROM s1
-        |  UNION ALL SELECT 2, 'click', count(*) FROM s2
-        |  UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
-        |SELECT CAST(step AS BIGINT) AS step, step_type,
-        |  CAST(n AS BIGINT) AS n_users,
-        |  round(n / (SELECT CAST(n AS DOUBLE) FROM f WHERE step = 1), 6)
-        |    AS conv_from_first
-        |FROM f WHERE n > 0""".stripMargin,
-    // q159: utf-8 byte accounting over the kept-docs reference set
-    "q159_orphan_audit" ->
-      """WITH m AS (
-        |  SELECT doc_id AS id,
-        |    CAST(octet_length(encode(text)) AS BIGINT) AS bytes
-        |  FROM documents),
-        |r AS (SELECT DISTINCT doc_id FROM documents WHERE n_chars >= 200)
-        |SELECT CAST(count(*) AS BIGINT) AS n_media,
-        |  CAST(count(*) FILTER (WHERE r.doc_id IS NULL) AS BIGINT) AS n_orphans,
-        |  CAST(coalesce(sum(m.bytes), 0) AS BIGINT) AS bytes_total,
-        |  CAST(coalesce(sum(m.bytes) FILTER (WHERE r.doc_id IS NULL), 0) AS BIGINT)
-        |    AS bytes_orphaned,
-        |  CASE WHEN coalesce(sum(m.bytes), 0) = 0 THEN 0.0
-        |       ELSE round(coalesce(sum(m.bytes) FILTER (WHERE r.doc_id IS NULL), 0)
-        |         / CAST(sum(m.bytes) AS DOUBLE), 6) END AS orphan_bytes_share
-        |FROM m LEFT JOIN r ON m.id = r.doc_id""".stripMargin,
-    // q160: the same md5-bucket predicate on BOTH join sides
-    "q160_coordinated_sample" ->
-      s"""SELECT o_orderstatus, count(*) AS n_items,
-         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-         |    (1 - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE) AS revenue
-         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-         |WHERE ${md5BucketSql("o_orderkey")} < 20
-         |  AND ${md5BucketSql("l_orderkey")} < 20
-         |GROUP BY 1""".stripMargin,
-    // q161: list_reduce replays the identical fold, same IEEE op order
-    "q161_ewma_snapshot" ->
-      """WITH seq AS (
-        |  SELECT user_id,
-        |    list(value ORDER BY CAST(ts AS TIMESTAMP), event_id) AS xs
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1)
-        |SELECT user_id, CAST(len(xs) AS BIGINT) AS n_events,
-        |  round(list_reduce(xs, (s, x) -> 0.25 * x + 0.75 * s), 6) AS ewma
-        |FROM seq""".stripMargin,
-    // q162: 6 dp-rounded exact quantile bounds, then a scan-stage clip
-    "q162_winsorize" ->
-      """WITH b AS (
-        |  SELECT round(quantile_cont(value, 0.05), 6) AS lo,
-        |    round(quantile_cont(value, 0.99), 6) AS hi
-        |  FROM events WHERE value IS NOT NULL)
-        |SELECT event_id, value,
-        |  round(greatest(lo, least(hi, value)), 6) AS value_w,
-        |  value < lo AS clipped_low, value > hi AS clipped_high
-        |FROM events, b WHERE value IS NOT NULL""".stripMargin,
-    // q163: three unrolled PR rounds over the exact 3-NN edges;
-    // (1 - 0.85) in SQL so the teleport is the IDENTICAL IEEE value
-    "q163_knn_pagerank" ->
-      s"""WITH pc AS ($cosineSql),
-         |k AS (SELECT query_id, cand_id, cos FROM pc
-         |  QUALIFY row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, cand_id ASC) <= 3),
-         |e AS (SELECT query_id AS src, cand_id AS dst, cos AS w
-         |  FROM k WHERE cos > 0),
-         |outw AS (SELECT src, sum(w) AS ow FROM e GROUP BY 1),
-         |nodes AS (SELECT DISTINCT node FROM
-         |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-         |nn AS (SELECT CAST(count(*) AS DOUBLE) AS cnt FROM nodes),
-         |r0 AS (SELECT node, round(1.0 / cnt, 6) AS rank FROM nodes, nn),
-         |c1 AS (SELECT e.dst AS node, sum(e.w / outw.ow * r0.rank) AS s
-         |  FROM e JOIN outw ON e.src = outw.src
-         |  JOIN r0 ON e.src = r0.node GROUP BY 1),
-         |r1 AS (SELECT nodes.node,
-         |  round((1 - 0.85) / nn.cnt + 0.85 * coalesce(c1.s, 0), 6) AS rank
-         |  FROM nodes CROSS JOIN nn LEFT JOIN c1 ON nodes.node = c1.node),
-         |c2 AS (SELECT e.dst AS node, sum(e.w / outw.ow * r1.rank) AS s
-         |  FROM e JOIN outw ON e.src = outw.src
-         |  JOIN r1 ON e.src = r1.node GROUP BY 1),
-         |r2 AS (SELECT nodes.node,
-         |  round((1 - 0.85) / nn.cnt + 0.85 * coalesce(c2.s, 0), 6) AS rank
-         |  FROM nodes CROSS JOIN nn LEFT JOIN c2 ON nodes.node = c2.node),
-         |c3 AS (SELECT e.dst AS node, sum(e.w / outw.ow * r2.rank) AS s
-         |  FROM e JOIN outw ON e.src = outw.src
-         |  JOIN r2 ON e.src = r2.node GROUP BY 1),
-         |r3 AS (SELECT nodes.node,
-         |  round((1 - 0.85) / nn.cnt + 0.85 * coalesce(c3.s, 0), 6) AS rank
-         |  FROM nodes CROSS JOIN nn LEFT JOIN c3 ON nodes.node = c3.node)
-         |SELECT node, rank FROM r3""".stripMargin,
-    // q164: same pool, same pair-md5 per-user order, same literal-k cut
-    "q164_negative_samples" ->
-      """WITH inter AS (
-        |  SELECT DISTINCT o_custkey, l_partkey
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |pool AS (
-        |  SELECT p_partkey AS l_partkey
-        |  FROM (SELECT DISTINCT p_partkey FROM part)
-        |  ORDER BY md5(CAST(p_partkey AS VARCHAR)), p_partkey LIMIT 50),
-        |cand AS (
-        |  SELECT u.o_custkey, pool.l_partkey
-        |  FROM (SELECT DISTINCT o_custkey FROM inter) u CROSS JOIN pool),
-        |neg AS (
-        |  SELECT c.o_custkey, c.l_partkey FROM cand c LEFT JOIN inter i
-        |  ON c.o_custkey = i.o_custkey AND c.l_partkey = i.l_partkey
-        |  WHERE i.o_custkey IS NULL)
-        |SELECT o_custkey, l_partkey,
-        |  CAST(row_number() OVER (PARTITION BY o_custkey
-        |    ORDER BY md5(CAST(o_custkey AS VARCHAR) || '|' ||
-        |      CAST(l_partkey AS VARCHAR)), l_partkey) AS BIGINT) AS neg_rank
-        |FROM neg QUALIFY neg_rank <= 5""".stripMargin,
-    // q165: identical smoothing arithmetic over the same V×S grid
-    "q165_source_divergence" ->
-      """WITH tok AS (
-        |  SELECT source, unnest(string_split(text, ' ')) AS term FROM documents),
-        |st AS (SELECT source, term, count(*) AS tf_s FROM tok GROUP BY 1, 2),
-        |g AS (SELECT term, CAST(sum(tf_s) AS BIGINT) AS tf_g FROM st GROUP BY 1),
-        |tot AS (SELECT source, CAST(sum(tf_s) AS BIGINT) AS n_s FROM st GROUP BY 1),
-        |gt AS (SELECT CAST(count(*) AS BIGINT) AS v,
-        |  CAST(sum(tf_g) AS BIGINT) AS n_g FROM g),
-        |grid AS (
-        |  SELECT tot.source, g.term, g.tf_g, tot.n_s, st.tf_s
-        |  FROM g CROSS JOIN tot
-        |  LEFT JOIN st ON st.source = tot.source AND st.term = g.term)
-        |SELECT source, CAST(max(n_s) AS BIGINT) AS n_tokens,
-        |  round(sum(
-        |    ((coalesce(tf_s, 0) + 1) / CAST(n_s + v AS DOUBLE)) *
-        |    ln(((coalesce(tf_s, 0) + 1) / CAST(n_s + v AS DOUBLE)) /
-        |       ((tf_g + 1) / CAST(n_g + v AS DOUBLE)))), 6) AS kl
-        |FROM grid, gt GROUP BY 1""".stripMargin,
-    // q166: q80's pair stream + add-one bigram surprisal per doc
-    "q166_bigram_surprisal" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-        |p AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ts) - 1),
-        |        i -> ts[i] || ' ' || ts[i + 1])) AS pair
-        |      FROM t WHERE len(ts) >= 2),
-        |pc AS (SELECT pair, count(*) AS c_pair FROM p GROUP BY 1),
-        |tok AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
-        |c1 AS (SELECT term, count(*) AS c_w1 FROM tok GROUP BY 1),
-        |vv AS (SELECT CAST(count(*) AS BIGINT) AS v FROM c1),
-        |s AS (SELECT pc.pair, pc.c_pair, c1.c_w1
-        |      FROM pc JOIN c1 ON string_split(pc.pair, ' ')[1] = c1.term)
-        |SELECT p.doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
-        |  round(avg(-ln((s.c_pair + 1) / CAST(s.c_w1 + vv.v AS DOUBLE))), 6)
-        |    AS surprisal
-        |FROM p JOIN s ON p.pair = s.pair, vv GROUP BY 1""".stripMargin,
-    // q167: two unrolled label-spread rounds over the exact 3-NN edges;
-    // votes rounded to 6 dp, ties to the smallest label, seeds clamped
-    "q167_label_spread" ->
-      s"""WITH pc AS ($cosineSql),
-         |k AS (SELECT query_id, cand_id, cos FROM pc
-         |  QUALIFY row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, cand_id ASC) <= 3),
-         |e AS (SELECT query_id AS src, cand_id AS dst, cos AS w
-         |  FROM k WHERE cos > 0),
-         |l0 AS (SELECT vec_id AS node,
-         |  CASE WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) < '8'
-         |    THEN label END AS seed,
-         |  CASE WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) < '8'
-         |    THEN label END AS label
-         |  FROM embeddings),
-         |v1 AS (SELECT e.dst, l0.label AS l, round(sum(e.w), 6) AS vote
-         |  FROM e JOIN l0 ON e.src = l0.node
-         |  WHERE l0.label IS NOT NULL GROUP BY 1, 2),
-         |w1 AS (SELECT dst, l FROM v1
-         |  QUALIFY row_number() OVER (PARTITION BY dst
-         |    ORDER BY vote DESC, l ASC) = 1),
-         |l1 AS (SELECT l0.node, l0.seed,
-         |  coalesce(l0.seed, w1.l, l0.label) AS label
-         |  FROM l0 LEFT JOIN w1 ON l0.node = w1.dst),
-         |v2 AS (SELECT e.dst, l1.label AS l, round(sum(e.w), 6) AS vote
-         |  FROM e JOIN l1 ON e.src = l1.node
-         |  WHERE l1.label IS NOT NULL GROUP BY 1, 2),
-         |w2 AS (SELECT dst, l FROM v2
-         |  QUALIFY row_number() OVER (PARTITION BY dst
-         |    ORDER BY vote DESC, l ASC) = 1),
-         |l2 AS (SELECT l1.node, l1.seed,
-         |  coalesce(l1.seed, w2.l, l1.label) AS label
-         |  FROM l1 LEFT JOIN w2 ON l1.node = w2.dst)
-         |SELECT node, label, seed IS NOT NULL AS is_seed FROM l2""".stripMargin,
-    // q140: pre-reduced cube with DuckDB's GROUPING mask as lvl
-    "q140_corpus_card" ->
-      """WITH pre AS (
-        |  SELECT source, lang, count(*) AS n_docs,
-        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY 1, 2),
-        |tot AS (SELECT CAST(sum(n_tokens) AS DOUBLE) AS t FROM pre)
-        |SELECT source, lang,
-        |  CAST(GROUPING(source, lang) AS INTEGER) AS lvl,
-        |  CAST(sum(n_docs) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-        |  round(CAST(sum(n_tokens) AS DOUBLE) / (SELECT t FROM tot), 6) AS token_share
-        |FROM pre
-        |GROUP BY CUBE (source, lang)""".stripMargin,
-    // q141: survivor multiplicities off the shared cluster-closure chain
-    // q141: the q43 LSH chain (banded candidates, exact-Jaccard verify,
-    // recursive closure), then one count per cluster representative
-    "q141_dup_weights" ->
-      s"""WITH RECURSIVE ${minhashCtes(3, 4, 3)},
-         |jpairs AS (
-         |  SELECT p.id_a, p.id_b
-         |  FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id JOIN sizes sb ON p.id_b = sb.doc_id
-         |  WHERE CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) >= 0.5),
-         |${closureTailSql()}
-         |SELECT cluster_id AS doc_id, count(*) AS weight
-         |FROM assign GROUP BY 1""".stripMargin,
-    // q136: hashed-unigram bucket histograms on both corpora, add-one
-    // smoothed log-likelihood ratios per bucket, per-doc token-count-
-    // weighted sum — ln ulps and summation order wash out at 6 dp
-    "q136_dsir_weights" ->
-      s"""WITH rawterm AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-         |rawt AS (
-         |  SELECT doc_id, ${md5ModSql("term", 256)} AS b FROM rawterm),
-         |tgtt AS (
-         |  SELECT ${md5ModSql("term", 256)} AS b
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS term
-         |        FROM documents WHERE source IN ('src0', 'src1', 'src2'))),
-         |rb AS (SELECT b, count(*) AS rn FROM rawt GROUP BY 1),
-         |tb AS (SELECT b, count(*) AS tn FROM tgtt GROUP BY 1),
-         |tots AS (SELECT (SELECT sum(rn) FROM rb) AS rt, (SELECT sum(tn) FROM tb) AS tt),
-         |l AS (
-         |  SELECT rb.b,
-         |    ln((COALESCE(tb.tn, 0) + 1.0) / (tots.tt + 256.0))
-         |      - ln((rb.rn + 1.0) / (tots.rt + 256.0)) AS lr
-         |  FROM rb LEFT JOIN tb USING (b) CROSS JOIN tots)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  round(sum(lr), 6) AS log_weight,
-         |  round(sum(lr) / count(*), 6) AS avg_log_ratio
-         |FROM rawt JOIN l USING (b)
-         |GROUP BY doc_id""".stripMargin,
-    // q137: same run + judgments in SQL; DCG and ideal DCG rounded at
-    // 6 dp before the ratio, mirroring the Spark side exactly
-    "q137_ranking_metrics" ->
-      """WITH runs AS (
-        |  SELECT user_id, event_id,
-        |    row_number() OVER (PARTITION BY user_id
-        |                       ORDER BY value DESC NULLS LAST, event_id) AS rank,
-        |    CASE WHEN event_type = 'purchase' THEN 2
-        |         WHEN event_type = 'click' THEN 1 ELSE 0 END AS rel
-        |  FROM events),
-        |ir AS (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id
-        |                               ORDER BY rel DESC, rank) AS ideal
-        |  FROM runs)
-        |SELECT user_id,
-        |  CAST(count(*) AS BIGINT) AS n_results,
-        |  CAST(count(*) FILTER (rel > 0) AS BIGINT) AS n_rel,
-        |  CASE WHEN count(*) FILTER (rel > 0) = 0 THEN 0.0
-        |       ELSE CAST(1.0 AS DOUBLE) / min(rank) FILTER (rel > 0)
-        |       END AS reciprocal_rank,
-        |  CAST(count(*) FILTER (rel > 0 AND rank <= 5) AS DOUBLE) / 5 AS precision_at_k,
-        |  CASE WHEN count(*) FILTER (rel > 0) = 0 THEN 0.0
-        |       ELSE CAST(count(*) FILTER (rel > 0 AND rank <= 5) AS DOUBLE)
-        |            / count(*) FILTER (rel > 0) END AS recall_at_k,
-        |  CASE WHEN count(*) FILTER (rel > 0) = 0 THEN 0.0
-        |       ELSE round(
-        |         round(sum(CASE WHEN rank <= 5
-        |                        THEN CAST(rel AS DOUBLE) / log2(rank + 1.0)
-        |                        ELSE 0.0 END), 6)
-        |         / round(sum(CASE WHEN ideal <= 5
-        |                          THEN CAST(rel AS DOUBLE) / log2(ideal + 1.0)
-        |                          ELSE 0.0 END), 6), 6) END AS ndcg_at_k
-        |FROM ir GROUP BY user_id""".stripMargin,
-    // q138: the fold is a pure function of the GROUP key
-    "q138_group_kfold" ->
-      s"""SELECT doc_id, source,
-         |  CAST(${md5ModSql("source", 5)} AS BIGINT) AS fold
-         |FROM documents""".stripMargin
-  )
 }

@@ -8,20 +8,18 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = graft.core.GraftSession.harness("graft-verify", cpus)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_QUERIES=q53,q106 restricts the dump (local iteration only;
-    // the driver always runs the full set)
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // single-file dumps keep the driver's row-level comparator simple; at
     // scale-fixture volumes (q336 at 100x: 454 M rows) one writer task
     // becomes the bottleneck — SPARK_GRAFT_VERIFY_COALESCE=0 keeps the
     // parallel writers (validate_scale.py globs the directory either way)
     val singleFile = sys.env.getOrElse("SPARK_GRAFT_VERIFY_COALESCE", "1") != "0"
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(f => f.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
+    // SPARK_GRAFT_QUERIES=q53,q106 restricts the result dump (local
+    // iteration only; the driver always runs the full set). The oracle
+    // files are always complete.
+    SparkEntry.selected(sys.env.get("SPARK_GRAFT_QUERIES")).foreach { query =>
+      val name = query.name
       try graft.core.CacheRegistry.scoped {
-        val df = fn(spark, sfDir)
+        val df = query.build(spark, sfDir)
         (if (singleFile) df.coalesce(1) else df)
           .write.mode("overwrite").parquet(s"$outDir/$name")
       }
@@ -43,11 +41,12 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // keys in name order, so dumps of two trees compare byte for byte
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // chunked replays for the vote-grid family (tools/validate_grid_chunked.py)
-    val cjson = SparkEntry.chunkedOracle.map { case (k, v) =>
+    val cjson = SparkEntry.chunkedOracle.toSeq.sortBy(_._1).map { case (k, v) =>
       val stages = v.stages.map { st =>
         s"""{"table": ${q(st.table)}, "sql": ${q(st.sql)}, "chunked": ${st.chunked}}"""
       }.mkString("[", ",", "]")

@@ -58,6 +58,28 @@ object Scd2 {
     sha2(concat_ws("||", parts: _*), 256)
   }
 
+  /** The diff core [[stage]] and [[stageWithDeletes]] classify: the source
+    * batch reduced to one fingerprinted row per pk (alias `s`) full-outer
+    * joined on the pk to the current target's (pk, fingerprint) (alias
+    * `t`). */
+  private def diffJoin(source: DataFrame, currentTarget: DataFrame, pk: String,
+                       exclusions: Set[String], nullSafe: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val tracked = trackedColumns(source, pk, exclusions)
+    val hashed = source.withColumn("hash", fingerprint(tracked, nullSafe))
+    val ordering =
+      (if (source.columns.contains("ingestion_timestamp"))
+        Seq(col("ingestion_timestamp").desc) else Seq.empty) :+ col("hash").desc
+    val s = hashed
+      .withColumn("__rn",
+        row_number().over(Window.partitionBy(col(pk)).orderBy(ordering: _*)))
+      .where(col("__rn") === 1).drop("__rn").alias("s")
+    val t = currentTarget
+      .withColumn("hash", fingerprint(tracked, nullSafe))
+      .select(col(pk), col("hash")).alias("t")
+    s.join(t, col(s"s.$pk") === col(s"t.$pk"), "full_outer")
+  }
+
   /** Full-outer diff of source batch vs current target slice, classified into
     * INSERT / UPDATE / NO CHANGE (2_Bronze_to_Silver.py:87-99). Returns the
     * staged rows (source columns + `action`), INSERT+UPDATE only.
@@ -73,22 +95,8 @@ object Scd2 {
     * exchange is reused, not doubled. */
   def stage(source: DataFrame, currentTarget: DataFrame, pk: String,
             exclusions: Set[String] = defaultExclusions,
-            nullSafe: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val tracked = trackedColumns(source, pk, exclusions)
-    val hashed = source.withColumn("hash", fingerprint(tracked, nullSafe))
-    val ordering =
-      (if (source.columns.contains("ingestion_timestamp"))
-        Seq(col("ingestion_timestamp").desc) else Seq.empty) :+ col("hash").desc
-    val s = hashed
-      .withColumn("__rn",
-        row_number().over(Window.partitionBy(col(pk)).orderBy(ordering: _*)))
-      .where(col("__rn") === 1).drop("__rn").alias("s")
-    val t = currentTarget
-      .withColumn("hash", fingerprint(tracked, nullSafe))
-      .select(col(pk), col("hash")).alias("t")
-    val joined = s.join(t, col(s"s.$pk") === col(s"t.$pk"), "full_outer")
-    joined
+            nullSafe: Boolean = false): DataFrame =
+    diffJoin(source, currentTarget, pk, exclusions, nullSafe)
       .withColumn("action",
         when(col(s"t.$pk").isNull, "INSERT")
           .when(col(s"s.$pk").isNull, "NO CHANGE")
@@ -96,7 +104,6 @@ object Scd2 {
           .otherwise("NO CHANGE"))
       .where(col("action").isin("INSERT", "UPDATE"))
       .select((source.columns.map(c => col(s"s.$c")).toIndexedSeq :+ col("action")): _*)
-  }
 
   /** Snapshot-diff variant of [[stage]] for FULL-snapshot sources: the
     * reference leaves delete handling as an optional extension
@@ -112,22 +119,8 @@ object Scd2 {
     * incremental batch would classify every quiet key as deleted. */
   def stageWithDeletes(source: DataFrame, currentTarget: DataFrame, pk: String,
                        exclusions: Set[String] = defaultExclusions,
-                       nullSafe: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val tracked = trackedColumns(source, pk, exclusions)
-    val hashed = source.withColumn("hash", fingerprint(tracked, nullSafe))
-    val ordering =
-      (if (source.columns.contains("ingestion_timestamp"))
-        Seq(col("ingestion_timestamp").desc) else Seq.empty) :+ col("hash").desc
-    val s = hashed
-      .withColumn("__rn",
-        row_number().over(Window.partitionBy(col(pk)).orderBy(ordering: _*)))
-      .where(col("__rn") === 1).drop("__rn").alias("s")
-    val t = currentTarget
-      .withColumn("hash", fingerprint(tracked, nullSafe))
-      .select(col(pk), col("hash")).alias("t")
-    val joined = s.join(t, col(s"s.$pk") === col(s"t.$pk"), "full_outer")
-    joined
+                       nullSafe: Boolean = false): DataFrame =
+    diffJoin(source, currentTarget, pk, exclusions, nullSafe)
       .withColumn("action",
         when(col(s"t.$pk").isNull, "INSERT")
           .when(col(s"s.$pk").isNull, "DELETE")
@@ -138,7 +131,6 @@ object Scd2 {
         case c if c == pk => coalesce(col(s"s.$pk"), col(s"t.$pk")).as(pk)
         case c => col(s"s.$c")
       }.toIndexedSeq :+ col("action")): _*)
-  }
 
   /** Distinct changed keys whose current versions must be expired
     * (2_Bronze_to_Silver.py:122-123). */

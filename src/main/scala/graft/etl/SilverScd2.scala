@@ -60,7 +60,7 @@ object SilverScd2 {
     }
     def writeSilver(df: DataFrame): Unit = bucketed match {
       case Some(b) => b.overwrite(table, df, config.pk)
-      case None => store.replaceWith(silver, df, Seq("is_current"))
+      case None => store.overwrite(silver, df, Seq("is_current"))
     }
 
     val wm = watermarks.read(table)

@@ -321,7 +321,10 @@ class TableStore(spark: SparkSession) {
     * (reference Delta `mode("overwrite")`, 3_Silver_to_Gold.py:60).
     * `partitionBy` lays the data out hive-style (e.g. Silver by
     * `is_current` so the current-slice scan is partition pruning;
-    * Bronze by ingest date, reference README.MD:120). */
+    * Bronze by ingest date, reference README.MD:120). It is also the
+    * MERGE-rewrite commit (reference Delta MERGE,
+    * 2_Bronze_to_Silver.py:127-133): callers compute the complete next
+    * state (e.g. [[graft.etl.Scd2.applyMerge]]) and swap it in. */
   def overwrite(table: String, df: DataFrame, partitionBy: Seq[String] = Nil): Long =
     overwriteWithMeta(table, df, Map.empty, partitionBy)
 
@@ -506,13 +509,6 @@ class TableStore(spark: SparkSession) {
       }.toMap
     }.getOrElse(Map.empty)
   }
-
-  /** The MERGE-rewrite commit (reference Delta MERGE,
-    * 2_Bronze_to_Silver.py:127-133): callers compute the complete next state
-    * (e.g. [[graft.etl.Scd2.applyMerge]]) and swap it in atomically. */
-  def replaceWith(table: String, nextState: DataFrame,
-                  partitionBy: Seq[String] = Nil): Long =
-    overwrite(table, nextState, partitionBy)
 
   /** Current committed schema (used to pin CSV re-reads,
     * 1_Landing_to_Bronze.py:41-42), as [[read]] would show it: the

@@ -3,9 +3,8 @@ package graft
 import graft.core.CacheRegistry
 
 /** Driver-contract smoke: `entry` returns rows at sf0.001 (the driver's t1
-  * gate), every `oracleSql` key has a matching `queries` entry, and the
-  * maintained-artifact plan names exactly the queries that reach each
-  * artifact. */
+  * gate), no two query records share a name, and the maintained-artifact
+  * plan names exactly the queries that reach each artifact. */
 class SparkEntrySpec extends SparkSpec {
 
   test("entry returns rows on sf0.001 (driver smoke contract)") {
@@ -13,11 +12,21 @@ class SparkEntrySpec extends SparkSpec {
     df.count() should be > 0L
   }
 
-  test("queries and oracles cover each other exactly") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    (o -- q) shouldBe empty
-    (q -- o) shouldBe empty
+  // a record pairs each build with its oracle, so the derived maps agree by
+  // construction; a repeated name would still drop a query from them
+  test("query names are unique across the family files") {
+    val names = SparkEntry.registry.map(_.name)
+    names.diff(names.distinct) shouldBe empty
+  }
+
+  test("a record builds its oracle text only when asked for it") {
+    var built = 0
+    val q = graft.queries.Query("q_probe", (s, _) => s.emptyDataFrame,
+      { built += 1; "SELECT 1" })
+    q.build(spark, sf0001)
+    built shouldBe 0
+    q.oracle shouldBe "SELECT 1"
+    built shouldBe 1
   }
 
   test("warmCachesFor warms only consumed artifacts, and release is by last consumer") {
