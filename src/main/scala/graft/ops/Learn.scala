@@ -13,6 +13,52 @@ import org.apache.spark.sql.functions._
   */
 object Learn {
 
+  /** The gradient-descent trajectory every fitter here shares: z-score
+    * the `__x<i>` columns of `raw` against 6 dp-rounded population
+    * moments (one aggregate), persist the z-scored base — `__y`, the
+    * `keep` columns, then `__z<i>` — and run `iters` full-batch rounds
+    * from zero weights, each one aggregate and a `w ← round(w − lr·∇, 6)`
+    * snap. The snap is HALF_UP to match SQL round(): rint's half-to-even
+    * would diverge from the oracle exactly on a 5e-7 boundary. Returns
+    * the base and the (bias :: feature) weights after each round; `op`
+    * prefixes the zero-variance error. */
+  private def gdFit(raw: DataFrame, keep: Seq[String], featureCols: Seq[String],
+                    lr: Double, iters: Int,
+                    op: String): (DataFrame, Seq[Array[Double]]) = {
+    val k = featureCols.size
+    val stats = raw.agg(
+      round(avg(col("__x0")), 6).as("m0"),
+      (Seq(round(stddev_pop(col("__x0")), 6).as("s0")) ++
+        (1 until k).flatMap(i => Seq(
+          round(avg(col(s"__x$i")), 6).as(s"m$i"),
+          round(stddev_pop(col(s"__x$i")), 6).as(s"s$i")))): _*).head()
+    val base = graft.core.CacheRegistry.persist(
+      raw.select((col("__y") +: keep.map(col)) ++ (0 until k).map { i =>
+        val m = stats.getAs[Double](s"m$i")
+        val s = stats.getAs[Double](s"s$i")
+        require(s > 0, s"$op: feature ${featureCols(i)} has zero variance")
+        ((col(s"__x$i") - lit(m)) / lit(s)).as(s"__z$i")
+      }: _*))
+    def r6(v: Double): Double =
+      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val ws = (1 to iters).scanLeft(Array.fill(k + 1)(0.0)) { (w, _) =>
+      val p = sigmoid(logit(w))
+      val g = base.agg(
+        avg(p - col("__y")).as("g0"),
+        (0 until k).map(i =>
+          avg((p - col("__y")) * col(s"__z$i")).as(s"g${i + 1}")): _*).head()
+      w.zipWithIndex.map { case (wi, j) => r6(wi - lr * g.getAs[Double](s"g$j")) }
+    }
+    (base, ws.tail)
+  }
+
+  /** The linear score `w(0) + Σ w(i+1)·__z<i>` over a [[gdFit]] base. */
+  private def logit(w: Array[Double]): Column =
+    (0 until w.length - 1).foldLeft(lit(w(0)): Column)((acc, i) =>
+      acc + lit(w(i + 1)) * col(s"__z$i"))
+
+  private def sigmoid(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
+
   /** Full-batch logistic regression by gradient descent, UNROLLED to a
     * fixed iteration count: features are z-scored against 6 dp-rounded
     * population moments, weights start at 0 and update
@@ -43,37 +89,9 @@ object Learn {
       .select(y.as("__y") +: featureCols.zipWithIndex.map { case (c, i) =>
         col(c).cast("double").as(s"__x$i") }: _*)
     val k = featureCols.size
-    val stats = raw.agg(
-      round(avg(col("__x0")), 6).as("m0"),
-      (Seq(round(stddev_pop(col("__x0")), 6).as("s0")) ++
-        (1 until k).flatMap(i => Seq(
-          round(avg(col(s"__x$i")), 6).as(s"m$i"),
-          round(stddev_pop(col(s"__x$i")), 6).as(s"s$i")))): _*).head()
-    val base = graft.core.CacheRegistry.persist(
-      raw.select(col("__y") +: (0 until k).map { i =>
-        val m = stats.getAs[Double](s"m$i")
-        val s = stats.getAs[Double](s"s$i")
-        require(s > 0, s"logisticGd: feature ${featureCols(i)} has zero variance")
-        ((col(s"__x$i") - lit(m)) / lit(s)).as(s"__z$i")
-      }: _*))
-    // HALF_UP to match SQL round() — rint's half-to-even would diverge
-    // from the oracle exactly on a 5e-7 boundary
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    var w = Array.fill(k + 1)(0.0) // bias :: feature weights
-    for (_ <- 1 to iters) {
-      val z = (0 until k).foldLeft(lit(w(0)): Column)((acc, i) =>
-        acc + lit(w(i + 1)) * col(s"__z$i"))
-      val p = lit(1.0) / (lit(1.0) + exp(-z))
-      val g = base.agg(
-        avg(p - col("__y")).as("g0"),
-        (0 until k).map(i =>
-          avg((p - col("__y")) * col(s"__z$i")).as(s"g${i + 1}")): _*).head()
-      w = w.zipWithIndex.map { case (wi, j) =>
-        r6(wi - lr * g.getAs[Double](s"g$j")) }
-    }
-    val zF = (0 until k).foldLeft(lit(w(0)): Column)((acc, i) =>
-      acc + lit(w(i + 1)) * col(s"__z$i"))
+    val (base, ws) = gdFit(raw, Nil, featureCols, lr, iters, "logisticGd")
+    val w = ws.last
+    val zF = logit(w)
     val loss = greatest(zF, lit(0.0)) - col("__y") * zF +
       log(lit(1.0) + exp(-abs(zF)))
     base.agg(
@@ -121,39 +139,10 @@ object Learn {
       .select(y.as("__y") +: out.as("__out") +:
         featureCols.zipWithIndex.map { case (c, i) =>
           col(c).cast("double").as(s"__x$i") }: _*)
-    val k = featureCols.size
-    val stats = raw.agg(
-      round(avg(col("__x0")), 6).as("m0"),
-      (Seq(round(stddev_pop(col("__x0")), 6).as("s0")) ++
-        (1 until k).flatMap(i => Seq(
-          round(avg(col(s"__x$i")), 6).as(s"m$i"),
-          round(stddev_pop(col(s"__x$i")), 6).as(s"s$i")))): _*).head()
-    val base = graft.core.CacheRegistry.persist(
-      raw.select(col("__y") +: col("__out") +: (0 until k).map { i =>
-        val m = stats.getAs[Double](s"m$i")
-        val s = stats.getAs[Double](s"s$i")
-        require(s > 0, s"ipwAte: feature ${featureCols(i)} has zero variance")
-        ((col(s"__x$i") - lit(m)) / lit(s)).as(s"__z$i")
-      }: _*))
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    var w = Array.fill(k + 1)(0.0)
-    for (_ <- 1 to iters) {
-      val z = (0 until k).foldLeft(lit(w(0)): Column)((acc, i) =>
-        acc + lit(w(i + 1)) * col(s"__z$i"))
-      val p = lit(1.0) / (lit(1.0) + exp(-z))
-      val g = base.agg(
-        avg(p - col("__y")).as("g0"),
-        (0 until k).map(i =>
-          avg((p - col("__y")) * col(s"__z$i")).as(s"g${i + 1}")): _*).head()
-      w = w.zipWithIndex.map { case (wi, j) =>
-        r6(wi - lr * g.getAs[Double](s"g$j")) }
-    }
-    val zF = (0 until k).foldLeft(lit(w(0)): Column)((acc, i) =>
-      acc + lit(w(i + 1)) * col(s"__z$i"))
+    val (base, ws) = gdFit(raw, Seq("__out"), featureCols, lr, iters, "ipwAte")
     // 6 dp-snapped clipped propensity -> per-row weight, also snapped:
     // every sum below runs over exact micro-integer decimals
-    val e = round(least(greatest(lit(1.0) / (lit(1.0) + exp(-zF)),
+    val e = round(least(greatest(sigmoid(logit(ws.last)),
       lit(clip)), lit(1.0 - clip)), 6)
     val wt = round(when(col("__y") === 1.0, lit(1.0) / e)
       .otherwise(lit(1.0) / (lit(1.0) - e)), 6)
@@ -219,40 +208,10 @@ object Learn {
         && y.isNotNull)
       .select(y.as("__y") +: featureCols.zipWithIndex.map { case (c, i) =>
         col(c).cast("double").as(s"__x$i") }: _*)
-    val k = featureCols.size
-    val stats = raw.agg(
-      round(avg(col("__x0")), 6).as("m0"),
-      (Seq(round(stddev_pop(col("__x0")), 6).as("s0")) ++
-        (1 until k).flatMap(i => Seq(
-          round(avg(col(s"__x$i")), 6).as(s"m$i"),
-          round(stddev_pop(col(s"__x$i")), 6).as(s"s$i")))): _*).head()
-    val base = graft.core.CacheRegistry.persist(
-      raw.select(col("__y") +: (0 until k).map { i =>
-        val m = stats.getAs[Double](s"m$i")
-        val s = stats.getAs[Double](s"s$i")
-        require(s > 0,
-          s"dataCartography: feature ${featureCols(i)} has zero variance")
-        ((col(s"__x$i") - lit(m)) / lit(s)).as(s"__z$i")
-      }: _*))
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    var w = Array.fill(k + 1)(0.0)
-    val snapshots = (1 to iters).map { _ =>
-      val z = (0 until k).foldLeft(lit(w(0)): Column)((acc, i) =>
-        acc + lit(w(i + 1)) * col(s"__z$i"))
-      val p = lit(1.0) / (lit(1.0) + exp(-z))
-      val g = base.agg(
-        avg(p - col("__y")).as("g0"),
-        (0 until k).map(i =>
-          avg((p - col("__y")) * col(s"__z$i")).as(s"g${i + 1}")): _*).head()
-      w = w.zipWithIndex.map { case (wi, j) =>
-        r6(wi - lr * g.getAs[Double](s"g$j")) }
-      w.clone()
-    }
-    val confs = snapshots.map { ws =>
-      val z = (0 until k).foldLeft(lit(ws(0)): Column)((acc, i) =>
-        acc + lit(ws(i + 1)) * col(s"__z$i"))
-      val p = lit(1.0) / (lit(1.0) + exp(-z))
+    val (base, snapshots) =
+      gdFit(raw, Nil, featureCols, lr, iters, "dataCartography")
+    val confs = snapshots.map { w =>
+      val p = sigmoid(logit(w))
       when(col("__y") === 1.0, p).otherwise(lit(1.0) - p)
     }
     val mean = confs.foldLeft(lit(0.0): Column)(_ + _) / lit(iters.toDouble)

@@ -431,33 +431,6 @@ object Multimodal {
       }.toDF("id", "payload")
   }
 
-  /** Perceptual near-duplicate pairs over the media table — the missing
-    * modality of the dedup family: [[graft.ops.Dedup]] near-dups TEXT,
-    * this near-dups the BINARY column through its perceptual fingerprint
-    * (pHash-style; the container-true chain fingerprints REAL decoded
-    * pixels via [[ppmLumaContent]] → [[perceptualHash64Content]] →
-    * [[perceptualNearDupPairsOn]], while this utf-8 entry point covers
-    * the text modality). Banded exactly like the text LSH paths
-    * (q43): the 64-bit [[perceptualHash64]] splits into `bands` bit
-    * slices, candidates share at least one slice verbatim, and candidates
-    * verify by full Hamming distance ≤ `maxHamming` (bit_count of xor).
-    * A true near-dup is missed only if every band differs — the standard
-    * LSH recall trade, tuned by `bands`. Output: (id_a, id_b, hamming),
-    * a < b.
-    *
-    * Scale shape: one fingerprint scan (zero shuffle), then VALUE-LEVEL
-    * banding (round 9, measured at 100×): DISTINCT fingerprints band and
-    * pair on (band, bucket) — never blob×blob, never N² (the q43
-    * contract; plan-gated against cartesians) — the Hamming verify runs
-    * once per value pair, and the expansion back to id pairs is two
-    * output-proportional equi-joins (equal-fingerprint pairs ride a
-    * direct fingerprint equi-join at Hamming 0). On a duplicate-heavy
-    * corpus the hot-bucket quadratic counts unique CONTENT, not repeated
-    * items. GRANULARITY RULE (measured, SCALE10X.md): per-bucket
-    * occupancy drives the candidate join quadratically, so band WIDTH
-    * grows with the corpus (fewer, wider bands: 8×8-bit at 5k items,
-    * 4×16-bit at 50k) — recall drops as bands shrink, the usual LSH
-    * trade. */
   /** Recall CONTRACT for [[perceptualNearDupPairs]] — the q217 device for
     * the perceptual tier: the banded pair set is compared against the
     * EXACT Hamming-threshold pair set (an O(N²) fingerprint self-join —
@@ -478,38 +451,15 @@ object Multimodal {
     * phash64)` frame — the fingerprint-source-agnostic form, so the
     * container-true chain (q349: [[ppmLumaContent]] →
     * [[perceptualHash64Content]]) certifies its banded recall with the
-    * same machinery as the utf-8 tier. */
+    * same machinery as the utf-8 tier. The banded stage reuses the SAME
+    * fingerprint frame as the exact judge, so the payload scan + SimHash
+    * kernel runs once per contract; `bandedGen`, a maintained banded pair
+    * frame at this (bands, maxHamming), skips even the band join. */
   def perceptualRecallContractOn(fps: DataFrame,
                                  bands: Int, maxHamming: Int,
-                                 bandedGen: Option[DataFrame] = None): DataFrame = {
-    val ham = bit_count(col("fa").bitwiseXOR(col("fb"))).cast("long")
-    val exact = fps.toDF("id_a", "fa")
-      .crossJoin(fps.toDF("id_b", "fb"))
-      .where(col("id_a") < col("id_b") && ham <= maxHamming)
-      .select(col("id_a"), col("id_b"))
-    // the banded stage reuses the SAME persisted fingerprint frame as the
-    // exact judge — the payload scan + SimHash kernel (the CPU hot spot)
-    // runs exactly once per contract invocation. bandedGen: as in the
-    // 128-bit contract, a maintained banded pair frame skips even that.
-    val banded = bandedGen
-      .getOrElse(perceptualNearDupPairsOn(fps, bands, maxHamming))
-      .select("id_a", "id_b")
-    val e = exact.agg(count(lit(1)).as("n_exact"))
-    val b = graft.core.CacheRegistry.persist(banded)
-    val nb = b.agg(count(lit(1)).as("n_banded"))
-    val inExact = b.join(exact, Seq("id_a", "id_b"), "left_semi")
-      .agg(count(lit(1)).as("__n_in"))
-    // recall counts only banded pairs that ARE exact pairs (__n_in): while
-    // the subset invariant holds __n_in == n_banded, but if the band join
-    // ever corrupted a pair the metric must not overstate (or exceed 1) in
-    // precisely the failure mode banded_subset_exact exists to flag
-    e.crossJoin(nb).crossJoin(inExact)
-      .select(col("n_exact"), col("n_banded"),
-        when(col("n_exact") === 0L, lit(1.0))
-          .otherwise(round(col("__n_in").cast("double") / col("n_exact"), 6))
-          .as("recall"),
-        (col("__n_in") === col("n_banded")).as("banded_subset_exact"))
-  }
+                                 bandedGen: Option[DataFrame] = None): DataFrame =
+    Similarity.recallLedger(Image64.exact(fps, maxHamming),
+      bandedGen.getOrElse(perceptualNearDupPairsOn(fps, bands, maxHamming)))
 
   /** Cross-modal near-dup consensus — the paired-dataset curation step
     * (image+caption corpora): an item PAIR is a high-confidence duplicate
@@ -543,6 +493,14 @@ object Multimodal {
           coalesce(col("in_media"), lit(false))).as("consensus"))
   }
 
+  /** Perceptual near-duplicate pairs over the media table — the missing
+    * modality of the dedup family: [[graft.ops.Dedup]] near-dups TEXT,
+    * this near-dups the BINARY column through its 64-bit perceptual
+    * fingerprint ([[perceptualHash64]]; the container-true chain
+    * fingerprints REAL decoded pixels via [[ppmLumaContent]] →
+    * [[perceptualHash64Content]] → [[perceptualNearDupPairsOn]], while
+    * this utf-8 entry point covers the text modality). Output:
+    * (id_a, id_b, hamming), a < b. */
   def perceptualNearDupPairs(spark: SparkSession, media: DataFrame,
                              bands: Int, maxHamming: Int): DataFrame =
     perceptualNearDupPairsOn(
@@ -553,140 +511,249 @@ object Multimodal {
     * ALREADY-computed (and ideally persisted) `(id, phash64)` frame —
     * the shared fan-in of the pair query and [[perceptualRecallContract]],
     * so a caller holding fingerprints never pays the payload scan +
-    * SimHash kernel twice. Same semantics, same plan shape: (band,
-    * bucket)-keyed self-join over 8-byte keys, pair dedup, exact Hamming
-    * verify. */
+    * SimHash kernel twice: [[HammingBands]] over `bands` slices of
+    * 64/bands bits, verify radius `maxHamming`. */
   def perceptualNearDupPairsOn(fps: DataFrame,
                                bands: Int, maxHamming: Int): DataFrame = {
     require(bands >= 1 && 64 % bands == 0,
       s"perceptualNearDupPairsOn: bands must divide 64, got $bands")
     require(maxHamming >= 0 && maxHamming <= 64,
       s"perceptualNearDupPairsOn: need 0 <= maxHamming <= 64, got $maxHamming")
-    val width = 64 / bands
-    val mask = (1L << width) - 1
-    // VALUE-LEVEL banding (measured at 100×, SCALE10X round 9): a dedup
-    // corpus is duplicate-heavy BY DEFINITION, so hot (band, bucket)
-    // cells are mostly the SAME fingerprint repeated — banding distinct
-    // VALUES makes the quadratic candidate term count unique
-    // fingerprints, and the expansion back to id pairs is
-    // output-proportional (it IS the answer). Identical semantics:
-    // equal-fingerprint pairs share every band trivially (emitted by the
-    // value→ids equi-join at hamming 0), unequal pairs surface iff their
-    // VALUES share a band bucket — exactly the id-level candidate rule.
-    //
-    // THE TRADE, priced on both corpus classes (SCALE10X round 10): on a
-    // duplicate-POOR corpus (distinct fingerprints ≈ rows) the distinct +
-    // two expansion joins are pure overhead — measured 1.8–3.7× slower
-    // than id-level banding at 500 k unique fingerprints — and on a
-    // duplicate-heavy corpus whose ANSWER is itself huge the two forms
-    // converge (504 vs 582 s on a 453.9 M-pair answer; both output-
-    // bound). Value-level stays the default because its downside is
-    // bounded (≤ ~2× of extra exchanges on the answer) while id-level's
-    // is not: hot buckets make its candidate term quadratic in
-    // MULTIPLICITY, the regime where the 128-bit tier measured 4.6–6.5×
-    // wins for value-level (and growing with scale). Callers with a
-    // known near-unique fingerprint column can band ids directly.
-    expandValuePairs64(fps, valuePairs64(fps, bands, maxHamming))
+    Image64.pairs(fps, 64 / bands, maxHamming)
   }
 
-  /** DISTINCT-fingerprint banded candidate VALUE pairs with their full
-    * 64-bit Hamming distance, capped at `capRadius` — the 64-bit twin of
-    * [[valuePairs128]] and the shared core of the 64-bit pair family
-    * (the pair query, its recall contract, and the radius sweep all ride
-    * ONE candidate join). Equal-value pairs are not emitted here (they
-    * ride the exact equi-join at expansion). */
-  private def valuePairs64(fps: DataFrame, bands: Int,
-                           capRadius: Int): DataFrame = {
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val vals = fps.select(col("phash64")).distinct()
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        (shiftright(col("phash64"), b * width).bitwiseAND(lit(mask))).as("bucket"))
-    }
-    val banded = vals.select(col("phash64"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("phash64"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    banded.toDF("fa", "band", "bucket")
-      .join(banded.toDF("fb", "band", "bucket"), Seq("band", "bucket"))
-      .where(col("fa") < col("fb"))
-      .select("fa", "fb").distinct()
-      .withColumn("hamming",
-        bit_count(col("fa").bitwiseXOR(col("fb"))).cast("long"))
-      .where(col("hamming") <= capRadius)
-  }
-
-  /** The value→ids expansion half of the 64-bit pair family (the 64-bit
-    * twin of [[expandValuePairs128]]): each distinct-value pair fans out
-    * to its id pairs, equal-value id pairs ride an exact equi-join at
-    * hamming 0. Output: (id_a, id_b, hamming), a < b. */
-  private def expandValuePairs64(fps: DataFrame, valPairs: DataFrame): DataFrame = {
-    val cross = valPairs
-      .join(fps.select(col("id").as("__ia"), col("phash64").as("fa")), Seq("fa"))
-      .join(fps.select(col("id").as("__ib"), col("phash64").as("fb")), Seq("fb"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"), col("hamming"))
-    val exactDups = fps.toDF("id_a", "f")
-      .join(fps.toDF("id_b", "f"), Seq("f"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(0L).as("hamming"))
-    cross.unionByName(exactDups)
-  }
-
-  /** Banded id-pair DENSITY sweep over the 64-bit tier — the 64-bit twin
-    * of [[hammingRadiusSweep128]] (VERDICT r10 task 5: the 128-bit
-    * family's verify radius is DERIVED while the legacy 64-bit tier
-    * still rode the fixed 12/64 default): exact id-pair counts per grid
-    * radius from ONE banded join over DISTINCT fingerprints, id counts
-    * from multiplicity products (mA·mB per value pair, C(m,2) per
-    * repeated value) — never an id-pair expansion.
-    * Output: (radius, n_pairs), ascending. */
+  /** Banded id-pair DENSITY sweep over the 64-bit tier (see
+    * [[HammingBands.sweep]]). Output: (radius, n_pairs), ascending. */
   def hammingRadiusSweep64(fps: DataFrame, bands: Int,
                            radii: Seq[Int]): DataFrame = {
     require(radii.nonEmpty && radii == radii.sorted && radii.distinct == radii,
       s"hammingRadiusSweep64: radii must be sorted and distinct, got $radii")
-    sweepFrom64(fps, valuePairs64(fps, bands, radii.max), radii)
+    Image64.sweep(fps, 64 / bands, radii)
   }
 
-  private def sweepFrom64(fps: DataFrame, vp: DataFrame,
-                          radii: Seq[Int]): DataFrame = {
-    val spark = fps.sparkSession
-    import spark.implicits._
-    val vcnt = graft.core.CacheRegistry.persist(
-      fps.groupBy(col("phash64")).agg(count(lit(1)).as("m")))
-    // aggregated BY HAMMING before the radius theta join — see
-    // [[sweepFrom]]: ≤ capRadius+1 rows meet the grid instead of the
-    // whole value-pair frame replicated |radii|×
-    val byHam = vp
-      .join(vcnt.toDF("fa", "ma"), Seq("fa"))
-      .join(vcnt.toDF("fb", "mb"), Seq("fb"))
-      .groupBy(col("hamming"))
-      .agg(sum(col("ma") * col("mb")).as("np"))
-    val exact0 = vcnt.agg(coalesce(
-      sum(col("m") * (col("m") - 1) / 2), lit(0L)).cast("long").as("np0"))
-    radii.toDF("radius")
-      .join(byHam, col("hamming") <= col("radius"), "left")
-      .groupBy("radius")
-      .agg(coalesce(sum("np"), lit(0L)).as("__nb"))
-      .crossJoin(exact0)
-      .select(col("radius"), (col("__nb") + col("np0")).cast("long").as("n_pairs"))
-      .orderBy("radius")
-  }
-
-  /** DERIVED verify radius for the 64-bit tier — the same rule as
-    * [[recommendedRadius128]] at the legacy width: the LARGEST radius in
-    * `radii` whose banded id-pair count stays within `maxPairsPerItem`
-    * pairs per fingerprint row (the smallest when even that exceeds the
-    * budget). The default grid brackets the historical 12/64 operating
-    * point (the 3/16 proportional default), so on corpora where 12 was
-    * affordable the rule REPRODUCES it as a chosen point rather than an
-    * inherited one. Deterministic in the data — the oracle replays the
-    * identical rule in SQL. */
+  /** DERIVED verify radius for the 64-bit tier ([[pickRadius]]).
+    * The default grid brackets the historical 12/64 operating point (the
+    * 3/16 proportional default), so on corpora where 12 was affordable
+    * the rule REPRODUCES it as a chosen point rather than an inherited
+    * one. */
   def recommendedRadius64(fps: DataFrame, bands: Int, n: Long,
                           radii: Seq[Int] = Seq(4, 6, 8, 10, 12),
                           maxPairsPerItem: Double = 16.0): Int =
     pickRadius(hammingRadiusSweep64(fps, bands, radii), n, radii,
       maxPairsPerItem)
 
+  /** The banded-Hamming pair ENGINE behind every perceptual tier: 64-bit
+    * and 128-bit fingerprints, single images and frame-aligned video.
+    * A tier is two parameters — its fingerprint word columns (`phash64`,
+    * or `fph`, `fpl` for 128 bits) and its alignment key (none, or
+    * `frame` for video, where a frame only vouches for its temporal
+    * counterpart: re-ordered or time-shifted content does not match).
+    *
+    * Banding: each word splits into 64/w slices of w bits, bands numbered
+    * word by word (band b of a 128-bit fingerprint reads bits
+    * [b·w, (b+1)·w); w divides 64, so no band straddles two words).
+    * Candidates share a (key, band, bucket); they verify by the full
+    * Hamming distance — the sum of the words' xor popcounts — against
+    * the radius. A true near-dup is missed only if every band differs:
+    * the standard LSH recall trade, tuned by w and certified by the
+    * recall contracts ([[exact]] + [[Similarity.recallLedger]]).
+    *
+    * Scale shape: VALUE-LEVEL banding (round 9, measured at 100×).
+    * DISTINCT (key, fingerprint) values band and pair on (key, band,
+    * bucket) — never blob×blob, never N² (the q43 contract; plan-gated
+    * against cartesians) — the Hamming verify runs once per value pair,
+    * and the expansion back to id pairs is two output-proportional
+    * equi-joins (equal-fingerprint pairs ride a direct fingerprint
+    * equi-join at Hamming 0). A dedup corpus is duplicate-heavy BY
+    * DEFINITION, so hot buckets hold mostly the same fingerprint
+    * repeated; banding values makes the quadratic candidate term count
+    * unique CONTENT, not repeated items. Identical semantics: equal
+    * fingerprints share every band, unequal ones surface iff their values
+    * share a bucket — exactly the id-level candidate rule.
+    *
+    * THE TRADE, priced on both corpus classes (SCALE10X round 10): on a
+    * duplicate-POOR corpus (distinct fingerprints ≈ rows) the distinct +
+    * two expansion joins are pure overhead — measured 1.8–3.7× slower
+    * than id-level banding at 500 k unique fingerprints — and on a
+    * duplicate-heavy corpus whose ANSWER is itself huge the two forms
+    * converge (504 vs 582 s on a 453.9 M-pair answer; both output-
+    * bound). Value-level stays the default because its downside is
+    * bounded (≤ ~2× of extra exchanges on the answer) while id-level's
+    * is not: hot buckets make its candidate term quadratic in
+    * MULTIPLICITY, the regime where the 128-bit tier measured 4.6–6.5×
+    * wins for value-level (and growing with scale). Callers with a
+    * known near-unique fingerprint column can band ids directly.
+    *
+    * GRANULARITY RULE (measured, SCALE10X.md): per-bucket occupancy
+    * drives the candidate join quadratically, so band width grows with
+    * the corpus ([[recommendedBands]], [[recommendedWidth128]]). The
+    * VERIFY RADIUS is derived too: [[sweep]] prices every grid radius
+    * before any id pair exists, and [[pickRadius]] takes the widest one
+    * whose answer is still affordable. */
+  private final case class HammingBands(words: Seq[String], key: Seq[String]) {
+    private def named(s: String): Seq[String] = words.map(w => s"${s}_$w")
+    private def as(s: String): Seq[Column] =
+      words.zip(named(s)).map { case (w, n) => col(w).as(n) }
+    private def hamming: Column =
+      named("a").zip(named("b"))
+        .map { case (x, y) => bit_count(col(x).bitwiseXOR(col(y))) }
+        .reduce(_ + _).cast("long")
+    // lexicographic a < b over the words
+    private def ordered: Column =
+      named("a").zip(named("b")).init.foldRight(col(named("a").last) < col(named("b").last)) {
+        case ((x, y), rest) => col(x) < col(y) || (col(x) === col(y) && rest) }
+
+    /** DISTINCT-value banded candidate pairs with their full Hamming
+      * distance, capped at `capRadius` — the one candidate join the pair
+      * query, its density sweep and the derived-radius path share.
+      * Equal-value pairs are not emitted here (they ride the exact
+      * equi-join at expansion). Output: (key…, a_<word>…, b_<word>…,
+      * hamming), value-ordered. */
+    def valuePairs(fps: DataFrame, width: Int, capRadius: Int): DataFrame = {
+      require(width >= 1 && width <= 64 && 64 % width == 0,
+        s"HammingBands: width must divide 64, got $width")
+      require(capRadius >= 0 && capRadius <= 64 * words.size,
+        s"HammingBands: need 0 <= capRadius <= ${64 * words.size}, got $capRadius")
+      val mask = if (width == 64) -1L else (1L << width) - 1
+      val perWord = 64 / width
+      val bandCols = for ((w, i) <- words.zipWithIndex; j <- 0 until perWord)
+        yield struct(lit(i * perWord + j).as("band"),
+          shiftright(col(w), j * width).bitwiseAND(lit(mask)).as("bucket"))
+      val vals = (key ++ words).map(col)
+      val banded = fps.select(vals: _*).distinct()
+        .select(vals :+ explode(array(bandCols: _*)).as("bb"): _*)
+        .select(vals :+ col("bb.band").as("band") :+ col("bb.bucket").as("bucket"): _*)
+      val joinKey = key :+ "band" :+ "bucket"
+      banded.toDF(key ++ named("a") :+ "band" :+ "bucket": _*)
+        .join(banded.toDF(key ++ named("b") :+ "band" :+ "bucket": _*), joinKey)
+        .where(ordered)
+        .select((key ++ named("a") ++ named("b")).map(col): _*).distinct()
+        .withColumn("hamming", hamming)
+        .where(col("hamming") <= capRadius)
+    }
+
+    /** Value pairs back to id pairs: each value pair fans out to its ids
+      * (output-proportional), equal-value id pairs ride an exact
+      * fingerprint equi-join at hamming 0. Output: (id_a, id_b, key…,
+      * hamming), a < b. */
+    def expand(fps: DataFrame, vp: DataFrame): DataFrame = {
+      def ids(s: String) = fps.select(col("id").as(s"__i$s") +: key.map(col) ++: as(s): _*)
+      val cross = vp
+        .join(ids("a"), key ++ named("a"))
+        .join(ids("b"), key ++ named("b"))
+        .select(least(col("__ia"), col("__ib")).as("id_a") +:
+          greatest(col("__ia"), col("__ib")).as("id_b") +: (key :+ "hamming").map(col): _*)
+      val dups = fps.select(col("id").as("id_a") +: (key ++ words).map(col): _*)
+        .join(fps.select(col("id").as("id_b") +: (key ++ words).map(col): _*), key ++ words)
+        .where(col("id_a") < col("id_b"))
+        .select(col("id_a") +: col("id_b") +: key.map(col) :+ lit(0L).as("hamming"): _*)
+      cross.unionByName(dups)
+    }
+
+    def pairs(fps: DataFrame, width: Int, maxHamming: Int): DataFrame =
+      expand(fps, valuePairs(fps, width, maxHamming))
+
+    /** Banded id-pair DENSITY sweep — the Hamming twin of the q329
+      * cosine threshold sweep: for each grid radius, the EXACT number of
+      * id pairs (frame pairs on a keyed tier) the banded pair query would
+      * emit at that radius, computed WITHOUT expanding a single id pair:
+      * one candidate join at `radii.max`, id counts from value
+      * multiplicity products (mA·mB per value pair, C(m,2) per repeated
+      * value at hamming 0). This is what makes a radius a DECISION rather
+      * than a default: at the 100× templated fixture the 24/128 default
+      * emits 736.7 M true-by-radius pairs. Output: (radius, n_pairs),
+      * ascending. */
+    def sweep(fps: DataFrame, width: Int, radii: Seq[Int]): DataFrame =
+      density(fps, valuePairs(fps, width, radii.max), radii)
+
+    /** The sweep tail over a prebuilt value-pair frame. The per-pair
+      * products are hash-aggregated BY HAMMING DISTANCE (≤ capRadius+1
+      * groups, map-side partials) before the |radii| theta join, so the
+      * grid never replicates the whole pair frame (guide §2.3
+      * aggregate-before-the-join / §3.3 exploding joins). */
+    def density(fps: DataFrame, vp: DataFrame, radii: Seq[Int]): DataFrame = {
+      val spark = fps.sparkSession
+      import spark.implicits._
+      val vcnt = graft.core.CacheRegistry.persist(
+        fps.groupBy((key ++ words).map(col): _*).agg(count(lit(1)).as("m")))
+      val byHam = vp
+        .join(vcnt.toDF(key ++ named("a") :+ "ma": _*), key ++ named("a"))
+        .join(vcnt.toDF(key ++ named("b") :+ "mb": _*), key ++ named("b"))
+        .groupBy(col("hamming"))
+        .agg(sum(col("ma") * col("mb")).as("np"))
+      val exact0 = vcnt.agg(coalesce(
+        sum(col("m") * (col("m") - 1) / 2), lit(0L)).cast("long").as("np0"))
+      radii.toDF("radius")
+        .join(byHam, col("hamming") <= col("radius"), "left")
+        .groupBy("radius")
+        .agg(coalesce(sum("np"), lit(0L)).as("__nb"))
+        .crossJoin(exact0)
+        .select(col("radius"), (col("__nb") + col("np0")).cast("long").as("n_pairs"))
+        .orderBy("radius")
+    }
+
+    /** Pairs at the DERIVED radius: ONE banded value join at `radii.max`
+      * (persisted) feeds both the density sweep and — after the radius
+      * decision — the expansion; the sweep is not a second candidate
+      * pass. */
+    def auto(fps: DataFrame, width: Int, n: Long, radii: Seq[Int],
+             maxPairsPerItem: Double): DataFrame = {
+      val vp = graft.core.CacheRegistry.persist(valuePairs(fps, width, radii.max))
+      val radius = pickRadius(density(fps, vp, radii), n, radii,
+        maxPairsPerItem)
+      expand(fps, vp.where(col("hamming") <= radius))
+    }
+
+    /** The EXACT Hamming-threshold pair set — the priced O(N²) judge of a
+      * recall contract (fingerprint keys only, never blob×blob; per key
+      * value on a keyed tier). Output: (id_a, id_b, key…), a < b. */
+    def exact(fps: DataFrame, maxHamming: Int): DataFrame = {
+      def ids(s: String) = fps.select(col("id").as(s"id_$s") +: key.map(col) ++: as(s): _*)
+      ids("a").join(ids("b"), key)
+        .where(col("id_a") < col("id_b") && hamming <= maxHamming)
+        .select((Seq("id_a", "id_b") ++ key).map(col): _*)
+    }
+
+    /** Shot boundaries: for each consecutive sampled-frame pair (f,
+      * f+step) within a video, the full Hamming distance between their
+      * fingerprints, flagged a cut above `cutHamming`. One equi-join on
+      * (id, frame+step) — linear in sampled frames, no windows, no
+      * blobs. Output: (id, frame_from, frame_to, hamming, is_cut). */
+    def sceneChanges(fps: DataFrame, step: Int, cutHamming: Int): DataFrame = {
+      val from = fps.select(col("id") +: col("frame").as("frame_from") +: as("a"): _*)
+      val to = fps.select(col("id") +: (col("frame") - step).as("frame_from") +:
+        col("frame").as("frame_to") +: as("b"): _*)
+      from.join(to, Seq("id", "frame_from"))
+        .select(col("id"), col("frame_from"), col("frame_to"), hamming.as("hamming"))
+        .withColumn("is_cut", col("hamming") > cutHamming)
+    }
+  }
+
+  /** The widest radius in `radii` whose banded pair count stays within
+    * `maxPairsPerItem` pairs per fingerprint row (`n`, the count the
+    * width rule calibrates on), so the budget scales with the corpus;
+    * the smallest radius when even that exceeds the budget
+    * (irreducible exact-duplicate structure). Deterministic in the
+    * data — the oracles replay the identical rule in SQL. */
+  private def pickRadius(sweep: DataFrame, n: Long, radii: Seq[Int],
+                         maxPairsPerItem: Double): Int = {
+    val rows = sweep.collect() // |radii| rows — model-bounded
+    val affordable = rows.filter(_.getLong(1) <= maxPairsPerItem * n)
+      .map(_.getInt(0))
+    if (affordable.isEmpty) radii.min else affordable.max
+  }
+
+  private val Image64 = HammingBands(Seq("phash64"), Nil)
+  private val Image128 = HammingBands(Seq("fph", "fpl"), Nil)
+  private val Video64 = HammingBands(Seq("phash64"), Seq("frame"))
+  private val Video128 = HammingBands(Seq("fph", "fpl"), Seq("frame"))
+
+  /** One row per video pair with at least `minFrames` matched frames:
+    * (id_a, id_b, n_frames). */
+  private def matchedFrames(framePairs: DataFrame, minFrames: Int): DataFrame =
+    framePairs.groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("n_frames"))
+      .where(col("n_frames") >= minFrames)
   /** Synthesize a REAL RIFF/WAVE payload (PCM16 mono little-endian) per
     * row — the audio-modality fixture generator: sample bytes derive from
     * the row's md5 chain (block j's 16 digest bytes of `md5(s"$text:$j")`
@@ -932,202 +999,58 @@ object Multimodal {
   }
 
   /** Banded Hamming pairs over 128-bit fingerprints `(id, fph, fpl)` —
-    * [[perceptualNearDupPairsOn]] widened: band b reads bits
-    * [b·w, (b+1)·w) of the 128-bit word (the first 64/w bands from
-    * `fph`, the rest from `fpl`; w divides 64 so no band straddles the
-    * halves), candidates share a (band, bucket), verify by full 128-bit
-    * Hamming (sum of the two halves' xor popcounts) ≤ `maxHamming`.
-    * Output: (id_a, id_b, hamming), a < b. Same plan law: 16-byte keys,
-    * never content×content, never N². */
-  /** DISTINCT-fingerprint banded candidate VALUE pairs with their full
-    * 128-bit Hamming distance, capped at `capRadius` — the shared core
-    * of the 128-bit pair family: VALUE-LEVEL banding (see
-    * [[perceptualNearDupPairsOn]]) makes the hot-bucket quadratic scale
-    * with unique CONTENT, and the value→ids expansion
-    * ([[expandValuePairs128]]) is output-proportional. Equal-value pairs
-    * are NOT emitted here (they ride the exact equi-join at expansion).
-    * Output: (ah, al, bh, bl, hamming), value-ordered. */
-  private def valuePairs128(fps: DataFrame, width: Int,
-                            capRadius: Int): DataFrame = {
-    require(width >= 1 && width <= 64 && 64 % width == 0,
-      s"valuePairs128: width must divide 64, got $width")
-    require(capRadius >= 0 && capRadius <= 128,
-      s"valuePairs128: need 0 <= capRadius <= 128, got $capRadius")
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val perHalf = 64 / width
-    val vals = fps.select(col("fph"), col("fpl")).distinct()
-    val bandCols = (0 until 2 * perHalf).map { b =>
-      val src = if (b < perHalf) col("fph") else col("fpl")
-      val shift = (b % perHalf) * width
-      struct(lit(b).as("band"),
-        (shiftright(src, shift).bitwiseAND(lit(mask))).as("bucket"))
-    }
-    val banded = vals.select(col("fph"), col("fpl"),
-      explode(array(bandCols: _*)).as("bb"))
-      .select(col("fph"), col("fpl"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val ham = (bit_count(col("ah").bitwiseXOR(col("bh"))) +
-      bit_count(col("al").bitwiseXOR(col("bl")))).cast("long")
-    banded.toDF("ah", "al", "band", "bucket")
-      .join(banded.toDF("bh", "bl", "band", "bucket"), Seq("band", "bucket"))
-      .where(col("ah") < col("bh") ||
-        (col("ah") === col("bh") && col("al") < col("bl")))
-      .select("ah", "al", "bh", "bl").distinct()
-      .withColumn("hamming", ham)
-      .where(col("hamming") <= capRadius)
-  }
-
-  /** The value→ids expansion half of the 128-bit pair family: each
-    * distinct-value pair fans out to its id pairs (output-proportional),
-    * and equal-value id pairs ride an exact fingerprint equi-join at
-    * hamming 0. Output: (id_a, id_b, hamming), a < b. */
-  private def expandValuePairs128(fps: DataFrame, valPairs: DataFrame): DataFrame = {
-    val cross = valPairs
-      .join(fps.select(col("id").as("__ia"), col("fph").as("ah"),
-        col("fpl").as("al")), Seq("ah", "al"))
-      .join(fps.select(col("id").as("__ib"), col("fph").as("bh"),
-        col("fpl").as("bl")), Seq("bh", "bl"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"), col("hamming"))
-    val exactDups = fps.toDF("id_a", "h", "l")
-      .join(fps.toDF("id_b", "h", "l"), Seq("h", "l"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(0L).as("hamming"))
-    cross.unionByName(exactDups)
-  }
-
+    * [[perceptualNearDupPairsOn]] widened ([[HammingBands]] over both
+    * words, band width `width`): verify by full 128-bit Hamming ≤
+    * `maxHamming`. Output: (id_a, id_b, hamming), a < b. Same plan law:
+    * 16-byte keys, never content×content, never N². */
   def perceptualNearDupPairs128On(fps: DataFrame, width: Int,
                                   maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 128,
       s"perceptualNearDupPairs128On: need 0 <= maxHamming <= 128, got $maxHamming")
-    expandValuePairs128(fps, valuePairs128(fps, width, maxHamming))
+    Image128.pairs(fps, width, maxHamming)
   }
 
-  /** Banded id-pair DENSITY sweep over the 128-bit tier — the Hamming
-    * twin of the q329 cosine threshold sweep: for each candidate radius,
-    * the EXACT number of id pairs the banded pair query would emit at
-    * that radius, computed WITHOUT expanding a single id pair — the
-    * candidate join runs once at `radii.max` over DISTINCT fingerprints,
-    * id counts come from value multiplicity products (mA·mB per
-    * distinct-value pair, C(m,2) per repeated value at hamming 0). This
-    * is what makes a radius a DECISION rather than a default: at the
-    * 100× templated fixture the 24/128 default emits 736.7 M true-by-
-    * radius pairs; the sweep prices every operating point first.
-    * Output: (radius, n_pairs), ascending. */
+  /** Banded id-pair DENSITY sweep over the 128-bit tier
+    * ([[HammingBands.sweep]]). Output: (radius, n_pairs), ascending. */
   def hammingRadiusSweep128(fps: DataFrame, width: Int,
                             radii: Seq[Int]): DataFrame = {
     require(radii.nonEmpty && radii == radii.sorted && radii.distinct == radii,
       s"hammingRadiusSweep128: radii must be sorted and distinct, got $radii")
-    sweepFrom(fps, valuePairs128(fps, width, radii.max), radii)
-  }
-
-  /** The sweep tail over a prebuilt value-pair frame: multiplicity
-    * products per distinct-value pair, C(m,2) per repeated value at
-    * hamming 0 (inside every radius), cumulative per grid radius.
-    *
-    * The per-pair products are first hash-aggregated BY HAMMING DISTANCE
-    * (≤ capRadius+1 groups, map-side partials) and only that tiny frame
-    * meets the |radii| theta join — the earlier shape joined every
-    * value-pair row against the radius grid, replicating the whole pair
-    * frame |radii|× through a BroadcastNestedLoopJoin before aggregating
-    * (guide §2.3 aggregate-before-the-join / §3.3 exploding joins). Sums
-    * are exact longs grouped differently, so n_pairs is unchanged. */
-  private def sweepFrom(fps: DataFrame, vp: DataFrame,
-                        radii: Seq[Int]): DataFrame = {
-    val spark = fps.sparkSession
-    import spark.implicits._
-    val vcnt = graft.core.CacheRegistry.persist(
-      fps.groupBy(col("fph"), col("fpl")).agg(count(lit(1)).as("m")))
-    val byHam = vp
-      .join(vcnt.toDF("ah", "al", "ma"), Seq("ah", "al"))
-      .join(vcnt.toDF("bh", "bl", "mb"), Seq("bh", "bl"))
-      .groupBy(col("hamming"))
-      .agg(sum(col("ma") * col("mb")).as("np"))
-    val exact0 = vcnt.agg(coalesce(
-      sum(col("m") * (col("m") - 1) / 2), lit(0L)).cast("long").as("np0"))
-    radii.toDF("radius")
-      .join(byHam, col("hamming") <= col("radius"), "left")
-      .groupBy("radius")
-      .agg(coalesce(sum("np"), lit(0L)).as("__nb"))
-      .crossJoin(exact0)
-      .select(col("radius"), (col("__nb") + col("np0")).cast("long").as("n_pairs"))
-      .orderBy("radius")
+    Image128.sweep(fps, width, radii)
   }
 
   /** DERIVED verify radius for the 128-bit tier — the Hamming twin of
     * [[recommendedWidth128]] (VERDICT r9 #4): the fixed 3/16 default
     * (24/128) is an operating point someone chose once, and on a
-    * dup-dense corpus it can be an answer too big to want. The rule:
-    * the LARGEST radius in `radii` whose banded id-pair count stays
-    * within `maxPairsPerItem` pairs per fingerprint row — the widest
-    * radius whose answer is still output-affordable; when even the
-    * smallest radius exceeds the budget (irreducible exact-duplicate
-    * structure), the smallest is returned. `n` is the fingerprint row
-    * count (the calibration count the width rule already uses), so the
-    * budget scales with the corpus. Deterministic in the data — the
-    * oracle replays the identical rule in SQL. */
+    * dup-dense corpus it can be an answer too big to want
+    * ([[pickRadius]] decides instead). */
   def recommendedRadius128(fps: DataFrame, width: Int, n: Long,
                            radii: Seq[Int] = Seq(8, 12, 16, 20, 24),
                            maxPairsPerItem: Double = 16.0): Int =
     pickRadius(hammingRadiusSweep128(fps, width, radii), n, radii,
       maxPairsPerItem)
 
-  private def pickRadius(sweep: DataFrame, n: Long, radii: Seq[Int],
-                         maxPairsPerItem: Double): Int = {
-    val rows = sweep.collect() // |radii| rows — model-bounded
-    val affordable = rows.filter(_.getLong(1) <= maxPairsPerItem * n)
-      .map(_.getInt(0))
-    if (affordable.isEmpty) radii.min else affordable.max
-  }
-
-  /** [[perceptualNearDupPairs128On]] at the DERIVED radius: ONE banded
-    * value join at `radii.max` (persisted) feeds both the density sweep
-    * and — after the radius decision — the output-proportional
-    * expansion; the sweep is not a second candidate pass. */
+  /** [[perceptualNearDupPairs128On]] at the DERIVED radius
+    * ([[HammingBands.auto]]). */
   def perceptualNearDupPairs128Auto(fps: DataFrame, width: Int, n: Long,
                                     radii: Seq[Int] = Seq(8, 12, 16, 20, 24),
                                     maxPairsPerItem: Double = 16.0): DataFrame = {
     require(radii.nonEmpty && radii == radii.sorted && radii.distinct == radii,
       s"perceptualNearDupPairs128Auto: radii must be sorted and distinct, got $radii")
-    val vp = graft.core.CacheRegistry.persist(
-      valuePairs128(fps, width, radii.max))
-    val radius = pickRadius(sweepFrom(fps, vp, radii), n, radii, maxPairsPerItem)
-    expandValuePairs128(fps, vp.where(col("hamming") <= radius))
+    Image128.auto(fps, width, n, radii, maxPairsPerItem)
   }
 
   /** Recall contract for the 128-bit tier — [[perceptualRecallContractOn]]
     * widened: banded pairs vs the exact 128-bit Hamming pair set (the
-    * priced O(N²) judge over 16-byte keys). One row:
+    * priced O(N²) judge over 16-byte keys). `bandedGen`: the maintained
+    * banded pair frame at this (width, maxHamming) — callers holding one
+    * (the pair query's own output) skip the second band join. One row:
     * (n_exact, n_banded, recall, banded_subset_exact). */
   def perceptualRecallContract128On(fps: DataFrame, width: Int,
                                     maxHamming: Int,
-                                    bandedGen: Option[DataFrame] = None): DataFrame = {
-    val ham = (bit_count(col("ah").bitwiseXOR(col("bh"))) +
-      bit_count(col("al").bitwiseXOR(col("bl")))).cast("long")
-    val exact = fps.toDF("id_a", "ah", "al")
-      .crossJoin(fps.toDF("id_b", "bh", "bl"))
-      .where(col("id_a") < col("id_b") && ham <= maxHamming)
-      .select(col("id_a"), col("id_b"))
-    // bandedGen: the maintained banded pair frame at this (width,
-    // maxHamming) — callers holding one (the pair query's own output)
-    // skip the second band join; the .select below projects a NEW frame,
-    // so the contract's scoped persist never unpersists the caller's
-    val banded = bandedGen
-      .getOrElse(perceptualNearDupPairs128On(fps, width, maxHamming))
-      .select("id_a", "id_b")
-    val e = exact.agg(count(lit(1)).as("n_exact"))
-    val b = graft.core.CacheRegistry.persist(banded)
-    val nb = b.agg(count(lit(1)).as("n_banded"))
-    val inExact = b.join(exact, Seq("id_a", "id_b"), "left_semi")
-      .agg(count(lit(1)).as("__n_in"))
-    e.crossJoin(nb).crossJoin(inExact)
-      .select(col("n_exact"), col("n_banded"),
-        when(col("n_exact") === 0L, lit(1.0))
-          .otherwise(round(col("__n_in").cast("double") / col("n_exact"), 6))
-          .as("recall"),
-        (col("__n_in") === col("n_banded")).as("banded_subset_exact"))
-  }
-
+                                    bandedGen: Option[DataFrame] = None): DataFrame =
+    Similarity.recallLedger(Image128.exact(fps, maxHamming),
+      bandedGen.getOrElse(perceptualNearDupPairs128On(fps, width, maxHamming)))
   /** Synthesize a REAL PNG per row whose pixel blocks SAMPLE THE TEXT'S
     * WORDS — the ENTROPY-CODED member of the container-true family, and
     * the retirement of the "compressed formats need a library the
@@ -1692,20 +1615,12 @@ object Multimodal {
   /** FRAME-ALIGNED video near-duplicate pairs — the temporal composition
     * of the perceptual tier: two videos are near-dups when at least
     * `minFrames` of their SAMPLED frames are pairwise perceptual
-    * near-dups AT THE SAME FRAME INDEX. Candidates come from the same
-    * banded Hamming LSH as [[perceptualNearDupPairsOn]] with the frame
-    * index added to the band join key (so a frame can only vouch for its
-    * temporal counterpart — re-ordered or time-shifted content does not
-    * match, the standard frame-aligned video-dedup semantics), verify by
-    * full Hamming ≤ `maxHamming` per frame pair, then aggregate matched
-    * frames per video pair. Output: (id_a, id_b, n_frames), a < b.
-    *
-    * Scale shape: (frame, band, bucket)-keyed self-join over 8-byte
-    * fingerprints — never blob×blob, never N² — one pair-dedup exchange,
-    * an id-keyed fingerprint fetch per side, one count aggregate. The
-    * frame key multiplies the bucket space by the sampled-frame count,
-    * so occupancy per bucket is BELOW the single-image tier at the same
-    * band width. */
+    * near-dups AT THE SAME FRAME INDEX ([[HammingBands]] keyed by
+    * `frame`, `bands` slices of 64/bands bits), verified by full Hamming
+    * ≤ `maxHamming` per frame pair, then aggregated per video pair.
+    * Output: (id_a, id_b, n_frames), a < b. The frame key multiplies the
+    * bucket space by the sampled-frame count, so occupancy per bucket is
+    * BELOW the single-image tier at the same band width. */
   def videoNearDupPairs(fps: DataFrame, bands: Int, maxHamming: Int,
                         minFrames: Int): DataFrame = {
     require(bands >= 1 && 64 % bands == 0,
@@ -1713,66 +1628,19 @@ object Multimodal {
     require(maxHamming >= 0 && maxHamming <= 64,
       s"videoNearDupPairs: need 0 <= maxHamming <= 64, got $maxHamming")
     require(minFrames >= 1, s"videoNearDupPairs: need minFrames >= 1, got $minFrames")
-    val width = 64 / bands
-    val mask = (1L << width) - 1
-    // value-level banding, as in [[videoNearDupPairs128]]
-    val vals = fps.select(col("frame"), col("phash64")).distinct()
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        (shiftright(col("phash64"), b * width).bitwiseAND(lit(mask))).as("bucket"))
-    }
-    val banded = vals.select(col("frame"), col("phash64"),
-      explode(array(bandCols: _*)).as("bb"))
-      .select(col("frame"), col("phash64"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val valPairs = banded.toDF("frame", "fa", "band", "bucket")
-      .join(banded.toDF("frame", "fb", "band", "bucket"),
-        Seq("frame", "band", "bucket"))
-      .where(col("fa") < col("fb"))
-      .select("frame", "fa", "fb").distinct()
-      .where(bit_count(col("fa").bitwiseXOR(col("fb"))) <= maxHamming)
-    val crossFrames = valPairs
-      .join(fps.select(col("id").as("__ia"), col("frame"),
-        col("phash64").as("fa")), Seq("frame", "fa"))
-      .join(fps.select(col("id").as("__ib"), col("frame"),
-        col("phash64").as("fb")), Seq("frame", "fb"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"), col("frame"))
-    val exactFrames = fps.toDF("id_a", "frame", "f")
-      .join(fps.toDF("id_b", "frame", "f"), Seq("frame", "f"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "frame")
-    crossFrames.unionByName(exactFrames)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_frames"))
-      .where(col("n_frames") >= minFrames)
+    matchedFrames(Video64.pairs(fps, 64 / bands, maxHamming), minFrames)
   }
 
   /** Scene-change (shot-boundary) detection over the sampled frame
-    * fingerprints: for each consecutive sampled-frame pair (f, f+step)
-    * within a video, the full 64-bit Hamming distance between their
-    * perceptual fingerprints, flagged a cut when it exceeds
-    * `cutHamming` — the classic fingerprint-delta shot detector, here as
-    * a self-join on (id, frame) so it composes with the SAME persisted
-    * fingerprint frame the dedup pair stage uses. Output:
-    * (id, frame_from, frame_to, hamming, is_cut).
-    *
-    * Scale shape: one equi-join on (id, frame+step) over 8-byte keys —
-    * linear in sampled frames, no windows, no blobs. */
+    * fingerprints ([[HammingBands.sceneChanges]]) — composes with the
+    * SAME persisted fingerprint frame the dedup pair stage uses. Output:
+    * (id, frame_from, frame_to, hamming, is_cut). */
   def videoSceneChanges(fps: DataFrame, step: Int, cutHamming: Int): DataFrame = {
     require(step >= 1, s"videoSceneChanges: need step >= 1, got $step")
     require(cutHamming >= 0 && cutHamming <= 64,
       s"videoSceneChanges: need 0 <= cutHamming <= 64, got $cutHamming")
-    val a = fps.select(col("id"), col("frame").as("frame_from"),
-      col("phash64").as("fa"))
-    val b = fps.select(col("id"), (col("frame") - step).as("frame_from"),
-      col("frame").as("frame_to"), col("phash64").as("fb"))
-    a.join(b, Seq("id", "frame_from"))
-      .select(col("id"), col("frame_from"), col("frame_to"),
-        bit_count(col("fa").bitwiseXOR(col("fb"))).cast("long").as("hamming"))
-      .withColumn("is_cut", col("hamming") > cutHamming)
+    Video64.sceneChanges(fps, step, cutHamming)
   }
-
   /** Per-frame 128-BIT perceptual fingerprints over a frame-sampled
     * `(id, frame, content)` relation — [[videoFrameFingerprints]] on the
     * width-cap remedy tier: the [[perceptualHash128Content]] kernel keyed
@@ -1791,116 +1659,25 @@ object Multimodal {
         col("fph"), col("fpl"))
 
   /** FRAME-ALIGNED video near-dup pairs on the 128-bit tier —
-    * [[videoNearDupPairs]] widened ([[perceptualNearDupPairs128On]]'s
-    * band layout with the frame index in the join key): band b reads
-    * bits [b·w, (b+1)·w) of the 128-bit word (first 64/w bands from
-    * `fph`, rest from `fpl`), a frame vouches only for its temporal
-    * counterpart, verify by full 128-bit Hamming ≤ `maxHamming` per
-    * frame pair, then ≥ `minFrames` matched frames per video pair.
-    * Output: (id_a, id_b, n_frames), a < b. Same plan law: 16-byte
-    * keys, never content×content, never N². */
-  /** DISTINCT (frame, fingerprint) banded candidate VALUE pairs with the
-    * frame index in the value key, capped at `capRadius` — the video
-    * core: a templated video corpus repeats identical frames across
-    * videos, so the hot-bucket quadratic counts distinct VALUES;
-    * matched-frame expansion is output-proportional. Output:
-    * (frame, ah, al, bh, bl, hamming). */
-  private def videoValuePairs128(fps: DataFrame, width: Int,
-                                 capRadius: Int): DataFrame = {
-    require(width >= 1 && width <= 64 && 64 % width == 0,
-      s"videoValuePairs128: width must divide 64, got $width")
-    require(capRadius >= 0 && capRadius <= 128,
-      s"videoValuePairs128: need 0 <= capRadius <= 128, got $capRadius")
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val perHalf = 64 / width
-    val vals = fps.select(col("frame"), col("fph"), col("fpl")).distinct()
-    val bandCols = (0 until 2 * perHalf).map { b =>
-      val src = if (b < perHalf) col("fph") else col("fpl")
-      struct(lit(b).as("band"),
-        (shiftright(src, (b % perHalf) * width).bitwiseAND(lit(mask))).as("bucket"))
-    }
-    val banded = vals.select(col("frame"), col("fph"), col("fpl"),
-      explode(array(bandCols: _*)).as("bb"))
-      .select(col("frame"), col("fph"), col("fpl"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val ham = (bit_count(col("ah").bitwiseXOR(col("bh"))) +
-      bit_count(col("al").bitwiseXOR(col("bl")))).cast("long")
-    banded.toDF("frame", "ah", "al", "band", "bucket")
-      .join(banded.toDF("frame", "bh", "bl", "band", "bucket"),
-        Seq("frame", "band", "bucket"))
-      .where(col("ah") < col("bh") ||
-        (col("ah") === col("bh") && col("al") < col("bl")))
-      .select("frame", "ah", "al", "bh", "bl").distinct()
-      .withColumn("hamming", ham)
-      .where(col("hamming") <= capRadius)
-  }
-
-  /** The value→ids expansion + matched-frame aggregate of the video pair
-    * family: frame-aligned id fan-out, equal-fingerprint frames via an
-    * exact equi-join, then ≥ `minFrames` matched frames per video pair.
+    * [[videoNearDupPairs]] widened ([[HammingBands]] over both words,
+    * keyed by `frame`; a templated video corpus repeats identical frames
+    * across videos, so value-level banding counts distinct frames).
     * Output: (id_a, id_b, n_frames), a < b. */
-  private def expandVideoValuePairs128(fps: DataFrame, valPairs: DataFrame,
-                                       minFrames: Int): DataFrame = {
-    val crossFrames = valPairs
-      .join(fps.select(col("id").as("__ia"), col("frame"),
-        col("fph").as("ah"), col("fpl").as("al")), Seq("frame", "ah", "al"))
-      .join(fps.select(col("id").as("__ib"), col("frame"),
-        col("fph").as("bh"), col("fpl").as("bl")), Seq("frame", "bh", "bl"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"), col("frame"))
-    val exactFrames = fps.toDF("id_a", "frame", "h", "l")
-      .join(fps.toDF("id_b", "frame", "h", "l"), Seq("frame", "h", "l"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "frame")
-    crossFrames.unionByName(exactFrames)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_frames"))
-      .where(col("n_frames") >= minFrames)
-  }
-
   def videoNearDupPairs128(fps: DataFrame, width: Int, maxHamming: Int,
                            minFrames: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 128,
       s"videoNearDupPairs128: need 0 <= maxHamming <= 128, got $maxHamming")
     require(minFrames >= 1, s"videoNearDupPairs128: need minFrames >= 1, got $minFrames")
-    expandVideoValuePairs128(fps,
-      videoValuePairs128(fps, width, maxHamming), minFrames)
+    matchedFrames(Video128.pairs(fps, width, maxHamming), minFrames)
   }
 
   /** [[hammingRadiusSweep128]]'s video twin: exact FRAME-pair counts per
-    * candidate radius from frame-keyed value multiplicities — one banded
-    * join at `radii.max`, no id expansion. Output: (radius, n_pairs). */
+    * candidate radius. Output: (radius, n_pairs). */
   def videoRadiusSweep128(fps: DataFrame, width: Int,
                           radii: Seq[Int]): DataFrame = {
     require(radii.nonEmpty && radii == radii.sorted && radii.distinct == radii,
       s"videoRadiusSweep128: radii must be sorted and distinct, got $radii")
-    videoSweepFrom(fps, videoValuePairs128(fps, width, radii.max), radii)
-  }
-
-  private def videoSweepFrom(fps: DataFrame, vp: DataFrame,
-                             radii: Seq[Int]): DataFrame = {
-    val spark = fps.sparkSession
-    import spark.implicits._
-    val vcnt = graft.core.CacheRegistry.persist(
-      fps.groupBy(col("frame"), col("fph"), col("fpl"))
-        .agg(count(lit(1)).as("m")))
-    // aggregated BY HAMMING before the radius theta join — see
-    // [[sweepFrom]]: ≤ capRadius+1 rows meet the grid instead of the
-    // whole frame-pair frame replicated |radii|×
-    val byHam = vp
-      .join(vcnt.toDF("frame", "ah", "al", "ma"), Seq("frame", "ah", "al"))
-      .join(vcnt.toDF("frame", "bh", "bl", "mb"), Seq("frame", "bh", "bl"))
-      .groupBy(col("hamming"))
-      .agg(sum(col("ma") * col("mb")).as("np"))
-    val exact0 = vcnt.agg(coalesce(
-      sum(col("m") * (col("m") - 1) / 2), lit(0L)).cast("long").as("np0"))
-    radii.toDF("radius")
-      .join(byHam, col("hamming") <= col("radius"), "left")
-      .groupBy("radius")
-      .agg(coalesce(sum("np"), lit(0L)).as("__nb"))
-      .crossJoin(exact0)
-      .select(col("radius"), (col("__nb") + col("np0")).cast("long").as("n_pairs"))
-      .orderBy("radius")
+    Video128.sweep(fps, width, radii)
   }
 
   /** DERIVED frame-verify radius for the video tier —
@@ -1915,21 +1692,15 @@ object Multimodal {
     pickRadius(videoRadiusSweep128(fps, width, radii), n, radii,
       maxPairsPerItem)
 
-  /** [[videoNearDupPairs128]] at the DERIVED radius — one banded value
-    * join at `radii.max` (persisted) feeds the sweep and the filtered
-    * expansion. */
+  /** [[videoNearDupPairs128]] at the DERIVED radius
+    * ([[HammingBands.auto]]). */
   def videoNearDupPairs128Auto(fps: DataFrame, width: Int, n: Long,
                                minFrames: Int,
                                radii: Seq[Int] = Seq(8, 12, 16, 20, 24),
                                maxPairsPerItem: Double = 16.0): DataFrame = {
     require(radii.nonEmpty && radii == radii.sorted && radii.distinct == radii,
       s"videoNearDupPairs128Auto: radii must be sorted and distinct, got $radii")
-    val vp = graft.core.CacheRegistry.persist(
-      videoValuePairs128(fps, width, radii.max))
-    val radius = pickRadius(videoSweepFrom(fps, vp, radii), n, radii,
-      maxPairsPerItem)
-    expandVideoValuePairs128(fps, vp.where(col("hamming") <= radius),
-      minFrames)
+    matchedFrames(Video128.auto(fps, width, n, radii, maxPairsPerItem), minFrames)
   }
 
   /** Recall CONTRACT for the frame-aligned 128-bit video tier — q365's
@@ -1950,49 +1721,21 @@ object Multimodal {
     require(sampleMod >= 1,
       s"videoRecallContract128: need sampleMod >= 1, got $sampleMod")
     val sub = fps.where(pmod(col("id"), lit(sampleMod)) === 0)
-    val ham = (bit_count(col("ah").bitwiseXOR(col("bh"))) +
-      bit_count(col("al").bitwiseXOR(col("bl")))).cast("long")
-    val exact = sub.toDF("id_a", "frame", "ah", "al")
-      .join(sub.toDF("id_b", "frame", "bh", "bl"), Seq("frame"))
-      .where(col("id_a") < col("id_b") && ham <= maxHamming)
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("__nf"))
-      .where(col("__nf") >= minFrames)
-      .select("id_a", "id_b")
-    val banded = graft.core.CacheRegistry.persist(
-      videoNearDupPairs128(sub, width, maxHamming, minFrames)
-        .select("id_a", "id_b"))
-    val e = exact.agg(count(lit(1)).as("n_exact"))
-    val nb = banded.agg(count(lit(1)).as("n_banded"))
-    val inExact = banded.join(exact, Seq("id_a", "id_b"), "left_semi")
-      .agg(count(lit(1)).as("__n_in"))
-    e.crossJoin(nb).crossJoin(inExact)
-      .select(lit(width).as("width"), col("n_exact"), col("n_banded"),
-        when(col("n_exact") === 0L, lit(1.0))
-          .otherwise(round(col("__n_in").cast("double") / col("n_exact"), 6))
-          .as("recall"),
-        (col("__n_in") === col("n_banded")).as("banded_subset_exact"))
+    Similarity.recallLedger(
+      matchedFrames(Video128.exact(sub, maxHamming), minFrames).select("id_a", "id_b"),
+      videoNearDupPairs128(sub, width, maxHamming, minFrames))
+      .select(lit(width).as("width"), col("*"))
   }
 
   /** Shot-boundary detection on the 128-bit tier — [[videoSceneChanges]]
-    * with the full 16-byte fingerprint delta (sum of both halves' xor
-    * popcounts; `cutHamming` is on the 0–128 scale). Output:
-    * (id, frame_from, frame_to, hamming, is_cut). */
+    * with the full 16-byte fingerprint delta (`cutHamming` is on the
+    * 0–128 scale). Output: (id, frame_from, frame_to, hamming, is_cut). */
   def videoSceneChanges128(fps: DataFrame, step: Int, cutHamming: Int): DataFrame = {
     require(step >= 1, s"videoSceneChanges128: need step >= 1, got $step")
     require(cutHamming >= 0 && cutHamming <= 128,
       s"videoSceneChanges128: need 0 <= cutHamming <= 128, got $cutHamming")
-    val a = fps.select(col("id"), col("frame").as("frame_from"),
-      col("fph").as("ah"), col("fpl").as("al"))
-    val b = fps.select(col("id"), (col("frame") - step).as("frame_from"),
-      col("frame").as("frame_to"), col("fph").as("bh"), col("fpl").as("bl"))
-    a.join(b, Seq("id", "frame_from"))
-      .select(col("id"), col("frame_from"), col("frame_to"),
-        (bit_count(col("ah").bitwiseXOR(col("bh"))) +
-          bit_count(col("al").bitwiseXOR(col("bl")))).cast("long").as("hamming"))
-      .withColumn("is_cut", col("hamming") > cutHamming)
+    Video128.sceneChanges(fps, step, cutHamming)
   }
-
   /** N-way modality VOTE over per-modality near-dup pair sets — the
     * generalization of [[crossModalConsensus]] from 2 to N modalities: an
     * item pair is a consensus duplicate when at least `minVotes` of the

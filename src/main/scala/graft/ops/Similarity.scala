@@ -723,20 +723,32 @@ object Similarity {
     // judge pass and filter it per threshold instead of paying N² per row
     val exact = exactPairs.getOrElse(graft.core.CacheRegistry.persist(
       nearDupPairs(emb, idCol, vecCol, threshold).select("id_a", "id_b")))
-    val banded = graft.core.CacheRegistry.persist(
-      lshNearDupPairs(emb, idCol, vecCol, threshold, bits, bands)
-        .select("id_a", "id_b"))
-    val e = exact.agg(count(lit(1)).as("n_exact"))
-    val nb = banded.agg(count(lit(1)).as("n_banded"))
-    val inExact = banded.join(exact, Seq("id_a", "id_b"), "left_semi")
+    recallLedger(exact, lshNearDupPairs(emb, idCol, vecCol, threshold, bits, bands))
+      .select(lit(bits).as("bits"), lit(bands).as("bands"), col("*"),
+        (col("recall") >= lit(recallFloor)).as("meets_floor"))
+  }
+
+  /** The tail every recall contract shares (sign-LSH, random-hyperplane
+    * and every perceptual tier): count the exact pair set, persist and
+    * count the banded one, count the banded pairs that ARE exact pairs.
+    * One row: (n_exact, n_banded, recall, banded_subset_exact). Recall
+    * counts only banded∩exact pairs: while the subset invariant holds
+    * that equals n_banded, but if a band join ever corrupted a pair the
+    * metric must not overstate (or exceed 1) in precisely the failure
+    * mode banded_subset_exact exists to flag. `banded` is projected to
+    * (id_a, id_b) before the scoped persist, so a caller's maintained
+    * pair frame is never unpersisted by it. */
+  private[ops] def recallLedger(exact: DataFrame, banded: DataFrame): DataFrame = {
+    val b = graft.core.CacheRegistry.persist(banded.select("id_a", "id_b"))
+    val inExact = b.join(exact, Seq("id_a", "id_b"), "left_semi")
       .agg(count(lit(1)).as("__n_in"))
-    val recall = when(col("n_exact") === 0L, lit(1.0))
-      .otherwise(round(col("__n_in").cast("double") / col("n_exact"), 6))
-    e.crossJoin(nb).crossJoin(inExact)
-      .select(lit(bits).as("bits"), lit(bands).as("bands"),
-        col("n_exact"), col("n_banded"), recall.as("recall"),
-        (col("__n_in") === col("n_banded")).as("banded_subset_exact"),
-        (recall >= lit(recallFloor)).as("meets_floor"))
+    exact.agg(count(lit(1)).as("n_exact"))
+      .crossJoin(b.agg(count(lit(1)).as("n_banded"))).crossJoin(inExact)
+      .select(col("n_exact"), col("n_banded"),
+        when(col("n_exact") === 0L, lit(1.0))
+          .otherwise(round(col("__n_in").cast("double") / col("n_exact"), 6))
+          .as("recall"),
+        (col("__n_in") === col("n_banded")).as("banded_subset_exact"))
   }
 
   /** Deterministic ±1 random-hyperplane matrix: plane (band b, bit j)'s
@@ -993,20 +1005,10 @@ object Similarity {
     // candidates are threshold-independent and the verify cut is a WHERE)
     val exact = exactPairs.getOrElse(graft.core.CacheRegistry.persist(
       nearDupPairs(emb, idCol, vecCol, threshold).select("id_a", "id_b")))
-    val banded = graft.core.CacheRegistry.persist(
-      bandedGen.getOrElse(rpLshNearDupPairs(emb, idCol, vecCol, threshold,
-        bits, bands, dim)).select("id_a", "id_b"))
-    val e = exact.agg(count(lit(1)).as("n_exact"))
-    val nb = banded.agg(count(lit(1)).as("n_banded"))
-    val inExact = banded.join(exact, Seq("id_a", "id_b"), "left_semi")
-      .agg(count(lit(1)).as("__n_in"))
-    val recall = when(col("n_exact") === 0L, lit(1.0))
-      .otherwise(round(col("__n_in").cast("double") / col("n_exact"), 6))
-    e.crossJoin(nb).crossJoin(inExact)
-      .select(lit(bits).as("bits"), lit(bands).as("bands"),
-        col("n_exact"), col("n_banded"), recall.as("recall"),
-        (col("__n_in") === col("n_banded")).as("banded_subset_exact"),
-        (recall >= lit(recallFloor)).as("meets_floor"))
+    recallLedger(exact, bandedGen.getOrElse(
+      rpLshNearDupPairs(emb, idCol, vecCol, threshold, bits, bands, dim)))
+      .select(lit(bits).as("bits"), lit(bands).as("bands"), col("*"),
+        (col("recall") >= lit(recallFloor)).as("meets_floor"))
   }
 
   /** Incremental (batch-vs-corpus) EMBEDDING near-dup detection — the

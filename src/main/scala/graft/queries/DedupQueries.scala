@@ -15,12 +15,17 @@ private[graft] object DedupQueries {
   private def eligibleDocs(s: SparkSession, dir: String): DataFrame = eligible(s, dir)._1
   private def lshPairsEligible(s: SparkSession, dir: String): DataFrame = eligible(s, dir)._2
 
-  private def jaccardTailSql: String =
-    """pairs AS (
+  /** The exact-Jaccard self-join CTEs over a `sh(doc_id, shingle)` CTE:
+    * `<pairs>(id_a, id_b, n_common)` and `sizes(doc_id, n_sh)`. */
+  private def jaccardCtes(pairs: String = "pairs"): String =
+    s"""$pairs AS (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
       |  GROUP BY 1, 2),
-      |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)
+      |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)""".stripMargin
+
+  private def jaccardTailSql: String =
+    s"""${jaccardCtes()}
       |SELECT p.id_a, p.id_b,
       |  CAST(p.n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) AS jaccard
       |FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id JOIN sizes sb ON p.id_b = sb.doc_id
@@ -90,11 +95,7 @@ private[graft] object DedupQueries {
     * q33 selects the assignment; q35 the surviving representatives. */
   private def clusterChainSql: String =
     s"""WITH RECURSIVE sh AS (${shingleSql(3)}),
-       |pairs AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+       |${jaccardCtes()},
        |jpairs AS (
        |  SELECT p.id_a, p.id_b
        |  FROM pairs p JOIN sizes sa ON p.id_a = sa.doc_id JOIN sizes sb ON p.id_b = sb.doc_id
@@ -603,12 +604,7 @@ private[graft] object DedupQueries {
       val gridSql = Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
         .map(t => s"CAST($t AS DOUBLE)").mkString(", ")
       s"""WITH sh AS (${shingleSql(3)}),
-         |pairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-         |    AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+         |${jaccardCtes()},
          |jf AS (SELECT p.id_a, p.id_b,
          |    CAST(p.n_common AS DOUBLE)
          |      / CAST(sa.n_sh + sb.n_sh - p.n_common AS DOUBLE) AS j
@@ -641,11 +637,7 @@ private[graft] object DedupQueries {
       // q250: the exact verified-pair edges (q21's CTEs), symmetrized,
       // then two unrolled peel rounds - degree aggs + keep-set joins
       s"""WITH sh AS (${shingleSql(3)}),
-         |pr AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+         |${jaccardCtes("pr")},
          |vp AS (SELECT p.id_a, p.id_b
          |  FROM pr p JOIN sizes sa ON p.id_a = sa.doc_id
          |    JOIN sizes sb ON p.id_b = sb.doc_id

@@ -838,6 +838,29 @@ class MultimodalSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect()
     gotVid.length shouldBe gotVid.toSet.size
     gotVid.toSet shouldBe refVid
+
+    // 128-bit video tier: the same rule over both halves, on a small pool
+    // where equal high halves with 1-bit-apart low halves (and the
+    // converse) exercise every branch of the (fph, fpl) pair order
+    val pool128 = base.take(4).flatMap { h =>
+      val l = pick(); Seq((h, l), (h, l ^ 1L), (h ^ 4L, l)) }
+    val vrows128 = for { id <- 1L to 30L; f <- 0L to 3L } yield {
+      val (h, l) = pool128(rnd.nextInt(pool128.size)); (id, f, h, l) }
+    val matched128 = for {
+      (ia, fa, ha, la) <- vrows128; (ib, fb, hb, lb) <- vrows128
+      if ia < ib && fa == fb
+      if buckets128(ha, la).intersect(buckets128(hb, lb)).nonEmpty
+      if java.lang.Long.bitCount(ha ^ hb) + java.lang.Long.bitCount(la ^ lb) <= maxH128
+    } yield ((ia, ib), fa)
+    val refVid128 = matched128.groupBy(_._1)
+      .map { case ((a, b), fs) => (a, b, fs.size.toLong) }
+      .filter(_._3 >= minFrames).toSet
+    val gotVid128 = Multimodal.videoNearDupPairs128(
+      vrows128.toDF("id", "frame", "fph", "fpl"), w128, maxH128, minFrames)
+      .as[(Long, Long, Long)].collect()
+    gotVid128.length shouldBe gotVid128.toSet.size
+    gotVid128.toSet shouldBe refVid128
+    refVid128.size should be > 20 // the duplicate-heavy regime is exercised
   }
 
   test("hammingRadiusSweep128 counts exact banded id-pair density per " +

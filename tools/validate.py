@@ -15,7 +15,8 @@ only = [a for a in sys.argv[3:] if not a.startswith("--")]
 if "--skip-verify" not in flags:
     r = subprocess.run(
         ["sbt", f'runMain graft.Verify {sfdir} {outdir}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, timeout=1800)
     tail = (r.stdout + r.stderr).splitlines()[-25:]
     if r.returncode != 0:
         print("VERIFY FAILED"); print("\n".join(tail)); sys.exit(1)
