@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ManifestRead
 
 /** Scale-validation runner (not part of the driver contract): times the
   * dedup/ANN family against an arbitrary data dir and reports output ROWS
@@ -210,7 +211,7 @@ object ScaleProbe {
         .find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.move(part.toPath,
         new java.io.File(srcDir, "b0.parquet").toPath)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
+      val schema = ManifestRead.footerSchema(s, s"$srcDir/b0.parquet")
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("basePath", srcDir.toString)
@@ -493,7 +494,7 @@ object ScaleProbe {
         .find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.move(part.toPath,
         new java.io.File(srcDir, "b0.parquet").toPath)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
+      val schema = ManifestRead.footerSchema(s, s"$srcDir/b0.parquet")
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("basePath", srcDir.toString)
@@ -524,7 +525,7 @@ object ScaleProbe {
         java.nio.file.Files.move(part.toPath, dst.toPath)
         dst.setLastModified((i + 1) * 1000000L)
       }
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
+      val schema = ManifestRead.footerSchema(s, s"$srcDir/b0.parquet")
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("basePath", srcDir.toString)

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ManifestRead
 
 import graft.SparkEntry.{cachedCount, eligible, jacPairs05, lshPairs, t}
 import graft.ops.{Dedup, TextStats}
@@ -862,7 +863,7 @@ private[graft] object DedupQueries {
       }
       drop(docs.where(col("doc_id") % 4 === 1).select("doc_id", "text"), "b0", 1000000L)
       drop(docs.where(col("doc_id") % 4 === 3).select("doc_id", "text"), "b1", 2000000L)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
+      val schema = ManifestRead.footerSchema(s, s"$srcDir/b0.parquet")
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("basePath", srcDir.toString)
@@ -916,7 +917,7 @@ private[graft] object DedupQueries {
         .find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.move(part.toPath,
         new java.io.File(srcDir, "b0.parquet").toPath)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
+      val schema = ManifestRead.footerSchema(s, s"$srcDir/b0.parquet")
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("basePath", srcDir.toString)

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ManifestRead
 
 import graft.SparkEntry.{dbl, scd2Source, staged, t}
 import graft.etl.{GoldMarts, Scd2, StarSchema}
@@ -549,7 +550,7 @@ private[graft] object PipelineQueries {
       drop(o.where(pmod(col("o_orderkey"), lit(3)) === 0), "b0", 1000000L)
       drop(o.where(pmod(col("o_orderkey"), lit(3)) === 1), "b1", 2000000L)
       drop(o.where(pmod(col("o_orderkey"), lit(3)) === 2), "b2", 3000000L)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
+      val schema = ManifestRead.footerSchema(s, s"$srcDir/b0.parquet")
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("basePath", srcDir.toString)
@@ -814,7 +815,7 @@ private[graft] object PipelineQueries {
         .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       drop(c, "b0", T0, 1000000L)
       drop(scd2Source(s, dir), "b1", T1, 2000000L)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
+      val schema = ManifestRead.footerSchema(s, s"$srcDir/b0.parquet")
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("basePath", srcDir.toString)

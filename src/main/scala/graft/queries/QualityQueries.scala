@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ManifestRead
 
 import graft.SparkEntry.t
 
@@ -2518,7 +2519,7 @@ private[graft] object QualityQueries {
       drop(ev.where(pmod(col("event_id"), lit(3)) === 0), "b0", 1000000L)
       drop(ev.where(pmod(col("event_id"), lit(3)) === 1), "b1", 2000000L)
       drop(ev.where(pmod(col("event_id"), lit(3)) === 2), "b2", 3000000L)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
+      val schema = ManifestRead.footerSchema(s, s"$srcDir/b0.parquet")
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("basePath", srcDir.toString)

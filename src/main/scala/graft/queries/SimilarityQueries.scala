@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ManifestRead
 
 import graft.SparkEntry.{cachedCount, exactJudgePairs, kmeansAssigned, mpPairs04, rpPairs04, signPairs04, t}
 import graft.ops.Similarity
@@ -839,7 +840,7 @@ private[graft] object SimilarityQueries {
       }
       drop(emb.where(pmod(col("vec_id"), lit(4)) === 1), "b0", 1000000L)
       drop(emb.where(pmod(col("vec_id"), lit(4)) === 3), "b1", 2000000L)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
+      val schema = ManifestRead.footerSchema(s, s"$srcDir/b0.parquet")
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("basePath", srcDir.toString)
@@ -913,7 +914,7 @@ private[graft] object SimilarityQueries {
         .find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.move(part.toPath,
         new java.io.File(srcDir, "b0.parquet").toPath)
-      val schema = s.read.parquet(s"$srcDir/b0.parquet").schema
+      val schema = ManifestRead.footerSchema(s, s"$srcDir/b0.parquet")
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("basePath", srcDir.toString)

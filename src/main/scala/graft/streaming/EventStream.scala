@@ -63,28 +63,15 @@ object EventStream {
       .csv(dir)
 
   /** Streaming scan of the benchmark `events` table — the readStream twin of
-    * [[graft.core.Tables.table]]'s ts normalization (file sources need an
-    * explicit schema; `ts` has shipped as TIMESTAMP(NANOS) in some data
-    * drops — which the vectorized reader rejects, so read nanos-as-long
-    * and truncate to micros — and as plain micros in others). */
-  def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(path).schema
+    * [[graft.core.Tables.table]], with the same ts normalization (file
+    * sources need an explicit schema; it comes from the file's footer). */
+  def readEventsStream(spark: SparkSession, dir: String): DataFrame =
     // the benchmark table is a single FILE: FileStreamSource force-sets
     // basePath to the path itself unless the path is a glob, and a file
     // basePath fails partition inference — so glob the filename and anchor
     // basePath at the table directory explicitly
-    val raw = spark.readStream.schema(schema).option("basePath", dir)
-      .parquet(s"$dir/events.parquet*")
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-      case _ => raw
-    }
-  }
+    graft.core.Tables.events(spark, s"$dir/events.parquet")(
+      spark.readStream.schema(_).option("basePath", dir).parquet(s"$dir/events.parquet*"))
 
   /** Run a streaming aggregate with a 1-hour event-time watermark (late data
     * beyond it is dropped and state is evicted — bounded state at scale),

@@ -1,14 +1,17 @@
 package org.apache.spark.sql.graft
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.util.HadoopFSUtils
 
 /** Manifest-backed [[FileIndex]] for the versioned TableStore layout.
   *
@@ -119,8 +122,9 @@ class ManifestFileIndex(spark: SparkSession, dataDirs: Seq[Path],
         s"no parquet data files under ${dataDirs.mkString(", ")}"))
 }
 
-/** Public entry: a single-scan DataFrame over a manifest's data dirs, and
-  * the schema arithmetic a manifest's recorded `#s` schema line needs. */
+/** Public entry: a single-scan DataFrame over a manifest's data dirs, the
+  * schema arithmetic a manifest's recorded `#s` schema line needs, and the
+  * job-free footer schema of a plain parquet path. */
 object ManifestRead {
 
   /** Read `dirs` as ONE partitioned parquet scan, with no Spark job.
@@ -146,6 +150,32 @@ object ManifestRead {
                        partitionCols: Seq[(String, DataType)]): StructType =
     new ManifestFileIndex(spark, dirs.map(new Path(_)), partitionSchemaOf(partitionCols))
       .mergedDataSchema
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver with
+    * no Spark job. Picks the one file Spark's non-merging inference reads
+    * (`_common_metadata`, else `_metadata`, else the first data file by
+    * path, hidden files skipped by the file index's own rule) and converts
+    * its footer with the converter inference uses, so session settings
+    * such as `nanosAsLong` apply. Read afresh on every call. */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => HadoopFSUtils.shouldFilterOutPathName(c.getPath.getName))
+        .flatMap(leaves)
+    val files = leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+    val file = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .getOrElse(throw new IllegalStateException(s"no parquet data files under $path"))
+    val footer = ParquetFileReader.readFooter(conf, file, ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
+  }
 
   /** The data schema a data dir written from a frame of `schema` adds: its
     * columns without the partition columns, nullable the way

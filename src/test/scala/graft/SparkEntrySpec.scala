@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.graft.JobCount
+
 import graft.core.CacheRegistry
 
 /** Driver-contract smoke: `entry` returns rows at sf0.001 (the driver's t1
@@ -50,17 +52,19 @@ class SparkEntrySpec extends SparkSpec {
   }
 
   /** One pass over every registered query at sf0.001, starting from
-    * cleared caches: each query's failure, if any, and the artifact keys
-    * its build and count reached. Shared by the two specs below so the
-    * suite builds the queries once. */
-  private lazy val pass: Seq[(String, Option[String], Set[String])] = {
+    * cleared caches: each query's failure, if any, the artifact keys its
+    * build and count reached, and the Spark jobs its build alone ran.
+    * Shared by the specs below so the suite builds the queries once. */
+  private lazy val pass: Seq[(String, Option[String], Set[String], Int)] = {
     SparkEntry.clearCaches(spark)
     val runs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (failure, reached) = CacheRegistry.recording {
-        try { if (fn(spark, sf0001).count() > 0) None else Some(s"$name: 0 rows") }
-        catch { case e: Exception => Some(s"$name: ${e.getMessage}") }
+      val ((failure, buildJobs), reached) = CacheRegistry.recording {
+        try {
+          val (df, jobs) = JobCount.during(spark)(fn(spark, sf0001))
+          (if (df.count() > 0) None else Some(s"$name: 0 rows"), jobs)
+        } catch { case e: Exception => (Some(s"$name: ${e.getMessage}"), 0) }
       }
-      (name, failure, reached)
+      (name, failure, reached, buildJobs)
     }
     SparkEntry.clearCaches(spark)
     runs
@@ -70,9 +74,17 @@ class SparkEntrySpec extends SparkSpec {
     pass.flatMap(_._2) shouldBe empty
   }
 
+  // a build should be lazy: list each build that still runs a job (no
+  // bound is asserted yet)
+  test("build-job census: the queries whose build runs Spark jobs") {
+    val eager = pass.collect { case (name, _, _, jobs) if jobs > 0 => name -> jobs }
+    eager.foreach { case (name, jobs) => info(s"$name: $jobs build jobs") }
+    info(s"${eager.size} of ${pass.size} builds run jobs, ${eager.map(_._2).sum} jobs in all")
+  }
+
   test("each artifact's declared consumers are exactly the queries that reach it") {
     val declared = SparkEntry.artifacts.map { case (key, consumers, _) => key -> consumers }.toMap
-    val reachedBy = pass.flatMap { case (name, _, keys) => keys.map(_ -> name) }
+    val reachedBy = pass.flatMap { case (name, _, keys, _) => keys.map(_ -> name) }
       .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
     (reachedBy.keySet -- declared.keySet) shouldBe empty
     val mismatches = declared.toSeq.sortBy(_._1).flatMap { case (key, consumers) =>

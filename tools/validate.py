@@ -12,10 +12,25 @@ outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 flags = [a for a in sys.argv[3:] if a.startswith("--")]
 only = [a for a in sys.argv[3:] if not a.startswith("--")]
 
+
+def driver_mem():
+    """SPARK_DRIVER_MEM if set, else half of MemTotal clamped to 2-8 g (the
+    rule the spec run uses), never build.sbt's 32g fallback."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "2g"
+    return f"{min(8, max(2, kb // 2097152))}g"
+
+
 if "--skip-verify" not in flags:
     r = subprocess.run(
         ["sbt", f'runMain graft.Verify {sfdir} {outdir}'],
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "SPARK_DRIVER_MEM": driver_mem()},
         capture_output=True, text=True, timeout=1800)
     tail = (r.stdout + r.stderr).splitlines()[-25:]
     if r.returncode != 0:
