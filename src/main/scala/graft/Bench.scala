@@ -413,7 +413,10 @@ object Bench {
     // once per pipeline run by design; building them here keeps their
     // one-time cost out of whichever query alphabetically hits them first.
     // Round 12: warm ONLY what this run's query list consumes, report the
-    // cost as warm_sec on every emitted line, and log the breakdown.
+    // cost as warm_sec on every emitted line, and log the breakdown. The
+    // artifacts warm concurrently: each `warm <artifact>` line is that
+    // unit's own wall, overlapping the others', and `warm total` is the
+    // wall the run paid.
     val warmSec = engineSec + (try {
       val t0 = System.nanoTime()
       val detail = SparkEntry.warmCachesFor(spark, sfDir, names)

@@ -1,5 +1,7 @@
 package graft.core
 
+import java.util.concurrent.{CompletableFuture, CompletionException}
+
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
@@ -36,9 +38,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Cross-query artifacts (the star-schema fact, the staged SCD2 diff, pair
   * and fingerprint indexes, corpus counts) live in a separate [[memo]]
-  * keyed by (session, dir, artifact key): shared across queries and
-  * released by key ([[release]]) or per session ([[releaseAll]]), never
-  * by a query's scope or [[drain]].
+  * keyed by (session, dir, artifact key): built once per key even when
+  * several threads ask at once, shared across queries and released by key
+  * ([[release]]) or per session ([[releaseAll]]), never by a query's scope
+  * or [[drain]].
   */
 object CacheRegistry {
 
@@ -48,8 +51,10 @@ object CacheRegistry {
     * (recorded only while a [[recording]] was open during the build). */
   private final case class Entry(value: Any, reaches: Set[String])
 
+  /** One cell per artifact key: completed by the build of the first caller
+    * that missed, awaited by every other caller. */
   private val artifacts =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Entry]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), CompletableFuture[Entry]]
 
   private val recorders = new ThreadLocal[List[mutable.Set[String]]] {
     override def initialValue(): List[mutable.Set[String]] = Nil
@@ -120,25 +125,51 @@ object CacheRegistry {
 
   /** The artifact `key` over `dir` for session `s`: built once by `build`
     * and shared by every later caller until [[release]]d. A `build` that
-    * should be persisted persists its own result. While a [[recording]] is
+    * should be persisted persists its own result. The first caller that
+    * misses builds; callers on other threads that ask meanwhile wait for
+    * that build and share its value, or its failure. A failed build leaves
+    * no entry, so a later call builds again. Artifact builds reach each
+    * other as a DAG, so no build waits on itself. While a [[recording]] is
     * open on the calling thread, every open recorder notes `key` and the
     * keys its build reached, whether it is built now or was built earlier
     * under a recording. */
   def memo[A](s: SparkSession, dir: String, key: String)(build: => A): A = {
-    val entry = artifacts.getOrElseUpdate((s, dir, key),
-      if (recorders.get().isEmpty) Entry(build, Set.empty)
-      else {
-        val (value, reaches) = recording(build)
-        Entry(value, reaches)
-      })
+    val k = (s, dir, key)
+    val mine = new CompletableFuture[Entry]
+    val entry = artifacts.putIfAbsent(k, mine) match {
+      case Some(cell) => await(cell)
+      case None =>
+        try {
+          val e =
+            if (recorders.get().isEmpty) Entry(build, Set.empty)
+            else {
+              val (value, reaches) = recording(build)
+              Entry(value, reaches)
+            }
+          mine.complete(e)
+          e
+        } catch { case t: Throwable =>
+          artifacts.remove(k, mine)
+          mine.completeExceptionally(t)
+          throw t
+        }
+    }
     recorders.get().foreach { r => r += key; r ++= entry.reaches }
     entry.value.asInstanceOf[A]
   }
 
+  /** The entry `cell` completes with, or the build's own failure. */
+  private def await(cell: CompletableFuture[Entry]): Entry =
+    try cell.join()
+    catch { case e: CompletionException if e.getCause != null => throw e.getCause }
+
   /** Drop the artifact `key` over `dir`, unpersisting every Dataset it
-    * holds (the value itself or the fields of a tuple). */
+    * holds (the value itself or the fields of a tuple). An artifact still
+    * being built is released once its build ends. */
   def release(s: SparkSession, dir: String, key: String): Unit =
-    artifacts.remove((s, dir, key)).foreach(e => unpersistAll(e.value))
+    artifacts.remove((s, dir, key)).foreach { cell =>
+      scala.util.Try(await(cell)).foreach(e => unpersistAll(e.value))
+    }
 
   /** [[release]] every artifact held for session `s`. */
   def releaseAll(s: SparkSession): Unit =

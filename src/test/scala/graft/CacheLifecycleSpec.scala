@@ -1,6 +1,13 @@
 package graft
 
-import graft.core.CacheRegistry
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.Try
+
+import org.apache.spark.sql.graft.JobCount
+
+import graft.core.{CacheRegistry, Fanout}
 
 /** Pins the harness cache contract (round-1 judge finding: operator-internal
   * persists accumulated across a 30-query session and contributed to the
@@ -55,6 +62,82 @@ class CacheLifecycleSpec extends SparkSpec {
     SparkEntry.clearCaches(spark)
     spark.sparkContext.getPersistentRDDs.size shouldBe baseline
     CacheRegistry.memoKeys(spark) shouldBe empty
+  }
+
+  test("concurrent warm units sharing dependencies build each artifact once") {
+    CacheRegistry.drain()
+    SparkEntry.clearCaches(spark)
+    val baseline = spark.sparkContext.getPersistentRDDs.size
+    val names = Seq("q349_ppm_recall_real", "q353_wav_recall_real",
+      "q361_trimodal_consensus")
+    val warmed = SparkEntry.warmCachesFor(spark, sf0001, names).map(_._1)
+    // the three closures overlap in cnt_documents and fps_ppm/fps_wav
+    warmed should contain allOf ("cnt_documents", "fps_ppm", "fps_wav",
+      "fps_y4m", "radius_ppm", "pairs_ppm", "pairs_y4m")
+    warmed shouldBe SparkEntry.artifacts.map(_._1).filter(warmed.toSet)
+    CacheRegistry.memoKeys(spark).map(_._2) shouldBe warmed.toSet
+    // a duplicate build's frame would be held by no entry and outlive this
+    SparkEntry.clearCaches(spark)
+    spark.sparkContext.getPersistentRDDs.size shouldBe baseline
+  }
+
+  test("warm units label their jobs warm:<artifact>") {
+    CacheRegistry.drain()
+    SparkEntry.clearCaches(spark)
+    val (warmed, descriptions) = JobCount.descriptionsDuring(spark) {
+      SparkEntry.warmCachesFor(spark, sf0001, Seq("q02_star_fact", "q12_scd2_classify"))
+    }
+    warmed.map(_._1) shouldBe Seq("star_fact", "staged_scd2")
+    descriptions.toSet shouldBe Set("warm:star_fact", "warm:staged_scd2")
+    SparkEntry.clearCaches(spark)
+  }
+
+  test("memo builds a key once while many threads ask for it at once") {
+    import spark.implicits._
+    val dir = "memo-race-spec"
+    val n = 8
+    val builds = new AtomicInteger
+    val called = new CountDownLatch(n)
+    CacheRegistry.drain()
+    val baseline = spark.sparkContext.getPersistentRDDs.size
+    // the build holds until every thread has called memo, so all of them
+    // ask while it is in flight
+    val frames = Fanout.map(1 to n) { _ =>
+      called.countDown()
+      CacheRegistry.memo(spark, dir, "frame") {
+        builds.incrementAndGet()
+        called.await(30, TimeUnit.SECONDS)
+        val df = Seq(1, 2, 3).toDF("x").persist()
+        df.count()
+        df
+      }
+    }
+    builds.get shouldBe 1
+    frames.distinct should have size 1
+    spark.sparkContext.getPersistentRDDs.size shouldBe baseline + 1
+    CacheRegistry.releaseAll(spark)
+    spark.sparkContext.getPersistentRDDs.size shouldBe baseline
+  }
+
+  test("a failed memo build fails every waiter, leaves no entry, and is retried") {
+    val dir = "memo-failure-spec"
+    val n = 4
+    val builds = new AtomicInteger
+    val called = new CountDownLatch(n)
+    val outcomes = Fanout.map(1 to n) { _ =>
+      called.countDown()
+      Try(CacheRegistry.memo(spark, dir, "broken") {
+        builds.incrementAndGet()
+        called.await(30, TimeUnit.SECONDS)
+        throw new IllegalStateException("build failed")
+      })
+    }
+    builds.get shouldBe 1
+    outcomes.foreach(_.failed.get.getMessage shouldBe "build failed")
+    CacheRegistry.memoKeys(spark).map(_._1) should not contain dir
+    CacheRegistry.memo(spark, dir, "broken") { builds.incrementAndGet() } shouldBe 2
+    CacheRegistry.memoKeys(spark) should contain (dir -> "broken")
+    CacheRegistry.release(spark, dir, "broken")
   }
 
   test("releasing the two-frame eligible_docs artifact unpersists both frames") {
